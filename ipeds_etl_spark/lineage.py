@@ -9,7 +9,7 @@ policy at ``architecture.md:91-99``):
 * ``source_trace``— one row per landed page: endpoint, year,
   source_url, source_hash, ingested_at.
 
-Counters are computed relationally (anti-join/semi-join counts), not by
+Counters are computed relationally (one left-join aggregate), not by
 driver-side iteration; appends are tiny single-partition writes.
 """
 
@@ -49,12 +49,19 @@ SOURCE_TRACE_SCHEMA = T.StructType(
 
 def merge_counts(target: DataFrame, source: DataFrame, pk: list[str]) -> tuple[int, int]:
     """(rows_inserted, rows_updated) for an upsert of source into target
-    — inserted = source PKs absent from target; updated = present."""
+    — inserted = distinct source PKs absent from target; updated =
+    present. One action: the distinct source keys left-join the
+    distinct target keys tagged with a literal, so ``count(*)`` is the
+    source key count and ``count(tag)`` the keys found (a NULL PK
+    component never matches, so such a key counts as inserted)."""
     src_keys = source.select(*pk).distinct()
-    tgt_keys = target.select(*pk).distinct()
-    inserted = src_keys.join(tgt_keys, pk, "left_anti").count()
-    updated = src_keys.join(tgt_keys, pk, "left_semi").count()
-    return inserted, updated
+    tgt_keys = target.select(*pk).distinct().withColumn("_hit", F.lit(True))
+    n, hits = (
+        src_keys.join(tgt_keys, pk, "left")
+        .agg(F.count(F.lit(1)), F.count("_hit"))
+        .first()
+    )
+    return n - hits, hits
 
 
 def append_load_log(

@@ -15,6 +15,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ipeds_etl_spark import fsutil, lineage, registry
+from ipeds_etl_spark.operators.merge import recover_swaps
 from ipeds_etl_spark.plans.core_pipeline import map_from_raw, write_core
 from ipeds_etl_spark.sources import raw as raw_io
 
@@ -35,11 +36,10 @@ def run_load(
     meta_path = f"{warehouse}/meta"
 
     pages = raw_io.pages_from_fetched(spark, year, page_lists, endpoint_path=ep.path)
-    existing = (
-        raw_io.scan_pages(spark, raw_path, [year]).limit(1).count()
-        if fsutil.table_exists(spark, raw_path)
-        else 0
-    )
+    # the write path's recovery first, so the probe sees one complete
+    # generation (write_pages would run the same recovery next)
+    recover_swaps(spark, raw_path)
+    existing = int(fsutil.table_exists(spark, f"{raw_path}/year={year}"))
     raw_io.write_pages(spark, pages, raw_path)
     lineage.append_source_trace(spark, meta_path, endpoint, pages)
 
@@ -47,12 +47,20 @@ def run_load(
         target = spark.read.schema(registry.struct_type(endpoint)).parquet(core_path)
     else:
         target = spark.createDataFrame([], registry.struct_type(endpoint))
-    mapped = map_from_raw(spark, endpoint, raw_path, years=[year])
-    # Counts (and every other action on plans that scan the current core
-    # files) MUST run before the merge overwrites those files.
-    inserted, updated = lineage.merge_counts(target, mapped, list(ep.pk))
-    records_mapped = mapped.count()
-    write_core(spark, endpoint, mapped, core_path)
+    # Mapped once: the count fills the cache, and the merge counts, the
+    # core write's touched-years collect and the merge itself all read
+    # it instead of re-running scan → explode → registry mapper.
+    # persist (not localCheckpoint) keeps lineage, so lost blocks are
+    # recomputed from the raw files.
+    mapped = map_from_raw(spark, endpoint, raw_path, years=[year]).persist()
+    try:
+        records_mapped = mapped.count()
+        # Counts (and every other action on plans that scan the current
+        # core files) MUST run before the merge overwrites those files.
+        inserted, updated = lineage.merge_counts(target, mapped, list(ep.pk))
+        write_core(spark, endpoint, mapped, core_path)
+    finally:
+        mapped.unpersist()
     lineage.append_load_log(
         spark, meta_path, endpoint, year, year, inserted, updated, started
     )

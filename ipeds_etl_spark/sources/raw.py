@@ -30,6 +30,7 @@ Spark-first differences:
 from __future__ import annotations
 
 from collections.abc import Sequence
+from datetime import datetime, timezone
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -143,6 +144,10 @@ def pages_from_fetched(
     import json as _json
 
     path = endpoint_path.replace("{year}", str(year)).lstrip("/")
+    # one stamp for the whole landing: ``current_timestamp()`` is
+    # evaluated per query, so the raw write and the source_trace append
+    # would store different times for the same pages
+    ingested_at = datetime.now(timezone.utc)
     rows = []
     for i, recs in enumerate(page_lists, start=1):
         payload = _json.dumps(recs, sort_keys=True, separators=(",", ":"), default=str)
@@ -152,7 +157,7 @@ def pages_from_fetched(
                 i,
                 f"{api_base.rstrip('/')}/{path}?page={i}",
                 None,  # hash filled below (engine-side, same function everywhere)
-                None,
+                ingested_at,
                 len(recs),
                 payload,
             )
@@ -162,9 +167,7 @@ def pages_from_fetched(
         "year int, page_number int, source_url string, source_hash string, "
         "ingested_at timestamp, record_count int, payload string",
     )
-    return df.withColumn("source_hash", F.sha2(F.col("payload"), 256)).withColumn(
-        "ingested_at", F.current_timestamp()
-    )
+    return df.withColumn("source_hash", F.sha2(F.col("payload"), 256))
 
 
 def write_pages(spark: SparkSession, pages: DataFrame, raw_path: str) -> None:
@@ -198,7 +201,7 @@ def scan_pages(
     left alone (it may belong to a LIVE writer — a reader must never
     dismantle an in-flight write)."""
     recover_swaps(spark, raw_path, rollback_uncommitted=False)
-    df = spark.read.parquet(raw_path)
+    df = spark.read.schema(RAW_SCHEMA).parquet(raw_path)
     if years is not None:
         df = df.filter(F.col("year").isin(list(years)))
     return df

@@ -11,7 +11,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from ipeds_etl_spark import pipeline
+from ipeds_etl_spark import lineage, pipeline
 from ipeds_etl_spark.sources import raw as raw_io
 from ipeds_etl_spark.sources.http_ingest import fetch_endpoint_pages
 
@@ -48,6 +48,7 @@ def test_full_load_and_semantics(spark, warehouse):
     metrics = pipeline.run_load(spark, "directory", 2020, _fixture_pages(2020), warehouse)
     assert metrics["records_mapped"] == 5
     assert metrics["rows_inserted"] == 5 and metrics["rows_updated"] == 0
+    assert metrics["raw_existing_before"] == 0
 
     core = spark.read.parquet(f"{warehouse}/core/directory")
     rows = {r["unitid"]: r for r in core.collect()}
@@ -77,6 +78,16 @@ def test_full_load_and_semantics(spark, warehouse):
     assert rows[105]["region"] is None
 
 
+def test_first_load_raw_rows_match_source_trace(spark, warehouse):
+    """One landing, one time: every raw row of the first load has its
+    source_trace row with the same ``ingested_at``."""
+    raw = spark.read.parquet(f"{warehouse}/raw/directory")
+    trace = spark.read.parquet(f"{warehouse}/meta/source_trace")
+    keys = ["year", "source_hash", "ingested_at"]
+    assert raw.count() == 2
+    assert raw.join(trace, keys, "left_anti").count() == 0
+
+
 def test_rerun_is_idempotent(spark, warehouse):
     before_core = sorted(tuple(r) for r in spark.read.parquet(f"{warehouse}/core/directory").collect())
     before_hashes = {
@@ -85,6 +96,7 @@ def test_rerun_is_idempotent(spark, warehouse):
     }
     metrics = pipeline.run_load(spark, "directory", 2020, _fixture_pages(2020), warehouse)
     assert metrics["rows_inserted"] == 0 and metrics["rows_updated"] == 5
+    assert metrics["raw_existing_before"] == 1
     after_core = sorted(tuple(r) for r in spark.read.parquet(f"{warehouse}/core/directory").collect())
     assert before_core == after_core
     # hash-guarded raw upsert: unchanged pages keep original ingested_at
@@ -109,7 +121,8 @@ def test_changed_page_rewrites_only_itself(spark, warehouse):
 
 
 def test_second_year_partition_isolated(spark, warehouse):
-    pipeline.run_load(spark, "directory", 2021, _fixture_pages(2021), warehouse)
+    metrics = pipeline.run_load(spark, "directory", 2021, _fixture_pages(2021), warehouse)
+    assert metrics["raw_existing_before"] == 0  # new year in an existing table
     core = spark.read.parquet(f"{warehouse}/core/directory")
     assert core.filter(F.col("year") == 2021).count() == 5
     assert core.filter(F.col("year") == 2020).count() == 5
@@ -148,6 +161,42 @@ def test_empty_load_is_noop(spark, warehouse):
     assert metrics["records_mapped"] == 0
     assert metrics["rows_inserted"] == 0 and metrics["rows_updated"] == 0
     assert spark.read.parquet(f"{warehouse}/core/directory").count() == before
+
+
+def _persistent_rdd_ids(spark) -> set[int]:
+    return {int(k) for k in spark.sparkContext._jsc.getPersistentRDDs().keySet()}  # noqa: SLF001
+
+
+@pytest.mark.parametrize("core_write_fails", [False, True])
+def test_run_load_shares_one_persisted_mapped_frame(spark, tmp_path, monkeypatch, core_write_fails):
+    """The merge counts and the core write read one persisted mapped
+    frame, and run_load releases it, also when the core write raises."""
+    seen = {}
+
+    def spy(name, fn, pos):
+        def wrapped(*args):
+            seen[name] = (args[pos], args[pos].is_cached)
+            if name == "write_core" and core_write_fails:
+                raise RuntimeError("core write failed")
+            return fn(*args)
+
+        return wrapped
+
+    monkeypatch.setattr(lineage, "merge_counts", spy("merge_counts", lineage.merge_counts, 1))
+    monkeypatch.setattr(pipeline, "write_core", spy("write_core", pipeline.write_core, 2))
+    before = _persistent_rdd_ids(spark)
+    args = (spark, "directory", 2020, _fixture_pages(2020), str(tmp_path))
+    if core_write_fails:
+        with pytest.raises(RuntimeError, match="core write failed"):
+            pipeline.run_load(*args)
+    else:
+        assert pipeline.run_load(*args)["records_mapped"] == 5
+    counted, counted_cached = seen["merge_counts"]
+    written, written_cached = seen["write_core"]
+    assert counted is written
+    assert counted_cached and written_cached
+    assert not written.is_cached
+    assert _persistent_rdd_ids(spark) - before == set()
 
 
 def test_http_ingest_offline_pagination():
