@@ -45,8 +45,8 @@ from pyspark.sql import functions as F
 #: reference ``etl/mappers/directory.py:46-48``). The reference still
 #: nulls a *numeric* -1.0 via its number branch (``v in (-1,-2,-3)``
 #: is True for float -1.0, ``directory.py:43-44``). Our raw layer
-#: deliberately erases the JSON number/string distinction (records
-#: travel as ``map<string,string>`` for schema-drift tolerance), so a
+#: deliberately erases the JSON number/string distinction (every record
+#: value is parsed as a string, for schema-drift tolerance), so a
 #: JSON numeric ``-1.0`` and a JSON string ``"-1.0"`` both arrive as
 #: the string "-1.0" — an expression cannot reproduce the reference's
 #: type dispatch. Of the two reachable policies we take the cleaning-
@@ -192,11 +192,33 @@ def clean_sentinels_sql(x: str) -> str:
     return f"(CASE WHEN {is_missing_sql(x)} THEN NULL ELSE {x} END)"
 
 
-def coalesce_pick_sql(*xs: str) -> str:
-    """SQL twin of ``coalesce_pick``."""
-    if not xs:
-        raise ValueError("coalesce_pick_sql requires at least one candidate")
-    return f"coalesce({', '.join(clean_sentinels_sql(x) for x in xs)})"
+def pick_stripped_sql(*ss: str) -> str:
+    """First non-missing candidate among ALREADY-STRIPPED string
+    candidates — ``coalesce_pick`` followed by the strip, with each
+    strip computed once by the caller. A stripped value is NULL iff
+    its input is, so the NULL test folds into ``NOT IN`` (NULL there
+    is not true). The pick is clean by construction: ``strip(x)`` is
+    never empty or a sentinel when ``x`` is not missing, so re-cleaning
+    it is a no-op."""
+    picks = [f"CASE WHEN {s} NOT IN ('', {_SENTINEL_LIST_SQL}) THEN {s} END" for s in ss]
+    return f"coalesce({', '.join(picks)})"
+
+
+def cast_stripped_sql(s: str, sql_type: str) -> str:
+    """Guarded cast of a stripped, sentinel-clean string to ``sql_type``
+    (INT, BIGINT, DOUBLE or STRING) — the common tail of the safe casts.
+    ``s`` is referenced several times, so pass a column, not a subtree."""
+    if sql_type in ("INT", "BIGINT"):
+        return f"try_cast(CASE WHEN {s} RLIKE {sql_lit(_INT_RE)} THEN {s} END AS {sql_type})"
+    if sql_type == "DOUBLE":
+        return (
+            f"(CASE WHEN {s} RLIKE {sql_lit(_NAN_RE)} THEN CAST('NaN' AS DOUBLE) "
+            f"WHEN {s} RLIKE {sql_lit(_DBL_RE)} THEN try_cast({s} AS DOUBLE) "
+            f"ELSE CAST(NULL AS DOUBLE) END)"
+        )
+    if sql_type == "STRING":
+        return s
+    raise ValueError(f"no safe cast to {sql_type!r}")
 
 
 def _stripped_clean_sql(x: str) -> str:
@@ -205,24 +227,17 @@ def _stripped_clean_sql(x: str) -> str:
 
 def safe_int_sql(x: str) -> str:
     """SQL twin of ``safe_int``."""
-    s = _stripped_clean_sql(x)
-    return f"try_cast(CASE WHEN {s} RLIKE {sql_lit(_INT_RE)} THEN {s} END AS INT)"
+    return cast_stripped_sql(_stripped_clean_sql(x), "INT")
 
 
 def safe_long_sql(x: str) -> str:
     """SQL twin of ``safe_long``."""
-    s = _stripped_clean_sql(x)
-    return f"try_cast(CASE WHEN {s} RLIKE {sql_lit(_INT_RE)} THEN {s} END AS BIGINT)"
+    return cast_stripped_sql(_stripped_clean_sql(x), "BIGINT")
 
 
 def safe_double_sql(x: str) -> str:
     """SQL twin of ``safe_double``."""
-    s = _stripped_clean_sql(x)
-    return (
-        f"(CASE WHEN {s} RLIKE {sql_lit(_NAN_RE)} THEN CAST('NaN' AS DOUBLE) "
-        f"WHEN {s} RLIKE {sql_lit(_DBL_RE)} THEN try_cast({s} AS DOUBLE) "
-        f"ELSE CAST(NULL AS DOUBLE) END)"
-    )
+    return cast_stripped_sql(_stripped_clean_sql(x), "DOUBLE")
 
 
 def safe_str_sql(x: str) -> str:

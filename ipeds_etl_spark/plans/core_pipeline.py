@@ -7,11 +7,13 @@ normalize every record through the endpoint's registry contract, and
 merge idempotently into the typed core table keyed on the registry PK.
 
 Where the reference maps dict-at-a-time in Python and batches 1000-row
-upserts, this pipeline is a single declarative plan: explode →
-generated select of cleaned/cast/coalesced Column expressions (from
-``registry.mapper_columns``) → anti-join merge → per-year dynamic
-partition overwrite. No Python executes per record; the mapper select
-is whole-stage-codegen'd.
+upserts, this pipeline is a single declarative plan: typed parse of
+each page into one string field per registry candidate key → explode
+→ generated strip / pick / guarded-cast projections (from
+``registry.mapper_select_stages``) → anti-join merge → per-year dynamic
+partition overwrite. No Python executes per record; parse, explode and
+mapper compile into one whole-stage-codegen stage (pinned by
+``tests/test_pipeline_e2e.py`` with codegen fallback off).
 """
 
 from __future__ import annotations
@@ -30,26 +32,41 @@ from ipeds_etl_spark.operators.merge import (
 from ipeds_etl_spark.sources import raw as raw_io
 
 
-def map_records(endpoint: str, records: DataFrame, rec_col: str = "rec") -> DataFrame:
-    """Apply the endpoint's registry contract to exploded raw records.
-
-    ``records`` carries ``rec: map<string,string>`` plus ``page_year``;
-    every registry field becomes safe_cast(coalesce_pick(candidates)),
-    with ``year`` backfilled from the page when the record lacks it.
-    """
-    # Two-stage SQL-text form: one selectExpr gateway call per stage
-    # instead of ~thousands of Py4J Column calls for a 100+-field
-    # contract, and a ~2.5× smaller analyzer tree than the one-shot
-    # SQL form (see registry.mapper_select_stages)
-    from ipeds_etl_spark.functions.cleaning import sql_lit
-
-    s1, s2 = registry.mapper_select_stages(
-        endpoint, getter_sql=lambda name: f"{rec_col}[{sql_lit(name)}]"
-    )
-    out = records.selectExpr(*s1, "page_year").selectExpr(*s2, "page_year")
+def _apply_mapper(endpoint: str, records: DataFrame, getter_sql) -> DataFrame:
+    """Run the registry's mapper stages over ``records`` (which carry
+    ``page_year``), backfilling ``year`` from the page."""
+    out = records
+    for stage in registry.mapper_select_stages(endpoint, getter_sql=getter_sql):
+        out = out.selectExpr(*stage, "page_year")
     return out.withColumn("year", F.coalesce(F.col("year"), F.col("page_year"))).drop(
         "page_year"
     )
+
+
+def map_records(endpoint: str, records: DataFrame, rec_col: str = "rec") -> DataFrame:
+    """Apply the endpoint's registry contract to records held as
+    ``rec: map<string,string>`` plus ``page_year`` (frames built in
+    memory; raw pages go through :func:`map_pages`). Every registry
+    field becomes safe_cast(coalesce_pick(candidates)), with ``year``
+    backfilled from the page when the record lacks it."""
+    from ipeds_etl_spark.functions.cleaning import sql_lit
+
+    return _apply_mapper(endpoint, records, lambda name: f"{rec_col}[{sql_lit(name)}]")
+
+
+def map_pages(endpoint: str, pages: DataFrame) -> DataFrame:
+    """Raw page rows → typed, normalized records (pre-merge): parse each
+    payload into the endpoint's candidate keys, explode, apply the
+    registry contract, drop rows violating PK completeness. The one
+    pages → mapped path of the batch and streaming loads."""
+    ep = registry.get_endpoint(endpoint)
+    position = {k: i for i, k in enumerate(registry.candidate_keys(endpoint))}
+    mapped = _apply_mapper(
+        endpoint,
+        raw_io.scan_candidates(pages, list(position)),
+        lambda name: f"rec.`_{position[name]}`",
+    )
+    return mapped.filter(F.col(ep.pk[0]).isNotNull())  # PK completeness contract
 
 
 def map_from_raw(
@@ -58,13 +75,9 @@ def map_from_raw(
     raw_path: str,
     years: Sequence[int] | None = None,
 ) -> DataFrame:
-    """Raw pages → typed, normalized records (pre-merge): scan (year-
-    pruned), explode payloads, apply the registry contract, drop rows
-    violating PK completeness."""
-    ep = registry.get_endpoint(endpoint)
-    pages = raw_io.scan_pages(spark, raw_path, years)
-    mapped = map_records(endpoint, raw_io.scan_records(pages))
-    return mapped.filter(F.col(ep.pk[0]).isNotNull())  # PK completeness contract
+    """Raw table → typed, normalized records (pre-merge): scan the raw
+    pages (year-pruned) and :func:`map_pages` them."""
+    return map_pages(endpoint, raw_io.scan_pages(spark, raw_path, years))
 
 
 def write_core(

@@ -489,11 +489,12 @@ def q_upsert_on_pk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ---------------------------------------------------------------------------
 # P9 `row_mapper` — the registry-driven record normalizer (≅ reference
-# etl/mappers/directory.py:126-238) through its REAL code path: records
-# as map<string,string> (the raw-scan shape), every output column
-# generated as safe_cast(coalesce_pick(candidates)) by
-# registry.mapper_columns. Exercises alias fallback (instnm/stabbr),
-# sentinel skip, and typed casts in one pass.
+# etl/mappers/directory.py:126-238) through its production stages:
+# records as map<string,string> (built in memory, as
+# core_pipeline.map_records takes them), every output column generated
+# as safe_cast(coalesce_pick(candidates)) by
+# registry.mapper_select_stages. Exercises alias fallback
+# (instnm/stabbr), sentinel skip, and typed casts in one pass.
 # ---------------------------------------------------------------------------
 @_register(
     "registry_mapper",
@@ -540,17 +541,14 @@ def q_registry_mapper(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from ipeds_etl_spark.functions.cleaning import sql_lit
 
-    recs = c.select(rec.alias("rec"))
-    # Two-stage SQL-text mapper: one selectExpr per stage (the Column
-    # form cost ~5s of Py4J per plan build; the one-shot SQL form
-    # still paid ~1s of JVM analysis walking the duplicated cast-guard
-    # subtrees — see registry.mapper_select_stages)
-    s1, s2 = registry.mapper_select_stages(
+    out = c.select(rec.alias("rec"))
+    # SQL-text mapper stages, one selectExpr each (the Column form cost
+    # ~5s of Py4J per plan build — see registry.mapper_select_stages)
+    for stage in registry.mapper_select_stages(
         "directory", getter_sql=lambda name: f"rec[{sql_lit(name)}]"
-    )
-    return recs.selectExpr(*s1).selectExpr(*s2).select(
-        "unitid", "year", "inst_name", "state_abbr", "sector", "latitude"
-    )
+    ):
+        out = out.selectExpr(*stage)
+    return out.select("unitid", "year", "inst_name", "state_abbr", "sector", "latitude")
 
 
 # ---------------------------------------------------------------------------

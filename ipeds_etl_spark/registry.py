@@ -14,8 +14,11 @@ drives everything —
 * ``struct_type(endpoint)``  → the typed Spark schema (≅ core DDL,
   reference ``etl/core_io.py:26-54``),
 * ``mapper_columns(endpoint)`` → a generated list of cleaned/cast/
-  coalesced Column expressions (≅ the row mapper, but columnar:
-  whole-stage-codegen'd, no Python in the loop),
+  coalesced Column expressions (≅ the row mapper, but columnar, no
+  Python in the loop); ``mapper_select_stages`` is its SQL-text form,
+  the one production runs,
+* ``candidate_keys(endpoint)`` → the record keys the mapper reads
+  (the typed parse of raw payloads),
 * ``primary_key(endpoint)``  → merge/upsert conflict target.
 
 Field type codes: ``i``=int, ``l``=bigint, ``s``=string, ``d``=double.
@@ -32,15 +35,10 @@ from pyspark.sql import types as T
 
 from ipeds_etl_spark.functions.cleaning import (
     coalesce_pick,
-    coalesce_pick_sql,
     safe_double,
-    safe_double_sql,
     safe_int,
-    safe_int_sql,
     safe_long,
-    safe_long_sql,
     safe_str,
-    safe_str_sql,
 )
 
 
@@ -249,114 +247,76 @@ def mapper_columns(
 
 
 _SQL_TYPES = {"i": "INT", "l": "BIGINT", "s": "STRING", "d": "DOUBLE"}
-_SQL_SAFE_CASTS = {
-    "i": safe_int_sql,
-    "l": safe_long_sql,
-    "s": safe_str_sql,
-    "d": safe_double_sql,
-}
 
 
-def mapper_select_exprs(
-    endpoint: str,
-    available: set[str] | None = None,
-    getter_sql: Callable[[str], str] | None = None,
-) -> list[str]:
-    """SQL-string twin of :func:`mapper_columns` — same generated
-    normalization semantics, rendered as expression TEXT for one
-    ``df.selectExpr(*exprs)`` call.
-
-    Why: the Column form costs a Py4J round trip per method call; for
-    the 102-column directory mapper that was ~5s of driver time per
-    plan build. The SQL form is a single gateway call parsed JVM-side
-    (~50ms). Both forms derive from the same registry and the same
-    cleaning constants; row-level parity is pinned by
-    ``tests/test_registry.py`` and the ``registry_mapper`` oracle row.
-
-    ``getter_sql`` maps a candidate field name to a SQL expression —
-    default backtick-quoted identifier; pass e.g.
-    ``lambda n: f"rec['{n}']"`` for map-typed records.
-    """
-    ep = get_endpoint(endpoint)
-    if getter_sql is None:
-        def getter_sql(name: str) -> str:
-            return f"`{name}`"
-    out: list[str] = []
-    for f in ep.fields:
-        cands = [c for c in f.candidates if available is None or c in available]
-        if cands:
-            expr = _SQL_SAFE_CASTS[f.type](
-                coalesce_pick_sql(*[getter_sql(c) for c in cands])
-            )
-        else:
-            expr = f"CAST(NULL AS {_SQL_TYPES[f.type]})"
-        out.append(f"{expr} AS `{f.name}`")
-    return out
+def candidate_keys(endpoint: str, available: set[str] | None = None) -> tuple[str, ...]:
+    """Every distinct candidate key of the endpoint's fields, in
+    declaration order (restricted to ``available`` when given) — the
+    record keys the mapper reads. ``sources.raw.scan_candidates`` parses
+    payloads into one string field per key, in this order."""
+    keys = (c for f in get_endpoint(endpoint).fields for c in f.candidates)
+    return tuple(dict.fromkeys(k for k in keys if available is None or k in available))
 
 
 def mapper_select_stages(
     endpoint: str,
     available: set[str] | None = None,
     getter_sql: Callable[[str], str] | None = None,
-) -> tuple[list[str], list[str]]:
-    """Two-stage form of :func:`mapper_select_exprs`: stage 1 projects
-    each field's stripped/coalesced candidate string ONCE, stage 2
-    applies the regex-guarded cast to that single-node reference.
+) -> list[list[str]]:
+    """SQL-text form of :func:`mapper_columns`, as three projections
+    to run in order, one ``selectExpr`` each:
 
-    Why: the one-shot form repeats the whole coalesce+trim subtree at
-    every reference inside each cast guard (2× for int/long, 3× for
-    double), so the analyzer/optimizer walk a tree ~2.5× bigger than
-    necessary — measured ~1.0 s of JVM plan time per build for the
-    102-column mapper, ~0.4 s with the split. Catalyst keeps the two
-    projections separate (CollapseProject refuses to duplicate
-    non-cheap expressions) but fuses them into one codegen stage, so
-    the runtime plan is unchanged. Semantics are bit-identical by
-    construction: stage 1 is exactly the shared ``s`` subexpression of
-    the one-shot form. Parity with :func:`mapper_columns` is pinned by
-    ``tests/test_registry.py``.
+    1. ``__s<i>`` — each candidate key's value, cast to string and
+       stripped, ONCE;
+    2. ``__p<j>`` — each field's pick: the first candidate whose
+       stripped value is not missing (already clean, see
+       ``cleaning.pick_stripped_sql``);
+    3. each field under its own name, guard-cast from its pick (a field
+       with no candidate is a typed NULL).
+
+    Why text: the Column form costs a Py4J round trip per method call —
+    ~5 s of driver time per build for the ~100-field directory mapper;
+    one ``selectExpr`` is parsed JVM-side. Why stages: a candidate's
+    strip is read by both its missing test and its pick, and a pick by
+    every guard of its cast; a separate projection computes each once
+    (CollapseProject does not duplicate non-cheap expressions into the
+    projection above), and the tree Catalyst walks stays linear in the
+    number of candidates. Intermediate names are positional, so keys or
+    fields that differ only in case never meet the case-insensitive
+    resolver. Each candidate is read once, in stage 1: a field access
+    over ``sources.raw.scan_candidates`` records, a scan of the
+    record's keys over ``map<string,string>`` records.
+
+    ``getter_sql`` maps a candidate key to a SQL expression — default
+    backtick-quoted identifier; e.g. ``lambda n: f"rec['{n}']"`` for
+    map-typed records. Row parity with :func:`mapper_columns` is pinned
+    by ``tests/test_registry.py``.
     """
     from ipeds_etl_spark.functions.cleaning import (
-        _DBL_RE,
-        _INT_RE,
-        _NAN_RE,
-        _stripped_clean_sql,
-        clean_sentinels_sql,
-        sql_lit,
+        cast_stripped_sql,
+        pick_stripped_sql,
         strip_sql,
     )
 
-    ep = get_endpoint(endpoint)
     if getter_sql is None:
         def getter_sql(name: str) -> str:
             return f"`{name}`"
-    stage1: list[str] = []
-    stage2: list[str] = []
-    for f in ep.fields:
-        cands = [c for c in f.candidates if available is None or c in available]
+    keys = candidate_keys(endpoint, available)
+    stripped = {k: f"`__s{i}`" for i, k in enumerate(keys)}
+    strips = [
+        f"{strip_sql(f'CAST({getter_sql(k)} AS STRING)')} AS {stripped[k]}" for k in keys
+    ]
+    picks: list[str] = []
+    casts: list[str] = []
+    for f in get_endpoint(endpoint).fields:
+        cands = [stripped[c] for c in f.candidates if c in stripped]
         if not cands:
-            stage2.append(f"CAST(NULL AS {_SQL_TYPES[f.type]}) AS `{f.name}`")
+            casts.append(f"CAST(NULL AS {_SQL_TYPES[f.type]}) AS `{f.name}`")
             continue
-        picked = coalesce_pick_sql(*[getter_sql(c) for c in cands])
-        p = f"`__p_{f.name}`"
-        if f.type == "s":
-            # safe_str cleans OUTSIDE the strip — keep that order
-            stage1.append(f"{strip_sql(f'CAST({picked} AS STRING)')} AS {p}")
-            stage2.append(f"{clean_sentinels_sql(p)} AS `{f.name}`")
-        else:
-            stage1.append(f"{_stripped_clean_sql(picked)} AS {p}")
-            if f.type in ("i", "l"):
-                t = "INT" if f.type == "i" else "BIGINT"
-                stage2.append(
-                    f"try_cast(CASE WHEN {p} RLIKE {sql_lit(_INT_RE)} "
-                    f"THEN {p} END AS {t}) AS `{f.name}`"
-                )
-            else:
-                stage2.append(
-                    f"(CASE WHEN {p} RLIKE {sql_lit(_NAN_RE)} THEN CAST('NaN' AS DOUBLE) "
-                    f"WHEN {p} RLIKE {sql_lit(_DBL_RE)} THEN try_cast({p} AS DOUBLE) "
-                    f"ELSE CAST(NULL AS DOUBLE) END) AS `{f.name}`"
-                )
-    return stage1, stage2
+        p = f"`__p{len(picks)}`"
+        picks.append(f"{pick_stripped_sql(*cands)} AS {p}")
+        casts.append(f"{cast_stripped_sql(p, _SQL_TYPES[f.type])} AS `{f.name}`")
+    return [strips, picks, casts]
 
 
 def drift_report(endpoint: str, incoming_fields: set[str]) -> dict[str, list[str]]:

@@ -17,8 +17,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
-from ipeds_etl_spark import registry
-from ipeds_etl_spark.plans.core_pipeline import map_records, write_core
+from ipeds_etl_spark.plans.core_pipeline import map_pages, write_core
 from ipeds_etl_spark.sources import raw as raw_io
 
 
@@ -40,10 +39,7 @@ def incremental_core_load(
     pages = stream_raw_pages(spark, raw_path)
 
     def merge_batch(batch_df: DataFrame, batch_id: int) -> None:
-        ep = registry.get_endpoint(endpoint)
-        mapped = map_records(endpoint, raw_io.scan_records(batch_df))
-        mapped = mapped.filter(mapped[ep.pk[0]].isNotNull())
-        write_core(spark, endpoint, mapped, core_path)
+        write_core(spark, endpoint, map_pages(endpoint, batch_df), core_path)
 
     return (
         pages.writeStream.foreachBatch(merge_batch)

@@ -11,7 +11,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from ipeds_etl_spark import lineage, pipeline
+from ipeds_etl_spark import lineage, pipeline, registry
 from ipeds_etl_spark.sources import raw as raw_io
 from ipeds_etl_spark.sources.http_ingest import fetch_endpoint_pages
 
@@ -197,6 +197,27 @@ def test_run_load_shares_one_persisted_mapped_frame(spark, tmp_path, monkeypatch
     assert counted_cached and written_cached
     assert not written.is_cached
     assert _persistent_rdd_ids(spark) - before == set()
+
+
+def test_map_from_raw_compiles_without_codegen_fallback(spark, tmp_path):
+    """Parse, explode and the full directory mapper compile as whole-
+    stage codegen. With fallback off, a stage whose generated code
+    outgrows a JVM method (64 KB) raises instead of quietly running
+    the slower interpreted plan."""
+    from ipeds_etl_spark.plans.core_pipeline import map_from_raw
+
+    keys = registry.candidate_keys("directory")
+    page = [{**{k: str(i) for k in keys}, "unitid": i, "year": 2020} for i in (1, 2)]
+    raw_path = str(tmp_path / "raw")
+    raw_io.write_pages(spark, raw_io.pages_from_fetched(spark, 2020, [page]), raw_path)
+    key = "spark.sql.codegen.fallback"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "false")
+    try:
+        mapped = map_from_raw(spark, "directory", raw_path, [2020])
+        mapped.write.format("noop").mode("overwrite").save()
+    finally:
+        spark.conf.set(key, prev)
 
 
 def test_http_ingest_offline_pagination():

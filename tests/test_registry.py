@@ -57,36 +57,151 @@ def test_drift_report():
     assert "inst_name" not in rep["missing_candidates"]
 
 
+def _column_form(recs):
+    """The Column-builder mapper over ``rec: map<string,string>`` — the
+    semantic reference for the SQL-text stages."""
+    from pyspark.sql import functions as F
+
+    return recs.select(
+        *registry.mapper_columns("directory", getter=lambda n: F.col("rec").getItem(n))
+    )
+
+
+def _assert_same_rows(got, want):
+    # names and types; nullability differs by construction (the PK
+    # filter, the year backfill)
+    assert [(f.name, f.dataType) for f in got.schema] == [
+        (f.name, f.dataType) for f in want.schema
+    ]
+    assert got.exceptAll(want).count() == 0
+    assert want.exceptAll(got).count() == 0
+
+
+#: map-record rows: every value a string or None, as in a JSON parse
+_MAP_ROWS = [
+    {"unitid": "101", "year": "2020", "instnm": "  A  ", "stabbr": "CA",
+     "sector": "-1", "latitude": "12.5"},
+    {"unitid": " 102 ", "year": "2020", "inst_name": "-2", "instnm": "Fallback U",
+     "sector": "abc", "latitude": "-nan"},
+    {"unitid": "103", "year": "2020", "instnm": "", "stabbr": " NY\t",
+     "sector": "7", "latitude": "1e3"},
+    {"unitid": "104", "year": "2020", "instnm": "D", "sector": "12.5",
+     "latitude": "0x1p3"},
+    # tab / newline / vertical-tab / form-feed padding
+    {"unitid": "\t105\n", "year": "\x0b2020\x0c", "inst_name": "\fPadded\t",
+     "sector": "\n-3\t", "latitude": "\x0b1.25\x0c", "city": "\t\n\x0b\f"},
+    # sentinel in the preferred key, real value in an alias
+    {"unitid": "106", "year": "2020", "inst_name": "-3", "name": "Alias Wins",
+     "latitude": "-1", "lat": "33.5", "longitude": "-1.0", "lon": "-120.25",
+     "zip": "   ", "zip5": "12345", "sector": " -2 ", "sector_cd": "4"},
+    # float-form sentinels, INT overflow, Java-only float forms
+    {"unitid": "107", "year": "2020", "fips": "-1.0", "region": "-2.0",
+     "county_fips": "99999999999", "cbsa": "-2147483649", "csa": "2147483647",
+     "latitude": "1.5f", "longitude": "-Infinity", "necta": "+12"},
+    # JSON null for the preferred key, alias set
+    {"unitid": "108", "year": None, "inst_name": None, "instnm": "Null Pref",
+     "sector": None, "control": "1"},
+    # missing keys: PK only
+    {"unitid": "109"},
+    # whitespace before a final non-ASCII line terminator (Java's `$`
+    # also matches there, so the strip is a regexp_replace, not trim)
+    {"unitid": "110", "year": "2020", "inst_name": "X  \u2028", "city": " \u0085",
+     "state_abbr": "-1 \u2029", "address": "a \u0085 ", "latitude": "7 \u2028"},
+]
+
+#: JSON records with typed values: numbers, booleans, null, nested
+#: values and missing keys, against their quoted twins
+_JSON_ROWS = [
+    {"unitid": 201, "year": 2020, "latitude": 12.50, "longitude": -1.0,
+     "sector": -2, "hbcu": True, "fips": 3000000000, "inst_name": None,
+     "instnm": "Typed U", "county_fips": "0012", "region": 1.0},
+    {"unitid": "202", "year": "2020", "latitude": "12.50", "longitude": "-1.0",
+     "sector": "-2", "hbcu": "true", "fips": "3000000000", "instnm": "Quoted U",
+     "region": "1.0"},
+    {"unitid": 203, "city": {"a": 1}, "address": [1, 2], "tribal_college": False,
+     "inst_name": "", "name": " Nested ", "lat": 1e-7, "lon": 1.0e10},
+    {"unitid": 204, "year": 2020, "mystery_col": "?"},
+]
+
+
 def test_mapper_sql_form_matches_column_form(spark):
-    """The selectExpr (SQL-text) mapper and the Column-builder mapper
-    must produce identical schemas AND identical rows — the SQL form
-    exists only to kill per-column Py4J build cost, never to change
-    semantics. Exercises sentinels, alias fallback, whitespace strip,
-    malformed ints/floats, and absent candidates."""
+    """The SQL-text mapper stages production runs must produce the
+    same schema and rows as the Column-builder mapper — through the
+    map getter (``map_records``'s and ``q_registry_mapper``'s form) and
+    through the typed struct parse of raw pages (``map_pages``). The
+    text form exists only to kill per-column Py4J build cost, never to
+    change semantics."""
     from pyspark.sql import functions as F
 
     from ipeds_etl_spark.functions.cleaning import sql_lit
+    from ipeds_etl_spark.plans.core_pipeline import map_pages
+    from ipeds_etl_spark.sources import raw as raw_io
 
-    rows = [
-        {"unitid": "101", "year": "2020", "instnm": "  A  ", "stabbr": "CA",
-         "sector": "-1", "latitude": "12.5"},
-        {"unitid": " 102 ", "year": "2020", "inst_name": "-2", "instnm": "Fallback U",
-         "sector": "abc", "latitude": "-nan"},
-        {"unitid": "103", "year": "2020", "instnm": "", "stabbr": " NY\t",
-         "sector": "7", "latitude": "1e3"},
-        {"unitid": "104", "year": "2020", "instnm": "D", "sector": "12.5",
-         "latitude": "0x1p3"},
+    recs = spark.createDataFrame([(r,) for r in _MAP_ROWS], "rec map<string,string>")
+    staged = recs
+    for stage in registry.mapper_select_stages(
+        "directory", getter_sql=lambda n: f"rec[{sql_lit(n)}]"
+    ):
+        staged = staged.selectExpr(*stage)
+    _assert_same_rows(staged, _column_form(recs))
+
+    # typed parse of raw pages; records lacking ``year`` take the page's
+    pages = raw_io.pages_from_fetched(spark, 2021, [_JSON_ROWS, _MAP_ROWS])
+    want = _column_form(raw_io.scan_records(pages)).withColumn(
+        "year", F.coalesce("year", F.lit(2021))
+    )
+    _assert_same_rows(map_pages("directory", pages), want)
+
+
+def test_typed_parse_keeps_last_duplicate_key(spark):
+    """A key repeated within one record keeps its LAST value, as
+    Python's ``json.loads`` and Postgres JSONB (the reference's store)
+    do."""
+    import json
+
+    from ipeds_etl_spark.plans.core_pipeline import map_pages
+
+    payload = (
+        '[{"unitid":"1","year":"2020","inst_name":"first","sector":"-1",'
+        '"inst_name":"last","sector":"5"}]'
+    )
+    assert json.loads(payload)[0]["inst_name"] == "last"
+    pages = spark.createDataFrame(
+        [(2020, 1, payload)], "year int, page_number int, payload string"
+    )
+    row = map_pages("directory", pages).first()
+    assert (row["inst_name"], row["sector"]) == ("last", 5)
+
+
+def test_typed_parse_reads_keys_that_differ_only_in_case(spark, tmp_path):
+    """Candidate keys that differ only in case are distinct JSON keys;
+    the mapper reads each one (by position — by name they are an
+    ambiguous reference to the case-insensitive resolver)."""
+    import json
+
+    from ipeds_etl_spark.plans.core_pipeline import map_pages
+
+    cfg = tmp_path / "endpoints.json"
+    cfg.write_text(json.dumps({"casey": {
+        "path": "/c", "pk": ["k", "year"],
+        "fields": ["k:i", "year:i", "a:s", "b:s:A", "c:i:C"],
+    }}))
+    records = [
+        {"k": 1, "year": 2020, "a": "lower", "A": "upper", "C": "7"},
+        {"k": 2, "a": "-1", "A": "x", "c": "3", "C": "9"},
     ]
-    df = spark.createDataFrame([(r,) for r in rows], "rec map<string,string>")
-    col_form = df.select(
-        *registry.mapper_columns("directory", getter=lambda n: F.col("rec").getItem(n))
+    pages = spark.createDataFrame(
+        [(2020, 1, json.dumps(records))], "year int, page_number int, payload string"
     )
-    sql_form = df.selectExpr(
-        *registry.mapper_select_exprs("directory", getter_sql=lambda n: f"rec[{sql_lit(n)}]")
-    )
-    assert col_form.schema == sql_form.schema
-    assert col_form.exceptAll(sql_form).count() == 0
-    assert sql_form.exceptAll(col_form).count() == 0
+    try:
+        registry.load_endpoints_config(str(cfg))
+        got = {r["k"]: r.asDict() for r in map_pages("casey", pages).collect()}
+    finally:
+        registry.REGISTRY.pop("casey", None)
+    assert got == {
+        1: {"k": 1, "year": 2020, "a": "lower", "b": "upper", "c": 7},
+        2: {"k": 2, "year": 2020, "a": None, "b": "x", "c": 3},
+    }
 
 
 def test_coverage_md_count_matches_registry():
