@@ -153,17 +153,18 @@ def coalesce_pick(*cols: Column) -> Column:
 
 
 # ---------------------------------------------------------------------------
-# SQL-string twins of the scalar builders above.
+# SQL-text pieces of the registry mapper's stages (strip, pick, guarded
+# cast — see ``registry.mapper_select_stages``).
 #
-# Why both forms exist: the Column builders cost one Py4J round trip
+# Why a text form exists: the Column builders cost one Py4J round trip
 # PER METHOD CALL at plan-build time. That is invisible for a handful
 # of columns but dominated the 102-column generated mapper select —
-# ~5s of driver time per build before a single task ran. The twins
-# render the SAME expression trees as SQL text from the same regex/
-# sentinel constants; a generated select then goes through ONE
-# ``selectExpr`` call and is parsed JVM-side in milliseconds. Parity
-# between the two forms is pinned by test (same input → identical
-# rows) and by the registry_mapper oracle row.
+# ~5s of driver time per build before a single task ran. The pieces
+# render the same semantics as SQL text from the same regex/sentinel
+# constants; a generated stage then goes through ONE ``selectExpr``
+# call and is parsed JVM-side in milliseconds. Parity with the Column
+# builders is pinned by test (same input → identical rows) and by the
+# registry_mapper oracle row.
 # ---------------------------------------------------------------------------
 
 
@@ -179,17 +180,6 @@ _SENTINEL_LIST_SQL = ", ".join(sql_lit(s) for s in SENTINEL_STRINGS)
 def strip_sql(x: str) -> str:
     """SQL twin of ``_strip``."""
     return f"regexp_replace({x}, {sql_lit(_WS_EDGE_RE)}, '')"
-
-
-def is_missing_sql(x: str) -> str:
-    """SQL twin of ``is_missing``."""
-    s = strip_sql(f"CAST({x} AS STRING)")
-    return f"({x} IS NULL OR {s} = '' OR {s} IN ({_SENTINEL_LIST_SQL}))"
-
-
-def clean_sentinels_sql(x: str) -> str:
-    """SQL twin of ``clean_sentinels``."""
-    return f"(CASE WHEN {is_missing_sql(x)} THEN NULL ELSE {x} END)"
 
 
 def pick_stripped_sql(*ss: str) -> str:
@@ -219,30 +209,6 @@ def cast_stripped_sql(s: str, sql_type: str) -> str:
     if sql_type == "STRING":
         return s
     raise ValueError(f"no safe cast to {sql_type!r}")
-
-
-def _stripped_clean_sql(x: str) -> str:
-    return strip_sql(f"CAST({clean_sentinels_sql(x)} AS STRING)")
-
-
-def safe_int_sql(x: str) -> str:
-    """SQL twin of ``safe_int``."""
-    return cast_stripped_sql(_stripped_clean_sql(x), "INT")
-
-
-def safe_long_sql(x: str) -> str:
-    """SQL twin of ``safe_long``."""
-    return cast_stripped_sql(_stripped_clean_sql(x), "BIGINT")
-
-
-def safe_double_sql(x: str) -> str:
-    """SQL twin of ``safe_double``."""
-    return cast_stripped_sql(_stripped_clean_sql(x), "DOUBLE")
-
-
-def safe_str_sql(x: str) -> str:
-    """SQL twin of ``safe_str``."""
-    return clean_sentinels_sql(strip_sql(f"CAST({x} AS STRING)"))
 
 
 def canonical_json(*cols: Column | str, names: list[str] | None = None) -> Column:

@@ -22,6 +22,7 @@ from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from ipeds_etl_spark import fsutil, registry
 from ipeds_etl_spark.operators.merge import (
@@ -34,7 +35,8 @@ from ipeds_etl_spark.sources import raw as raw_io
 
 def _apply_mapper(endpoint: str, records: DataFrame, getter_sql) -> DataFrame:
     """Run the registry's mapper stages over ``records`` (which carry
-    ``page_year``), backfilling ``year`` from the page."""
+    ``page_year``), backfilling ``year`` from the page for records that
+    lack it (reference ``etl/core_io.py:87-89``)."""
     out = records
     for stage in registry.mapper_select_stages(endpoint, getter_sql=getter_sql):
         out = out.selectExpr(*stage, "page_year")
@@ -56,16 +58,35 @@ def map_records(endpoint: str, records: DataFrame, rec_col: str = "rec") -> Data
 
 def map_pages(endpoint: str, pages: DataFrame) -> DataFrame:
     """Raw page rows → typed, normalized records (pre-merge): parse each
-    payload into the endpoint's candidate keys, explode, apply the
-    registry contract, drop rows violating PK completeness. The one
-    pages → mapped path of the batch and streaming loads."""
+    payload, explode (the lateral unnest the reference pushes to
+    Postgres, ``notebooks/20_load_core_directory.ipynb:226-230``), apply
+    the registry contract, drop rows violating PK completeness. The one
+    pages → mapped path of the batch and streaming loads.
+
+    The parse goes straight into ``array<struct<_0 string, _1 string,
+    …>>``, where field ``_i`` holds record key ``candidate_keys[i]``.
+    Only candidate keys are materialized; any other key is skipped by
+    the parser, and an absent key is NULL, so schema drift in the
+    payload never breaks the scan. Every value arrives as a string: a
+    JSON number or boolean as its text (``1.50`` → ``"1.5"``), a nested
+    value as its JSON, JSON ``null`` as NULL — the mapper applies types.
+    A key repeated within one record keeps its LAST value, as Python's
+    ``json.loads`` and Postgres JSONB (the reference's store) do. Fields
+    are renamed by position after the parse, because keys that differ
+    only in case (``a``/``A``) are distinct JSON keys but ambiguous
+    names to the case-insensitive resolver."""
     ep = registry.get_endpoint(endpoint)
-    position = {k: i for i, k in enumerate(registry.candidate_keys(endpoint))}
-    mapped = _apply_mapper(
-        endpoint,
-        raw_io.scan_candidates(pages, list(position)),
-        lambda name: f"rec.`_{position[name]}`",
+    keys = registry.candidate_keys(endpoint)
+    position = {k: i for i, k in enumerate(keys)}
+
+    def record(names: Sequence[str]) -> T.ArrayType:
+        return T.ArrayType(T.StructType([T.StructField(n, T.StringType()) for n in names]))
+
+    parsed = F.from_json("payload", record(keys)).cast(
+        record([f"_{i}" for i in range(len(keys))])
     )
+    records = pages.select(F.col("year").alias("page_year"), F.explode(parsed).alias("rec"))
+    mapped = _apply_mapper(endpoint, records, lambda name: f"rec.`_{position[name]}`")
     return mapped.filter(F.col(ep.pk[0]).isNotNull())  # PK completeness contract
 
 

@@ -524,7 +524,7 @@ def q_upsert_on_pk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q_registry_mapper(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ipeds_etl_spark import registry
+    from ipeds_etl_spark.plans.core_pipeline import map_records
 
     c = load_table(spark, sf_dir, "customer")
     k = F.col("c_custkey")
@@ -539,15 +539,7 @@ def q_registry_mapper(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.when(k % 4 == 0, "-1").when(k % 4 == 1, "abc").otherwise(F.col("c_nationkey").cast("string")),
         F.lit("latitude"), F.col("c_acctbal").cast("string"),
     )
-    from ipeds_etl_spark.functions.cleaning import sql_lit
-
-    out = c.select(rec.alias("rec"))
-    # SQL-text mapper stages, one selectExpr each (the Column form cost
-    # ~5s of Py4J per plan build — see registry.mapper_select_stages)
-    for stage in registry.mapper_select_stages(
-        "directory", getter_sql=lambda name: f"rec[{sql_lit(name)}]"
-    ):
-        out = out.selectExpr(*stage)
+    out = map_records("directory", c.select(rec.alias("rec"), F.lit(2020).alias("page_year")))
     return out.select("unitid", "year", "inst_name", "state_abbr", "sector", "latitude")
 
 

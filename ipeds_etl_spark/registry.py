@@ -249,19 +249,17 @@ def mapper_columns(
 _SQL_TYPES = {"i": "INT", "l": "BIGINT", "s": "STRING", "d": "DOUBLE"}
 
 
-def candidate_keys(endpoint: str, available: set[str] | None = None) -> tuple[str, ...]:
+def candidate_keys(endpoint: str) -> tuple[str, ...]:
     """Every distinct candidate key of the endpoint's fields, in
-    declaration order (restricted to ``available`` when given) — the
-    record keys the mapper reads. ``sources.raw.scan_candidates`` parses
-    payloads into one string field per key, in this order."""
+    declaration order — the record keys the mapper reads.
+    ``plans.core_pipeline.map_pages`` parses payloads into one string
+    field per key, in this order."""
     keys = (c for f in get_endpoint(endpoint).fields for c in f.candidates)
-    return tuple(dict.fromkeys(k for k in keys if available is None or k in available))
+    return tuple(dict.fromkeys(keys))
 
 
 def mapper_select_stages(
-    endpoint: str,
-    available: set[str] | None = None,
-    getter_sql: Callable[[str], str] | None = None,
+    endpoint: str, getter_sql: Callable[[str], str] | None = None
 ) -> list[list[str]]:
     """SQL-text form of :func:`mapper_columns`, as three projections
     to run in order, one ``selectExpr`` each:
@@ -271,8 +269,7 @@ def mapper_select_stages(
     2. ``__p<j>`` — each field's pick: the first candidate whose
        stripped value is not missing (already clean, see
        ``cleaning.pick_stripped_sql``);
-    3. each field under its own name, guard-cast from its pick (a field
-       with no candidate is a typed NULL).
+    3. each field under its own name, guard-cast from its pick.
 
     Why text: the Column form costs a Py4J round trip per method call —
     ~5 s of driver time per build for the ~100-field directory mapper;
@@ -284,8 +281,8 @@ def mapper_select_stages(
     number of candidates. Intermediate names are positional, so keys or
     fields that differ only in case never meet the case-insensitive
     resolver. Each candidate is read once, in stage 1: a field access
-    over ``sources.raw.scan_candidates`` records, a scan of the
-    record's keys over ``map<string,string>`` records.
+    over the typed records of ``plans.core_pipeline.map_pages``, a scan
+    of the record's keys over ``map<string,string>`` records.
 
     ``getter_sql`` maps a candidate key to a SQL expression — default
     backtick-quoted identifier; e.g. ``lambda n: f"rec['{n}']"`` for
@@ -301,21 +298,20 @@ def mapper_select_stages(
     if getter_sql is None:
         def getter_sql(name: str) -> str:
             return f"`{name}`"
-    keys = candidate_keys(endpoint, available)
+    keys = candidate_keys(endpoint)
     stripped = {k: f"`__s{i}`" for i, k in enumerate(keys)}
     strips = [
         f"{strip_sql(f'CAST({getter_sql(k)} AS STRING)')} AS {stripped[k]}" for k in keys
     ]
-    picks: list[str] = []
-    casts: list[str] = []
-    for f in get_endpoint(endpoint).fields:
-        cands = [stripped[c] for c in f.candidates if c in stripped]
-        if not cands:
-            casts.append(f"CAST(NULL AS {_SQL_TYPES[f.type]}) AS `{f.name}`")
-            continue
-        p = f"`__p{len(picks)}`"
-        picks.append(f"{pick_stripped_sql(*cands)} AS {p}")
-        casts.append(f"{cast_stripped_sql(p, _SQL_TYPES[f.type])} AS `{f.name}`")
+    fields = get_endpoint(endpoint).fields
+    picks = [
+        f"{pick_stripped_sql(*[stripped[c] for c in f.candidates])} AS `__p{j}`"
+        for j, f in enumerate(fields)
+    ]
+    casts = [
+        f"{cast_stripped_sql(f'`__p{j}`', _SQL_TYPES[f.type])} AS `{f.name}`"
+        for j, f in enumerate(fields)
+    ]
     return [strips, picks, casts]
 
 

@@ -22,7 +22,8 @@ Spark-first differences:
   sort mirrors the inherently sequential per-year API pagination the
   reference does driver-side (``etl/raw_io.py:160-161``); ingest of one
   year is bounded by the API, not this sort.
-* The explode path back out (``scan_candidates``) is the lateral-unnest
+* The explode path back out (``scan_records``, and the mapper's typed
+  parse in ``plans.core_pipeline.map_pages``) is the lateral-unnest
   join the reference pushes to Postgres
   (``notebooks/20_load_core_directory.ipynb:226-230``).
 """
@@ -210,41 +211,12 @@ def scan_pages(
 def scan_records(pages: DataFrame) -> DataFrame:
     """Re-expand payload arrays into one row per record as
     ``rec: map<string,string>``, every key kept — the schemaless view
-    drift checks read (``pipeline.drift_check``). The mapper reads
-    :func:`scan_candidates` instead. The page's ``year`` is kept
-    alongside as ``page_year``."""
+    drift checks read (``pipeline.drift_check``); the mapper parses
+    pages itself (``plans.core_pipeline.map_pages``). The page's
+    ``year`` is kept alongside as ``page_year``."""
     recs = pages.select(
         F.col("year").alias("page_year"),
         "page_number",
         F.explode(F.from_json("payload", "array<map<string,string>>")).alias("rec"),
     )
     return recs
-
-
-def scan_candidates(pages: DataFrame, keys: Sequence[str]) -> DataFrame:
-    """Re-expand payload arrays into one row per record (the lateral
-    unnest), parsed straight into ``rec: struct<_0 string, _1 string,
-    …>`` where field ``_i`` holds the value of record key ``keys[i]``.
-
-    Only the listed keys are materialized; any other key is skipped by
-    the parser, and an absent key is NULL, so schema drift in the
-    payload never breaks the scan. Every value arrives as a string: a
-    JSON number or boolean as its text (``1.50`` → ``"1.5"``), a
-    nested value as its JSON, JSON ``null`` as NULL — the registry
-    mapper applies types downstream. A key repeated within one record
-    keeps its LAST value, as Python's ``json.loads`` and Postgres JSONB
-    (the reference's store) do. Fields are renamed by position after
-    the parse, because keys that differ only in case (``a``/``A``) are
-    distinct JSON keys but ambiguous names to the case-insensitive
-    resolver. The page's ``year`` is kept alongside as ``page_year`` for
-    backfilling records that lack a ``year`` field (reference
-    ``etl/core_io.py:87-89``)."""
-    def record(names: Sequence[str]) -> T.ArrayType:
-        return T.ArrayType(T.StructType([T.StructField(n, T.StringType()) for n in names]))
-
-    parsed = F.from_json("payload", record(keys)).cast(
-        record([f"_{i}" for i in range(len(keys))])
-    )
-    return pages.select(
-        F.col("year").alias("page_year"), "page_number", F.explode(parsed).alias("rec")
-    )

@@ -98,31 +98,40 @@ def test_safe_cast_parity_with_reference_semantics(spark, values):
 @settings(max_examples=25, deadline=None)
 @given(st.lists(adversarial, min_size=1, max_size=40))
 def test_sql_twins_match_column_forms(spark, values):
-    """The SQL-string twins must be row-identical to the Column
-    builders on the same adversarial corpus — the twins exist only to
-    kill Py4J build cost; any drift (regex escaping through the SQL
-    parser is the risk) is a bug. NaN compares by both-NaN."""
+    """The SQL text the registry mapper runs — strip, then pick, then
+    guarded cast, one projection each, as ``registry.mapper_select_stages``
+    emits them — must be row-identical to the Column builders
+    (``safe_*(coalesce_pick(...))``, as ``registry.mapper_columns``
+    builds them) on the same adversarial corpus. The text form exists
+    only to kill Py4J build cost; any drift (regex escaping through the
+    SQL parser is the risk) is a bug. NaN compares by both-NaN."""
     from ipeds_etl_spark.functions.cleaning import (
-        safe_double_sql,
-        safe_int_sql,
+        cast_stripped_sql,
+        coalesce_pick,
+        pick_stripped_sql,
         safe_long,
-        safe_long_sql,
-        safe_str_sql,
+        strip_sql,
     )
 
     df = spark.createDataFrame([(v,) for v in values], "s string")
+    pick = coalesce_pick(F.col("s"))
     col_form = df.select(
-        safe_int(F.col("s")).alias("i"),
-        safe_long(F.col("s")).alias("l"),
-        safe_double(F.col("s")).alias("d"),
-        safe_str(F.col("s")).alias("t"),
+        safe_int(pick).alias("i"),
+        safe_long(pick).alias("l"),
+        safe_double(pick).alias("d"),
+        safe_str(pick).alias("t"),
     ).collect()
-    sql_form = df.selectExpr(
-        f"{safe_int_sql('s')} AS i",
-        f"{safe_long_sql('s')} AS l",
-        f"{safe_double_sql('s')} AS d",
-        f"{safe_str_sql('s')} AS t",
-    ).collect()
+    sql_form = (
+        df.selectExpr(f"{strip_sql('CAST(s AS STRING)')} AS s0")
+        .selectExpr(f"{pick_stripped_sql('s0')} AS p")
+        .selectExpr(
+            f"{cast_stripped_sql('p', 'INT')} AS i",
+            f"{cast_stripped_sql('p', 'BIGINT')} AS l",
+            f"{cast_stripped_sql('p', 'DOUBLE')} AS d",
+            f"{cast_stripped_sql('p', 'STRING')} AS t",
+        )
+        .collect()
+    )
     for a, b, v in zip(col_form, sql_form, values):
         assert a["i"] == b["i"], f"int({v!r}): {a['i']} != {b['i']}"
         assert a["l"] == b["l"], f"long({v!r}): {a['l']} != {b['l']}"

@@ -68,11 +68,6 @@ def _column_form(recs):
 
 
 def _assert_same_rows(got, want):
-    # names and types; nullability differs by construction (the PK
-    # filter, the year backfill)
-    assert [(f.name, f.dataType) for f in got.schema] == [
-        (f.name, f.dataType) for f in want.schema
-    ]
     assert got.exceptAll(want).count() == 0
     assert want.exceptAll(got).count() == 0
 
@@ -143,14 +138,22 @@ def test_mapper_sql_form_matches_column_form(spark):
         "directory", getter_sql=lambda n: f"rec[{sql_lit(n)}]"
     ):
         staged = staged.selectExpr(*stage)
-    _assert_same_rows(staged, _column_form(recs))
+    want = _column_form(recs)
+    assert staged.schema == want.schema  # names, types and nullability
+    _assert_same_rows(staged, want)
 
-    # typed parse of raw pages; records lacking ``year`` take the page's
+    # typed parse of raw pages; records lacking ``year`` take the page's.
+    # Nullability differs here by construction (the PK filter, the year
+    # backfill), so compare names and types.
     pages = raw_io.pages_from_fetched(spark, 2021, [_JSON_ROWS, _MAP_ROWS])
+    got = map_pages("directory", pages)
     want = _column_form(raw_io.scan_records(pages)).withColumn(
         "year", F.coalesce("year", F.lit(2021))
     )
-    _assert_same_rows(map_pages("directory", pages), want)
+    assert [(f.name, f.dataType) for f in got.schema] == [
+        (f.name, f.dataType) for f in want.schema
+    ]
+    _assert_same_rows(got, want)
 
 
 def test_typed_parse_keeps_last_duplicate_key(spark):
