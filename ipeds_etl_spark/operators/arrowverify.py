@@ -1,19 +1,19 @@
-"""Arrow-batched in-bucket pair verification (opt r14, guide §4.2).
+"""Arrow-batched in-bucket pair verification — the engine's one
+production verify for the ANN near-dup family (emb_near_dups,
+emb_rp_lsh_near_dups, emb_semantic_dedup, emb_dup_threshold_sweep,
+emb_semdedup).
 
-The fused JVM expand+verify kernels (``dedup.fused_pair_hits_within_
-buckets`` / ``fused_member_folds_within_buckets``) evaluate the
-per-pair similarity through interpreted higher-order functions —
-~25M zip_with/aggregate folds at sf1 across the 8-centroid ANN family,
-measured as the dominant cost of every fused consumer after round 13
-removed the joins. Guide §4.2's counsel applies exactly here: let
-Spark do distribution and the bucket shuffle, and hand whole buckets
-to vectorized native code. These kernels keep the IDENTICAL pair
-enumeration and cap semantics (same ``capped_bucket_arrays``, same
-chunked expansion frame) but compute the verification inside one
-``mapInArrow`` stage with numpy.
+Spark does the distribution and the bucket shuffle; each chunk of a
+bucket goes to numpy whole, inside one ``mapInArrow`` stage. Pair
+enumeration and cap semantics are those of every in-bucket expansion
+(``dedup.capped_bucket_arrays`` and the chunked expansion frame
+below). The same verify spelled as a JVM higher-order-function fold
+(~25M interpreted zip_with/aggregate folds at sf1 across the
+8-centroid family; 25.9 s vs 13.4 s with this module in the r14 sf1
+record) lives in the tests as the bit-parity reference.
 
-Bit-parity, by construction (and pinned by tests against the JVM
-kernels on real corpora):
+Bit-parity with the JVM fold, by construction (and pinned by tests
+against it on real corpora):
 
 * dot: the JVM form is products in index order, left-folded from 0.0 —
   one rounded multiply + one rounded add per dimension. The numpy
@@ -24,21 +24,29 @@ kernels on real corpora):
   exact; int64 arithmetic is exact on both sides.
 * cosine: ``C / (na * nb)`` — one rounded multiply, one rounded
   divide, same operand order as the JVM expression; the norms ride
-  the payload FROM the JVM (computed once per member by the same
-  ``norm`` expression as before), so they are the same doubles.
+  the payload FROM the JVM (computed once per member by the
+  ``similarity.norm`` expression), so they are the same doubles.
 * comparisons on identical doubles yield identical booleans, hence
   identical qualifying sets and identical emitted values.
 
 Memory stays bounded by construction: a task's score block is
 ``chunk × bucket_cap`` float64 (≤ 128 × 10k × 8 B = 10 MB at the
-default cap), and the bucket array itself is the only wide value —
-the same envelope as the JVM kernels' generated-hits bound.
+default cap), and the bucket array itself is the only wide value.
+
+Workers need only numpy and pyarrow: this module is registered with
+cloudpickle to pickle BY VALUE (bottom of the file), so the kernels
+and their module-level helpers travel inside the task instead of
+being imported from the package on the worker — a Spark driver with
+the package only on its own ``sys.path`` (started from any other
+working directory) runs them too.
 """
 
 from __future__ import annotations
 
+import sys
 from typing import Iterator, Sequence
 
+from pyspark import cloudpickle
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -47,27 +55,6 @@ from ipeds_etl_spark.operators.dedup import (
     MAX_BUCKET_SIZE_DEFAULT,
     capped_bucket_arrays,
 )
-
-#: Corpus-size cutover for the Arrow verify (the know-your-data-then-
-#: pick-the-plan discipline of ``similarity.REATTACH_BROADCAST_MAX_
-#: BYTES`` / ``NGRAM_HOT_DF_BOUND``): the Arrow stage pays a per-
-#: session constant (Python worker spawn + Arrow serialization) that
-#: the r14 paired record measured as a ~1-2 s penalty on the sf0.1
-#: corpora (2k vectors, ~250k in-bucket pairs — the JVM HOF fold does
-#: that much work in well under a second), while at 20k vectors
-#: (~25M pairs) the vectorized verify wins 1.5-3×. Callers pass their
-#: memoized corpus row count; below the cutover the JVM kernels (kept
-#: as reference implementations, bit-identical by the parity tests)
-#: run instead. Both branches are oracle-verified on the same queries.
-ARROW_VERIFY_MIN_ROWS = 10_000
-
-
-def use_arrow_verify(corpus_rows: int | None) -> bool:
-    """True when the Arrow-batched verify should run: known corpus at
-    or above ``ARROW_VERIFY_MIN_ROWS`` — or unknown size (production
-    posture: assume big; the toy regime is the exception that is
-    always knowable via a metadata row count)."""
-    return corpus_rows is None or corpus_rows >= ARROW_VERIFY_MIN_ROWS
 
 
 def _chunked_buckets(
@@ -78,10 +65,10 @@ def _chunked_buckets(
     cap_mode: str,
     chunk: int,
 ) -> DataFrame:
-    """The shared chunked expansion frame — identical to the JVM
-    kernels': one row per (bucket, chunk index), the capped sorted
-    payload array duplicated per chunk row, round-robin repartitioned
-    so n_buckets × ⌈B/chunk⌉ work units spread over the task space."""
+    """The shared chunked expansion frame: one row per (bucket, chunk
+    index), the capped sorted payload array duplicated per chunk row,
+    round-robin repartitioned so n_buckets × ⌈B/chunk⌉ work units
+    spread over the task space."""
     grouped = capped_bucket_arrays(
         bucketed, bucket_cols, payload, max_bucket_size, cap_mode
     )
@@ -117,10 +104,10 @@ def pair_cos_hits_within_buckets(
     chunk: int = FUSED_PAIR_CHUNK,
 ) -> DataFrame:
     """Qualifying cosine pairs (``id_a < id_b``, ``cos_sim >=
-    threshold``) within shared buckets — the Arrow twin of the fused
-    float path in ``similarity._verified_pairs_within_buckets``.
-    Returns ``id_a, id_b, cos_sim`` with the id column's original
-    type preserved."""
+    threshold``) within shared buckets — the verify behind the
+    single-bucketing path of ``similarity._verified_pairs_within_
+    buckets``. Returns ``id_a, id_b, cos_sim`` with the id column's
+    original type preserved."""
     import numpy as np
     import pyarrow as pa
 
@@ -203,11 +190,11 @@ def member_cos_stats_within_buckets(
     chunk: int = FUSED_PAIR_CHUNK,
 ) -> DataFrame:
     """Per-MEMBER qualifying-pair stats over the b-side of the
-    in-bucket pair stream — the Arrow twin of
-    ``dedup.fused_member_folds_within_buckets`` with the cosine sweep
-    fold: for every member at sorted position j ≥ 1, the count of
-    earlier partners with ``cos >= t`` per threshold and the max
-    qualifying cosine (−1.0 sentinel when none reaches ``floor``).
+    in-bucket pair stream (what a groupBy on the pair stream's b-side
+    id would compute, without materializing the pairs): for every
+    member at sorted position j ≥ 1, the count of earlier partners
+    with ``cos >= t`` per threshold and the max qualifying cosine
+    (−1.0 sentinel when none reaches ``floor``).
     Returns ``id, c0..c<k-1> (long), mc double``."""
     import numpy as np
     import pyarrow as pa
@@ -291,9 +278,8 @@ def pair_int_crossmul_hits_within_buckets(
     chunk: int = FUSED_PAIR_CHUNK,
 ) -> DataFrame:
     """Qualifying INTEGER-cosine pairs within shared buckets — the
-    Arrow twin of the semdedup fused test ``dp > 0 AND den·dp² >=
-    num·|a|²·|b|²`` over quantized BIGINT vectors (exact integer
-    arithmetic on both sides; the caller guarantees the documented
+    semdedup test ``dp > 0 AND den·dp² >= num·|a|²·|b|²`` over
+    quantized BIGINT vectors (exact integer arithmetic on both sides; the caller guarantees the documented
     2⁶³ envelope). Returns ``*bucket_cols, id_a, id_b`` with original
     column types preserved."""
     import numpy as np
@@ -376,3 +362,6 @@ def pair_int_crossmul_hits_within_buckets(
                 )
 
     return chunked.mapInArrow(fn, out_schema)
+
+
+cloudpickle.register_pickle_by_value(sys.modules[__name__])

@@ -158,9 +158,9 @@ def capped_bucket_arrays(
     rank-capped at ``max_bucket_size`` per the ``cap_mode`` contract
     documented on :func:`pairs_within_buckets`) and the ``__overflow``
     count of dropped members. Buckets with fewer than two members are
-    dropped (no pairs). Extracted (opt r13) so the similarity side's
-    FUSED expand+verify can reuse the identical cap semantics without
-    going through the id-pair + re-attach-join spelling."""
+    dropped (no pairs). Shared with the Arrow in-bucket verify
+    (``arrowverify``), which needs the identical cap semantics without
+    the id-pair + re-attach-join spelling."""
     grouped_keys = [F.col(c) for c in bucket_cols]
     if max_bucket_size is None:
         grouped = bucketed.groupBy(*grouped_keys).agg(
@@ -223,158 +223,16 @@ def capped_bucket_arrays(
     return grouped.filter(F.size("xs") > 1)
 
 
-#: a-position chunk width for the FUSED in-bucket expand+verify
-#: (``fused_pair_hits_within_buckets``): each (bucket, chunk) row scores
-#: FUSED_PAIR_CHUNK a-positions against their partners inside one nested
-#: higher-order expression. Bounds the per-row generated hit value at
-#: chunk × cap structs even for an all-duplicate bucket, and yields
-#: n_buckets × ⌈B/chunk⌉ independently-schedulable work units —
-#: scale-adaptive parallelism without a tuned fan-out constant (chunk
-#: counts grow with bucket population, and the round-robin repartition
-#: deals heavy early chunks and light late chunks evenly).
+#: a-position chunk width for the in-bucket expand+verify
+#: (``arrowverify``): each (bucket, chunk) row scores FUSED_PAIR_CHUNK
+#: a-positions against their partners in one task-local block. Bounds
+#: the per-row score block at chunk × cap even for an all-duplicate
+#: bucket, and yields n_buckets × ⌈B/chunk⌉ independently-schedulable
+#: work units — scale-adaptive parallelism without a tuned fan-out
+#: constant (chunk counts grow with bucket population, and the
+#: round-robin repartition deals heavy early chunks and light late
+#: chunks evenly).
 FUSED_PAIR_CHUNK = 128
-
-
-def fused_pair_hits_within_buckets(
-    bucketed: DataFrame,
-    bucket_cols: Sequence[str],
-    payload: Column,
-    pair_hit,
-    keep,
-    max_bucket_size: int | None = MAX_BUCKET_SIZE_DEFAULT,
-    cap_mode: str = "window",
-    chunk: int = FUSED_PAIR_CHUNK,
-) -> DataFrame:
-    """FUSED expand+verify over in-bucket pairs (opt r13, guide §3.1
-    "the fastest join is no join"): compute ``pair_hit(a, b)`` for every
-    unordered payload pair sharing a bucket and keep only rows passing
-    ``keep(hit)`` — WITHOUT materializing the pair stream and WITHOUT
-    re-attaching per-id state by joins afterwards. The payload carries
-    whatever the verify needs (vector, norm, …); the filter runs INSIDE
-    the generating expression, so only qualifying hits ever become rows.
-
-    Compared to ``pairs_within_buckets`` + re-attach joins this deletes
-    the candidate exchange and two hash probes + wide-row copies per
-    candidate from the plan (measured −9% wall on the sf1 cosine
-    verify, and structurally removes the corpus-side join-strategy
-    decision). Use it when per-pair state is per-ID (carried in the
-    payload); keep the id-pair spelling when candidates must be
-    DEDUPED across bucketings before an expensive verify (banded LSH).
-
-    Cap semantics are IDENTICAL to ``pairs_within_buckets`` (shared
-    ``capped_bucket_arrays``; the cap window orders by the payload
-    struct whose FIRST field must be the unique orderable id, so
-    widening the payload does not change the selected members). Pairs
-    visit each ``a < b`` combination exactly once (sorted array,
-    partners strictly after the a-position).
-
-    Returns one row per hit: ``*bucket_cols, h`` where ``h`` is the
-    ``pair_hit`` struct — select ``h.<field>`` downstream.
-    """
-    grouped = capped_bucket_arrays(
-        bucketed, bucket_cols, payload, max_bucket_size, cap_mode
-    )
-    n_part = int(
-        bucketed.sparkSession.conf.get("spark.sql.shuffle.partitions", "32")
-        or 32
-    )
-    n_chunks = F.floor((F.size("xs") - F.lit(2)) / F.lit(chunk)).cast("int")
-    chunked = grouped.select(
-        *bucket_cols, "xs", F.explode(F.sequence(F.lit(0), n_chunks)).alias("__c")
-    ).repartition(n_part)
-
-    def hits_for_chunk(xs: Column, c: Column) -> Column:
-        lo = (c * chunk).cast("int")
-        hi = F.least(lo + F.lit(chunk) - 1, F.size(xs) - 2).cast("int")
-
-        def hits_for_i(i: Column) -> Column:
-            a = F.element_at(xs, (i + 1).cast("int"))
-            return F.filter(
-                F.transform(
-                    # partners strictly after i: each a < b pair once
-                    F.sequence(i + 1, F.size(xs) - 1),
-                    lambda j: pair_hit(a, F.element_at(xs, (j + 1).cast("int"))),
-                ),
-                keep,
-            )
-
-        return F.flatten(F.transform(F.sequence(lo, hi), hits_for_i))
-
-    return chunked.select(
-        *bucket_cols,
-        F.explode(hits_for_chunk(F.col("xs"), F.col("__c"))).alias("h"),
-    )
-
-
-def fused_member_folds_within_buckets(
-    bucketed: DataFrame,
-    bucket_cols: Sequence[str],
-    payload: Column,
-    zero: Column,
-    merge,
-    max_bucket_size: int | None = MAX_BUCKET_SIZE_DEFAULT,
-    cap_mode: str = "window",
-    chunk: int = FUSED_PAIR_CHUNK,
-) -> DataFrame:
-    """Per-MEMBER left-fold over each member's EARLIER in-bucket
-    partners (opt r14, guide §2.3 "aggregate before you shuffle" taken
-    to its limit): for every payload at sorted position ``j ≥ 1``,
-    compute ``fold(merge, zero, [(xs[i], xs[j]) for i < j])`` inside
-    the bucket expression and emit ONE row per member —
-    ``*bucket_cols, m`` (the position-j payload struct), ``acc`` (the
-    fold result). Consumers whose readout is a per-b-side aggregate of
-    the pair stream (threshold sweeps: per-member qualifying-pair
-    counts and max similarity) get the identical values WITHOUT ever
-    materializing a hit row per pair or shuffling the pair stream into
-    a groupBy — output rows are O(members), not O(qualifying pairs).
-
-    Pair enumeration, cap semantics, and visit order are IDENTICAL to
-    ``fused_pair_hits_within_buckets`` (shared ``capped_bucket_arrays``;
-    each unordered ``a < b`` pair visits exactly once, with ``b`` the
-    later sorted position — so a per-member fold here IS the pair
-    stream's groupBy on the b-side id, fold order running i = 0..j−1).
-    ``merge(acc, a, b)`` must be insensitive to that order when the
-    consumer's groupBy was (counts, max/min are).
-
-    Chunking mirrors the pair kernel: b-positions are dealt in
-    ``chunk``-sized ranges so one bucket yields ⌈(B−1)/chunk⌉
-    independently-schedulable rows, round-robin repartitioned.
-    Position-0 members (no earlier partners) emit nothing — exactly the
-    members absent from the pair stream's b-side."""
-    grouped = capped_bucket_arrays(
-        bucketed, bucket_cols, payload, max_bucket_size, cap_mode
-    )
-    n_part = int(
-        bucketed.sparkSession.conf.get("spark.sql.shuffle.partitions", "32")
-        or 32
-    )
-    n_chunks = F.floor((F.size("xs") - F.lit(2)) / F.lit(chunk)).cast("int")
-    chunked = grouped.select(
-        *bucket_cols, "xs", F.explode(F.sequence(F.lit(0), n_chunks)).alias("__c")
-    ).repartition(n_part)
-
-    def folds_for_chunk(xs: Column, c: Column) -> Column:
-        # b-positions j = jm1 + 1 for jm1 in [lo, hi] (0-based)
-        lo = (c * chunk).cast("int")
-        hi = F.least(lo + F.lit(chunk) - 1, F.size(xs) - 2).cast("int")
-
-        def fold_for_j(jm1: Column) -> Column:
-            b = F.element_at(xs, (jm1 + 2).cast("int"))
-            acc = F.aggregate(
-                F.sequence(F.lit(0), jm1),
-                zero,
-                lambda a_, i: merge(
-                    a_, F.element_at(xs, (i + 1).cast("int")), b
-                ),
-            )
-            return F.struct(b.alias("m"), acc.alias("acc"))
-
-        return F.transform(F.sequence(lo, hi), fold_for_j)
-
-    return chunked.select(
-        *bucket_cols,
-        F.explode(folds_for_chunk(F.col("xs"), F.col("__c"))).alias("f"),
-    ).select(*bucket_cols, F.col("f.m").alias("m"), F.col("f.acc").alias("acc"))
 
 
 def pairs_within_buckets(
@@ -384,7 +242,6 @@ def pairs_within_buckets(
     max_bucket_size: int | None = MAX_BUCKET_SIZE_DEFAULT,
     overflow_col: str | None = None,
     cap_mode: str = "window",
-    expand_slices: int | None = None,
 ) -> DataFrame:
     """All unordered pairs of ``payload`` values sharing a bucket,
     WITHOUT a self-join: groupBy bucket → sorted distinct payload array
@@ -423,16 +280,6 @@ def pairs_within_buckets(
       stop-key / HAVING count <= cap convention: boilerplate keys
       contribute no pairs), never sliced. ``__overflow`` is always 0
       for surviving buckets.
-
-    ``expand_slices`` (optimization round r13): when the bucket COUNT
-    is small (centroid-bucketed similarity: n_centroids buckets), the
-    quadratic expansion serializes on n_buckets tasks. Setting
-    ``expand_slices=k`` fans each bucket's a-side positions into k
-    contiguous ranges and repartitions the (bucket, range) rows before
-    expanding, so expansion (and whatever pipelines after it) runs
-    n_buckets × k wide. The emitted pair SET is identical. Leave None
-    (default) when buckets are plentiful (LSH bands) — the fan-out
-    shuffle would only add a pass over the bucket arrays.
     """
     grouped = capped_bucket_arrays(
         bucketed, bucket_cols, payload, max_bucket_size, cap_mode
@@ -446,84 +293,24 @@ def pairs_within_buckets(
     # i+1.. suffix slice: every allocation stays O(bucket), the B²
     # pairs exist only as a row stream the engine can pipeline and
     # spill. Same output set, same single shuffle.
-    if expand_slices and expand_slices > 1:
-        # a-side RANGE SPLIT (opt round r13, guide §2.5/2.6): with few
-        # buckets (n_centroids-bucketed similarity) the quadratic
-        # expansion — and everything pipelined after it, e.g. the
-        # broadcast-attach dot products — runs in n_buckets tasks. Fan
-        # each bucket's a-positions into ``expand_slices`` contiguous
-        # ranges and repartition the (bucket, slice) rows, so the
-        # expansion runs n_buckets × slices wide. Shuffled bytes are
-        # slices copies of each capped bucket array (O(buckets ×
-        # slices × cap) — KBs to MBs), not pairs. Pair set is
-        # IDENTICAL: each a-position lands in exactly one slice.
-        n_part = int(
-            bucketed.sparkSession.conf.get("spark.sql.shuffle.partitions", "32")
-            or 32
+    out = (
+        grouped.select(
+            F.col("__overflow"),
+            F.col("xs"),
+            F.posexplode("xs").alias("__i", "a"),
         )
-        # STRIDED slices, round-robin spread (first cut used contiguous
-        # a-ranges + hash partitioning and measured 2× SLOWER than the
-        # unsplit form: position i owns n-1-i partners, so range slice
-        # 0 carried ~15× slice 7's pairs, and hashing tens of slice
-        # rows into n_part partitions left some partitions with several
-        # heavy slices and others empty — guide §2.5's too-few-
-        # distinct-keys skew, both ways). Slice s takes positions
-        # i ≡ s (mod slices): per-slice work is equal by construction,
-        # and the keyless repartition deals the slice rows out evenly.
-        sliced = (
-            grouped.select(
-                "*",
-                F.explode(
-                    F.sequence(F.lit(0), F.lit(expand_slices - 1))
-                ).alias("__s"),
-            )
-            # a slice whose first position is past the last pairable
-            # position (n-2, 0-based) is empty; dropping it also
-            # guarantees lo <= hi for the strided sequence below
-            # (sequence with lo > hi would generate DESCENDING indices)
-            .filter(F.col("__s") < F.size("xs") - 1)
-            .repartition(n_part)
+        .select(
+            "a",
+            # 0-based position i → partners start at 1-based i+2; the
+            # over-length slice clamps, the last element's empty slice
+            # drops its row in the explode
+            F.explode(
+                F.slice("xs", F.col("__i") + F.lit(2), F.size("xs"))
+            ).alias("b"),
+            F.col("__overflow"),
         )
-        out = (
-            sliced.select(
-                F.col("__overflow"),
-                F.col("xs"),
-                F.explode(
-                    F.sequence(
-                        F.col("__s"),
-                        F.size("xs") - F.lit(2),
-                        F.lit(expand_slices),
-                    )
-                ).alias("__i"),
-            )
-            .select(
-                F.element_at("xs", F.col("__i") + 1).alias("a"),
-                F.explode(
-                    F.slice("xs", F.col("__i") + F.lit(2), F.size("xs"))
-                ).alias("b"),
-                F.col("__overflow"),
-            )
-            .select("a", "b", F.col("__overflow"))
-        )
-    else:
-        out = (
-            grouped.select(
-                F.col("__overflow"),
-                F.col("xs"),
-                F.posexplode("xs").alias("__i", "a"),
-            )
-            .select(
-                "a",
-                # 0-based position i → partners start at 1-based i+2; the
-                # over-length slice clamps, the last element's empty slice
-                # drops its row in the explode
-                F.explode(
-                    F.slice("xs", F.col("__i") + F.lit(2), F.size("xs"))
-                ).alias("b"),
-                F.col("__overflow"),
-            )
-            .select("a", "b", F.col("__overflow"))
-        )
+        .select("a", "b", F.col("__overflow"))
+    )
     if overflow_col:
         return out.withColumnRenamed("__overflow", overflow_col)
     return out.drop("__overflow")

@@ -20,7 +20,9 @@ double precision, so DuckDB's oracle (``list_transform`` + index-order
   shape as FAISS IVF-Flat, expressed relationally.
 * ``embedding_near_dups`` — corpus self-pairs with cosine ≥ threshold,
   bucketed by centroid (pairs must share a bucket) to avoid the n²
-  product.
+  product. The in-bucket verify is the one non-Column kernel here: it
+  runs in numpy inside a ``mapInArrow`` stage (``arrowverify``) with
+  the same IEEE op order as the Column fold.
 
 Determinism: centroids are seeded as the first ``n_centroids``
 vectors by id, then refined with ``kmeans_refine`` — deterministic
@@ -39,20 +41,11 @@ import math
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from ipeds_etl_spark.operators.arrowverify import pair_cos_hits_within_buckets
 from ipeds_etl_spark.operators.dedup import (
     MAX_BUCKET_SIZE_DEFAULT,
-    fused_pair_hits_within_buckets,
     pairs_within_buckets,
 )
-
-#: Decompressed-size ceiling for broadcasting the corpus side of the
-#: pair-verify re-attach join (see ``_verified_pairs_within_buckets``):
-#: the decision is made from known row counts, NOT the optimizer's
-#: compressed-bytes estimate, which repetitive embedding data skews by
-#: 30x+ (measured: 27 MB zstd parquet → ~1 GB of rows, an AQE runtime
-#: broadcast that aborted on spark.driver.maxResultSize). 64 MB keeps
-#: the broadcast well under default driver/executor headroom.
-REATTACH_BROADCAST_MAX_BYTES = 64 << 20
 
 
 def suggest_rp_planes(
@@ -446,123 +439,57 @@ def _verified_pairs_within_buckets(
     threshold: float,
     max_bucket_size: int | None,
     dedup_pairs: bool = False,
-    corpus_rows: int | None = None,
-    vec_dim: int = 64,
-    expand_slices: int | None = None,
-    engine: str | None = None,
 ) -> DataFrame:
     """Cosine-verified unordered pairs sharing a bucket, via the SAME
     capped in-bucket expansion the dedup side uses
-    (``pairs_within_buckets``): groupBy bucket → rank-capped payload
-    array → inline pair expansion. No self-join of the bucketed input,
-    and one pathological hot bucket (boilerplate embeddings all hashing
-    together) expands at most ``max_bucket_size`` members per task
-    instead of quadratically OOM-ing it. Pairs keep ``id_a < id_b``.
+    (``capped_bucket_arrays``): groupBy bucket → rank-capped payload
+    array → in-bucket pair expansion. No self-join of the bucketed
+    input, and one pathological hot bucket (boilerplate embeddings all
+    hashing together) expands at most ``max_bucket_size`` members per
+    task instead of quadratically OOM-ing it. Pairs keep ``id_a <
+    id_b``.
 
     Two spellings, chosen by ``dedup_pairs``:
 
     * ``dedup_pairs=False`` (single-bucketing callers — IVF centroids,
-      single-family RP-LSH): the FUSED expand+verify (opt r13, guide
-      §3.1 "the fastest join is no join"). The capped bucket array
-      carries ``struct(id, vec, nrm)``; a-positions are chunked
-      (``FUSED_PAIR_CHUNK`` per row) and each chunk row computes its
-      qualifying pairs inside one nested higher-order expression —
-      the threshold filter runs BEFORE anything materializes, so only
-      hits are ever emitted as rows. This deletes the id-pair
-      repartition AND both vector re-attach joins from the old plan
-      (measured at sf1: 20.7 → 17.3 s median interleaved, and the
-      25M-row pair stream + 2 hash probes/pair are gone); at scale it
-      also removes the corpus-side broadcast/shuffle-hash decision
-      entirely on this path. Memory stays bounded by construction:
-      per chunk row the generated hit array is ≤ FUSED_PAIR_CHUNK × cap
-      structs worst-case, and the bucket array itself is the only
-      wide value (cap × (8·dim+overhead) bytes). Chunk rows are
-      round-robin repartitioned so the quadratic work runs
-      n_buckets × B/FUSED_PAIR_CHUNK wide — scale-adaptive without a
-      tuned slice count (the old ``expand_slices`` knob is not needed
-      here and ignored).
+      single-family RP-LSH): the fused expand+verify
+      (``arrowverify.pair_cos_hits_within_buckets``). The capped
+      bucket array carries ``struct(id, vec, nrm)``; a-positions are
+      chunked (``FUSED_PAIR_CHUNK`` per row, round-robin repartitioned
+      so the quadratic work runs n_buckets × B/FUSED_PAIR_CHUNK wide)
+      and each chunk's cosines run vectorized in one ``mapInArrow``
+      stage with the JVM fold's IEEE op order — the threshold filter
+      runs BEFORE anything materializes, so only hits are ever emitted
+      as rows. No id-pair stream, no vector re-attach join (measured
+      at sf1: 20.7 → 17.3 s for the fused JVM form over the join form,
+      25.9 → 13.4 s for the Arrow verify over the fused JVM form).
 
     * ``dedup_pairs=True`` (banded LSH): id-only expansion, cross-band
       ``distinct`` (each candidate verifies ONCE, not once per
-      colliding band), then vectors re-attach by an equi-join whose
-      STRATEGY IS CHOSEN EXPLICITLY from known stats, never left to
-      the optimizer's size estimate. Why: AQE sizes join sides from
-      COMPRESSED shuffle bytes, and embedding corpora compress
-      brutally (the sf10 smoke's ~1 GB of decompressed vectors was
-      27 MB of zstd parquet) — AQE converted this join to broadcast
-      at runtime and the broadcast build blew
+      colliding band), then vectors re-attach by an equi-join pinned
+      shuffle-hash, never left to the optimizer's size estimate. Why:
+      AQE sizes join sides from COMPRESSED shuffle bytes, and
+      embedding corpora compress brutally (the sf10 smoke's ~1 GB of
+      decompressed vectors was 27 MB of zstd parquet) — AQE converted
+      this join to broadcast at runtime and the broadcast build blew
       ``spark.driver.maxResultSize`` collecting the decompressed rows.
-      With ``corpus_rows`` supplied (callers memoize one count per
-      corpus version), the DECOMPRESSED build size
-      ``rows × (8·dim + overhead)`` decides: under
-      ``REATTACH_BROADCAST_MAX_BYTES`` the corpus side broadcasts,
-      otherwise the join is pinned shuffle-hash. Norms ride the
-      corpus side, computed once per vector (``sqrt(dot(v,v))`` —
-      bit-identical cosine).
+      Norms ride the corpus side, computed once per vector
+      (``sqrt(dot(v,v))`` — bit-identical cosine).
 
     Both spellings emit the identical pair set with identical
     ``cos_sim`` values: same capped sorted member arrays (the cap
     window orders by a struct whose FIRST field is the unique id, so
     widening the payload with vec/nrm does not reorder it), same
-    left-fold dot, same ``>= threshold`` comparison.
-
-    ``engine`` (opt r14, fused path only): ``"arrow"`` runs the
-    per-pair cosine vectorized in a ``mapInArrow`` stage with the same
-    IEEE op order (``operators/arrowverify.py`` — bit-identical,
-    parity-pinned, measured 1.5-3× faster at sf1); ``"jvm"`` is the
-    fused higher-order-function reference spelling; ``None`` (default)
-    dispatches by ``corpus_rows`` against
-    ``arrowverify.ARROW_VERIFY_MIN_ROWS`` (the Arrow stage's
-    worker-spawn constant loses on toy corpora — measured in the r14
-    paired record)."""
+    left-fold dot, same ``>= threshold`` comparison."""
     if not dedup_pairs:
-        if engine is None:
-            # size dispatch (opt r14): the Arrow stage's per-session
-            # constant loses on toy corpora; see ARROW_VERIFY_MIN_ROWS
-            from ipeds_etl_spark.operators.arrowverify import use_arrow_verify
-
-            engine = "arrow" if use_arrow_verify(corpus_rows) else "jvm"
-        if engine == "arrow":
-            # Arrow-batched verify (opt r14, guide §4.2): identical
-            # pair enumeration and cap selection (same payload struct,
-            # same capped arrays, same chunked expansion), but the
-            # ~B²/2 per-bucket cosine folds run vectorized in numpy
-            # with the same IEEE op order — bit-identical cos_sim,
-            # measured ~2-10× faster than the interpreted HOF fold at
-            # sf1 (see arrowverify module docstring; parity pinned by
-            # test_arrow_pair_cos_matches_fused).
-            from ipeds_etl_spark.operators.arrowverify import (
-                pair_cos_hits_within_buckets,
-            )
-
-            return pair_cos_hits_within_buckets(
-                bucketed.select(*bucket_cols, id_col, vec_col),
-                bucket_cols,
-                id_col,
-                vec_col,
-                threshold,
-                max_bucket_size=max_bucket_size,
-            )
-        payload = F.struct(
-            F.col(id_col).alias("id"),
-            F.col(vec_col).alias("vec"),
-            norm(F.col(vec_col)).alias("nrm"),
-        )
-        hits = fused_pair_hits_within_buckets(
+        return pair_cos_hits_within_buckets(
             bucketed.select(*bucket_cols, id_col, vec_col),
             bucket_cols,
-            payload,
-            pair_hit=lambda a, b: F.struct(
-                a["id"].alias("id_a"),
-                b["id"].alias("id_b"),
-                (dot(a["vec"], b["vec"]) / (a["nrm"] * b["nrm"])).alias(
-                    "cos_sim"
-                ),
-            ),
-            keep=lambda h: h["cos_sim"] >= threshold,
+            id_col,
+            vec_col,
+            threshold,
             max_bucket_size=max_bucket_size,
         )
-        return hits.select("h.id_a", "h.id_b", "h.cos_sim")
 
     payload = F.struct(F.col(id_col).alias("id"))
     id_pairs = pairs_within_buckets(
@@ -570,19 +497,13 @@ def _verified_pairs_within_buckets(
         bucket_cols,
         payload,
         max_bucket_size=max_bucket_size,
-        expand_slices=expand_slices,
     ).select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
     id_pairs = id_pairs.distinct()
     vecs = corpus.select(
         F.col(id_col).alias("__vid"),
         F.col(vec_col).alias("__vvec"),
         norm(F.col(vec_col)).alias("__vnrm"),
-    )
-    est_bytes = None if corpus_rows is None else corpus_rows * (8 * vec_dim + 64)
-    if est_bytes is not None and est_bytes <= REATTACH_BROADCAST_MAX_BYTES:
-        vecs = F.broadcast(vecs)
-    else:
-        vecs = vecs.hint("shuffle_hash")
+    ).hint("shuffle_hash")
     a = vecs.select(
         F.col("__vid").alias("id_a"),
         F.col("__vvec").alias("__avec"),
@@ -742,23 +663,8 @@ def rp_lsh_near_dups(
         rp_lsh_bucket(F.col(vec_col), planes).alias("bucket"),
     )
     return _verified_pairs_within_buckets(
-        corpus, bucketed, ["bucket"], id_col, vec_col, threshold, max_bucket_size,
-        corpus_rows=corpus_rows, vec_dim=dim,
+        corpus, bucketed, ["bucket"], id_col, vec_col, threshold, max_bucket_size
     )
-
-
-def expand_slices_for(spark, n_buckets: int) -> int | None:
-    """a-side expansion fan-out for FEW-bucket pair expansions (see
-    ``pairs_within_buckets`` ``expand_slices``): enough slices that
-    n_buckets × slices ≈ 2× the shuffle partition count, so the
-    quadratic expansion and the pipelined verify work use the full
-    task space instead of n_buckets tasks. Scale-adaptive by
-    construction — on a cluster with thousands of shuffle partitions
-    AND thousands of centroids this returns None (no fan-out needed);
-    it only engages when the bucket count is the parallelism limiter."""
-    n_part = int(spark.conf.get("spark.sql.shuffle.partitions", "32") or 32)
-    slices = -(-2 * n_part // max(1, n_buckets))  # ceil
-    return slices if slices > 1 else None
 
 
 def embedding_near_dups(
@@ -770,7 +676,6 @@ def embedding_near_dups(
     n_iters: int = 2,
     max_bucket_size: int | None = MAX_BUCKET_SIZE_DEFAULT,
     cent_rows: list[tuple[int, list[float]]] | None = None,
-    corpus_rows: int | None = None,
 ) -> DataFrame:
     """Near-duplicate vector pairs (cosine ≥ threshold) within shared
     centroid buckets — linear-ish at scale; recall bounded by bucketing
@@ -786,12 +691,9 @@ def embedding_near_dups(
             corpus, id_col, vec_col, n_centroids=n_centroids, n_iters=n_iters
         )
     assigned = assign_centroids(corpus, id_col, vec_col, None, cent_rows=cent_rows)
-    # NOTE (opt r13): this path now takes the FUSED expand+verify in
-    # _verified_pairs_within_buckets (no re-attach join at all); the
-    # earlier expand_slices experiment against the join form is moot.
     return _verified_pairs_within_buckets(
         corpus, assigned, ["centroid_id"], id_col, vec_col, threshold,
-        max_bucket_size, corpus_rows=corpus_rows,
+        max_bucket_size,
     )
 
 

@@ -314,44 +314,24 @@ def q_emb_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # §4.2): a vector is dropped iff it is the b-side of ANY qualifying
     # pair, i.e. iff the max cosine over its earlier in-bucket partners
     # reaches θ — so the Arrow member-stats kernel (same capped arrays,
-    # same pair enumeration, same IEEE cosine as the fused pair path;
+    # same pair enumeration, same IEEE cosine as the pair verify;
     # bit-parity pinned by kernel tests + this oracle) yields the
     # dropped set directly, with no qualifying-hit stream and no
     # distinct exchange. Members with no qualifying pair carry the
     # -1.0 sentinel and fail mc >= θ, exactly like their absence from
-    # the former pair stream's id_b side.
-    from ipeds_etl_spark.queries_ext import _emb_count
-
-    n = _emb_count(spark, sf_dir)
-    if AV.use_arrow_verify(n):
-        assigned = SIM.assign_centroids(
-            e, "vec_id", "embedding", None,
-            cent_rows=_ivf_codebook(spark, sf_dir),
-        )
-        stats = AV.member_cos_stats_within_buckets(
-            assigned.select("centroid_id", "vec_id", "embedding"),
-            ["centroid_id"],
-            "vec_id",
-            "embedding",
-            floor=0.4,
-            thresholds=[],
-        )
-        dropped = stats.filter(F.col("mc") >= 0.4).select(
-            F.col("id").alias("drop_id")
-        )
-    else:
-        # toy-corpus branch: the r13 pair + distinct spelling (the
-        # JVM fused verify dispatches inside embedding_near_dups)
-        pairs = SIM.embedding_near_dups(
-            e,
-            "vec_id",
-            "embedding",
-            threshold=0.4,
-            n_centroids=8,
-            cent_rows=_ivf_codebook(spark, sf_dir),
-            corpus_rows=n,
-        )
-        dropped = pairs.select(F.col("id_b").alias("drop_id")).distinct()
+    # a pair stream's id_b side.
+    assigned = SIM.assign_centroids(
+        e, "vec_id", "embedding", None, cent_rows=_ivf_codebook(spark, sf_dir)
+    )
+    stats = AV.member_cos_stats_within_buckets(
+        assigned.select("centroid_id", "vec_id", "embedding"),
+        ["centroid_id"],
+        "vec_id",
+        "embedding",
+        floor=0.4,
+        thresholds=[],
+    )
+    dropped = stats.filter(F.col("mc") >= 0.4).select(F.col("id").alias("drop_id"))
     return e.select("vec_id").join(
         dropped, e.vec_id == dropped.drop_id, "left"
     ).select("vec_id", F.col("drop_id").isNull().alias("keep"))

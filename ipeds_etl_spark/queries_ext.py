@@ -605,11 +605,10 @@ def q_dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
       slack (``_ngram_corpus_is_hot`` — sampling docs thins every
       shingle's df binomially, so the max is estimable; mis-detection
       needs Chernoff mass e^-78 and costs only plan choice, both
-      branches being row-identical). The same
-      know-your-data-then-pick-the-plan discipline as
-      ``similarity.REATTACH_BROADCAST_MAX_BYTES`` (optimizer
-      estimates are not trusted for quadratic risks; a measured row
-      count is).
+      branches being row-identical). Optimizer estimates are not
+      trusted for quadratic risks (the compressed-bytes trap pinned
+      shuffle-hash in ``similarity.rp_lsh_banded_pairs``); a measured
+      row count is.
     * **max df ≤ NGRAM_HOT_DF_BOUND** → the shingle-incidence
       expansion (``dedup.ngram_jaccard_incidence_pairs``, the r9 22×
       form): its per-bucket quadratic is now CHECKED against the
@@ -964,24 +963,6 @@ def _ivf_codebook(
     return _IVF_CODEBOOKS[key]
 
 
-#: Memoized embeddings row count per corpus version: one metadata-cheap
-#: parquet count, reused by every operator whose join-strategy choice
-#: needs the DECOMPRESSED corpus size (see
-#: similarity.REATTACH_BROADCAST_MAX_BYTES — optimizer estimates are
-#: compression-skewed 30x+ on repetitive vectors).
-_EMB_COUNTS: dict[tuple, int] = {}
-
-
-def _emb_count(spark: SparkSession, sf_dir: str) -> int:
-    key = _corpus_fingerprint(sf_dir, "embeddings")
-    if key not in _EMB_COUNTS:
-        n = _parquet_num_rows(sf_dir, "embeddings")
-        if n is None:
-            n = load_table(spark, sf_dir, "embeddings").count()
-        _EMB_COUNTS[key] = n
-    return _EMB_COUNTS[key]
-
-
 #: Largest (source, shingle) bucket the ngram-jaccard incidence
 #: expansion may face before the query dispatches to the prefix-
 #: filtered plan: 10k ⇒ worst single-bucket expansion ~5·10⁷ pair rows
@@ -1210,7 +1191,6 @@ def q_emb_near_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
     return SIM.embedding_near_dups(
         e, "vec_id", "embedding", threshold=0.4, n_centroids=8,
         cent_rows=_ivf_codebook(spark, sf_dir),
-        corpus_rows=_emb_count(spark, sf_dir),
     )
 
 
@@ -1313,7 +1293,6 @@ def q_emb_rp_lsh_near_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load_table(spark, sf_dir, "embeddings")
     return rp_lsh_near_dups(
         e, "vec_id", "embedding", n_planes=8, dim=64, threshold=0.3,
-        corpus_rows=_emb_count(spark, sf_dir),
     )
 
 
@@ -1369,7 +1348,6 @@ def q_emb_rp_lsh_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load_table(spark, sf_dir, "embeddings")
     lsh = rp_lsh_near_dups(
         e, "vec_id", "embedding", n_planes=8, dim=64, threshold=0.3,
-        corpus_rows=_emb_count(spark, sf_dir),
     )
     L, R = e.alias("a"), e.alias("b")
     exact = (

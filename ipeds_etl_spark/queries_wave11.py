@@ -402,11 +402,12 @@ def semdedup_report(
       aggregation collapses it to one row per point pre-shuffle).
     * **Per-cluster examination cap** (VERDICT r8 stretch): the pair
       stage goes through the rank-capped in-bucket expansion
-      (``fused_pair_hits_within_buckets``, window cap mode) — so ONE
-      degenerate mega-cluster costs at most cap² pairs and surfaces as
-      a non-zero ``n_overflow`` audit column (members beyond the cap
-      are KEPT unexamined), instead of silently burning an n² job. The
-      cap keeps the agg buffer itself bounded, not just the expansion.
+      (``arrowverify.pair_int_crossmul_hits_within_buckets``, window
+      cap mode) — so ONE degenerate mega-cluster costs at most cap²
+      pairs and surfaces as a non-zero ``n_overflow`` audit column
+      (members beyond the cap are KEPT unexamined), instead of
+      silently burning an n² job. The cap keeps the agg buffer itself
+      bounded, not just the expansion.
 
     Norms are computed once per point, not per pair (they ride the
     bucket payload); the integer cosine test runs FUSED inside the
@@ -522,61 +523,17 @@ def semdedup_report(
     t0 = _time.perf_counter()
     from ipeds_etl_spark.operators.arrowverify import (
         pair_int_crossmul_hits_within_buckets,
-        use_arrow_verify,
     )
-    from ipeds_etl_spark.queries_ext import _emb_count
 
-    if use_arrow_verify(_emb_count(spark, sf_dir)):
-        dup = pair_int_crossmul_hits_within_buckets(
-            assigned.select("cid", "vec_id", "v"),
-            ["cid"],
-            "vec_id",
-            "v",
-            num=_SD_T2_NUM,
-            den=_SD_T2_DEN,
-            max_bucket_size=cluster_cap,
-        )
-    else:
-        # toy-corpus branch: the r13 fused JVM int verify
-        # (bit-identical — test_arrow_int_pairs_match_fused)
-        from ipeds_etl_spark.operators.dedup import (
-            fused_pair_hits_within_buckets,
-        )
-
-        n2 = F.aggregate(
-            F.zip_with(F.col("v"), F.col("v"), lambda a, b: a * b),
-            F.lit(0).cast("long"),
-            lambda acc, z: acc + z,
-        )
-        idot = lambda x, y: F.aggregate(  # noqa: E731
-            F.zip_with(x, y, lambda a, b: a * b),
-            F.lit(0).cast("long"),
-            lambda acc, z: acc + z,
-        )
-        dup = fused_pair_hits_within_buckets(
-            assigned.select("cid", "vec_id", "v"),
-            ["cid"],
-            F.struct(
-                F.col("vec_id").alias("id"),
-                F.col("v").alias("v"),
-                n2.alias("n2"),
-            ),
-            pair_hit=lambda a, b: F.struct(
-                a["id"].alias("id_a"),
-                b["id"].alias("id_b"),
-                idot(a["v"], b["v"]).cast("long").alias("dp"),
-                a["n2"].alias("na2"),
-                b["n2"].alias("nb2"),
-            ),
-            keep=lambda h: (h["dp"] > 0)
-            & (
-                F.lit(_SD_T2_DEN) * h["dp"] * h["dp"]
-                >= F.lit(_SD_T2_NUM) * h["na2"] * h["nb2"]
-            ),
-            max_bucket_size=cluster_cap,
-        ).select(
-            "cid", F.col("h.id_a").alias("id_a"), F.col("h.id_b").alias("id_b")
-        )
+    dup = pair_int_crossmul_hits_within_buckets(
+        assigned.select("cid", "vec_id", "v"),
+        ["cid"],
+        "vec_id",
+        "v",
+        num=_SD_T2_NUM,
+        den=_SD_T2_DEN,
+        max_bucket_size=cluster_cap,
+    )
     if profile is not None:
         # profile-only materialization boundary (see docstring): with
         # the fused spelling this stage IS expand+verify combined

@@ -503,7 +503,7 @@ def q_emb_dup_threshold_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     Raising the floor never changes rows at or above it."""
     from ipeds_etl_spark.operators import arrowverify as AV
     from ipeds_etl_spark.operators import similarity as SIM
-    from ipeds_etl_spark.queries_ext import _emb_count, _ivf_codebook
+    from ipeds_etl_spark.queries_ext import _ivf_codebook
 
     e = load_table(spark, sf_dir, "embeddings")
     # PER-MEMBER stats inside the bucket expansion (opt r14, guide §2.3
@@ -527,71 +527,17 @@ def q_emb_dup_threshold_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     assigned = SIM.assign_centroids(
         e, "vec_id", "embedding", None, cent_rows=_ivf_codebook(spark, sf_dir)
     )
-    if AV.use_arrow_verify(_emb_count(spark, sf_dir)):
-        per_b = AV.member_cos_stats_within_buckets(
-            assigned.select("centroid_id", "vec_id", "embedding"),
-            ["centroid_id"],
-            "vec_id",
-            "embedding",
-            floor=_SWEEP_FLOOR,
-            thresholds=[float(t) / 100.0 for t in _SWEEP_T100],
-        ).select(
-            F.col("mc"),
-            *[
-                F.col(f"c{i}").alias(f"pnp_{t}")
-                for i, t in enumerate(_SWEEP_T100)
-            ],
-        )
-    else:
-        # toy-corpus branch: the JVM member fold (bit-identical —
-        # test_arrow_member_stats_match_member_fold pins both)
-        from ipeds_etl_spark.operators import dedup as DD
-
-        payload = F.struct(
-            F.col("vec_id").alias("id"),
-            F.col("embedding").alias("vec"),
-            SIM.norm(F.col("embedding")).alias("nrm"),
-        )
-        zero = F.struct(
-            *[F.lit(0).cast("long").alias(f"pnp_{t}") for t in _SWEEP_T100],
-            F.lit(-1.0).alias("mc"),
-        )
-
-        def _merge(acc, a, b):
-            cos = SIM.dot(a["vec"], b["vec"]) / (a["nrm"] * b["nrm"])
-
-            def upd(cs):
-                fields = [
-                    (
-                        acc[f"pnp_{t}"]
-                        + F.when(cs >= F.lit(float(t)) / 100.0, 1).otherwise(0)
-                    ).alias(f"pnp_{t}")
-                    for t in _SWEEP_T100
-                ]
-                fields.append(
-                    F.greatest(
-                        acc["mc"],
-                        F.when(cs >= F.lit(_SWEEP_FLOOR), cs).otherwise(
-                            F.lit(-1.0)
-                        ),
-                    ).alias("mc")
-                )
-                return F.struct(*fields)
-
-            # bind the cosine ONCE per pair (1-element transform
-            # let-binding) — codegen does not CSE the six reads
-            return F.element_at(F.transform(F.array(cos), upd), 1)
-
-        per_b = DD.fused_member_folds_within_buckets(
-            assigned.select("centroid_id", "vec_id", "embedding"),
-            ["centroid_id"],
-            payload,
-            zero,
-            _merge,
-        ).select(
-            F.col("acc.mc").alias("mc"),
-            *[F.col(f"acc.pnp_{t}").alias(f"pnp_{t}") for t in _SWEEP_T100],
-        )
+    per_b = AV.member_cos_stats_within_buckets(
+        assigned.select("centroid_id", "vec_id", "embedding"),
+        ["centroid_id"],
+        "vec_id",
+        "embedding",
+        floor=_SWEEP_FLOOR,
+        thresholds=[float(t) / 100.0 for t in _SWEEP_T100],
+    ).select(
+        F.col("mc"),
+        *[F.col(f"c{i}").alias(f"pnp_{t}") for i, t in enumerate(_SWEEP_T100)],
+    )
     aggs = []
     for t in _SWEEP_T100:
         aggs.append(

@@ -1066,7 +1066,8 @@ def q_docs_curation_funnel(
     ``shuffle_hash``: the sf10 quad_r8 smoke caught AQE sizing the
     survivor side from 30x-compressed shuffle bytes and electing a
     driver-OOMing broadcast — the same defect class as
-    similarity.REATTACH and the LPA label join.
+    the banded-LSH vector re-attach in similarity and the LPA label
+    join.
 
     ``profile`` (optional dict, VERDICT r8 item 1): when provided,
     each stage is EAGERLY materialized (localCheckpoint) and its

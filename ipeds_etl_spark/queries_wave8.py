@@ -116,7 +116,7 @@ def q_dedup_lpa_communities(spark: SparkSession, sf_dir: str) -> DataFrame:
         # shuffle-hash hint: labels are O(V) and edges O(E) — neither
         # side is broadcastable at scale, and AQE's compressed-bytes
         # estimate has been measured to broadcast a 52M-row edge list
-        # at the sf10 smoke (the REATTACH_BROADCAST trap); pin the
+        # at the sf10 smoke (the banded-LSH re-attach trap); pin the
         # strategy instead of trusting the estimate
         nb = edges.join(
             cur.select(F.col("id").alias("d"), "lab").hint("shuffle_hash"),

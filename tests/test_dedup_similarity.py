@@ -11,6 +11,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from ipeds_etl_spark.functions.text import lang_id, token_count, word_shingles
+from ipeds_etl_spark.operators import arrowverify as AV
 from ipeds_etl_spark.operators import dedup as DD
 from ipeds_etl_spark.operators import similarity as SIM
 
@@ -273,35 +274,6 @@ def test_pairs_within_buckets_equals_naive_self_join(spark):
     assert capped == {p for p in want if p[0] in (1,2,3,10,11,20,30,31,32) and p[1] in (1,2,3,10,11,20,30,31,32)}
 
 
-def test_pairs_within_buckets_expand_slices_identical(spark):
-    """The strided a-side expansion split (opt r13: fans few-bucket
-    quadratic expansions across expand_slices × n_buckets tasks) must
-    emit the EXACT same multiset of pairs as the unsplit form — for
-    slice counts below, equal to, and above the bucket population,
-    with and without the cap, overflow column riding through."""
-    rows = (
-        [("hot", i) for i in range(17)]
-        + [("two", 100), ("two", 101)]
-        + [("one", 200)]
-    )
-    df = spark.createDataFrame(rows, "bucket string, id long")
-    payload = F.struct(F.col("id"))
-
-    def pairs(**kw):
-        return sorted(
-            (r["a"]["id"], r["b"]["id"], r["ov"])
-            for r in DD.pairs_within_buckets(
-                df, ["bucket"], payload, overflow_col="ov", **kw
-            ).collect()
-        )
-
-    base = pairs(max_bucket_size=None)
-    for slices in (2, 5, 17, 64):
-        assert pairs(max_bucket_size=None, expand_slices=slices) == base, slices
-    capped = pairs(max_bucket_size=5)
-    assert pairs(max_bucket_size=5, expand_slices=3) == capped
-
-
 def test_jaccard_prefix_join_equals_bruteforce(spark):
     """The prefix filter must be lossless at any threshold: compare
     against the O(n^2) verifier on synthetic docs with heavy overlap."""
@@ -403,8 +375,98 @@ def test_intra_batch_dedup_greedy_min_id(spark):
     assert not any(a in kept and b in kept for (a, b) in pairs)
 
 
+# ---------------------------------------------------------------------------
+# JVM reference verify kernels: the fused higher-order-function spellings
+# the Arrow kernels (``operators/arrowverify.py``) must match bit for bit.
+# Production runs the Arrow kernels only; these stay as the reference.
+# ---------------------------------------------------------------------------
+def fused_pair_hits_within_buckets(
+    bucketed,
+    bucket_cols,
+    payload,
+    pair_hit,
+    keep,
+    max_bucket_size=DD.MAX_BUCKET_SIZE_DEFAULT,
+    cap_mode="window",
+    chunk=DD.FUSED_PAIR_CHUNK,
+):
+    """``pair_hit(a, b)`` for every unordered payload pair sharing a
+    bucket, keeping rows that pass ``keep(hit)`` — computed inside one
+    nested higher-order expression per (bucket, chunk) row, so only
+    hits become rows. Same cap semantics (``capped_bucket_arrays``) and
+    chunked expansion frame as the Arrow kernels; each ``a < b`` pair
+    visits once (sorted array, partners strictly after the
+    a-position). Returns ``*bucket_cols, h`` (the ``pair_hit``
+    struct)."""
+    chunked = AV._chunked_buckets(
+        bucketed, bucket_cols, payload, max_bucket_size, cap_mode, chunk
+    )
+
+    def hits_for_chunk(xs, c):
+        lo = (c * chunk).cast("int")
+        hi = F.least(lo + F.lit(chunk) - 1, F.size(xs) - 2).cast("int")
+
+        def hits_for_i(i):
+            a = F.element_at(xs, (i + 1).cast("int"))
+            return F.filter(
+                F.transform(
+                    F.sequence(i + 1, F.size(xs) - 1),
+                    lambda j: pair_hit(a, F.element_at(xs, (j + 1).cast("int"))),
+                ),
+                keep,
+            )
+
+        return F.flatten(F.transform(F.sequence(lo, hi), hits_for_i))
+
+    return chunked.select(
+        *bucket_cols,
+        F.explode(hits_for_chunk(F.col("xs"), F.col("__c"))).alias("h"),
+    )
+
+
+def fused_member_folds_within_buckets(
+    bucketed,
+    bucket_cols,
+    payload,
+    zero,
+    merge,
+    max_bucket_size=DD.MAX_BUCKET_SIZE_DEFAULT,
+    cap_mode="window",
+    chunk=DD.FUSED_PAIR_CHUNK,
+):
+    """Per-MEMBER left-fold over each member's EARLIER in-bucket
+    partners: for every payload at sorted position ``j >= 1``,
+    ``fold(merge, zero, [(xs[i], xs[j]) for i < j])`` — the pair
+    stream's groupBy on the b-side id without materializing the pairs.
+    Position-0 members emit nothing. Returns ``*bucket_cols, m, acc``."""
+    chunked = AV._chunked_buckets(
+        bucketed, bucket_cols, payload, max_bucket_size, cap_mode, chunk
+    )
+
+    def folds_for_chunk(xs, c):
+        # b-positions j = jm1 + 1 for jm1 in [lo, hi] (0-based)
+        lo = (c * chunk).cast("int")
+        hi = F.least(lo + F.lit(chunk) - 1, F.size(xs) - 2).cast("int")
+
+        def fold_for_j(jm1):
+            b = F.element_at(xs, (jm1 + 2).cast("int"))
+            acc = F.aggregate(
+                F.sequence(F.lit(0), jm1),
+                zero,
+                lambda a_, i: merge(a_, F.element_at(xs, (i + 1).cast("int")), b),
+            )
+            return F.struct(b.alias("m"), acc.alias("acc"))
+
+        return F.transform(F.sequence(lo, hi), fold_for_j)
+
+    return chunked.select(
+        *bucket_cols,
+        F.explode(folds_for_chunk(F.col("xs"), F.col("__c"))).alias("f"),
+    ).select(*bucket_cols, F.col("f.m").alias("m"), F.col("f.acc").alias("acc"))
+
+
 def test_member_fold_matches_pair_stream_groupby(spark):
-    """r14: ``fused_member_folds_within_buckets`` (per-b-side fold
+    """``fused_member_folds_within_buckets`` (per-b-side fold
     inside the bucket expression) must reproduce exactly what the pair
     stream + groupBy(id_b) computed — per-member qualifying-pair counts
     and max cosine — on a fixture with multiple buckets, a bucket
@@ -426,7 +488,7 @@ def test_member_fold_matches_pair_stream_groupby(spark):
     ts = [0.30, 0.50, 0.70]
 
     def want_via_pairs(cap):
-        hits = DD.fused_pair_hits_within_buckets(
+        hits = fused_pair_hits_within_buckets(
             df.select("bucket", "id", "vec"),
             ["bucket"],
             payload,
@@ -478,7 +540,7 @@ def test_member_fold_matches_pair_stream_groupby(spark):
             return F.element_at(F.transform(F.array(cos), upd), 1)
 
         out = {}
-        for r in DD.fused_member_folds_within_buckets(
+        for r in fused_member_folds_within_buckets(
             df.select("bucket", "id", "vec"),
             ["bucket"],
             payload,
@@ -521,8 +583,6 @@ def test_arrow_pair_cos_matches_fused(spark):
     """r14: the Arrow/numpy in-bucket pair verify must emit the exact
     pair set AND bit-identical cos_sim doubles as the fused JVM HOF —
     uncapped, capped, and with a chunk smaller than the bucket."""
-    from ipeds_etl_spark.operators import arrowverify as AV
-
     df = _arrow_fixture(spark)
     payload = F.struct(
         F.col("id"), F.col("vec"), SIM.norm(F.col("vec")).alias("nrm")
@@ -530,7 +590,7 @@ def test_arrow_pair_cos_matches_fused(spark):
     for cap, chunk in ((None, 16), (40, 16), (None, 128)):
         jvm = {
             (r["h"]["id_a"], r["h"]["id_b"]): r["h"]["cos_sim"]
-            for r in DD.fused_pair_hits_within_buckets(
+            for r in fused_pair_hits_within_buckets(
                 df.select("bucket", "id", "vec"),
                 ["bucket"],
                 payload,
@@ -565,8 +625,6 @@ def test_arrow_pair_cos_matches_fused(spark):
 def test_arrow_member_stats_match_member_fold(spark):
     """r14: the Arrow member-stats kernel must reproduce the JVM
     member-fold exactly (counts and max cosine, sentinel included)."""
-    from ipeds_etl_spark.operators import arrowverify as AV
-
     df = _arrow_fixture(spark, seed=7)
     payload = F.struct(
         F.col("id"), F.col("vec"), SIM.norm(F.col("vec")).alias("nrm")
@@ -600,7 +658,7 @@ def test_arrow_member_stats_match_member_fold(spark):
                 r["acc"]["mc"],
                 *[r["acc"][f"c{i}"] for i in range(len(ts))],
             )
-            for r in DD.fused_member_folds_within_buckets(
+            for r in fused_member_folds_within_buckets(
                 df.select("bucket", "id", "vec"),
                 ["bucket"],
                 payload,
@@ -633,8 +691,6 @@ def test_arrow_int_pairs_match_fused(spark):
     form — quantized vectors with negative coordinates included."""
     import random
 
-    from ipeds_etl_spark.operators import arrowverify as AV
-
     rng = random.Random(5)
     rows = [
         (i, i % 3, [rng.randint(-1000, 1000) for _ in range(8)])
@@ -655,7 +711,7 @@ def test_arrow_int_pairs_match_fused(spark):
     for cap in (None, 50):
         jvm = {
             (r["bucket"], r["h"]["id_a"], r["h"]["id_b"])
-            for r in DD.fused_pair_hits_within_buckets(
+            for r in fused_pair_hits_within_buckets(
                 df.select("bucket", "id", "v"),
                 ["bucket"],
                 F.struct(F.col("id"), F.col("v"), n2.alias("n2")),
@@ -689,3 +745,64 @@ def test_arrow_int_pairs_match_fused(spark):
         }
         assert jvm == arw, (cap, len(jvm), len(arw))
         assert jvm
+
+
+_FOREIGN_CWD_SCRIPT = """
+import json, sys
+sys.path.insert(0, {repo!r})
+from pyspark.sql import SparkSession
+spark = (
+    SparkSession.builder.master("local[2]")
+    .config("spark.sql.shuffle.partitions", "2")
+    .config("spark.ui.enabled", "false")
+    .getOrCreate()
+)
+spark.sparkContext.setLogLevel("ERROR")
+from ipeds_etl_spark.operators import arrowverify as AV
+
+fv = spark.createDataFrame(
+    [(i, i % 2, [float(i % 3 + 1), 1.0]) for i in range(8)],
+    "id long, bucket int, vec array<double>",
+)
+iv = spark.createDataFrame(
+    [(i, i % 2, [i % 3 + 1, 1]) for i in range(8)],
+    "id long, bucket int, v array<long>",
+)
+print(json.dumps([
+    AV.pair_cos_hits_within_buckets(fv, ["bucket"], "id", "vec", 0.5).count(),
+    AV.member_cos_stats_within_buckets(
+        fv, ["bucket"], "id", "vec", floor=0.5, thresholds=[0.5]
+    ).count(),
+    AV.pair_int_crossmul_hits_within_buckets(
+        iv, ["bucket"], "id", "v", num=1, den=4
+    ).count(),
+]))
+"""
+
+
+def test_arrow_kernels_run_from_foreign_working_directory(tmp_path):
+    """The Arrow verify kernels must run in a session whose Python
+    workers cannot import the package: started from another working
+    directory, with the package only on the Spark driver's
+    ``sys.path`` (how an application that embeds the engine loads it).
+    The kernels' module ships to workers by value, so they need only
+    numpy and pyarrow."""
+    import json
+    import os
+    import subprocess
+    import sys
+    from pathlib import Path
+
+    repo = str(Path(__file__).resolve().parents[1])
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    proc = subprocess.run(
+        [sys.executable, "-c", _FOREIGN_CWD_SCRIPT.format(repo=repo)],
+        cwd=tmp_path,
+        env=env,
+        capture_output=True,
+        text=True,
+        timeout=600,
+    )
+    assert proc.returncode == 0, proc.stderr[-3000:]
+    counts = json.loads(proc.stdout.strip().splitlines()[-1])
+    assert len(counts) == 3 and all(n > 0 for n in counts), counts

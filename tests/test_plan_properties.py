@@ -9,10 +9,11 @@ tokenizer into a lambda) fails here, not in a benchmark regression.
 from __future__ import annotations
 
 import sys
+from pathlib import Path
 
 import pytest
 
-sys.path.insert(0, "/root/repo/tools")
+sys.path.insert(0, str(Path(__file__).resolve().parents[1] / "tools"))
 from audit_plans import audit  # noqa: E402
 
 from ipeds_etl_spark import queries as q
