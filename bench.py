@@ -378,11 +378,12 @@ def _warm_session(sf_dir: str):
 
 
 def _build_indexes(spark, sf_dir: str) -> dict[str, float]:
-    """Cold-build the memoized shared indexes; returns build seconds."""
+    """Cold-build the memoized shared indexes; returns build seconds.
+    Every caller runs it first thing in a fresh session, where the
+    memo store holds nothing of that session yet."""
     from ipeds_etl_spark.operators import indexes as IDX
 
     builds: dict[str, float] = {}
-    IDX.release_indexes(spark)
     for label, builder in (
         ("lsh_doc_pairs", IDX.lsh_doc_pairs),
         ("basket_items", IDX.basket_items),

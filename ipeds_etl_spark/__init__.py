@@ -17,6 +17,7 @@ Layout:
     plans/      view layer (latest-per-key, enrichment joins, KPIs), core pipeline
     streaming/  Structured Streaming operators over the events stream
     lineage     load_log / source_trace appenders
+    memostore   the one store for build-once artifacts (key rule, release)
 """
 
 __version__ = "0.1.0"

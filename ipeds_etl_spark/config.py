@@ -25,10 +25,6 @@ from dataclasses import asdict, dataclass, fields
 from ipeds_etl_spark.sources.catalog import mask_credentials
 
 
-def _to_bool(raw: str) -> bool:
-    return raw.strip().lower() in ("1", "true", "yes", "on")
-
-
 @dataclass(frozen=True)
 class Settings:
     """Immutable engine settings. Field name upper-cased = env var name

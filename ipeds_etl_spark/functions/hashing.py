@@ -81,8 +81,3 @@ def minhash_perms(n: int) -> list[tuple[int, int]]:
 def perm_apply(h: Column, a: int, b: int) -> Column:
     """Apply one affine permutation to an integer hash column."""
     return (h * F.lit(a) + F.lit(b)) % F.lit(MERSENNE_P)
-
-
-def perm_apply_sql(h_expr: str, a: int, b: int) -> str:
-    """DuckDB SQL text for ``perm_apply``."""
-    return f"(({h_expr}) * {a} + {b}) % {MERSENNE_P}"

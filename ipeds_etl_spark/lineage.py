@@ -116,7 +116,3 @@ def append_source_trace(spark: SparkSession, meta_path: str, endpoint: str, page
         .write.mode("append")
         .parquet(f"{meta_path}/source_trace")
     )
-
-
-def read_load_log(spark: SparkSession, meta_path: str) -> DataFrame:
-    return spark.read.schema(LOAD_LOG_SCHEMA).parquet(f"{meta_path}/load_log")

@@ -1,0 +1,96 @@
+"""The engine's one store for build-once artifacts.
+
+Some artifacts are deterministic functions of a corpus version and are
+consumed by many queries: loaded table handles, the MinHash-LSH
+candidate pairs, the basket items, IVF/PQ/residual codebooks, SQ8
+bounds, the frozen tokenizer vocabulary and skew-probe verdicts. Each
+is built once per session and corpus version, then reused
+(FAISS-style build-once-query-many; the session-level reuse of built
+intermediates of EDBT 2020's incremental top-k framework). This module
+is a leaf — it imports nothing from the engine — so loaders and
+operators at any layer can use it without an import cycle.
+
+Key rule: ``(application id, corpus fingerprint, *params)``.
+
+* The application id keeps a fresh session from serving another
+  session's checkpoint blocks or plan handles.
+* The corpus fingerprint is ``(path, mtime_ns, size)`` of the table's
+  file or directory (``corpus_fingerprint``), so data rewritten under
+  the same path misses the store instead of serving an artifact built
+  from the older data (replacing a directory's files changes its
+  mtime). When no fingerprint can be taken — a non-local path — the
+  artifact is built and NOT stored: a key made from the path alone
+  could serve stale data.
+* ``params`` name the artifact kind and its geometry, so two artifacts
+  of one corpus never share a key.
+
+Lifecycle: every build records the JVM RDD ids it pinned (the
+persistent-RDD set before and after; an eager ``localCheckpoint`` in a
+build pins its blocks for the life of the session). ``release(spark)``
+unpersists exactly those ids and clears every entry, so a long-lived
+session can drop its artifacts between phases and the next call
+rebuilds. Other cached data in the session is untouched.
+
+Timing disclosure: a consumer query timed after the first build in a
+session measures consumption only; ``bench.py`` bills the builds once
+under ``index_builds``.
+"""
+
+from __future__ import annotations
+
+import os
+from collections.abc import Callable
+from typing import Any
+
+#: full key -> (artifact, [JVM RDD ids its build pinned])
+_STORE: dict[tuple, tuple[Any, list[int]]] = {}
+
+
+def corpus_fingerprint(sf_dir: str, name: str) -> tuple | None:
+    """Identity of a table VERSION, not just its path; None when the
+    path cannot be stat'ed (non-local store)."""
+    path = f"{sf_dir}/{name}.parquet"
+    try:
+        st = os.stat(path)
+    except OSError:
+        return None
+    return (path, st.st_mtime_ns, st.st_size)
+
+
+def _persistent_ids(spark) -> set[int]:
+    jmap = spark.sparkContext._jsc.getPersistentRDDs()
+    return {int(k) for k in jmap.keySet().toArray()}
+
+
+def memo(spark, key: tuple, build: Callable[[], Any]) -> Any:
+    """The stored artifact for ``key = (fingerprint, *params)``, built
+    by ``build()`` on a miss. A None fingerprint builds without
+    storing."""
+    if key[0] is None:
+        return build()
+    full = (spark.sparkContext.applicationId, *key)
+    entry = _STORE.get(full)
+    if entry is None:
+        before = _persistent_ids(spark)
+        artifact = build()
+        entry = _STORE[full] = (artifact, sorted(_persistent_ids(spark) - before))
+    return entry[0]
+
+
+def release(spark) -> int:
+    """Unpersist every RDD the stored builds pinned and clear the store.
+
+    Returns how many JVM RDDs were unpersisted (blocking). Entries of
+    another (ended) session are dropped without touching their ids.
+    Safe to call on an empty store."""
+    app_id = spark.sparkContext.applicationId
+    ids = {rid for key, (_, pinned) in _STORE.items() if key[0] == app_id for rid in pinned}
+    _STORE.clear()
+    jmap = spark.sparkContext._jsc.getPersistentRDDs()
+    freed = 0
+    for rid in sorted(ids):
+        jrdd = jmap.get(rid)
+        if jrdd is not None:
+            jrdd.unpersist(True)
+            freed += 1
+    return freed

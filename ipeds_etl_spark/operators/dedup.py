@@ -1,6 +1,6 @@
 """Deduplication operators for large-scale training-data pipelines.
 
-Five families, all shuffle-aware and expressed with native DataFrame
+Six families, all shuffle-aware and expressed with native DataFrame
 ops (no Python in the hot path):
 
 * ``exact_dedup``            — hash-groupBy on a content hash. One
@@ -19,6 +19,9 @@ ops (no Python in the hot path):
 * ``ngram_jaccard_pairs``    — exact n-gram Jaccard for candidate
   pairs (array_intersect/array_union on shingle sets); used to verify
   LSH candidates. Exact-arithmetic rational (ints divided once).
+* ``jaccard_prefix_pairs``   — exact k-shingle Jaccard self-join
+  (optionally blocked) through the PPJoin prefix filter; the one plan
+  of the registered ``dedup_ngram_jaccard`` query.
 * ``embedding_near_dups``    — cosine-similarity near-duplicates over
   an embedding column; see ``operators.similarity`` for the kernels.
 
@@ -489,69 +492,6 @@ def ngram_jaccard_pairs(
     )
 
 
-def ngram_jaccard_incidence_pairs(
-    df: DataFrame,
-    text_col: str,
-    id_col: str,
-    k: int = 3,
-    threshold: float = 0.5,
-    block_cols: Sequence[str] = (),
-) -> DataFrame:
-    """Exact k-shingle Jaccard over (optionally blocked) pairs via the
-    SHINGLE-INCIDENCE expansion: explode distinct shingles, expand
-    co-bucket pairs per (block…, shingle), count common shingles per
-    pair, recover the union as |A|+|B|−common. Any pair with J ≥ t
-    shares ≥ 1 shingle, so this emits exactly the blocked self-join's
-    rows; work tracks Σ C(shingle-bucket, 2) — pairs that actually
-    share content — instead of C(block, 2)·|shingles|. Rows with a
-    NULL block value are dropped up front (SQL inner-equality
-    semantics, ADVICE r9: groupBy would otherwise treat NULL keys as
-    equal and pair NULL-block docs).
-
-    BOUNDEDNESS CONTRACT (VERDICT r9 item 1): the per-bucket expansion
-    is quadratic in the bucket (= per-block document frequency of one
-    shingle) and is deliberately UNCAPPED — a cap would break oracle
-    exactness. Callers MUST establish max df ≤ a sane bound first
-    (``queries_ext._ngram_blocked_max_df`` probe) and route hot
-    corpora to ``jaccard_prefix_pairs``, the lossless prefix-filtered
-    form whose hottest buckets never form. The registered
-    ``dedup_ngram_jaccard`` query does exactly that dispatch.
-    """
-    blocks = [F.col(c) for c in block_cols]
-    base = df
-    for c in block_cols:
-        base = base.filter(F.col(c).isNotNull())
-    sets = base.select(
-        F.col(id_col), *blocks, tokens(F.col(text_col)).alias("toks")
-    ).select(
-        F.col(id_col),
-        *blocks,
-        F.array_distinct(shingles_of(F.col("toks"), k)).alias("sh"),
-    )
-    sizes = sets.select(F.col(id_col).alias("__szid"), F.size("sh").alias("n"))
-    inc = sets.select(F.col(id_col), *blocks, F.explode("sh").alias("g"))
-    pw = pairs_within_buckets(
-        inc,
-        [*block_cols, "g"],
-        F.struct(F.col(id_col).alias("id")),
-        max_bucket_size=None,
-    ).select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
-    common = pw.groupBy("id_a", "id_b").agg(F.count(F.lit(1)).alias("c"))
-    na = sizes.select(F.col("__szid").alias("id_a"), F.col("n").alias("na"))
-    nb = sizes.select(F.col("__szid").alias("id_b"), F.col("n").alias("nb"))
-    j = common.join(na.hint("shuffle_hash"), "id_a").join(
-        nb.hint("shuffle_hash"), "id_b"
-    )
-    # size-int division: the emitted double is bit-identical to the
-    # oracle's len(intersect)/len(union)
-    jac = F.col("c").cast("int").cast("double") / (
-        F.col("na") + F.col("nb") - F.col("c")
-    ).cast("int")
-    return j.select("id_a", "id_b", jac.alias("jaccard")).filter(
-        F.col("jaccard") >= threshold
-    )
-
-
 def jaccard_prefix_pairs(
     df: DataFrame,
     text_col: str,
@@ -581,7 +521,9 @@ def jaccard_prefix_pairs(
     documents has maximal document frequency, so the rarity ordering
     ranks it LAST within every document and it falls outside every
     prefix whose document has ≥ ceil(1/t) shingles — the hottest
-    bucket never forms, with zero recall loss (unlike a size cap).
+    bucket never forms, with zero recall loss (unlike a size cap). No
+    probe of the corpus is needed first: the same plan serves corpora
+    with and without hot shingles.
 
     ``block_cols``: optional equality blocking — only pairs that agree
     on every block column are emitted (SQL inner-equality semantics:

@@ -1,10 +1,9 @@
-"""Shared, memoized analysis indexes with an explicit release lifecycle.
+"""Shared analysis indexes over the benchmark corpora.
 
 A production dedup/basket run materializes its candidate-pair table
-once per corpus version and fans analyses out from it (FAISS-style
-build-once-query-many; same shape as the reference's staged raw→core
-materialization, reference ``architecture.md:50-87``). This module owns
-those shared artifacts:
+once per corpus version and fans analyses out from it (same shape as
+the reference's staged raw→core materialization, reference
+``architecture.md:50-87``):
 
 * ``lsh_doc_pairs`` — the MinHash-LSH candidate-pair table over the
   ``documents`` corpus (default geometry), consumed by the dedup
@@ -14,124 +13,46 @@ those shared artifacts:
   table consumed by the market-basket / association-rules / co-purchase
   graph family.
 
-Both are deterministic pure functions of the corpus FILES (the memo key
-carries ``(path, mtime_ns, size)``, so regenerated data under the same
-path misses the cache instead of serving stale pairs) and are keyed by
-the Spark application id so a fresh session never sees another
-session's checkpoint blocks.
-
-Materialization is ``localCheckpoint`` (eager): the memo must cache the
-RESULT, not a lazy plan, and lineage truncation keeps the iterative
-consumers' plans (components fixpoints) from growing round-over-round.
-
-Lifecycle (VERDICT r6 item 7): localCheckpoint pins executor storage
-for the life of the session — at a long-lived 100 TB session that is an
-unbounded hold. Build-time RDD-id tracking makes the hold releasable:
-``release_indexes(spark)`` unpersists exactly the tracked blocks and
-clears the memos, so the next consumer rebuilds instead of crashing on
-vanished checkpoint blocks. ``bench.py --isolate`` and long pipelines
-call it between phases.
-
-TIMING DISCLOSURE: per-query bench numbers for consumers are
-consumption-only after the first build in a session; the build cost is
-billed once under ``index_builds`` in BENCH_SUMMARY.json (ADVICE r5).
+Both live in the engine's memo store (``ipeds_etl_spark.memostore``,
+which states the key and release rules). Materialization is
+``localCheckpoint`` (eager): the store must hold the RESULT, not a lazy
+plan, and lineage truncation keeps the iterative consumers' plans
+(components fixpoints) from growing round-over-round.
 """
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 
+from ipeds_etl_spark.memostore import corpus_fingerprint, memo
 from ipeds_etl_spark.operators import dedup as DD
 from ipeds_etl_spark.sources.tables import load_table
-
-#: memo value = (checkpointed DataFrame, [persisted JVM RDD ids])
-_LSH_DOC_PAIRS: dict[tuple, tuple] = {}
-_BASKET_ITEMS: dict[tuple, tuple] = {}
-
-
-def corpus_fingerprint(sf_dir: str, name: str) -> tuple:
-    """Identity of a corpus VERSION, not just its path."""
-    path = f"{sf_dir}/{name}.parquet"
-    try:
-        st = os.stat(path)
-        return (path, st.st_mtime_ns, st.st_size)
-    except OSError:  # non-local store: fall back to path identity
-        return (path,)
-
-
-def _persistent_ids(spark: SparkSession) -> set:
-    jmap = spark.sparkContext._jsc.getPersistentRDDs()
-    return {int(k) for k in jmap.keySet().toArray()}
-
-
-def _checkpoint_tracked(df: DataFrame) -> tuple:
-    """Eager localCheckpoint + record which JVM RDD ids it pinned, so
-    release_indexes can free exactly those blocks later."""
-    spark = df.sparkSession
-    before = _persistent_ids(spark)
-    out = df.localCheckpoint()
-    new_ids = sorted(_persistent_ids(spark) - before)
-    return out, new_ids
 
 
 def lsh_doc_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Memoized default-geometry MinHash-LSH candidate pairs over
     ``documents`` (columns ``id_a < id_b``, as emitted by
     ``lsh_candidate_pairs`` and joined on by all consumers)."""
-    key = (
-        spark.sparkContext.applicationId,
-        corpus_fingerprint(sf_dir, "documents"),
-        DD.N_PERMS,
-        DD.ROWS_PER_BAND,
+    # plain scan, no parallelism floor: the LSH pipeline is
+    # shuffle-dominated and measured SLOWER behind a round-robin
+    # exchange (see queries_ext._docs docstring)
+    return memo(
+        spark,
+        (corpus_fingerprint(sf_dir, "documents"), "lsh_doc_pairs", DD.N_PERMS, DD.ROWS_PER_BAND),
+        lambda: DD.lsh_candidate_pairs(
+            load_table(spark, sf_dir, "documents"), "text", "doc_id"
+        ).localCheckpoint(),
     )
-    if key not in _LSH_DOC_PAIRS:
-        # plain scan, no parallelism floor: the LSH pipeline is
-        # shuffle-dominated and measured SLOWER behind a round-robin
-        # exchange (see queries_ext._docs docstring)
-        d = load_table(spark, sf_dir, "documents")
-        _LSH_DOC_PAIRS[key] = _checkpoint_tracked(
-            DD.lsh_candidate_pairs(d, "text", "doc_id")
-        )
-    return _LSH_DOC_PAIRS[key][0]
 
 
 def basket_items(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Memoized distinct ``(l_orderkey, l_partkey)`` basket-items table
     (one distinct shuffle per corpus version, paid once per session)."""
-    key = (
-        spark.sparkContext.applicationId,
-        corpus_fingerprint(sf_dir, "lineitem"),
+    return memo(
+        spark,
+        (corpus_fingerprint(sf_dir, "lineitem"), "basket_items"),
+        lambda: load_table(spark, sf_dir, "lineitem")
+        .select("l_orderkey", "l_partkey")
+        .distinct()
+        .localCheckpoint(),
     )
-    if key not in _BASKET_ITEMS:
-        _BASKET_ITEMS[key] = _checkpoint_tracked(
-            load_table(spark, sf_dir, "lineitem")
-            .select("l_orderkey", "l_partkey")
-            .distinct()
-        )
-    return _BASKET_ITEMS[key][0]
-
-
-def release_indexes(spark: SparkSession) -> int:
-    """Unpersist every tracked index block and clear the memos.
-
-    Frees ONLY the RDD ids recorded at build time — other cached or
-    checkpointed data in the session is untouched. Returns the number
-    of JVM RDDs actually unpersisted (blocking), so callers/tests can
-    assert storage was freed. Safe to call with no indexes built.
-    """
-    jmap = spark.sparkContext._jsc.getPersistentRDDs()
-    app_id = spark.sparkContext.applicationId
-    freed = 0
-    for memo in (_LSH_DOC_PAIRS, _BASKET_ITEMS):
-        for key in list(memo):
-            _df, rdd_ids = memo.pop(key)
-            if key[0] != app_id:
-                continue  # another (dead) session's entry: ids invalid
-            for rid in rdd_ids:
-                jrdd = jmap.get(rid)
-                if jrdd is not None:
-                    jrdd.unpersist(True)
-                    freed += 1
-    return freed

@@ -134,17 +134,6 @@ def decode_media(payload: bytes, media_format: str, allow_stub: bool = False) ->
     return payload
 
 
-def _stub_features(payload: bytes) -> list[float]:
-    """Deterministic fake feature vector: normalized byte histogram over
-    FEATURE_DIM buckets — a stand-in for a CNN/audio embedding with the
-    same shape contract."""
-    counts = [0] * FEATURE_DIM
-    for b in payload:
-        counts[b % FEATURE_DIM] += 1
-    total = max(1, len(payload))
-    return [c / total for c in counts]
-
-
 RESIZED_SCHEMA = T.StructType(
     [
         T.StructField("doc_id", T.LongType(), False),

@@ -26,6 +26,8 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ipeds_etl_spark.memostore import memo
+
 #: aggregate spec name -> (phase-1 fn, phase-2 fn)
 _ALGEBRAIC = {
     "sum": (F.sum, F.sum),
@@ -101,16 +103,6 @@ def salted_join(
     return out.drop("__salt")
 
 
-#: Memoized probe verdicts keyed by caller-supplied identity (e.g.
-#: ``(sf_dir, table, column)``). The probe is one cheap sampled job,
-#: but it is a JOB — re-paying it on every query build against the
-#: same immutable corpus is pure overhead. Callers own the key: pass
-#: one only when the probed frame is stable for the key's lifetime
-#: (benchmark dirs are immutable; a mutable table should key on its
-#: txn/manifest version instead — same contract as _IVF_CODEBOOKS).
-_SKEW_VERDICTS: dict[tuple, dict] = {}
-
-
 def detect_skew(
     df: DataFrame,
     keys: Sequence[str],
@@ -129,36 +121,35 @@ def detect_skew(
     in any sample big enough (``min_sample_rows`` guards tiny inputs
     by lifting the fraction). Sampling is seeded for reproducibility.
 
-    ``cache_key``: memoize the verdict per probed-frame identity so
-    repeated plan builds against the same immutable data pay the probe
-    job once per session (see ``_SKEW_VERDICTS``).
+    ``cache_key``: the probed data's version — a
+    ``memostore.corpus_fingerprint`` — under which the verdict is kept
+    in the memo store, so repeated plan builds against the same data
+    pay the probe job once per session. None (the default, or a
+    non-local table) probes on every call.
     """
-    if cache_key is not None:
-        full_key = (cache_key, tuple(keys), sample_fraction, hot_key_share)
-        cached = _SKEW_VERDICTS.get(full_key)
-        if cached is not None:
-            return cached
-    sampled = df.select(*keys).sample(fraction=sample_fraction, seed=42)
-    counts = sampled.groupBy(*keys).count()
-    top = counts.orderBy(F.col("count").desc()).limit(1).collect()
-    total = sampled.count()
-    if total < min_sample_rows:  # sample too small to judge: resample all
-        sampled = df.select(*keys)
+
+    def probe() -> dict:
+        sampled = df.select(*keys).sample(fraction=sample_fraction, seed=42)
         counts = sampled.groupBy(*keys).count()
         top = counts.orderBy(F.col("count").desc()).limit(1).collect()
         total = sampled.count()
-    share = (top[0]["count"] / total) if top and total else 0.0
-    stats = {
-        "sampled_rows": total,
-        "hot_key": {k: top[0][k] for k in keys} if top else None,
-        "hot_key_share": share,
-        "skewed": share >= hot_key_share,
-        # spread the hot key over enough reducers to look like the median
-        "recommended_salts": max(2, min(64, int(share * 100))) if share >= hot_key_share else 1,
-    }
-    if cache_key is not None:
-        _SKEW_VERDICTS[full_key] = stats
-    return stats
+        if total < min_sample_rows:  # sample too small to judge: resample all
+            sampled = df.select(*keys)
+            counts = sampled.groupBy(*keys).count()
+            top = counts.orderBy(F.col("count").desc()).limit(1).collect()
+            total = sampled.count()
+        share = (top[0]["count"] / total) if top and total else 0.0
+        return {
+            "sampled_rows": total,
+            "hot_key": {k: top[0][k] for k in keys} if top else None,
+            "hot_key_share": share,
+            "skewed": share >= hot_key_share,
+            # spread the hot key over enough reducers to look like the median
+            "recommended_salts": max(2, min(64, int(share * 100))) if share >= hot_key_share else 1,
+        }
+
+    key = (cache_key, "skew", tuple(keys), sample_fraction, hot_key_share, min_sample_rows)
+    return memo(df.sparkSession, key, probe)
 
 
 def join_with_skew_guard(
@@ -215,9 +206,9 @@ def agg_with_skew_guard(
     itself sits atop an expensive pipeline — probing ``df`` would
     execute that whole upstream once just to pick a plan.
 
-    ``cache_key`` memoizes the probe verdict per probed-frame identity
-    (see ``detect_skew``) so rebuilding the same query doesn't pay a
-    probe job per build."""
+    ``cache_key`` keeps the probe verdict per data version (see
+    ``detect_skew``) so rebuilding the same query doesn't pay a probe
+    job per build."""
     stats = detect_skew(detect_on if detect_on is not None else df, keys,
                         sample_fraction, hot_key_share, cache_key=cache_key)
     if stats["skewed"]:

@@ -135,17 +135,3 @@ def write_core(
     else:
         merged = upsert_on_pk(mapped.limit(0), mapped, ep.pk)
     overwrite_partitions_staged(spark, merged, core_path, "year")
-
-
-def load_core_from_raw(
-    spark: SparkSession,
-    endpoint: str,
-    raw_path: str,
-    core_path: str,
-    years: Sequence[int] | None = None,
-) -> DataFrame:
-    """Full E2 lifecycle; returns the mapped (pre-merge) DataFrame so
-    callers can observe counts. Writes the merged core table."""
-    mapped = map_from_raw(spark, endpoint, raw_path, years)
-    write_core(spark, endpoint, mapped, core_path)
-    return mapped

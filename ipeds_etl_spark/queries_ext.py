@@ -24,7 +24,11 @@ from ipeds_etl_spark.functions.hashing import (
     parity_hash,
     parity_hash_sql,
 )
+from ipeds_etl_spark.memostore import corpus_fingerprint, memo
 from ipeds_etl_spark.operators import dedup as DD
+# private aliases: the wave files import the shared index builders from here
+from ipeds_etl_spark.operators.indexes import basket_items as _basket_items  # noqa: F401
+from ipeds_etl_spark.operators.indexes import lsh_doc_pairs as _lsh_doc_pairs
 from ipeds_etl_spark.operators import similarity as SIM
 from ipeds_etl_spark.plans.views import exact_sum
 from ipeds_etl_spark.queries import _register
@@ -590,53 +594,26 @@ def q_dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact 3-word-shingle Jaccard over same-source candidate pairs
-    (the blocked verifier stage of a dedup pipeline).
+    (the blocked verifier stage of a dedup pipeline), as one plan: the
+    source-blocked PPJoin prefix filter (``dedup.jaccard_prefix_pairs``).
 
-    PROBE-DISPATCHED between two oracle-exact plans (r10, VERDICT r9
-    item 1 — closing the last silent-n² exposure without paying for
-    the cure on corpora that don't need it):
+    The prefix filter is lossless (prefix theorem) and bounds the hot
+    bucket: a boilerplate shingle present in most docs of one source
+    ranks LAST in every doc's rarity order, so its quadratic bucket
+    never forms (``test_hot_shingle_bucket_never_forms``). It also
+    costs no more: the shingle-incidence expansion it replaced — run
+    only behind a probe that measured the max per-(source, shingle)
+    document frequency — gave identical output and was slower warm at
+    sf0.1 (8.1 vs 3.8 s) and on a 10× sf0.1 documents replica (27.0 vs
+    23.9 s), within noise at sf0.01 (4 cores, 4 shuffle partitions), so
+    neither the probe nor the second plan pays.
 
-    * **Probe**: the max per-(source, shingle) document frequency —
-      the largest bucket the incidence expansion would ever create —
-      memoized per corpus version and TIERED (r11, VERDICT r10 item
-      6): a metadata-cheap parquet row count picks the tier; corpora
-      ≤ 100k docs pay the exact one-integer aggregate, larger ones a
-      deterministic 1/16 doc-sampled estimate with 2× conservative
-      slack (``_ngram_corpus_is_hot`` — sampling docs thins every
-      shingle's df binomially, so the max is estimable; mis-detection
-      needs Chernoff mass e^-78 and costs only plan choice, both
-      branches being row-identical). Optimizer estimates are not
-      trusted for quadratic risks (the compressed-bytes trap pinned
-      shuffle-hash in ``similarity.rp_lsh_banded_pairs``); a measured
-      row count is.
-    * **max df ≤ NGRAM_HOT_DF_BOUND** → the shingle-incidence
-      expansion (``dedup.ngram_jaccard_incidence_pairs``, the r9 22×
-      form): its per-bucket quadratic is now CHECKED against the
-      bound instead of silently assumed — measured ABAB at sf1:
-      5.6–6.7 s vs the prefix form's 10 s (the freq-join + rank
-      window + candidate distinct + array verify constant doesn't pay
-      off when no hot bucket exists).
-    * **max df > bound** (boilerplate corpus — "all rights reserved"
-      in most docs of one source) → the source-blocked PPJoin prefix
-      filter (``dedup.jaccard_prefix_pairs``): lossless by the prefix
-      theorem, and the ubiquitous shingle ranks LAST in every doc's
-      rarity order so its quadratic bucket never forms (bounded-
-      intermediate test: test_round10_ops hot-shingle case, which
-      also pins both branches row-identical on the same corpus).
-
-    Both branches drop NULL-source docs up front — the oracle's
-    ``a.source = b.source`` never pairs them (ADVICE r9) — and both
-    keep the division size-int/size-int, so the emitted double is
-    bit-identical to the oracle's. Probe disclosure: memoized per
-    corpus version like the LSH memo; first call pays one agg, billed
-    medians measure the dispatched plan."""
-    d = _docs(spark, sf_dir)
-    if not _ngram_corpus_is_hot(spark, sf_dir):
-        return DD.ngram_jaccard_incidence_pairs(
-            d, "text", "doc_id", k=3, threshold=0.2, block_cols=["source"]
-        )
+    NULL-source docs are dropped up front — the oracle's
+    ``a.source = b.source`` never pairs them — and the division stays
+    size-int/size-int, so the emitted double is bit-identical to the
+    oracle's."""
     return DD.jaccard_prefix_pairs(
-        d, "text", "doc_id", k=3, threshold=0.2, block_cols=["source"]
+        _docs(spark, sf_dir), "text", "doc_id", k=3, threshold=0.2, block_cols=["source"]
     )
 
 
@@ -915,11 +892,12 @@ def _docs(spark: SparkSession, sf_dir: str):
     """Documents scan with a parallelism floor — used ONLY by queries
     whose per-row map work (per-gram sha256, per-pair set algebra)
     dwarfs the round-robin exchange: measured, the floor took
-    ``doc_fingerprint`` 2.5s→0.33s and ``dedup_ngram_jaccard``
-    33s→2.4s at sf0.1, while every shuffle-dominated query (minhash,
-    simhash, tfidf, packing) got slower with it — their cost is in the
-    post-shuffle stages, which are already wide, so the extra exchange
-    is pure overhead. Single-partition scans only happen on tiny
+    ``doc_fingerprint`` 2.5s→0.33s and an earlier brute-force
+    ``dedup_ngram_jaccard`` 33s→2.4s at sf0.1, while every
+    shuffle-dominated query (minhash, simhash, tfidf, packing) got
+    slower with it — their cost is in the post-shuffle stages, which
+    are already wide, so the extra exchange is pure overhead.
+    Single-partition scans only happen on tiny
     single-row-group files; see ``load_table``."""
     return load_table(
         spark, sf_dir, "documents",
@@ -927,179 +905,20 @@ def _docs(spark: SparkSession, sf_dir: str):
     )
 
 
-#: Memoized IVF codebooks keyed by (corpus FINGERPRINT, geometry).
-#: IVF is build-once-query-many (FAISS train/add vs search): the
-#: codebook is a deterministic pure function of the corpus files and
-#: the geometry, so every query against the same corpus version shares
-#: one index build instead of re-running seed + Lloyd refinement. The
-#: key carries the source file's (mtime_ns, size), so regenerating data
-#: under the same path misses the cache instead of serving a stale
-#: codebook (which would silently change bucketing); a pipeline over
-#: mutable txn tables would key on the manifest version the same way.
-#: TIMING DISCLOSURE: per-query bench numbers for the IVF queries are
-#: search-only — the index build is paid once per corpus version and
-#: amortized across the suite (noted in SCALE.md).
-_IVF_CODEBOOKS: dict[tuple, list] = {}
-
-# Shared, releasable index builders live in operators.indexes (VERDICT
-# r6 items 7+8: lifecycle + registry split); the private names below
-# are kept as aliases because every wave file imports them from here.
-from ipeds_etl_spark.operators.indexes import (  # noqa: E402
-    basket_items as _basket_items,
-    corpus_fingerprint as _corpus_fingerprint,
-    lsh_doc_pairs as _lsh_doc_pairs,
-)
-
-
 def _ivf_codebook(
     spark: SparkSession, sf_dir: str, n_centroids: int = 8, n_iters: int = 2
 ) -> list:
-    key = (_corpus_fingerprint(sf_dir, "embeddings"), n_centroids, n_iters)
-    if key not in _IVF_CODEBOOKS:
-        e = load_table(spark, sf_dir, "embeddings")
-        _IVF_CODEBOOKS[key] = SIM.build_ivf_centroids(
-            e, "vec_id", "embedding", n_centroids=n_centroids, n_iters=n_iters
-        )
-    return _IVF_CODEBOOKS[key]
-
-
-#: Largest (source, shingle) bucket the ngram-jaccard incidence
-#: expansion may face before the query dispatches to the prefix-
-#: filtered plan: 10k ⇒ worst single-bucket expansion ~5·10⁷ pair rows
-#: (the same envelope as dedup.MAX_BUCKET_SIZE_DEFAULT — streamed, not
-#: buffered, thanks to the posexplode+slice expansion).
-NGRAM_HOT_DF_BOUND = 10_000
-
-#: Memoized max per-(source, 3-shingle) document frequency per corpus
-#: version — the quadratic-risk probe for dedup_ngram_jaccard's plan
-#: dispatch (see its docstring). One map-combinable agg.
-_NGRAM_MAX_DF: dict[tuple, int] = {}
-
-#: Memoized documents row count per corpus version; decides which
-#: probe tier the dispatch uses. Read from the parquet FOOTERS
-#: (``pyarrow`` num_rows — guaranteed no data pages, where a
-#: ``df.count()`` only stays metadata-only if the reader path
-#: cooperates; VERDICT r11 What's-wrong 3), with a Spark count as the
-#: fallback for non-local stores.
-_DOC_COUNTS: dict[tuple, int] = {}
-
-
-def _parquet_num_rows(sf_dir: str, name: str) -> int | None:
-    """Row count from parquet footer metadata only; None if the table
-    is not local-filesystem-readable (caller falls back to Spark)."""
-    import pyarrow.parquet as _pq
-    from pathlib import Path as _Path
-
-    p = _Path(sf_dir) / f"{name}.parquet"
-    try:
-        if p.is_dir():
-            files = sorted(p.glob("**/*.parquet"))
-            if not files:
-                # A directory table with zero part files is NOT an
-                # empty corpus we can vouch for (e.g. a staging dir
-                # mid-write) — returning 0 here would be memoized as
-                # the doc count and silently flip the probe-tier
-                # dispatch (ADVICE r12). Let Spark decide.
-                return None
-            return sum(
-                _pq.ParquetFile(str(f)).metadata.num_rows for f in files
-            )
-        return _pq.ParquetFile(str(p)).metadata.num_rows
-    except Exception:
-        # Not just OSError: pyarrow raises ArrowInvalid (a ValueError
-        # subclass) on corrupt/non-parquet data — any footer-read
-        # failure means "fall back to the Spark count", never a crash
-        # of the query build (ADVICE r12).
-        return None
-
-#: Probe tiers (VERDICT r10 item 6: the exact probe paid a dedicated
-#: full shingle explode+agg whose only output is one integer). Corpora
-#: up to this many docs keep the EXACT probe — at that size the pass
-#: is trivially cheap and the unit-test corpora stay bit-deterministic.
-NGRAM_PROBE_EXACT_MAX_DOCS = 100_000
-#: Above the cutoff: deterministic 1-in-16 DOC sample (hash on doc_id,
-#: every sampled doc contributes ALL its shingles, so every shingle's
-#: df is binomially thinned at rate 1/16 — sampling SHINGLES instead
-#: would simply miss hot keys and is unsound for a max).
-NGRAM_PROBE_SAMPLE_MOD = 16
-#: Conservative slack: the corpus is treated as hot when the scaled
-#: sample estimate reaches BOUND/2. A truly-hot bucket (df ≥ 10k,
-#: expected sampled df 625) evaluating below 312 has Chernoff mass
-#: e^-78 — and the failure mode is only PERFORMANCE (the incidence
-#: branch streams its expansion), never correctness; erring hot picks
-#: the lossless prefix branch.
-NGRAM_PROBE_SLACK = 2
-_NGRAM_HOT: dict[tuple, bool] = {}
-
-
-def _doc_count(spark: SparkSession, sf_dir: str) -> int:
-    key = _corpus_fingerprint(sf_dir, "documents")
-    if key not in _DOC_COUNTS:
-        n = _parquet_num_rows(sf_dir, "documents")
-        if n is None:
-            n = load_table(spark, sf_dir, "documents").count()
-        _DOC_COUNTS[key] = n
-    return _DOC_COUNTS[key]
-
-
-def _ngram_df_agg(docs: DataFrame) -> int:
-    """Max per-(source, 3-shingle) df over ``docs`` — one
-    map-combinable aggregate, one integer out."""
-    inc = docs.select(
-        "source",
-        F.explode(
-            F.array_distinct(TX.shingles_of(TX.tokens(F.col("text")), 3))
-        ).alias("g"),
+    """IVF coarse codebook, memoized per corpus version and geometry
+    (``memostore``). Per-query bench numbers for the IVF queries are
+    search-only: the build is billed once under ``index_builds``."""
+    return memo(
+        spark,
+        (corpus_fingerprint(sf_dir, "embeddings"), "ivf", n_centroids, n_iters),
+        lambda: SIM.build_ivf_centroids(
+            load_table(spark, sf_dir, "embeddings"), "vec_id", "embedding",
+            n_centroids=n_centroids, n_iters=n_iters,
+        ),
     )
-    row = (
-        inc.groupBy("source", "g")
-        .agg(F.count(F.lit(1)).alias("df"))
-        .agg(F.max("df").alias("m"))
-        .collect()[0]
-    )
-    return int(row.m or 0)
-
-
-def _ngram_blocked_max_df(spark: SparkSession, sf_dir: str) -> int:
-    """EXACT probe (memoized): true max per-(source, shingle) df."""
-    key = _corpus_fingerprint(sf_dir, "documents")
-    if key not in _NGRAM_MAX_DF:
-        _NGRAM_MAX_DF[key] = _ngram_df_agg(
-            _docs(spark, sf_dir).filter(F.col("source").isNotNull())
-        )
-    return _NGRAM_MAX_DF[key]
-
-
-def _ngram_corpus_is_hot(spark: SparkSession, sf_dir: str) -> bool:
-    """Dispatch predicate for ``dedup_ngram_jaccard`` (memoized per
-    corpus version): small corpora (metadata-cheap row count ≤
-    ``NGRAM_PROBE_EXACT_MAX_DOCS``) pay the exact probe; large corpora
-    pay a 1/16 deterministic doc-sampled probe with 2× slack — a
-    ~6%-CPU pass instead of the full shingle explode the r10 form
-    burned for one integer (VERDICT r10 item 6)."""
-    key = _corpus_fingerprint(sf_dir, "documents")
-    if key not in _NGRAM_HOT:
-        if _doc_count(spark, sf_dir) <= NGRAM_PROBE_EXACT_MAX_DOCS:
-            hot = _ngram_blocked_max_df(spark, sf_dir) > NGRAM_HOT_DF_BOUND
-        else:
-            keep = (
-                parity_hash(
-                    F.concat(F.lit("ngprobe|"), F.col("doc_id").cast("string"))
-                )
-                % NGRAM_PROBE_SAMPLE_MOD
-                == 0
-            )
-            sampled = _ngram_df_agg(
-                _docs(spark, sf_dir)
-                .filter(F.col("source").isNotNull())
-                .filter(keep)
-            )
-            hot = (
-                sampled * NGRAM_PROBE_SAMPLE_MOD
-                >= NGRAM_HOT_DF_BOUND // NGRAM_PROBE_SLACK
-            )
-        _NGRAM_HOT[key] = hot
-    return _NGRAM_HOT[key]
 
 
 def _ivf_sql(n_iters: int = 2, dim: int = 64) -> str:
@@ -2391,8 +2210,9 @@ def sessionize_user_stats(
     run the whole upstream twice) decides between the plain one-shuffle
     agg and the two-phase salted form. Results are identical either
     way; under a planted hot user the plan switches to the salted shape
-    (pinned in ``tests/test_skew.py``). ``probe_cache_key`` memoizes
-    the probe verdict for immutable inputs (benchmark dirs)."""
+    (pinned in ``tests/test_skew.py``). ``probe_cache_key`` — the
+    events table's ``corpus_fingerprint`` — keeps the probe verdict in
+    the memo store per data version."""
     from ipeds_etl_spark.operators.skew import agg_with_skew_guard
 
     w_order = Window.partitionBy("user_id").orderBy("ts", "event_id")
@@ -2460,12 +2280,11 @@ def q_events_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     sum — the deterministic batch formulation; the streaming module
     uses ``session_window`` for the incremental case). The per-user
     stats agg is skew-guarded — see ``sessionize_user_stats``. The
-    probe verdict is memoized per sf_dir (immutable benchmark data, so
-    the verdict can't go stale; a mutable table would key on its txn
-    version)."""
+    probe verdict is kept per events file version, so a rewritten file
+    is probed again."""
     return sessionize_user_stats(
         load_table(spark, sf_dir, "events"),
-        probe_cache_key=(sf_dir, "events", "user_id"),
+        probe_cache_key=corpus_fingerprint(sf_dir, "events"),
     )
 
 
@@ -3422,22 +3241,18 @@ _PQ_M, _PQ_SUB_DIM, _PQ_K, _PQ_ITERS = 4, 16, 16, 2
 #: 0.88; depth is the quality/cost dial.
 _PQ_SHORTLIST = 100
 
-_PQ_CODEBOOKS: dict[tuple, list] = {}
-
-
 def _pq_codebook(spark: SparkSession, sf_dir: str) -> list:
-    """Memoized per corpus version like ``_ivf_codebook``: PQ is
-    build-once-query-many; the (mtime, size) fingerprint invalidates
-    on regeneration. Same amortized-build timing disclosure applies."""
-    key = (_corpus_fingerprint(sf_dir, "embeddings"), _PQ_M, _PQ_SUB_DIM, _PQ_K, _PQ_ITERS)
-    if key not in _PQ_CODEBOOKS:
-        e = load_table(spark, sf_dir, "embeddings")
-        _PQ_CODEBOOKS[key] = SIM.build_pq_codebooks(
-            e, "vec_id", "embedding",
+    """PQ sub-codebooks, memoized per corpus version like
+    ``_ivf_codebook`` (same billed-once build)."""
+    return memo(
+        spark,
+        (corpus_fingerprint(sf_dir, "embeddings"), "pq", _PQ_M, _PQ_SUB_DIM, _PQ_K, _PQ_ITERS),
+        lambda: SIM.build_pq_codebooks(
+            load_table(spark, sf_dir, "embeddings"), "vec_id", "embedding",
             n_subspaces=_PQ_M, sub_dim=_PQ_SUB_DIM,
             n_centroids=_PQ_K, n_iters=_PQ_ITERS,
-        )
-    return _PQ_CODEBOOKS[key]
+        ),
+    )
 
 
 def _pq_sub_sql(s: int, src: str = "embeddings", prefix: str | None = None) -> list[str]:
@@ -3717,8 +3532,8 @@ def q_dedup_minhash_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     0.7 sits at the 16-perm 4×4-band s-curve threshold ((1/4)^(1/4) ≈
     0.707), so the measured number is the s-curve promise made
     empirical and oracle-checked. The gold standard is the O(n²)
-    verifier (oracle-scale only, like ``dedup_ngram_jaccard``'s
-    unblocked form); the threshold compare is cross-multiplied
+    verifier (oracle-scale only, like ``dedup.ngram_jaccard_pairs``,
+    the reference the prefix-join tests check against); the threshold compare is cross-multiplied
     integers (10·|∩| ≥ 7·|∪|) — no float until the final ratio."""
     d = _docs(spark, sf_dir)
     lsh = _lsh_doc_pairs(spark, sf_dir)

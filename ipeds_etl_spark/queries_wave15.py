@@ -30,6 +30,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ipeds_etl_spark.memostore import corpus_fingerprint, memo
 from ipeds_etl_spark.operators import bpe as BPE
 from ipeds_etl_spark.operators import similarity as SIM
 from ipeds_etl_spark.queries import _register
@@ -465,18 +466,13 @@ def q_emb_ivfpq_filtered_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ===========================================================================
 # Scalar quantization (SQ8): the 4x compression point
 # ===========================================================================
-#: Memoized SQ8 bounds per corpus version (dim x 2 doubles).
-_SQ8_BOUNDS: dict[tuple, list] = {}
-
-
 def _sq8_bounds(spark: SparkSession, sf_dir: str) -> list:
-    from ipeds_etl_spark.operators.indexes import corpus_fingerprint
-
-    key = (corpus_fingerprint(sf_dir, "embeddings"), "sq8")
-    if key not in _SQ8_BOUNDS:
-        e = load_table(spark, sf_dir, "embeddings")
-        _SQ8_BOUNDS[key] = SIM.sq8_train(e, "embedding")
-    return _SQ8_BOUNDS[key]
+    """SQ8 bounds (dim x 2 doubles), memoized per corpus version."""
+    return memo(
+        spark,
+        (corpus_fingerprint(sf_dir, "embeddings"), "sq8"),
+        lambda: SIM.sq8_train(load_table(spark, sf_dir, "embeddings"), "embedding"),
+    )
 
 
 def _sq8_sql() -> str:
@@ -617,30 +613,27 @@ def q_emb_sq8_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ===========================================================================
 # Residual IVF-PQ: the FAISS default (by_residual=true)
 # ===========================================================================
-#: Memoized residual sub-codebooks per corpus version (trained on
-#: v − coarse_centroid(v) — same geometry as the plain PQ books).
-_RES_BOOKS: dict[tuple, list] = {}
-
-
 def _res_books(spark: SparkSession, sf_dir: str) -> list:
-    from ipeds_etl_spark.operators.indexes import corpus_fingerprint
+    """Residual sub-codebooks, memoized per corpus version: trained on
+    v − coarse_centroid(v), same geometry as the plain PQ books."""
     from ipeds_etl_spark.queries_ext import _PQ_ITERS, _PQ_K
 
-    key = (
-        corpus_fingerprint(sf_dir, "embeddings"),
-        "residual", _PQ_M, _PQ_SUB_DIM, _PQ_K, _PQ_ITERS,
-    )
-    if key not in _RES_BOOKS:
-        e = load_table(spark, sf_dir, "embeddings")
+    def build() -> list:
         res = SIM.residual_frame(
-            e, "vec_id", "embedding", _ivf_codebook(spark, sf_dir)
+            load_table(spark, sf_dir, "embeddings"), "vec_id", "embedding",
+            _ivf_codebook(spark, sf_dir),
         )
-        _RES_BOOKS[key] = SIM.build_pq_codebooks(
+        return SIM.build_pq_codebooks(
             res, "vec_id", "embedding",
             n_subspaces=_PQ_M, sub_dim=_PQ_SUB_DIM,
             n_centroids=_PQ_K, n_iters=_PQ_ITERS,
         )
-    return _RES_BOOKS[key]
+
+    return memo(
+        spark,
+        (corpus_fingerprint(sf_dir, "embeddings"), "residual", _PQ_M, _PQ_SUB_DIM, _PQ_K, _PQ_ITERS),
+        build,
+    )
 
 
 def _ivfpq_residual_sql() -> str:
@@ -952,26 +945,25 @@ def q_emb_incremental_decontaminate(
 _VOCAB_N_GRAMS = 1000
 _VOCAB_MAX_LEN = 6
 
-#: Memoized frozen vocabulary per corpus version (the ``_ivf_codebook``
-#: pattern): a tokenizer vocabulary is build-once-apply-many — the
-#: (mtime, size) fingerprint invalidates on regeneration, and every
-#: apply against the same corpus version shares one derivation.
-_VOCABS: dict[tuple, list[str]] = {}
-
 
 def _frozen_vocab(spark: SparkSession, sf_dir: str) -> list[str]:
-    from ipeds_etl_spark.operators.indexes import corpus_fingerprint
+    """Frozen tokenizer vocabulary, memoized per corpus version: a
+    vocabulary is build-once-apply-many, like ``_ivf_codebook``."""
 
-    key = (corpus_fingerprint(sf_dir, "documents"), _VOCAB_N_GRAMS, _VOCAB_MAX_LEN)
-    if key not in _VOCABS:
+    def build() -> list[str]:
         d = load_table(spark, sf_dir, "documents")
-        _VOCABS[key] = [
+        return [
             r["g"]
             for r in BPE.top_ngram_vocab(
                 d, "text", n_grams=_VOCAB_N_GRAMS, max_len=_VOCAB_MAX_LEN
             ).collect()  # frozen artifact: bounded at _VOCAB_N_GRAMS rows
         ]
-    return _VOCABS[key]
+
+    return memo(
+        spark,
+        (corpus_fingerprint(sf_dir, "documents"), "vocab", _VOCAB_N_GRAMS, _VOCAB_MAX_LEN),
+        build,
+    )
 
 _W0_SQL = r"""
     w0 AS (

@@ -20,11 +20,11 @@ loader; Catalyst prunes the parquet scan to exactly those columns
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType
+
+from ipeds_etl_spark.memostore import corpus_fingerprint, memo
 
 TABLES = (
     "region",
@@ -43,21 +43,6 @@ TABLES = (
 #: (column -> it holds); conversion is applied only if the column
 #: actually reads back as a long.
 _NANOS_TS_COLS = {"events": ("ts",)}
-
-#: Memoized loaded tables. A warm ``spark.read.parquet`` still costs
-#: ~0.1s of schema inference + Dataset construction per call, and the
-#: conditional ``min_partitions`` probe converts to an RDD — paid on
-#: EVERY query build (2-3 tables each) against immutable benchmark
-#: dirs. DataFrames are immutable plan handles, so reuse is safe; the
-#: key carries the source's (mtime_ns, size) fingerprint, so a
-#: regenerated file or a rewritten tmp-dir table misses the cache
-#: naturally (directory mtime changes when files are replaced).
-#: Non-local paths (no os.stat) skip caching entirely.
-_TABLE_CACHE: dict[tuple, DataFrame] = {}
-
-
-def clear_table_cache() -> None:
-    _TABLE_CACHE.clear()
 
 
 def load_table(
@@ -80,29 +65,29 @@ def load_table(
     splits it is a no-op — it only widens degenerate scans, never
     inserts an exchange into an already-parallel plan. Pass
     ``spark.sparkContext.defaultParallelism``; only worth it when the
-    downstream per-row work dwarfs one tiny round-robin shuffle."""
-    path = f"{sf_dir}/{name}.parquet"
-    try:
-        st = os.stat(path)
-        fingerprint = (st.st_mtime_ns, st.st_size)
-    except OSError:
-        fingerprint = None  # non-local path: no cheap staleness probe, no cache
-    key = (spark.sparkContext.applicationId, path, min_partitions, fingerprint)
-    if fingerprint is not None and key in _TABLE_CACHE:
-        return _TABLE_CACHE[key]
-    if name in _NANOS_TS_COLS:
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    df = spark.read.parquet(path)
-    for c in _NANOS_TS_COLS.get(name, ()):
-        if isinstance(df.schema[c].dataType, LongType):
-            df = df.withColumn(c, F.expr(f"timestamp_micros({c} div 1000)"))
-        else:
-            df = df.withColumn(c, F.col(c).cast("timestamp"))
-    if min_partitions is not None and df.rdd.getNumPartitions() < min_partitions:
-        df = df.repartition(min_partitions)
-    if fingerprint is not None:
-        _TABLE_CACHE[key] = df
-    return df
+    downstream per-row work dwarfs one tiny round-robin shuffle.
+
+    A warm ``spark.read.parquet`` still costs ~0.1s of schema inference
+    and Dataset construction, and the ``min_partitions`` probe converts
+    to an RDD — paid on every query build (2-3 tables each). A
+    DataFrame is an immutable plan handle, so the loaded frame is kept
+    in the memo store (``ipeds_etl_spark.memostore``: keyed by the
+    file's fingerprint, not stored for non-local paths)."""
+
+    def read() -> DataFrame:
+        if name in _NANOS_TS_COLS:
+            spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+        df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
+        for c in _NANOS_TS_COLS.get(name, ()):
+            if isinstance(df.schema[c].dataType, LongType):
+                df = df.withColumn(c, F.expr(f"timestamp_micros({c} div 1000)"))
+            else:
+                df = df.withColumn(c, F.col(c).cast("timestamp"))
+        if min_partitions is not None and df.rdd.getNumPartitions() < min_partitions:
+            df = df.repartition(min_partitions)
+        return df
+
+    return memo(spark, (corpus_fingerprint(sf_dir, name), "table", min_partitions), read)
 
 
 def register_views(spark: SparkSession, sf_dir: str, names: tuple[str, ...] = TABLES) -> None:

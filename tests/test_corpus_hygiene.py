@@ -96,29 +96,3 @@ def test_decontaminate_matches_python(spark, docs):
         assert r["n_hit"] == len(sh & eval_hashes)
         assert r["overlap_frac"] == pytest.approx(len(sh & eval_hashes) / len(sh))
         assert r["contaminated"] == (len(sh & eval_hashes) / len(sh) >= 0.8)
-
-
-def test_parquet_num_rows_fallback_paths(tmp_path):
-    """The footer probe must degrade to None (-> Spark-count fallback),
-    never crash or fabricate a count (ADVICE r12): (a) corrupt
-    non-parquet bytes raise pyarrow.ArrowInvalid — a ValueError, not
-    OSError; (b) a directory table with ZERO part files is unknown,
-    not an empty corpus; (c) a real file still reads its footer."""
-    import pyarrow as pa
-
-    from ipeds_etl_spark.queries_ext import _parquet_num_rows
-
-    # (a) corrupt file
-    (tmp_path / "documents.parquet").write_bytes(b"not a parquet file")
-    assert _parquet_num_rows(str(tmp_path), "documents") is None
-    # (b) directory with no matching part files
-    (tmp_path / "embeddings.parquet").mkdir()
-    assert _parquet_num_rows(str(tmp_path), "embeddings") is None
-    # (c) real footer metadata
-    pq.write_table(
-        pa.table({"doc_id": list(range(7))}),
-        tmp_path / "events.parquet",
-    )
-    assert _parquet_num_rows(str(tmp_path), "events") == 7
-    # (d) missing file entirely
-    assert _parquet_num_rows(str(tmp_path), "absent") is None

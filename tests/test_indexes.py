@@ -1,26 +1,24 @@
-"""Shared-index lifecycle (operators/indexes.py, VERDICT r6 item 7):
-memoized localCheckpoint indexes must be buildable, reused within a
-session, and RELEASABLE — release_indexes must actually free the
-pinned executor storage and leave the builders able to rebuild."""
+"""The engine's memo store (ipeds_etl_spark/memostore.py): built
+artifacts are reused within a session for one corpus version, a
+rewritten table misses the store, and ``release`` frees every pinned
+block and empties the store so the builders rebuild."""
 
 from __future__ import annotations
 
+from ipeds_etl_spark import memostore as MS
 from ipeds_etl_spark.operators import indexes as IDX
+from ipeds_etl_spark.queries_ext import _ivf_codebook
+from ipeds_etl_spark.sources.tables import load_table
 
 SF = "/root/testdata/sf0.001"
 
 
 def _tracked_ids():
-    return [
-        rid
-        for memo in (IDX._LSH_DOC_PAIRS, IDX._BASKET_ITEMS)
-        for (_df, ids) in memo.values()
-        for rid in ids
-    ]
+    return sorted({rid for (_artifact, ids) in MS._STORE.values() for rid in ids})
 
 
 def test_build_memoize_release_rebuild(spark):
-    IDX.release_indexes(spark)
+    MS.release(spark)
     assert not _tracked_ids()
 
     pairs1 = IDX.lsh_doc_pairs(spark, SF)
@@ -36,21 +34,84 @@ def test_build_memoize_release_rebuild(spark):
     # live in the context's persistent-RDD map
     ids = _tracked_ids()
     assert ids
-    live = IDX._persistent_ids(spark)
-    assert set(ids) <= live
+    assert set(ids) <= MS._persistent_ids(spark)
 
-    # release: memos cleared, every tracked block unpersisted
-    freed = IDX.release_indexes(spark)
+    # release: store cleared, every tracked block unpersisted
+    freed = MS.release(spark)
     assert freed == len(ids)
-    assert not IDX._LSH_DOC_PAIRS and not IDX._BASKET_ITEMS
-    assert not (set(ids) & IDX._persistent_ids(spark))
+    assert not MS._STORE
+    assert not (set(ids) & MS._persistent_ids(spark))
 
     # rebuild after release works and reproduces the same result sizes
     assert IDX.lsh_doc_pairs(spark, SF).count() == n_pairs
     assert IDX.basket_items(spark, SF).count() == n_items
-    IDX.release_indexes(spark)
+    MS.release(spark)
 
 
 def test_release_idempotent_and_empty_safe(spark):
-    IDX.release_indexes(spark)
-    assert IDX.release_indexes(spark) == 0
+    MS.release(spark)
+    assert MS.release(spark) == 0
+
+
+def test_same_key_returns_same_object_and_builds_once(spark, tmp_path):
+    spark.range(3).write.parquet(f"{tmp_path}/t.parquet")
+    builds = []
+
+    def build():
+        builds.append(1)
+        return object()
+
+    key = (MS.corpus_fingerprint(str(tmp_path), "t"), "probe-artifact", 1)
+    first = MS.memo(spark, key, build)
+    assert MS.memo(spark, key, build) is first
+    assert len(builds) == 1
+    # different params: a different entry
+    assert MS.memo(spark, (key[0], "probe-artifact", 2), build) is not first
+    assert len(builds) == 2
+    MS.release(spark)
+
+
+def test_unfingerprintable_path_builds_and_does_not_store(spark, tmp_path):
+    assert MS.corpus_fingerprint(str(tmp_path), "absent") is None
+    key = (MS.corpus_fingerprint(str(tmp_path), "absent"), "probe-artifact")
+    first = MS.memo(spark, key, object)
+    assert MS.memo(spark, key, object) is not first
+    assert not any(k[1] is None for k in MS._STORE)
+
+
+def test_rewritten_table_misses_store(spark, tmp_path):
+    sf = str(tmp_path)
+    spark.range(5).write.parquet(f"{sf}/documents.parquet")
+    first = load_table(spark, sf, "documents")
+    assert load_table(spark, sf, "documents") is first
+    old_fp = MS.corpus_fingerprint(sf, "documents")
+
+    spark.range(9).write.mode("overwrite").parquet(f"{sf}/documents.parquet")
+    assert MS.corpus_fingerprint(sf, "documents") != old_fp
+    second = load_table(spark, sf, "documents")
+    assert second is not first
+    assert second.count() == 9
+    MS.release(spark)
+
+
+def test_release_frees_every_artifact_kind_and_rebuilds(spark):
+    MS.release(spark)
+    pairs = sorted(map(tuple, IDX.lsh_doc_pairs(spark, SF).collect()))
+    items = sorted(map(tuple, IDX.basket_items(spark, SF).collect()))
+    books = _ivf_codebook(spark, SF)
+    table = load_table(spark, SF, "orders")
+    kinds = {key[2] for key in MS._STORE}
+    assert {"lsh_doc_pairs", "basket_items", "ivf", "table"} <= kinds
+
+    ids = _tracked_ids()
+    assert ids and set(ids) <= MS._persistent_ids(spark)
+    assert MS.release(spark) == len(ids)
+    assert not MS._STORE
+    assert not (set(ids) & MS._persistent_ids(spark))
+
+    # the next call after release rebuilds and gives the same rows
+    assert load_table(spark, SF, "orders") is not table
+    assert sorted(map(tuple, IDX.lsh_doc_pairs(spark, SF).collect())) == pairs
+    assert sorted(map(tuple, IDX.basket_items(spark, SF).collect())) == items
+    assert _ivf_codebook(spark, SF) == books
+    MS.release(spark)

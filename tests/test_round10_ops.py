@@ -11,7 +11,6 @@ from pyspark.sql import functions as F
 
 from ipeds_etl_spark.operators.dedup import (
     jaccard_prefix_pairs,
-    ngram_jaccard_incidence_pairs,
     ngram_jaccard_pairs,
 )
 
@@ -82,7 +81,7 @@ def test_blocked_prefix_join_equals_blocked_bruteforce(spark):
 def test_blocked_prefix_join_null_block_pairs_nothing(spark):
     """ADVICE r9: SQL inner-equality semantics — NULL-source docs are
     identical clones of doc 0 but must pair with NOTHING, not even
-    each other (the r9 incidence groupBy treated NULL keys as equal)."""
+    each other."""
     docs = _blocked_docs(spark, with_nulls=True)
     got = jaccard_prefix_pairs(
         docs, "text", "doc_id", k=3, threshold=0.2, block_cols=["source"]
@@ -97,7 +96,7 @@ def test_blocked_prefix_join_null_block_pairs_nothing(spark):
 
 def test_hot_shingle_bucket_never_forms(spark):
     """The bounded-intermediate guarantee: every doc shares the
-    boilerplate shingle, so the r9 incidence form would expand a
+    boilerplate shingle, so a shingle-bucket expansion would form a
     C(30,2)-per-source bucket for it; the prefix filter must rank it
     last (max document frequency) and keep the CANDIDATE set at the
     planted-pair scale, not the block² scale."""
@@ -116,56 +115,8 @@ def test_hot_shingle_bucket_never_forms(spark):
     # real candidates to the planted dups plus rare-shingle accidents
     assert cand < n, f"candidate set {cand} is block²-scale (n={n})"
     # sanity: the ubiquitous suffix produces 3+ shared shingles per
-    # doc pair, so an unfiltered incidence join would exceed C(n/2, 2)
+    # doc pair, so an unfiltered shingle join would exceed C(n/2, 2)
     assert cand <= 10
-
-
-def test_incidence_and_prefix_branches_row_identical(spark):
-    """The registered query dispatches between these two plans on the
-    probe (queries_ext._ngram_blocked_max_df); they must be
-    row-identical on any corpus — including under NULL block values
-    (ADVICE r9: the incidence groupBy must not pair NULL sources)."""
-    docs = _blocked_docs(spark, with_nulls=True)
-    inc = sorted(
-        map(
-            tuple,
-            ngram_jaccard_incidence_pairs(
-                docs, "text", "doc_id", k=3, threshold=0.2,
-                block_cols=["source"],
-            ).collect(),
-        )
-    )
-    pre = sorted(
-        map(
-            tuple,
-            jaccard_prefix_pairs(
-                docs, "text", "doc_id", k=3, threshold=0.2,
-                block_cols=["source"],
-            ).collect(),
-        )
-    )
-    assert inc == pre == _bruteforce_blocked(docs, 0.2)
-    ids = {r[0] for r in inc} | {r[1] for r in inc}
-    assert 200 not in ids and 201 not in ids
-
-
-def test_ngram_dispatch_probe(spark, tmp_path):
-    """The probe returns the true max per-(source, shingle) df and the
-    registered query dispatches on it: the hot corpus (every doc
-    carries the boilerplate suffix → max df ≈ block size) must exceed
-    the bound once the bound is crossed."""
-    import ipeds_etl_spark.queries_ext as QE
-
-    docs = _blocked_docs(spark)
-    path = str(tmp_path / "hotcorpus")
-    docs.withColumn("lang", F.lit("en")).withColumn(
-        "n_chars", F.length("text")
-    ).write.parquet(f"{path}/documents.parquet")
-    max_df = QE._ngram_blocked_max_df(spark, path)
-    # 31 web + 32 books docs share the boilerplate shingles
-    assert max_df >= 30
-    # memoized: second call returns the cached value without recompute
-    assert QE._ngram_blocked_max_df(spark, path) == max_df
 
 
 def test_prefix_join_unblocked_unchanged(spark):

@@ -127,6 +127,26 @@ def test_sessionize_switches_to_salted_plan_under_skew(spark):
     assert rows(hot_out) == rows(plain)
 
 
+def test_sessionize_reprobes_a_rewritten_events_file(spark, tmp_path):
+    """The skew verdict is kept per events FILE VERSION: after the file
+    is rewritten with a hot user, the registered query probes again and
+    plans the salted agg instead of serving the first, uniform
+    verdict."""
+    from ipeds_etl_spark.queries_ext import q_events_sessionize
+
+    sf = str(tmp_path)
+
+    def plan_after_writing(hot_share: bool) -> str:
+        _planted_events(spark, hot_share=hot_share).write.mode("overwrite").parquet(
+            f"{sf}/events.parquet"
+        )
+        df = q_events_sessionize(spark, sf)
+        return df._jdf.queryExecution().optimizedPlan().toString()
+
+    assert "__salt" not in plan_after_writing(hot_share=False)
+    assert "__salt" in plan_after_writing(hot_share=True)
+
+
 def test_join_with_skew_guard_plans_and_matches(spark, skewed):
     """The guard must (a) produce plan-identical results to a plain
     join under both verdicts and (b) actually switch the physical shape:

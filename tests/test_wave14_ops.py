@@ -281,53 +281,6 @@ def test_qsketch_stream_equals_batch(spark, tmp_path):
         assert fr.est_p500 == br.est_p500, et
 
 
-# ---------------------------------------------------------------------------
-# Tiered ngram dispatch probe (sampled tier)
-# ---------------------------------------------------------------------------
-def test_ngram_probe_sampled_tier(spark, tmp_path, monkeypatch):
-    """Above the doc-count cutoff the dispatch probe runs the 1/16
-    doc-sampled estimate: a 6000-doc single-source boilerplate corpus
-    (true max df = 6000, scaled estimate ≈ 6000 ≥ bound/2) must read
-    hot; a small diverse corpus must not — and the verdict is memoized
-    (second call hits no Spark job, same value)."""
-    import ipeds_etl_spark.queries_ext as QE
-
-    monkeypatch.setattr(QE, "NGRAM_PROBE_EXACT_MAX_DOCS", 0)
-    rng = random.Random(5)
-    vocab = [f"w{i}" for i in range(300)]
-
-    hot_rows = [
-        (
-            i,
-            "web",
-            " ".join(rng.choice(vocab) for _ in range(6))
-            + " all rights reserved today",
-        )
-        for i in range(6000)
-    ]
-    hot_path = str(tmp_path / "hot")
-    spark.createDataFrame(
-        hot_rows, "doc_id long, source string, text string"
-    ).withColumn("lang", F.lit("en")).withColumn(
-        "n_chars", F.length("text")
-    ).write.parquet(f"{hot_path}/documents.parquet")
-    assert QE._ngram_corpus_is_hot(spark, hot_path) is True
-
-    cold_rows = [
-        (i, "web", " ".join(rng.choice(vocab) for _ in range(12)))
-        for i in range(500)
-    ]
-    cold_path = str(tmp_path / "cold")
-    spark.createDataFrame(
-        cold_rows, "doc_id long, source string, text string"
-    ).withColumn("lang", F.lit("en")).withColumn(
-        "n_chars", F.length("text")
-    ).write.parquet(f"{cold_path}/documents.parquet")
-    assert QE._ngram_corpus_is_hot(spark, cold_path) is False
-    # memoized
-    assert QE._ngram_corpus_is_hot(spark, hot_path) is True
-
-
 def test_qsketch_stream_checkpoint_resume(spark, tmp_path):
     """State survives a restart: run the stream over half the corpus
     with a checkpoint + file sink (memory sinks cannot resume — the

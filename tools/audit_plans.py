@@ -17,8 +17,10 @@ from __future__ import annotations
 
 import re
 import sys
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+REPO = Path(__file__).resolve().parent.parent
+sys.path.insert(0, str(REPO))
 
 import __spark_entry__ as entrymod  # noqa: E402
 from ipeds_etl_spark.session import get_spark  # noqa: E402

@@ -15,11 +15,13 @@ from __future__ import annotations
 
 import math
 import sys
+from pathlib import Path
 
 import duckdb
 import pandas as pd
 
-sys.path.insert(0, "/root/repo")
+REPO = Path(__file__).resolve().parent.parent
+sys.path.insert(0, str(REPO))
 
 import __spark_entry__ as entrymod  # noqa: E402
 from ipeds_etl_spark.session import get_spark  # noqa: E402

@@ -21,7 +21,8 @@ import sys
 import time
 from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+REPO = Path(__file__).resolve().parent.parent
+sys.path.insert(0, str(REPO))
 
 
 def main() -> int:
@@ -58,7 +59,7 @@ def main() -> int:
 
     registered = q.queries()
     import os
-    plan_dir = Path("/root/repo/plans") / os.environ.get("OPT_PLAN_ROUND", "r14")
+    plan_dir = REPO / "plans" / os.environ.get("OPT_PLAN_ROUND", "r14")
     plan_dir.mkdir(parents=True, exist_ok=True)
     out = {}
     for name in names:

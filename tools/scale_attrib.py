@@ -33,8 +33,10 @@ import os
 import sys
 import time
 import urllib.request
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+REPO = Path(__file__).resolve().parent.parent
+sys.path.insert(0, str(REPO))
 
 
 def _get(url: str):

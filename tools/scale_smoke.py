@@ -921,14 +921,15 @@ def run_components_race_r10(spark, results: dict) -> None:
     import statistics
 
     from ipeds_etl_spark import queries as q
-    from ipeds_etl_spark.operators.indexes import lsh_doc_pairs, release_indexes
+    from ipeds_etl_spark.memostore import release
+    from ipeds_etl_spark.operators.indexes import lsh_doc_pairs
     from ipeds_etl_spark.queries_wave7 import q_docs_curation_funnel
 
     out: dict = {}
     # --- (a) memo build: median of 3 COLD builds ---
     builds = []
     for i in range(3):
-        release_indexes(spark)
+        release(spark)
         t0 = time.perf_counter()
         n_pairs = lsh_doc_pairs(spark, SF10_DIR).count()
         builds.append(round(time.perf_counter() - t0, 2))
