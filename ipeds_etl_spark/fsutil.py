@@ -149,6 +149,17 @@ def write_text(spark: SparkSession, path: str, text: str) -> None:
         out.close()
 
 
+def replace_text(spark: SparkSession, path: str, text: str) -> None:
+    """Replace a small text file through a rename, so a reader finds
+    the old text, the new text or (after a crash between the delete and
+    the rename) no file — never a torn write."""
+    tmp = f"{path}.tmp"
+    write_text(spark, tmp, text)
+    delete(spark, path, recursive=False)
+    if not rename(spark, tmp, path):
+        raise OSError(f"cannot move {tmp} to {path}")
+
+
 def read_text(spark: SparkSession, path: str) -> str:
     stream = hadoop_fs(spark, path).open(jpath(spark, path))
     try:

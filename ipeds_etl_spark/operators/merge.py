@@ -10,7 +10,10 @@ Capability parity:
 * ``upsert_on_hash`` ≅ the raw-page guarded upsert (reference
   ``etl/raw_io.py:181-197``): update ONLY when the content hash
   actually changed (``IS DISTINCT FROM`` → Spark's null-safe
-  ``eqNullSafe``), so unchanged pages are never rewritten.
+  ``eqNullSafe``), so unchanged pages are never rewritten. The raw
+  layer itself decides the same guard on the driver
+  (``sources.raw.write_pages``); this relational form serves frames
+  too large to key on the driver.
 
 Spark has no in-place update; both merges are expressed as
 **anti-join + union**, the scalable relational form:

@@ -9,15 +9,26 @@ relationally-computed insert/update counters.
 
 from __future__ import annotations
 
+import hashlib
+from collections.abc import Sequence
 from datetime import datetime, timezone
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ipeds_etl_spark import fsutil, lineage, registry
+from ipeds_etl_spark.localframe import local_frame
 from ipeds_etl_spark.operators.merge import recover_swaps
 from ipeds_etl_spark.plans.core_pipeline import map_from_raw, write_core
 from ipeds_etl_spark.sources import raw as raw_io
+
+
+def _core_years(spark: SparkSession, endpoint: str, core_path: str, years: Sequence[int]) -> DataFrame:
+    """The core table's ``years`` partitions; no rows before the first load."""
+    schema = registry.struct_type(endpoint)
+    if not fsutil.table_exists(spark, core_path):
+        return local_frame(spark, schema)
+    return spark.read.schema(schema).parquet(core_path).filter(F.col("year").isin(list(years)))
 
 
 def run_load(
@@ -28,49 +39,82 @@ def run_load(
     warehouse: str,
 ) -> dict:
     """Load one (endpoint, year): land raw pages, merge into core,
-    append lineage. Returns run metrics."""
+    append lineage. Returns run metrics.
+
+    The steps, in order:
+
+    1. land: the pages become a local relation with driver-side hashes,
+       and the raw hash guard, decided on the driver, rewrites the year
+       partition only if a page changed;
+    2. trace: one ``source_trace`` row per page that landed, none for
+       an identical re-send;
+    3. count: one action over the mapped year fills its cache and
+       yields the row count, the inserted and updated keys (against the
+       core's loaded year only) and the years the rows carry. The counts
+       and a reserved ``load_id`` are recorded before core changes
+       (``lineage.begin_load``);
+    4. merge: the core write of those years;
+    5. log: the ``load_log`` row.
+
+    Each write is crash-safe on its own, and a re-run of the same pages
+    after a crash between steps ends in the same raw, core and
+    ``load_log`` as an uninterrupted run: a crash after step 3 leaves
+    the recorded counts and ``load_id`` for the re-run to log. Into an
+    existing warehouse, a load starts no Python worker.
+    """
     started = datetime.now(timezone.utc)
     ep = registry.get_endpoint(endpoint)
     raw_path = f"{warehouse}/raw/{endpoint}"
     core_path = f"{warehouse}/core/{endpoint}"
     meta_path = f"{warehouse}/meta"
+    pk = list(ep.pk)
 
     pages = raw_io.pages_from_fetched(spark, year, page_lists, endpoint_path=ep.path)
     # the write path's recovery first, so the probe sees one complete
     # generation (write_pages would run the same recovery next)
     recover_swaps(spark, raw_path)
     existing = int(fsutil.table_exists(spark, f"{raw_path}/year={year}"))
-    raw_io.write_pages(spark, pages, raw_path)
-    lineage.append_source_trace(spark, meta_path, endpoint, pages)
+    landed = raw_io.write_pages(spark, pages, raw_path)
+    if landed is not None:
+        lineage.append_source_trace(spark, meta_path, endpoint, landed)
 
-    if fsutil.table_exists(spark, core_path):
-        target = spark.read.schema(registry.struct_type(endpoint)).parquet(core_path)
-    else:
-        target = spark.createDataFrame([], registry.struct_type(endpoint))
-    # Mapped once: the count fills the cache, and the merge counts, the
-    # core write's touched-years collect and the merge itself all read
-    # it instead of re-running scan → explode → registry mapper.
-    # persist (not localCheckpoint) keeps lineage, so lost blocks are
-    # recomputed from the raw files.
+    # the run's input, to know a re-run of a crashed load
+    hashes = "".join(r[0] for r in pages.select("source_hash").collect())
+    run = {"year": year, "pages": hashlib.sha256(hashes.encode()).hexdigest()}
+    pending = lineage.pending_load(spark, meta_path, endpoint, run)
+    # the counts read core before write_core would recover it
+    recover_swaps(spark, core_path)
+    # Mapped once: the counting action fills the cache, and the core
+    # write reads it instead of re-running scan → parse → registry
+    # mapper. persist (not localCheckpoint) keeps lineage, so lost
+    # blocks are recomputed from the raw files.
     mapped = map_from_raw(spark, endpoint, raw_path, years=[year]).persist()
     try:
-        records_mapped = mapped.count()
-        # Counts (and every other action on plans that scan the current
-        # core files) MUST run before the merge overwrites those files.
-        inserted, updated = lineage.merge_counts(target, mapped, list(ep.pk))
-        write_core(spark, endpoint, mapped, core_path)
+        if pending is None:
+            # Counts (and every other action on plans that scan the
+            # current core files) MUST run before the merge overwrites
+            # those files.
+            counts = lineage.load_counts(_core_years(spark, endpoint, core_path, [year]), mapped, pk)
+            if set(counts.years) - {year}:  # records of another year count against it
+                counts = lineage.load_counts(
+                    _core_years(spark, endpoint, core_path, counts.years), mapped, pk
+                )
+            pending = lineage.begin_load(spark, meta_path, endpoint, run, counts)
+        write_core(spark, endpoint, mapped, core_path, years=pending["years"])
     finally:
         mapped.unpersist()
     lineage.append_load_log(
-        spark, meta_path, endpoint, year, year, inserted, updated, started
+        spark, meta_path, endpoint, year, year, pending["inserted"], pending["updated"],
+        started, load_id=pending["load_id"],
     )
+    lineage.end_load(spark, meta_path, endpoint)
     return {
         "endpoint": endpoint,
         "year": year,
         "pages": len(page_lists),
-        "records_mapped": records_mapped,
-        "rows_inserted": inserted,
-        "rows_updated": updated,
+        "records_mapped": pending["rows"],
+        "rows_inserted": pending["inserted"],
+        "rows_updated": pending["updated"],
         "raw_existing_before": existing,
     }
 

@@ -107,9 +107,13 @@ def write_core(
     mapped: DataFrame,
     core_path: str,
     backend: str = "inplace",
+    years: Sequence[int] | None = None,
 ) -> None:
     """Merge mapped records into the core table keyed on the registry
-    PK, rewriting only the touched year partitions.
+    PK, rewriting only the touched year partitions. ``years`` are the
+    ``year`` values of ``mapped`` when the caller knows them
+    (``pipeline.run_load`` takes them from its counting action);
+    otherwise a job collects them.
 
     ``backend="inplace"`` (default): plain partition-dir layout via the
     crash-recoverable marker swap (``merge.overwrite_partitions_staged``)
@@ -129,8 +133,9 @@ def write_core(
     recover_swaps(spark, core_path)
     if fsutil.table_exists(spark, core_path):
         target = spark.read.schema(registry.struct_type(endpoint)).parquet(core_path)
-        loaded_years = [r[0] for r in mapped.select("year").distinct().collect()]
-        touched = target.filter(F.col("year").isin(loaded_years))
+        if years is None:
+            years = [r[0] for r in mapped.select("year").distinct().collect()]
+        touched = target.filter(F.col("year").isin(list(years)))
         merged = upsert_on_pk(touched, mapped, ep.pk)
     else:
         merged = upsert_on_pk(mapped.limit(0), mapped, ep.pk)

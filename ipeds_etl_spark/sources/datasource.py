@@ -9,8 +9,8 @@ endpoints concurrently while pagination inside a year stays sequential
 
 Source shape mirrors the raw layer (reference ``etl/raw_io.py:16-26``):
 one output row per page: (year, page_number, source_url, payload,
-record_count) — ``payload`` is the canonical JSON array text, ready for
-``raw.write_pages`` hashing.
+record_count) — ``payload`` is the canonical JSON array text, ready to
+hash and land with ``raw.write_pages``.
 
 Transports:
 * ``base_url=file:///dir`` — offline/fixture mode: reads

@@ -13,15 +13,24 @@ hash-guarded upserts keyed on ``(year, page_number)`` (``:181-197``) —
 an unchanged page is never rewritten, preserving its original
 ``ingested_at``.
 
+Landing runs on the driver. ``pages_from_fetched`` serializes and
+hashes the fetched pages in Python (``hashlib.sha256`` over the
+canonical JSON, the same digest as Spark's ``sha2(payload, 256)``)
+and hands them to Spark as one Arrow table, a local relation.
+``write_pages`` then decides the hash guard from the incoming and
+stored ``(page_number, source_hash)`` pairs, and rewrites a year
+partition only when one of its pages changed.
+
 Spark-first differences:
 * Pages live in a parquet table partitioned by ``year`` (reference
   used a (year) index + year-partitioning guidance,
   ``architecture.md:81-83``): partition pruning replaces the index.
-* Page assembly is distributed: records are numbered per-year with a
-  window and grouped into pages of ``page_size``. The per-year window
-  sort mirrors the inherently sequential per-year API pagination the
-  reference does driver-side (``etl/raw_io.py:160-161``); ingest of one
-  year is bounded by the API, not this sort.
+* Page assembly from a record frame (``build_pages``) is distributed:
+  records are numbered per-year with a window and grouped into pages
+  of ``page_size``. The per-year window sort mirrors the inherently
+  sequential per-year API pagination the reference does driver-side
+  (``etl/raw_io.py:160-161``); ingest of one year is bounded by the
+  API, not this sort.
 * The explode path back out (``scan_records``, and the mapper's typed
   parse in ``plans.core_pipeline.map_pages``) is the lateral-unnest
   join the reference pushes to Postgres
@@ -30,19 +39,20 @@ Spark-first differences:
 
 from __future__ import annotations
 
+import functools
+import hashlib
+import json
+import operator
 from collections.abc import Sequence
 from datetime import datetime, timezone
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ipeds_etl_spark import fsutil
-from ipeds_etl_spark.operators.merge import (
-    overwrite_partitions_staged,
-    recover_swaps,
-    upsert_on_hash,
-)
+from ipeds_etl_spark.localframe import local_frame
+from ipeds_etl_spark.operators.merge import overwrite_partitions_staged, recover_swaps
 
 RAW_SCHEMA = T.StructType(
     [
@@ -141,55 +151,105 @@ def pages_from_fetched(
     reference's ``insert_raw_payloads`` produces (reference
     ``etl/raw_io.py:127-200``). Payload JSON is canonicalized (sorted
     keys, compact separators) so the content hash is stable, matching
-    ``_stable_json_hash`` (reference ``etl/raw_io.py:57-70``)."""
-    import json as _json
+    ``_stable_json_hash`` (reference ``etl/raw_io.py:57-70``).
 
+    Serialization and hashing run here, on the driver: the hash is the
+    hex SHA-256 of the payload's UTF-8 bytes, which is what Spark's
+    ``sha2(payload, 256)`` computes, so hashes stored by either agree.
+    The result is a local relation (``localframe``)."""
     path = endpoint_path.replace("{year}", str(year)).lstrip("/")
-    # one stamp for the whole landing: ``current_timestamp()`` is
-    # evaluated per query, so the raw write and the source_trace append
-    # would store different times for the same pages
+    # one stamp for the whole landing, shared by the raw rows and their
+    # source_trace rows
     ingested_at = datetime.now(timezone.utc)
-    rows = []
-    for i, recs in enumerate(page_lists, start=1):
-        payload = _json.dumps(recs, sort_keys=True, separators=(",", ":"), default=str)
-        rows.append(
-            (
-                year,
-                i,
-                f"{api_base.rstrip('/')}/{path}?page={i}",
-                None,  # hash filled below (engine-side, same function everywhere)
-                ingested_at,
-                len(recs),
-                payload,
-            )
-        )
-    df = spark.createDataFrame(
-        rows,
-        "year int, page_number int, source_url string, source_hash string, "
-        "ingested_at timestamp, record_count int, payload string",
+    payloads = [
+        json.dumps(recs, sort_keys=True, separators=(",", ":"), default=str)
+        for recs in page_lists
+    ]
+    numbers = range(1, len(payloads) + 1)
+    return local_frame(
+        spark,
+        RAW_SCHEMA,
+        {
+            "year": [year] * len(payloads),
+            "page_number": numbers,
+            "source_url": [f"{api_base.rstrip('/')}/{path}?page={i}" for i in numbers],
+            "source_hash": [hashlib.sha256(p.encode("utf-8")).hexdigest() for p in payloads],
+            "ingested_at": [ingested_at] * len(payloads),
+            "record_count": [len(recs) for recs in page_lists],
+            "payload": payloads,
+        },
     )
-    return df.withColumn("source_hash", F.sha2(F.col("payload"), 256))
 
 
-def write_pages(spark: SparkSession, pages: DataFrame, raw_path: str) -> None:
+def _page_keys(df: DataFrame) -> dict[tuple[int, int], str | None]:
+    """``(year, page_number) → source_hash`` of ``df``, on the driver."""
+    rows = df.select("year", "page_number", "source_hash").collect()
+    out = {(r[0], r[1]): r[2] for r in rows}
+    if len(out) != len(rows):
+        raise ValueError("pages repeat a (year, page_number) key")
+    return out
+
+
+def _is_page(keys: Sequence[tuple[int, int]]) -> Column:
+    """Predicate: the row's ``(year, page_number)`` is one of ``keys``."""
+    by_year: dict[int, list[int]] = {}
+    for year, page in keys:
+        by_year.setdefault(year, []).append(page)
+    return functools.reduce(
+        operator.or_,
+        [
+            (F.col("year") == year) & F.col("page_number").isin(sorted(pages))
+            for year, pages in sorted(by_year.items())
+        ],
+    )
+
+
+def write_pages(spark: SparkSession, pages: DataFrame, raw_path: str) -> DataFrame | None:
     """Hash-guarded landing: merge pages into the raw table, rewriting a
-    (year, page_number) row only when its content hash changed. Only the
-    touched year partitions are rewritten (dynamic partition overwrite).
-    Existence is probed via the FS (not a bare except): a transient read
-    failure on a real table must propagate, not silently rewrite the
-    touched partitions with only the incoming rows.
+    (year, page_number) row only when its content hash changed
+    (null-safe, like the reference's ``IS DISTINCT FROM``). Returns the
+    pages that landed, or None when every page was already stored.
+
+    The guard is decided on the driver. The incoming keys and hashes
+    are read from ``pages`` (no Spark job when ``pages`` is a local
+    relation, as ``pages_from_fetched`` builds), and the stored ones
+    from the incoming years' partitions only; a year whose partition
+    does not exist is not read. A year with a changed page is rewritten
+    whole, as its stored unchanged pages (original ``ingested_at``
+    kept) plus its changed ones, through the staged partition swap;
+    when nothing changed nothing is written. Existence is probed via
+    the FS (not a bare except): a transient read failure on a real
+    table must propagate, not silently rewrite the touched partitions
+    with only the incoming rows.
     """
     recover_swaps(spark, raw_path)
-    if fsutil.table_exists(spark, raw_path):
-        target = spark.read.schema(RAW_SCHEMA).parquet(raw_path)
-        years = [r[0] for r in pages.select("year").distinct().collect()]
-        touched = target.filter(F.col("year").isin(years))
-        merged = upsert_on_hash(touched, pages, ["year", "page_number"], "source_hash")
-    else:
-        merged = pages
-    overwrite_partitions_staged(
-        spark, merged.select(*[f.name for f in RAW_SCHEMA.fields]), raw_path, "year"
+    incoming = _page_keys(pages)
+    years = sorted({year for year, _ in incoming})
+    stored_parts = [
+        f"{raw_path}/year={year}"
+        for year in years
+        if fsutil.table_exists(spark, f"{raw_path}/year={year}")
+    ]
+    stored_frame, stored = None, {}
+    if stored_parts:
+        stored_frame = (
+            spark.read.schema(RAW_SCHEMA).option("basePath", raw_path).parquet(*stored_parts)
+        )
+        stored = _page_keys(stored_frame)
+    changed = sorted(
+        key for key, digest in incoming.items() if key not in stored or stored[key] != digest
     )
+    if not changed:
+        return None
+    columns = [f.name for f in RAW_SCHEMA.fields]
+    landed = pages.filter(_is_page(changed)).select(*columns)
+    merged = landed
+    if stored_frame is not None:
+        changed_years = sorted({year for year, _ in changed})
+        kept = stored_frame.filter(F.col("year").isin(changed_years) & ~_is_page(changed))
+        merged = landed.unionByName(kept.select(*columns))
+    overwrite_partitions_staged(spark, merged, raw_path, "year")
+    return landed
 
 
 def scan_pages(
@@ -200,8 +260,11 @@ def scan_pages(
     Rolls forward any crashed-but-committed swap first so a
     half-published generation is never scanned; uncommitted staging is
     left alone (it may belong to a LIVE writer — a reader must never
-    dismantle an in-flight write)."""
+    dismantle an in-flight write). A table with no page yet reads as
+    no rows."""
     recover_swaps(spark, raw_path, rollback_uncommitted=False)
+    if not fsutil.table_exists(spark, raw_path):  # nothing landed yet
+        return local_frame(spark, RAW_SCHEMA)
     df = spark.read.schema(RAW_SCHEMA).parquet(raw_path)
     if years is not None:
         df = df.filter(F.col("year").isin(list(years)))

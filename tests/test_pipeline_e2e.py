@@ -88,13 +88,20 @@ def test_first_load_raw_rows_match_source_trace(spark, warehouse):
     assert raw.join(trace, keys, "left_anti").count() == 0
 
 
+def _trace_rows(spark, warehouse) -> list:
+    return spark.read.parquet(f"{warehouse}/meta/source_trace").collect()
+
+
 def test_rerun_is_idempotent(spark, warehouse):
     before_core = sorted(tuple(r) for r in spark.read.parquet(f"{warehouse}/core/directory").collect())
     before_hashes = {
         (r["year"], r["page_number"]): (r["source_hash"], r["ingested_at"])
         for r in spark.read.parquet(f"{warehouse}/raw/directory").collect()
     }
+    before_trace = _trace_rows(spark, warehouse)
     metrics = pipeline.run_load(spark, "directory", 2020, _fixture_pages(2020), warehouse)
+    # an identical re-send lands no page, so it traces none
+    assert sorted(_trace_rows(spark, warehouse)) == sorted(before_trace)
     assert metrics["rows_inserted"] == 0 and metrics["rows_updated"] == 5
     assert metrics["raw_existing_before"] == 1
     after_core = sorted(tuple(r) for r in spark.read.parquet(f"{warehouse}/core/directory").collect())
@@ -110,6 +117,7 @@ def test_rerun_is_idempotent(spark, warehouse):
 def test_changed_page_rewrites_only_itself(spark, warehouse):
     pages = _fixture_pages(2020)
     pages[1][1]["region"] = 7  # change one record on page 2
+    before_trace = _trace_rows(spark, warehouse)
     pipeline.run_load(spark, "directory", 2020, pages, warehouse)
     raw = {
         r["page_number"]: r
@@ -118,6 +126,13 @@ def test_changed_page_rewrites_only_itself(spark, warehouse):
     core = {r["unitid"]: r for r in spark.read.parquet(f"{warehouse}/core/directory").collect()}
     assert core[105]["region"] == 7
     assert raw[1]["ingested_at"] < raw[2]["ingested_at"]  # page 1 untouched
+    # one trace row, for the one page that landed, stamped as its raw row
+    new_trace = _trace_rows(spark, warehouse)
+    for row in before_trace:
+        new_trace.remove(row)
+    assert [(r["year"], r["source_hash"], r["ingested_at"]) for r in new_trace] == [
+        (raw[2]["year"], raw[2]["source_hash"], raw[2]["ingested_at"])
+    ]
 
 
 def test_second_year_partition_isolated(spark, warehouse):
@@ -163,26 +178,50 @@ def test_empty_load_is_noop(spark, warehouse):
     assert spark.read.parquet(f"{warehouse}/core/directory").count() == before
 
 
+def test_empty_first_load_logs_a_zero_run(spark, tmp_path):
+    """An empty year into a new warehouse lands nothing and logs 0/0."""
+    metrics = pipeline.run_load(spark, "directory", 2019, [], str(tmp_path))
+    assert (metrics["records_mapped"], metrics["rows_inserted"], metrics["rows_updated"]) == (0, 0, 0)
+    log = spark.read.parquet(f"{tmp_path}/meta/load_log").collect()
+    assert [(r["load_id"], r["rows_inserted"], r["rows_updated"]) for r in log] == [(1, 0, 0)]
+
+
+def test_record_of_another_year_merges_into_its_partition(spark, tmp_path):
+    """A record whose own ``year`` differs from its page's lands in its
+    own year's partition: counted against that partition's keys, and
+    that partition's other rows are kept."""
+    wh = str(tmp_path)
+    pipeline.run_load(spark, "directory", 2019, _fixture_pages(2019), wh)
+    stray = [[{"unitid": 101, "year": 2019, "inst_name": "Alpha, restated"},
+              {"unitid": 201, "year": 2020, "inst_name": "Gamma"}]]
+    metrics = pipeline.run_load(spark, "directory", 2020, stray, wh)
+    assert (metrics["rows_inserted"], metrics["rows_updated"]) == (1, 1)
+    core = spark.read.parquet(f"{wh}/core/directory")
+    names = {(r["unitid"], r["year"]): r["inst_name"] for r in core.collect()}
+    assert len(names) == 6
+    assert names[(101, 2019)] == "Alpha, restated" and names[(201, 2020)] == "Gamma"
+
+
 def _persistent_rdd_ids(spark) -> set[int]:
     return {int(k) for k in spark.sparkContext._jsc.getPersistentRDDs().keySet()}  # noqa: SLF001
 
 
 @pytest.mark.parametrize("core_write_fails", [False, True])
 def test_run_load_shares_one_persisted_mapped_frame(spark, tmp_path, monkeypatch, core_write_fails):
-    """The merge counts and the core write read one persisted mapped
+    """The load counts and the core write read one persisted mapped
     frame, and run_load releases it, also when the core write raises."""
     seen = {}
 
     def spy(name, fn, pos):
-        def wrapped(*args):
+        def wrapped(*args, **kwargs):
             seen[name] = (args[pos], args[pos].is_cached)
             if name == "write_core" and core_write_fails:
                 raise RuntimeError("core write failed")
-            return fn(*args)
+            return fn(*args, **kwargs)
 
         return wrapped
 
-    monkeypatch.setattr(lineage, "merge_counts", spy("merge_counts", lineage.merge_counts, 1))
+    monkeypatch.setattr(lineage, "load_counts", spy("load_counts", lineage.load_counts, 1))
     monkeypatch.setattr(pipeline, "write_core", spy("write_core", pipeline.write_core, 2))
     before = _persistent_rdd_ids(spark)
     args = (spark, "directory", 2020, _fixture_pages(2020), str(tmp_path))
@@ -191,7 +230,7 @@ def test_run_load_shares_one_persisted_mapped_frame(spark, tmp_path, monkeypatch
             pipeline.run_load(*args)
     else:
         assert pipeline.run_load(*args)["records_mapped"] == 5
-    counted, counted_cached = seen["merge_counts"]
+    counted, counted_cached = seen["load_counts"]
     written, written_cached = seen["write_core"]
     assert counted is written
     assert counted_cached and written_cached

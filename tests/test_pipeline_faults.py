@@ -1,0 +1,98 @@
+"""Fault injection between the steps of ``pipeline.run_load``.
+
+A load that crashes after the raw landing, after the ``source_trace``
+append, after the core write or before the ``load_log`` append, then
+re-runs with the same pages, must leave raw, core, gold and
+``load_log`` as one uninterrupted load does, apart from time stamps.
+The crashing load both updates and inserts, so a re-run that counted
+its merge against the already-written core would log the wrong
+counts. (``tests/test_txn.py`` covers crashes inside one swap.)
+"""
+
+from __future__ import annotations
+
+import pytest
+
+from ipeds_etl_spark import lineage, pipeline
+
+ENDPOINT = "directory"
+
+
+def _pages(year: int, changed: bool) -> list[list[dict]]:
+    page1 = [{"unitid": u, "year": year, "inst_name": f"inst {u}", "sector": 1} for u in (1, 2, 3)]
+    page2 = [{"unitid": u, "year": year, "inst_name": f"inst {u}", "sector": 2} for u in (4, 5)]
+    if changed:
+        page2[0]["sector"] = 3
+        page2.append({"unitid": 6, "year": year, "inst_name": "inst 6", "sector": 2})
+    return [page1, page2]
+
+
+class Crash(RuntimeError):
+    pass
+
+
+def _raise(*args, **kwargs):
+    raise Crash
+
+
+def _then_raise(fn):
+    def wrapped(*args, **kwargs):
+        fn(*args, **kwargs)
+        raise Crash
+
+    return wrapped
+
+
+#: where the load stops: (module, attribute, replacement of the original)
+CRASHES = {
+    "after_raw": (lineage, "append_source_trace", lambda fn: _raise),
+    "after_source_trace": (lineage, "append_source_trace", _then_raise),
+    "after_core": (pipeline, "write_core", _then_raise),
+    "before_load_log": (lineage, "append_load_log", lambda fn: _raise),
+}
+
+
+def _state(spark, wh: str) -> dict:
+    """Raw, core, gold and load_log without their time stamps."""
+    pipeline.rebuild_gold(spark, ENDPOINT, wh)
+
+    def rows(path, drop=()):
+        df = spark.read.parquet(f"{wh}/{path}")
+        return sorted(tuple(r) for r in df.drop(*drop).collect())
+
+    return {
+        "raw": rows(f"raw/{ENDPOINT}", ["ingested_at"]),
+        "core": rows(f"core/{ENDPOINT}"),
+        "gold": {v: rows(f"vw/{ENDPOINT}_{v}") for v in ("institutions_latest", "yearly_counts")},
+        "load_log": rows("meta/load_log", ["started_at", "finished_at"]),
+    }
+
+
+def _history(spark, wh: str) -> None:
+    pipeline.run_load(spark, ENDPOINT, 2019, _pages(2019, False), wh)
+    pipeline.run_load(spark, ENDPOINT, 2020, _pages(2020, False), wh)
+
+
+@pytest.fixture(scope="module")
+def uninterrupted(spark, tmp_path_factory):
+    wh = str(tmp_path_factory.mktemp("uninterrupted"))
+    _history(spark, wh)
+    out = pipeline.run_load(spark, ENDPOINT, 2020, _pages(2020, True), wh)
+    assert (out["rows_inserted"], out["rows_updated"]) == (1, 5)
+    return out, _state(spark, wh)
+
+
+@pytest.mark.parametrize("crash_at", list(CRASHES))
+def test_rerun_after_crash_equals_uninterrupted_load(spark, tmp_path, monkeypatch, uninterrupted, crash_at):
+    want_metrics, want = uninterrupted
+    wh = str(tmp_path)
+    _history(spark, wh)
+    module, attr, replace = CRASHES[crash_at]
+    with monkeypatch.context() as m:
+        m.setattr(module, attr, replace(getattr(module, attr)))
+        with pytest.raises(Crash):
+            pipeline.run_load(spark, ENDPOINT, 2020, _pages(2020, True), wh)
+    got_metrics = pipeline.run_load(spark, ENDPOINT, 2020, _pages(2020, True), wh)
+    assert _state(spark, wh) == want
+    for key in ("records_mapped", "rows_inserted", "rows_updated"):
+        assert got_metrics[key] == want_metrics[key], key
