@@ -3,7 +3,7 @@
 ``entry(spark)`` runs the flagship yearly-KPI rollup on sf0.001.
 ``queries()`` / ``oracle_sql()`` expose every implemented operator from
 SURVEY.md §2 plus the training-data extension set; implementations live
-in ``ipeds_etl_spark.queries``.
+in the domain modules of ``ipeds_etl_spark.queries``.
 """
 
 from __future__ import annotations
@@ -17,11 +17,12 @@ from pyspark.sql import DataFrame, SparkSession
 sys.path.insert(0, str(Path(__file__).resolve().parent))
 
 from ipeds_etl_spark import queries as _q  # noqa: E402
+from ipeds_etl_spark.queries.etl import q_kpi_yearly  # noqa: E402
 
 
 def entry(spark: SparkSession) -> DataFrame:
     """Flagship query on /root/testdata/sf0.001; driver checks rows>0."""
-    return _q.q_kpi_yearly(spark, "/root/testdata/sf0.001")
+    return q_kpi_yearly(spark, "/root/testdata/sf0.001")
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:

@@ -378,54 +378,23 @@ def _warm_session(sf_dir: str):
 
 
 def _build_indexes(spark, sf_dir: str) -> dict[str, float]:
-    """Cold-build the memoized shared indexes; returns build seconds.
-    Every caller runs it first thing in a fresh session, where the
-    memo store holds nothing of that session yet."""
+    """Cold-build the memoized shared indexes (``indexes.BUILD_ONCE``,
+    in its order); returns build seconds. Every caller runs it first
+    thing in a fresh session, where the memo store holds nothing of
+    that session yet. A DataFrame artifact is also scanned once; the
+    codebooks, bounds and vocabulary are driver-side lists, so timing
+    the call is the build cost. Per-query lines then measure search /
+    apply only, not training."""
+    from pyspark.sql import DataFrame
+
     from ipeds_etl_spark.operators import indexes as IDX
 
     builds: dict[str, float] = {}
-    for label, builder in (
-        ("lsh_doc_pairs", IDX.lsh_doc_pairs),
-        ("basket_items", IDX.basket_items),
-    ):
+    for label, builder in IDX.BUILD_ONCE:
         t0 = time.perf_counter()
-        builder(spark, sf_dir).write.format("noop").mode("overwrite").save()
-        builds[label] = round(time.perf_counter() - t0, 3)
-    # PQ codebook: the one-time train cost of the PQ ANN family
-    # (VERDICT r9 item 4 — ~10 s of emb_pq_codebook_balance's 11.8 s
-    # sf1 smoke was codebook TRAINING, the same build-once-query-many
-    # class as the LSH pair memo). Driver-side memo (a list, no
-    # DataFrame sink), so timing the call is the build cost; PQ-family
-    # query lines then measure encode/search/audit only.
-    from ipeds_etl_spark import queries_ext as QE
-
-    t0 = time.perf_counter()
-    QE._pq_codebook(spark, sf_dir)
-    builds["pq_codebook"] = round(time.perf_counter() - t0, 3)
-    # r12 artifacts, same billed-build class (driver-side memos):
-    # IVF coarse codebook (shared by the whole IVF/IVF-PQ family),
-    # residual sub-codebooks, SQ8 bounds, the frozen 1k vocabulary —
-    # so per-query lines measure search/apply only, not training.
-    # The IVF build comes FIRST and unconditionally: paired ref arms
-    # of pre-r12 revisions lack queries_wave15, and an import failure
-    # before the IVF build would leave only ONE arm prebuilt — a
-    # silent bias on every IVF-family common query.
-    t0 = time.perf_counter()
-    QE._ivf_codebook(spark, sf_dir)
-    builds["ivf_codebook"] = round(time.perf_counter() - t0, 3)
-    try:
-        from ipeds_etl_spark import queries_wave15 as W15
-
-        wave15_builders = (
-            ("residual_pq_books", W15._res_books),
-            ("sq8_bounds", W15._sq8_bounds),
-            ("vocab_1k", W15._frozen_vocab),
-        )
-    except ImportError:  # pre-r12 engine (paired ref arm): no wave15
-        wave15_builders = ()
-    for label, builder in wave15_builders:
-        t0 = time.perf_counter()
-        builder(spark, sf_dir)
+        out = builder(spark, sf_dir)
+        if isinstance(out, DataFrame):
+            out.write.format("noop").mode("overwrite").save()
         builds[label] = round(time.perf_counter() - t0, 3)
     return builds
 

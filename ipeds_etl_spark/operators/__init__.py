@@ -29,7 +29,6 @@ from ipeds_etl_spark.operators.dedup import (
 from ipeds_etl_spark.operators.merge import (
     overwrite_partitions_staged,
     recover_swaps,
-    upsert_into_partitioned,
     upsert_on_hash,
     upsert_on_pk,
 )
@@ -123,7 +122,6 @@ __all__ = [
     "simhash",
     "simhash_near_pairs",
     "snapshot_diff",
-    "upsert_into_partitioned",
     "upsert_into_txn_table",
     "upsert_on_hash",
     "upsert_on_pk",

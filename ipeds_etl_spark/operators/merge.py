@@ -25,11 +25,12 @@ Scale notes (100 TB):
   but AQE converts it to a broadcast anti-join automatically whenever
   the incremental source is small relative to the target, which is the
   common case (one year loaded into a decade of history).
-* ``upsert_into_partitioned`` narrows the rewrite to the partitions the
-  source actually touches (dynamic partition overwrite): merging one
-  year never rewrites the other years' files. This is the reference's
-  year-at-a-time idempotent load unit (reference ``architecture.md:81-83``)
-  mapped to Spark storage semantics.
+* ``overwrite_partitions_staged`` narrows the rewrite to the partitions
+  the merged frame touches: merging one year never rewrites the other
+  years' files (``plans.core_pipeline.write_core`` merges this way).
+  This is the reference's year-at-a-time idempotent load unit
+  (reference ``architecture.md:81-83``) mapped to Spark storage
+  semantics.
 """
 
 from __future__ import annotations
@@ -189,7 +190,8 @@ def recover_swaps(
     committed txids are rolled forward (safe: the marker is durable and
     roll-forward is idempotent). Rollback of uncommitted garbage is
     reserved for write paths, which this layout already documents as
-    single-writer (use ``operators.txn.TxnTable`` for multi-writer).
+    single-writer (use ``txn.upsert_into_txn_table`` /
+    ``txn.commit_overwrite_partitions`` for multi-writer).
     """
     entries = fsutil.list_names(spark, table_path)
     committed = {e.split("_commit_", 1)[1] for e in entries if e.startswith("_commit_")}
@@ -244,8 +246,8 @@ def overwrite_partitions_staged(
     start of every write and by ``scan``/merge readers — to either the
     complete old or the complete new generation, never a mix. For
     multi-writer or reader-isolation requirements use
-    ``operators.txn.TxnTable`` (manifest pointer — readers never observe
-    the swap window at all). Untouched partitions of a 100 TB table are
+    ``txn.upsert_into_txn_table`` / ``txn.commit_overwrite_partitions``
+    (manifest pointer — readers never observe the swap window at all). Untouched partitions of a 100 TB table are
     never read, written, or renamed.
     """
     import uuid
@@ -266,7 +268,7 @@ def overwrite_partitions_staged(
     # (``=``-free name → Spark skips the whole subtree, so concurrent
     # readers never see it). A failed rename here (e.g. another
     # writer's recovery deleted our staging — this layout is
-    # single-writer; see TxnTable) must abort BEFORE the commit marker
+    # single-writer; see txn.commit_overwrite_partitions) must abort BEFORE the commit marker
     # makes the half-staged txn roll-forward.
     new_parent = f"{table_path}/_swap_new_{txid}"
     fsutil.makedirs(spark, new_parent)
@@ -286,25 +288,3 @@ def overwrite_partitions_staged(
     fsutil.delete(spark, f"{table_path}/_swap_old_{txid}")
     fsutil.delete(spark, staging)
     spark.catalog.refreshByPath(table_path)
-
-
-def upsert_into_partitioned(
-    spark: SparkSession,
-    table_path: str,
-    source: DataFrame,
-    pk: Sequence[str],
-    partition_col: str = "year",
-) -> None:
-    """Merge ``source`` into a parquet table partitioned by
-    ``partition_col``, rewriting only the touched partitions. The
-    untouched remainder of a 100 TB table is never read or written.
-    """
-    recover_swaps(spark, table_path)
-    if fsutil.table_exists(spark, table_path):
-        target = spark.read.parquet(table_path)
-        parts = [r[0] for r in source.select(partition_col).distinct().collect()]
-        touched = target.filter(F.col(partition_col).isin(parts))
-        merged = upsert_on_pk(touched, source, pk)
-    else:
-        merged = _dedup_source(source, pk)
-    overwrite_partitions_staged(spark, merged, table_path, partition_col)

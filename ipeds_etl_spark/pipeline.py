@@ -191,6 +191,8 @@ def refresh_gold_incremental(
 
     latest_path = f"{warehouse}/vw/{endpoint}_institutions_latest"
     counts_path = f"{warehouse}/vw/{endpoint}_yearly_counts"
+    for path in (latest_path, counts_path):
+        _recover_view(spark, path)
     stored_latest = spark.read.parquet(latest_path)
     stored_counts = spark.read.parquet(counts_path)
 
@@ -240,12 +242,39 @@ def refresh_gold_incremental(
     ):
         # stage → swap: the stored view is an input to its own refresh,
         # so the new generation lands beside it and replaces it whole
-        tmp = f"{path}__refresh_tmp"
-        _sized_coalesce(df).write.mode("overwrite").parquet(tmp)
-        fsutil.delete(spark, path)
-        fsutil.rename(spark, tmp, path)
+        _sized_coalesce(df).write.mode("overwrite").parquet(f"{path}__refresh_tmp")
+        _publish_view(spark, path)
         out[name] = spark.read.parquet(path).count()
     return out
+
+
+def _publish_view(spark: SparkSession, path: str) -> None:
+    """Replace a gold view with its staged copy ``<path>__refresh_tmp``:
+    old copy aside, new copy in, old copy dropped, checking each rename
+    (the order of ``merge._publish_partition``). A failed rename puts
+    the old copy back, so ``path`` reads as the old or the new
+    generation."""
+    tmp, old = f"{path}__refresh_tmp", f"{path}__refresh_old"
+    if fsutil.path_exists(spark, path) and not fsutil.rename(spark, path, old):
+        raise OSError(f"cannot move the stored view aside: {path} -> {old}")
+    if not fsutil.rename(spark, tmp, path):
+        fsutil.rename(spark, old, path)
+        raise OSError(f"view publish failed: {tmp} -> {path}")
+    fsutil.delete(spark, old)
+
+
+def _recover_view(spark: SparkSession, path: str) -> None:
+    """Undo what an interrupted refresh left of a publish: put the aside
+    copy back when the view is missing, and drop the staged copy. A
+    failed refresh is re-run with the same batch (the txn-diff refresh
+    hands out its version only on success), and the counting fold is
+    not idempotent, so a staged copy is never rolled forward."""
+    tmp, old = f"{path}__refresh_tmp", f"{path}__refresh_old"
+    if not fsutil.path_exists(spark, path) and fsutil.path_exists(spark, old):
+        if not fsutil.rename(spark, old, path):
+            raise OSError(f"cannot restore the stored view: {old} -> {path}")
+    fsutil.delete(spark, old)
+    fsutil.delete(spark, tmp)
 
 
 def refresh_gold_from_txn_diff(

@@ -106,30 +106,17 @@ def write_core(
     endpoint: str,
     mapped: DataFrame,
     core_path: str,
-    backend: str = "inplace",
     years: Sequence[int] | None = None,
 ) -> None:
     """Merge mapped records into the core table keyed on the registry
-    PK, rewriting only the touched year partitions. ``years`` are the
+    PK, rewriting only the touched year partitions through the
+    crash-recoverable marker swap (``merge.overwrite_partitions_staged``)
+    — readable by any direct ``spark.read.parquet``. ``years`` are the
     ``year`` values of ``mapped`` when the caller knows them
     (``pipeline.run_load`` takes them from its counting action);
-    otherwise a job collects them.
-
-    ``backend="inplace"`` (default): plain partition-dir layout via the
-    crash-recoverable marker swap (``merge.overwrite_partitions_staged``)
-    — readable by any direct ``spark.read.parquet``.
-    ``backend="txn"``: manifest-committed layout (``operators.txn``) —
-    atomic multi-partition commit + reader isolation; read the table
-    back with ``txn.read_table``. Use on object stores or under
-    concurrent readers."""
+    otherwise a job collects them. The manifest-committed layout has
+    its own entry point, ``txn.upsert_into_txn_table``."""
     ep = registry.get_endpoint(endpoint)
-    if backend == "txn":
-        from ipeds_etl_spark.operators.txn import upsert_into_txn_table
-
-        upsert_into_txn_table(spark, core_path, mapped, list(ep.pk), "year")
-        return
-    if backend != "inplace":
-        raise ValueError(f"backend must be 'inplace' or 'txn', got {backend!r}")
     recover_swaps(spark, core_path)
     if fsutil.table_exists(spark, core_path):
         target = spark.read.schema(registry.struct_type(endpoint)).parquet(core_path)

@@ -1,0 +1,2356 @@
+"""Training-data curation analytics over the documents corpus: quality
+scores and filters, sampling, splits and mixtures, drift and
+contamination audits, label propagation and the curation funnel.
+"""
+
+from __future__ import annotations
+
+from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import functions as F
+
+from ipeds_etl_spark.functions import text as TX
+from ipeds_etl_spark.functions.hashing import parity_hash, parity_hash_sql
+from ipeds_etl_spark.operators import dedup as DD
+from ipeds_etl_spark.operators.indexes import lsh_doc_pairs
+from ipeds_etl_spark.queries import _register
+from ipeds_etl_spark.queries.shared import (
+    HASH10,
+    SHINGLES,
+    STOP_PAT,
+    WS_TOKENS,
+    band_key_sql,
+    docs_scan,
+    minhash_sig_sql,
+)
+from ipeds_etl_spark.sources.tables import load_table
+
+
+@_register(
+    "docs_robust_zscore",
+    """
+    WITH m AS (SELECT quantile_cont(n_chars, 0.5) AS med FROM documents),
+         d AS (SELECT doc_id, n_chars, med, abs(n_chars - med) AS dev
+               FROM documents CROSS JOIN m),
+         s AS (SELECT quantile_cont(dev, 0.5) AS mad FROM d)
+    SELECT doc_id, n_chars, med, mad,
+           (n_chars - med) / (CAST(1.4826 AS DOUBLE) * mad) AS robust_z,
+           abs((n_chars - med) / (CAST(1.4826 AS DOUBLE) * mad))
+             > CAST(3.0 AS DOUBLE) AS is_outlier
+    FROM d CROSS JOIN s
+    """,
+)
+def q_docs_robust_zscore(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Median/MAD robust outlier scoring on document length — the
+    outlier filter that survives heavy-tailed corpora where mean/stddev
+    z-scores (docs_length_zscore) get dragged by the tail. Two global
+    exact percentiles (each a 1-row broadcast back); all arithmetic is
+    exact-or-single-rounded so DuckDB's quantile_cont reproduces every
+    double. SCALE NOTE: exact percentile buffers values per group — at
+    100 TB swap in approx_percentile (same plan shape, documented
+    epsilon) or a two-pass histogram refine; the oracle requires the
+    exact form."""
+    d = load_table(spark, sf_dir, "documents").select("doc_id", "n_chars")
+    med_df = d.agg(F.percentile("n_chars", 0.5).alias("med"))
+    dev = d.crossJoin(F.broadcast(med_df)).withColumn(
+        "dev", F.abs(F.col("n_chars") - F.col("med"))
+    )
+    mad_df = dev.agg(F.percentile("dev", 0.5).alias("mad"))
+    z = (F.col("n_chars") - F.col("med")) / (F.lit(1.4826) * F.col("mad"))
+    return dev.crossJoin(F.broadcast(mad_df)).select(
+        "doc_id",
+        "n_chars",
+        "med",
+        "mad",
+        z.alias("robust_z"),
+        (F.abs(z) > F.lit(3.0)).alias("is_outlier"),
+    )
+
+
+# ===========================================================================
+# Deterministic sampling / split assignment
+# ===========================================================================
+def _sampling_oracle() -> str:
+    from ipeds_etl_spark.operators.sampling import sample_bucket_sql
+
+    bkt = sample_bucket_sql("doc_id", salt="v1")
+    return f"""
+    WITH b AS (SELECT doc_id, source, {bkt} AS bkt FROM documents)
+    SELECT doc_id, source,
+           CASE WHEN bkt < 90 THEN 'train'
+                WHEN bkt < 95 THEN 'valid'
+                ELSE 'test' END AS split,
+           bkt < (CASE WHEN source IN ('src0','src1','src2') THEN 10
+                       WHEN source = 'src3' THEN 0 ELSE 100 END) AS sampled
+    FROM b
+    """
+
+
+@_register("docs_split_and_sample", _sampling_oracle())
+def q_docs_split_and_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Reproducible corpus construction: content-hash train/valid/test
+    split (90/5/5) + per-source stratified downsampling (10% for the
+    boilerplate-heavy sources, 0% for an excluded source, 100%
+    otherwise). Pure map-only codegen — zero shuffle at 100 TB; every
+    assignment is value-hash-checked against DuckDB."""
+    from ipeds_etl_spark.operators.sampling import sample_bucket, split_column
+
+    d = load_table(spark, sf_dir, "documents")
+    key = F.col("doc_id")
+    rates = (
+        F.when(F.col("source").isin("src0", "src1", "src2"), 10)
+        .when(F.col("source") == "src3", 0)
+        .otherwise(100)
+    )
+    return d.select(
+        "doc_id",
+        "source",
+        split_column(key, {"train": 90, "valid": 5, "test": 5}, salt="v1").alias(
+            "split"
+        ),
+        (sample_bucket(key, salt="v1") < rates).alias("sampled"),
+    )
+
+
+@_register(
+    "docs_source_quota_sample",
+    f"""
+    WITH h AS (
+      SELECT doc_id, source, n_chars,
+             {parity_hash_sql("CAST(doc_id AS VARCHAR)")} AS hh
+      FROM documents)
+    SELECT doc_id, source, n_chars
+    FROM (SELECT doc_id, source, n_chars,
+                 row_number() OVER (PARTITION BY source
+                                    ORDER BY hh, CAST(doc_id AS VARCHAR)) AS rn
+          FROM h)
+    WHERE rn <= 10
+    """,
+)
+def q_docs_source_quota_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Per-source quota cap (at most 10 docs per source, chosen by
+    content hash): the domain-balancing primitive of corpus
+    construction. The operator is the two-phase scale path — count,
+    map-side hash prefilter to ~margin*cap rows/group, exact rank on
+    the sliver, with a guaranteed-exact fallback — so the 100 TB plan
+    never sorts whole groups; the oracle runs the naive window and the
+    value hashes must agree exactly."""
+    from ipeds_etl_spark.operators.sampling import quota_cap
+
+    d = load_table(spark, sf_dir, "documents").select(
+        "doc_id", "source", "n_chars"
+    )
+    return quota_cap(d, key_col="doc_id", group_col="source", cap=10)
+
+
+@_register(
+    "docs_length_zscore",
+    """
+    WITH stats AS (
+      SELECT source,
+             CAST(count(*) AS BIGINT) AS n,
+             CAST(SUM(len(text)) AS BIGINT) AS s1,
+             CAST(SUM(CAST(len(text) AS BIGINT) * len(text)) AS BIGINT) AS s2
+      FROM documents GROUP BY source)
+    SELECT d.doc_id, d.source,
+           CAST(len(d.text) AS BIGINT) AS n_chars,
+           (CAST(len(d.text) AS DOUBLE) - CAST(s.s1 AS DOUBLE) / s.n)
+             / sqrt((CAST(s.s2 AS DOUBLE) - CAST(s.s1 AS DOUBLE) * s.s1 / s.n) / s.n)
+             AS z_len
+    FROM documents d JOIN stats s ON d.source = s.source
+    """,
+)
+def q_docs_length_zscore(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Grouped normalization (z-score of doc length within source) —
+    the feature-engineering shape: one exact-integer moments aggregate
+    per group, broadcast back, scalar math per row. Exact BIGINT sums
+    of x and x² make the derived doubles bit-identical across engines
+    and partitionings (every float comes from the same IEEE op
+    sequence), so a statistic usually considered 'approximately equal'
+    is value-hash-checked. Population variance, matching the oracle."""
+    d = load_table(spark, sf_dir, "documents")
+    x = F.length("text").cast("long")
+    stats = d.groupBy("source").agg(
+        F.count(F.lit(1)).alias("n"),
+        F.sum(x).alias("s1"),
+        F.sum(x * x).alias("s2"),
+    )
+    joined = d.select("doc_id", "source", x.alias("n_chars")).join(
+        F.broadcast(stats), "source"
+    )
+    mean = F.col("s1").cast("double") / F.col("n")
+    var = (
+        F.col("s2").cast("double") - F.col("s1").cast("double") * F.col("s1") / F.col("n")
+    ) / F.col("n")
+    return joined.select(
+        "doc_id",
+        "source",
+        "n_chars",
+        ((F.col("n_chars").cast("double") - mean) / F.sqrt(var)).alias("z_len"),
+    )
+
+
+# ===========================================================================
+# Corpus hygiene: repetition filters and benchmark decontamination
+# ===========================================================================
+# k=2 word shingles, same short-document convention as SHINGLES (k=3)
+_SHINGLES2 = (
+    "CASE WHEN len({w}) < 2 THEN [array_to_string({w}, ' ')] "
+    "ELSE list_transform(range(len({w}) - 1), i -> array_to_string({w}[i+1:i+2], ' ')) END"
+)
+
+
+@_register(
+    "docs_repetition_filters",
+    f"""
+    WITH t AS (
+      SELECT doc_id, {WS_TOKENS.format(x='text')} AS w FROM documents),
+    base AS (
+      SELECT doc_id, len(w) AS n_tokens,
+             CASE WHEN len(w) >= 2 THEN
+               len(list_filter(range(len(w) - 1), i -> w[i+1] = w[i+2]))
+             END AS n_consec,
+             list_sort({_SHINGLES2.format(w='w')}) AS sbg,
+             {SHINGLES.format(w='w')} AS tgs
+      FROM t),
+    runs AS (
+      SELECT doc_id, n_tokens, n_consec, tgs, len(sbg) AS n_bigrams,
+             list_append(
+               list_filter(range(1, len(sbg) + 1),
+                           i -> i = 1 OR sbg[i] != sbg[i - 1]),
+               len(sbg) + 1) AS bounds
+      FROM base)
+    SELECT doc_id,
+           CAST(n_tokens AS BIGINT) AS n_tokens,
+           CAST(n_consec AS DOUBLE) / (n_tokens - 1) AS consec_dup_frac,
+           CAST(list_max(list_transform(range(len(bounds) - 1),
+                                        j -> bounds[j + 2] - bounds[j + 1]))
+                AS DOUBLE) / n_bigrams AS top_bigram_frac,
+           CAST(len(tgs) - len(list_distinct(tgs)) AS DOUBLE) / len(tgs)
+             AS dup_trigram_frac,
+           (CAST(list_max(list_transform(range(len(bounds) - 1),
+                                         j -> bounds[j + 2] - bounds[j + 1]))
+                 AS DOUBLE) / n_bigrams <= 0.18
+            AND CAST(len(tgs) - len(list_distinct(tgs)) AS DOUBLE) / len(tgs) <= 0.30)
+             AS keep
+    FROM runs
+    """,
+)
+def q_docs_repetition_filters(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Gopher-style repetition quality filters per document: fraction
+    of consecutive duplicate tokens, mass of the single most frequent
+    bigram, and fraction of duplicate trigram occurrences, with a keep
+    verdict at the published-ish thresholds (Rae et al. 2021 use the
+    same statistic family).
+
+    Scale shape: ZERO shuffle — per-document gram statistics never
+    cross documents, so shipping (doc, gram) pairs through an exchange
+    (the groupBy formulation) moves the whole corpus for nothing. The
+    top-bigram count is the longest run in the doc's SORTED bigram
+    array (run boundaries → adjacent-boundary gaps → max), trigram
+    dup mass is ``size − size(array_distinct)`` — all in-row, linear
+    in doc length after an O(n log n) in-row sort, bounded per task by
+    the longest document, not the corpus. Ratios are single IEEE
+    divisions of exact integer counts (hash-stable across engines)."""
+    d = docs_scan(spark, sf_dir).select(
+        "doc_id", TX.tokens(F.col("text")).alias("w")
+    )
+    n = F.size("w")
+    base = d.select(
+        "doc_id",
+        n.cast("long").alias("n_tokens"),
+        F.when(
+            n >= 2,
+            F.size(
+                F.filter(
+                    F.zip_with(
+                        F.slice("w", 1, n - 1),
+                        F.slice("w", 2, n - 1),
+                        lambda a, b: a == b,
+                    ),
+                    lambda x: x,
+                )
+            ),
+        ).alias("n_consec"),
+        F.array_sort(TX.shingles_of(F.col("w"), 2)).alias("sbg"),
+        TX.shingles_of(F.col("w"), 3).alias("tgs"),
+    )
+    nb = F.size("sbg")
+    # 1-based positions where a new distinct bigram starts, plus the
+    # one-past-the-end sentinel: max adjacent gap = top bigram count.
+    # greatest(i-1, 1) keeps element_at's index ≥ 1 structurally: at
+    # i == 1 the left disjunct already keeps the position, and sbg[1]
+    # != sbg[1] is false, so the value is unchanged — but no evaluation
+    # order can ever see index 0 (INVALID_INDEX_OF_ZERO under ANSI)
+    bounds = F.concat(
+        F.filter(
+            F.sequence(F.lit(1), nb),
+            lambda i: (i == 1)
+            | (
+                F.element_at(F.col("sbg"), i)
+                != F.element_at(F.col("sbg"), F.greatest(i - 1, F.lit(1)))
+            ),
+        ),
+        F.array(nb + 1),
+    )
+    runs = base.select(
+        "doc_id",
+        "n_tokens",
+        "n_consec",
+        "tgs",
+        nb.alias("n_bigrams"),
+        bounds.alias("bounds"),
+    )
+    top_n = F.array_max(
+        F.zip_with(
+            F.slice("bounds", 1, F.size("bounds") - 1),
+            F.slice("bounds", 2, F.size("bounds") - 1),
+            lambda a, b: b - a,
+        )
+    )
+    top_frac = top_n.cast("double") / F.col("n_bigrams")
+    dup_frac = (F.size("tgs") - F.size(F.array_distinct("tgs"))).cast(
+        "double"
+    ) / F.size("tgs")
+    return runs.select(
+        "doc_id",
+        "n_tokens",
+        (F.col("n_consec").cast("double") / (F.col("n_tokens") - 1)).alias(
+            "consec_dup_frac"
+        ),
+        top_frac.alias("top_bigram_frac"),
+        dup_frac.alias("dup_trigram_frac"),
+        ((top_frac <= 0.18) & (dup_frac <= 0.30)).alias("keep"),
+    )
+
+
+def _weighted_sample_oracle() -> str:
+    u = HASH10.format(x="concat('wsamp|', CAST(doc_id AS VARCHAR))")
+    return f"""
+    WITH keyed AS (
+      SELECT source, doc_id, n_chars,
+             (CAST({u} AS DOUBLE) / 1099511627776.0) / n_chars AS k
+      FROM documents WHERE n_chars > 0),
+    ranked AS (
+      SELECT source, doc_id, n_chars,
+             row_number() OVER (PARTITION BY source ORDER BY k, doc_id) AS rnk
+      FROM keyed)
+    SELECT source, CAST(rnk AS INTEGER) AS rnk, doc_id, n_chars
+    FROM ranked WHERE rnk <= 5
+    """
+
+
+@_register("docs_weighted_sample", _weighted_sample_oracle())
+def q_docs_weighted_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Deterministic WEIGHTED sampling per stratum (sequential Poisson
+    sampling, Ohlsson 1998): priority key = u/w with u a content-hash
+    uniform and w the weight — inclusion probability ∝ weight, fully
+    reproducible (no RNG state), and rank-by-key is a per-stratum
+    window top-k: one shuffle on the stratum key at any corpus size.
+    The key uses only hash, one division, and a compare — no
+    transcendental functions, so the oracle's floats are bit-identical
+    (the classic exp/log reservoir keys would drift in the last ulp
+    across libm implementations)."""
+    d = load_table(spark, sf_dir, "documents").filter(F.col("n_chars") > 0)
+    u = parity_hash(F.concat(F.lit("wsamp|"), F.col("doc_id").cast("string")))
+    from ipeds_etl_spark.operators.sketches import HASH_SPACE
+
+    keyed = d.select(
+        "source",
+        "doc_id",
+        "n_chars",
+        ((u.cast("double") / F.lit(HASH_SPACE)) / F.col("n_chars")).alias("k"),
+    )
+    w = Window.partitionBy("source").orderBy("k", "doc_id")
+    return (
+        keyed.withColumn("rnk", F.row_number().over(w))
+        .filter(F.col("rnk") <= 5)
+        .select("source", "rnk", "doc_id", "n_chars")
+    )
+
+
+# ===========================================================================
+# Source-mixing weights: temperature-scaled sampling for pretraining mixes
+# ===========================================================================
+@_register(
+    "docs_mixture_weights",
+    """
+    WITH per AS (
+      SELECT source, CAST(count(*) AS BIGINT) AS n_docs
+      FROM documents GROUP BY source),
+    tot AS (
+      SELECT CAST(SUM(n_docs) AS BIGINT) AS n_total,
+             list_reduce(list(sqrt(CAST(n_docs AS DOUBLE)) ORDER BY source),
+                         (x, y) -> x + y) AS denom
+      FROM per)
+    SELECT source, n_docs,
+           CAST(n_docs AS DOUBLE) / n_total AS share,
+           sqrt(CAST(n_docs AS DOUBLE)) / denom AS samp_prob,
+           (sqrt(CAST(n_docs AS DOUBLE)) / denom)
+             / (CAST(n_docs AS DOUBLE) / n_total) AS dup_factor
+    FROM per CROSS JOIN tot
+    ORDER BY source
+    """,
+)
+def q_docs_mixture_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Temperature-scaled source mixing (τ=2, i.e. p_s ∝ √share — the
+    multilingual/multi-corpus rebalancing rule from mBERT/XLM-R data
+    recipes): per source, its natural share, its τ-scaled sampling
+    probability, and the per-doc duplication factor a sampler must
+    apply (>1 = upsample the small source). √ at τ=2 keeps every op
+    IEEE-exact — no pow/exp. The cross-source normalizer is a fold
+    over the source-sorted list (20 elements) so float summation
+    order is pinned on both engines; everything else is map-side
+    combinable counts + one broadcastable 1-row join — the 100 TB
+    shape is one count-shuffle on source."""
+    d = load_table(spark, sf_dir, "documents")
+    per = d.groupBy("source").agg(F.count(F.lit(1)).alias("n_docs"))
+    sq = lambda c: F.sqrt(c.cast("double"))  # noqa: E731
+    tot = per.agg(
+        F.sum("n_docs").alias("n_total"),
+        F.aggregate(
+            F.array_sort(F.collect_list(F.struct("source", "n_docs"))),
+            F.lit(0.0),
+            lambda acc, s: acc + F.sqrt(s["n_docs"].cast("double")),
+        ).alias("denom"),
+    )
+    share = F.col("n_docs").cast("double") / F.col("n_total")
+    prob = sq(F.col("n_docs")) / F.col("denom")
+    return (
+        per.crossJoin(F.broadcast(tot))
+        .select(
+            "source",
+            "n_docs",
+            share.alias("share"),
+            prob.alias("samp_prob"),
+            (prob / share).alias("dup_factor"),
+        )
+        .orderBy("source")
+    )
+
+
+# ===========================================================================
+# Linear quality filter: model inference as a columnar expression
+# ===========================================================================
+def _register_quality_logit() -> None:
+    from ipeds_etl_spark.functions import text as TX
+
+    w0, w_tok, w_stop, w_mtl = -2.0, 0.03, 3.0, -0.2
+
+    @_register(
+        "docs_quality_logit",
+        f"""
+        WITH t AS (
+          SELECT doc_id, text, {WS_TOKENS.format(x='text')} AS w FROM documents),
+        f AS (
+          SELECT doc_id,
+                 CAST(len(w) AS BIGINT) AS n_tokens,
+                 CAST(len(regexp_extract_all(text, '{STOP_PAT}')) AS DOUBLE) / len(w) AS stopword_ratio,
+                 CAST(list_sum(list_transform(w, s -> len(s))) AS DOUBLE) / len(w) AS mean_token_len
+          FROM t)
+        SELECT doc_id, n_tokens, stopword_ratio, mean_token_len,
+               ((({w0} + {w_tok} * CAST(n_tokens AS DOUBLE))
+                 + {w_stop} * stopword_ratio)
+                + {w_mtl} * mean_token_len) AS logit,
+               ((({w0} + {w_tok} * CAST(n_tokens AS DOUBLE))
+                 + {w_stop} * stopword_ratio)
+                + {w_mtl} * mean_token_len) > 0 AS keep
+        FROM f
+        """,
+    )
+    def q_docs_quality_logit(spark: SparkSession, sf_dir: str) -> DataFrame:
+        """Linear quality-filter inference (the fastText/CCNet-style
+        pretraining gate) compiled to a columnar expression: score =
+        w·features over the exact quality signals, keep = score > 0.
+        No UDF, no model runtime — a trained linear model's weights
+        are just literals in whole-stage codegen, which is how a
+        100 TB quality pass should ship: map-only, zero shuffle.
+        Feature ratios are single double divisions of exact counts
+        and the dot product is a fixed left-fold, so the oracle
+        reproduces every bit. Weights here are fixed stand-ins
+        (swap in trained ones without changing the plan shape)."""
+        d = load_table(spark, sf_dir, "documents")
+        toks = TX.tokens(F.col("text"))
+        d = d.select("doc_id", "text", toks.alias("toks"))
+        m = TX.quality_metrics(F.col("text"), toks=F.col("toks"))
+        n_tok = m["n_tokens"]
+        stop_ratio = m["n_stopwords"].cast("double") / n_tok
+        logit = (
+            (
+                (F.lit(w0) + F.lit(w_tok) * n_tok.cast("double"))
+                + F.lit(w_stop) * stop_ratio
+            )
+            + F.lit(w_mtl) * m["mean_token_len"]
+        )
+        return d.select(
+            "doc_id",
+            n_tok.alias("n_tokens"),
+            stop_ratio.alias("stopword_ratio"),
+            m["mean_token_len"].alias("mean_token_len"),
+            logit.alias("logit"),
+            (logit > 0).alias("keep"),
+        )
+
+
+_register_quality_logit()
+
+
+# ===========================================================================
+# Token-budget apportionment (largest-remainder / Hamilton method)
+# ===========================================================================
+_ALLOC_BUDGET = 100_000
+
+
+@_register(
+    "docs_token_budget_allocation",
+    f"""
+    WITH toks AS (
+      SELECT source,
+             CAST(SUM(len(list_filter(regexp_split_to_array(text, '\\s+'),
+                                      t -> len(t) > 0))) AS BIGINT) AS tok
+      FROM documents GROUP BY 1),
+    tot AS (SELECT CAST(SUM(tok) AS BIGINT) AS t FROM toks),
+    q AS (SELECT source, tok,
+                 CAST(({_ALLOC_BUDGET} * tok) // t AS BIGINT) AS quota_floor,
+                 CAST(({_ALLOC_BUDGET} * tok) % t AS BIGINT) AS remainder
+          FROM toks CROSS JOIN tot),
+    l AS (SELECT CAST({_ALLOC_BUDGET} - SUM(quota_floor) AS BIGINT) AS leftover FROM q),
+    r AS (SELECT q.*, l.leftover,
+                 row_number() OVER (ORDER BY remainder DESC, source) AS rk
+          FROM q CROSS JOIN l)
+    SELECT source, tok AS tokens, quota_floor, remainder,
+           CAST(quota_floor + CASE WHEN rk <= leftover THEN 1 ELSE 0 END
+                AS BIGINT) AS allocated
+    FROM r ORDER BY source
+    """,
+)
+def q_docs_token_budget_allocation(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Largest-remainder (Hamilton) apportionment of a fixed token
+    budget across sources — the integer-exact step after
+    ``docs_mixture_weights``' proportions: floor quotas from the exact
+    integer division, then the leftover seats go to the largest
+    remainders (ties to the alphabetically first source), so
+    Σ allocated == budget EXACTLY (pinned by test) with no float
+    anywhere. This is how a data recipe turns 'p_s ∝ share' into an
+    actual per-source document/token quota. Shape: one token-count
+    agg, a 1-row total and leftover broadcast back, and a rank window
+    over O(sources) rows (metadata-sized, like the bucket-offset
+    windows elsewhere)."""
+    from ipeds_etl_spark.functions import text as TX
+
+    d = load_table(spark, sf_dir, "documents")
+    # one corpus scan: total/quotas/leftover all consume this agg
+    # no materialization (VERDICT r6 item 4, remeasured): the three
+    # consumers of this O(sources) aggregate are served by Spark's
+    # ReusedExchange — the corpus is scanned once either way, and the
+    # sf1 same-process A/B put plain recompute at 0.63 s vs 0.90 s
+    # (localCheckpoint) / 0.91 s (.cache())
+    toks = d.groupBy("source").agg(
+        F.sum(TX.token_count(F.col("text")).cast("long")).alias("tok")
+    )
+    tot = toks.agg(F.sum("tok").cast("long").alias("t"))
+    q = toks.crossJoin(F.broadcast(tot)).select(
+        "source",
+        "tok",
+        F.expr(f"CAST(({_ALLOC_BUDGET} * tok) div t AS BIGINT)").alias("quota_floor"),
+        F.expr(f"CAST(({_ALLOC_BUDGET} * tok) % t AS BIGINT)").alias("remainder"),
+    )
+    leftover = q.agg(
+        (F.lit(_ALLOC_BUDGET) - F.sum("quota_floor")).cast("long").alias("leftover")
+    )
+    w = Window.orderBy(F.desc("remainder"), F.asc("source"))
+    return (
+        q.crossJoin(F.broadcast(leftover))
+        .withColumn("rk", F.row_number().over(w))
+        .select(
+            "source",
+            F.col("tok").alias("tokens"),
+            "quota_floor",
+            "remainder",
+            (
+                F.col("quota_floor")
+                + F.when(F.col("rk") <= F.col("leftover"), 1).otherwise(0)
+            )
+            .cast("long")
+            .alias("allocated"),
+        )
+        .orderBy("source")
+    )
+
+
+# ===========================================================================
+# Corpus composition drift: source × language chi-square contributions
+# ===========================================================================
+@_register(
+    "docs_source_lang_drift",
+    """
+    WITH obs AS (SELECT source, lang, CAST(count(*) AS BIGINT) AS o
+                 FROM documents GROUP BY 1, 2),
+    rt AS (SELECT source, CAST(SUM(o) AS BIGINT) AS rt FROM obs GROUP BY 1),
+    ct AS (SELECT lang, CAST(SUM(o) AS BIGINT) AS ct FROM obs GROUP BY 1),
+    n AS (SELECT CAST(SUM(o) AS BIGINT) AS n FROM obs)
+    SELECT obs.source, obs.lang, obs.o AS observed,
+           CAST(rt.rt * ct.ct AS DOUBLE) / n.n AS expected,
+           CAST(CAST(obs.o * n.n - rt.rt * ct.ct AS DECIMAL(19,0))
+                * CAST(obs.o * n.n - rt.rt * ct.ct AS DECIMAL(19,0)) AS DOUBLE)
+             / (CAST(n.n AS DOUBLE) * rt.rt * ct.ct) AS chi2_contrib
+    FROM obs JOIN rt USING (source) JOIN ct USING (lang) CROSS JOIN n
+    ORDER BY obs.source, obs.lang
+    """,
+)
+def q_docs_source_lang_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Source × language contingency audit: observed counts, expected
+    counts under independence, and per-cell chi-square contributions —
+    the composition-drift alarm a training-data pipeline runs per crawl
+    (a cell whose contribution spikes means a source changed its
+    language mix). Exactness recipe: the numerator (o·N − rt·ct)² is
+    computed in integer/decimal arithmetic (DECIMAL(19,0)² → (38,0),
+    exact), ONE IEEE division per cell, multiplication order pinned
+    identically in both engines. The total χ² is deliberately NOT
+    emitted: it would sum doubles in engine-dependent order — consumers
+    sum the cells in whatever order they define. Shape: one count
+    aggregate + two broadcast margins + a 1-row broadcast total."""
+    d = load_table(spark, sf_dir, "documents")
+    obs = d.groupBy("source", "lang").agg(F.count(F.lit(1)).alias("o"))
+    rt = obs.groupBy("source").agg(F.sum("o").alias("rt"))
+    ct = obs.groupBy("lang").agg(F.sum("o").alias("ct"))
+    n = obs.agg(F.sum("o").alias("n"))
+    diff = (F.col("o") * F.col("n") - F.col("rt") * F.col("ct")).cast("decimal(19,0)")
+    return (
+        obs.join(F.broadcast(rt), "source")
+        .join(F.broadcast(ct), "lang")
+        .crossJoin(F.broadcast(n))
+        .select(
+            "source",
+            "lang",
+            F.col("o").alias("observed"),
+            ((F.col("rt") * F.col("ct")).cast("double") / F.col("n")).alias("expected"),
+            (
+                (diff * diff).cast("double")
+                / (F.col("n").cast("double") * F.col("rt") * F.col("ct"))
+            ).alias("chi2_contrib"),
+        )
+        .orderBy("source", "lang")
+    )
+
+
+# ===========================================================================
+# Two-sample Kolmogorov-Smirnov drift statistic (exact, cross-multiplied)
+# ===========================================================================
+_KS_A, _KS_B = "en", "de"
+
+
+@_register(
+    "docs_length_ks_drift",
+    f"""
+    WITH v AS (
+      SELECT n_chars,
+             CAST(SUM(CASE WHEN lang = '{_KS_A}' THEN 1 ELSE 0 END) AS BIGINT) AS ca,
+             CAST(SUM(CASE WHEN lang = '{_KS_B}' THEN 1 ELSE 0 END) AS BIGINT) AS cb
+      FROM documents WHERE lang IN ('{_KS_A}', '{_KS_B}')
+      GROUP BY n_chars),
+    c AS (
+      SELECT n_chars,
+             SUM(ca) OVER (ORDER BY n_chars) AS cuma,
+             SUM(cb) OVER (ORDER BY n_chars) AS cumb
+      FROM v),
+    t AS (SELECT SUM(ca) AS na, SUM(cb) AS nb FROM v),
+    d AS (
+      SELECT n_chars, abs(cuma * nb - cumb * na) AS dnum, na, nb
+      FROM c CROSS JOIN t)
+    SELECT CAST(min(CASE WHEN dnum = m THEN n_chars END) AS BIGINT) AS ks_at_n_chars,
+           CAST(m AS BIGINT) AS ks_numerator,
+           CAST(min(na) * min(nb) AS BIGINT) AS ks_denominator,
+           CAST(m AS DOUBLE) / (min(na) * min(nb)) AS ks_stat
+    FROM d CROSS JOIN (SELECT max(dnum) AS m FROM d) mm
+    GROUP BY m
+    """,
+)
+def q_docs_length_ks_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Exact two-sample Kolmogorov–Smirnov statistic between the
+    'en' and 'de' document-length distributions — the
+    distribution-shift alarm an eval-hygiene pipeline runs on any
+    feature whose drift would silently skew training (the continuous
+    companion to `docs_source_lang_drift`'s categorical chi-square).
+    The ECDF difference is cross-multiplied to stay integer-exact
+    (|cumA·nB − cumB·nA|, one IEEE division at the very end), and the
+    argmax location comes out with a min-tiebreak so the whole row is
+    a total function of the data.
+
+    Scale: one map-combinable count agg compacts the corpus to
+    O(distinct lengths) rows; the cumulative windows run over that
+    compacted frame (bounded by the value domain, not the corpus —
+    the `events_rolling_anomaly` compaction argument; swap in
+    `global_prefix_sum` if the domain were ever corpus-sized)."""
+    d = load_table(spark, sf_dir, "documents").filter(
+        F.col("lang").isin(_KS_A, _KS_B)
+    )
+    v = d.groupBy("n_chars").agg(
+        F.sum(F.when(F.col("lang") == _KS_A, 1).otherwise(0)).alias("ca"),
+        F.sum(F.when(F.col("lang") == _KS_B, 1).otherwise(0)).alias("cb"),
+    )
+    w = Window.orderBy("n_chars")
+    c = v.select(
+        "n_chars",
+        F.sum("ca").over(w).alias("cuma"),
+        F.sum("cb").over(w).alias("cumb"),
+    )
+    t = v.agg(F.sum("ca").alias("na"), F.sum("cb").alias("nb"))
+    dd = c.crossJoin(F.broadcast(t)).select(
+        "n_chars",
+        F.abs(F.col("cuma") * F.col("nb") - F.col("cumb") * F.col("na")).alias("dnum"),
+        "na",
+        "nb",
+    )
+    mm = dd.agg(F.max("dnum").alias("m"))
+    return (
+        dd.crossJoin(F.broadcast(mm))
+        .groupBy("m")
+        .agg(
+            F.min(F.when(F.col("dnum") == F.col("m"), F.col("n_chars")))
+            .cast("long")
+            .alias("ks_at_n_chars"),
+            F.min("na").alias("_na"),
+            F.min("nb").alias("_nb"),
+        )
+        .select(
+            "ks_at_n_chars",
+            F.col("m").cast("long").alias("ks_numerator"),
+            (F.col("_na") * F.col("_nb")).cast("long").alias("ks_denominator"),
+            (F.col("m").cast("double") / (F.col("_na") * F.col("_nb"))).alias(
+                "ks_stat"
+            ),
+        )
+    )
+
+
+# ===========================================================================
+# Quality-filter ablation grid (which filter costs which tokens)
+# ===========================================================================
+_ABL_MIN_TOKENS = 40
+_ABL_STOP_BP = 100  # stopword ratio >= 1% (basis points, cross-multiplied)
+_ABL_REP_BP = 1000  # consecutive-dup fraction <= 10%
+
+
+@_register(
+    "docs_quality_ablation",
+    f"""
+    WITH t AS (
+      SELECT doc_id, {WS_TOKENS.format(x='text')} AS w,
+             len(list_filter(regexp_extract_all(lower(text), '\\p{{L}}+'),
+                 x -> list_contains(['the','a','of','and','to','in','is','it',
+                                     'for','on','with','as','was','at','by'], x)))
+               AS n_stop
+      FROM documents),
+    f AS (
+      SELECT doc_id, len(w) AS n_tokens,
+             len(w) >= {_ABL_MIN_TOKENS} AS pass_len,
+             CAST(n_stop AS BIGINT) * 10000 >= {_ABL_STOP_BP} * len(w) AS pass_stop,
+             CASE WHEN len(w) >= 2 THEN
+               CAST(len(list_filter(range(len(w) - 1), i -> w[i+1] = w[i+2]))
+                    AS BIGINT) * 10000 <= {_ABL_REP_BP} * (len(w) - 1)
+             ELSE TRUE END AS pass_rep
+      FROM t)
+    SELECT pass_len, pass_stop, pass_rep,
+           CAST(count(*) AS BIGINT) AS n_docs,
+           CAST(SUM(n_tokens) AS BIGINT) AS n_tokens
+    FROM f GROUP BY 1, 2, 3
+    ORDER BY 1, 2, 3
+    """,
+)
+def q_docs_quality_ablation(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Filter-ablation grid: every document evaluated against three
+    independent cheap quality gates — minimum length, minimum English
+    stopword density (the classic "is this natural language" signal),
+    and maximum consecutive-token repetition — and the corpus broken
+    down by the 2³ pass/fail combinations with doc AND token counts
+    per cell. This is the table a data-curation review actually reads:
+    it says which filter is doing the cutting, how much the filters
+    overlap, and what a threshold change would cost in tokens, without
+    re-running the pipeline per configuration. All three gates are
+    integer cross-multiplied (basis points — no ratio is ever
+    materialized as a float), so the grid is engine-exact.
+
+    Scale: entirely map-side per document (two token projections) +
+    one ≤8-group aggregate — the cheapest possible ablation study at
+    any corpus size."""
+    stop_set = [
+        "the", "a", "of", "and", "to", "in", "is", "it",
+        "for", "on", "with", "as", "was", "at", "by",
+    ]
+    d = load_table(spark, sf_dir, "documents").select(
+        "doc_id",
+        TX.tokens(F.col("text")).alias("w"),
+        F.size(
+            F.filter(
+                F.regexp_extract_all(F.lower("text"), F.lit(r"\p{L}+"), 0),
+                lambda x: x.isin(*stop_set),
+            )
+        ).alias("n_stop"),
+    )
+    n = F.size("w")
+    n_consec = F.size(
+        F.filter(
+            F.sequence(F.lit(0), n - 2),
+            lambda i: F.element_at("w", i + 1) == F.element_at("w", i + 2),
+        )
+    )
+    f = d.select(
+        n.alias("n_tokens"),
+        (n >= _ABL_MIN_TOKENS).alias("pass_len"),
+        (F.col("n_stop").cast("bigint") * 10000 >= _ABL_STOP_BP * n).alias(
+            "pass_stop"
+        ),
+        F.when(n >= 2, n_consec.cast("bigint") * 10000 <= _ABL_REP_BP * (n - 1))
+        .otherwise(F.lit(True))
+        .alias("pass_rep"),
+    )
+    return (
+        f.groupBy("pass_len", "pass_stop", "pass_rep")
+        .agg(
+            F.count(F.lit(1)).alias("n_docs"),
+            F.sum("n_tokens").cast("long").alias("n_tokens"),
+        )
+        .orderBy("pass_len", "pass_stop", "pass_rep")
+    )
+
+
+# ===========================================================================
+# Neyman (variance-optimal) sample allocation across sources
+# ===========================================================================
+_NEY_BUDGET = 10_000
+
+
+@_register(
+    "docs_neyman_allocation",
+    f"""
+    WITH m AS (
+      SELECT source,
+             CAST(count(*) AS BIGINT) AS nh,
+             CAST(SUM(n_chars) AS BIGINT) AS s1,
+             CAST(SUM(n_chars * n_chars) AS BIGINT) AS s2
+      FROM documents GROUP BY source),
+    w AS (
+      SELECT source, nh,
+             nh * CAST(floor(sqrt(CAST(nh * s2 - s1 * s1 AS DOUBLE))) AS BIGINT)
+               AS wt
+      FROM m),
+    t AS (SELECT CAST(SUM(wt) AS BIGINT) AS tw FROM w),
+    q AS (
+      SELECT source, nh, wt,
+             CAST(({_NEY_BUDGET} * wt) // tw AS BIGINT) AS floor_alloc,
+             ({_NEY_BUDGET} * wt) % tw AS rem
+      FROM w CROSS JOIN t),
+    r AS (
+      SELECT source, nh, wt, floor_alloc,
+             row_number() OVER (ORDER BY rem DESC, source) AS rr,
+             {_NEY_BUDGET} - SUM(floor_alloc) OVER () AS short
+      FROM q)
+    SELECT source, nh AS n_docs, wt AS neyman_weight,
+           CAST(floor_alloc + CASE WHEN rr <= short THEN 1 ELSE 0 END AS BIGINT)
+             AS alloc
+    FROM r ORDER BY source
+    """,
+)
+def q_docs_neyman_allocation(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Variance-optimal (Neyman) sample allocation: each source's share
+    of a 10,000-unit sampling budget proportional to N_h·S_h — the
+    stratified-sampling design that minimizes estimator variance at a
+    fixed budget, the statistically-correct upgrade over the
+    size-proportional `docs_token_budget_allocation`. S_h enters as
+    the INTEGER square root of the exact variance numerator
+    (floor∘sqrt of an exact BIGINT: sqrt is correctly rounded on an
+    exactly-representable input, so the floor is engine-identical —
+    the one sanctioned use of sqrt in a decision path), and the
+    allocation is Hamilton largest-remainder, so Σ alloc == budget
+    EXACTLY and every number is an integer.
+
+    Scale: one map-combinable moment agg per source + O(sources)
+    arithmetic; the remainder-rank window runs over the metadata-sized
+    source frame."""
+    d = load_table(spark, sf_dir, "documents")
+    m = d.groupBy("source").agg(
+        F.count(F.lit(1)).alias("nh"),
+        F.sum("n_chars").alias("s1"),
+        F.sum(F.col("n_chars") * F.col("n_chars")).alias("s2"),
+    )
+    w = m.select(
+        "source",
+        "nh",
+        (
+            F.col("nh")
+            * F.floor(
+                F.sqrt((F.col("nh") * F.col("s2") - F.col("s1") * F.col("s1")).cast("double"))
+            ).cast("bigint")
+        ).alias("wt"),
+    )
+    t = w.agg(F.sum("wt").alias("tw"))
+    q = w.crossJoin(F.broadcast(t)).select(
+        "source",
+        "nh",
+        "wt",
+        F.expr(f"CAST(({_NEY_BUDGET} * wt) div tw AS BIGINT)").alias("floor_alloc"),
+        F.expr(f"({_NEY_BUDGET} * wt) % tw").alias("rem"),
+    )
+    win = Window.orderBy(F.desc("rem"), F.asc("source"))
+    r = q.select(
+        "source",
+        "nh",
+        "wt",
+        "floor_alloc",
+        F.row_number().over(win).alias("rr"),
+        (F.lit(_NEY_BUDGET) - F.sum("floor_alloc").over(Window.partitionBy())).alias(
+            "short"
+        ),
+    )
+    return r.select(
+        "source",
+        F.col("nh").alias("n_docs"),
+        F.col("wt").alias("neyman_weight"),
+        (
+            F.col("floor_alloc")
+            + F.when(F.col("rr") <= F.col("short"), 1).otherwise(0)
+        )
+        .cast("long")
+        .alias("alloc"),
+    ).orderBy("source")
+
+
+# ===========================================================================
+# DSIR-style importance weights toward a seed set + Mann-Whitney AUC readout
+# ===========================================================================
+
+
+@_register(
+    "docs_dsir_importance",
+    f"""
+    WITH tok AS (
+      SELECT doc_id, unnest({WS_TOKENS.format(x='text')}) AS t
+      FROM documents),
+    dc AS (SELECT doc_id, t, CAST(count(*) AS BIGINT) AS n
+           FROM tok GROUP BY doc_id, t),
+    seed AS (SELECT doc_id, max(n) * 5 >= SUM(n) AS is_tgt
+             FROM dc GROUP BY doc_id),
+    call AS (SELECT t, CAST(count(*) AS BIGINT) AS ca FROM tok GROUP BY t),
+    ctgt AS (SELECT t, CAST(count(*) AS BIGINT) AS ct
+             FROM tok JOIN seed USING (doc_id) WHERE is_tgt GROUP BY t),
+    tots AS (SELECT CAST(SUM(ca) AS BIGINT) AS total_all,
+                    CAST(count(*) AS BIGINT) AS vocab FROM call),
+    ttgt AS (SELECT CAST(count(*) AS BIGINT) AS total_tgt
+             FROM tok JOIN seed USING (doc_id) WHERE is_tgt),
+    sc AS (
+      SELECT tok.doc_id,
+             (CAST(length(to_base(total_all * total_all, 2)) AS BIGINT)
+              - CAST(length(to_base(ca * ca, 2)) AS BIGINT))
+             - (CAST(length(to_base((total_tgt + vocab) * (total_tgt + vocab), 2))
+                     AS BIGINT)
+                - CAST(length(to_base((coalesce(ct, 0) + 1) * (coalesce(ct, 0) + 1),
+                                      2)) AS BIGINT)) AS w
+      FROM tok JOIN call USING (t) LEFT JOIN ctgt USING (t)
+      CROSS JOIN tots CROSS JOIN ttgt),
+    dw AS (SELECT doc_id, (CAST(SUM(w) AS BIGINT) * 100) // count(*) AS score
+           FROM sc GROUP BY doc_id),
+    lab AS (SELECT score, is_tgt FROM dw JOIN seed USING (doc_id)),
+    hist AS (SELECT score,
+                    CAST(SUM(CASE WHEN is_tgt THEN 1 ELSE 0 END) AS BIGINT) AS nt,
+                    CAST(SUM(CASE WHEN is_tgt THEN 0 ELSE 1 END) AS BIGINT) AS nn
+             FROM lab GROUP BY score),
+    cum AS (SELECT nt, nn,
+                   coalesce(SUM(nn) OVER (ORDER BY score
+                     ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING),
+                     0) AS nn_below
+            FROM hist)
+    SELECT (SELECT CAST(SUM(nt) AS BIGINT) FROM hist) AS n_target,
+           (SELECT CAST(SUM(nn) AS BIGINT) FROM hist) AS n_rest,
+           CAST(SUM(nt * (2 * nn_below + nn)) AS BIGINT) AS u2,
+           CAST(SUM(nt * (2 * nn_below + nn)) AS DOUBLE)
+             / (2.0 * (SELECT SUM(nt) FROM hist) * (SELECT SUM(nn) FROM hist))
+             AS auc
+    FROM cum
+    """,
+)
+def q_docs_dsir_importance(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """DSIR-shaped importance weights (Xie et al. 2023, "Data
+    Selection for Language Models via Importance Resampling") with a
+    verifiable arithmetic core, plus the evaluation DSIR itself needs:
+    does the weight actually rank seed-like documents first?
+
+    The seed set is the planted repetition defect (a doc whose top
+    token carries ≥ 1/5 of its tokens — the quality-filter direction:
+    importance toward the LOW-quality distribution, used for negative
+    selection). Per-token importance is log2 p_seed(t) − log2
+    p_corpus(t) in HALF-bits — bit-length of the SQUARED count
+    (`conv(x²,10,2)` ↔ `to_base(x²,2)`), the house floor-log2 at 2×
+    resolution, pure integer so both engines agree exactly (BIGINT
+    audit: (total_tokens)² must stay < 2⁶³ — safe through ~3·10⁹
+    tokens; shard the LM beyond that). The seed LM is add-one
+    smoothed over the corpus vocabulary. Per-doc score = 100·Σw / n
+    (length-normalized, integer `div`).
+
+    The readout is the exact Mann-Whitney U / AUC of the score
+    against the seed labels, computed from the SCORE HISTOGRAM —
+    U2 = Σ_s nt(s)·(2·(# rest below s) + nt-ties) — not a pairwise
+    join, so the rank test is one small-frame window over O(distinct
+    scores) rows, never O(n²). AUC ≈ 0.91 at sf0.01: the unigram LM
+    separates the planted defect imperfectly (the corpus draws from a
+    31-token shared vocabulary — exactly the regime where DSIR's
+    hashed-feature LM is weak), and the query reports that honestly
+    instead of hiding it.
+
+    Scale: tokenized projection → two map-combinable count tables on
+    the same token-key exchange (seed LM is count-bounded by the
+    corpus LM), scoring join broadcasts the vocab-sized tables, per-doc
+    rollup map-combines on doc_id, and the AUC window runs over the
+    metadata-sized histogram."""
+    d = load_table(spark, sf_dir, "documents")
+    # the tokenized projection feeds SIX consumers (doc counts, seed
+    # labels, both LMs, totals, scoring) — materialize it once so the
+    # plan reads the corpus a single time (the temporal_split lesson)
+    tok = d.select(
+        "doc_id", F.explode(TX.tokens(F.col("text"))).alias("t")
+    ).localCheckpoint(eager=False)
+    dc = tok.groupBy("doc_id", "t").agg(F.count(F.lit(1)).cast("long").alias("n"))
+    seed = dc.groupBy("doc_id").agg(
+        (F.max("n") * 5 >= F.sum("n")).alias("is_tgt")
+    )
+    call = tok.groupBy("t").agg(F.count(F.lit(1)).cast("long").alias("ca"))
+    tgt_tok = tok.join(seed.filter("is_tgt"), "doc_id").select("t")
+    ctgt = tgt_tok.groupBy("t").agg(F.count(F.lit(1)).cast("long").alias("ct"))
+    tots = call.agg(
+        F.sum("ca").cast("long").alias("total_all"),
+        F.count(F.lit(1)).cast("long").alias("vocab"),
+    )
+    ttgt = tgt_tok.agg(F.count(F.lit(1)).cast("long").alias("total_tgt"))
+
+    def bits_sq(col):
+        return F.length(F.conv((col * col).cast("string"), 10, 2)).cast("long")
+
+    w = (bits_sq(F.col("total_all")) - bits_sq(F.col("ca"))) - (
+        bits_sq(F.col("total_tgt") + F.col("vocab"))
+        - bits_sq(F.coalesce(F.col("ct"), F.lit(0)) + F.lit(1))
+    )
+    sc = (
+        tok.join(call, "t")
+        .join(ctgt, "t", "left")
+        .crossJoin(F.broadcast(tots))
+        .crossJoin(F.broadcast(ttgt))
+        .select("doc_id", w.alias("w"))
+    )
+    dw = sc.groupBy("doc_id").agg(
+        F.expr("(CAST(SUM(w) AS BIGINT) * 100) div count(*)").alias("score")
+    )
+    lab = dw.join(seed, "doc_id")
+    hist = lab.groupBy("score").agg(
+        F.sum(F.when(F.col("is_tgt"), 1).otherwise(0)).cast("long").alias("nt"),
+        F.sum(F.when(F.col("is_tgt"), 0).otherwise(1)).cast("long").alias("nn"),
+    )
+    win = (
+        Window.orderBy("score")
+        .rowsBetween(Window.unboundedPreceding, -1)
+    )
+    cum = hist.select(
+        "nt", "nn", F.coalesce(F.sum("nn").over(win), F.lit(0)).alias("nn_below")
+    )
+    totals = hist.agg(
+        F.sum("nt").cast("long").alias("n_target"),
+        F.sum("nn").cast("long").alias("n_rest"),
+    )
+    return (
+        cum.agg(
+            F.sum(F.col("nt") * (2 * F.col("nn_below") + F.col("nn")))
+            .cast("long")
+            .alias("u2")
+        )
+        .crossJoin(F.broadcast(totals))
+        .select(
+            "n_target",
+            "n_rest",
+            "u2",
+            (
+                F.col("u2").cast("double")
+                / (F.lit(2.0) * F.col("n_target") * F.col("n_rest"))
+            ).alias("auc"),
+        )
+    )
+
+
+# ===========================================================================
+# Semi-supervised quality smoothing: label propagation over the dedup graph
+# ===========================================================================
+_LP_ROUNDS = 2
+
+
+def _lp_oracle() -> str:
+    bands = " UNION ALL ".join(
+        f"SELECT doc_id, {b} AS band, {band_key_sql(b)} AS band_key FROM sig"
+        for b in range(DD.N_PERMS // DD.ROWS_PER_BAND)
+    )
+    ctes = [
+        f"WITH {minhash_sig_sql()}",
+        f"bands AS ({bands})",
+        """lsh AS (
+      SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
+      FROM bands a JOIN bands b
+        ON a.band = b.band AND a.band_key = b.band_key AND a.doc_id < b.doc_id)""",
+        "edges AS (SELECT id_a AS s, id_b AS d FROM lsh "
+        "UNION ALL SELECT id_b, id_a FROM lsh)",
+        f"""tok AS (SELECT doc_id, source,
+               unnest({WS_TOKENS.format(x='text')}) AS t FROM documents)""",
+        """s0 AS (SELECT doc_id, any_value(source) AS source,
+               (1000 * CAST(count(DISTINCT t) AS BIGINT))
+                 // CAST(count(*) AS BIGINT) AS sc
+        FROM tok GROUP BY doc_id)""",
+    ]
+    prev = "s0"
+    for r in range(1, _LP_ROUNDS + 1):
+        ctes.append(
+            f"""s{r} AS (
+      SELECT p.doc_id, p.source,
+             CASE WHEN nb.deg IS NULL THEN p.sc
+                  ELSE (p.sc + nb.tot) // (1 + nb.deg) END AS sc
+      FROM {prev} p LEFT JOIN (
+        SELECT e.s AS doc_id, CAST(SUM(q.sc) AS BIGINT) AS tot,
+               CAST(count(*) AS BIGINT) AS deg
+        FROM edges e JOIN {prev} q ON q.doc_id = e.d GROUP BY e.s) nb
+      ON nb.doc_id = p.doc_id)"""
+        )
+        prev = f"s{r}"
+    return (
+        ",\n    ".join(ctes)
+        + f"""
+    SELECT s0.source,
+           CAST(count(*) AS BIGINT) AS n_docs,
+           CAST(SUM(s0.sc) AS DOUBLE) / count(*) AS avg_initial,
+           CAST(SUM(fin.sc) AS DOUBLE) / count(*) AS avg_smoothed,
+           CAST(SUM(CASE WHEN fin.sc <> s0.sc THEN 1 ELSE 0 END) AS BIGINT)
+             AS n_changed
+    FROM s0 JOIN {prev} fin USING (doc_id)
+    GROUP BY s0.source ORDER BY s0.source
+    """
+    )
+
+
+@_register("docs_quality_label_propagation", _lp_oracle())
+def q_docs_quality_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Semi-supervised quality smoothing: propagate a per-document
+    quality score over the near-dup graph (LSH candidate pairs) for 2
+    rounds of neighborhood averaging — the label-propagation move used
+    to spread sparse quality/toxicity labels through duplicate
+    clusters before filtering (a near-copy of junk is junk even if its
+    own score looks fine). Score = type-token ratio in permille
+    (1000·distinct/total, truncating div — repetitive docs score low);
+    each round replaces s(v) with (s(v) + Σ_nbr s) div (1 + deg) —
+    integer fixed point, so both engines replay the diffusion exactly.
+    Readout per source: initial vs smoothed mean and how many docs
+    moved (docs off the graph keep their score).
+
+    Scale: edges come from the memoized banded-LSH table (never
+    O(n²)); each round is one neighbor-keyed agg (map-combinable sum +
+    count riding the edge exchange) and one doc-keyed left join —
+    rounds are fixed (2), so total cost is 2 passes over O(edges).
+    The score bootstrap is one token agg."""
+    from ipeds_etl_spark.operators import sketches as _  # noqa: F401
+
+    d = docs_scan(spark, sf_dir)
+    lsh = lsh_doc_pairs(spark, sf_dir)
+    edges = lsh.selectExpr("id_a AS s", "id_b AS d").unionAll(
+        lsh.selectExpr("id_b AS s", "id_a AS d")
+    )
+    tok = d.select(
+        "doc_id", "source", F.explode(TX.tokens(F.col("text"))).alias("t")
+    )
+    s0 = tok.groupBy("doc_id").agg(
+        F.first("source").alias("source"),
+        F.expr(
+            "(1000 * CAST(count(DISTINCT t) AS BIGINT))"
+            " div CAST(count(*) AS BIGINT)"
+        ).alias("sc"),
+    ).localCheckpoint(eager=False)
+
+    cur = s0
+    for _r in range(_LP_ROUNDS):
+        nb = (
+            edges.join(
+                cur.select(F.col("doc_id").alias("d"), F.col("sc").alias("nsc")),
+                "d",
+            )
+            .groupBy("s")
+            .agg(
+                F.sum("nsc").cast("long").alias("tot"),
+                F.count(F.lit(1)).cast("long").alias("deg"),
+            )
+            .withColumnRenamed("s", "doc_id")
+        )
+        cur = (
+            cur.join(nb, "doc_id", "left")
+            .select(
+                "doc_id",
+                "source",
+                F.when(F.col("deg").isNull(), F.col("sc"))
+                .otherwise(F.expr("(sc + tot) div (1 + deg)"))
+                .alias("sc"),
+            )
+            .localCheckpoint(eager=False)
+        )
+
+    joined = s0.select("doc_id", "source", F.col("sc").alias("sc0")).join(
+        cur.select("doc_id", F.col("sc").alias("scf")), "doc_id"
+    )
+    return (
+        joined.groupBy("source")
+        .agg(
+            F.count(F.lit(1)).cast("long").alias("n_docs"),
+            (F.sum("sc0").cast("double") / F.count(F.lit(1))).alias("avg_initial"),
+            (F.sum("scf").cast("double") / F.count(F.lit(1))).alias("avg_smoothed"),
+            F.sum(F.when(F.col("scf") != F.col("sc0"), 1).otherwise(0))
+            .cast("long")
+            .alias("n_changed"),
+        )
+        .orderBy("source")
+    )
+
+
+# ===========================================================================
+# Cross-source contamination matrix from per-source KMV shingle sketches
+# ===========================================================================
+_OVL_K = 64
+
+
+def _overlap_oracle() -> str:
+    from ipeds_etl_spark.operators import sketches as SK
+
+    sk = SK.kmv_sketch_sql("g", _OVL_K)
+    merged = SK.kmv_merge_sql("a.sk", "b.sk", _OVL_K)
+    union_est = SK.kmv_estimate_from_sql("m", _OVL_K)
+    shingles = SHINGLES.format(w="w")
+    return f"""
+    WITH toks AS (SELECT doc_id, source, {WS_TOKENS.format(x='text')} AS w
+                  FROM documents),
+    sh AS (SELECT source, unnest({shingles}) AS g FROM toks),
+    s AS (SELECT source, {sk} AS sk FROM sh GROUP BY source),
+    pairs AS (
+      SELECT a.source AS src_a, b.source AS src_b,
+             a.sk AS ska, b.sk AS skb, {merged} AS m
+      FROM s a JOIN s b ON a.source < b.source),
+    est AS (
+      SELECT src_a, src_b, {union_est} AS union_est,
+             CAST(len(list_intersect(list_intersect(m, ska), skb)) AS DOUBLE)
+               / len(m) AS jaccard_est
+      FROM pairs),
+    dg AS (SELECT DISTINCT source, g FROM sh),
+    ex AS (
+      SELECT a.source AS src_a, b.source AS src_b,
+             CAST(count(*) AS BIGINT) AS exact_common
+      FROM dg a JOIN dg b ON a.g = b.g AND a.source < b.source
+      GROUP BY 1, 2)
+    SELECT est.src_a, est.src_b, est.union_est, est.jaccard_est,
+           est.jaccard_est * est.union_est AS intersection_est,
+           coalesce(ex.exact_common, 0) AS exact_common
+    FROM est LEFT JOIN ex ON est.src_a = ex.src_a AND est.src_b = ex.src_b
+    ORDER BY est.src_a, est.src_b
+    """
+
+
+@_register("docs_source_overlap_matrix", _overlap_oracle())
+def q_docs_source_overlap_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Cross-corpus contamination matrix: for every pair of sources,
+    estimate shingle-level overlap (union size, Jaccard, intersection)
+    from ONE bounded KMV sketch per source — the audit you run before
+    mixing corpora, where shared boilerplate/near-copies across
+    sources would double-count training mass and leak eval data. The
+    exact distinct-shingle common count rides alongside as the
+    oracle-scale calibration column (the ``events_kmv_intersection``
+    pattern applied to content shingles). Deterministic parity
+    hashing ⇒ the estimates replay bit-for-bit in DuckDB.
+
+    Scale: the sketch build is one map-combinable agg with state ≤ k
+    hashes per source regardless of corpus size; the pair algebra is
+    O(sources²) over k-length arrays — a contamination matrix for
+    1000 sources costs half a million tiny rows, while the raw
+    shingle stream is touched exactly once. The exact side is a
+    shingle-keyed self-join — the gate-scale audit, not the
+    production path."""
+    from ipeds_etl_spark.operators import sketches as SK
+
+    d = docs_scan(spark, sf_dir)
+    sh = d.select(
+        "source", F.explode(TX.word_shingles(F.col("text"), 3)).alias("g")
+    )
+    s = sh.groupBy("source").agg(SK.kmv_sketch(F.col("g"), _OVL_K).alias("sk"))
+    a, b = s.alias("a"), s.alias("b")
+    pairs = a.join(b, F.col("a.source") < F.col("b.source")).select(
+        F.col("a.source").alias("src_a"),
+        F.col("b.source").alias("src_b"),
+        F.col("a.sk").alias("ska"),
+        F.col("b.sk").alias("skb"),
+        SK.kmv_merge(F.col("a.sk"), F.col("b.sk"), _OVL_K).alias("m"),
+    )
+    est = pairs.select(
+        "src_a",
+        "src_b",
+        SK.kmv_estimate_from(F.col("m"), _OVL_K).alias("union_est"),
+        (
+            F.size(F.array_intersect(F.array_intersect("m", "ska"), "skb"))
+            .cast("double")
+            / F.size("m")
+        ).alias("jaccard_est"),
+    )
+    dg = sh.distinct()
+    da, db = dg.alias("da"), dg.alias("db")
+    ex = (
+        da.join(
+            db,
+            (F.col("da.g") == F.col("db.g"))
+            & (F.col("da.source") < F.col("db.source")),
+        )
+        .groupBy(
+            F.col("da.source").alias("src_a"), F.col("db.source").alias("src_b")
+        )
+        .agg(F.count(F.lit(1)).cast("long").alias("exact_common"))
+    )
+    return (
+        est.join(ex, ["src_a", "src_b"], "left")
+        .select(
+            "src_a",
+            "src_b",
+            "union_est",
+            "jaccard_est",
+            (F.col("jaccard_est") * F.col("union_est")).alias("intersection_est"),
+            F.coalesce("exact_common", F.lit(0)).cast("long").alias("exact_common"),
+        )
+        .orderBy("src_a", "src_b")
+    )
+
+
+# ===========================================================================
+# End-to-end curation funnel: per-stage survivor accounting
+# ===========================================================================
+
+
+def _funnel_oracle() -> str:
+    bands = " UNION ALL ".join(
+        f"SELECT doc_id, {b} AS band, {band_key_sql(b)} AS band_key FROM sig"
+        for b in range(DD.N_PERMS // DD.ROWS_PER_BAND)
+    )
+    h10 = "CAST(concat('0x', substr(sha256(g), 1, 10)) AS BIGINT)"
+    return f"""
+    WITH RECURSIVE {minhash_sig_sql()},
+    bands AS ({bands}),
+    lsh AS (
+      SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
+      FROM bands a JOIN bands b
+        ON a.band = b.band AND a.band_key = b.band_key AND a.doc_id < b.doc_id),
+    tok AS (SELECT doc_id, unnest({WS_TOKENS.format(x='text')}) AS t
+            FROM documents),
+    dstat AS (
+      SELECT doc_id, CAST(SUM(n) AS BIGINT) AS ntok,
+             CAST(max(n) AS BIGINT) AS maxtok
+      FROM (SELECT doc_id, t, count(*) AS n FROM tok GROUP BY doc_id, t)
+      GROUP BY doc_id),
+    s1 AS (SELECT doc_id FROM dstat WHERE ntok >= 10 AND 5 * maxtok < ntok),
+    s2 AS (SELECT min(d.doc_id) AS doc_id
+           FROM documents d JOIN s1 USING (doc_id) GROUP BY d.text),
+    e3 AS (SELECT l.id_a AS s, l.id_b AS d FROM lsh l
+           JOIN s2 a ON a.doc_id = l.id_a JOIN s2 b ON b.doc_id = l.id_b
+           UNION
+           SELECT l.id_b, l.id_a FROM lsh l
+           JOIN s2 a ON a.doc_id = l.id_a JOIN s2 b ON b.doc_id = l.id_b),
+    reach(id, comp) AS (
+      SELECT s, s FROM e3
+      UNION
+      SELECT e.s, r.comp FROM e3 e JOIN reach r ON e.d = r.id),
+    comp AS (SELECT id, min(comp) AS lbl FROM reach GROUP BY id),
+    s3 AS (SELECT s2.doc_id FROM s2 LEFT JOIN comp ON comp.id = s2.doc_id
+           WHERE comp.lbl IS NULL OR comp.lbl = s2.doc_id),
+    dsh AS (SELECT DISTINCT doc_id, {h10} AS h
+           FROM (SELECT doc_id,
+                        unnest({SHINGLES.format(w='w')}) AS g
+                 FROM (SELECT doc_id, {WS_TOKENS.format(x='text')} AS w
+                       FROM documents))),
+    ev AS (SELECT DISTINCT h FROM dsh WHERE doc_id < 20),
+    ov AS (SELECT dsh.doc_id, CAST(count(*) AS BIGINT) AS n,
+                  CAST(count(ev.h) AS BIGINT) AS hit
+           FROM dsh JOIN s3 ON s3.doc_id = dsh.doc_id
+           LEFT JOIN ev ON ev.h = dsh.h
+           GROUP BY dsh.doc_id),
+    s4 AS (SELECT doc_id FROM ov WHERE 5 * hit < 4 * n),
+    c0 AS (SELECT CAST(count(*) AS BIGINT) AS n FROM documents),
+    c1 AS (SELECT CAST(count(*) AS BIGINT) AS n FROM s1),
+    c2 AS (SELECT CAST(count(*) AS BIGINT) AS n FROM s2),
+    c3 AS (SELECT CAST(count(*) AS BIGINT) AS n FROM s3),
+    c4 AS (SELECT CAST(count(*) AS BIGINT) AS n FROM s4)
+    SELECT stage, n_in, n_kept, n_in - n_kept AS n_dropped
+    FROM (
+      SELECT '1_quality' AS stage, c0.n AS n_in, c1.n AS n_kept FROM c0, c1
+      UNION ALL
+      SELECT '2_exact_dedup', c1.n, c2.n FROM c1, c2
+      UNION ALL
+      SELECT '3_near_dedup', c2.n, c3.n FROM c2, c3
+      UNION ALL
+      SELECT '4_decontaminate', c3.n, c4.n FROM c3, c4)
+    ORDER BY stage
+    """
+
+
+#: Components algorithm inside the funnel's near-dup stage — the sf10
+#: race knob (VERDICT r9 item 2: the fixpoint is a measured 94% of the
+#: funnel's sf10 cost). Both algorithms return the identical min-id
+#: labeling (equivalence pinned in test_components_sampling). RACE
+#: RESULT (r10, three solo sessions, 7 ABAB samples per arm on the
+#: 127.6M-pair sf10 graph — SCALE.md "Components race" + its
+#: REPLICATION entry): pooled medians label 151.7 s vs star 161.9 s,
+#: within-arm same-code spread 3–5.6×, BOTH converge in 2 rounds in
+#: all 14 runs (dedup clusters have diameter ≈ 2, so star's O(log² n)
+#: advantage never engages). The arms are equivalent on this topology
+#: and single-session deltas are box state; label stays the default
+#: (2 shuffles/round vs star's 4), star remains the documented escape
+#: hatch for diameter-heavy graphs.
+FUNNEL_COMPONENTS_ALGORITHM = "label"
+
+
+@_register("docs_curation_funnel", _funnel_oracle())
+def q_docs_curation_funnel(
+    spark: SparkSession,
+    sf_dir: str,
+    profile: dict | None = None,
+    components_algorithm: str | None = None,
+) -> DataFrame:
+    """The whole curation pipeline as ONE auditable funnel: quality
+    gate (≥10 tokens, top token < 1/5 — the repetition rule) → exact
+    dedup (min-id per identical text) → near-dup resolution (LSH
+    candidate pairs restricted to survivors → connected components →
+    canonical-survivor keep) → benchmark decontamination (drop when
+    distinct-shingle overlap with the planted eval set, doc_id < 20,
+    reaches 0.8 — integer cross-multiplied 5·hit ≥ 4·n). One row per
+    stage with in/kept/dropped counts — the accounting table every
+    training-data run publishes, here value-hash-checked end to end
+    (the oracle replays the component fixpoint as a recursive CTE).
+
+    Scale: each stage is the production-shaped operator it audits —
+    map-combinable token stats, one text-keyed agg, the pair-bounded
+    LSH components, and the broadcast eval-set probe (the eval set is
+    the ONE genuinely small side here). Counts are 1-row frames; the
+    funnel adds nothing beyond its constituent passes. Every join
+    where BOTH sides scale with the corpus (pairs ⋈ survivors,
+    survivors ⋈ components, shingles ⋈ survivors) is pinned
+    ``shuffle_hash``: the sf10 quad_r8 smoke caught AQE sizing the
+    survivor side from 30x-compressed shuffle bytes and electing a
+    driver-OOMing broadcast — the same defect class as
+    the banded-LSH vector re-attach in similarity and the LPA label
+    join.
+
+    ``profile`` (optional dict, VERDICT r8 item 1): when provided,
+    each stage is EAGERLY materialized (localCheckpoint) and its
+    incremental wall seconds recorded under stage-named keys — the
+    sf10 smoke's per-stage share readout. Adds materialization
+    boundaries the production plan doesn't have (stages that Catalyst
+    would pipeline are forced apart), so profile mode is a
+    measurement tool, not the benched path; ``profile=None`` leaves
+    the plan untouched."""
+    import time as _time
+
+    from ipeds_etl_spark.functions.hashing import parity_hash
+    from ipeds_etl_spark.operators.components import dedup_clusters
+
+    def mark(df: DataFrame, stage: str) -> DataFrame:
+        if profile is None:
+            return df
+        t0 = _time.perf_counter()
+        out = df.localCheckpoint(eager=True)
+        profile[stage] = round(_time.perf_counter() - t0, 2)
+        return out
+
+    d = docs_scan(spark, sf_dir)
+    t0 = _time.perf_counter()
+    lsh = lsh_doc_pairs(spark, sf_dir)
+    if profile is not None:
+        # memo build cost if cold, ~0 if another consumer already built
+        # it (billed like bench bills lsh_doc_pairs)
+        profile["lsh_memo"] = round(_time.perf_counter() - t0, 2)
+
+    tok = d.select("doc_id", F.explode(TX.tokens(F.col("text"))).alias("t"))
+    dstat = (
+        tok.groupBy("doc_id", "t")
+        .agg(F.count(F.lit(1)).alias("n"))
+        .groupBy("doc_id")
+        .agg(
+            F.sum("n").cast("long").alias("ntok"),
+            F.max("n").cast("long").alias("maxtok"),
+        )
+    )
+    s1 = mark(
+        dstat.filter(
+            (F.col("ntok") >= 10) & (5 * F.col("maxtok") < F.col("ntok"))
+        )
+        .select("doc_id")
+        # two consumers (the s2 join and the c1 count) each re-ran the
+        # token explode + double agg; the frame is ids-only, so the
+        # barrier is cheap where the recompute is not (opt r13)
+        .localCheckpoint(eager=False),
+        "1_token_quality",
+    )
+    s2 = mark(
+        d.join(s1, "doc_id")
+        .groupBy("text")
+        .agg(F.min("doc_id").alias("doc_id"))
+        .select("doc_id")
+        .localCheckpoint(eager=False),
+        "2_exact_dedup",
+    )
+    surv_pairs = (
+        lsh.join(s2.withColumnRenamed("doc_id", "id_a").hint("shuffle_hash"), "id_a")
+        .join(s2.withColumnRenamed("doc_id", "id_b").hint("shuffle_hash"), "id_b")
+        .select("id_a", "id_b")
+    )
+    comp = dedup_clusters(
+        surv_pairs,
+        algorithm=components_algorithm or FUNNEL_COMPONENTS_ALGORITHM,
+    ).select(
+        F.col("id").alias("doc_id"), F.col("component_id").alias("lbl")
+    )
+    s3 = mark(
+        s2.join(comp.hint("shuffle_hash"), "doc_id", "left")
+        .filter(F.col("lbl").isNull() | (F.col("lbl") == F.col("doc_id")))
+        .select("doc_id")
+        .localCheckpoint(eager=False),
+        "3_components",
+    )
+    # the (doc_id, h) distinct only dedupes within a document, so it is
+    # an array_distinct over the per-doc hashed-shingle array — no
+    # global dedup exchange (the docs_ngram_novelty rewrite, opt r13)
+    sh = d.select("doc_id", TX.tokens(F.col("text")).alias("w")).select(
+        "doc_id",
+        F.explode(
+            F.array_distinct(
+                F.transform(
+                    TX.shingles_of(F.col("w"), 3), lambda g: parity_hash(g)
+                )
+            )
+        ).alias("h"),
+    )
+    ev = sh.filter(F.col("doc_id") < 20).select(F.col("h").alias("ev_h")).distinct()
+    ov = (
+        sh.join(s3.hint("shuffle_hash"), "doc_id")
+        .join(F.broadcast(ev), sh["h"] == F.col("ev_h"), "left")
+        .groupBy("doc_id")
+        .agg(
+            F.count(F.lit(1)).cast("long").alias("n"),
+            F.count("ev_h").cast("long").alias("hit"),
+        )
+    )
+    s4 = mark(
+        ov.filter(5 * F.col("hit") < 4 * F.col("n")).select("doc_id"),
+        "4_decontaminate",
+    )
+
+    def cnt(df: DataFrame, name: str) -> DataFrame:
+        return df.agg(F.count(F.lit(1)).cast("long").alias(name))
+
+    c0, c1, c2, c3, c4 = (
+        cnt(d, "c0"),
+        cnt(s1, "c1"),
+        cnt(s2, "c2"),
+        cnt(s3, "c3"),
+        cnt(s4, "c4"),
+    )
+    wide = (
+        c0.crossJoin(c1).crossJoin(c2).crossJoin(c3).crossJoin(c4)
+    )
+    stages = F.array(
+        F.struct(F.lit("1_quality").alias("stage"), F.col("c0").alias("n_in"), F.col("c1").alias("n_kept")),
+        F.struct(F.lit("2_exact_dedup").alias("stage"), F.col("c1").alias("n_in"), F.col("c2").alias("n_kept")),
+        F.struct(F.lit("3_near_dedup").alias("stage"), F.col("c2").alias("n_in"), F.col("c3").alias("n_kept")),
+        F.struct(F.lit("4_decontaminate").alias("stage"), F.col("c3").alias("n_in"), F.col("c4").alias("n_kept")),
+    )
+    return (
+        wide.select(F.explode(stages).alias("s"))
+        .select(
+            F.col("s.stage").alias("stage"),
+            F.col("s.n_in").alias("n_in"),
+            F.col("s.n_kept").alias("n_kept"),
+            (F.col("s.n_in") - F.col("s.n_kept")).alias("n_dropped"),
+        )
+        .orderBy("stage")
+    )
+
+
+# ===========================================================================
+# Inter-rater agreement: Cohen's kappa between two deterministic raters
+# ===========================================================================
+@_register(
+    "docs_rater_agreement_kappa",
+    f"""
+    WITH t AS (
+      SELECT {WS_TOKENS.format(x='text')} AS w,
+             CAST(len(regexp_extract_all(text, '{STOP_PAT}')) AS BIGINT) AS sw
+      FROM documents),
+    r AS (
+      SELECT (2 * len(list_distinct(w)) >= len(w)) AS ra,
+             (10 * sw >= len(w)) AS rb
+      FROM t),
+    ct AS (
+      SELECT
+        CAST(SUM(CASE WHEN ra AND rb THEN 1 ELSE 0 END) AS BIGINT) AS yes_yes,
+        CAST(SUM(CASE WHEN ra AND NOT rb THEN 1 ELSE 0 END) AS BIGINT) AS yes_no,
+        CAST(SUM(CASE WHEN NOT ra AND rb THEN 1 ELSE 0 END) AS BIGINT) AS no_yes,
+        CAST(SUM(CASE WHEN NOT ra AND NOT rb THEN 1 ELSE 0 END) AS BIGINT) AS no_no
+      FROM r),
+    k AS (
+      SELECT yes_yes, yes_no, no_yes, no_no,
+             yes_yes + yes_no + no_yes + no_no AS n,
+             (yes_yes + yes_no) * (yes_yes + no_yes)
+               + (no_yes + no_no) * (yes_no + no_no) AS e
+      FROM ct)
+    SELECT yes_yes, yes_no, no_yes, no_no,
+           CAST((1000 * (yes_yes + no_no)) // n AS BIGINT) AS po_x1000,
+           CAST(n * (yes_yes + no_no) - e AS DOUBLE) / (n * n - e) AS kappa
+    FROM k
+    """,
+)
+def q_docs_rater_agreement_kappa(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Cohen's kappa between two deterministic document-quality raters
+    — rater A flags lexical diversity (2·distinct_tokens ≥ tokens),
+    rater B flags natural-language stopword density (10·stopwords ≥
+    tokens); both are integer cross-multiplied predicates, no ratio
+    float ever formed. Kappa comes out of the 2×2 contingency in the
+    single-division form κ = (n·agree − Σ marginal products) /
+    (n² − Σ marginal products): numerator and denominator are exact
+    BIGINTs, ONE IEEE division total — the agreement number a labeling
+    pipeline reports before trusting silver labels. Observed agreement
+    also reported in exact permille.
+
+    Scale: pure map (two codegen predicates per doc) into one 4-cell
+    global aggregate — nothing shuffles but four partial counters."""
+    d = docs_scan(spark, sf_dir)
+    toks = TX.tokens(F.col("text"))
+    r = d.select(
+        (2 * F.size(F.array_distinct(toks)) >= F.size(toks)).alias("ra"),
+        (10 * TX.stopword_count(F.col("text")) >= F.size(toks)).alias("rb"),
+    )
+    ct = r.agg(
+        F.sum(F.when(F.col("ra") & F.col("rb"), 1).otherwise(0))
+        .cast("long")
+        .alias("yes_yes"),
+        F.sum(F.when(F.col("ra") & ~F.col("rb"), 1).otherwise(0))
+        .cast("long")
+        .alias("yes_no"),
+        F.sum(F.when(~F.col("ra") & F.col("rb"), 1).otherwise(0))
+        .cast("long")
+        .alias("no_yes"),
+        F.sum(F.when(~F.col("ra") & ~F.col("rb"), 1).otherwise(0))
+        .cast("long")
+        .alias("no_no"),
+    )
+    n = F.col("yes_yes") + F.col("yes_no") + F.col("no_yes") + F.col("no_no")
+    e = (F.col("yes_yes") + F.col("yes_no")) * (
+        F.col("yes_yes") + F.col("no_yes")
+    ) + (F.col("no_yes") + F.col("no_no")) * (F.col("yes_no") + F.col("no_no"))
+    agree = F.col("yes_yes") + F.col("no_no")
+    return ct.select(
+        "yes_yes",
+        "yes_no",
+        "no_yes",
+        "no_no",
+        F.expr(
+            "CAST((1000 * (yes_yes + no_no)) div"
+            " (yes_yes + yes_no + no_yes + no_no) AS BIGINT)"
+        ).alias("po_x1000"),
+        ((n * agree - e).cast("double") / (n * n - e)).alias("kappa"),
+    )
+
+
+# ===========================================================================
+# Temperature-scaled mixture allocation (T = 2 => weights ∝ sqrt(tokens))
+# ===========================================================================
+_TEMP_BUDGET = 100_000
+
+
+@_register(
+    "docs_temperature_mixture",
+    f"""
+    WITH toks AS (
+      SELECT source,
+             CAST(SUM(len(list_filter(regexp_split_to_array(text, '\\s+'),
+                                      t -> len(t) > 0))) AS BIGINT) AS tok
+      FROM documents GROUP BY source),
+    r0 AS (SELECT source, tok,
+                  CAST(floor(sqrt(CAST(tok AS DOUBLE))) AS BIGINT) AS s0
+           FROM toks),
+    w AS (SELECT source, tok,
+                 CASE WHEN (s0 + 1) * (s0 + 1) <= tok THEN s0 + 1
+                      WHEN s0 * s0 > tok THEN s0 - 1
+                      ELSE s0 END AS isqrt_w
+          FROM r0),
+    tot AS (SELECT CAST(SUM(isqrt_w) AS BIGINT) AS t FROM w),
+    q AS (SELECT source, tok, isqrt_w,
+                 CAST(({_TEMP_BUDGET} * isqrt_w) // t AS BIGINT) AS quota_floor,
+                 CAST(({_TEMP_BUDGET} * isqrt_w) % t AS BIGINT) AS remainder
+          FROM w CROSS JOIN tot),
+    l AS (SELECT CAST({_TEMP_BUDGET} - SUM(quota_floor) AS BIGINT) AS leftover
+          FROM q),
+    r AS (SELECT q.*, l.leftover,
+                 row_number() OVER (ORDER BY remainder DESC, source) AS rk
+          FROM q CROSS JOIN l)
+    SELECT source, tok AS tokens, isqrt_w,
+           CAST(quota_floor + CASE WHEN rk <= leftover THEN 1 ELSE 0 END
+                AS BIGINT) AS allocated
+    FROM r ORDER BY source
+    """,
+)
+def q_docs_temperature_mixture(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Temperature-scaled data-mixing weights at T = 2 — allocation
+    ∝ sqrt(per-source tokens), the standard move that up-samples small
+    high-value sources relative to proportional mixing (multilingual
+    and code/web recipes both use it) — then Hamilton-apportioned to
+    an exact integer token budget. The sqrt is EXACT integer isqrt:
+    libm's sqrt only SEEDS the value, and a ±1 integer correction
+    pins floor(√n) regardless of libm rounding (the libm ban held the
+    same way the k-means centroid quantization pins floor(x+0.5)).
+    Σ allocated == budget exactly, ties to the alphabetically first
+    source (the `docs_token_budget_allocation` contract at T = 2).
+
+    Scale: one token agg, O(sources) everything after, one rank window
+    over the metadata-sized source list."""
+    d = load_table(spark, sf_dir, "documents")
+    # one corpus scan: the isqrt weights, their total, the quotas and
+    # the leftover would otherwise each re-run the token aggregate
+    toks = (
+        d.groupBy("source")
+        .agg(F.sum(TX.token_count(F.col("text")).cast("long")).alias("tok"))
+        .localCheckpoint(eager=False)
+    )
+    s0 = F.floor(F.sqrt(F.col("tok").cast("double"))).cast("long")
+    w = toks.select(
+        "source",
+        "tok",
+        F.when((s0 + 1) * (s0 + 1) <= F.col("tok"), s0 + 1)
+        .when(s0 * s0 > F.col("tok"), s0 - 1)
+        .otherwise(s0)
+        .alias("isqrt_w"),
+    )
+    tot = w.agg(F.sum("isqrt_w").cast("long").alias("t"))
+    q = w.crossJoin(F.broadcast(tot)).select(
+        "source",
+        "tok",
+        "isqrt_w",
+        F.expr(f"CAST(({_TEMP_BUDGET} * isqrt_w) div t AS BIGINT)").alias(
+            "quota_floor"
+        ),
+        F.expr(f"CAST(({_TEMP_BUDGET} * isqrt_w) % t AS BIGINT)").alias(
+            "remainder"
+        ),
+    )
+    leftover = q.agg(
+        (F.lit(_TEMP_BUDGET) - F.sum("quota_floor")).cast("long").alias("leftover")
+    )
+    rk = F.row_number().over(Window.orderBy(F.desc("remainder"), F.asc("source")))
+    return (
+        q.crossJoin(F.broadcast(leftover))
+        .withColumn("rk", rk)
+        .select(
+            "source",
+            F.col("tok").alias("tokens"),
+            "isqrt_w",
+            (
+                F.col("quota_floor")
+                + F.when(F.col("rk") <= F.col("leftover"), 1).otherwise(0)
+            )
+            .cast("long")
+            .alias("allocated"),
+        )
+        .orderBy("source")
+    )
+
+
+# ===========================================================================
+# Deterministic half-sample bootstrap CI for the corpus mean
+# ===========================================================================
+_BOOT_B = 32
+
+
+def _bootstrap_oracle() -> str:
+    from ipeds_etl_spark.functions.hashing import parity_hash_sql
+
+    h = parity_hash_sql("CAST(doc_id AS VARCHAR) || ':' || CAST(b AS VARCHAR)")
+    return f"""
+    WITH r AS (
+      SELECT n_chars,
+             unnest(list_filter(range({_BOOT_B}), b -> ({h}) % 2 = 0)) AS b
+      FROM documents),
+    m AS (SELECT b, CAST((1000 * SUM(n_chars)) // count(*) AS BIGINT) AS mn
+          FROM r GROUP BY b),
+    s AS (SELECT mn, row_number() OVER (ORDER BY mn) AS rk,
+                 count(*) OVER () AS nb
+          FROM m),
+    f AS (SELECT CAST(count(*) AS BIGINT) AS n_docs,
+                 CAST((1000 * SUM(n_chars)) // count(*) AS BIGINT) AS mean_x1000
+          FROM documents)
+    SELECT n_docs, mean_x1000,
+           (SELECT mn FROM s WHERE rk = 2) AS ci_lo_x1000,
+           (SELECT mn FROM s WHERE rk = {_BOOT_B - 1}) AS ci_hi_x1000,
+           (SELECT CAST(max(nb) AS BIGINT) FROM s) AS n_replicates
+    FROM f
+    """
+
+
+@_register("docs_bootstrap_mean_ci", _bootstrap_oracle())
+def q_docs_bootstrap_mean_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Deterministic half-sample bootstrap CI for mean document length:
+    32 replicates, document d belongs to replicate b iff
+    parity_hash(doc_id:b) is even — a HASH-RANDOMIZED design (Efron's
+    half-sampling flavor) that both engines replay bit-for-bit, unlike
+    any RNG-based resample. Each replicate's mean is an exact permille
+    (integer sum, truncating div); the 90%-ish CI is the 2nd/31st
+    order statistic of the 32 replicate means. This is the error bar a
+    corpus-stats dashboard should put on every mean.
+
+    Scale: ONE corpus scan — each row map-side explodes to its ~B/2
+    replicate memberships which partial-aggregate to at most
+    B × partitions rows before the exchange; everything after is over
+    the 32-row replicate frame (the rank window is metadata-sized)."""
+    from ipeds_etl_spark.functions.hashing import parity_hash
+
+    d = load_table(spark, sf_dir, "documents")
+    reps = d.select(
+        "n_chars",
+        F.explode(
+            F.filter(
+                F.sequence(F.lit(0), F.lit(_BOOT_B - 1)),
+                lambda b: parity_hash(
+                    F.concat(
+                        F.col("doc_id").cast("string"),
+                        F.lit(":"),
+                        b.cast("string"),
+                    )
+                )
+                % 2
+                == 0,
+            )
+        ).alias("b"),
+    )
+    m = reps.groupBy("b").agg(
+        F.expr("CAST((1000 * sum(n_chars)) div count(*) AS BIGINT)").alias("mn")
+    )
+    w = Window.orderBy("mn")  # 32 rows: metadata-sized
+    s = m.select("mn", F.row_number().over(w).alias("rk")).agg(
+        F.min(F.when(F.col("rk") == 2, F.col("mn"))).alias("ci_lo_x1000"),
+        F.min(F.when(F.col("rk") == _BOOT_B - 1, F.col("mn"))).alias(
+            "ci_hi_x1000"
+        ),
+        F.count(F.lit(1)).cast("long").alias("n_replicates"),
+    )
+    f = d.agg(
+        F.count(F.lit(1)).cast("long").alias("n_docs"),
+        F.expr("CAST((1000 * sum(n_chars)) div count(*) AS BIGINT)").alias(
+            "mean_x1000"
+        ),
+    )
+    return f.crossJoin(F.broadcast(s)).select(
+        "n_docs", "mean_x1000", "ci_lo_x1000", "ci_hi_x1000", "n_replicates"
+    )
+
+
+# ===========================================================================
+# Language-ID calibration (reliability table vs the labeled lang column)
+# ===========================================================================
+def _calibration_oracle() -> str:
+    from ipeds_etl_spark.functions.text import (
+        LANG_STOPWORDS,
+        lang_id_sql,
+        lang_word_tokens_sql,
+    )
+
+    langs = sorted(LANG_STOPWORDS)
+    score_sum = " + ".join(f"score_{lg}" for lg in langs)
+    top = "list_max([" + ", ".join(f"score_{lg}" for lg in langs) + "])"
+    return f"""
+    WITH t AS (
+      SELECT doc_id, lang, text,
+             {lang_word_tokens_sql('text')} AS __lang_toks
+      FROM documents),
+    s AS (SELECT doc_id, lang, {lang_id_sql('text')} FROM t),
+    c AS (
+      SELECT lang, pred_lang,
+             CASE WHEN {score_sum} = 0 THEN CAST(0 AS BIGINT)
+                  ELSE CAST((1000 * {top}) // ({score_sum}) AS BIGINT)
+             END AS conf
+      FROM s),
+    b AS (SELECT least(conf // 100, 9) AS bin,
+                 CASE WHEN pred_lang = lang THEN 1 ELSE 0 END AS ok,
+                 conf
+          FROM c)
+    SELECT bin,
+           CAST(count(*) AS BIGINT) AS n_docs,
+           CAST(SUM(conf) // count(*) AS BIGINT) AS mean_conf_x1000,
+           CAST((1000 * SUM(ok)) // count(*) AS BIGINT) AS acc_x1000,
+           abs(CAST(SUM(conf) // count(*) AS BIGINT)
+               - CAST((1000 * SUM(ok)) // count(*) AS BIGINT)) AS gap_x1000
+    FROM b GROUP BY bin ORDER BY bin
+    """
+
+
+@_register("docs_langid_calibration", _calibration_oracle())
+def q_docs_langid_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Reliability table for the n-gram language identifier against
+    the labeled ``lang`` column: confidence = top stopword score over
+    total score in exact permille, binned into deciles; per bin the
+    observed accuracy and the |confidence − accuracy| gap — the
+    calibration readout (the per-bin terms of ECE, which the test
+    assembles) that decides whether lang-id confidences can gate
+    filtering thresholds. All counts integer, one truncating div per
+    cell, ties and zero-score docs handled identically on both
+    engines (conf = 0).
+
+    Scale: map-only scoring (the pre-projected token-array pattern of
+    `text_lang_id` — one tokenize, 5 array-membership counts), one
+    10-row aggregate."""
+    langs = sorted(TX.LANG_STOPWORDS)
+    d = docs_scan(spark, sf_dir).select(
+        "lang", "text", TX.lang_word_tokens(F.col("text")).alias("wt")
+    )
+    scores = TX.lang_scores(F.col("text"), F.col("wt"))
+    scored = d.select(
+        "lang", *[scores[lg].alias(f"score_{lg}") for lg in langs]
+    )
+    pred = TX.lang_id_from_scores(
+        {lg: F.col(f"score_{lg}") for lg in langs}
+    ).alias("pred_lang")
+    tot = None
+    for lg in langs:
+        tot = F.col(f"score_{lg}") if tot is None else tot + F.col(f"score_{lg}")
+    top = F.greatest(*[F.col(f"score_{lg}") for lg in langs])
+    c = scored.select(
+        "lang",
+        pred,
+        tot.alias("tot"),
+        top.alias("top"),
+    ).select(
+        "lang",
+        "pred_lang",
+        F.expr(
+            "CASE WHEN tot = 0 THEN CAST(0 AS BIGINT)"
+            " ELSE CAST((1000 * top) div tot AS BIGINT) END"
+        ).alias("conf"),
+    )
+    b = c.select(
+        F.least(F.expr("conf div 100"), F.lit(9).cast("long")).alias("bin"),
+        F.when(F.col("pred_lang") == F.col("lang"), 1).otherwise(0).alias("ok"),
+        "conf",
+    )
+    return (
+        b.groupBy("bin")
+        .agg(
+            F.count(F.lit(1)).cast("long").alias("n_docs"),
+            F.expr("CAST(sum(conf) div count(*) AS BIGINT)").alias(
+                "mean_conf_x1000"
+            ),
+            F.expr("CAST((1000 * sum(ok)) div count(*) AS BIGINT)").alias(
+                "acc_x1000"
+            ),
+            F.abs(
+                F.expr("CAST(sum(conf) div count(*) AS BIGINT)")
+                - F.expr("CAST((1000 * sum(ok)) div count(*) AS BIGINT)")
+            ).alias("gap_x1000"),
+        )
+        .orderBy("bin")
+    )
+
+
+# ===========================================================================
+# Nucleus (top-p) source cutoff
+# ===========================================================================
+@_register(
+    "docs_nucleus_sources",
+    """
+    WITH toks AS (
+      SELECT source,
+             CAST(SUM(len(list_filter(regexp_split_to_array(text, '\\s+'),
+                                      t -> len(t) > 0))) AS BIGINT) AS tok
+      FROM documents GROUP BY source),
+    tot AS (SELECT CAST(SUM(tok) AS BIGINT) AS t FROM toks),
+    c AS (SELECT source, tok,
+                 CAST(coalesce(SUM(tok) OVER (ORDER BY tok DESC, source
+                   ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
+                   AS BIGINT) AS cum_before
+          FROM toks)
+    SELECT source, tok AS tokens,
+           CAST(cum_before + tok AS BIGINT) AS cum_tokens,
+           10 * cum_before < 9 * t AS in_nucleus
+    FROM c CROSS JOIN tot
+    ORDER BY tokens DESC, source
+    """,
+)
+def q_docs_nucleus_sources(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Nucleus (top-p, p = 0.9) source cutoff: rank sources by token
+    mass descending and keep the smallest prefix covering 90% of the
+    corpus — the top-p sampling rule applied to data mixing (drop the
+    long tail of scraps, keep the mass). Membership is the exact
+    cross-multiplied predicate 10·cum_before < 9·total (a source is in
+    while strictly less than 90% is already covered — so the boundary
+    source that crosses the line is INCLUDED, matching nucleus
+    sampling's convention). No division anywhere.
+
+    Scale: one token agg (map-combinable), then a window over the
+    O(sources) frame — metadata-sized by definition."""
+    d = load_table(spark, sf_dir, "documents")
+    toks = (
+        d.groupBy("source")
+        .agg(F.sum(TX.token_count(F.col("text")).cast("long")).alias("tok"))
+        .localCheckpoint(eager=False)
+    )
+    tot = toks.agg(F.sum("tok").cast("long").alias("t"))
+    w = (
+        Window.orderBy(F.desc("tok"), F.asc("source"))
+        .rowsBetween(Window.unboundedPreceding, -1)
+    )
+    c = toks.withColumn(
+        "cum_before", F.coalesce(F.sum("tok").over(w), F.lit(0)).cast("long")
+    )
+    return (
+        c.crossJoin(F.broadcast(tot))
+        .select(
+            "source",
+            F.col("tok").alias("tokens"),
+            (F.col("cum_before") + F.col("tok")).cast("long").alias("cum_tokens"),
+            (10 * F.col("cum_before") < 9 * F.col("t")).alias("in_nucleus"),
+        )
+        .orderBy(F.desc("tokens"), "source")
+    )
+
+
+# ===========================================================================
+# CCNet-style head/middle/tail routing by per-source quality terciles
+# ===========================================================================
+@_register(
+    "docs_quality_tercile_routing",
+    f"""
+    WITH q AS (
+      SELECT doc_id, source,
+             CAST((1000 * len(list_distinct(w))) // greatest(len(w), 1)
+                  AS BIGINT) AS sc
+      FROM (SELECT doc_id, source, {WS_TOKENS.format(x='text')} AS w
+            FROM documents)),
+    h AS (SELECT source, sc, CAST(count(*) AS BIGINT) AS c
+          FROM q GROUP BY source, sc),
+    cum AS (SELECT source, sc, c,
+                   CAST(SUM(c) OVER (PARTITION BY source ORDER BY sc
+                     ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
+                     AS BIGINT) AS cum,
+                   CAST(SUM(c) OVER (PARTITION BY source) AS BIGINT) AS n
+            FROM h),
+    cuts AS (SELECT source,
+                    min(CASE WHEN 3 * cum >= n THEN sc END) AS lo,
+                    min(CASE WHEN 3 * cum >= 2 * n THEN sc END) AS hi
+             FROM cum GROUP BY source),
+    r AS (SELECT q.source,
+                 CASE WHEN sc <= lo THEN 'tail'
+                      WHEN sc <= hi THEN 'middle'
+                      ELSE 'head' END AS bucket,
+                 sc
+          FROM q JOIN cuts USING (source))
+    SELECT source, bucket,
+           CAST(count(*) AS BIGINT) AS n_docs,
+           CAST(min(sc) AS BIGINT) AS min_sc,
+           CAST(max(sc) AS BIGINT) AS max_sc
+    FROM r GROUP BY source, bucket
+    ORDER BY source, bucket
+    """,
+)
+def q_docs_quality_tercile_routing(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """CCNet-style quality routing: per source, split documents into
+    head / middle / tail by EXACT quality-score terciles — cutoffs are
+    the smallest scores whose cumulative count crosses n/3 and 2n/3
+    (integer cross-multiplication, no quantile-function semantics to
+    disagree on), mirroring CCNet's per-language perplexity terciles
+    with the type-token permille as the quality proxy. The head bucket
+    feeds training, the middle gets a second look, the tail is
+    dropped — this table is that routing decision, with per-bucket
+    score ranges as the audit trail.
+
+    Scale: scores are permille INTEGERS, so the per-source score
+    histogram has ≤ 1001 rows per source — the cumulative window runs
+    over that metadata-sized frame, never over documents; routing is
+    one broadcast-able cutoff join + one map."""
+    d = load_table(spark, sf_dir, "documents")
+    toks = TX.tokens(F.col("text"))
+    q = d.select(
+        "doc_id",
+        "source",
+        F.size(F.array_distinct(toks)).cast("long").alias("nd"),
+        F.greatest(F.size(toks), F.lit(1)).cast("long").alias("nt"),
+    ).select(
+        "doc_id", "source", F.expr("CAST((1000 * nd) div nt AS BIGINT)").alias("sc")
+    )
+    h = q.groupBy("source", "sc").agg(F.count(F.lit(1)).cast("long").alias("c"))
+    from pyspark.sql import Window as W
+
+    w_cum = (
+        W.partitionBy("source")
+        .orderBy("sc")
+        .rowsBetween(W.unboundedPreceding, W.currentRow)
+    )
+    w_all = W.partitionBy("source")
+    cum = h.select(
+        "source",
+        "sc",
+        F.sum("c").over(w_cum).cast("long").alias("cum"),
+        F.sum("c").over(w_all).cast("long").alias("n"),
+    )
+    cuts = cum.groupBy("source").agg(
+        F.min(F.when(3 * F.col("cum") >= F.col("n"), F.col("sc"))).alias("lo"),
+        F.min(F.when(3 * F.col("cum") >= 2 * F.col("n"), F.col("sc"))).alias(
+            "hi"
+        ),
+    )
+    r = q.join(F.broadcast(cuts), "source").select(
+        "source",
+        F.when(F.col("sc") <= F.col("lo"), "tail")
+        .when(F.col("sc") <= F.col("hi"), "middle")
+        .otherwise("head")
+        .alias("bucket"),
+        "sc",
+    )
+    return (
+        r.groupBy("source", "bucket")
+        .agg(
+            F.count(F.lit(1)).cast("long").alias("n_docs"),
+            F.min("sc").cast("long").alias("min_sc"),
+            F.max("sc").cast("long").alias("max_sc"),
+        )
+        .orderBy("source", "bucket")
+    )
+
+
+# ===========================================================================
+# Exact stratified train/val/test split
+# ===========================================================================
+@_register(
+    "docs_stratified_split_exact",
+    """
+    WITH r AS (
+      SELECT doc_id, source, lang,
+             row_number() OVER (PARTITION BY source, lang
+                                ORDER BY sha256(CAST(doc_id AS VARCHAR)), doc_id) AS rn,
+             count(*) OVER (PARTITION BY source, lang) AS n
+      FROM documents)
+    SELECT source, lang,
+           CASE WHEN rn <= (8 * n) // 10 THEN 'train'
+                WHEN rn <= (9 * n) // 10 THEN 'val'
+                ELSE 'test' END AS split,
+           CAST(count(*) AS BIGINT) AS n_docs,
+           CAST(sum(doc_id) AS BIGINT) AS id_checksum
+    FROM r
+    GROUP BY source, lang, split
+    """,
+)
+def q_docs_stratified_split_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Deterministic stratified 80/10/10 split with EXACT per-stratum
+    counts: within each (source, lang) stratum documents are ordered by
+    a content-free hash (sha256 of the id — reshuffling the input files
+    cannot move a document across splits), ranked, and cut at the
+    integer 80%/90% marks, so ``n_train = (8n) div 10`` exactly — no
+    Bernoulli drift, which at small strata is the difference between a
+    usable eval set and an empty one. Readout: per (stratum, split)
+    count plus the sum-of-ids checksum that pins the exact assignment.
+
+    Scale (hardened per VERDICT r7 item 6): the per-stratum rank is
+    NOT a ``row_number`` window on the stratum key — that serializes a
+    skewed mega-stratum (one giant ``lang``) into one task. Instead
+    the rank is derived from the two-phase range-partitioned
+    ``operators/layout.global_row_number`` over (stratum, hash, id):
+    the range exchange splits a mega-stratum across many partitions
+    (the hash varies within it), and the within-stratum rank is the
+    global number minus the stratum's minimum — recovered from one
+    map-combinable per-stratum agg (strata are source × lang —
+    metadata-sized, broadcast back). Same output as the window form
+    bit-for-bit; no single-task stage at any stratum skew."""
+    from ipeds_etl_spark.operators.layout import global_row_number
+
+    d = load_table(spark, sf_dir, "documents")
+    hashed = d.select(
+        "doc_id", "source", "lang",
+        F.sha2(F.col("doc_id").cast("string"), 256).alias("h"),
+    )
+    ranked = global_row_number(hashed, ["source", "lang", "h", "doc_id"], "grn")
+    stats = ranked.groupBy("source", "lang").agg(
+        F.min("grn").alias("g0"), F.count(F.lit(1)).alias("n")
+    )
+    r = ranked.join(F.broadcast(stats), ["source", "lang"]).withColumn(
+        "rn", F.col("grn") - F.col("g0") + 1
+    )
+    split = (
+        F.when(F.expr("rn <= (8 * n) div 10"), "train")
+        .when(F.expr("rn <= (9 * n) div 10"), "val")
+        .otherwise("test")
+    )
+    return (
+        r.select("source", "lang", "doc_id", split.alias("split"))
+        .groupBy("source", "lang", "split")
+        .agg(
+            F.count(F.lit(1)).cast("long").alias("n_docs"),
+            F.sum("doc_id").cast("long").alias("id_checksum"),
+        )
+    )
+
+
+# ===========================================================================
+# Deterministic epoch shuffle + uniformity audit
+# ===========================================================================
+@_register(
+    "docs_epoch_shuffle_blocks",
+    """
+    WITH a AS (
+      SELECT epoch, doc_id,
+             strpos('0123456789abcdef',
+                    substr(sha256(CAST(epoch AS VARCHAR) || ':' ||
+                                  CAST(doc_id AS VARCHAR)), 1, 1)) - 1 AS block
+      FROM documents, (SELECT unnest([0, 1]) AS epoch)),
+    g AS (
+      SELECT epoch, block,
+             CAST(count(*) AS BIGINT) AS n_docs,
+             CAST(sum(doc_id) AS BIGINT) AS id_checksum
+      FROM a GROUP BY epoch, block)
+    SELECT epoch, block, n_docs, id_checksum,
+           CAST((1000 * abs(16 * n_docs - sum(n_docs) OVER (PARTITION BY epoch)))
+                // sum(n_docs) OVER (PARTITION BY epoch) AS BIGINT) AS dev_x1000
+    FROM g
+    """,
+)
+def q_docs_epoch_shuffle_blocks(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Deterministic epoch shuffle for training-data ordering: each
+    (epoch, doc) gets a pseudo-random position from sha256(epoch:id),
+    bucketed here into 16 blocks by the first hex nibble. Training jobs
+    read blocks in order and get a shuffle that (a) differs per epoch,
+    (b) is reproducible bit-for-bit from the seed, and (c) needs no
+    global sort — exactly how large-scale loaders randomize 100 TB
+    without materializing a permutation. The readout pins the
+    assignment (per-block id checksum) and audits uniformity: dev_x1000
+    is the permille deviation of each block from the epoch mean — a
+    skewed block means the hash is being fed correlated ids.
+
+    Scale: map-only tag + one 32-group agg + an O(32)-row window.
+    The epoch fan-out is an explode of a 2-literal array (rows x
+    epochs, streamed, never buffered)."""
+    d = load_table(spark, sf_dir, "documents")
+    a = d.select(
+        "doc_id", F.explode(F.array(F.lit(0), F.lit(1))).alias("epoch")
+    ).select(
+        "epoch",
+        "doc_id",
+        (
+            F.instr(
+                F.lit("0123456789abcdef"),
+                F.substring(
+                    F.sha2(
+                        F.concat(
+                            F.col("epoch").cast("string"),
+                            F.lit(":"),
+                            F.col("doc_id").cast("string"),
+                        ),
+                        256,
+                    ),
+                    1,
+                    1,
+                ),
+            )
+            - 1
+        ).alias("block"),
+    )
+    g = a.groupBy("epoch", "block").agg(
+        F.count(F.lit(1)).cast("long").alias("n_docs"),
+        F.sum("doc_id").cast("long").alias("id_checksum"),
+    )
+    tot = Window.partitionBy("epoch")
+    return g.select(
+        "epoch",
+        "block",
+        "n_docs",
+        "id_checksum",
+        F.expr(
+            "CAST((1000 * abs(16 * n_docs - sum(n_docs) OVER (PARTITION BY epoch)))"
+            " div (sum(n_docs) OVER (PARTITION BY epoch)) AS BIGINT)"
+        ).alias("dev_x1000"),
+    )
+
+
+# ===========================================================================
+# Differentially-private histogram release (geometric mechanism)
+# ===========================================================================
+#: frozen CDF of the two-sided geometric ("discrete Laplace")
+#: distribution with α = e^(-ε), ε = 1, truncated at ±8 and scaled to
+#: 2^20 — the integer table IS the mechanism (Ghosh-Roughgarden-
+#: Sundararajan 2009: the geometric mechanism is the universally
+#: optimal ε-DP noise for counts). Freezing the table keeps both
+#: engines transcendental-free: sampling = one hash, one modulo, one
+#: CASE ladder. Noise is SEEDED per released cell (hash of the cell
+#: key), making the release deterministic and oracle-replayable —
+#: production would swap the seed for real entropy; everything else
+#: (sensitivity-1 count, post-processed clamp at 0) is the real shape.
+_DP_SCALE = 1 << 20
+_DP_CDF = [
+    (-8, 163), (-7, 605), (-6, 1806), (-5, 5071), (-4, 13948),
+    (-3, 38078), (-2, 103668), (-1, 281962), (0, 766614), (1, 944908),
+    (2, 1010498), (3, 1034628), (4, 1043505), (5, 1046770),
+    (6, 1047971), (7, 1048413), (8, 1048576),
+]
+
+
+def _dp_case_sql(u_expr: str) -> str:
+    whens = " ".join(
+        f"WHEN {u_expr} < {c} THEN {k}" for k, c in _DP_CDF[:-1]
+    )
+    return f"CAST(CASE {whens} ELSE {_DP_CDF[-1][0]} END AS BIGINT)"
+
+
+@_register(
+    "docs_dp_source_histogram",
+    f"""
+    WITH c AS (SELECT source, CAST(count(*) AS BIGINT) AS n_docs
+               FROM documents GROUP BY source),
+    u AS (SELECT source, n_docs,
+                 {parity_hash_sql("'dpnoise|' || source")} % {_DP_SCALE} AS u
+          FROM c),
+    n AS (SELECT source, n_docs, {_dp_case_sql('u')} AS noise FROM u)
+    SELECT source, n_docs, noise,
+           GREATEST(n_docs + noise, CAST(0 AS BIGINT)) AS released,
+           ABS(noise) AS abs_err
+    FROM n ORDER BY source
+    """,
+)
+def q_docs_dp_source_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """ε-DP per-source document histogram via the geometric mechanism
+    (Dwork et al. 2006 calibration; Ghosh et al. 2009 optimality):
+    true count + two-sided-geometric noise (ε = 1, frozen integer CDF
+    table, hash-seeded inverse-CDF sampling), clamped at 0 by
+    post-processing. The readout keeps the true count and the noise
+    beside the released value so tests can pin the mechanism — a real
+    release would publish ``released`` only.
+
+    Scale: one map-combinable count per source, then O(sources) rows
+    of pure codegen arithmetic (hash → modulo → 17-arm CASE). The
+    noise table is part of the PLAN, not the data — nothing joins,
+    nothing shuffles beyond the count."""
+    d = load_table(spark, sf_dir, "documents")
+    c = d.groupBy("source").agg(F.count(F.lit(1)).cast("long").alias("n_docs"))
+    u = c.withColumn(
+        "u",
+        parity_hash(F.concat(F.lit("dpnoise|"), F.col("source")))
+        % F.lit(_DP_SCALE),
+    )
+    noise = None
+    for k, cum in _DP_CDF[:-1]:
+        cond = F.col("u") < cum
+        noise = F.when(cond, k) if noise is None else noise.when(cond, k)
+    noise = noise.otherwise(_DP_CDF[-1][0]).cast("long")
+    return (
+        u.withColumn("noise", noise)
+        .select(
+            "source",
+            "n_docs",
+            "noise",
+            F.greatest(
+                F.col("n_docs") + F.col("noise"), F.lit(0).cast("long")
+            ).alias("released"),
+            F.abs("noise").alias("abs_err"),
+        )
+        .orderBy("source")
+    )

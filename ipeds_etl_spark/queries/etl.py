@@ -1,25 +1,11 @@
-"""Benchmark query registry: operator key → (Spark builder, DuckDB oracle SQL).
-
-Every implemented operator from SURVEY.md §2 (reference surface) and the
-training-data extension set is exposed here as a named query over the
-driver's star-schema testdata, together with an ANSI-SQL oracle that
-DuckDB runs on the same parquet files. The driver compares row counts,
-schemas, and order-insensitive value hashes — so every computed column
-is aliased identically on both sides, and float results are produced
-via exact decimal arithmetic (order-independent, engine-independent).
-
-Conventions:
-* Spark builders take ``(spark, sf_dir)`` and return a DataFrame.
-* Oracle strings assume views named after the tables are registered.
-* Aggregate sums over doubles go through ``decimal(18,6)`` (exact ⇒
-  identical across engines and across Spark partitionings; see
-  ``plans.views.exact_sum``). Integer sums are cast to BIGINT because
-  DuckDB widens SUM(INT) to HUGEINT while Spark stays at BIGINT.
+"""The reference ETL surface: every operator of SURVEY.md §2 as a named
+query over the star-schema testdata, with the DuckDB oracle that the
+correctness gate runs on the same parquet files. The flagship,
+``kpi_yearly``, is the yearly KPI rollup (reference
+``architecture.md:55``).
 """
 
 from __future__ import annotations
-
-from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -32,29 +18,9 @@ from ipeds_etl_spark.functions.cleaning import (
     stable_hash,
 )
 from ipeds_etl_spark.operators.merge import upsert_on_pk
-from ipeds_etl_spark.plans.views import (
-    dim_lookup,
-    enrich_join,
-    exact_sum,
-    kpi_agg,
-    latest_per_key_window,
-)
+from ipeds_etl_spark.plans.views import dim_lookup, enrich_join, exact_sum, latest_per_key_window
+from ipeds_etl_spark.queries import _register
 from ipeds_etl_spark.sources.tables import load_table
-
-QueryFn = Callable[[SparkSession, str], DataFrame]
-
-SPARK_QUERIES: dict[str, QueryFn] = {}
-ORACLE_SQL: dict[str, str] = {}
-
-
-def _register(name: str, oracle: str | None = None):
-    def deco(fn: QueryFn) -> QueryFn:
-        SPARK_QUERIES[name] = fn
-        if oracle is not None:
-            ORACLE_SQL[name] = oracle
-        return fn
-
-    return deco
 
 
 # ---------------------------------------------------------------------------
@@ -595,136 +561,3 @@ def q_upsert_on_hash(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lit("src").alias("origin"),
     )
     return upsert_on_hash(target, source, ["o_orderkey"], "source_hash")
-
-
-def _load_extensions() -> None:
-    """Importing ``queries_ext`` registers the training-data extension
-    queries (dedup / similarity / text analysis / event windows) into
-    the same registry. Lazy to avoid a circular import at module load."""
-    from ipeds_etl_spark import (  # noqa: F401
-        queries_analytics,
-        queries_ext,
-        queries_subq,
-        queries_wave5,
-        queries_wave6,
-        queries_wave7,
-        queries_wave8,
-        queries_wave9,
-        queries_wave10,
-        queries_wave11,
-        queries_wave12,
-        queries_wave13,
-        queries_wave14,
-        queries_wave15,
-    )
-
-
-# ---------------------------------------------------------------------------
-# Registry order IS verification priority: the driver's correctness gate
-# checks the FIRST 50 entries of ``queries()`` in dict order (confirmed
-# positionally in rounds 2 and 3). With >50 registered queries, the list
-# below pins which entries occupy the checked window. Rotation policy:
-# each round, entries that have never received a driver row come first,
-# followed by the most load-bearing veterans; veterans rotated out keep
-# their green rows from prior-round CORRECTNESS artifacts. Reorder ONLY
-# at round start (registry-freeze discipline), and regenerate the full
-# local mirror (tools/check_correctness.py) as the last pre-handoff step.
-# ---------------------------------------------------------------------------
-_GATE_PRIORITY: list[str] = [
-    # -- round 14 window (optimization round 2 of 2). VERDICT r13
-    # "Next round" item 1: every query semantically RESTRUCTURED in
-    # round 13 leads this window so it gets a driver oracle row
-    # (their equivalence so far rests on builder-side sweeps + pytest
-    # alone). Then this round's planned rewrite targets (VERDICT r13
-    # items 3-8), then the r13 mechanical-rewrite sites without rows,
-    # then load-bearing canaries. Reordered at round start only. --
-    # r13 semantic rewrites, never driver-verified (VERDICT item 1):
-    "supplier_late_only_orders",
-    "docs_winnowing_fingerprints",
-    "emb_kmeans_lloyd",
-    "emb_semdedup",
-    "emb_semantic_dedup",
-    "multimodal_audio_fingerprint",
-    "emb_pca_power_iteration",
-    "events_markov_stationary",
-    "orders_basket_rules",
-    "dedup_minhash_estimate",
-    # r14 planned rewrite targets (VERDICT items 3-8: PPJoin filters,
-    # BFS last level, threshold-sweep/edit-verify fusion, PQ codegen,
-    # scaling-gap fix, driver-bound sf0.1 tier):
-    "docs_jaccard_prefix_join",
-    "parts_copurchase_3hop_bfs",
-    "emb_dup_threshold_sweep",
-    "dedup_edit_verify",
-    "emb_pq_codebook_balance",
-    "emb_pq_topk",
-    "emb_pq_rerank_recall",
-    "parts_copurchase_pagerank",
-    "docs_quality_label_propagation",
-    "customer_decile_transition",
-    # r13 mechanical rewrites (union-size arithmetic, norm hoist,
-    # map-side shingle dedup, BPE fold, checkpoint hygiene) without a
-    # post-rewrite driver row:
-    "emb_kcenter_coreset",
-    "docs_ngram_novelty",
-    "docs_curation_funnel",
-    "docs_bpe_merges",
-    "docs_bpe_fertility",
-    "emb_sq8_distortion",
-    "emb_pq_distortion",
-    "orders_bloom_semi_join",
-    "emb_rp_lsh_near_dups",
-    "dedup_ngram_jaccard",
-    "docs_snm_pairs",
-    "docs_find_near_copies",
-    "docs_near_dup_diff",
-    "suppliers_similar_by_parts",
-    "docs_shared_span_profile",
-    "emb_ivfpq_residual_topk",
-    "emb_sq8_topk",
-    "docs_decontaminate",
-    # load-bearing veterans / canaries (VERDICT r5 item 1 policy):
-    "kpi_yearly",
-    "upsert_on_pk",
-    "upsert_on_hash",
-    "dedup_minhash_lsh",
-    "registry_mapper",
-    "lineitem_pricing_summary",
-    "enrich_join",
-    "emb_ivf_topk",
-    "events_sessionize",
-    "emb_near_dups",
-    "docs_hybrid_rrf",
-    "events_hll_sliding",
-    # -- below the 50-slot window: the r13 window occupants rotate out
-    # with driver-green rows recorded in CORRECTNESS_r13.json --
-    "emb_semantic_decontaminate",
-    "emb_ivfpq_filtered_sweep",
-    "docs_vocab8k_apply_fertility",
-    "emb_incremental_decontaminate",
-    "emb_ivfpq_topk",
-    "emb_ivfpq_recall",
-    "emb_ivfpq_residual_recall",
-    "emb_sq8_recall",
-    "emb_ivfpq_filtered_topk",
-    "emb_ivfpq_filtered_recall",
-    "docs_vocab_apply_fertility",
-    "docs_cdc_dedup_rewrite",
-    "events_value_qsketch",
-]
-
-
-def _ordered(mapping: dict) -> dict:
-    out = {k: mapping[k] for k in _GATE_PRIORITY if k in mapping}
-    out.update({k: v for k, v in mapping.items() if k not in out})
-    return out
-
-
-def queries() -> dict[str, QueryFn]:
-    _load_extensions()
-    return _ordered(SPARK_QUERIES)
-
-
-def oracle_sql() -> dict[str, str]:
-    _load_extensions()
-    return _ordered(ORACLE_SQL)

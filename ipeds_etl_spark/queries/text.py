@@ -1,0 +1,2004 @@
+"""Text and tokenization: token statistics, language id, BM25 and hybrid
+retrieval, TF-IDF, PII scrubbing, vocabularies, BPE training and
+frozen-vocabulary apply, n-gram and bigram language statistics, and
+sequence packing.
+"""
+
+from __future__ import annotations
+
+from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import functions as F
+
+from ipeds_etl_spark.functions import text as TX
+from ipeds_etl_spark.functions.hashing import parity_hash
+from ipeds_etl_spark.operators import bpe as BPE
+from ipeds_etl_spark.operators.indexes import VOCAB_MAX_LEN, VOCAB_N_GRAMS, frozen_vocab
+from ipeds_etl_spark.queries import _register
+from ipeds_etl_spark.queries.shared import SHINGLES, STOP_PAT, WS_TOKENS, docs_scan
+from ipeds_etl_spark.sources.tables import load_table
+
+
+_BPE_PAT = r"\p{L}+|\p{N}+|[^\p{L}\p{N}\s]"
+_PUNCT_PAT = r"[^\p{L}\p{N}\s]"
+
+
+# ===========================================================================
+# Text analysis
+# ===========================================================================
+@_register(
+    "text_token_stats",
+    f"""
+    WITH t AS (
+      SELECT source,
+             len({WS_TOKENS.format(x='text')}) AS ws,
+             len(regexp_extract_all(text, '{_BPE_PAT}')) AS bpe
+      FROM documents)
+    SELECT source,
+           CAST(count(*) AS BIGINT) AS n_docs,
+           CAST(SUM(ws) AS BIGINT) AS sum_ws_tokens,
+           CAST(SUM(bpe) AS BIGINT) AS sum_bpe_tokens,
+           CAST(MAX(ws) AS BIGINT) AS max_ws_tokens
+    FROM t GROUP BY source
+    """,
+)
+def q_text_token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Token counting (whitespace + BPE-ish regex) — per-source rollup.
+    One narrow scan + hash agg; regexes run JVM-side in codegen."""
+    d = load_table(spark, sf_dir, "documents")
+    text = F.col("text")
+    return (
+        d.select(
+            "source",
+            TX.token_count(text).cast("long").alias("ws"),
+            F.size(TX.bpe_ish_tokens(text)).cast("long").alias("bpe"),
+        )
+        .groupBy("source")
+        .agg(
+            F.count("*").alias("n_docs"),
+            F.sum("ws").alias("sum_ws_tokens"),
+            F.sum("bpe").alias("sum_bpe_tokens"),
+            F.max("ws").alias("max_ws_tokens"),
+        )
+    )
+
+
+@_register(
+    "text_quality",
+    f"""
+    WITH t AS (
+      SELECT doc_id, text, {WS_TOKENS.format(x='text')} AS w FROM documents)
+    SELECT doc_id,
+           CAST(len(text) AS BIGINT) AS n_chars_calc,
+           CAST(len(w) AS BIGINT) AS n_tokens,
+           CAST(len(regexp_extract_all(text, '{_PUNCT_PAT}')) AS BIGINT) AS n_punct,
+           CAST(len(regexp_extract_all(text, '{STOP_PAT}')) AS BIGINT) AS n_stopwords,
+           CAST(len(regexp_extract_all(text, '{_PUNCT_PAT}')) AS DOUBLE) / len(text) AS punct_ratio,
+           CAST(len(regexp_extract_all(text, '{STOP_PAT}')) AS DOUBLE) / len(w) AS stopword_ratio,
+           CAST(list_sum(list_transform(w, s -> len(s))) AS DOUBLE) / len(w) AS mean_token_len
+    FROM t
+    """,
+)
+def q_text_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Quality scoring signals per document — pure codegen expressions.
+    Map-only compute; the only exchange is ``docs_scan``'s conditional
+    scan-widening round-robin (degenerate single-row-group scans only —
+    a no-op on a real cluster where the scan is already wide)."""
+    d = docs_scan(spark, sf_dir).select(
+        "doc_id", "text", TX.tokens(F.col("text")).alias("toks")
+    )
+    text = F.col("text")
+    m = TX.quality_metrics(text, toks=F.col("toks"))
+    return d.select(
+        "doc_id",
+        m["n_chars_m"].alias("n_chars_calc"),
+        m["n_tokens"].alias("n_tokens"),
+        m["n_punct"].alias("n_punct"),
+        m["n_stopwords"].alias("n_stopwords"),
+        (m["n_punct"].cast("double") / m["n_chars_m"]).alias("punct_ratio"),
+        (m["n_stopwords"].cast("double") / m["n_tokens"]).alias("stopword_ratio"),
+        m["mean_token_len"].alias("mean_token_len"),
+    )
+
+
+@_register(
+    "text_lang_id",
+    f"""
+    WITH t AS (SELECT lang, text,
+                      {TX.lang_word_tokens_sql('text')} AS __lang_toks
+               FROM documents),
+    s AS (SELECT lang, {TX.lang_id_sql('text')} FROM t)
+    SELECT lang, pred_lang, CAST(count(*) AS BIGINT) AS n_docs
+    FROM s GROUP BY lang, pred_lang
+    """,
+)
+def q_text_lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Language-ID confusion counts: stopword-profile argmax vs the
+    labeled ``lang`` column. Tokens are projected ONCE (optimizer
+    barrier) so the per-language membership lambdas share one scan
+    instead of re-tokenizing per language."""
+    d = docs_scan(spark, sf_dir)
+    toked = d.select(
+        "lang", "text", TX.lang_word_tokens(F.col("text")).alias("__lang_toks")
+    )
+    score_cols = TX.lang_scores(F.col("text"), F.col("__lang_toks"))
+    scored = toked.select(
+        "lang", *[c.alias(f"__s_{lg}") for lg, c in score_cols.items()]
+    )
+    pred = TX.lang_id_from_scores(
+        {lg: F.col(f"__s_{lg}") for lg in score_cols}
+    )
+    return (
+        scored.select("lang", pred.alias("pred_lang"))
+        .groupBy("lang", "pred_lang")
+        .agg(F.count("*").alias("n_docs"))
+    )
+
+
+@_register(
+    "docs_ngram_heavy_hitters",
+    f"""
+    WITH t AS (SELECT doc_id, {WS_TOKENS.format(x='text')} AS w FROM documents),
+         g AS (SELECT doc_id, unnest({SHINGLES.format(w='w')}) AS gram FROM t),
+         pd AS (SELECT gram, doc_id, count(*) AS tf FROM g GROUP BY 1, 2)
+    SELECT gram,
+           CAST(sum(tf) AS BIGINT) AS total_count,
+           CAST(count(*) AS BIGINT) AS doc_freq
+    FROM pd GROUP BY gram
+    ORDER BY total_count DESC, gram
+    LIMIT 20
+    """,
+)
+def q_docs_ngram_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Corpus-wide frequent n-grams (top-20 word trigrams with total
+    occurrences and document frequency) — the boilerplate-detection /
+    stop-gram mining pass of a training-data pipeline. Two map-side
+    combinable aggregations ((gram, doc) then gram) and a distributed
+    top-k (TakeOrderedAndProject — per-partition heaps, never a global
+    sort) keep the 100 TB plan at two bounded shuffles."""
+    d = docs_scan(spark, sf_dir).select(
+        "doc_id", TX.word_shingles(F.col("text")).alias("grams")
+    )
+    g = d.select("doc_id", F.explode("grams").alias("gram"))
+    per_doc = g.groupBy("gram", "doc_id").agg(F.count(F.lit(1)).alias("tf"))
+    return (
+        per_doc.groupBy("gram")
+        .agg(
+            F.sum("tf").alias("total_count"),
+            F.count(F.lit(1)).alias("doc_freq"),
+        )
+        .orderBy(F.col("total_count").desc(), "gram")
+        .limit(20)
+    )
+
+
+#: BM25 constants (Robertson-Sparck Jones family); idf uses the
+#: transcendental-free odds form (N - df + 0.5) / (df + 0.5) so both
+#: engines produce bit-identical doubles (ln() is libm-dependent).
+_BM25_K1 = 1.2
+_BM25_TERMS = ("spark", "merge", "vector")
+
+
+def _bm25_oracle() -> str:
+    tf_cols = ", ".join(
+        f"CAST(len(list_filter(w, x -> x = '{t}')) AS BIGINT) AS tf_{t}"
+        for t in _BM25_TERMS
+    )
+    # every literal CAST to DOUBLE: a bare DuckDB numeric literal is a
+    # DECIMAL, and decimal-exact multiply-then-round differs from
+    # Spark's double-by-double rounding in the last ulp.
+    contrib = " + ".join(
+        f"(((CAST(n_docs AS DOUBLE) - df_{t}) + CAST(0.5 AS DOUBLE))"
+        f" / (df_{t} + CAST(0.5 AS DOUBLE)))"
+        f" * ((tf_{t} * CAST(2.2 AS DOUBLE)) / (tf_{t} + CAST({_BM25_K1} AS DOUBLE)"
+        f" * (CAST(0.25 AS DOUBLE) + CAST(0.75 AS DOUBLE) * (dl / avgdl))))"
+        for t in _BM25_TERMS
+    )
+    df_cols = ", ".join(
+        f"CAST(sum(CASE WHEN tf_{t} > 0 THEN 1 ELSE 0 END) AS BIGINT) AS df_{t}"
+        for t in _BM25_TERMS
+    )
+    return f"""
+    WITH t AS (SELECT doc_id, {WS_TOKENS.format(x='text')} AS w FROM documents),
+         d AS (SELECT doc_id, CAST(len(w) AS BIGINT) AS dl, {tf_cols} FROM t),
+         s AS (SELECT CAST(count(*) AS BIGINT) AS n_docs,
+                      CAST(sum(dl) AS DOUBLE) / count(*) AS avgdl,
+                      {df_cols}
+               FROM d)
+    SELECT doc_id, dl, {", ".join(f"tf_{t}" for t in _BM25_TERMS)},
+           {contrib} AS score
+    FROM d CROSS JOIN s
+    WHERE {" + ".join(f"tf_{t}" for t in _BM25_TERMS)} > 0
+    ORDER BY score DESC, doc_id
+    LIMIT 15
+    """
+
+
+@_register("docs_bm25_search", _bm25_oracle())
+def q_docs_bm25_search(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """BM25 ranked retrieval for a fixed query, computed with zero
+    joins on the fact side: per-term tf is a map-only array filter per
+    document, the corpus stats (N, avgdl, per-term df) are ONE global
+    partial-aggregated row broadcast back, and the final ranking is a
+    distributed top-k. The idf uses the odds form (no ln) so DuckDB
+    reproduces every double bit-for-bit; term contributions are summed
+    in explicit written order (float addition is not associative)."""
+    d = load_table(spark, sf_dir, "documents").select(
+        "doc_id", TX.tokens(F.col("text")).alias("w")
+    )
+    per_doc = d.select(
+        "doc_id",
+        F.size("w").cast("long").alias("dl"),
+        *[
+            F.size(F.filter("w", lambda x: x == F.lit(t)))
+            .cast("long")
+            .alias(f"tf_{t}")
+            for t in _BM25_TERMS
+        ],
+    )
+    stats = per_doc.agg(
+        F.count(F.lit(1)).alias("n_docs"),
+        (F.sum("dl").cast("double") / F.count(F.lit(1))).alias("avgdl"),
+        *[
+            F.sum(F.when(F.col(f"tf_{t}") > 0, 1).otherwise(0)).alias(f"df_{t}")
+            for t in _BM25_TERMS
+        ],
+    )
+    joined = per_doc.crossJoin(F.broadcast(stats))
+    norm = F.lit(0.25) + F.lit(0.75) * (F.col("dl") / F.col("avgdl"))
+    score = None
+    for t in _BM25_TERMS:
+        tf = F.col(f"tf_{t}")
+        idf = ((F.col("n_docs").cast("double") - F.col(f"df_{t}")) + F.lit(0.5)) / (
+            F.col(f"df_{t}") + F.lit(0.5)
+        )
+        c = idf * ((tf * F.lit(2.2)) / (tf + F.lit(_BM25_K1) * norm))
+        score = c if score is None else score + c
+    any_tf = None
+    for t in _BM25_TERMS:
+        any_tf = (
+            F.col(f"tf_{t}")
+            if any_tf is None
+            else any_tf + F.col(f"tf_{t}")
+        )
+    return (
+        joined.select(
+            "doc_id",
+            "dl",
+            *[f"tf_{t}" for t in _BM25_TERMS],
+            score.alias("score"),
+        )
+        .filter(any_tf > 0)
+        .orderBy(F.col("score").desc(), "doc_id")
+        .limit(15)
+    )
+
+
+_PII_BLOB_SQL = (
+    "concat('reach ', c_name, ' at user', CAST(c_custkey AS VARCHAR), "
+    "'@example.com or ', lpad(CAST(c_custkey % 1000 AS VARCHAR), 3, '0'), "
+    "'-555-', lpad(CAST(c_custkey % 10000 AS VARCHAR), 4, '0'), "
+    "' from host 10.', CAST(c_custkey % 256 AS VARCHAR), '.0.', "
+    "CAST(c_custkey % 100 AS VARCHAR))"
+)
+
+
+def _pii_oracle() -> str:
+    from ipeds_etl_spark.functions.text import PII_PATTERNS, pii_scrub_sql
+
+    counts = ", ".join(
+        f"CAST(len(regexp_extract_all(blob, '{pat}')) AS BIGINT) AS n_{name}"
+        for name, (pat, _) in PII_PATTERNS.items()
+    )
+    return f"""
+    WITH b AS (SELECT c_custkey, {_PII_BLOB_SQL} AS blob FROM customer)
+    SELECT c_custkey, {counts}, {pii_scrub_sql('blob')} AS scrubbed
+    FROM b
+    """
+
+
+@_register("customers_pii_scrub", _pii_oracle())
+def q_customers_pii_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """PII detection + redaction — the privacy-scrub pass every
+    training corpus needs before release. The synthetic benchmark data
+    carries no real PII, so the query first derives a deterministic
+    contact blob from customer fields (same construction on both
+    engines), then counts and masks emails / IPv4s / phone numbers with
+    engine-portable regexes (valid in Java regex AND RE2 — no
+    lookaround, no backreferences). Pure expression chain: a map-only
+    100 TB pass, value-hash-checked against DuckDB."""
+    from ipeds_etl_spark.functions.text import pii_counts, pii_scrub
+
+    c = load_table(spark, sf_dir, "customer")
+    key = F.col("c_custkey")
+    blob = F.concat(
+        F.lit("reach "),
+        F.col("c_name"),
+        F.lit(" at user"),
+        key.cast("string"),
+        F.lit("@example.com or "),
+        F.lpad((key % 1000).cast("string"), 3, "0"),
+        F.lit("-555-"),
+        F.lpad((key % 10000).cast("string"), 4, "0"),
+        F.lit(" from host 10."),
+        (key % 256).cast("string"),
+        F.lit(".0."),
+        (key % 100).cast("string"),
+    )
+    b = c.select("c_custkey", blob.alias("blob"))
+    cnts = pii_counts(F.col("blob"))
+    return b.select(
+        "c_custkey",
+        *[v.cast("long").alias(f"n_{k}") for k, v in cnts.items()],
+        pii_scrub(F.col("blob")).alias("scrubbed"),
+    )
+
+
+@_register(
+    "docs_chunk_windows",
+    f"""
+    WITH toks AS (
+      SELECT doc_id, {WS_TOKENS.format(x='text')} AS w FROM documents),
+    starts AS (
+      SELECT doc_id, w, unnest(range(0, greatest(len(w), 1), 40)) AS start
+      FROM toks WHERE len(w) > 0)
+    SELECT doc_id,
+           CAST(start // 40 AS INT) AS chunk_id,
+           CAST(start AS INT) AS start_token,
+           CAST(len(w[start+1:start+50]) AS INT) AS n_tokens,
+           sha256(array_to_string(w[start+1:start+50], ' ')) AS chunk_sha
+    FROM starts
+    """,
+)
+def q_docs_chunk_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Training-corpus chunking: overlapping token windows (size 50,
+    stride 40) per document — the canonical context-window prep op.
+    Pure Column plumbing: sequence → explode → slice, no UDTF/UDF, so
+    the whole row-expanding stage stays in JVM codegen (at 100 TB this
+    is a map-only pass whose output is ~n_tokens/stride rows per doc).
+    Chunk content is pinned by sha256 — the oracle proves the exact
+    window boundaries, not just counts."""
+    W, S = 50, 40
+    d = load_table(spark, sf_dir, "documents").select(
+        "doc_id", TX.tokens(F.col("text")).alias("w")
+    )
+    d = d.filter(F.size("w") > 0)
+    starts = d.select(
+        "doc_id",
+        "w",
+        F.explode(
+            F.sequence(F.lit(0), F.greatest(F.size("w") - 1, F.lit(0)), F.lit(S))
+        ).alias("start"),
+    )
+    chunk = F.slice(F.col("w"), F.col("start") + 1, W)
+    return starts.select(
+        "doc_id",
+        (F.col("start") / S).cast("int").alias("chunk_id"),
+        F.col("start").cast("int").alias("start_token"),
+        F.size(chunk).cast("int").alias("n_tokens"),
+        F.sha2(F.array_join(chunk, " "), 256).alias("chunk_sha"),
+    )
+
+
+@_register(
+    "docs_pack_sequences",
+    f"""
+    WITH toks AS (
+      SELECT doc_id, source, len({WS_TOKENS.format(x='text')}) AS n FROM documents),
+    packed AS (
+      SELECT source, doc_id, n,
+             SUM(n) OVER (PARTITION BY source ORDER BY doc_id
+                          ROWS UNBOUNDED PRECEDING) AS cum
+      FROM toks)
+    SELECT source,
+           CAST((cum - n) // 2048 AS INT) AS bin_id,
+           CAST(count(*) AS BIGINT) AS n_docs,
+           CAST(SUM(n) AS BIGINT) AS n_tokens,
+           CAST(SUM(n) AS DOUBLE) / 2048 AS fill_ratio
+    FROM packed
+    GROUP BY source, (cum - n) // 2048
+    """,
+)
+def q_docs_pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Sequence packing: greedy sequential packing of documents into
+    2048-token context windows per source (bin = where the doc's
+    running total starts) — the standard pre-training batching op.
+    One window + one agg, both on the source key: a single shuffle at
+    any corpus size. Deterministic order (doc_id) ⇒ deterministic
+    packing ⇒ value-checked bins."""
+    budget = 2048
+    d = load_table(spark, sf_dir, "documents").select(
+        "doc_id", "source", F.size(TX.tokens(F.col("text"))).cast("long").alias("n")
+    )
+    w = (
+        Window.partitionBy("source")
+        .orderBy("doc_id")
+        .rowsBetween(Window.unboundedPreceding, 0)
+    )
+    packed = d.withColumn("cum", F.sum("n").over(w))
+    binned = packed.withColumn(
+        "bin_id", F.floor((F.col("cum") - F.col("n")) / budget).cast("int")
+    )
+    return binned.groupBy("source", "bin_id").agg(
+        F.count(F.lit(1)).alias("n_docs"),
+        F.sum("n").alias("n_tokens"),
+        (F.sum("n").cast("double") / budget).alias("fill_ratio"),
+    )
+
+
+@_register(
+    "docs_vocabulary",
+    f"""
+    WITH toks AS (SELECT doc_id, {WS_TOKENS.format(x='text')} AS w FROM documents),
+    all_terms AS (SELECT doc_id, unnest(w) AS term FROM toks)
+    SELECT term,
+           CAST(count(*) AS BIGINT) AS total_tf,
+           CAST(count(DISTINCT doc_id) AS BIGINT) AS doc_freq
+    FROM all_terms GROUP BY term HAVING count(DISTINCT doc_id) >= 25
+    """,
+)
+def q_docs_vocabulary(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Vocabulary construction: corpus-wide term frequency + document
+    frequency (the exact counts behind TF-IDF — idf = log(N/df) is
+    left to the consumer so every emitted number is an exact integer,
+    engine-independent). Explode + one hash agg: term counts combine
+    map-side, shuffle is O(distinct terms)."""
+    d = load_table(spark, sf_dir, "documents")
+    terms = d.select("doc_id", F.explode(TX.tokens(F.col("text"))).alias("term"))
+    return (
+        terms.groupBy("term")
+        .agg(
+            F.count(F.lit(1)).alias("total_tf"),
+            F.countDistinct("doc_id").alias("doc_freq"),
+        )
+        .filter(F.col("doc_freq") >= 25)
+    )
+
+
+@_register(
+    "docs_tfidf_topterms",
+    f"""
+    WITH toks AS (SELECT doc_id, {WS_TOKENS.format(x='text')} AS w FROM documents),
+    t AS (SELECT doc_id, unnest(w) AS term FROM toks),
+    tf AS (SELECT doc_id, term, count(*) AS tf FROM t GROUP BY doc_id, term),
+    dfreq AS (SELECT term, count(*) AS doc_freq FROM tf GROUP BY term),
+    n AS (SELECT count(*) AS n_docs FROM documents),
+    scored AS (
+      SELECT tf.doc_id, tf.term,
+             CAST(tf.tf AS BIGINT) AS tf,
+             CAST(dfreq.doc_freq AS BIGINT) AS doc_freq,
+             CAST(tf.tf * n.n_docs AS DOUBLE) / dfreq.doc_freq AS tfidf
+      FROM tf JOIN dfreq USING (term) CROSS JOIN n),
+    ranked AS (
+      SELECT *, row_number() OVER (
+        PARTITION BY doc_id ORDER BY tfidf DESC, term ASC) AS rnk
+      FROM scored)
+    SELECT doc_id, term, tf, doc_freq, tfidf, CAST(rnk AS INTEGER) AS rnk
+    FROM ranked WHERE rnk <= 3
+    """,
+)
+def q_docs_tfidf_topterms(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Top-3 TF-IDF terms per document. The idf factor is the exact
+    rational N/df (one integer multiply, one double division — engine
+    bit-identical) rather than log(N/df): the RANKING it induces per
+    document is identical (log is monotone), and it keeps the oracle
+    float-exact. Shape at scale: explode → (doc,term) hash agg (map-side
+    combinable) → df agg on term → shuffle join tf⋈df on term → per-doc
+    window top-k. The corpus-size scalar joins in as a broadcast 1-row
+    aggregate, never a driver collect."""
+    d = load_table(spark, sf_dir, "documents")
+    terms = d.select("doc_id", F.explode(TX.tokens(F.col("text"))).alias("term"))
+    tf = terms.groupBy("doc_id", "term").agg(F.count(F.lit(1)).alias("tf"))
+    dfreq = tf.groupBy("term").agg(F.count(F.lit(1)).alias("doc_freq"))
+    n_docs = d.agg(F.count(F.lit(1)).alias("n_docs"))
+    scored = (
+        tf.join(dfreq, "term")
+        .crossJoin(F.broadcast(n_docs))
+        .select(
+            "doc_id",
+            "term",
+            "tf",
+            "doc_freq",
+            ((F.col("tf") * F.col("n_docs")).cast("double") / F.col("doc_freq")).alias(
+                "tfidf"
+            ),
+        )
+    )
+    w = Window.partitionBy("doc_id").orderBy(F.col("tfidf").desc(), F.col("term").asc())
+    return (
+        scored.withColumn("rnk", F.row_number().over(w))
+        .filter(F.col("rnk") <= 3)
+        .select("doc_id", "term", "tf", "doc_freq", "tfidf", "rnk")
+    )
+
+
+@_register(
+    "docs_token_diversity",
+    f"""
+    WITH t AS (
+      SELECT doc_id, {WS_TOKENS.format(x='text')} AS w FROM documents),
+    c AS (
+      SELECT doc_id, tok, CAST(count(*) AS BIGINT) AS n
+      FROM (SELECT doc_id, unnest(w) AS tok FROM t) GROUP BY doc_id, tok)
+    SELECT doc_id,
+           CAST(sum(n) AS BIGINT) AS n_tokens,
+           CAST(count(*) AS BIGINT) AS n_distinct,
+           CAST(count(*) AS DOUBLE) / sum(n) AS type_token_ratio,
+           1.0 - CAST(sum(n * n) AS DOUBLE) / (sum(n) * sum(n)) AS simpson_index
+    FROM c GROUP BY doc_id
+    """,
+)
+def q_docs_token_diversity(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Lexical diversity per document: type-token ratio and Simpson
+    diversity (1 − Σn²/N²) — the repetition-complement of the entropy
+    family, chosen over Shannon entropy deliberately: it needs no
+    transcendental function, so every statistic is integer sums and
+    ONE IEEE division, bit-reproducible across engines (libm ``log``
+    implementations differ in final ulps and would break value-hash
+    parity). One (doc, token) count then a per-doc agg — both
+    map-side combinable, partitioned by doc throughout."""
+    d = load_table(spark, sf_dir, "documents").select(
+        "doc_id", F.explode(TX.tokens(F.col("text"))).alias("tok")
+    )
+    c = d.groupBy("doc_id", "tok").agg(F.count(F.lit(1)).alias("n"))
+    n_tok = F.sum("n")
+    n_dis = F.count(F.lit(1))
+    return c.groupBy("doc_id").agg(
+        n_tok.alias("n_tokens"),
+        n_dis.alias("n_distinct"),
+        (n_dis.cast("double") / n_tok).alias("type_token_ratio"),
+        (
+            F.lit(1.0)
+            - F.sum(F.col("n") * F.col("n")).cast("double") / (n_tok * n_tok)
+        ).alias("simpson_index"),
+    )
+
+
+# ===========================================================================
+# BPE vocabulary induction: k unrolled merge rounds, oracle-replayed
+# ===========================================================================
+def _register_bpe():
+    K = 6
+    SEP = "chr(31)"
+    rewrite = (
+        f"string_split(list_reduce(s, (acc, x) -> "
+        f"CASE WHEN x = mr AND (acc = ml OR ends_with(acc, {SEP} || ml)) "
+        f"THEN acc || x ELSE acc || {SEP} || x END), {SEP})"
+    )
+    parts = [
+        """
+    w0 AS (
+      SELECT w, CAST(count(*) AS BIGINT) AS n
+      FROM (SELECT unnest(list_filter(regexp_split_to_array(lower(text), '\\s+'),
+                                      t -> regexp_matches(t, '^[a-z]+$'))) AS w
+            FROM documents)
+      GROUP BY w),
+    s0 AS (SELECT n, regexp_extract_all(w, '.') AS s FROM w0)
+    """
+    ]
+    for r in range(K):
+        parts.append(
+            f"""
+    p{r} AS (
+      SELECT pr[1] AS l, pr[2] AS r, CAST(SUM(n) AS BIGINT) AS cnt
+      FROM (SELECT n, unnest(list_zip(s[1:len(s)-1], s[2:len(s)])) AS pr
+            FROM s{r} WHERE len(s) > 1)
+      GROUP BY 1, 2),
+    m{r} AS (SELECT l AS ml, r AS mr, cnt FROM p{r} ORDER BY cnt DESC, l, r LIMIT 1),
+    s{r + 1} AS (SELECT n, {rewrite} AS s FROM s{r}, m{r})
+    """
+        )
+    sel = " UNION ALL ".join(
+        f"SELECT {r + 1} AS merge_rank, ml AS left_sym, mr AS right_sym, "
+        f"ml || mr AS merged, cnt AS pair_count FROM m{r}"
+        for r in range(K)
+    )
+    oracle = "WITH " + ",".join(parts) + sel + " ORDER BY merge_rank"
+
+    @_register("docs_bpe_merges", oracle)
+    def q_docs_bpe_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
+        """Tokenizer training over the corpus: the first 6 BPE merge
+        rules (Sennrich et al. 2016), learned with k fully-unrolled
+        declarative rounds — word-frequency table once (the only
+        corpus-wide pass; every round after is vocabulary-sized),
+        weighted bigram count + deterministic top-1 (count DESC, then
+        lexicographic — a total order) + one left-to-right merge pass
+        per round. The DuckDB oracle REPLAYS TRAINING end-to-end (same
+        string-fold rewrite — the one spelling both engines run
+        identically) and the driver value-hashes the learned merges.
+        See ``operators/bpe.py`` for the scale argument."""
+        from ipeds_etl_spark.operators.bpe import learn_bpe_merges
+
+        d = load_table(spark, sf_dir, "documents")
+        return learn_bpe_merges(d, "text", n_merges=6)
+
+
+_register_bpe()
+
+
+def _register_bpe_fertility():
+    K = 6
+    SEP = "chr(31)"
+    rewrite = (
+        f"string_split(list_reduce(s, (acc, x) -> "
+        f"CASE WHEN x = mr AND (acc = ml OR ends_with(acc, {SEP} || ml)) "
+        f"THEN acc || x ELSE acc || {SEP} || x END), {SEP})"
+    )
+    parts = [
+        """
+    w0 AS (
+      SELECT w, CAST(count(*) AS BIGINT) AS n
+      FROM (SELECT unnest(list_filter(regexp_split_to_array(lower(text), '\\s+'),
+                                      t -> regexp_matches(t, '^[a-z]+$'))) AS w
+            FROM documents)
+      GROUP BY w),
+    s0 AS (SELECT w, n, regexp_extract_all(w, '.') AS s FROM w0)
+    """
+    ]
+    for r in range(K):
+        parts.append(
+            f"""
+    p{r} AS (
+      SELECT pr[1] AS l, pr[2] AS r, CAST(SUM(n) AS BIGINT) AS cnt
+      FROM (SELECT n, unnest(list_zip(s[1:len(s)-1], s[2:len(s)])) AS pr
+            FROM s{r} WHERE len(s) > 1)
+      GROUP BY 1, 2),
+    m{r} AS (SELECT l AS ml, r AS mr FROM p{r} ORDER BY cnt DESC, l, r LIMIT 1),
+    s{r + 1} AS (SELECT w, n, {rewrite} AS s FROM s{r}, m{r})
+    """
+        )
+    oracle = (
+        "WITH "
+        + ",".join(parts)
+        + f""",
+    vocab AS (SELECT w, CAST(len(s) AS BIGINT) AS word_tokens FROM s{K}),
+    doc_words AS (
+      SELECT doc_id, unnest(list_filter(regexp_split_to_array(lower(text), '\\s+'),
+                                        t -> regexp_matches(t, '^[a-z]+$'))) AS w
+      FROM documents)
+    SELECT doc_id,
+           CAST(count(*) AS BIGINT) AS n_words,
+           CAST(SUM(word_tokens) AS BIGINT) AS n_subword_tokens,
+           CAST(SUM(word_tokens) AS DOUBLE) / count(*) AS fertility
+    FROM doc_words JOIN vocab USING (w)
+    GROUP BY doc_id
+    """
+    )
+
+    @_register("docs_bpe_fertility", oracle)
+    def q_docs_bpe_fertility(spark: SparkSession, sf_dir: str) -> DataFrame:
+        """The APPLY side of BPE training: per-document subword token
+        counts and fertility (tokens/word) under the 6-merge tokenizer
+        learned from this corpus — the standard tokenizer-quality
+        metric (fertility ≈ 1 means the vocabulary fits the corpus).
+        Tokenization is a pure word function, so the corpus joins the
+        SEGMENTED VOCABULARY by word — the 100 TB corpus is touched
+        once for word extraction and once for the join; the k merge
+        rounds run on the vocabulary-sized table only. The oracle
+        replays training AND application end-to-end."""
+        from ipeds_etl_spark.operators.bpe import bpe_word_segmentation
+
+        d = load_table(spark, sf_dir, "documents")
+        vocab = bpe_word_segmentation(d, "text", n_merges=6).select(
+            "w", F.size("s").cast("long").alias("word_tokens")
+        )
+        doc_words = d.select(
+            "doc_id", F.explode(F.split(F.lower("text"), r"\s+")).alias("w")
+        ).filter(F.col("w").rlike("^[a-z]+$"))
+        return (
+            doc_words.join(vocab, "w")
+            .groupBy("doc_id")
+            .agg(
+                F.count(F.lit(1)).alias("n_words"),
+                F.sum("word_tokens").alias("n_subword_tokens"),
+                (
+                    F.sum("word_tokens").cast("double") / F.count(F.lit(1))
+                ).alias("fertility"),
+            )
+        )
+
+
+_register_bpe_fertility()
+
+
+# ===========================================================================
+# Text normalization (canonical form for exact dedup)
+# ===========================================================================
+_ACCENTS_FROM = "àáâãäåèéêëìíîïòóôõöùúûüçñÀÁÂÃÄÅÈÉÊËÌÍÎÏÒÓÔÕÖÙÚÛÜÇÑ"
+_ACCENTS_TO = "aaaaaaeeeeiiiiooooouuuucnAAAAAAEEEEIIIIOOOOOUUUUCN"
+
+
+@_register(
+    "docs_normalize_text",
+    f"""
+    WITH n AS (
+      SELECT doc_id,
+             trim(regexp_replace(
+               regexp_replace(
+                 translate(lower(text), '{_ACCENTS_FROM}', '{_ACCENTS_TO}'),
+                 '[^\\p{{L}}\\p{{N}}\\s]+', ' ', 'g'),
+               '\\s+', ' ', 'g')) AS norm,
+             text
+      FROM documents)
+    SELECT doc_id,
+           sha256(norm) AS norm_sha,
+           CAST(len(norm) AS BIGINT) AS norm_len,
+           norm <> text AS changed
+    FROM n
+    """,
+)
+def q_docs_normalize_text(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Canonical text normalization for dedup/canonicalization:
+    lowercase → fixed-table accent fold (``translate`` with an
+    identical table on both engines — no reliance on engine-specific
+    Unicode folding) → punctuation→space → whitespace collapse →
+    trim → sha256 of the canonical form. Pure regexp/translate
+    expression chain: a map-only 100 TB pass that fuses into any
+    ingest scan; pair with ``exact_dedup`` on ``norm_sha`` for
+    normalization-insensitive exact dedup."""
+    d = load_table(spark, sf_dir, "documents")
+    norm = F.trim(
+        F.regexp_replace(
+            F.regexp_replace(
+                F.translate(F.lower(F.col("text")), _ACCENTS_FROM, _ACCENTS_TO),
+                r"[^\p{L}\p{N}\s]+",
+                " ",
+            ),
+            r"\s+",
+            " ",
+        )
+    )
+    return d.select(
+        "doc_id",
+        F.sha2(norm, 256).alias("norm_sha"),
+        F.length(norm).cast("long").alias("norm_len"),
+        (norm != F.col("text")).alias("changed"),
+    )
+
+
+# ===========================================================================
+# Unigram surprisal in integer bits (libm-free LM quality proxy)
+# ===========================================================================
+@_register(
+    "docs_unigram_surprisal",
+    f"""
+    WITH tok AS (
+      SELECT source, unnest({WS_TOKENS.format(x='text')}) AS t FROM documents),
+    cnt AS (SELECT t, CAST(count(*) AS BIGINT) AS c FROM tok GROUP BY t),
+    tot AS (SELECT CAST(SUM(c) AS BIGINT) AS total,
+                   CAST(length(to_base(CAST(SUM(c) AS BIGINT), 2)) AS BIGINT)
+                     AS total_bits FROM cnt)
+    SELECT tok.source,
+           CAST(count(*) AS BIGINT) AS n_tokens,
+           CAST(SUM(total_bits - length(to_base(cnt.c, 2))) AS BIGINT) AS sum_bits,
+           CAST(SUM(total_bits - length(to_base(cnt.c, 2))) AS DOUBLE) / count(*)
+             AS avg_surprisal_bits
+    FROM tok JOIN cnt ON tok.t = cnt.t CROSS JOIN tot
+    GROUP BY tok.source
+    ORDER BY tok.source
+    """,
+)
+def q_docs_unigram_surprisal(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Unigram-LM quality proxy WITHOUT libm: per-token surprisal in
+    whole bits = bitlength(total_tokens) − bitlength(count(token)) —
+    the integer floor-log2 approximation of −log2 p(token), computed
+    via binary-string length (`conv(x,10,2)` ↔ `to_base(x,2)`), which
+    is pure integer arithmetic and therefore bit-identical across
+    engines (the house ban on ln/log2 — libm is not cross-engine
+    deterministic — applied to LM scoring, same trick as the
+    `docs_vocabulary` df-rank spelling). Per-source mean bits/token is
+    the corpus-quality readout: sources full of rare junk tokens score
+    high, repetitive boilerplate scores low — the CCNet perplexity
+    filter's shape with a verifiable arithmetic core.
+
+    Scale: one token-count exchange (map-combinable), one join of the
+    token stream against the O(vocab) count table on the same token
+    key, one O(sources) rollup + a broadcast 1-row total. When vocab
+    fits in memory the join auto-broadcasts; at web scale it rides
+    the token-hash exchange already paid by the count."""
+    d = load_table(spark, sf_dir, "documents").select(
+        "source", F.explode(TX.tokens(F.col("text"))).alias("t")
+    )
+    cnt = d.groupBy("t").agg(F.count(F.lit(1)).alias("c"))
+    tot = cnt.agg(
+        F.sum("c").alias("total"),
+        F.length(F.conv(F.sum("c").cast("string"), 10, 2)).cast("long").alias(
+            "total_bits"
+        ),
+    )
+    bits_c = F.length(F.conv(F.col("c").cast("string"), 10, 2)).cast("long")
+    joined = d.join(cnt, "t").crossJoin(F.broadcast(tot))
+    surp = F.sum(F.col("total_bits") - bits_c)
+    return (
+        joined.groupBy("source")
+        .agg(
+            F.count(F.lit(1)).alias("n_tokens"),
+            surp.cast("long").alias("sum_bits"),
+            (surp.cast("double") / F.count(F.lit(1))).alias("avg_surprisal_bits"),
+        )
+        .orderBy("source")
+    )
+
+
+# ===========================================================================
+# Bigram conditionals: top next-token per head with conditional prob
+# ===========================================================================
+@_register(
+    "docs_bigram_conditionals",
+    f"""
+    WITH t AS (SELECT {WS_TOKENS.format(x='text')} AS w FROM documents),
+    bg AS (
+      SELECT s.a AS head, s.b AS nxt
+      FROM (SELECT unnest(list_transform(range(len(w) - 1),
+                   i -> {{'a': w[i+1], 'b': w[i+2]}})) AS s
+            FROM t WHERE len(w) >= 2)),
+    pc AS (SELECT head, nxt, CAST(count(*) AS BIGINT) AS pair_n
+           FROM bg GROUP BY head, nxt),
+    hc AS (SELECT head, CAST(SUM(pair_n) AS BIGINT) AS head_n FROM pc GROUP BY head),
+    top AS (
+      SELECT head, nxt, pair_n FROM pc
+      QUALIFY row_number() OVER (PARTITION BY head ORDER BY pair_n DESC, nxt) = 1)
+    SELECT top.head, top.nxt AS top_next, top.pair_n, hc.head_n,
+           CAST(top.pair_n AS DOUBLE) / hc.head_n AS cond_p
+    FROM top JOIN hc ON top.head = hc.head
+    ORDER BY top.head
+    """,
+)
+def q_docs_bigram_conditionals(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Per-head-token most-likely next token with its conditional
+    probability — the bigram-LM table a fertility/packing pipeline
+    inspects to sanity-check a tokenizer's merge candidates (the BPE
+    scorer in `operators/bpe.py` ranks exactly these adjacent-pair
+    counts). Bigrams are generated MAP-SIDE from each doc's token
+    array (no self-join on position anywhere); the per-head winner is
+    the associative min(struct(-count, token)) pick — the
+    `docs_golden_record` survivorship idiom, so no window touches the
+    corpus-sized pair stream on the Spark side (the oracle uses
+    QUALIFY, its SinglePartition being oracle-only as usual). Count
+    arithmetic exact; ONE division per head row.
+
+    Scale: one exchange on (head, next) for pair counts (map-side
+    combinable), then O(vocab²)-bounded frames — head totals and the
+    argmax both ride a second small exchange on head."""
+    d = load_table(spark, sf_dir, "documents").select(
+        TX.tokens(F.col("text")).alias("w")
+    )
+    bg = d.filter(F.size("w") >= 2).select(
+        F.explode(
+            F.expr("transform(sequence(0, size(w) - 2), i -> struct(w[i] AS a, w[i+1] AS b))")
+        ).alias("s")
+    ).select(F.col("s.a").alias("head"), F.col("s.b").alias("nxt"))
+    pc = bg.groupBy("head", "nxt").agg(F.count(F.lit(1)).alias("pair_n"))
+    per_head = pc.groupBy("head").agg(
+        F.sum("pair_n").alias("head_n"),
+        F.min(F.struct((-F.col("pair_n")).alias("neg_n"), F.col("nxt").alias("tok"))).alias(
+            "w_"
+        ),
+    )
+    return per_head.select(
+        "head",
+        F.col("w_.tok").alias("top_next"),
+        (-F.col("w_.neg_n")).cast("long").alias("pair_n"),
+        F.col("head_n").cast("long").alias("head_n"),
+        ((-F.col("w_.neg_n")).cast("double") / F.col("head_n")).alias("cond_p"),
+    ).orderBy("head")
+
+
+# ===========================================================================
+# Zipf rank-frequency bit-slope (libm-free power-law check)
+# ===========================================================================
+@_register(
+    "docs_zipf_bitslope",
+    f"""
+    WITH cnt AS (
+      SELECT t, CAST(count(*) AS BIGINT) AS c
+      FROM (SELECT unnest({WS_TOKENS.format(x='text')}) AS t FROM documents)
+      GROUP BY t),
+    rk AS (
+      SELECT c, row_number() OVER (ORDER BY c DESC, t) AS r FROM cnt),
+    pts AS (
+      SELECT CAST(length(to_base(r, 2)) AS BIGINT) AS x,
+             CAST(length(to_base(c, 2)) AS BIGINT) AS y
+      FROM rk),
+    m AS (
+      SELECT CAST(count(*) AS BIGINT) AS n,
+             CAST(SUM(x) AS BIGINT) AS sx, CAST(SUM(y) AS BIGINT) AS sy,
+             CAST(SUM(x * y) AS BIGINT) AS sxy, CAST(SUM(x * x) AS BIGINT) AS sxx
+      FROM pts)
+    SELECT n AS n_vocab,
+           CAST(((n * sxy - sx * sy) * 1000) // (n * sxx - sx * sx) AS BIGINT)
+             AS zipf_bitslope_milli
+    FROM m
+    """,
+)
+def q_docs_zipf_bitslope(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Zipf power-law check without libm: OLS slope of
+    bitlength(count) against bitlength(rank) over the vocabulary —
+    integer-granularity log-log regression (a Zipfian corpus gives a
+    slope near −1000 milli; boilerplate-heavy or truncated corpora
+    bend it), combining the `docs_unigram_surprisal` bit-log trick
+    with the `supplier_price_trend` exact-moment OLS. Every number is
+    integer until the final scaled truncating division — bit-identical
+    across engines by construction.
+
+    Scale: one token-count exchange; ranks via the distributed
+    two-phase `global_row_number` over the O(vocab) count table (the
+    oracle's single-task row_number window is oracle-only); moments
+    are one map-combinable 1-row agg."""
+    from ipeds_etl_spark.operators.layout import global_row_number
+
+    d = load_table(spark, sf_dir, "documents").select(
+        F.explode(TX.tokens(F.col("text"))).alias("t")
+    )
+    cnt = d.groupBy("t").agg(F.count(F.lit(1)).alias("c"))
+    rk = global_row_number(
+        cnt.select((-F.col("c")).alias("negc"), "t", "c"), ["negc", "t"], "r"
+    )
+    bits = lambda col: F.length(F.conv(F.col(col).cast("string"), 10, 2)).cast("long")
+    pts = rk.select(bits("r").alias("x"), bits("c").alias("y"))
+    m = pts.agg(
+        F.count(F.lit(1)).alias("n"),
+        F.sum("x").alias("sx"),
+        F.sum("y").alias("sy"),
+        F.sum(F.col("x") * F.col("y")).alias("sxy"),
+        F.sum(F.col("x") * F.col("x")).alias("sxx"),
+    )
+    return m.select(
+        F.col("n").alias("n_vocab"),
+        F.expr(
+            "CAST(((n * sxy - sx * sy) * 1000) div (n * sxx - sx * sx) AS BIGINT)"
+        ).alias("zipf_bitslope_milli"),
+    )
+
+
+# ===========================================================================
+# Multi-keyword taxonomy tagging (FlashText shape, map-only)
+# ===========================================================================
+#: a topic taxonomy over the corpus vocabulary — the license/domain
+#: tagger shape with categories that are non-degenerate on this corpus
+_TAXONOMY: tuple[tuple[str, tuple[str, ...]], ...] = (
+    ("engine", ("spark", "query", "scan", "sort", "join", "agg")),
+    ("storage", ("table", "row", "column", "partition", "parquet")),
+    ("streaming", ("stream", "window", "batch", "watermark")),
+    ("ml", ("vector", "embedding", "model", "cluster")),
+    ("commerce", ("customer", "order", "part", "supplier")),
+)
+
+
+def _tagging_oracle() -> str:
+    cases = []
+    for tag, words in _TAXONOMY:
+        lst = "[" + ", ".join(f"'{w}'" for w in words) + "]"
+        cases.append(
+            f"SELECT doc_id, source, '{tag}' AS tag,"
+            f" len(list_filter(w, t -> list_contains({lst}, t))) AS hits"
+            " FROM t"
+        )
+    union = " UNION ALL ".join(cases)
+    return f"""
+    WITH t AS (SELECT doc_id, source, {WS_TOKENS.format(x='text')} AS w
+               FROM documents),
+    m AS ({union})
+    SELECT source, tag,
+           CAST(SUM(CASE WHEN hits > 0 THEN 1 ELSE 0 END) AS BIGINT)
+             AS n_docs_tagged,
+           CAST(SUM(hits) AS BIGINT) AS n_hits
+    FROM m GROUP BY source, tag
+    HAVING SUM(CASE WHEN hits > 0 THEN 1 ELSE 0 END) > 0
+    ORDER BY source, tag
+    """
+
+
+@_register("docs_keyword_tagging", _tagging_oracle())
+def q_docs_keyword_tagging(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Multi-keyword taxonomy tagging — the FlashText/Aho-Corasick
+    routing shape (license screens, topic routing, policy filters)
+    as pure codegen: one tokenize, then per category a literal-array
+    membership count (the `lang_scores` single-scan pattern applied
+    to an arbitrary taxonomy). Per (source, tag): documents tagged
+    and total keyword hits — the routing table a mixing recipe uses
+    to send code to the code pile and legalese to review.
+
+    Scale: map-only per category over one shared token array (the
+    tokenizer subtree is projected ONCE — each category lambda reads
+    the column, not the regex), one (source, tag) agg."""
+    d = load_table(spark, sf_dir, "documents").select(
+        "doc_id", "source", TX.tokens(F.col("text")).alias("w")
+    )
+    out = None
+    for tag, words in _TAXONOMY:
+        lit_words = F.array(*[F.lit(w) for w in words])
+        hits = F.size(
+            F.filter(F.col("w"), lambda t: F.array_contains(lit_words, t))
+        )
+        part = d.select(
+            "source", F.lit(tag).alias("tag"), hits.alias("hits")
+        )
+        out = part if out is None else out.unionByName(part)
+    return (
+        out.groupBy("source", "tag")
+        .agg(
+            F.sum(F.when(F.col("hits") > 0, 1).otherwise(0))
+            .cast("long")
+            .alias("n_docs_tagged"),
+            F.sum("hits").cast("long").alias("n_hits"),
+        )
+        .filter(F.col("n_docs_tagged") > 0)
+        .orderBy("source", "tag")
+    )
+
+
+# ===========================================================================
+# PMI collocations (integer-exact ranking)
+# ===========================================================================
+@_register(
+    "docs_token_pmi_top",
+    f"""
+    WITH toks AS (SELECT doc_id, {WS_TOKENS.format(x='text')} AS w FROM documents),
+    bg AS (
+      SELECT u.t1 AS t1, u.t2 AS t2 FROM (
+        SELECT unnest(list_transform(range(len(w) - 1),
+                      i -> struct_pack(t1 := w[i+1], t2 := w[i+2]))) AS u
+        FROM toks)),
+    uni AS (
+      SELECT t, CAST(count(*) AS BIGINT) AS n_t
+      FROM (SELECT unnest(w) AS t FROM toks) GROUP BY t),
+    tot AS (SELECT CAST(sum(n_t) AS BIGINT) AS n FROM uni),
+    bgc AS (
+      SELECT t1, t2, CAST(count(*) AS BIGINT) AS n_ab
+      FROM bg GROUP BY t1, t2 HAVING count(*) >= 3)
+    SELECT bgc.t1, bgc.t2, bgc.n_ab,
+           u1.n_t AS n_a, u2.n_t AS n_b,
+           CAST((10000 * bgc.n_ab * tot.n) // (u1.n_t * u2.n_t) AS BIGINT)
+             AS pmi_score_x10k
+    FROM bgc
+    JOIN uni u1 ON bgc.t1 = u1.t
+    JOIN uni u2 ON bgc.t2 = u2.t
+    CROSS JOIN tot
+    ORDER BY pmi_score_x10k DESC, t1, t2
+    LIMIT 50
+    """,
+)
+def q_docs_token_pmi_top(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Top collocations by pointwise mutual information, ranked with
+    INTEGER arithmetic: PMI = log p(ab)/(p(a)p(b)) is monotone in
+    n_ab*N/(n_a*n_b) (the bigram total B is a constant shift), so the
+    ranking key is the scaled integer (10^4 * n_ab * N) div (n_a*n_b)
+    — engine-identical, no log. min-count 3 applies the standard PMI
+    rare-pair guard. This is the phrase-mining primitive (multi-word
+    expression detection for tokenizer/vocab curation).
+
+    Scale: two explode+agg passes (unigrams, bigrams — both map-side
+    combinable), two vocabulary-keyed joins (at 100 TB the unigram
+    table is vocabulary-sized: broadcast it), one broadcast 1-row
+    total, and a top-k (TakeOrderedAndProject — no global sort). The
+    10^4 scale keeps the BIGINT envelope safe while n_ab*N < 9.2e14;
+    a 100 TB corpus (N ~ 1e13) multiplies in DECIMAL(38,0) instead —
+    same div, wider lanes."""
+    d = load_table(spark, sf_dir, "documents")
+    toks = d.select(TX.tokens(F.col("text")).alias("w"))
+    uni = (
+        toks.select(F.explode("w").alias("t"))
+        .groupBy("t")
+        .agg(F.count(F.lit(1)).cast("long").alias("n_t"))
+    )
+    bg = toks.select(
+        F.explode(
+            F.expr(
+                "zip_with(slice(w, 1, greatest(size(w) - 1, 0)),"
+                " slice(w, 2, greatest(size(w) - 1, 0)),"
+                " (a, b) -> struct(a AS t1, b AS t2))"
+            )
+        ).alias("u")
+    ).select("u.t1", "u.t2")
+    bgc = (
+        bg.groupBy("t1", "t2")
+        .agg(F.count(F.lit(1)).cast("long").alias("n_ab"))
+        .filter(F.col("n_ab") >= 3)
+    )
+    tot = uni.agg(F.sum("n_t").cast("long").alias("n"))
+    u1 = uni.select(F.col("t").alias("t1"), F.col("n_t").alias("n_a"))
+    u2 = uni.select(F.col("t").alias("t2"), F.col("n_t").alias("n_b"))
+    return (
+        bgc.join(u1, "t1")
+        .join(u2, "t2")
+        .crossJoin(F.broadcast(tot))
+        .select(
+            "t1", "t2", "n_ab", "n_a", "n_b",
+            F.expr(
+                "CAST((10000 * n_ab * n) div (n_a * n_b) AS BIGINT)"
+            ).alias("pmi_score_x10k"),
+        )
+        .orderBy(F.desc("pmi_score_x10k"), "t1", "t2")
+        .limit(50)
+    )
+
+
+# ===========================================================================
+# Heaps-law vocabulary-growth audit
+# ===========================================================================
+@_register(
+    "docs_vocab_growth",
+    f"""
+    WITH x AS (
+      SELECT source, doc_id % 2 = 0 AS even, unnest({WS_TOKENS.format(x='text')}) AS t
+      FROM documents)
+    SELECT source,
+           CAST(count(t) AS BIGINT) AS n_tokens,
+           CAST(count(DISTINCT t) AS BIGINT) AS vocab,
+           CAST(count(CASE WHEN even THEN t END) AS BIGINT) AS n_tokens_half,
+           CAST(count(DISTINCT CASE WHEN even THEN t END) AS BIGINT) AS vocab_half,
+           CAST(CASE WHEN count(DISTINCT CASE WHEN even THEN t END) = 0 THEN NULL
+                ELSE (1000 * count(DISTINCT t))
+                     // count(DISTINCT CASE WHEN even THEN t END) END AS BIGINT)
+             AS vocab_growth_x1000,
+           CAST(CASE WHEN count(CASE WHEN even THEN t END) = 0 THEN NULL
+                ELSE (1000 * count(t)) // count(CASE WHEN even THEN t END) END AS BIGINT)
+             AS token_growth_x1000,
+           CAST((1000000 * count(DISTINCT t)) // count(t) AS BIGINT) AS ttr_x1e6
+    FROM x
+    GROUP BY source
+    """,
+)
+def q_docs_vocab_growth(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Heaps-law vocabulary-growth audit per source: vocabulary and
+    token counts on the full corpus vs the deterministic doc_id-even
+    half. Heaps' law V(N) = K·N^beta means beta ≈ log(vocab_growth) /
+    log(token_growth); the integer permille ratios are emitted (the
+    log is the analyst's one float op) along with the type-token ratio.
+    A source whose vocabulary growth is near its token growth (beta→1)
+    is id-like/noisy; near-zero growth (beta→0) is boilerplate — both
+    are mixture-weight red flags before training.
+
+    Scale: one explode + one agg keyed on source; the distinct counts
+    are per-source exact (at 100 TB swap exact distinct for the KMV
+    sketch family in ``operators/sketches.py`` — same readout shape,
+    mergeable state)."""
+    d = load_table(spark, sf_dir, "documents")
+    x = d.select(
+        "source",
+        (F.col("doc_id") % 2 == 0).alias("even"),
+        F.explode(TX.tokens(F.col("text"))).alias("t"),
+    )
+    half_t = F.when(F.col("even"), F.col("t"))
+    return x.groupBy("source").agg(
+        F.count("t").cast("long").alias("n_tokens"),
+        F.count_distinct(F.col("t")).cast("long").alias("vocab"),
+        F.count(half_t).cast("long").alias("n_tokens_half"),
+        F.count_distinct(half_t).cast("long").alias("vocab_half"),
+        F.expr(
+            "CAST(CASE WHEN count(DISTINCT CASE WHEN even THEN t END) = 0 THEN NULL"
+            " ELSE (1000 * count(DISTINCT t))"
+            " div count(DISTINCT CASE WHEN even THEN t END) END AS BIGINT)"
+        ).alias("vocab_growth_x1000"),
+        F.expr(
+            "CAST(CASE WHEN count(CASE WHEN even THEN t END) = 0 THEN NULL"
+            " ELSE (1000 * count(t)) div count(CASE WHEN even THEN t END) END"
+            " AS BIGINT)"
+        ).alias("token_growth_x1000"),
+        F.expr(
+            "CAST((1000000 * count(DISTINCT t)) div count(t) AS BIGINT)"
+        ).alias("ttr_x1e6"),
+    )
+
+
+# ===========================================================================
+# Unigram-rarity quality proxy (transcendental-free perplexity stand-in)
+# ===========================================================================
+@_register(
+    "docs_unigram_rarity",
+    f"""
+    WITH t AS (SELECT doc_id, source, unnest({WS_TOKENS.format(x='text')}) AS tok
+               FROM documents),
+    v AS (SELECT tok, CAST(count(*) AS BIGINT) AS tn FROM t GROUP BY tok),
+    s AS (SELECT CAST(sum(tn) AS BIGINT) AS n FROM v),
+    p AS (SELECT t.doc_id, t.source,
+                 CAST(count(*) AS BIGINT) AS n_toks,
+                 CAST(sum(n // tn) AS BIGINT) AS rarity_sum
+          FROM t JOIN v USING (tok) CROSS JOIN s
+          GROUP BY t.doc_id, t.source)
+    SELECT doc_id, source, n_toks, rarity_sum,
+           (1000 * rarity_sum) // n_toks AS rarity_x1000
+    FROM p ORDER BY rarity_x1000 DESC, doc_id LIMIT 15
+    """,
+)
+def q_docs_unigram_rarity(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Per-document mean inverse-unigram-frequency — the
+    transcendental-free stand-in for unigram log-perplexity (the
+    KenLM-style quality gate every pretraining pipeline runs):
+    rarity(tok) = N div count(tok) (corpus tokens over token count,
+    truncating integer division — identical on both engines), and a
+    document's score is the scaled integer mean of its occurrences'
+    rarities. Monotone in "how surprising is this document under the
+    corpus unigram model" without ln() (libm-dependent, see the BM25
+    idf note on ``q_docs_bm25_search``). Readout: the 15 rarest documents —
+    the review queue a quality pipeline samples for gibberish.
+
+    Scale: one explode (map-only), one map-combinable vocabulary agg,
+    a 1-row total broadcast, one token-keyed join (at 100 TB the
+    vocabulary side is Zipf-bounded — broadcast it when it fits, else
+    this shuffle_hash pin), one per-doc agg, TakeOrderedAndProject.
+    BIGINT envelope: rarity_sum ≤ n_toks · N; past ~10^18 switch the
+    sum to DECIMAL(38,0) (same escape as ``docs_token_pmi_top``)."""
+    d = docs_scan(spark, sf_dir)
+    t = d.select(
+        "doc_id", "source", F.explode(TX.tokens(F.col("text"))).alias("tok")
+    )
+    v = t.groupBy("tok").agg(F.count(F.lit(1)).cast("long").alias("tn"))
+    s = v.agg(F.sum("tn").cast("long").alias("n"))
+    p = (
+        t.join(v.hint("shuffle_hash"), "tok")
+        .crossJoin(F.broadcast(s))
+        .groupBy("doc_id", "source")
+        .agg(
+            F.count(F.lit(1)).cast("long").alias("n_toks"),
+            F.sum(F.expr("n div tn")).cast("long").alias("rarity_sum"),
+        )
+    )
+    return (
+        p.select(
+            "doc_id",
+            "source",
+            "n_toks",
+            "rarity_sum",
+            F.expr("(1000 * rarity_sum) div n_toks").alias("rarity_x1000"),
+        )
+        .orderBy(F.col("rarity_x1000").desc(), "doc_id")
+        .limit(15)
+    )
+
+
+# ===========================================================================
+# Concat-and-chunk sequence packing (GPT-style loader audit)
+# ===========================================================================
+_PACK_BLOCK = 512
+
+
+@_register(
+    "docs_concat_chunk_packing",
+    f"""
+    WITH n AS (SELECT doc_id, source, CAST(len(w) AS BIGINT) AS n_toks
+               FROM (SELECT doc_id, source, {WS_TOKENS.format(x='text')} AS w
+                     FROM documents)
+               WHERE len(w) > 0),
+    p AS (SELECT doc_id, source, n_toks,
+                 CAST(sum(n_toks) OVER (ORDER BY doc_id) AS BIGINT) AS endpos
+          FROM n),
+    b AS (SELECT source, n_toks,
+                 (endpos - n_toks) // {_PACK_BLOCK} AS fb,
+                 (endpos - 1) // {_PACK_BLOCK} AS lb
+          FROM p)
+    SELECT source,
+           CAST(count(*) AS BIGINT) AS n_docs,
+           CAST(sum(n_toks) AS BIGINT) AS n_tokens,
+           CAST(sum(CASE WHEN lb > fb THEN 1 ELSE 0 END) AS BIGINT) AS n_crossers,
+           CAST(max(lb - fb + 1) AS BIGINT) AS max_span_blocks,
+           CAST((1000 * sum(CASE WHEN lb > fb THEN 1 ELSE 0 END)) // count(*)
+                AS BIGINT) AS crosser_permille
+    FROM b GROUP BY source
+    """,
+)
+def q_docs_concat_chunk_packing(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Concat-and-chunk sequence packing audit: documents are
+    concatenated in deterministic doc_id order and the token stream is
+    cut into fixed 512-token context blocks — the GPT-style loader
+    layout. Per source: how many documents cross a block boundary
+    (their loss sees a mid-document truncation), the worst span in
+    blocks, and the permille boundary rate — the packing-efficiency
+    numbers a pretraining run reports when choosing block size.
+
+    Scale: per-doc token counts are map-only; the global stream
+    position is ``operators/layout.global_prefix_sum`` — range
+    exchange, per-partition running sums, O(partitions) offsets — NOT
+    the single-task ``SUM() OVER (ORDER BY)`` window the oracle can
+    afford at gate scale. Everything after is a map-side block tag and
+    one agg. This is exactly the 100 TB shape: no global sort, no
+    permutation materialized."""
+    from ipeds_etl_spark.operators.layout import global_prefix_sum
+
+    d = docs_scan(spark, sf_dir)
+    n = d.select(
+        "doc_id",
+        "source",
+        F.size(TX.tokens(F.col("text"))).cast("long").alias("n_toks"),
+    ).filter(F.col("n_toks") > 0)
+    p = global_prefix_sum(n, ["doc_id"], "n_toks", "endpos")
+    b = p.select(
+        "source",
+        "n_toks",
+        F.expr(f"(endpos - n_toks) div {_PACK_BLOCK}").alias("fb"),
+        F.expr(f"(endpos - 1) div {_PACK_BLOCK}").alias("lb"),
+    )
+    crosser = F.when(F.col("lb") > F.col("fb"), 1).otherwise(0)
+    return b.groupBy("source").agg(
+        F.count(F.lit(1)).cast("long").alias("n_docs"),
+        F.sum("n_toks").cast("long").alias("n_tokens"),
+        F.sum(crosser).cast("long").alias("n_crossers"),
+        F.max(F.col("lb") - F.col("fb") + 1).cast("long").alias("max_span_blocks"),
+        F.expr(
+            "CAST((1000 * sum(CASE WHEN lb > fb THEN 1 ELSE 0 END)) div count(*) "
+            "AS BIGINT)"
+        ).alias("crosser_permille"),
+    )
+
+
+# ===========================================================================
+# Crawl-order n-gram novelty (how much NEW content each source adds)
+# ===========================================================================
+@_register(
+    "docs_ngram_novelty",
+    f"""
+    WITH w AS (SELECT doc_id, source, {WS_TOKENS.format(x='text')} AS w
+               FROM documents),
+    g AS (SELECT DISTINCT doc_id, source,
+                 CAST(concat('0x', substr(sha256(x), 1, 10)) AS BIGINT) AS h
+          FROM (SELECT doc_id, source, unnest({SHINGLES.format(w='w')}) AS x
+                FROM w)),
+    f AS (SELECT h, min(doc_id) AS first_doc FROM g GROUP BY h)
+    SELECT source,
+           CAST(count(*) AS BIGINT) AS n_shingles,
+           CAST(sum(CASE WHEN doc_id = first_doc THEN 1 ELSE 0 END) AS BIGINT)
+             AS n_novel,
+           CAST((1000 * sum(CASE WHEN doc_id = first_doc THEN 1 ELSE 0 END))
+                // count(*) AS BIGINT) AS novelty_permille
+    FROM g JOIN f USING (h)
+    GROUP BY source
+    """,
+)
+def q_docs_ngram_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Crawl-order content novelty: a document's 3-gram shingle is
+    NOVEL if no earlier document (smaller doc_id = earlier in crawl
+    order) contains it. Per source: distinct doc-shingle incidences,
+    how many were first sightings, and the permille novelty rate — the
+    "is this crawl still adding new content or re-fetching the same
+    web" curve that decides when another dump is worth ingesting.
+
+    Scale: NO corpus-sized join at all. Every shingle-hash contributes
+    exactly ONE novel incidence — the one on its ``min(doc_id)`` — so
+    per-source novel counts are just the per-hash ``min_by(source,
+    doc_id)`` rolled up by that first-sighting source, and incidence
+    counts roll up ``g`` directly (the two aggs share ``g``'s distinct
+    exchange via ReusedExchange). Same-process 5-run medians at sf0.1:
+    agg + shingle-keyed ``shuffle_hash`` join form 4.80 s, this form
+    4.39 s — same answer, one fewer corpus shuffle (the gap widens
+    with corpus size: the join moved ~2× the incidence list through
+    the wire where this moves it once). The final combine is a
+    broadcast join of two source-cardinality frames. Shingles travel
+    as 40-bit parity hashes, never strings — 8 bytes/row on the wire.
+    ``min_by`` is deterministic here because ``source`` is
+    functionally dependent on ``doc_id``."""
+    d = docs_scan(spark, sf_dir)
+    # The (doc_id, source, h) distinct only ever dedupes WITHIN a doc
+    # (doc_id is in the key), so it is computed map-side as an
+    # array_distinct over the per-doc hashed-shingle array — the global
+    # distinct's reduce-side dedup aggregate (which ran once per
+    # consumer branch) disappears. The one remaining full exchange is
+    # an explicit hash repartition on h: the n_novel agg consumes it
+    # in place and the n_shingles agg shares the scan through
+    # ReusedExchange (opt r13).
+    g = (
+        d.select("doc_id", "source", TX.shingles_of(TX.tokens(F.col("text")), 3).alias("gs"))
+        .select(
+            "doc_id",
+            "source",
+            F.explode(
+                F.array_distinct(F.transform(F.col("gs"), lambda x: parity_hash(x)))
+            ).alias("h"),
+        )
+        .repartition("h")
+        # narrow (long, string, long) rows; the barrier guarantees the
+        # scan + sha256 pass runs once for both aggs (measured ABAB:
+        # the two branches did NOT share the repartition exchange)
+        .localCheckpoint(eager=False)
+    )
+    n_sh = g.groupBy("source").agg(F.count(F.lit(1)).cast("long").alias("n_shingles"))
+    n_nv = (
+        g.groupBy("h")
+        .agg(F.min_by("source", "doc_id").alias("first_source"))
+        .groupBy(F.col("first_source").alias("source"))
+        .agg(F.count(F.lit(1)).cast("long").alias("n_novel"))
+    )
+    return n_sh.join(F.broadcast(n_nv), "source", "left").select(
+        "source",
+        "n_shingles",
+        F.coalesce("n_novel", F.lit(0)).cast("long").alias("n_novel"),
+        F.expr(
+            "CAST((1000 * coalesce(n_novel, 0)) div n_shingles AS BIGINT)"
+        ).alias("novelty_permille"),
+    )
+
+
+# ===========================================================================
+# Hybrid retrieval: reciprocal-rank fusion of lexical + semantic rankings
+# ===========================================================================
+_RRF_K = 60
+_RRF_TOP = 5
+_COS_QC = (
+    "({d} / (sqrt({da}) * sqrt({db})))".format(
+        d="list_reduce(list_transform(range(len(q.embedding)), "
+          "i -> CAST(q.embedding[i+1] AS DOUBLE) * CAST(c.embedding[i+1] AS DOUBLE)), (x, y) -> x + y)",
+        da="list_reduce(list_transform(range(len(q.embedding)), "
+           "i -> CAST(q.embedding[i+1] AS DOUBLE) * CAST(q.embedding[i+1] AS DOUBLE)), (x, y) -> x + y)",
+        db="list_reduce(list_transform(range(len(c.embedding)), "
+           "i -> CAST(c.embedding[i+1] AS DOUBLE) * CAST(c.embedding[i+1] AS DOUBLE)), (x, y) -> x + y)",
+    )
+)
+
+
+@_register(
+    "docs_hybrid_rrf",
+    f"""
+    WITH s AS (SELECT doc_id, list_distinct({SHINGLES.format(w='w')}) AS sh
+               FROM (SELECT doc_id, {WS_TOKENS.format(x='text')} AS w
+                     FROM documents)),
+    qy AS (SELECT doc_id AS query_id, sh AS qsh FROM s WHERE doc_id < 5),
+    lex AS (SELECT query_id, s.doc_id,
+                   CAST(len(list_intersect(qsh, s.sh)) AS BIGINT) AS lex_n
+            FROM qy, s WHERE s.doc_id <> query_id),
+    lr AS (SELECT query_id, doc_id, lex_n,
+                  CAST(row_number() OVER (PARTITION BY query_id
+                       ORDER BY lex_n DESC, doc_id) AS BIGINT) AS lex_rank
+           FROM lex),
+    sem AS (SELECT q.vec_id AS query_id, c.vec_id AS doc_id, {_COS_QC} AS cos
+            FROM embeddings q, embeddings c
+            WHERE q.vec_id < 5 AND c.vec_id <> q.vec_id),
+    sr AS (SELECT query_id, doc_id,
+                  CAST(row_number() OVER (PARTITION BY query_id
+                       ORDER BY cos DESC, doc_id) AS BIGINT) AS sem_rank
+           FROM sem),
+    f AS (SELECT lr.query_id, lr.doc_id, lex_n, lex_rank, sem_rank,
+                 CAST((1000000 // ({_RRF_K} + lex_rank))
+                      + (1000000 // ({_RRF_K} + sem_rank)) AS BIGINT) AS rrf_x1e6
+          FROM lr JOIN sr ON sr.query_id = lr.query_id AND sr.doc_id = lr.doc_id)
+    SELECT * FROM (
+      SELECT query_id, doc_id, lex_n, lex_rank, sem_rank, rrf_x1e6,
+             CAST(row_number() OVER (PARTITION BY query_id
+                  ORDER BY rrf_x1e6 DESC, doc_id) AS BIGINT) AS fused_rank
+      FROM f)
+    WHERE fused_rank <= {_RRF_TOP}
+    ORDER BY query_id, fused_rank
+    """,
+)
+def q_docs_hybrid_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Hybrid retrieval with reciprocal-rank fusion (Cormack et al.
+    2009): for each query document, a LEXICAL ranking (distinct shared
+    3-gram shingles, ties to the lower doc_id) and a SEMANTIC ranking
+    (embedding cosine, the ``emb_topk_bruteforce`` ordering) fuse as
+    rrf = Σ 1/(60 + rank) — here the exact scaled-integer form
+    ``10⁶ div (60 + rank)`` summed over both lists, so the fused
+    ordering is integer-exact cross-engine even though the cosine
+    itself is a double (only its RANK enters the fusion — the
+    float-robustness trick RRF is loved for in production RAG stacks).
+    Readout: top-5 fused per query with both constituent ranks.
+
+    Scale: gate-scale ranks are full (every candidate ranked per
+    query, 5 broadcast queries × corpus). At 100 TB each list comes
+    from its production shortlist — the ANN index (IVF/PQ, this repo)
+    for semantic, an inverted shingle index for lexical — and RRF
+    fuses shortlists of depth O(100); missing-from-one-list candidates
+    then take rank = list_depth + 1. The fusion itself is a per-query
+    window over O(shortlist) rows — metadata-sized however big the
+    corpus. Both cross joins here carry a 5-row broadcast side."""
+    from ipeds_etl_spark.operators.similarity import cosine
+
+    d = docs_scan(spark, sf_dir)
+    s = d.select(
+        "doc_id",
+        F.array_distinct(TX.shingles_of(TX.tokens(F.col("text")), 3)).alias("sh"),
+    )
+    qy = s.filter(F.col("doc_id") < 5).select(
+        F.col("doc_id").alias("query_id"), F.col("sh").alias("qsh")
+    )
+    lex = (
+        F.broadcast(qy)
+        .crossJoin(s)
+        .filter(F.col("doc_id") != F.col("query_id"))
+        .select(
+            "query_id",
+            "doc_id",
+            F.size(F.array_intersect("qsh", "sh")).cast("long").alias("lex_n"),
+        )
+    )
+    wl = Window.partitionBy("query_id").orderBy(F.col("lex_n").desc(), "doc_id")
+    lr = lex.withColumn("lex_rank", F.row_number().over(wl).cast("long"))
+
+    e = load_table(spark, sf_dir, "embeddings")
+    qe = e.filter(F.col("vec_id") < 5).select(
+        F.col("vec_id").alias("query_id"), F.col("embedding").alias("qv")
+    )
+    sem = (
+        F.broadcast(qe)
+        .crossJoin(e.select(F.col("vec_id").alias("doc_id"), "embedding"))
+        .filter(F.col("doc_id") != F.col("query_id"))
+        .select(
+            "query_id",
+            "doc_id",
+            cosine(F.col("qv"), F.col("embedding")).alias("cos"),
+        )
+    )
+    ws = Window.partitionBy("query_id").orderBy(F.col("cos").desc(), "doc_id")
+    sr = sem.withColumn("sem_rank", F.row_number().over(ws).cast("long")).select(
+        "query_id", "doc_id", "sem_rank"
+    )
+
+    # Both ranked lists scale with the corpus (anchors × candidates):
+    # pin shuffle_hash so AQE's compressed-bytes estimate can never
+    # elect a driver-OOMing broadcast of either side (SCALE.md trap).
+    f = lr.join(sr.hint("shuffle_hash"), ["query_id", "doc_id"]).select(
+        "query_id",
+        "doc_id",
+        "lex_n",
+        "lex_rank",
+        "sem_rank",
+        F.expr(
+            f"CAST((1000000 div ({_RRF_K} + lex_rank)) "
+            f"+ (1000000 div ({_RRF_K} + sem_rank)) AS BIGINT)"
+        ).alias("rrf_x1e6"),
+    )
+    wf = Window.partitionBy("query_id").orderBy(F.col("rrf_x1e6").desc(), "doc_id")
+    return (
+        f.withColumn("fused_rank", F.row_number().over(wf).cast("long"))
+        .filter(F.col("fused_rank") <= _RRF_TOP)
+        .orderBy("query_id", "fused_rank")
+    )
+
+
+# ===========================================================================
+# Hard-negative mining: semantically near, lexically disjoint
+# ===========================================================================
+_HN_TOP = 3
+
+
+@_register(
+    "docs_hard_negatives",
+    f"""
+    WITH s AS (SELECT doc_id, list_distinct({SHINGLES.format(w='w')}) AS sh
+               FROM (SELECT doc_id, {WS_TOKENS.format(x='text')} AS w
+                     FROM documents)),
+    j AS (SELECT s.doc_id, sh, embedding
+          FROM s JOIN embeddings e ON e.vec_id = s.doc_id),
+    qy AS (SELECT doc_id AS query_id, sh AS qsh, embedding AS qv
+           FROM j WHERE doc_id < 5),
+    hn AS (SELECT query_id, c.doc_id AS neighbor_id,
+                  ({_COS_QC.replace("q.embedding", "qv")}) AS cos_sim
+           FROM qy q, j c
+           WHERE c.doc_id <> q.query_id
+             AND len(list_intersect(q.qsh, c.sh)) = 0)
+    SELECT * FROM (
+      SELECT query_id, neighbor_id, cos_sim,
+             CAST(row_number() OVER (PARTITION BY query_id
+                  ORDER BY cos_sim DESC, neighbor_id) AS BIGINT) AS hn_rank
+      FROM hn)
+    WHERE hn_rank <= {_HN_TOP}
+    ORDER BY query_id, hn_rank
+    """,
+)
+def q_docs_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Hard-negative mining for contrastive retrieval training: for
+    each query document, the top-3 candidates by embedding cosine
+    among documents that share ZERO 3-gram shingles with it —
+    semantically near but lexically disjoint, exactly the negatives
+    that teach a bi-encoder something (an easy random negative is
+    lexically unrelated AND semantically far; a false negative shares
+    surface text). The lexical-disjointness gate runs FIRST so the
+    cosine ranking never sees surface-overlapping candidates.
+
+    Scale: the query side (here 5 rows, production O(10k) anchor
+    batch) broadcasts with its shingle sets and vectors; candidates
+    stream map-only through the disjointness test + cosine — one scan,
+    no shuffle except the per-query top-k. At 100 TB the cosine leg
+    comes from the ANN shortlist (IVF/PQ, this repo) and the shingle
+    gate applies to the O(shortlist) survivors; the full-scan form
+    here is the gate-scale gold standard of that funnel."""
+    e = load_table(spark, sf_dir, "embeddings")
+    d = docs_scan(spark, sf_dir)
+    s = d.select(
+        "doc_id",
+        F.array_distinct(TX.shingles_of(TX.tokens(F.col("text")), 3)).alias("sh"),
+    )
+    # Shingle sets ⋈ vectors: both sides corpus-scaled → pinned.
+    j = s.join(e.hint("shuffle_hash"), s.doc_id == e.vec_id).select(
+        "doc_id", "sh", "embedding"
+    )
+    qy = j.filter(F.col("doc_id") < 5).select(
+        F.col("doc_id").alias("query_id"),
+        F.col("sh").alias("qsh"),
+        F.col("embedding").alias("qv"),
+    )
+    from ipeds_etl_spark.operators.similarity import cosine
+
+    hn = (
+        F.broadcast(qy)
+        .crossJoin(j)
+        .filter(
+            (F.col("doc_id") != F.col("query_id"))
+            & (F.size(F.array_intersect("qsh", "sh")) == 0)
+        )
+        .select(
+            "query_id",
+            F.col("doc_id").alias("neighbor_id"),
+            cosine(F.col("qv"), F.col("embedding")).alias("cos_sim"),
+        )
+    )
+    w = Window.partitionBy("query_id").orderBy(F.col("cos_sim").desc(), "neighbor_id")
+    return (
+        hn.withColumn("hn_rank", F.row_number().over(w).cast("long"))
+        .filter(F.col("hn_rank") <= _HN_TOP)
+        .orderBy("query_id", "hn_rank")
+    )
+
+
+# ===========================================================================
+# Sequence-packing fragmentation audit (pad-vs-pack waste)
+# ===========================================================================
+_FRAG_CTX = 256
+
+
+@_register(
+    "docs_packing_fragmentation",
+    f"""
+    WITH n AS (SELECT doc_id, source,
+                      CAST(len({WS_TOKENS.format(x='text')}) AS BIGINT) AS n_toks
+               FROM documents),
+    g AS (SELECT source,
+                 CAST(count(*) AS BIGINT) AS n_docs,
+                 CAST(sum(n_toks) AS BIGINT) AS total_tokens,
+                 CAST(sum((n_toks + {_FRAG_CTX} - 1) // {_FRAG_CTX}) AS BIGINT)
+                   AS padded_blocks
+          FROM n WHERE n_toks > 0 GROUP BY source)
+    SELECT source, n_docs, total_tokens, padded_blocks,
+           (total_tokens + {_FRAG_CTX} - 1) // {_FRAG_CTX} AS packed_blocks,
+           (1000 * (padded_blocks * {_FRAG_CTX} - total_tokens))
+             // (padded_blocks * {_FRAG_CTX}) AS padded_waste_permille,
+           (1000 * (((total_tokens + {_FRAG_CTX} - 1) // {_FRAG_CTX}) * {_FRAG_CTX}
+                    - total_tokens))
+             // (((total_tokens + {_FRAG_CTX} - 1) // {_FRAG_CTX}) * {_FRAG_CTX})
+             AS packed_waste_permille,
+           padded_blocks - ((total_tokens + {_FRAG_CTX} - 1) // {_FRAG_CTX})
+             AS blocks_saved
+    FROM g ORDER BY source
+    """,
+)
+def q_docs_packing_fragmentation(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Loader-efficiency audit: for a context length of 256 tokens,
+    compare the two ways a training loader turns documents into
+    fixed-size blocks — per-document padding (each doc rounds up to
+    its own blocks; the waste every "pad to max length" collator
+    pays) vs cross-document packing (one concatenated stream per
+    source, only the final block padded — the
+    ``docs_concat_chunk_packing`` strategy). Per source: block counts
+    under each strategy, permille padding waste, and blocks saved by
+    packing — the number that justifies the packing pipeline's
+    existence in a 100 TB token budget.
+
+    Scale: one map pass (token count per doc), one combinable agg per
+    source, O(sources) rows of integer arithmetic. Ceilings are
+    integer-division spellings, truncation-exact on both engines."""
+    d = load_table(spark, sf_dir, "documents")
+    L = _FRAG_CTX
+    n = d.select(
+        "source",
+        TX.token_count(F.col("text")).cast("long").alias("n_toks"),
+    ).filter(F.col("n_toks") > 0)
+    g = n.groupBy("source").agg(
+        F.count(F.lit(1)).cast("long").alias("n_docs"),
+        F.sum("n_toks").cast("long").alias("total_tokens"),
+        F.sum(F.expr(f"(n_toks + {L} - 1) div {L}"))
+        .cast("long")
+        .alias("padded_blocks"),
+    )
+    return (
+        g.select(
+            "source",
+            "n_docs",
+            "total_tokens",
+            "padded_blocks",
+            F.expr(f"(total_tokens + {L} - 1) div {L}").alias("packed_blocks"),
+            F.expr(
+                f"(1000 * (padded_blocks * {L} - total_tokens)) "
+                f"div (padded_blocks * {L})"
+            ).alias("padded_waste_permille"),
+            F.expr(
+                f"(1000 * (((total_tokens + {L} - 1) div {L}) * {L} - total_tokens)) "
+                f"div (((total_tokens + {L} - 1) div {L}) * {L})"
+            ).alias("packed_waste_permille"),
+            F.expr(
+                f"padded_blocks - ((total_tokens + {L} - 1) div {L})"
+            ).alias("blocks_saved"),
+        )
+        .orderBy("source")
+    )
+
+
+# ===========================================================================
+# Held-out bigram-LM scoring (CCNet-style quality filter)
+# ===========================================================================
+#: LM training source — deterministic literal; src0 plays the role of
+#: CCNet's "target-domain" (Wikipedia) corpus.
+_LM_REF_SOURCE = "src0"
+
+
+def _bigram_lm_oracle() -> str:
+    ref = _LM_REF_SOURCE
+    return f"""
+    WITH t AS (SELECT doc_id, source, {WS_TOKENS.format(x='text')} AS w
+               FROM documents),
+    bg AS (
+      SELECT source, w[i + 1] AS a, w[i + 2] AS b
+      FROM (SELECT source, w, unnest(range(len(w) - 1)) AS i
+            FROM t WHERE len(w) >= 2)),
+    ref1 AS (SELECT a, CAST(count(*) AS BIGINT) AS c1
+             FROM bg WHERE source = '{ref}' GROUP BY a),
+    ref2 AS (SELECT a, b, CAST(count(*) AS BIGINT) AS c2
+             FROM bg WHERE source = '{ref}' GROUP BY a, b),
+    v AS (SELECT CAST(count(DISTINCT tok) AS BIGINT) AS vsz
+          FROM (SELECT unnest(w) AS tok FROM t WHERE source = '{ref}')),
+    scored AS (
+      SELECT bg.source,
+             CAST(length(to_base(COALESCE(ref1.c1, 0) + v.vsz, 2))
+                  - length(to_base(COALESCE(ref2.c2, 0) + 1, 2)) AS BIGINT)
+               AS bits
+      FROM bg
+      LEFT JOIN ref1 ON bg.a = ref1.a
+      LEFT JOIN ref2 ON bg.a = ref2.a AND bg.b = ref2.b
+      CROSS JOIN v)
+    SELECT source,
+           CAST(count(*) AS BIGINT) AS n_bigrams,
+           CAST(SUM(bits) AS BIGINT) AS sum_bits,
+           CAST(SUM(bits) AS DOUBLE) / count(*) AS avg_bits
+    FROM scored GROUP BY source ORDER BY source
+    """
+
+
+@_register("docs_bigram_lm_ppl", _bigram_lm_oracle())
+def q_docs_bigram_lm_ppl(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """CCNet-style LM quality scoring (Wenzek et al. 2020): train an
+    add-one-smoothed BIGRAM model on one reference source (src0 — the
+    stand-in for CCNet's Wikipedia target domain) and score every
+    source's text by average conditional surprisal under it — sources
+    whose word SEQUENCES look like the reference score low, sources
+    of shuffled/boilerplate/junk text score high even when their
+    unigram mix looks fine (the signal ``docs_unigram_surprisal``
+    cannot see, and the conditional-probability table
+    ``docs_bigram_conditionals`` builds but never applies to held-out
+    text). Surprisal per bigram is the integer floor-log2 surrogate
+    of −log2 (c2+1)/(c1+V): bitlength(c1(a)+V) − bitlength(c2(a,b)+1)
+    via binary-string length — pure integer arithmetic, bit-identical
+    across engines (the house libm ban); unseen heads degrade to
+    −log2(1/V) exactly as add-one smoothing prescribes. Non-negative
+    by construction (c2 ≤ c1, 1 ≤ V).
+
+    Scale: bigrams are generated MAP-SIDE from each doc's token array
+    (no position self-join); the model is two count exchanges bounded
+    by the REFERENCE source's bigram vocabulary, not the corpus; the
+    scoring joins are keyed on token/bigram — when the reference
+    vocab fits in memory they auto-broadcast, otherwise they ride the
+    same hash exchange the counts already paid. One O(sources)
+    rollup + a broadcast 1-row vocab size."""
+    ref = _LM_REF_SOURCE
+    d = load_table(spark, sf_dir, "documents").select(
+        "doc_id", "source", TX.tokens(F.col("text")).alias("w")
+    )
+    bg = (
+        d.filter(F.size("w") >= 2)
+        .select(
+            "source",
+            F.explode(
+                F.expr(
+                    "transform(sequence(0, size(w) - 2),"
+                    " i -> struct(w[i] AS a, w[i+1] AS b))"
+                )
+            ).alias("s"),
+        )
+        .select("source", F.col("s.a").alias("a"), F.col("s.b").alias("b"))
+    )
+    ref_bg = bg.filter(F.col("source") == ref)
+    ref1 = ref_bg.groupBy("a").agg(F.count(F.lit(1)).cast("long").alias("c1"))
+    ref2 = ref_bg.groupBy("a", "b").agg(
+        F.count(F.lit(1)).cast("long").alias("c2")
+    )
+    v = (
+        d.filter(F.col("source") == ref)
+        .select(F.explode("w").alias("tok"))
+        .agg(F.countDistinct("tok").cast("long").alias("vsz"))
+    )
+    bits = F.length(F.conv((F.coalesce(F.col("c1"), F.lit(0)) + F.col("vsz")).cast("string"), 10, 2)).cast(
+        "long"
+    ) - F.length(
+        F.conv((F.coalesce(F.col("c2"), F.lit(0)) + 1).cast("string"), 10, 2)
+    ).cast("long")
+    scored = (
+        bg.join(ref1, "a", "left")
+        .join(ref2, ["a", "b"], "left")
+        .crossJoin(F.broadcast(v))
+        .select("source", bits.alias("bits"))
+    )
+    return (
+        scored.groupBy("source")
+        .agg(
+            F.count(F.lit(1)).cast("long").alias("n_bigrams"),
+            F.sum("bits").cast("long").alias("sum_bits"),
+            (F.sum("bits").cast("double") / F.count(F.lit(1))).alias(
+                "avg_bits"
+            ),
+        )
+        .orderBy("source")
+    )
+
+
+# ===========================================================================
+# Vocab-scale tokenizer APPLY: longest-match against a frozen vocabulary
+# ===========================================================================
+_W0_SQL = r"""
+    w0 AS (
+      SELECT w, CAST(count(*) AS BIGINT) AS n
+      FROM (SELECT unnest(list_filter(regexp_split_to_array(lower(text), '\s+'),
+                                      t -> regexp_matches(t, '^[a-z]+$'))) AS w
+            FROM documents)
+      GROUP BY w)"""
+
+
+def _vocab_apply_oracle(fill_23: bool = False) -> str:
+    """The oracle replays vocabulary derivation and greedy apply
+    RELATIONALLY — positions/lengths from ``unnest(range(...))`` +
+    equi-joins, and the maximal-munch walk as a recursive CTE (each
+    word follows exactly one path: bl is unique per (w, i), so the
+    recursion is vocabulary-sized per round and word-length deep) —
+    instead of mirroring Spark's HOF fold. Deliberate: DuckDB 1.0
+    MISBINDS an outer lambda variable when a lambda NESTS inside a
+    ``list_reduce`` lambda under vectorized join plans (observed:
+    word 'column' segmented with pieces of a different row's word, and
+    the same CTE returning different values depending on the outer
+    plan). No existing oracle nests lambdas; this one's first draft
+    did and tripped it. The relational spelling computes the identical
+    integer function, so the value-hash still pins the Spark fold.
+
+    ``fill_23`` unions the deterministic production-scale filler (all
+    26² 2-grams + 26³ 3-grams) into the vocabulary — the ≥8k-unit
+    variant's artifact, derived identically on both engines."""
+    alpha = ", ".join(f"('{c}')" for c in BPE.ALPHABET)
+    fill = (
+        """
+                UNION SELECT chr(CAST(97 + a.i AS INT)) || chr(CAST(97 + b.i AS INT))
+                FROM range(26) a(i), range(26) b(i)
+                UNION SELECT chr(CAST(97 + a.i AS INT)) || chr(CAST(97 + b.i AS INT))
+                             || chr(CAST(97 + c.i AS INT))
+                FROM range(26) a(i), range(26) b(i), range(26) c(i)"""
+        if fill_23
+        else ""
+    )
+    return rf"""
+    WITH RECURSIVE {_W0_SQL},
+    grams AS (
+      SELECT substr(p.w, CAST(p.i AS INT), CAST(t.l AS INT)) AS g,
+             CAST(SUM(p.n) AS BIGINT) AS cnt
+      FROM (SELECT w, n, unnest(range(1, length(w) + 1)) AS i FROM w0) p
+      CROSS JOIN range(2, {VOCAB_MAX_LEN} + 1) t(l)
+      WHERE p.i + t.l <= length(p.w) + 1
+      GROUP BY g),
+    topg AS (SELECT g FROM grams ORDER BY cnt DESC, g LIMIT {VOCAB_N_GRAMS}),
+    vocab_t AS (SELECT g FROM topg
+                UNION SELECT a FROM (VALUES {alpha}) letters(a){fill}),
+    bl AS (
+      SELECT c.w, c.i, CAST(MAX(c.l) AS INT) AS bl
+      FROM (SELECT p.w, CAST(p.i AS INT) AS i, CAST(t.l AS INT) AS l
+            FROM (SELECT w, unnest(range(1, length(w) + 1)) AS i FROM w0) p
+            CROSS JOIN range(1, {VOCAB_MAX_LEN} + 1) t(l)
+            WHERE p.i + t.l <= length(p.w) + 1) c
+      JOIN vocab_t v ON v.g = substr(c.w, c.i, c.l)
+      GROUP BY c.w, c.i),
+    walk AS (
+      SELECT w, CAST(1 AS INT) AS pos, CAST(0 AS BIGINT) AS ntok FROM w0
+      UNION ALL
+      SELECT k.w, k.pos + b.bl, k.ntok + 1
+      FROM walk k JOIN bl b ON b.w = k.w AND b.i = k.pos),
+    segw AS (SELECT w, ntok AS word_tokens FROM walk
+             WHERE pos = length(w) + 1),
+    doc_words AS (
+      SELECT doc_id, unnest(list_filter(regexp_split_to_array(lower(text), '\s+'),
+                                        t -> regexp_matches(t, '^[a-z]+$'))) AS w
+      FROM documents)
+    SELECT doc_id,
+           CAST(count(*) AS BIGINT) AS n_words,
+           CAST(SUM(word_tokens) AS BIGINT) AS n_subword_tokens,
+           CAST(SUM(word_tokens) AS DOUBLE) / count(*) AS fertility
+    FROM doc_words JOIN segw USING (w)
+    GROUP BY doc_id
+    """
+
+
+@_register("docs_vocab_apply_fertility", _vocab_apply_oracle())
+def q_docs_vocab_apply_fertility(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Tokenizer APPLY at a realistic vocabulary (VERDICT r11 item 5):
+    per-document subword token counts and fertility under a FROZEN
+    1026-unit vocabulary (top-1000 character n-grams by corpus
+    frequency + the 26 single letters, derived deterministically so
+    the oracle re-derives the identical artifact), applied by greedy
+    longest-match segmentation — ONE linear pass per distinct word
+    against the broadcast vocabulary literal, the shape a production
+    tokenization pipeline runs, vs the 6-unrolled-merge replay
+    ``docs_bpe_fertility`` times (honest for training, not for apply
+    at ≥1k merges). Scale: the corpus is touched twice (word extract +
+    word join); the segmentation fold and the vocab derivation both
+    run on the vocabulary-sized distinct-word table; the vocabulary
+    rides every task as one constant-folded ~6 KB array literal."""
+    d = load_table(spark, sf_dir, "documents")
+    vocab = frozen_vocab(spark, sf_dir)
+    words = BPE.word_frequencies(d, "text")
+    seg = BPE.segment_longest_match(
+        words, vocab, max_len=VOCAB_MAX_LEN
+    ).select("w", "word_tokens")
+    doc_words = d.select(
+        "doc_id", F.explode(F.split(F.lower("text"), r"\s+")).alias("w")
+    ).filter(F.col("w").rlike("^[a-z]+$"))
+    return (
+        doc_words.join(seg, "w")
+        .groupBy("doc_id")
+        .agg(
+            F.count(F.lit(1)).alias("n_words"),
+            F.sum("word_tokens").alias("n_subword_tokens"),
+            (
+                F.sum("word_tokens").cast("double") / F.count(F.lit(1))
+            ).alias("fertility"),
+        )
+    )
+
+
+# ===========================================================================
+# Vocab apply at PRODUCTION vocab size (VERDICT r12 item 5)
+# ===========================================================================
+def _vocab_8k(spark: SparkSession, sf_dir: str) -> list[str]:
+    """The ≥8k-unit composite vocabulary: the corpus-derived top grams
+    (the benchmark corpus's word diversity caps those at ~235) unioned
+    with a DETERMINISTIC production-scale filler — all 26² two-letter
+    and 26³ three-letter grams (~18.3k units total, past the ≥8k bar
+    and approaching real 32k tokenizers). Both engines derive the
+    identical artifact: the filler is a pure enumeration, no corpus
+    dependence."""
+    fill2 = [a + b for a in BPE.ALPHABET for b in BPE.ALPHABET]
+    fill3 = [a + b + c for a in BPE.ALPHABET for b in BPE.ALPHABET for c in BPE.ALPHABET]
+    return sorted(set(frozen_vocab(spark, sf_dir)) | set(fill2) | set(fill3))
+
+
+@_register("docs_vocab8k_apply_fertility", _vocab_apply_oracle(fill_23=True))
+def q_docs_vocab8k_apply_fertility(
+    spark: SparkSession, sf_dir: str
+) -> DataFrame:
+    """Tokenizer APPLY at PRODUCTION vocabulary size (VERDICT r12
+    item 5): the 1026-unit saturation proof said the algorithm is
+    linear; real tokenizers run 32k–100k units, and at ≥8k the plan-
+    literal vocabulary is no longer a ~6 KB constant — this query runs
+    the identical fertility pipeline against the ~18.3k-unit composite
+    vocabulary (``_vocab_8k``) and is the registered proof the
+    longest-match fold survives production vocab scale.
+
+    Literal-vs-broadcast decision (measured at sf1, 3-run medians, one
+    process — see SCALE.md "Vocab apply at production vocab size"):
+    the element-wise ``F.lit(list)`` spelling collapses at this size
+    (11.8 s median, 44.6 s first sample — an 18k-child array
+    expression bloats analysis + per-task serialization); rewriting
+    the literal as ONE constant-folded ``from_json`` string (the
+    ``_matrix_lit`` trick) wins at 2.2 s, with the broadcast 1-row
+    DataFrame close behind at 2.9 s. The json-literal is now what
+    ``vocab_via="literal"`` means and stays the default (no extra
+    join in the plan); ``"broadcast"`` is the escape hatch for
+    ≫1M-unit vocabularies."""
+    d = load_table(spark, sf_dir, "documents")
+    vocab = _vocab_8k(spark, sf_dir)
+    words = BPE.word_frequencies(d, "text")
+    seg = BPE.segment_longest_match(
+        words, vocab, max_len=VOCAB_MAX_LEN
+    ).select("w", "word_tokens")
+    doc_words = d.select(
+        "doc_id", F.explode(F.split(F.lower("text"), r"\s+")).alias("w")
+    ).filter(F.col("w").rlike("^[a-z]+$"))
+    return (
+        doc_words.join(seg, "w")
+        .groupBy("doc_id")
+        .agg(
+            F.count(F.lit(1)).alias("n_words"),
+            F.sum("word_tokens").alias("n_subword_tokens"),
+            (
+                F.sum("word_tokens").cast("double") / F.count(F.lit(1))
+            ).alias("fertility"),
+        )
+    )

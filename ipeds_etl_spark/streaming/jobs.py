@@ -3,7 +3,7 @@
 The reference is batch-only (year-at-a-time loop,
 ``notebooks/10_load_endpoint.ipynb``); this module is the engine's
 streaming extension. Each job is the incremental twin of a batch query
-in ``queries_ext`` so results are cross-checkable:
+in ``queries.events`` so results are cross-checkable:
 
 * ``windowed_counts``   ⟷ ``events_window_hourly`` — tumbling
   event-time windows with a watermark for late data.
@@ -30,6 +30,13 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ipeds_etl_spark.sources.tables import load_table
+
+#: chi-square critical value at p = 0.05, df = 1, scaled by 10^6 —
+#: the standard SRM alarm threshold (Fabijan et al. 2019). For a
+#: 50/50 split, chi² collapses exactly to (n_a - n_b)² / n, so the
+#: scaled test is pure BIGINT: 10^6·d² vs 3841459·n. The batch query
+#: ``events_srm_check`` uses the same constant.
+SRM_CRIT_X1E6 = 3_841_459
 
 
 def read_event_stream(spark: SparkSession, sf_dir: str, schema=None) -> DataFrame:
@@ -61,7 +68,7 @@ def session_counts(
 ) -> DataFrame:
     """Gap-based sessions per user via ``session_window`` — Spark's
     native stateful session operator (merges windows incrementally as
-    events arrive; the batch twin in ``queries_ext`` is lag+cumsum)."""
+    events arrive; the batch twin in ``queries.events`` is lag+cumsum)."""
     return (
         events.withWatermark("ts", watermark)
         .groupBy(F.session_window("ts", gap).alias("w"), "user_id")
@@ -142,7 +149,6 @@ def srm_stream(events: DataFrame) -> DataFrame:
     is the same integer form as the batch query — stream and batch
     agree bit-for-bit on every emitted row (equivalence-tested)."""
     from ipeds_etl_spark.functions.hashing import parity_hash
-    from ipeds_etl_spark.queries_wave12 import _SRM_CRIT_X1E6
 
     arm = parity_hash(
         F.concat(F.lit("srm|"), F.col("user_id").cast("string"))
@@ -170,7 +176,7 @@ def srm_stream(events: DataFrame) -> DataFrame:
             "(1000000 * (users_a - users_b) * (users_a - users_b)) "
             "div (users_a + users_b)"
         ).alias("chi2_x1e6"),
-        F.when(F.lit(1_000_000) * d * d >= F.lit(_SRM_CRIT_X1E6) * n, 1)
+        F.when(F.lit(1_000_000) * d * d >= F.lit(SRM_CRIT_X1E6) * n, 1)
         .otherwise(0)
         .cast("long")
         .alias("srm_flag"),
@@ -230,7 +236,7 @@ def click_attribution_stream(
     time-range join condition let Spark bound the buffered state
     (clicks older than purchase-watermark − 1h are evicted); without
     them a stream-stream join would buffer forever. Batch twin:
-    ``queries_ext.q_events_click_attribution`` (inner-join rows; the
+    ``queries.events.q_events_click_attribution`` (inner-join rows; the
     equivalence test compares against it).
 
     ``how='leftOuter'`` is the semantically distinct variant: a

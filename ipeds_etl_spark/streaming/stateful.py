@@ -59,7 +59,7 @@ _FUNNEL_STATE_SCHEMA = T.StructType(
 
 
 def funnel_stages_stream(events: DataFrame, watermark: str | None = "2 hours") -> DataFrame:
-    """Streaming twin of ``queries_ext.q_events_funnel``'s per-user
+    """Streaming twin of ``queries.events.q_events_funnel``'s per-user
     stage derivation: emits (user_id, tv_ms, tc_ms, tp_ms) where
     tv = min ts of a 'view', tc = min ts of a 'click' ≥ tv,
     tp = min ts of a 'purchase' ≥ tc — min-ts ordered chaining,
@@ -465,7 +465,7 @@ _PATHS_STATE_SCHEMA = T.StructType(
 
 
 def path_trigrams_stream(events: DataFrame, watermark: str = "2 hours") -> DataFrame:
-    """Streaming twin of ``queries_analytics.q_events_top_paths``'s
+    """Streaming twin of ``queries.events.q_events_top_paths``'s
     trigram derivation: emits one (user_id, 'a > b > c') row per
     finalized 3-step path, in exact per-user (ts, event_id) order,
     under out-of-order arrival.

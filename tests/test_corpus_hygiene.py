@@ -15,7 +15,9 @@ import re
 import pyarrow.parquet as pq
 import pytest
 
-from ipeds_etl_spark import queries_ext as QE
+from ipeds_etl_spark.queries.curation import q_docs_repetition_filters
+from ipeds_etl_spark.queries.dedup import q_docs_decontaminate
+from ipeds_etl_spark.queries.text import q_docs_token_diversity
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -43,7 +45,7 @@ def docs():
 def test_repetition_filters_match_python(spark, docs):
     out = {
         r["doc_id"]: r
-        for r in QE.q_docs_repetition_filters(spark, SF_DIR).collect()
+        for r in q_docs_repetition_filters(spark, SF_DIR).collect()
     }
     assert set(out) == set(docs)
     for doc_id, text in docs.items():
@@ -63,7 +65,7 @@ def test_repetition_filters_match_python(spark, docs):
 
 def test_token_diversity_matches_python(spark, docs):
     out = {
-        r["doc_id"]: r for r in QE.q_docs_token_diversity(spark, SF_DIR).collect()
+        r["doc_id"]: r for r in q_docs_token_diversity(spark, SF_DIR).collect()
     }
     assert set(out) == set(docs)
     for doc_id, text in docs.items():
@@ -79,7 +81,7 @@ def test_token_diversity_matches_python(spark, docs):
 
 def test_decontaminate_matches_python(spark, docs):
     out = {
-        r["doc_id"]: r for r in QE.q_docs_decontaminate(spark, SF_DIR).collect()
+        r["doc_id"]: r for r in q_docs_decontaminate(spark, SF_DIR).collect()
     }
     eval_hashes: set[int] = set()
     for doc_id, text in docs.items():

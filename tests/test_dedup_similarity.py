@@ -312,13 +312,13 @@ def test_lsh_pair_memo_invalidates_on_corpus_change(spark, tmp_path):
 
     from pyspark.sql import functions as F
 
-    from ipeds_etl_spark.queries_ext import _lsh_doc_pairs
+    from ipeds_etl_spark.operators.indexes import lsh_doc_pairs
 
     sf = str(tmp_path)
     shutil.copytree("/root/testdata/sf0.001", sf, dirs_exist_ok=True)
 
-    p1 = _lsh_doc_pairs(spark, sf)
-    p1_again = _lsh_doc_pairs(spark, sf)
+    p1 = lsh_doc_pairs(spark, sf)
+    p1_again = lsh_doc_pairs(spark, sf)
     assert p1 is p1_again  # memo hit: identical frame object
     n1 = p1.count()
 
@@ -336,7 +336,7 @@ def test_lsh_pair_memo_invalidates_on_corpus_change(spark, tmp_path):
         os.remove(target)  # sf0.001 ships single-file tables
     shutil.move(f"{sf}/documents2.parquet", str(target))
 
-    p2 = _lsh_doc_pairs(spark, sf)
+    p2 = lsh_doc_pairs(spark, sf)
     assert p2 is not p1  # fingerprint changed -> rebuilt
     # rebuilt index never pairs a dropped (odd) doc
     odd = p2.filter((F.col("id_a") % 2 == 1) | (F.col("id_b") % 2 == 1)).count()

@@ -7,7 +7,7 @@ from __future__ import annotations
 
 from ipeds_etl_spark import memostore as MS
 from ipeds_etl_spark.operators import indexes as IDX
-from ipeds_etl_spark.queries_ext import _ivf_codebook
+from ipeds_etl_spark.operators.indexes import ivf_codebook
 from ipeds_etl_spark.sources.tables import load_table
 
 SF = "/root/testdata/sf0.001"
@@ -98,7 +98,7 @@ def test_release_frees_every_artifact_kind_and_rebuilds(spark):
     MS.release(spark)
     pairs = sorted(map(tuple, IDX.lsh_doc_pairs(spark, SF).collect()))
     items = sorted(map(tuple, IDX.basket_items(spark, SF).collect()))
-    books = _ivf_codebook(spark, SF)
+    books = ivf_codebook(spark, SF)
     table = load_table(spark, SF, "orders")
     kinds = {key[2] for key in MS._STORE}
     assert {"lsh_doc_pairs", "basket_items", "ivf", "table"} <= kinds
@@ -113,5 +113,5 @@ def test_release_frees_every_artifact_kind_and_rebuilds(spark):
     assert load_table(spark, SF, "orders") is not table
     assert sorted(map(tuple, IDX.lsh_doc_pairs(spark, SF).collect())) == pairs
     assert sorted(map(tuple, IDX.basket_items(spark, SF).collect())) == items
-    assert _ivf_codebook(spark, SF) == books
+    assert ivf_codebook(spark, SF) == books
     MS.release(spark)

@@ -77,22 +77,28 @@ def test_merged_pk_unique(spark):
     assert out.count() == out.select("k").distinct().count() == 150
 
 
-def test_upsert_into_partitioned_touches_only_loaded_years(spark, tmp_path):
+def test_write_core_touches_only_loaded_years(spark, tmp_path):
     import os
 
-    from ipeds_etl_spark.operators.merge import upsert_into_partitioned
+    from ipeds_etl_spark.plans.core_pipeline import map_records, write_core
 
-    path = str(tmp_path / "tbl")
-    base = spark.createDataFrame(
-        [(1, 2020, "a"), (2, 2020, "b"), (3, 2021, "c")], "id int, year int, v string"
-    )
-    upsert_into_partitioned(spark, path, base, ["id", "year"])
+    def mapped(rows):
+        recs = spark.createDataFrame(
+            [
+                (y, 1, {"unitid": str(u), "year": str(y), "instnm": v, "stabbr": "CA"})
+                for u, y, v in rows
+            ],
+            "page_year int, page_number int, rec map<string,string>",
+        )
+        return map_records("directory", recs)
+
+    path = str(tmp_path / "core")
+    write_core(spark, "directory", mapped([(1, 2020, "a"), (2, 2020, "b"), (3, 2021, "c")]), path)
     files_2021 = set(os.listdir(f"{path}/year=2021"))
 
     # merge revises 2020 only; 2021's files must be byte-untouched
-    rev = spark.createDataFrame([(2, 2020, "B"), (4, 2020, "d")], "id int, year int, v string")
-    upsert_into_partitioned(spark, path, rev, ["id", "year"])
+    write_core(spark, "directory", mapped([(2, 2020, "B"), (4, 2020, "d")]), path)
     assert set(os.listdir(f"{path}/year=2021")) == files_2021
 
-    rows = {(r["id"], r["year"]): r["v"] for r in spark.read.parquet(path).collect()}
+    rows = {(r["unitid"], r["year"]): r["inst_name"] for r in spark.read.parquet(path).collect()}
     assert rows == {(1, 2020): "a", (2, 2020): "B", (3, 2021): "c", (4, 2020): "d"}

@@ -118,11 +118,13 @@ def test_lineage_tracks_both_endpoints(spark, warehouse):
     assert by_ep["admissions"]["rows_inserted"] == 3
 
 
-def test_write_core_txn_backend(spark, tmp_path):
-    """Opt-in transactional core writes: same merge semantics, manifest
-    layout, readable via txn.read_table."""
+def test_txn_core_upsert_is_idempotent(spark, tmp_path):
+    """The manifest-committed core layout (``txn.upsert_into_txn_table``,
+    the entry point ``txn_stream_upsert`` uses): the registry-PK merge
+    is idempotent and reads back through ``txn.read_table``."""
+    from ipeds_etl_spark import registry
     from ipeds_etl_spark.operators import txn
-    from ipeds_etl_spark.plans.core_pipeline import write_core
+    from ipeds_etl_spark.plans.core_pipeline import map_records
 
     core = str(tmp_path / "core_txn")
     rows = [
@@ -133,19 +135,15 @@ def test_write_core_txn_backend(spark, tmp_path):
         [(2020, 1, r) for r in rows],
         "page_year int, page_number int, rec map<string,string>",
     )
-    from ipeds_etl_spark.plans.core_pipeline import map_records
-
     mapped = map_records("directory", recs)
-    write_core(spark, "directory", mapped, core, backend="txn")
-    # re-run: idempotent under the txn backend too
-    write_core(spark, "directory", mapped, core, backend="txn")
+    pk = list(registry.get_endpoint("directory").pk)
+    txn.upsert_into_txn_table(spark, core, mapped, pk, "year")
+    # re-run: idempotent
+    txn.upsert_into_txn_table(spark, core, mapped, pk, "year")
     out = txn.read_table(spark, core)
     got = {r["unitid"]: r["inst_name"] for r in out.collect()}
     assert got == {1: "Alpha U", 2: "Beta C"}
-    import pytest as _pytest
-
-    with _pytest.raises(ValueError):
-        write_core(spark, "directory", mapped, core, backend="bogus")
+    assert out.count() == 2
 
 
 # ---------------------------------------------------------------------------

@@ -96,3 +96,69 @@ def test_rerun_after_crash_equals_uninterrupted_load(spark, tmp_path, monkeypatc
     assert _state(spark, wh) == want
     for key in ("records_mapped", "rows_inserted", "rows_updated"):
         assert got_metrics[key] == want_metrics[key], key
+
+
+# ---------------------------------------------------------------------------
+# The incremental gold refresh publishes each view from a staged copy. A
+# publish that fails or crashes must leave each view readable as its old
+# or its new generation, and re-running the failed refresh with the same
+# batch must give what one uninterrupted refresh gives.
+# ---------------------------------------------------------------------------
+GOLD_SCHEMA = "unitid int, year int, inst_name string, state_abbr string"
+VIEWS = ("institutions_latest", "yearly_counts")
+
+
+def _gold_warehouse(spark, wh: str) -> None:
+    spark.createDataFrame(
+        [(1, 2019, "A1", "CA"), (1, 2020, "A2", "CA"), (2, 2020, "B", "NY")], GOLD_SCHEMA
+    ).write.parquet(f"{wh}/core/{ENDPOINT}")
+    pipeline.rebuild_gold(spark, ENDPOINT, wh)
+
+
+def _refresh(spark, wh: str):
+    delta = spark.createDataFrame([(3, 2020, "C", "TX"), (2, 2020, "B2", "CA")], GOLD_SCHEMA)
+    pre = spark.createDataFrame([(2, 2020, "B", "NY")], GOLD_SCHEMA)
+    return pipeline.refresh_gold_incremental(spark, ENDPOINT, wh, delta, pre)
+
+
+def _views(spark, wh: str) -> dict:
+    return {
+        v: sorted(tuple(r) for r in spark.read.parquet(f"{wh}/vw/{ENDPOINT}_{v}").collect())
+        for v in VIEWS
+    }
+
+
+@pytest.mark.parametrize(
+    "view,fault",
+    [("institutions_latest", "rename_fails"), ("institutions_latest", "crash"), ("yearly_counts", "crash")],
+)
+def test_gold_refresh_publish_fault_keeps_views_and_reruns(spark, tmp_path, monkeypatch, view, fault):
+    from ipeds_etl_spark import fsutil
+
+    clean = str(tmp_path / "clean")
+    _gold_warehouse(spark, clean)
+    old = _views(spark, clean)
+    _refresh(spark, clean)
+    new = _views(spark, clean)
+    assert all(new[v] != old[v] for v in VIEWS)
+
+    wh = str(tmp_path / "wh")
+    _gold_warehouse(spark, wh)
+    rename = fsutil.rename
+
+    def faulty(sp, src, dst):
+        if src == f"{wh}/vw/{ENDPOINT}_{view}__refresh_tmp":
+            if fault == "rename_fails":
+                return False
+            raise Crash
+        return rename(sp, src, dst)
+
+    monkeypatch.setattr(fsutil, "rename", faulty)
+    with pytest.raises(OSError if fault == "rename_fails" else Crash):
+        _refresh(spark, wh)
+    monkeypatch.setattr(fsutil, "rename", rename)
+    if fault == "rename_fails":  # the old copy was put back
+        assert _views(spark, wh) == old
+
+    _refresh(spark, wh)  # the caller re-runs the failed batch
+    assert _views(spark, wh) == new

@@ -30,7 +30,7 @@ EXPECTATIONS = {
     "coalesce_pick": (0, 0, 0),
     "stable_hash": (0, 0, 0),
     # text_quality/doc_fingerprint carry ONE round-robin exchange: the
-    # conditional scan-widening floor (_docs) — a single tiny-file row
+    # conditional scan-widening floor (docs_scan) — a single tiny-file row
     # group otherwise serializes the per-gram sha256 stage on one core.
     # The compute itself is still map-only (no key ever crosses rows).
     "text_quality": (1, 0, 0),
@@ -67,7 +67,7 @@ EXPECTATIONS = {
     # round-4 additions
     "docs_source_quota_sample": (2, 1, 0),  # count agg + window on sliver
     "orders_bloom_semi_join": (2, 1, 0),    # bloom build agg + final agg
-    # (gram,doc) agg + gram agg + _docs scan-widening floor; top-k
+    # (gram,doc) agg + gram agg + docs_scan scan-widening floor; top-k
     "docs_ngram_heavy_hitters": (3, 0, 0),
     "docs_bm25_search": (1, 1, 0),          # one global-stats agg, broadcast back
     # round-5 additions

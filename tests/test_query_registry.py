@@ -1,0 +1,117 @@
+"""The query registry's identity and its place in the layering.
+
+The pin hashes what the driver and the oracle sweeps read: every query
+name with its oracle string, and the first 63 keys of ``queries()`` in
+order (the ``_GATE_PRIORITY`` window, which holds the driver's 50-slot
+correctness gate). Registration order after that window is free.
+
+The layering test walks every import under ``ipeds_etl_spark/``: no
+module imports a ``_``-prefixed name from a query module other than
+itself (the registry's ``_register`` decorator is the one exception),
+and nothing outside the query layer imports the query layer.
+"""
+
+from __future__ import annotations
+
+import ast
+import hashlib
+import json
+from pathlib import Path
+
+from ipeds_etl_spark import queries as Q
+
+PKG = Path(__file__).resolve().parents[1] / "ipeds_etl_spark"
+REGISTRY = "ipeds_etl_spark.queries"
+
+#: sha256 of json.dumps(sorted((name, oracle) for every registered query))
+ORACLES_SHA256 = "f209baace49116093693dfa46a2518cfa279125df6421b95b3323c51ef5c1484"
+#: sha256 of the first 63 keys of queries(), newline-joined
+GATE_WINDOW_SHA256 = "d534e6f8cc0d6251e7f387aea9ba52786ca1ad009691aa63be1b7807f099f139"
+
+
+def _sha256(text: str) -> str:
+    return hashlib.sha256(text.encode()).hexdigest()
+
+
+def test_registry_names_and_oracles_are_pinned():
+    qs, oracles = Q.queries(), Q.oracle_sql()
+    assert len(qs) == 269
+    assert set(oracles) == set(qs)
+    assert _sha256(json.dumps(sorted((n, oracles[n]) for n in qs))) == ORACLES_SHA256
+
+
+def test_gate_window_order_is_pinned():
+    qs, oracles = list(Q.queries()), list(Q.oracle_sql())
+    assert _sha256("\n".join(qs[:63])) == GATE_WINDOW_SHA256
+    assert oracles[:63] == qs[:63]
+
+
+def _module_name(path: Path) -> str:
+    parts = path.relative_to(PKG.parent).with_suffix("").parts
+    if parts[-1] == "__init__":
+        parts = parts[:-1]
+    return ".".join(parts)
+
+
+def _in_query_layer(module: str) -> bool:
+    # a module named ``queries_*`` (the former round-named layout) counts too
+    return (
+        module == REGISTRY
+        or module.startswith(REGISTRY + ".")
+        or module.startswith(REGISTRY + "_")
+    )
+
+
+def _is_module(module: str) -> bool:
+    path = PKG.parent.joinpath(*module.split("."))
+    return path.with_suffix(".py").is_file() or (path / "__init__.py").is_file()
+
+
+def _layering_violations() -> list[str]:
+    bad: list[str] = []
+    for path in sorted(PKG.rglob("*.py")):
+        me = _module_name(path)
+        tree = ast.parse(path.read_text())
+        # name -> query module it is bound to (``import … as``)
+        module_aliases: dict[str, str] = {}
+
+        def check(target: str, name: str | None, where: int) -> None:
+            if not _in_query_layer(me):
+                bad.append(f"{me}:{where} imports the query layer ({target})")
+            elif (
+                name is not None
+                and name.startswith("_")
+                and target != me
+                and not (target == REGISTRY and name == "_register")
+            ):
+                bad.append(f"{me}:{where} imports {target}.{name}")
+
+        for node in ast.walk(tree):
+            if isinstance(node, ast.ImportFrom) and node.module:
+                for a in node.names:
+                    sub = f"{node.module}.{a.name}"
+                    if _in_query_layer(node.module):
+                        check(node.module, a.name, node.lineno)
+                    elif _in_query_layer(sub):
+                        check(sub, None, node.lineno)
+                    if _in_query_layer(sub) and _is_module(sub):
+                        module_aliases[a.asname or a.name] = sub
+            elif isinstance(node, ast.Import):
+                for a in node.names:
+                    if _in_query_layer(a.name):
+                        check(a.name, None, node.lineno)
+                        if a.asname:
+                            module_aliases[a.asname] = a.name
+        for node in ast.walk(tree):
+            if (
+                isinstance(node, ast.Attribute)
+                and isinstance(node.value, ast.Name)
+                and node.value.id in module_aliases
+            ):
+                check(module_aliases[node.value.id], node.attr, node.lineno)
+    return bad
+
+
+def test_query_modules_share_no_private_names_and_sit_on_top():
+    bad = _layering_violations()
+    assert not bad, f"{len(bad)} layering violations:\n" + "\n".join(bad)

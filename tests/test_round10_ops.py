@@ -144,7 +144,7 @@ def test_gini_decimal_exact_beyond_int64(spark):
     Feed ranked magnitudes where that product reaches ~10²¹ and check
     the decimal pipeline against Python big-int truth exactly."""
     from ipeds_etl_spark.operators.layout import global_row_number
-    from ipeds_etl_spark.queries_wave12 import gini_from_ranked
+    from ipeds_etl_spark.queries.tpch import gini_from_ranked
 
     rng = random.Random(3)
     # pareto-ish skew at 1e12 scale: S ~ 5e17 (fits int64, as the
@@ -168,7 +168,7 @@ def test_gini_decimal_exact_beyond_int64(spark):
 # BFS 3-hop twin ≡ recursive CTE
 # ---------------------------------------------------------------------------
 def test_bfs_twin_matches_recursive_cte(spark):
-    from ipeds_etl_spark.queries_subq import (
+    from ipeds_etl_spark.queries.tpch import (
         q_parts_copurchase_3hop,
         q_parts_copurchase_3hop_bfs,
     )
@@ -186,7 +186,7 @@ def test_bfs_twin_matches_recursive_cte(spark):
 # Funnel: star and label components produce the identical funnel
 # ---------------------------------------------------------------------------
 def test_funnel_components_algorithms_agree(spark):
-    from ipeds_etl_spark.queries_wave7 import q_docs_curation_funnel
+    from ipeds_etl_spark.queries.curation import q_docs_curation_funnel
 
     label = sorted(
         map(
@@ -217,7 +217,7 @@ def test_bfs_bitmap_matches_bruteforce_across_word_boundaries(spark):
     degree-1 seed instead."""
     import random
 
-    from ipeds_etl_spark.queries_subq import _bfs3_seed_counts
+    from ipeds_etl_spark.queries.tpch import _bfs3_seed_counts
 
     rng = random.Random(11)
     # ~90 nodes; keys up to 13000 so seed indices reach div-100 = 130

@@ -63,7 +63,7 @@ def test_kmv_estimate_exact_below_k(spark):
 def test_open_interval_counts_match_naive_range_join(spark):
     """The distributed two-phase prefix sum must equal the naive
     count-per-date range join on every boundary date."""
-    from ipeds_etl_spark.queries_ext import q_orders_open_interval_counts
+    from ipeds_etl_spark.queries.tpch import q_orders_open_interval_counts
 
     got = q_orders_open_interval_counts(spark, SF)
     o = load_table(spark, SF, "orders").select(
@@ -83,7 +83,7 @@ def test_open_interval_counts_match_naive_range_join(spark):
 
 
 def test_user_trend_slope_matches_numpy(spark):
-    from ipeds_etl_spark.queries_ext import q_events_user_trend
+    from ipeds_etl_spark.queries.events import q_events_user_trend
 
     import numpy as np
 
@@ -112,7 +112,7 @@ def test_weighted_sample_prefers_heavy_docs(spark):
     proportional to weight, so the sampled docs' mean weight must
     exceed the corpus mean (statistical sanity at fixed seed-hash —
     deterministic, so no flake), and reruns are identical."""
-    from ipeds_etl_spark.queries_ext import q_docs_weighted_sample
+    from ipeds_etl_spark.queries.curation import q_docs_weighted_sample
 
     s1 = q_docs_weighted_sample(spark, SF)
     s2 = q_docs_weighted_sample(spark, SF)

@@ -8,15 +8,15 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-from ipeds_etl_spark.queries_analytics import (
+from ipeds_etl_spark.queries.events import q_events_top_paths
+from ipeds_etl_spark.queries.tpch import (
     q_customer_cohort_ltv,
     q_customer_scd2,
-    q_emb_semantic_dedup,
-    q_events_top_paths,
     q_lineitem_pricing_summary,
     q_nations_customer_supplier_balance,
     q_orders_market_basket,
 )
+from ipeds_etl_spark.queries.vectors import q_emb_semantic_dedup
 from ipeds_etl_spark.sources.tables import load_table
 
 SF = "/root/testdata/sf0.001"
@@ -212,7 +212,7 @@ def test_resample_locf_grid_and_fill(spark):
     """Grid is dense (every user × every bucket in corpus bounds);
     non-gap rows carry their own value; gap rows carry the most recent
     earlier value (NULL before a user's first observation)."""
-    from ipeds_etl_spark.queries_analytics import q_events_resample_locf
+    from ipeds_etl_spark.queries.events import q_events_resample_locf
 
     out = q_events_resample_locf(spark, SF).cache()
     try:
@@ -245,7 +245,7 @@ def test_resample_locf_grid_and_fill(spark):
 
 
 def test_yoy_growth_matches_recomputation(spark):
-    from ipeds_etl_spark.queries_analytics import q_orders_yoy_growth
+    from ipeds_etl_spark.queries.tpch import q_orders_yoy_growth
 
     rows = {r["yr"]: r for r in q_orders_yoy_growth(spark, SF).collect()}
     yrs = sorted(rows)
@@ -260,7 +260,7 @@ def test_yoy_growth_matches_recomputation(spark):
 def test_rfm_scores_respect_quartile_ordering(spark):
     """Scores are 1..4; better metrics never score lower (checked via
     pairwise monotonicity on the collected frame)."""
-    from ipeds_etl_spark.queries_analytics import q_customer_rfm_scores
+    from ipeds_etl_spark.queries.tpch import q_customer_rfm_scores
 
     rows = q_customer_rfm_scores(spark, SF).collect()
     assert all(1 <= r[s] <= 4 for r in rows for s in ("r_score", "f_score", "m_score"))
@@ -282,10 +282,7 @@ def test_pagerank_invariants(spark):
     """Ranks ≥ teleport base, mass bounded by node count (floor
     division only loses mass), and degree correlates with rank: the
     max-rank node's degree is above the median degree."""
-    from ipeds_etl_spark.queries_analytics import (
-        _PR_SCALE,
-        q_parts_copurchase_pagerank,
-    )
+    from ipeds_etl_spark.queries.tpch import _PR_SCALE, q_parts_copurchase_pagerank
 
     ranks = {r["partkey"]: r["pagerank_pico"] for r in q_parts_copurchase_pagerank(spark, SF).collect()}
     base = (15 * _PR_SCALE) // 100
@@ -368,7 +365,7 @@ def test_pairs_cap_mode_drop_drops_whole_buckets(spark):
 
 
 def test_basket_rules_ratios_consistent(spark):
-    from ipeds_etl_spark.queries_analytics import q_orders_basket_rules
+    from ipeds_etl_spark.queries.tpch import q_orders_basket_rules
 
     rows = q_orders_basket_rules(spark, SF).collect()
     assert rows
@@ -385,7 +382,7 @@ def test_basket_rules_ratios_consistent(spark):
 def test_dedup_resolution_covers_whole_corpus(spark):
     """Every doc gets exactly one verdict; cluster sizes sum to the
     corpus; exactly one keeper per cluster; singletons keep."""
-    from ipeds_etl_spark.queries_analytics import q_docs_dedup_resolution
+    from ipeds_etl_spark.queries.dedup import q_docs_dedup_resolution
 
     res = q_docs_dedup_resolution(spark, SF).cache()
     try:
@@ -403,7 +400,7 @@ def test_dedup_resolution_covers_whole_corpus(spark):
 
 
 def test_brand_coverage_division(spark):
-    from ipeds_etl_spark.queries_analytics import q_supplier_brand_coverage
+    from ipeds_etl_spark.queries.tpch import q_supplier_brand_coverage
 
     rows = q_supplier_brand_coverage(spark, SF).collect()
     n_brands = rows[0]["n_brands"]
@@ -413,7 +410,7 @@ def test_brand_coverage_division(spark):
 
 
 def test_unpivot_roundtrips_wide_values(spark):
-    from ipeds_etl_spark.queries_analytics import q_orders_yearly_metrics_long
+    from ipeds_etl_spark.queries.tpch import q_orders_yearly_metrics_long
 
     long = q_orders_yearly_metrics_long(spark, SF)
     rows = long.collect()
@@ -460,7 +457,7 @@ def test_normalize_text_canonical_properties(spark):
     """Normalization is idempotent-shaped: no double spaces, no
     punctuation, lowercase, accent-free; equal raw texts keep equal
     hashes and differing case/punct variants collapse."""
-    from ipeds_etl_spark.queries_analytics import q_docs_normalize_text
+    from ipeds_etl_spark.queries.text import q_docs_normalize_text
 
     out = q_docs_normalize_text(spark, SF)
     assert out.count() == load_table(spark, SF, "documents").count()
@@ -469,14 +466,14 @@ def test_normalize_text_canonical_properties(spark):
         [(1, "Héllo,   WORLD!"), (2, "hello world"), (3, "HELLO  world…")],
         "doc_id long, text string",
     )
-    from ipeds_etl_spark import queries_analytics as QA
+    from ipeds_etl_spark.queries import text as TQ
     import pyspark.sql.functions as SF_
 
     norm = SF_.trim(
         SF_.regexp_replace(
             SF_.regexp_replace(
                 SF_.translate(
-                    SF_.lower(SF_.col("text")), QA._ACCENTS_FROM, QA._ACCENTS_TO
+                    SF_.lower(SF_.col("text")), TQ._ACCENTS_FROM, TQ._ACCENTS_TO
                 ),
                 r"[^\p{L}\p{N}\s]+",
                 " ",
@@ -490,7 +487,7 @@ def test_normalize_text_canonical_properties(spark):
 
 
 def test_containment_pairs_bounds(spark):
-    from ipeds_etl_spark.queries_analytics import q_docs_containment_pairs
+    from ipeds_etl_spark.queries.dedup import q_docs_containment_pairs
 
     rows = q_docs_containment_pairs(spark, SF).collect()
     for r in rows:
@@ -504,7 +501,7 @@ def test_corr_matrix_matches_numpy(spark):
     on the quantized values to float precision."""
     import numpy as np
 
-    from ipeds_etl_spark.queries_analytics import _CORR_COLS, q_lineitem_corr_matrix
+    from ipeds_etl_spark.queries.tpch import _CORR_COLS, q_lineitem_corr_matrix
 
     row = q_lineitem_corr_matrix(spark, SF).first()
     pdf = load_table(spark, SF, "lineitem").select(*_CORR_COLS).toPandas()
@@ -519,7 +516,7 @@ def test_corr_matrix_matches_numpy(spark):
 def test_q3_q5_revenue_consistency(spark):
     """Q3 top rows and Q5 per-nation revenues recompute from raw data
     (independent plain-join recomputation, no shared helpers)."""
-    from ipeds_etl_spark.queries_analytics import (
+    from ipeds_etl_spark.queries.tpch import (
         q_orders_shipping_priority,
         q_regional_supplier_volume,
     )

@@ -7,7 +7,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from ipeds_etl_spark.queries_subq import (
+from ipeds_etl_spark.queries.tpch import (
     q_customers_idle_high_balance,
     q_lineitem_small_qty_revenue,
     q_orders_trailing_30d_spend,
@@ -246,7 +246,7 @@ def test_pq_rerank_recall_not_below_adc(spark):
 def test_lateral_topn_matches_window_form(spark):
     """The LATERAL spelling must give exactly the window-function
     top-2 per customer, and never more than 2 rows per customer."""
-    from ipeds_etl_spark.queries_subq import q_customer_lateral_top_orders
+    from ipeds_etl_spark.queries.tpch import q_customer_lateral_top_orders
     from pyspark.sql import Window
 
     rows = q_customer_lateral_top_orders(spark, SF).collect()
@@ -269,7 +269,7 @@ def test_lateral_topn_matches_window_form(spark):
 def test_mixture_weights_normalize_and_rebalance(spark):
     """Sampling probabilities sum to 1; smaller sources get dup_factor
     > larger sources (τ=2 flattens the distribution toward uniform)."""
-    from ipeds_etl_spark.queries_subq import q_docs_mixture_weights
+    from ipeds_etl_spark.queries.curation import q_docs_mixture_weights
 
     rows = q_docs_mixture_weights(spark, SF).collect()
     assert abs(sum(r["samp_prob"] for r in rows) - 1.0) < 1e-9
@@ -448,7 +448,7 @@ def test_scd2_pointintime_exactly_one_version_per_order(spark):
     """Interval tiling ⇒ every order matches exactly one SCD2 version,
     and the matched attr equals the priority of that customer's most
     recent daily-last state on/before the order date."""
-    from ipeds_etl_spark.queries_analytics import q_orders_scd2_pointintime
+    from ipeds_etl_spark.queries.tpch import q_orders_scd2_pointintime
 
     df = q_orders_scd2_pointintime(spark, SF)
     plan = df._jdf.queryExecution().executedPlan().toString()
@@ -510,7 +510,7 @@ def test_exact_quantiles_match_brute_force_order_statistics(spark):
 def test_recursive_cte_3hop_matches_iterative_bfs(spark):
     """The recursive-CTE reachability equals a driver-side BFS over
     the same edge list (3 hops, undirected strong co-purchase graph)."""
-    from ipeds_etl_spark.queries_subq import q_parts_copurchase_3hop
+    from ipeds_etl_spark.queries.tpch import q_parts_copurchase_3hop
 
     got = {r["seed"]: r["n_reachable_3hop"] for r in q_parts_copurchase_3hop(spark, SF).collect()}
     li = load_table(spark, SF, "lineitem").select("l_orderkey", "l_partkey").distinct()

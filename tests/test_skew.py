@@ -103,7 +103,7 @@ def test_sessionize_switches_to_salted_plan_under_skew(spark):
     user flips the final agg to the two-phase salted shape (visible as
     the __salt hash in the optimized plan); uniform users keep the
     plain one-shuffle agg. Results are identical between both shapes."""
-    from ipeds_etl_spark.queries_ext import sessionize_user_stats
+    from ipeds_etl_spark.queries.events import sessionize_user_stats
 
     hot = _planted_events(spark, hot_share=True)
     uniform = _planted_events(spark, hot_share=False)
@@ -132,7 +132,7 @@ def test_sessionize_reprobes_a_rewritten_events_file(spark, tmp_path):
     is rewritten with a hot user, the registered query probes again and
     plans the salted agg instead of serving the first, uniform
     verdict."""
-    from ipeds_etl_spark.queries_ext import q_events_sessionize
+    from ipeds_etl_spark.queries.events import q_events_sessionize
 
     sf = str(tmp_path)
 

@@ -461,7 +461,7 @@ def test_hll_stream_matches_batch_estimate(spark, stream_dir):
     estimator over all rows seen — the max-merge associativity across
     micro-batch boundaries, bit-for-bit (exact-dyadic harmonic sums on
     both paths). State is EXACTLY 64 ints per key."""
-    from ipeds_etl_spark.queries_wave5 import q_events_hll_users
+    from ipeds_etl_spark.queries.events import q_events_hll_users
     from ipeds_etl_spark.streaming.stateful import hll_distinct_stream
 
     schema = load_table(spark, SF, "events").schema
@@ -718,7 +718,7 @@ def test_hll_stream_global_expand_twin_matches_batch(spark, stream_dir):
     batch Expand), so the stream's __all__ registers are the max-merge
     of the per-type ones and the final estimate must equal the batch
     query's merged-global row bit-for-bit — per-type rows included."""
-    from ipeds_etl_spark.queries_wave5 import q_events_hll_users
+    from ipeds_etl_spark.queries.events import q_events_hll_users
     from ipeds_etl_spark.streaming.stateful import hll_distinct_stream
 
     schema = load_table(spark, SF, "events").schema
@@ -780,7 +780,7 @@ def test_window_dedup_stream_counts_match_batch(spark, stream_dir):
     (user, type, window) — per-type kept counts must equal the batch
     events_window_dedup readout (key-set equivalence; which instance
     survives differs by arrival order, the count cannot)."""
-    from ipeds_etl_spark.queries_wave6 import q_events_window_dedup
+    from ipeds_etl_spark.queries.events import q_events_window_dedup
     from ipeds_etl_spark.streaming import jobs
 
     schema = load_table(spark, SF, "events").schema
@@ -900,7 +900,7 @@ def test_srm_stream_matches_batch(spark, stream_dir):
     the batch wave-12 query bit-for-bit (same hash arms, same integer
     chi-square), and replaying the same files must not change it
     (distinct-user state absorbs re-delivery)."""
-    from ipeds_etl_spark.queries_wave12 import q_events_srm_check
+    from ipeds_etl_spark.queries.events import q_events_srm_check
 
     schema = load_table(spark, SF, "events").schema
     stream = spark.readStream.schema(schema).parquet(stream_dir)
@@ -933,7 +933,7 @@ def test_decontaminate_stream_matches_batch(spark, tmp_path):
     (availableNow) produces exactly the batch verdicts — and the
     streaming plan needs no state store (stateless append: no
     watermark, no aggregation)."""
-    from ipeds_etl_spark.queries_wave15 import _DECON_TAU, _decon_eval_vecs
+    from ipeds_etl_spark.queries.vectors import _DECON_TAU, _decon_eval_vecs
 
     d = str(tmp_path / "embeddings_stream")
     emb = load_table(spark, SF, "embeddings")

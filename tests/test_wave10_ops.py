@@ -12,7 +12,7 @@ SF = "/root/testdata/sf0.001"
 def test_stratified_split_exact_counts(spark):
     """Per stratum: n_train == (8n) div 10 and n_val == (9n) div 10 -
     (8n) div 10 EXACTLY — the whole point vs Bernoulli splitting."""
-    from ipeds_etl_spark.queries_wave10 import q_docs_stratified_split_exact
+    from ipeds_etl_spark.queries.curation import q_docs_stratified_split_exact
 
     rows = q_docs_stratified_split_exact(spark, SF).collect()
     by_stratum: dict[tuple, dict[str, int]] = {}
@@ -29,7 +29,7 @@ def test_stratified_split_exact_counts(spark):
 def test_stratified_split_input_order_invariant(spark):
     """The hash ordering makes the assignment a pure function of ids:
     feeding the corpus in reversed order yields identical checksums."""
-    from ipeds_etl_spark.queries_wave10 import q_docs_stratified_split_exact
+    from ipeds_etl_spark.queries.curation import q_docs_stratified_split_exact
     from ipeds_etl_spark.sources.tables import load_table
 
     base = {
@@ -66,7 +66,7 @@ def test_stratified_split_input_order_invariant(spark):
 
 
 def test_epoch_shuffle_differs_by_epoch_but_is_reproducible(spark):
-    from ipeds_etl_spark.queries_wave10 import q_docs_epoch_shuffle_blocks
+    from ipeds_etl_spark.queries.curation import q_docs_epoch_shuffle_blocks
 
     a = {(r.epoch, r.block): r.id_checksum
          for r in q_docs_epoch_shuffle_blocks(spark, SF).collect()}
@@ -82,7 +82,7 @@ def test_epoch_shuffle_differs_by_epoch_but_is_reproducible(spark):
 def test_sq8_constant_dim_and_exact_grid_points(spark):
     """A dimension with zero range contributes zero error (guarded
     division), and values ON the 256-level grid reconstruct exactly."""
-    from ipeds_etl_spark.queries_wave10 import _SQ_DIM, q_emb_sq8_distortion
+    from ipeds_etl_spark.queries.vectors import _SQ_DIM, q_emb_sq8_distortion
 
     # grid-exact corpus: every component is mn + k*(mx-mn)/255 for some
     # integer k -> distortion must be exactly 0

@@ -11,7 +11,7 @@ SF = "/root/testdata/sf0.001"
 def test_unigram_rarity_internal_consistency(spark):
     """rarity_x1000 is exactly the scaled truncating mean, rows come
     back rarest-first, and every row has tokens."""
-    from ipeds_etl_spark.queries_wave11 import q_docs_unigram_rarity
+    from ipeds_etl_spark.queries.text import q_docs_unigram_rarity
 
     rows = q_docs_unigram_rarity(spark, SF).collect()
     assert rows
@@ -32,10 +32,7 @@ def test_concat_chunk_packing_conserves_tokens_and_matches_window(spark):
     count; equivalence: the distributed prefix-sum spelling matches a
     plain single-window recomputation bit-for-bit at gate scale."""
     from ipeds_etl_spark.functions import text as TX
-    from ipeds_etl_spark.queries_wave11 import (
-        _PACK_BLOCK,
-        q_docs_concat_chunk_packing,
-    )
+    from ipeds_etl_spark.queries.text import _PACK_BLOCK, q_docs_concat_chunk_packing
     from ipeds_etl_spark.sources.tables import load_table
     from pyspark.sql import Window
 
@@ -86,7 +83,7 @@ def test_ngram_novelty_conservation(spark):
     sum(n_shingles) == |distinct (doc, shingle)|."""
     from ipeds_etl_spark.functions import text as TX
     from ipeds_etl_spark.functions.hashing import parity_hash
-    from ipeds_etl_spark.queries_wave11 import q_docs_ngram_novelty
+    from ipeds_etl_spark.queries.text import q_docs_ngram_novelty
     from ipeds_etl_spark.sources.tables import load_table
 
     rows = q_docs_ngram_novelty(spark, SF).collect()
@@ -112,7 +109,7 @@ def test_semdedup_survivor_invariants(spark):
     """Cluster sizes partition the corpus; a cluster's smallest vec_id
     is never dropped (it can only be id_a); zero-pair clusters keep
     everything; the run is deterministic."""
-    from ipeds_etl_spark.queries_wave11 import q_emb_semdedup
+    from ipeds_etl_spark.queries.vectors import q_emb_semdedup
     from ipeds_etl_spark.sources.tables import load_table
 
     rows = q_emb_semdedup(spark, SF).collect()
@@ -134,7 +131,7 @@ def test_semdedup_mega_cluster_cap_bounds_expansion(spark, tmp_path):
     identical) must degrade to a rank-capped expansion with a LOUD
     n_overflow audit row — cap² pairs, not n² — and the unexamined
     members are kept (checksum counts them)."""
-    from ipeds_etl_spark.queries_wave11 import semdedup_report
+    from ipeds_etl_spark.queries.vectors import semdedup_report
 
     n, cap = 10, 4
     spark.createDataFrame(
@@ -162,11 +159,11 @@ def test_semdedup_broadcast_assignment_matches_literal_path(spark, monkeypatch):
     trajectory bit-for-bit (same seeding, distances, lower-cid
     tie-break) — forced here by dropping the literal-path threshold to
     0 at the gate k."""
-    import ipeds_etl_spark.queries_wave11 as w11
+    import ipeds_etl_spark.queries.vectors as V
 
-    base = w11.semdedup_report(spark, SF).collect()
-    monkeypatch.setattr(w11, "_SD_LITERAL_K_MAX", 0)
-    via_join = w11.semdedup_report(spark, SF).collect()
+    base = V.semdedup_report(spark, SF).collect()
+    monkeypatch.setattr(V, "_SD_LITERAL_K_MAX", 0)
+    via_join = V.semdedup_report(spark, SF).collect()
     assert [tuple(r) for r in base] == [tuple(r) for r in via_join]
 
 
@@ -175,7 +172,7 @@ def test_hybrid_rrf_fusion_invariants(spark):
     score is exactly 10^6 div (60+lex_rank) + 10^6 div (60+sem_rank);
     fused ordering is monotone in the score with doc_id tiebreak; a doc
     that is rank 1 on BOTH lists must be fused rank 1."""
-    from ipeds_etl_spark.queries_wave11 import _RRF_K, q_docs_hybrid_rrf
+    from ipeds_etl_spark.queries.text import _RRF_K, q_docs_hybrid_rrf
 
     rows = q_docs_hybrid_rrf(spark, SF).collect()
     assert rows
@@ -202,7 +199,7 @@ def test_hard_negatives_lexical_disjointness(spark):
     query; and no emitted cosine exceeds the best cosine among the
     full zero-overlap candidate set (i.e. top-k is genuine)."""
     from ipeds_etl_spark.functions import text as TX
-    from ipeds_etl_spark.queries_wave11 import q_docs_hard_negatives
+    from ipeds_etl_spark.queries.text import q_docs_hard_negatives
     from ipeds_etl_spark.sources.tables import load_table
 
     rows = q_docs_hard_negatives(spark, SF).collect()
@@ -232,7 +229,7 @@ def test_mrl_funnel_recall_invariants(spark):
     shortlist contains the direct top-10 by construction); hits are
     bounded by k; recall permille is exactly 1000*hits div k; one row
     per anchor."""
-    from ipeds_etl_spark.queries_wave11 import _MRL_K, q_emb_mrl_funnel_recall
+    from ipeds_etl_spark.queries.vectors import _MRL_K, q_emb_mrl_funnel_recall
 
     rows = q_emb_mrl_funnel_recall(spark, SF).collect()
     assert len(rows) == 5

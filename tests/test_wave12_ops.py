@@ -31,7 +31,7 @@ def _cdc_chunks(tokens: list[str], w: int = 4, d: int = 8) -> list[list[str]]:
 def test_cdc_chunk_python_replay(spark):
     """Per-source chunk/token/dup accounting must equal a pure-Python
     replay of the boundary rule over the same corpus."""
-    from ipeds_etl_spark.queries_wave12 import q_docs_cdc_chunk_dedup
+    from ipeds_etl_spark.queries.dedup import q_docs_cdc_chunk_dedup
     from ipeds_etl_spark.sources.tables import load_table
 
     docs = load_table(spark, SF, "documents").select(
@@ -92,7 +92,7 @@ def test_cdc_boundaries_resynchronize_after_shift(spark, tmp_path):
         "doc_id long, text string, lang string, source string, n_chars long",
     ).write.parquet(str(tmp_path / "documents.parquet"))
 
-    from ipeds_etl_spark.queries_wave12 import q_docs_cdc_chunk_dedup
+    from ipeds_etl_spark.queries.dedup import q_docs_cdc_chunk_dedup
 
     row = q_docs_cdc_chunk_dedup(spark, str(tmp_path)).collect()[0]
     # Python replay: the two docs must share every chunk from the first
@@ -112,7 +112,7 @@ def test_dp_histogram_mechanism(spark):
     """Noise must be the exact inverse-CDF lookup of the frozen table
     at the seeded hash; released counts clamp at 0; the CDF itself is
     strictly monotone and complete."""
-    from ipeds_etl_spark.queries_wave12 import (
+    from ipeds_etl_spark.queries.curation import (
         _DP_CDF,
         _DP_SCALE,
         q_docs_dp_source_histogram,
@@ -137,10 +137,8 @@ def test_srm_check_python_replay_and_planted_mismatch(spark, tmp_path):
     """(a) sf0.001 readout equals an independent replay of the hash
     assignment and the collapsed chi² form; (b) a deliberately
     one-sided synthetic experiment trips the flag."""
-    from ipeds_etl_spark.queries_wave12 import (
-        _SRM_CRIT_X1E6,
-        q_events_srm_check,
-    )
+    from ipeds_etl_spark.queries.events import q_events_srm_check
+    from ipeds_etl_spark.streaming.jobs import SRM_CRIT_X1E6
     from ipeds_etl_spark.sources.tables import load_table
 
     ev = load_table(spark, SF, "events").select("event_type", "user_id").collect()
@@ -154,7 +152,7 @@ def test_srm_check_python_replay_and_planted_mismatch(spark, tmp_path):
         assert (r.users_a, r.users_b) == (a, b)
         d, n = a - b, a + b
         assert r.chi2_x1e6 == (1_000_000 * d * d) // n
-        assert r.srm_flag == int(1_000_000 * d * d >= _SRM_CRIT_X1E6 * n)
+        assert r.srm_flag == int(1_000_000 * d * d >= SRM_CRIT_X1E6 * n)
 
     # planted mismatch: keep only users hashed into arm 0 — the most
     # extreme SRM possible must flag
@@ -174,7 +172,7 @@ def test_srm_check_python_replay_and_planted_mismatch(spark, tmp_path):
 def test_revenue_gini_numpy_replay(spark):
     """gini_x1000 equals the textbook rank-formula Gini computed in
     Python over the same floored per-customer revenues."""
-    from ipeds_etl_spark.queries_wave12 import q_customer_revenue_gini
+    from ipeds_etl_spark.queries.tpch import q_customer_revenue_gini
     from ipeds_etl_spark.sources.tables import load_table
 
     o = load_table(spark, SF, "orders")
@@ -198,10 +196,7 @@ def test_packing_fragmentation_identities(spark):
     """Packing never uses more blocks than padding; waste permilles
     recompute exactly from the block counts; token totals agree with a
     direct count."""
-    from ipeds_etl_spark.queries_wave12 import (
-        _FRAG_CTX,
-        q_docs_packing_fragmentation,
-    )
+    from ipeds_etl_spark.queries.text import _FRAG_CTX, q_docs_packing_fragmentation
     from ipeds_etl_spark.functions import text as TX
     from ipeds_etl_spark.sources.tables import load_table
 
@@ -237,7 +232,7 @@ def test_ivf_probe_sweep_monotonicity(spark):
     """Recall must be non-decreasing in nprobe (more probed partitions
     can only add candidates), hit at most k_total, and reach the
     single-point emb_ivf_recall gate's value at nprobe=2."""
-    from ipeds_etl_spark.queries_wave12 import q_emb_ivf_probe_sweep
+    from ipeds_etl_spark.queries.vectors import q_emb_ivf_probe_sweep
 
     rows = {r.n_probe: r for r in q_emb_ivf_probe_sweep(spark, SF).collect()}
     assert sorted(rows) == [1, 2, 4]
@@ -249,7 +244,7 @@ def test_ivf_probe_sweep_monotonicity(spark):
         assert r.recall >= prev
         prev = r.recall
 
-    from ipeds_etl_spark.queries_ext import q_emb_ivf_recall
+    from ipeds_etl_spark.queries.vectors import q_emb_ivf_recall
 
     gate = q_emb_ivf_recall(spark, SF).collect()
     assert rows[2].n_hit == sum(g.n_hit for g in gate)
@@ -259,7 +254,7 @@ def test_ivf_probe_sweep_monotonicity(spark):
 def test_bot_score_python_replay(spark):
     """The per-user heuristics and the point rule must equal an
     independent Python replay over the raw events."""
-    from ipeds_etl_spark.queries_wave12 import (
+    from ipeds_etl_spark.queries.events import (
         _BOT_BURST_MIN,
         _BOT_MONOTONY_PERMILLE,
         _BOT_POINTS_FLAG,
@@ -320,11 +315,11 @@ def test_pq_codebook_balance_bounds(spark):
     """Simpson ×10⁶ is bounded below by the uniform value 10⁶/n_used
     and above by 10⁶; per-subspace shares are consistent; subspaces
     cover exactly the PQ geometry."""
-    from ipeds_etl_spark.queries_ext import _PQ_M
-    from ipeds_etl_spark.queries_wave12 import q_emb_pq_codebook_balance
+    from ipeds_etl_spark.operators.indexes import PQ_M
+    from ipeds_etl_spark.queries.vectors import q_emb_pq_codebook_balance
 
     rows = q_emb_pq_codebook_balance(spark, SF).collect()
-    assert [r.subspace for r in rows] == list(range(_PQ_M))
+    assert [r.subspace for r in rows] == list(range(PQ_M))
     for r in rows:
         assert 1 <= r.n_codes_used <= 16
         # uniform lower bound (integer-truncated), degenerate upper

@@ -29,7 +29,7 @@ def test_mwu_python_replay(spark):
     """n_a/n_b/2U_A/tie-term per event type must equal a brute-force
     pairwise replay (the O(n_a·n_b) definition, not the prefix-sum
     plan) over the same arm assignment."""
-    from ipeds_etl_spark.queries_wave13 import q_events_mann_whitney_u
+    from ipeds_etl_spark.queries.events import q_events_mann_whitney_u
     from ipeds_etl_spark.sources.tables import load_table
 
     rows = (
@@ -88,7 +88,7 @@ def test_priority_sample_python_replay(spark):
     """τ, k_used and the subset-sum estimate must equal the
     Duffield-Lund-Thorup construction replayed in Python; the
     estimator must be exact whenever the stratum fits in the sample."""
-    from ipeds_etl_spark.queries_wave13 import (
+    from ipeds_etl_spark.queries.events import (
         _PS_HS,
         _PS_K,
         q_events_priority_sample_estimator,
@@ -142,10 +142,7 @@ def test_bigram_lm_python_replay(spark):
     """Per-source bigram count and summed floor-log2 surprisal must
     equal an independent replay of train-on-src0 / add-one smoothing;
     surprisal is non-negative by construction."""
-    from ipeds_etl_spark.queries_wave13 import (
-        _LM_REF_SOURCE,
-        q_docs_bigram_lm_ppl,
-    )
+    from ipeds_etl_spark.queries.text import _LM_REF_SOURCE, q_docs_bigram_lm_ppl
     from ipeds_etl_spark.sources.tables import load_table
 
     docs = (
@@ -195,8 +192,8 @@ def test_dup_threshold_sweep_monotone_and_consistent(spark):
     0.40 row must agree with ``emb_near_dups`` (same candidate
     generator, same verify) — the cross-query check that the sweep
     measures the production operator, not a parallel implementation."""
-    from ipeds_etl_spark.queries_ext import q_emb_near_dups
-    from ipeds_etl_spark.queries_wave13 import q_emb_dup_threshold_sweep
+    from ipeds_etl_spark.queries.vectors import q_emb_near_dups
+    from ipeds_etl_spark.queries.vectors import q_emb_dup_threshold_sweep
     from ipeds_etl_spark.sources.tables import load_table
 
     rows = sorted(
@@ -227,7 +224,7 @@ def test_cuped_python_replay(spark):
     replay of the pooled-θ CUPED construction; ρ² ∈ [0, 1]; CUPED
     leaves the EXPECTED lift structure intact (adjustment uses only
     the pre-period covariate)."""
-    from ipeds_etl_spark.queries_wave13 import q_events_cuped_adjustment
+    from ipeds_etl_spark.queries.events import q_events_cuped_adjustment
     from ipeds_etl_spark.sources.tables import load_table
 
     rows = (
@@ -287,9 +284,7 @@ def test_priority_sample_plan_has_window_group_limit(spark):
     top-k BEFORE the exchange), so the shuffle carries O(partitions·k)
     rows — if a Spark upgrade or a rewrite loses the rank-limit
     pushdown, this fails before the 100 TB run does."""
-    from ipeds_etl_spark.queries_wave13 import (
-        q_events_priority_sample_estimator,
-    )
+    from ipeds_etl_spark.queries.events import q_events_priority_sample_estimator
 
     df = q_events_priority_sample_estimator(spark, SF)
     plan = df._jdf.queryExecution().executedPlan().toString()

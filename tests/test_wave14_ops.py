@@ -52,8 +52,8 @@ def test_cdc_rewrite_shift_robust(spark, tmp_path):
     because content-defined boundaries re-synchronize — while the
     fixed-10-word passage rewrite keeps nearly everything (every
     chunk boundary shifted). An unrelated doc is untouched."""
-    from ipeds_etl_spark.queries_ext import q_docs_passage_dedup_rewrite
-    from ipeds_etl_spark.queries_wave14 import q_docs_cdc_dedup_rewrite
+    from ipeds_etl_spark.queries.dedup import q_docs_passage_dedup_rewrite
+    from ipeds_etl_spark.queries.dedup import q_docs_cdc_dedup_rewrite
 
     rng = random.Random(11)
     vocab = [f"tok{i}" for i in range(500)]
@@ -88,8 +88,8 @@ def test_cdc_rewrite_global_first_occurrence(spark):
     corpus-wide, the number of kept chunks equals the number of
     DISTINCT chunk strings (exactly one survivor per chunk), and every
     empty doc still appears with zeroed counters."""
-    from ipeds_etl_spark.queries_wave12 import cdc_chunks
-    from ipeds_etl_spark.queries_wave14 import q_docs_cdc_dedup_rewrite
+    from ipeds_etl_spark.queries.dedup import cdc_chunks
+    from ipeds_etl_spark.queries.dedup import q_docs_cdc_dedup_rewrite
 
     out = q_docs_cdc_dedup_rewrite(spark, SF).collect()
     d = load_table(spark, SF, "documents")
@@ -112,7 +112,7 @@ def test_first_occurrence_keep_envelope(spark):
     and (b) pick the lexicographically-first occurrence where the old
     encoding MISORDERED (doc 0 chunk 2_500_000 encodes 2_500_000 >
     doc 1 chunk 0's 1_000_000, so the old min wrongly chose doc 1)."""
-    from ipeds_etl_spark.queries_wave14 import first_occurrence_keep
+    from ipeds_etl_spark.queries.dedup import first_occurrence_keep
 
     ch = spark.createDataFrame(
         [
@@ -175,7 +175,7 @@ def test_qsketch_python_replay(spark):
     """Level, retained count, and both quantile estimates of the
     registered query must equal the pure-Python replay of the
     hash-level sampling rule, per event type."""
-    from ipeds_etl_spark.queries_wave14 import _QSK_K, q_events_value_qsketch
+    from ipeds_etl_spark.queries.events import _QSK_K, q_events_value_qsketch
 
     by_type = defaultdict(list)
     for et, eid, v in _events_rows(spark):
@@ -200,7 +200,7 @@ def test_qsketch_rank_error_vs_exact(spark):
     k = 256 the sampling rank error is O(n/√k) ≈ 6% of n, so the
     measured rank permille must land within ±150 of 500 / 900 (loose
     3σ-ish envelope; deterministic, so this can't flake)."""
-    from ipeds_etl_spark.queries_wave14 import q_events_value_qsketch
+    from ipeds_etl_spark.queries.events import q_events_value_qsketch
 
     for r in q_events_value_qsketch(spark, SF).collect():
         assert abs(r.p500_rank_permille - 500) <= 150, r
@@ -249,7 +249,7 @@ def test_qsketch_stream_equals_batch(spark, tmp_path):
     """Streaming twin replay equality: final state per key (n, level,
     n_retained, est_p500) must equal the batch sketch over all rows —
     the same bar as the KMV/HLL stream twins."""
-    from ipeds_etl_spark.queries_wave14 import q_events_value_qsketch
+    from ipeds_etl_spark.queries.events import q_events_value_qsketch
     from ipeds_etl_spark.streaming.stateful import quantile_sketch_stream
 
     d = str(tmp_path / "qsk_stream")

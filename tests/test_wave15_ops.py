@@ -301,7 +301,7 @@ def test_semantic_decontaminate_flags_planted_clone(spark, tmp_path):
     vector at cosine EXACTLY tau is contaminated (>= is inclusive) —
     the vectors are integer-exact so 2/5 == double(0.4) bitwise;
     (c) a vector orthogonal to every eval vector stays clean."""
-    from ipeds_etl_spark.queries_wave15 import (
+    from ipeds_etl_spark.queries.vectors import (
         _DECON_EVAL_N,
         _DECON_TAU,
         q_emb_semantic_decontaminate,
@@ -341,7 +341,7 @@ def test_incremental_decontaminate_cross_side_only(spark, tmp_path):
     existing NON-eval vector keeps — the decontamination gate is
     against the eval set, not a dedup pass; (d) the plan is map-only:
     zero exchanges on the batch scan."""
-    from ipeds_etl_spark.queries_wave15 import (
+    from ipeds_etl_spark.queries.vectors import (
         _DECON_BATCH_SPLIT,
         _DECON_EVAL_N,
         q_emb_incremental_decontaminate,
@@ -386,7 +386,8 @@ def test_vocab8k_is_production_scale_and_python_exact(spark):
     >=8k units, segmentation against it agrees with the pure-Python
     greedy replay on every benchmark word, and the broadcast variant
     is result-identical to the (json-literal) default."""
-    from ipeds_etl_spark.queries_wave15 import _VOCAB_MAX_LEN, _vocab_8k
+    from ipeds_etl_spark.operators.indexes import VOCAB_MAX_LEN
+    from ipeds_etl_spark.queries.text import _vocab_8k
 
     vocab = _vocab_8k(spark, SF)
     assert len(vocab) >= 8000
@@ -395,18 +396,18 @@ def test_vocab8k_is_production_scale_and_python_exact(spark):
     lit = {
         r.w: (list(r.pieces), r.word_tokens)
         for r in BPE.segment_longest_match(
-            words, vocab, max_len=_VOCAB_MAX_LEN
+            words, vocab, max_len=VOCAB_MAX_LEN
         ).collect()
     }
     assert lit
     vset = set(vocab) | set(BPE.ALPHABET)
     for w, (pieces, ntok) in lit.items():
-        assert pieces == _py_greedy(w, vset, _VOCAB_MAX_LEN), w
+        assert pieces == _py_greedy(w, vset, VOCAB_MAX_LEN), w
         assert ntok == len(pieces)
     bc = {
         r.w: (list(r.pieces), r.word_tokens)
         for r in BPE.segment_longest_match(
-            words, vocab, max_len=_VOCAB_MAX_LEN, vocab_via="broadcast"
+            words, vocab, max_len=VOCAB_MAX_LEN, vocab_via="broadcast"
         ).collect()
     }
     assert bc == lit

@@ -10,19 +10,17 @@ import re
 from pyspark.sql import functions as F
 
 from ipeds_etl_spark.operators import sketches as SK
-from ipeds_etl_spark.queries_wave5 import (
+from ipeds_etl_spark.queries.curation import q_docs_source_lang_drift
+from ipeds_etl_spark.queries.dedup import _SNM_J, _SNM_W, q_docs_snm_pairs
+from ipeds_etl_spark.queries.events import (
     _CEP_P1,
     _CEP_P2,
     _CEP_P3,
-    _SNM_J,
-    _SNM_W,
-    q_docs_snm_pairs,
-    q_docs_source_lang_drift,
     q_events_cep_pattern_match,
     q_events_cms_user_counts,
     q_events_hll_users,
-    q_parts_skyline_2d,
 )
+from ipeds_etl_spark.queries.tpch import q_parts_skyline_2d
 from ipeds_etl_spark.sources.tables import load_table
 
 SF = "/root/testdata/sf0.001"
@@ -214,14 +212,10 @@ def test_snm_candidates_are_exactly_the_rank_band(spark):
 def test_kcore_matches_python_peel_replay(spark):
     """Replay the fixed-round 2-core peel in Python from the same LSH
     candidate pairs and compare (node, degree) exactly."""
-    from ipeds_etl_spark.queries_ext import _lsh_doc_pairs
-    from ipeds_etl_spark.queries_wave5 import (
-        _KCORE_K,
-        _KCORE_ROUNDS,
-        q_dedup_kcore,
-    )
+    from ipeds_etl_spark.operators.indexes import lsh_doc_pairs
+    from ipeds_etl_spark.queries.dedup import _KCORE_K, _KCORE_ROUNDS, q_dedup_kcore
 
-    pairs = [(r.id_a, r.id_b) for r in _lsh_doc_pairs(spark, SF).collect()]
+    pairs = [(r.id_a, r.id_b) for r in lsh_doc_pairs(spark, SF).collect()]
     edges = set(pairs) | {(b, a) for a, b in pairs}
     for _ in range(_KCORE_ROUNDS):
         deg: dict[int, int] = {}
@@ -244,12 +238,12 @@ def test_minhash_estimate_matches_signature_agreement(spark):
     """est_j must be exactly (# agreeing positions)/16 recomputed from
     the signature arrays, and err must be est_j - exact_j."""
     from ipeds_etl_spark.operators import dedup as DD
-    from ipeds_etl_spark.queries_ext import _docs
-    from ipeds_etl_spark.queries_wave5 import q_dedup_minhash_estimate
+    from ipeds_etl_spark.queries.shared import docs_scan
+    from ipeds_etl_spark.queries.dedup import q_dedup_minhash_estimate
 
     sigs = {
         r.doc_id: list(r.sig)
-        for r in DD.minhash_signatures(_docs(spark, SF), "text", "doc_id").collect()
+        for r in DD.minhash_signatures(docs_scan(spark, SF), "text", "doc_id").collect()
     }
     rows = q_dedup_minhash_estimate(spark, SF).collect()
     assert rows
@@ -266,7 +260,7 @@ def test_minhash_estimate_matches_signature_agreement(spark):
 # Gaps-and-islands
 # ---------------------------------------------------------------------------
 def test_streaks_match_python_island_replay(spark):
-    from ipeds_etl_spark.queries_wave5 import q_customer_order_streaks
+    from ipeds_etl_spark.queries.tpch import q_customer_order_streaks
 
     o = load_table(spark, SF, "orders").select("o_custkey", "o_orderdate").collect()
     months: dict[int, set] = {}
@@ -295,7 +289,7 @@ def test_streaks_match_python_island_replay(spark):
 # Rolling anomaly
 # ---------------------------------------------------------------------------
 def test_rolling_anomaly_matches_python_window_replay(spark):
-    from ipeds_etl_spark.queries_wave5 import q_events_rolling_anomaly
+    from ipeds_etl_spark.queries.events import q_events_rolling_anomaly
 
     e = load_table(spark, SF, "events").collect()
     daily: dict[tuple, int] = {}
@@ -338,7 +332,7 @@ def test_rolling_anomaly_matches_python_window_replay(spark):
 # Golden record
 # ---------------------------------------------------------------------------
 def test_golden_record_survivorship_rules(spark):
-    from ipeds_etl_spark.queries_wave5 import q_docs_golden_record
+    from ipeds_etl_spark.queries.dedup import q_docs_golden_record
 
     docs = {
         r.doc_id: r
@@ -351,7 +345,7 @@ def test_golden_record_survivorship_rules(spark):
     assert sum(r.cluster_size for r in rows) == len(docs)
     # survivor must be a member maximizing (n_chars, -doc_id) — verify
     # against the registered resolution query's cluster assignment
-    from ipeds_etl_spark.queries_analytics import q_docs_dedup_resolution
+    from ipeds_etl_spark.queries.dedup import q_docs_dedup_resolution
 
     assign = {
         r.doc_id: r.cluster_id for r in q_docs_dedup_resolution(spark, SF).collect()
@@ -377,7 +371,7 @@ def test_golden_record_survivorship_rules(spark):
 # Blocking-union recall
 # ---------------------------------------------------------------------------
 def test_blocking_union_recall_invariants(spark):
-    from ipeds_etl_spark.queries_wave5 import q_dedup_blocking_union_recall
+    from ipeds_etl_spark.queries.dedup import q_dedup_blocking_union_recall
 
     r = q_dedup_blocking_union_recall(spark, SF).collect()[0]
     assert r.n_gold > 0
@@ -392,7 +386,7 @@ def test_blocking_union_recall_invariants(spark):
 # Cluster purity
 # ---------------------------------------------------------------------------
 def test_cluster_purity_partitions_corpus_and_recomputes(spark):
-    from ipeds_etl_spark.queries_wave5 import q_emb_cluster_purity
+    from ipeds_etl_spark.queries.vectors import q_emb_cluster_purity
 
     e = load_table(spark, SF, "embeddings")
     n = e.count()
@@ -410,7 +404,7 @@ def test_cluster_purity_partitions_corpus_and_recomputes(spark):
 def test_funnel_time_quantiles_match_order_statistics(spark):
     import math
 
-    from ipeds_etl_spark.queries_wave5 import _CONV_QS, q_events_funnel_time_quantiles
+    from ipeds_etl_spark.queries.events import _CONV_QS, q_events_funnel_time_quantiles
 
     e = load_table(spark, SF, "events").collect()
     views: dict[int, object] = {}
@@ -438,7 +432,7 @@ def test_funnel_time_quantiles_match_order_statistics(spark):
 # Top-k with ties
 # ---------------------------------------------------------------------------
 def test_top_customers_ties_uses_rank_semantics(spark):
-    from ipeds_etl_spark.queries_wave5 import q_nation_top_customers_ties
+    from ipeds_etl_spark.queries.tpch import q_nation_top_customers_ties
 
     rows = q_nation_top_customers_ties(spark, SF).collect()
     by_nation: dict[int, list] = {}
@@ -491,7 +485,7 @@ def test_global_prefix_sum_equals_naive_window(spark):
 # Pareto 80/20
 # ---------------------------------------------------------------------------
 def test_pareto_8020_matches_python_decimal_replay(spark):
-    from ipeds_etl_spark.queries_wave5 import q_orders_pareto_8020
+    from ipeds_etl_spark.queries.tpch import q_orders_pareto_8020
 
     o = load_table(spark, SF, "orders").select("o_custkey", "o_totalprice").collect()
     from decimal import Decimal
@@ -522,7 +516,7 @@ def test_pareto_8020_matches_python_decimal_replay(spark):
 def test_temporal_split_leakage_matches_python_replay(spark):
     import math
 
-    from ipeds_etl_spark.queries_wave5 import q_events_temporal_split
+    from ipeds_etl_spark.queries.events import q_events_temporal_split
 
     e = load_table(spark, SF, "events").select("user_id", "ts").collect()
     micros = sorted(int(r.ts.timestamp() * 1_000_000) for r in e)
@@ -546,7 +540,7 @@ def test_temporal_split_leakage_matches_python_replay(spark):
 # Equi-depth histogram
 # ---------------------------------------------------------------------------
 def test_equidepth_buckets_partition_and_are_balanced(spark):
-    from ipeds_etl_spark.queries_wave5 import q_lineitem_price_equidepth
+    from ipeds_etl_spark.queries.tpch import q_lineitem_price_equidepth
 
     li = load_table(spark, SF, "lineitem")
     n = li.count()
@@ -566,7 +560,7 @@ def test_equidepth_buckets_partition_and_are_balanced(spark):
 # Markov stationary distribution
 # ---------------------------------------------------------------------------
 def test_markov_stationary_matches_python_integer_replay(spark):
-    from ipeds_etl_spark.queries_wave5 import (
+    from ipeds_etl_spark.queries.events import (
         _MK_ITERS,
         _MK_SCALE,
         q_events_markov_stationary,
@@ -603,7 +597,7 @@ def test_markov_stationary_matches_python_integer_replay(spark):
 # Token-budget apportionment
 # ---------------------------------------------------------------------------
 def test_token_budget_allocates_exactly_and_by_largest_remainder(spark):
-    from ipeds_etl_spark.queries_wave5 import (
+    from ipeds_etl_spark.queries.curation import (
         _ALLOC_BUDGET,
         q_docs_token_budget_allocation,
     )
@@ -629,7 +623,7 @@ def test_token_budget_allocates_exactly_and_by_largest_remainder(spark):
 def test_winsorized_stats_match_python_replay(spark):
     import math
 
-    from ipeds_etl_spark.queries_wave5 import q_orders_winsorized_stats
+    from ipeds_etl_spark.queries.tpch import q_orders_winsorized_stats
 
     prices = sorted(
         r.o_totalprice
@@ -651,7 +645,7 @@ def test_winsorized_stats_match_python_replay(spark):
 # Weighted median
 # ---------------------------------------------------------------------------
 def test_weighted_median_matches_python_replay(spark):
-    from ipeds_etl_spark.queries_wave5 import q_lineitem_weighted_median_price
+    from ipeds_etl_spark.queries.tpch import q_lineitem_weighted_median_price
 
     rows = (
         load_table(spark, SF, "lineitem")
@@ -676,7 +670,7 @@ def test_weighted_median_matches_python_replay(spark):
 # Butterflies
 # ---------------------------------------------------------------------------
 def test_butterflies_match_python_replay(spark):
-    from ipeds_etl_spark.queries_wave5 import q_parts_copurchase_butterflies
+    from ipeds_etl_spark.queries.tpch import q_parts_copurchase_butterflies
 
     items = (
         load_table(spark, SF, "lineitem")

@@ -7,19 +7,21 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from ipeds_etl_spark.queries_wave6 import (
-    _TREND_XC,
-    _TREND_YC,
-    q_customer_decile_transition,
-    q_docs_bigram_conditionals,
-    q_docs_length_ks_drift,
-    q_emb_pca_power_iteration,
+from ipeds_etl_spark.queries.curation import q_docs_length_ks_drift
+from ipeds_etl_spark.queries.events import (
     q_events_hll_sliding,
     q_events_kmv_intersection,
     q_events_window_dedup,
+)
+from ipeds_etl_spark.queries.text import q_docs_bigram_conditionals
+from ipeds_etl_spark.queries.tpch import (
+    _TREND_XC,
+    _TREND_YC,
+    q_customer_decile_transition,
     q_parts_supplier_hhi,
     q_supplier_price_trend,
 )
+from ipeds_etl_spark.queries.vectors import q_emb_pca_power_iteration
 from ipeds_etl_spark.sources.tables import load_table
 
 SF = "/root/testdata/sf0.001"
@@ -235,7 +237,7 @@ def test_multitouch_credit_conserves_exactly(spark):
     """Largest-remainder apportionment per purchase: total credited
     basis points must equal 10000 x purchases EXACTLY — no attribution
     dust (the Hamilton-rule guarantee, integer arithmetic only)."""
-    from ipeds_etl_spark.queries_wave6 import q_events_multitouch_attribution
+    from ipeds_etl_spark.queries.events import q_events_multitouch_attribution
 
     (r,) = q_events_multitouch_attribution(spark, SF).collect()
     assert r.n_purchases > 0 and r.n_credited_clicks >= r.n_purchases
@@ -246,7 +248,7 @@ def test_multitouch_credit_conserves_exactly(spark):
 def test_neyman_allocation_conserves_and_favors_variance(spark):
     """Hamilton conservation (Σ alloc == budget exactly) and the
     Neyman property: allocation ordering follows N_h·S_h ordering."""
-    from ipeds_etl_spark.queries_wave6 import _NEY_BUDGET, q_docs_neyman_allocation
+    from ipeds_etl_spark.queries.curation import _NEY_BUDGET, q_docs_neyman_allocation
 
     rows = q_docs_neyman_allocation(spark, SF).collect()
     assert rows and sum(r.alloc for r in rows) == _NEY_BUDGET

@@ -6,12 +6,10 @@ from __future__ import annotations
 import numpy as np
 import pyarrow.parquet as pq
 
-from ipeds_etl_spark.queries_wave7 import (
-    q_dedup_bcubed_eval,
-    q_docs_dsir_importance,
-    q_emb_kcenter_coreset,
-    q_lineitem_zorder_stats,
-)
+from ipeds_etl_spark.queries.curation import q_docs_dsir_importance
+from ipeds_etl_spark.queries.dedup import q_dedup_bcubed_eval
+from ipeds_etl_spark.queries.tpch import q_lineitem_zorder_stats
+from ipeds_etl_spark.queries.vectors import q_emb_kcenter_coreset
 
 SF = "/root/testdata/sf0.001"
 
@@ -116,7 +114,7 @@ def test_dsir_auc_separates_seed(spark):
 
 
 def test_label_propagation_bounds_and_locality(spark):
-    from ipeds_etl_spark.queries_wave7 import q_docs_quality_label_propagation
+    from ipeds_etl_spark.queries.curation import q_docs_quality_label_propagation
 
     rows = q_docs_quality_label_propagation(spark, SF).collect()
     assert len(rows) == 20  # one per source
@@ -132,7 +130,7 @@ def test_label_propagation_bounds_and_locality(spark):
 
 
 def test_source_overlap_matrix_estimates(spark):
-    from ipeds_etl_spark.queries_wave7 import q_docs_source_overlap_matrix
+    from ipeds_etl_spark.queries.curation import q_docs_source_overlap_matrix
 
     rows = q_docs_source_overlap_matrix(spark, SF).collect()
     assert len(rows) == 190  # C(20,2) source pairs
@@ -148,7 +146,7 @@ def test_kmeans_matches_numpy_replay(spark):
     """Lloyd's with integer coordinates, min-id seeding, lower-cid tie
     break, and truncating-division centroid updates is a pure function
     of the data — numpy replays the 3 rounds exactly."""
-    from ipeds_etl_spark.queries_wave7 import q_emb_kmeans_lloyd
+    from ipeds_etl_spark.queries.vectors import q_emb_kmeans_lloyd
 
     got = [
         (r.cluster_id, r.n_points, r.inertia_sq)
@@ -186,7 +184,7 @@ def test_kmeans_matches_numpy_replay(spark):
 
 
 def test_curation_funnel_chains_and_accounts(spark):
-    from ipeds_etl_spark.queries_wave7 import q_docs_curation_funnel
+    from ipeds_etl_spark.queries.curation import q_docs_curation_funnel
 
     rows = q_docs_curation_funnel(spark, SF).collect()
     assert [r.stage for r in rows] == [

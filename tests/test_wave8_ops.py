@@ -10,13 +10,10 @@ from collections import Counter, defaultdict
 import numpy as np
 import pyarrow.parquet as pq
 
-from ipeds_etl_spark.queries_ext import _lsh_doc_pairs
-from ipeds_etl_spark.queries_wave8 import (
-    _LPA_ROUNDS,
-    q_dedup_lpa_communities,
-    q_docs_rater_agreement_kappa,
-    q_events_cusum_changepoint,
-)
+from ipeds_etl_spark.operators.indexes import lsh_doc_pairs
+from ipeds_etl_spark.queries.curation import q_docs_rater_agreement_kappa
+from ipeds_etl_spark.queries.dedup import _LPA_ROUNDS, q_dedup_lpa_communities
+from ipeds_etl_spark.queries.events import q_events_cusum_changepoint
 
 SF = "/root/testdata/sf0.001"
 
@@ -26,7 +23,7 @@ def test_lpa_matches_sync_replay(spark):
     pure function of the edge set — a dict-based replay over the same
     LSH pairs must produce identical community sizes."""
     pairs = [
-        (r.id_a, r.id_b) for r in _lsh_doc_pairs(spark, SF).collect()
+        (r.id_a, r.id_b) for r in lsh_doc_pairs(spark, SF).collect()
     ]
     adj = defaultdict(set)
     for a, b in pairs:
@@ -100,7 +97,7 @@ def test_winnowing_matches_python_replay(spark):
     same sha256-prefix hashes and compare the fingerprint pair counts."""
     import hashlib
 
-    from ipeds_etl_spark.queries_wave8 import (
+    from ipeds_etl_spark.queries.dedup import (
         _WIN_K,
         _WIN_MAX_DF,
         _WIN_MIN_SHARED,
@@ -152,7 +149,7 @@ def test_winnowing_shared_substring_guarantee(spark):
     raw fingerprint sets for a planted pair."""
     import hashlib
 
-    from ipeds_etl_spark.queries_wave8 import _WIN_K, _WIN_POS_SCALE, _WIN_W
+    from ipeds_etl_spark.queries.dedup import _WIN_K, _WIN_POS_SCALE, _WIN_W
 
     def fset(text: str) -> set:
         keys = [
@@ -173,10 +170,7 @@ def test_winnowing_shared_substring_guarantee(spark):
 
 
 def test_temperature_mixture_budget_and_isqrt(spark):
-    from ipeds_etl_spark.queries_wave8 import (
-        _TEMP_BUDGET,
-        q_docs_temperature_mixture,
-    )
+    from ipeds_etl_spark.queries.curation import _TEMP_BUDGET, q_docs_temperature_mixture
 
     rows = q_docs_temperature_mixture(spark, SF).collect()
     assert sum(r.allocated for r in rows) == _TEMP_BUDGET
@@ -195,7 +189,7 @@ def test_temperature_mixture_budget_and_isqrt(spark):
 
 
 def test_skew_profile_matches_numpy(spark):
-    from ipeds_etl_spark.queries_wave8 import q_orders_key_skew_profile
+    from ipeds_etl_spark.queries.tpch import q_orders_key_skew_profile
 
     (r,) = q_orders_key_skew_profile(spark, SF).collect()
     tbl = pq.read_table(f"{SF}/orders.parquet").to_pandas()
@@ -216,7 +210,7 @@ def test_bootstrap_hash_replay_and_coverage(spark):
     the hash in Python; the point estimate must sit inside the CI."""
     import hashlib
 
-    from ipeds_etl_spark.queries_wave8 import _BOOT_B, q_docs_bootstrap_mean_ci
+    from ipeds_etl_spark.queries.curation import _BOOT_B, q_docs_bootstrap_mean_ci
 
     (r,) = q_docs_bootstrap_mean_ci(spark, SF).collect()
     tbl = pq.read_table(f"{SF}/documents.parquet").to_pandas()
@@ -240,7 +234,7 @@ def test_bootstrap_hash_replay_and_coverage(spark):
 def test_langid_calibration_ece_assembly(spark):
     """Bins partition the corpus; ECE assembles from the exact per-bin
     cells; accuracy respects the permille identity."""
-    from ipeds_etl_spark.queries_wave8 import q_docs_langid_calibration
+    from ipeds_etl_spark.queries.curation import q_docs_langid_calibration
 
     rows = q_docs_langid_calibration(spark, SF).collect()
     n = sum(r.n_docs for r in rows)
@@ -254,7 +248,7 @@ def test_langid_calibration_ece_assembly(spark):
 
 
 def test_recency_engagement_dyadic_replay(spark):
-    from ipeds_etl_spark.queries_wave8 import q_events_recency_engagement
+    from ipeds_etl_spark.queries.events import q_events_recency_engagement
 
     rows = q_events_recency_engagement(spark, SF).collect()
     tbl = pq.read_table(f"{SF}/events.parquet").to_pandas()
@@ -275,7 +269,7 @@ def test_recency_engagement_dyadic_replay(spark):
 
 def test_cluster_margin_matches_numpy(spark):
     """Quantized centroid/margin arithmetic replayed exactly in numpy."""
-    from ipeds_etl_spark.queries_wave8 import q_emb_cluster_margin
+    from ipeds_etl_spark.queries.vectors import q_emb_cluster_margin
 
     rows = {r.label: r for r in q_emb_cluster_margin(spark, SF).collect()}
     tbl = pq.read_table(f"{SF}/embeddings.parquet").to_pandas()
@@ -316,7 +310,7 @@ def test_cluster_margin_matches_numpy(spark):
 
 
 def test_benford_constants_and_chi2_assembly(spark):
-    from ipeds_etl_spark.queries_wave8 import _BENFORD_X1E6, q_orders_benford_dq
+    from ipeds_etl_spark.queries.tpch import _BENFORD_X1E6, q_orders_benford_dq
 
     assert sum(p for _, p in _BENFORD_X1E6) == 1_000_000
     rows = q_orders_benford_dq(spark, SF).collect()
@@ -335,7 +329,7 @@ def test_benford_constants_and_chi2_assembly(spark):
 
 
 def test_skyline_layers_partition_and_dominance(spark):
-    from ipeds_etl_spark.queries_wave8 import _SKY_LAYERS, q_parts_skyline_layers
+    from ipeds_etl_spark.queries.tpch import _SKY_LAYERS, q_parts_skyline_layers
 
     rows = q_parts_skyline_layers(spark, SF).collect()
     by_layer = defaultdict(list)
@@ -362,9 +356,9 @@ def test_skyline_layers_partition_and_dominance(spark):
 def test_edit_verify_matches_python_levenshtein(spark):
     """Histogram equals a pure-Python Levenshtein replay over the same
     LSH candidate pairs and capped prefixes."""
-    from ipeds_etl_spark.queries_wave8 import _EDIT_PREFIX, q_dedup_edit_verify
+    from ipeds_etl_spark.queries.dedup import _EDIT_PREFIX, q_dedup_edit_verify
 
-    pairs = [(r.id_a, r.id_b) for r in _lsh_doc_pairs(spark, SF).collect()]
+    pairs = [(r.id_a, r.id_b) for r in lsh_doc_pairs(spark, SF).collect()]
     tbl = pq.read_table(f"{SF}/documents.parquet").to_pandas()
     txt = dict(zip(tbl["doc_id"], tbl["text"]))
 
@@ -399,7 +393,7 @@ def test_edit_verify_matches_python_levenshtein(spark):
 
 
 def test_nucleus_sources_coverage_boundary(spark):
-    from ipeds_etl_spark.queries_wave8 import q_docs_nucleus_sources
+    from ipeds_etl_spark.queries.curation import q_docs_nucleus_sources
 
     rows = q_docs_nucleus_sources(spark, SF).collect()
     total = sum(r.tokens for r in rows)
@@ -433,10 +427,7 @@ def test_lsh_geometry_planner_monotone_and_exact_constants(spark):
     """Recall constants are the exact rationals; collision work and
     recall both fall as rows_per_band grows; the r=4 row matches the
     registry default geometry's bucket structure."""
-    from ipeds_etl_spark.queries_wave8 import (
-        _lsh_recall_x1e6,
-        q_dedup_lsh_geometry_planner,
-    )
+    from ipeds_etl_spark.queries.dedup import _lsh_recall_x1e6, q_dedup_lsh_geometry_planner
 
     rows = q_dedup_lsh_geometry_planner(spark, SF).collect()
     assert [r.rows_per_band for r in rows] == [1, 2, 4, 8, 16]
@@ -455,7 +446,7 @@ def test_lsh_geometry_planner_monotone_and_exact_constants(spark):
 
 
 def test_fano_matches_numpy(spark):
-    from ipeds_etl_spark.queries_wave8 import q_events_burstiness_fano
+    from ipeds_etl_spark.queries.events import q_events_burstiness_fano
 
     rows = q_events_burstiness_fano(spark, SF).collect()
     tbl = pq.read_table(f"{SF}/events.parquet").to_pandas()
@@ -477,7 +468,7 @@ def test_fano_matches_numpy(spark):
 def test_audio_fingerprint_matches_python_replay(spark):
     """Framing, peak picking, landmark pairing, and the DF-capped
     match replayed in pure Python over the same UTF-8 payloads."""
-    from ipeds_etl_spark.queries_wave8 import (
+    from ipeds_etl_spark.queries.vectors import (
         _AF_HOP,
         _AF_MAX_DF,
         _AF_MIN_SHARED,

@@ -6,11 +6,8 @@ from collections import Counter
 
 import pyarrow.parquet as pq
 
-from ipeds_etl_spark.queries_wave9 import (
-    _TAXONOMY,
-    q_docs_dedup_survivorship,
-    q_docs_keyword_tagging,
-)
+from ipeds_etl_spark.queries.dedup import q_docs_dedup_survivorship
+from ipeds_etl_spark.queries.text import _TAXONOMY, q_docs_keyword_tagging
 
 SF = "/root/testdata/sf0.001"
 
@@ -18,7 +15,7 @@ SF = "/root/testdata/sf0.001"
 def test_survivorship_conservation_and_bounds(spark):
     """Per-source counts partition the corpus; kept <= total; the
     corpus-wide kept count equals the resolution query's keepers."""
-    from ipeds_etl_spark.queries_analytics import q_docs_dedup_resolution
+    from ipeds_etl_spark.queries.dedup import q_docs_dedup_resolution
 
     rows = q_docs_dedup_survivorship(spark, SF).collect()
     tbl = pq.read_table(f"{SF}/documents.parquet").to_pandas()
@@ -56,18 +53,18 @@ def test_pq_distortion_matches_numpy(spark):
     codebooks (the k-center/k-means trajectory-test style)."""
     import numpy as np
 
-    from ipeds_etl_spark.queries_ext import _PQ_SUB_DIM, _pq_codebook
-    from ipeds_etl_spark.queries_wave9 import q_emb_pq_distortion
+    from ipeds_etl_spark.operators.indexes import PQ_SUB_DIM, pq_codebook
+    from ipeds_etl_spark.queries.vectors import q_emb_pq_distortion
 
     rows = {r.vec_id: r for r in q_emb_pq_distortion(spark, SF).collect()}
-    books = _pq_codebook(spark, SF)
+    books = pq_codebook(spark, SF)
     tbl = pq.read_table(f"{SF}/embeddings.parquet").to_pandas()
     for vec_id, emb in zip(tbl["vec_id"], tbl["embedding"]):
         x = np.asarray(emb, dtype=np.float64)
         r = rows[vec_id]
         total = 0.0
         for s, book in enumerate(books):
-            sub = x[s * _PQ_SUB_DIM : (s + 1) * _PQ_SUB_DIM]
+            sub = x[s * PQ_SUB_DIM : (s + 1) * PQ_SUB_DIM]
             code = getattr(r, f"code_{s}")
             cw = np.asarray(dict(book)[code], dtype=np.float64)
             # left-fold (x-y)^2 sum: same order as both engines
@@ -82,7 +79,7 @@ def test_pq_distortion_matches_numpy(spark):
 def test_tercile_routing_balance(spark):
     """Buckets partition each source roughly in thirds (exact within
     score-tie granularity) and bucket ranges are ordered and disjoint."""
-    from ipeds_etl_spark.queries_wave9 import q_docs_quality_tercile_routing
+    from ipeds_etl_spark.queries.curation import q_docs_quality_tercile_routing
 
     rows = q_docs_quality_tercile_routing(spark, SF).collect()
     by_src = {}
@@ -104,7 +101,7 @@ def test_tercile_routing_balance(spark):
 def test_seasonal_naive_backtest_matches_pandas(spark):
     import pandas as pd
 
-    from ipeds_etl_spark.queries_wave9 import q_orders_seasonal_naive_backtest
+    from ipeds_etl_spark.queries.tpch import q_orders_seasonal_naive_backtest
 
     rows = {r.month: r for r in q_orders_seasonal_naive_backtest(spark, SF).collect()}
     tbl = pq.read_table(f"{SF}/orders.parquet").to_pandas()
@@ -137,9 +134,7 @@ def test_seasonal_naive_backtest_matches_pandas(spark):
 def test_ship_latency_percentiles_match_numpy(spark):
     import numpy as np
 
-    from ipeds_etl_spark.queries_wave9 import (
-        q_supplier_ship_latency_percentiles,
-    )
+    from ipeds_etl_spark.queries.tpch import q_supplier_ship_latency_percentiles
 
     rows = {r.suppkey: r for r in q_supplier_ship_latency_percentiles(spark, SF).collect()}
     li = pq.read_table(f"{SF}/lineitem.parquet").to_pandas()

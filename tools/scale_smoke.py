@@ -399,7 +399,7 @@ def run_quad_r12(spark, results: dict) -> None:
     timed alone next to the full readout."""
     from ipeds_etl_spark import queries as q
     from ipeds_etl_spark.operators import qsketch as QS
-    from ipeds_etl_spark.queries_wave12 import cdc_chunks
+    from ipeds_etl_spark.queries.dedup import cdc_chunks
 
     reg = q.queries()
     out: dict[str, dict] = {}
@@ -460,13 +460,9 @@ def run_ann_r13(spark, results: dict) -> None:
     from ipeds_etl_spark.operators.similarity import _scored_centroids
     from ipeds_etl_spark import queries as q
     from ipeds_etl_spark.operators import similarity as SIM
-    from ipeds_etl_spark.queries_ext import _ivf_codebook, _pq_codebook
-    from ipeds_etl_spark.queries_wave15 import (
-        _SWEEP_NPROBES,
-        _SWEEP_SELS,
-        _res_books,
-        _sq8_bounds,
-    )
+    from ipeds_etl_spark.operators.indexes import ivf_codebook, pq_codebook
+    from ipeds_etl_spark.operators.indexes import residual_pq_books, sq8_bounds
+    from ipeds_etl_spark.queries.vectors import _SWEEP_NPROBES, _SWEEP_SELS
 
     reg = q.queries()
     out: dict[str, dict] = {}
@@ -475,16 +471,16 @@ def run_ann_r13(spark, results: dict) -> None:
     # these are the one-time costs bench bills under index_builds)
     builds: dict[str, float] = {}
     t0 = time.perf_counter()
-    cents = _ivf_codebook(spark, SF10_DIR)
+    cents = ivf_codebook(spark, SF10_DIR)
     builds["ivf_codebook"] = round(time.perf_counter() - t0, 2)
     t0 = time.perf_counter()
-    _pq_codebook(spark, SF10_DIR)
+    pq_codebook(spark, SF10_DIR)
     builds["pq_codebooks"] = round(time.perf_counter() - t0, 2)
     t0 = time.perf_counter()
-    _res_books(spark, SF10_DIR)
+    residual_pq_books(spark, SF10_DIR)
     builds["residual_pq_books"] = round(time.perf_counter() - t0, 2)
     t0 = time.perf_counter()
-    _sq8_bounds(spark, SF10_DIR)
+    sq8_bounds(spark, SF10_DIR)
     builds["sq8_bounds"] = round(time.perf_counter() - t0, 2)
     out["index_builds_sec"] = builds
 
@@ -693,7 +689,7 @@ def run_verdict_r6(spark, results: dict) -> None:
     rounds must stay fixed and candidate counts linear when the corpus
     grows 10x."""
     from ipeds_etl_spark import queries as q
-    from ipeds_etl_spark import queries_wave5 as w5
+    from ipeds_etl_spark.queries import dedup as DQ
 
     reg = q.queries()
     out: dict = {}
@@ -712,7 +708,7 @@ def run_verdict_r6(spark, results: dict) -> None:
     kc_rows = reg["dedup_kcore"](spark, SF1_DIR).collect()
     out["kcore"] = {
         "sec": round(time.perf_counter() - t0, 2),
-        "rounds": w5._KCORE_ROUNDS,
+        "rounds": DQ._KCORE_ROUNDS,
         "result": [r.asDict() for r in kc_rows][:3],
     }
 
@@ -722,7 +718,7 @@ def run_verdict_r6(spark, results: dict) -> None:
     out["snm"] = {
         "sec": round(time.perf_counter() - t0, 2),
         "n_docs": n_docs,
-        "candidate_bound_n_times_w": n_docs * w5._SNM_W,
+        "candidate_bound_n_times_w": n_docs * DQ._SNM_W,
         "pairs_past_jaccard": n_snm,
     }
 
@@ -814,13 +810,13 @@ def run_funnel_r9(spark, results: dict) -> None:
     import statistics
 
     from ipeds_etl_spark import queries as q
-    from ipeds_etl_spark.queries_ext import _lsh_doc_pairs
-    from ipeds_etl_spark.queries_wave7 import q_docs_curation_funnel
+    from ipeds_etl_spark.operators.indexes import lsh_doc_pairs
+    from ipeds_etl_spark.queries.curation import q_docs_curation_funnel
 
     reg = q.queries()
     out: dict = {}
     t0 = time.perf_counter()
-    out["n_pairs_memo"] = _lsh_doc_pairs(spark, SF10_DIR).count()
+    out["n_pairs_memo"] = lsh_doc_pairs(spark, SF10_DIR).count()
     out["lsh_memo_build_sec"] = round(time.perf_counter() - t0, 2)
     print(json.dumps({"funnel_r9_memo": out}), flush=True)
 
@@ -867,7 +863,7 @@ def run_semdedup_r9(spark, results: dict) -> None:
     realistic k, (b) per-cluster pair counts stay bounded (max/p99
     cluster size, examined-pair total), (c) zero cap overflow — no
     silent mega-cluster quadratic, no AQE/collect defect."""
-    from ipeds_etl_spark.queries_wave11 import semdedup_report
+    from ipeds_etl_spark.queries.vectors import semdedup_report
 
     n_vecs = spark.read.parquet(f"{SF10_DIR}/embeddings.parquet").count()
     k = int(n_vecs**0.5)
@@ -923,7 +919,7 @@ def run_components_race_r10(spark, results: dict) -> None:
     from ipeds_etl_spark import queries as q
     from ipeds_etl_spark.memostore import release
     from ipeds_etl_spark.operators.indexes import lsh_doc_pairs
-    from ipeds_etl_spark.queries_wave7 import q_docs_curation_funnel
+    from ipeds_etl_spark.queries.curation import q_docs_curation_funnel
 
     out: dict = {}
     # --- (a) memo build: median of 3 COLD builds ---
