@@ -4,51 +4,3 @@ Everything here returns ``pyspark.sql.Column`` built from native
 functions — JVM-side, whole-stage-codegen eligible. No row-at-a-time
 Python UDFs in any hot path.
 """
-
-from ipeds_etl_spark.functions.cleaning import (
-    clean_sentinels,
-    coalesce_pick,
-    is_missing,
-    safe_double,
-    safe_int,
-    safe_long,
-    safe_str,
-    stable_hash,
-)
-from ipeds_etl_spark.functions.hashing import (
-    content_hash,
-    parity_hash,
-    parity_hash_wide,
-)
-from ipeds_etl_spark.functions.text import (
-    bpe_ish_tokens,
-    char_ngrams,
-    lang_id,
-    quality_metrics,
-    shingles_of,
-    token_count,
-    tokens,
-    word_shingles,
-)
-
-__all__ = [
-    "bpe_ish_tokens",
-    "char_ngrams",
-    "clean_sentinels",
-    "coalesce_pick",
-    "content_hash",
-    "is_missing",
-    "lang_id",
-    "parity_hash",
-    "parity_hash_wide",
-    "quality_metrics",
-    "safe_double",
-    "safe_int",
-    "safe_long",
-    "safe_str",
-    "shingles_of",
-    "stable_hash",
-    "token_count",
-    "tokens",
-    "word_shingles",
-]

@@ -55,7 +55,6 @@ from pyspark.sql import functions as F
 #: here vs -1.0 in the reference; real IPEDS payloads use bare
 #: numeric sentinels, where both engines agree.
 SENTINEL_STRINGS = ("-1", "-2", "-3", "-1.0", "-2.0", "-3.0")
-SENTINEL_INTS = (-1, -2, -3)
 
 #: Regex accepted by ``safe_int``: optional sign, ASCII digits only.
 _INT_RE = r"^[+-]?\d+$"

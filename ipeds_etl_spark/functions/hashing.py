@@ -76,8 +76,3 @@ def parity_hash_sql(expr: str) -> str:
 def minhash_perms(n: int) -> list[tuple[int, int]]:
     """Deterministic (A_i, B_i) affine-permutation constants, i < n."""
     return [(2 * i + 1001, (i * _KNUTH) % MERSENNE_P) for i in range(n)]
-
-
-def perm_apply(h: Column, a: int, b: int) -> Column:
-    """Apply one affine permutation to an integer hash column."""
-    return (h * F.lit(a) + F.lit(b)) % F.lit(MERSENNE_P)

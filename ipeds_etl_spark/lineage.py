@@ -50,16 +50,6 @@ LOAD_LOG_SCHEMA = T.StructType(
     ]
 )
 
-SOURCE_TRACE_SCHEMA = T.StructType(
-    [
-        T.StructField("endpoint", T.StringType(), False),
-        T.StructField("year", T.IntegerType(), False),
-        T.StructField("source_url", T.StringType(), False),
-        T.StructField("source_hash", T.StringType(), False),
-        T.StructField("ingested_at", T.TimestampType(), False),
-    ]
-)
-
 
 def merge_counts(target: DataFrame, source: DataFrame, pk: list[str]) -> tuple[int, int]:
     """(rows_inserted, rows_updated) for an upsert of source into target

@@ -31,15 +31,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-MEDIA_META_SCHEMA = T.StructType(
-    [
-        T.StructField("modality", T.StringType(), False),
-        T.StructField("media_format", T.StringType(), False),
-        T.StructField("n_bytes", T.LongType(), False),
-        T.StructField("byte_sha", T.StringType(), False),
-    ]
-)
-
 FEATURE_SCHEMA = T.StructType(
     [
         T.StructField("doc_id", T.LongType(), False),

@@ -163,6 +163,8 @@ def refresh_gold_incremental(
     warehouse: str,
     delta: DataFrame,
     pre_images: DataFrame | None = None,
+    *,
+    batch: str,
 ) -> dict[str, int]:
     """Incremental view maintenance for the gold tables: fold one merge
     batch's effect into the stored views, with work O(delta + gold) —
@@ -185,6 +187,13 @@ def refresh_gold_incremental(
       − count(pre_images) per (year[, state]); groups reaching zero are
       dropped. This is classic counting-IVM: exact under
       insert/update/delete given the retraction feed.
+
+    ``batch`` names the merge batch. The published ``yearly_counts``
+    carries it in a hidden ``_batch`` file, and a refresh whose batch
+    the stored counts already carry skips the counting fold: a refresh
+    that failed after publishing the counts is re-run with the same
+    batch, and the fold is not idempotent. The latest-row fold is, and
+    runs again.
     """
     ep = registry.get_endpoint(endpoint)
     entity_keys = [k for k in ep.pk if k != "year"]
@@ -235,15 +244,21 @@ def refresh_gold_incremental(
         .filter(F.col("n_rows") > 0)
     )
 
+    batch_file = f"{counts_path}/_batch"
+    folded = fsutil.path_exists(spark, batch_file) and fsutil.read_text(spark, batch_file) == batch
     out = {}
     for name, path, df in (
         ("institutions_latest", latest_path, new_latest),
         ("yearly_counts", counts_path, merged),
     ):
-        # stage → swap: the stored view is an input to its own refresh,
-        # so the new generation lands beside it and replaces it whole
-        _sized_coalesce(df).write.mode("overwrite").parquet(f"{path}__refresh_tmp")
-        _publish_view(spark, path)
+        if not (path == counts_path and folded):
+            # stage → swap: the stored view is an input to its own refresh,
+            # so the new generation lands beside it and replaces it whole
+            tmp = f"{path}__refresh_tmp"
+            _sized_coalesce(df).write.mode("overwrite").parquet(tmp)
+            if path == counts_path:
+                fsutil.write_text(spark, f"{tmp}/_batch", batch)
+            _publish_view(spark, path)
         out[name] = spark.read.parquet(path).count()
     return out
 
@@ -395,7 +410,8 @@ def refresh_gold_from_txn_diff(
         .select(*ep.pk, *[F.col(f"old_{c}").alias(c) for c in cols])
     )
     out = refresh_gold_incremental(
-        spark, endpoint, warehouse, delta, pre_images=pre_images
+        spark, endpoint, warehouse, delta, pre_images=pre_images,
+        batch=f"{v_from}:{v_to}",
     )
     out["refreshed_to_version"] = v_to
     return out

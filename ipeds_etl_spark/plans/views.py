@@ -3,23 +3,13 @@
 Capability parity with the reference's ``ipeds_vw`` layer (reference
 ``architecture.md:50-56``):
 
-* ``latest_per_key``      ≅ ``institutions_latest`` (latest row per key)
 * ``enrich_join``         ≅ ``admissions_enriched`` (fact ⋈ dims on key)
 * ``dim_lookup``          ≅ ``completions_by_cip`` label join
-* ``kpi_agg``             ≅ ``yearly_kpis`` grouped ratio KPIs
 
 All are shuffle-aware by construction:
 
-* ``latest_per_key`` uses ``max_by`` aggregation (one shuffle on the
-  key, partial aggregation map-side) instead of a window sort — at
-  100 TB a window over partitionBy(key) sorts every partition; max_by
-  does a partial+final hash aggregate, strictly cheaper for "top-1".
-  A window variant is provided for when the full ranking is needed.
 * ``dim_lookup`` broadcasts the dimension explicitly — dims are small
   by definition; never shuffle the fact side for a label join.
-* ``kpi_agg`` relies on Spark's partial aggregation; ratio KPIs are
-  computed from exact decimal sums to keep results deterministic
-  across partitionings (plain double sums are order-dependent).
 """
 
 from __future__ import annotations
@@ -28,26 +18,6 @@ from collections.abc import Sequence
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
-
-
-def latest_per_key(
-    df: DataFrame,
-    keys: Sequence[str],
-    order_col: str,
-    payload: Sequence[str] | None = None,
-) -> DataFrame:
-    """Latest row per key: for each ``keys`` group, values from the row
-    with the maximal ``order_col`` (ties broken by the natural max_by
-    tie rule are avoided — callers must pass a unique order column,
-    e.g. a (year, page) composite packed into a struct).
-
-    One hash-aggregate shuffle; no sort, no window.
-    """
-    payload = payload or [c for c in df.columns if c not in keys and c != order_col]
-    aggs = [F.max(order_col).alias(order_col)] + [
-        F.max_by(c, F.col(order_col)).alias(c) for c in payload
-    ]
-    return df.groupBy(*keys).agg(*aggs).select(*keys, order_col, *payload)
 
 
 def latest_per_key_window(
@@ -88,24 +58,6 @@ def exact_sum(col: str | Column, scale: int = 6) -> Column:
     """
     c = F.col(col) if isinstance(col, str) else col
     return F.sum(c.cast(f"decimal(18,{scale})")).cast("double")
-
-
-def kpi_agg(
-    df: DataFrame,
-    group_keys: Sequence[str],
-    ratios: dict[str, tuple[Column, Column]],
-    extra: dict[str, Column] | None = None,
-) -> DataFrame:
-    """Grouped ratio KPIs: each named ratio is numerator/denominator of
-    exact sums (NULL on zero denominator, like SQL division)."""
-    aggs = []
-    for name, (num, den) in ratios.items():
-        aggs.append(
-            (F.sum(num.cast("decimal(18,6)")).cast("double") / F.sum(den.cast("decimal(18,6)")).cast("double")).alias(name)
-        )
-    for name, expr in (extra or {}).items():
-        aggs.append(expr.alias(name))
-    return df.groupBy(*group_keys).agg(*aggs)
 
 
 def incremental_join_view(

@@ -26,10 +26,8 @@ from __future__ import annotations
 
 from collections.abc import Sequence
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-from ipeds_etl_spark.sources.tables import load_table
 
 #: chi-square critical value at p = 0.05, df = 1, scaled by 10^6 —
 #: the standard SRM alarm threshold (Fabijan et al. 2019). For a
@@ -37,14 +35,6 @@ from ipeds_etl_spark.sources.tables import load_table
 #: scaled test is pure BIGINT: 10^6·d² vs 3841459·n. The batch query
 #: ``events_srm_check`` uses the same constant.
 SRM_CRIT_X1E6 = 3_841_459
-
-
-def read_event_stream(spark: SparkSession, sf_dir: str, schema=None) -> DataFrame:
-    """File-based event stream (one parquet dir as an append source).
-    Kept separate so production readers (Kafka) can be swapped in."""
-    if schema is None:
-        schema = load_table(spark, sf_dir, "events").schema
-    return spark.readStream.schema(schema).parquet(f"{sf_dir}/events_stream")
 
 
 def windowed_counts(

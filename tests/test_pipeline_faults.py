@@ -118,7 +118,7 @@ def _gold_warehouse(spark, wh: str) -> None:
 def _refresh(spark, wh: str):
     delta = spark.createDataFrame([(3, 2020, "C", "TX"), (2, 2020, "B2", "CA")], GOLD_SCHEMA)
     pre = spark.createDataFrame([(2, 2020, "B", "NY")], GOLD_SCHEMA)
-    return pipeline.refresh_gold_incremental(spark, ENDPOINT, wh, delta, pre)
+    return pipeline.refresh_gold_incremental(spark, ENDPOINT, wh, delta, pre, batch="1:2")
 
 
 def _views(spark, wh: str) -> dict:
@@ -130,7 +130,12 @@ def _views(spark, wh: str) -> dict:
 
 @pytest.mark.parametrize(
     "view,fault",
-    [("institutions_latest", "rename_fails"), ("institutions_latest", "crash"), ("yearly_counts", "crash")],
+    [
+        ("institutions_latest", "rename_fails"),
+        ("institutions_latest", "crash"),
+        ("yearly_counts", "crash"),
+        ("yearly_counts", "crash_dropping_old"),
+    ],
 )
 def test_gold_refresh_publish_fault_keeps_views_and_reruns(spark, tmp_path, monkeypatch, view, fault):
     from ipeds_etl_spark import fsutil
@@ -144,7 +149,7 @@ def test_gold_refresh_publish_fault_keeps_views_and_reruns(spark, tmp_path, monk
 
     wh = str(tmp_path / "wh")
     _gold_warehouse(spark, wh)
-    rename = fsutil.rename
+    rename, delete = fsutil.rename, fsutil.delete
 
     def faulty(sp, src, dst):
         if src == f"{wh}/vw/{ENDPOINT}_{view}__refresh_tmp":
@@ -153,10 +158,20 @@ def test_gold_refresh_publish_fault_keeps_views_and_reruns(spark, tmp_path, monk
             raise Crash
         return rename(sp, src, dst)
 
-    monkeypatch.setattr(fsutil, "rename", faulty)
+    def faulty_delete(sp, path, recursive=True):
+        # the publish's last step, after the new copy is in place
+        if path == f"{wh}/vw/{ENDPOINT}_{view}__refresh_old" and fsutil.path_exists(sp, path):
+            raise Crash
+        return delete(sp, path, recursive)
+
+    if fault == "crash_dropping_old":
+        monkeypatch.setattr(fsutil, "delete", faulty_delete)
+    else:
+        monkeypatch.setattr(fsutil, "rename", faulty)
     with pytest.raises(OSError if fault == "rename_fails" else Crash):
         _refresh(spark, wh)
     monkeypatch.setattr(fsutil, "rename", rename)
+    monkeypatch.setattr(fsutil, "delete", delete)
     if fault == "rename_fails":  # the old copy was put back
         assert _views(spark, wh) == old
 

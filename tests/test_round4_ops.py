@@ -201,7 +201,7 @@ def test_incremental_gold_refresh_converges_to_full_rebuild(spark, tmp_path):
         [(2, 2020, "B", "NY"), (1, 2020, "A2", "CA")],
         "unitid int, year int, inst_name string, state_abbr string",
     )
-    inc = pipeline.refresh_gold_incremental(spark, "directory", wh, delta, pre)
+    inc = pipeline.refresh_gold_incremental(spark, "directory", wh, delta, pre, batch="b1")
 
     # ground truth: rebuild from the post-merge core
     core1 = (

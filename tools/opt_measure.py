@@ -1,24 +1,26 @@
 #!/usr/bin/env python
-"""Optimization measurement harness (rounds 13+).
+"""Optimization measurement harness.
 
-For each named query: noop-sink timings (median of N runs, one warm
-session shared by the batch — the in-process A/B discipline from the
-verify skill) and optionally the ``explain("formatted")`` plan dumped
-to ``plans/$OPT_PLAN_ROUND/<query>_<tag>.txt`` (default r14).
+For each named query: ``bench.time_queries`` timings (median of N runs
+of build plus noop-sink execution, with the traced build and execution
+fields) in one warm session shared by the batch, the in-process A/B
+discipline from the verify skill, and optionally the
+``explain("formatted")`` plan dumped to
+``plans/$OPT_PLAN_ROUND/<query>_<tag>.txt`` (default r14).
 
 Usage:
     python tools/opt_measure.py SF_DIR TAG [--runs N] [--plans] q1 q2 ...
 
 TAG labels the plan files (before/after). Timings print as one JSON
-line per query on stdout plus a summary dict at the end.
+line per query on stdout plus a summary dict at the end; ``--runs 0``
+only dumps plans.
 """
 
 from __future__ import annotations
 
 import json
-import statistics
+import os
 import sys
-import time
 from pathlib import Path
 
 REPO = Path(__file__).resolve().parent.parent
@@ -44,50 +46,37 @@ def main() -> int:
             names.append(rest[i])
             i += 1
 
-    from ipeds_etl_spark.session import get_spark
+    import bench
     from ipeds_etl_spark import queries as q
 
-    spark = get_spark("opt-measure")
-    spark.sparkContext.setLogLevel("ERROR")
-    # generic warm-up: codegen + parquet reader classpath
-    spark.range(1_000_000).selectExpr("sum(id)").collect()
-    spark.read.parquet(f"{sf_dir}/region.parquet").limit(1).collect()
+    spark = bench._warm_session(sf_dir)
     # consumption-only parity with the bench: prebuild memoized indexes
-    import bench
-
     bench._build_indexes(spark, sf_dir)
 
-    registered = q.queries()
-    import os
-    plan_dir = REPO / "plans" / os.environ.get("OPT_PLAN_ROUND", "r14")
-    plan_dir.mkdir(parents=True, exist_ok=True)
-    out = {}
-    for name in names:
-        fn = registered[name]
-        if plans:
-            df = fn(spark, sf_dir)
-            mode = spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
-                "formatted"
-            )
+    if plans:
+        registered = q.queries()
+        plan_dir = REPO / "plans" / os.environ.get("OPT_PLAN_ROUND", "r14")
+        plan_dir.mkdir(parents=True, exist_ok=True)
+        mode = spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
+            "formatted"
+        )
+        for name in names:
+            df = registered[name](spark, sf_dir)
             plan_txt = df._jdf.queryExecution().explainString(mode)
             (plan_dir / f"{name}_{tag}.txt").write_text(plan_txt)
-        if n_runs == 0:
+    if n_runs == 0:
+        for name in names:
             print(json.dumps({"query": name, "plan_only": True}), flush=True)
-            continue
-        samples = []
-        spark.sparkContext.setJobDescription(f"opt:{name}")
-        for _ in range(n_runs):
-            t0 = time.perf_counter()
-            fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-            samples.append(round(time.perf_counter() - t0, 3))
-        spark.sparkContext.setJobDescription(None)
-        out[name] = {
-            "median": round(statistics.median(samples), 3),
-            "samples": samples,
-        }
-        print(json.dumps({"query": name, **out[name]}), flush=True)
-    print("SUMMARY " + json.dumps({k: v["median"] for k, v in out.items()}))
-    return 0
+        return 0
+    rows, errors = bench.time_queries(spark, names, sf_dir, n_runs)
+    for name in names:
+        if name in rows:
+            row = dict(rows[name])
+            print(json.dumps({"query": name, "median": row.pop("wall_s"), **row}))
+        else:
+            print(json.dumps({"query": name, "error": errors[name]}))
+    print("SUMMARY " + json.dumps({n: r["wall_s"] for n, r in rows.items()}))
+    return 1 if errors else 0
 
 
 if __name__ == "__main__":

@@ -1,32 +1,40 @@
 #!/usr/bin/env python
-"""Scale smoke at sf1-equivalent data (10x sf0.1) — VERDICT r3 item 3+.
+"""Scale smoke on replica corpora: 10x sf0.1 (sf1-equivalent) and 100x
+sf0.1 (sf10-equivalent) for the output-quadratic operators.
 
-Two sections:
+Sections (one process may run several; for clean one-shot timings run
+one per fresh process, since a session that just built a corpus
+inflates its next timings):
 
-* ``iterative`` — the ROUND-MULTIPLIED operators (components label/star,
-  graph_stats). These are the ones where "fast at sf0.1" could hide
-  "slow at sf1": if the ROUND COUNT grew with corpus size, total cost
-  would be O(rounds x corpus) and the sf0.1 bench would extrapolate
-  wrong. Measures rounds explicitly and fails loudly if they grow.
-* ``sweep`` — the heavy one-pass families (minhash, simhash, text
-  stats, tfidf, decontaminate, IVF/RP-LSH ANN) run through their
-  REGISTERED query builders against a 10x corpus dir, so the measured
-  plan is exactly the production plan. Expectation: ~linear time in
-  corpus (these are scan+shuffle pipelines with no driver-side state).
+* ``iterative`` — the round-multiplied operators (components
+  label/star, graph_stats) on the 10x corpus. If the round count grew
+  with corpus size, total cost would be O(rounds x corpus) and the
+  sf0.1 bench would extrapolate wrong, so the rounds are reported.
+* ``sweep [NAMES...]`` — registered queries (default ``SWEEP``, the
+  heavy one-pass families) over the 10x corpus, timed by
+  ``bench.time_queries`` (one run: build plus noop-sink execution,
+  with the traced build and execution fields), so the measured plan is
+  exactly the production plan.
+* ``quad [NAMES...]`` — the same over the 100x corpus (default
+  ``QUAD``), built when missing. Wall time should track the output
+  pair count (clone cliques are quadratic in duplication multiplicity
+  by definition), not a superlinear input blow-up. Run it with
+  ``DRIVER_MEMORY=48g``: local mode packs every task into one JVM.
 
-Corpus: sf0.1 documents/embeddings replicated 10x with id offsets; doc
-text gets a per-replica prefix. The prefix barely perturbs minhash
-signatures, so every doc gains ~9 near-clones and the candidate-pair
-graph grows ~118x — a duplication-density stress HARSHER than a real
-10x corpus. Embeddings keep their vectors (new ids), so IVF bucket
-density grows 10x at fixed geometry unless suggest_n_centroids resizes.
+Corpora: sf0.1 tables replicated with per-replica key offsets; doc text
+gets a per-replica prefix. The prefix barely perturbs minhash
+signatures, so every doc gains near-clones and the candidate-pair
+graph grows superlinearly, a duplication-density stress harsher than a
+real 10x corpus. Embeddings keep their vectors (new ids). Dimension
+tables are copied once, so the fact/dim ratio grows as in life.
 
-Writes under /tmp (never /root/testdata) and prints one JSON line for
-SCALE.md.
+Writes under /tmp and prints one JSON line. SCALE.md records the
+results of each run.
 """
 
 from __future__ import annotations
 
+import functools
 import json
 import shutil
 import sys
@@ -46,11 +54,14 @@ from ipeds_etl_spark.operators.components import (  # noqa: E402
 from ipeds_etl_spark.session import get_spark  # noqa: E402
 from ipeds_etl_spark.sources.tables import load_table  # noqa: E402
 
+SRC_DIR = "/root/testdata/sf0.1"
 REPLICAS = 10
 SF1_DIR = "/tmp/scale_smoke_sf1"
+SF10_DIR = "/tmp/scale_smoke_sf10"
+QUAD_REPLICAS = 100
 
-#: sweep queries: heavy one-pass families whose 10x behavior should be
-#: ~linear; measured via the registered builders (production plans)
+#: sweep default: heavy one-pass families whose 10x behavior should be
+#: ~linear (scan+shuffle pipelines with no driver-side state)
 SWEEP = [
     "dedup_exact",
     "dedup_minhash_lsh",
@@ -66,584 +77,85 @@ SWEEP = [
     "emb_rp_lsh_near_dups",
 ]
 
-#: round-5 relational/time-series families: scale in customers/orders/
-#: events via key-offset replicas (each replica keeps its own basket /
-#: history shape, so per-key work is constant and totals grow 10x)
-SWEEP_R5 = [
-    "lineitem_pricing_summary",
-    "customer_scd2",
-    "orders_market_basket",
-    "events_top_paths",
-    "customer_cohort_ltv",
-    "customer_rfm_scores",
-    "events_resample_locf",
-    "parts_copurchase_pagerank",
-]
+#: quad default: the pair-producing near-dup operators
+QUAD = ["dedup_simhash", "emb_near_dups"]
 
-#: round-6 families: correlated-subquery shapes, RANGE frame, LATERAL,
-#: PQ compressed ANN, mixing weights, linear quality gate. Dim tables
-#: (customer/part/supplier) stay at sf0.1 size while facts grow 10x —
-#: the realistic dim-vs-fact scaling — so per-part/per-customer group
-#: sizes grow 10x, stressing the decorrelated aggregates.
-SWEEP_R6 = [
-    "lineitem_small_qty_revenue",
-    "supplier_late_only_orders",
-    "customers_idle_high_balance",
-    "orders_trailing_30d_spend",
-    "customer_lateral_top_orders",
-    "docs_mixture_weights",
-    "docs_quality_logit",
-    "emb_pq_topk",
-    "emb_pq_rerank_recall",
-]
-
-#: round-7 wave: TPC-H completion shapes (facts 10x, dims fixed — the
-#: dim-vs-fact scaling), BPE train/apply (vocabulary-bounded rounds:
-#: the corpus multiplies COUNTS, not vocab, so time should be ~flat
-#: after the word-frequency pass), sub-document dedup signals, and
-#: the stickiness band join (day spine fixed, grid 10x)
-SWEEP_R8 = [
-    "customers_large_orders",
-    "nations_trade_volume",
-    "suppliers_dominant_parts",
-    "nation_part_value_concentration",
-    "customer_order_distribution",
-    "parts_promo_revenue_disjunctive",
-    "lineitem_priority_shipping_counts",
-    "parts_promo_revenue_share",
-    "parts_supplier_counts_excluded",
-    "orders_priority_late_exists",
-    "lineitem_discount_revenue",
-    "nation_market_share",
-    "nation_year_red_revenue",
-    "customers_returned_revenue_top",
-    "top_supplier_by_revenue",
-    "parts_cheapest_supplier",
-    "docs_dup_ngram_fraction",
-    "events_dau_wau_stickiness",
-    "docs_bpe_merges",
-    "docs_bpe_fertility",
-    "docs_passage_dedup_rewrite",
-]
-
-#: round-8 wave: verifiable sketches (state constant in input), skyline
-#: prefix-min, CEP strings (per-user state), SNM (n·w linear
-#: candidates), k-core fixed rounds, calibration (candidate-fed),
-#: islands/anomaly (key-compacted windows), golden record (agg-only
-#: survivorship), cluster purity (map-only assignment), latency
-#: quantiles + temporal split + equi-depth (two-pass histogram
-#: quantiles), Pareto (distributed prefix sum). The union-recall gate
-#: is EXCLUDED: its gold standard is O(n²), oracle-scale only.
-SWEEP_R9 = [
-    "events_hll_users",
-    "events_cms_user_counts",
-    "parts_skyline_2d",
-    "events_cep_pattern_match",
-    "docs_snm_pairs",
-    "docs_source_lang_drift",
-    "dedup_kcore",
-    "dedup_minhash_estimate",
-    "customer_order_streaks",
-    "events_rolling_anomaly",
-    "docs_golden_record",
-    "emb_cluster_purity",
-    "events_funnel_time_quantiles",
-    "nation_top_customers_ties",
-    "orders_pareto_8020",
-    "events_temporal_split",
-    "lineitem_price_equidepth",
-    "events_markov_stationary",
-    "docs_token_budget_allocation",
-    "orders_winsorized_stats",
-    "lineitem_weighted_median_price",
-    "parts_copurchase_butterflies",
-]
-
-#: round-6 wave (this round's additions): exact-moment OLS/PCA,
-#: sketch set-ops, sliding HLL, framing, mobility matrix, KS drift.
-#: Expected shapes: everything is map-combinable aggs + tiny frames;
-#: the PCA self-join fan-out is the fixed 64x64 dim grid.
-SWEEP_R10 = [
-    "supplier_price_trend",
-    "orders_monthly_seasonality",
-    "events_asof_next_purchase",
-    "lineitem_histogram_quantile_error",
-    "docs_boilerplate_chunks",
-    "docs_unigram_surprisal",
-    "events_kmv_intersection",
-    "events_hll_sliding",
-    "docs_bigram_conditionals",
-    "customer_decile_transition",
-    "docs_length_ks_drift",
-    "emb_label_centroid_distances",
-    "docs_zipf_bitslope",
-    "events_window_dedup",
-    "parts_supplier_hhi",
-    "multimodal_audio_windows",
-    "emb_pca_power_iteration",
-]
-
-#: round-6 late wave: planner/DQ/analytics composites added after the
-#: first sweep_r10 run
-SWEEP_R11 = [
-    "events_seasonal_anomaly",
-    "customer_interpurchase_gaps",
-    "events_multitouch_attribution",
-    "docs_quality_ablation",
-    "orders_customer_join_profile",
-    "orders_header_detail_reconciliation",
-    "docs_neyman_allocation",
-    "docs_find_near_copies",
-    "events_growth_accounting",
-    "docs_near_dup_diff",
-    "orders_stl_lite",
-    "suppliers_similar_by_parts",
-]
-
-#: round-6 data-curation wave (scalable members only: dedup_bcubed_eval's
-#: truth side is the deliberately quadratic gold standard, oracle-scale
-#: by policy). Expected shapes: DSIR = counts + vocab joins + histogram
-#: window; zorder = two 64-group aggs; kcenter = k map passes.
-SWEEP_R12 = [
-    "docs_dsir_importance",
-    "lineitem_zorder_stats",
-    "emb_kcenter_coreset",
-    "docs_quality_label_propagation",
-    "docs_source_overlap_matrix",
-    "emb_kmeans_lloyd",
-    "docs_curation_funnel",
-]
-
-#: wave-8: LPA communities, winnowing pairs, CUSUM, skew Gini,
-#: bootstrap, calibration, temperature mixing, recency decay, kappa
-SWEEP_R13 = [
-    "dedup_lpa_communities",
-    "docs_winnowing_fingerprints",
-    "events_cusum_changepoint",
-    "orders_key_skew_profile",
-    "docs_bootstrap_mean_ci",
-    "docs_langid_calibration",
-    "docs_temperature_mixture",
-    "events_recency_engagement",
-    "docs_rater_agreement_kappa",
-    "emb_cluster_margin",
-    "orders_benford_dq",
-    "parts_skyline_layers",
-    "dedup_edit_verify",
-    "docs_nucleus_sources",
-    "dedup_lsh_geometry_planner",
-    "events_burstiness_fano",
-    "multimodal_audio_fingerprint",
-    "docs_dedup_survivorship",
-    "docs_keyword_tagging",
-    "emb_pq_distortion",
-    "docs_quality_tercile_routing",
-    "orders_seasonal_naive_backtest",
-    "supplier_ship_latency_percentiles",
-]
-
-#: round-8: the wave-10 six (registered after the round-7 freeze —
-#: never sf1-smoked) plus the wave-11 four (round-8 additions)
-SWEEP_R14 = [
-    "docs_stratified_split_exact",
-    "docs_epoch_shuffle_blocks",
-    "docs_token_pmi_top",
-    "docs_vocab_growth",
-    "emb_sq8_distortion",
-    "docs_shared_span_profile",
-    "docs_unigram_rarity",
-    "docs_concat_chunk_packing",
-    "docs_ngram_novelty",
-    "emb_semdedup",
-]
-
-#: round-8 late wave: retrieval fusion + contrastive negative mining —
-#: both are broadcast-anchor × corpus scans; the smoke checks the
-#: anchor-side broadcast survives a 10× corpus and the per-anchor
-#: rank windows stay partition-parallel
-SWEEP_R15 = [
-    "docs_hybrid_rrf",
-    "docs_hard_negatives",
-]
-
-#: round-9 wave-12: CDC chunking (token-bounded), DP histogram / SRM /
-#: packing audit (one-agg shapes), Gini (two-phase global rank) — all
-#: expected ~linear; emb_ivf_probe_sweep excluded (brute-force gold
-#: standard, same policy as the bench EXCLUDED list)
-SWEEP_R16 = [
-    "docs_cdc_chunk_dedup",
-    "docs_dp_source_histogram",
-    "events_srm_check",
-    "customer_revenue_gini",
-    "docs_packing_fragmentation",
-    "events_bot_score",
-    "emb_pq_codebook_balance",
-]
-
-#: round-10 wave-13: MWU (distinct-value prefix sum), priority sample
-#: (WindowGroupLimit top-k), bigram LM (ref-vocab-bounded joins),
-#: threshold sweep (one pass over floor-threshold pairs) — all
-#: expected ~linear in corpus
-SWEEP_R17 = [
-    "events_mann_whitney_u",
-    "events_priority_sample_estimator",
-    "docs_bigram_lm_ppl",
-    "emb_dup_threshold_sweep",
-    "events_cuped_adjustment",
-]
-
-#: round-11 wave-14: CDC global span-dedup rewrite (token-linear:
-#: chunk min-agg + same-key re-join), mergeable quantile sketch
-#: (3 scans, zero corpus exchanges)
-SWEEP_R18 = [
-    "docs_cdc_dedup_rewrite",
-    "events_value_qsketch",
-]
-
-#: round-12 registrations (VERDICT r11 items 4-5): the IVF-PQ composed
-#: ANN search and the vocab-scale longest-match tokenizer apply.
-SWEEP_R19 = [
-    "emb_ivfpq_topk",
-    "emb_ivfpq_residual_topk",
-    "emb_sq8_topk",
-    "emb_ivfpq_filtered_topk",
-    "docs_vocab_apply_fertility",
-]
-
-#: round-6 final wave: frame dedup, global rownum, variant extraction,
-#: point-in-time SCD2, incremental dedup, two-pass exact quantiles
-SWEEP_R7 = [
-    "multimodal_frame_dedup",
-    "orders_global_rownum",
-    "events_props_variant",
-    "orders_scd2_pointintime",
-    "docs_incremental_dedup",
-    "events_value_exact_quantiles",
-]
+#: 10x tables: (table, key columns offset per replica, text column
+#: prefixed per replica). Each replica keeps its own basket /
+#: customer-history / user-timeline shape (per-key work constant, key
+#: count and totals 10x); parts and nations stay shared, so the
+#: co-purchase graph gets 10x edge multiplicity at fixed nodes.
+SF1_TABLES = (
+    ("documents", ("doc_id",), "text"),
+    ("embeddings", ("vec_id",), None),
+    ("lineitem", ("l_orderkey",), None),
+    ("orders", ("o_orderkey", "o_custkey"), None),
+    ("events", ("event_id", "user_id"), None),
+)
+SF1_DIMS = ("customer", "part", "supplier", "nation", "region")
 
 
-#: sf10-equivalent corpus for the OUTPUT-QUADRATIC ops only (VERDICT r4
-#: item 8): 100x sf0.1 documents/embeddings. The claim under test is
-#: that wall time tracks the OUTPUT PAIR COUNT (clone cliques are
-#: quadratic in duplication multiplicity by definition), not a
-#: superlinear input blow-up — so the smoke records pairs AND seconds.
-#:
-#: RUN WITH ``DRIVER_MEMORY=48g`` (env): local mode packs all 32 tasks
-#: into one JVM, and with the engine's fixed 32 shuffle partitions the
-#: per-partition share of a 26M-pair stream exceeds the 8g default
-#: heap's per-task slice. On a cluster this is the standard
-#: "size shuffle partitions to the data" knob (partition count grows
-#: with the corpus; per-task memory stays flat) — the first sf10 run
-#: also exposed a REAL per-allocation bug (one-shot flatten pair
-#: expansion, since fixed to the streaming two-level explode).
-SF10_DIR = "/tmp/scale_smoke_sf10"
-QUAD_REPLICAS = 100
+def _replicate(
+    spark,
+    out_dir: str,
+    table: str,
+    replicas: int,
+    n_files: int,
+    keys: tuple[str, ...],
+    text: str | None = None,
+    stride: int = 10_000_000,
+) -> None:
+    """Write ``replicas`` copies of the source ``table`` as one table:
+    copy ``r`` adds ``r * stride`` to each key column and prefixes the
+    ``text`` column with ``"replica{r} "``."""
+    t = load_table(spark, SRC_DIR, table)
 
-
-def build_quad_corpus(spark) -> None:
-    if Path(SF10_DIR).exists():
-        shutil.rmtree(SF10_DIR)
-    Path(SF10_DIR).mkdir(parents=True)
-    docs = load_table(spark, "/root/testdata/sf0.1", "documents")
-    out = None
-    for r in range(QUAD_REPLICAS):
-        rep = docs.select(
-            (F.col("doc_id") + F.lit(r * 10_000_000)).alias("doc_id"),
-            F.concat(F.lit(f"replica{r} "), F.col("text")).alias("text"),
-            "lang",
-            "source",
-            "n_chars",
+    def copy(r: int):
+        return t.select(
+            *[
+                (F.col(c) + F.lit(r * stride)).alias(c)
+                if c in keys
+                else F.concat(F.lit(f"replica{r} "), F.col(c)).alias(c)
+                if c == text
+                else F.col(c)
+                for c in t.columns
+            ]
         )
-        out = rep if out is None else out.unionByName(rep)
-    out.repartition(64).write.parquet(f"{SF10_DIR}/documents.parquet")
 
-    emb = load_table(spark, "/root/testdata/sf0.1", "embeddings")
-    eout = None
-    for r in range(QUAD_REPLICAS):
-        rep = emb.select(
-            (F.col("vec_id") + F.lit(r * 10_000_000)).alias("vec_id"),
-            "embedding",
-            "label",
-        )
-        eout = rep if eout is None else eout.unionByName(rep)
-    eout.repartition(64).write.parquet(f"{SF10_DIR}/embeddings.parquet")
-
-
-def build_quad_events(spark) -> None:
-    """Extend the sf10 corpus with a 100x key-offset events replica
-    (the r11 registrations' screen needs it: events never entered the
-    quad corpus before). event_id offsets keep ids unique; the qsketch
-    level sampling hashes the id, so replicas draw fresh levels — the
-    distributional shape the sketch faces at a real 100x."""
-    ev = load_table(spark, "/root/testdata/sf0.1", "events")
-    rest = [c for c in ev.columns if c != "event_id"]
-    out = None
-    for r in range(QUAD_REPLICAS):
-        rep = ev.select(
-            (F.col("event_id") + F.lit(r * 100_000_000)).alias("event_id"),
-            *rest,
-        )
-        out = rep if out is None else out.unionByName(rep)
-    out.repartition(64).write.parquet(f"{SF10_DIR}/events.parquet")
-
-
-def run_quad_r12(spark, results: dict) -> None:
-    """sf10 (100x sf0.1) screens for the round-11 registrations
-    (VERDICT r11 item 3) with stage attribution: their scale claims
-    were argued from plan shape at sf1, this measures them at 10x
-    that. docs_cdc_dedup_rewrite: work must track token count — the
-    chunker scan (sha2-per-token map + per-doc window) is timed alone
-    next to the full rewrite, and the chunk-string min-agg's key
-    width rides as n_chunks/avg_chunk_len. events_value_qsketch: 3
-    corpus scans, 0 corpus exchanges — the levels-histogram pass is
-    timed alone next to the full readout."""
-    from ipeds_etl_spark import queries as q
-    from ipeds_etl_spark.operators import qsketch as QS
-    from ipeds_etl_spark.queries.dedup import cdc_chunks
-
-    reg = q.queries()
-    out: dict[str, dict] = {}
-
-    d = load_table(spark, SF10_DIR, "documents")
-    t0 = time.perf_counter()
-    stats = cdc_chunks(d).agg(
-        F.count(F.lit(1)).alias("n"), F.avg(F.length("chunk")).alias("w")
-    ).collect()[0]
-    t_chunk = round(time.perf_counter() - t0, 2)
-    t0 = time.perf_counter()
-    reg["docs_cdc_dedup_rewrite"](spark, SF10_DIR).write.format("noop").mode(
-        "overwrite"
-    ).save()
-    out["docs_cdc_dedup_rewrite"] = {
-        "sec": round(time.perf_counter() - t0, 2),
-        "chunker_scan_sec": t_chunk,
-        "n_chunks": int(stats["n"]),
-        "avg_chunk_chars": round(float(stats["w"]), 1),
-    }
-
-    e = (
-        load_table(spark, SF10_DIR, "events")
-        .filter(F.col("value").isNotNull())
-        .select("event_type", "event_id", "value")
+    out = functools.reduce(
+        lambda a, b: a.unionByName(b), (copy(r) for r in range(replicas))
     )
-    t0 = time.perf_counter()
-    retained, levels = QS.quantile_sketch(
-        e, ["event_type"], "value", "event_id"
-    )
-    lev_rows = levels.collect()
-    t_levels = round(time.perf_counter() - t0, 2)
-    t0 = time.perf_counter()
-    reg["events_value_qsketch"](spark, SF10_DIR).write.format("noop").mode(
-        "overwrite"
-    ).save()
-    out["events_value_qsketch"] = {
-        "sec": round(time.perf_counter() - t0, 2),
-        "levels_pass_sec": t_levels,
-        "n_events": int(sum(r["n"] for r in lev_rows)),
-        "levels": {r["event_type"]: int(r["lev"]) for r in lev_rows},
-    }
-    results["quad_r12"] = out
+    out.repartition(n_files).write.parquet(f"{out_dir}/{table}.parquet")
 
 
-def run_ann_r13(spark, results: dict) -> None:
-    """sf10 (200k-vector) screen for the wave-15 ANN family (VERDICT
-    r12 item 3): the r12 registrations' scale claims for
-    IVF-PQ/residual/SQ8/filtered were argued from plan shape — this
-    measures them, with the three named watchpoints attributed:
-    (a) index-build cost at 10x, residual_pq_books especially;
-    (b) ADC join fan-out per probed cell (candidates actually scored
-    per query = sum of its probed cells' populations);
-    (c) the filtered variant's candidate THINNING — per
-    (selectivity, n_probe) arm, how many in-cell candidates survive
-    the predicate (the quantity that makes sharp filters need more
-    probes)."""
-    from ipeds_etl_spark.operators.similarity import _scored_centroids
-    from ipeds_etl_spark import queries as q
-    from ipeds_etl_spark.operators import similarity as SIM
-    from ipeds_etl_spark.operators.indexes import ivf_codebook, pq_codebook
-    from ipeds_etl_spark.operators.indexes import residual_pq_books, sq8_bounds
-    from ipeds_etl_spark.queries.vectors import _SWEEP_NPROBES, _SWEEP_SELS
-
-    reg = q.queries()
-    out: dict[str, dict] = {}
-
-    # (a) index builds, individually attributed (memoized artifacts —
-    # these are the one-time costs bench bills under index_builds)
-    builds: dict[str, float] = {}
-    t0 = time.perf_counter()
-    cents = ivf_codebook(spark, SF10_DIR)
-    builds["ivf_codebook"] = round(time.perf_counter() - t0, 2)
-    t0 = time.perf_counter()
-    pq_codebook(spark, SF10_DIR)
-    builds["pq_codebooks"] = round(time.perf_counter() - t0, 2)
-    t0 = time.perf_counter()
-    residual_pq_books(spark, SF10_DIR)
-    builds["residual_pq_books"] = round(time.perf_counter() - t0, 2)
-    t0 = time.perf_counter()
-    sq8_bounds(spark, SF10_DIR)
-    builds["sq8_bounds"] = round(time.perf_counter() - t0, 2)
-    out["index_builds_sec"] = builds
-
-    # (b) ADC fan-out: per-query candidates = sum of probed cells'
-    # populations (the rows the ADC join actually scores)
-    e = load_table(spark, SF10_DIR, "embeddings")
-    assigned = SIM.assign_centroids(
-        e, "vec_id", "embedding", None, cent_rows=cents
-    ).select("vec_id", "centroid_id")
-    cell_counts = {
-        int(r["centroid_id"]): int(r["n"])
-        for r in assigned.groupBy("centroid_id")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .collect()
-    }
-    probes = (
-        e.filter(F.col("vec_id") < 5)
-        .select(
-            "vec_id",
-            F.slice(
-                F.reverse(
-                    F.array_sort(
-                        _scored_centroids(F.col("embedding"), cents)
-                    )
-                ),
-                1,
-                max(_SWEEP_NPROBES),
-            ).alias("p"),
-        )
-        .collect()
-    )
-    probe_cells = {
-        int(r["vec_id"]): [int(s["cid"]) for s in r["p"]] for r in probes
-    }
-    out["cell_counts"] = cell_counts
-    out["adc_fanout_nprobe2"] = {
-        qid: sum(cell_counts[c] for c in cells[:2])
-        for qid, cells in probe_cells.items()
-    }
-
-    # (c) filtered candidate thinning per (selectivity, n_probe) arm
-    lab = e.select("vec_id", "label")
-    thinning: dict[str, dict[str, int]] = {}
-    for pct, pred in _SWEEP_SELS:
-        fcounts = {
-            int(r["centroid_id"]): int(r["n"])
-            for r in assigned.join(lab, "vec_id")
-            .filter(F.expr(pred))
-            .groupBy("centroid_id")
-            .agg(F.count(F.lit(1)).alias("n"))
-            .collect()
-        }
-        per_arm: dict[str, int] = {}
-        for p in _SWEEP_NPROBES:
-            per_arm[f"nprobe{p}"] = sum(
-                sum(fcounts.get(c, 0) for c in cells[:p])
-                for cells in probe_cells.values()
-            )
-        thinning[f"sel{pct}"] = per_arm
-    out["filtered_candidates_total"] = thinning
-
-    # searches (the registered queries, 2 samples each, noop sink)
-    searches: dict[str, list[float]] = {}
-    for name in (
-        "emb_ivfpq_topk",
-        "emb_ivfpq_residual_topk",
-        "emb_sq8_topk",
-        "emb_ivfpq_filtered_topk",
-    ):
-        ts = []
-        for _ in range(2):
-            t0 = time.perf_counter()
-            reg[name](spark, SF10_DIR).write.format("noop").mode(
-                "overwrite"
-            ).save()
-            ts.append(round(time.perf_counter() - t0, 2))
-        searches[name] = ts
-    out["search_sec"] = searches
-    results["ann_r13"] = out
-
-
-def run_sweep_quad(spark, results: dict) -> None:
-    """dedup_simhash / emb_near_dups at 100x sf0.1: report wall seconds
-    AND emitted pair counts, so the superlinear wall ratio can be read
-    against the quadratic pair growth it is supposed to track. A count
-    (not noop write) is used on purpose: the pair frame IS the product."""
-    from ipeds_etl_spark import queries as q
-
-    reg = q.queries()
-    quad: dict[str, dict] = {}
-    for name in ("dedup_simhash", "emb_near_dups"):
-        t0 = time.perf_counter()
-        n = reg[name](spark, SF10_DIR).count()
-        quad[name] = {"sec": round(time.perf_counter() - t0, 2), "n_rows": n}
-    results["sweep_quad"] = quad
+def _fresh_dir(path: str) -> None:
+    if Path(path).exists():
+        shutil.rmtree(path)
+    Path(path).mkdir(parents=True)
 
 
 def build_corpus(spark) -> None:
-    if Path(SF1_DIR).exists():
-        shutil.rmtree(SF1_DIR)
-    Path(SF1_DIR).mkdir(parents=True)
-    docs = load_table(spark, "/root/testdata/sf0.1", "documents")
-    doc_reps = [
-        docs.select(
-            (F.col("doc_id") + F.lit(r * 10_000_000)).alias("doc_id"),
-            F.concat(F.lit(f"replica{r} "), F.col("text")).alias("text"),
-            "lang",
-            "source",
-            "n_chars",
+    """The 10x corpus under ``SF1_DIR`` (32 files per table, so scans
+    start wide)."""
+    _fresh_dir(SF1_DIR)
+    for table, keys, text in SF1_TABLES:
+        _replicate(spark, SF1_DIR, table, REPLICAS, 32, keys, text)
+    for dim in SF1_DIMS:
+        load_table(spark, SRC_DIR, dim).write.mode("overwrite").parquet(
+            f"{SF1_DIR}/{dim}.parquet"
         )
-        for r in range(REPLICAS)
-    ]
-    out = doc_reps[0]
-    for rep in doc_reps[1:]:
-        out = out.unionByName(rep)
-    # 32 files so the scan starts wide (operator scaling is the point,
-    # not the single-row-group degeneracy measured elsewhere)
-    out.repartition(32).write.parquet(f"{SF1_DIR}/documents.parquet")
 
-    emb = load_table(spark, "/root/testdata/sf0.1", "embeddings")
-    emb_reps = [
-        emb.select(
-            (F.col("vec_id") + F.lit(r * 10_000_000)).alias("vec_id"),
-            "embedding",
-            "label",
-        )
-        for r in range(REPLICAS)
-    ]
-    eout = emb_reps[0]
-    for rep in emb_reps[1:]:
-        eout = eout.unionByName(rep)
-    eout.repartition(32).write.parquet(f"{SF1_DIR}/embeddings.parquet")
 
-    def replicate(table: str, key_cols: list[str]) -> None:
-        t = load_table(spark, "/root/testdata/sf0.1", table)
-        reps = [
-            t.select(
-                *[
-                    (F.col(c) + F.lit(r * 10_000_000)).alias(c)
-                    if c in key_cols
-                    else F.col(c)
-                    for c in t.columns
-                ]
-            )
-            for r in range(REPLICAS)
-        ]
-        out = reps[0]
-        for rep in reps[1:]:
-            out = out.unionByName(rep)
-        out.repartition(32).write.parquet(f"{SF1_DIR}/{table}.parquet")
-
-    # keys offset per replica: every replica keeps its own basket /
-    # customer-history / user-timeline shape (per-key work constant,
-    # key count and totals 10x) — parts/nations stay shared so the
-    # co-purchase graph gets 10x edge multiplicity at fixed nodes
-    replicate("lineitem", ["l_orderkey"])
-    replicate("orders", ["o_orderkey", "o_custkey"])
-    replicate("events", ["event_id", "user_id"])
-    # dims copied unreplicated: fact/dim ratio grows 10x, as in life
-    for dim in ("customer", "part", "supplier", "nation", "region"):
-        load_table(spark, "/root/testdata/sf0.1", dim).write.mode(
-            "overwrite"
-        ).parquet(f"{SF1_DIR}/{dim}.parquet")
+def build_quad_corpus(spark) -> None:
+    """The 100x corpus under ``SF10_DIR``: documents, embeddings and
+    events (event ids offset per replica, so the id-hashed sketch
+    levels are drawn fresh per replica, as at a real 100x)."""
+    _fresh_dir(SF10_DIR)
+    _replicate(spark, SF10_DIR, "documents", QUAD_REPLICAS, 64, ("doc_id",), "text")
+    _replicate(spark, SF10_DIR, "embeddings", QUAD_REPLICAS, 64, ("vec_id",))
+    _replicate(
+        spark, SF10_DIR, "events", QUAD_REPLICAS, 64, ("event_id",), stride=100_000_000
+    )
 
 
 def run_iterative(spark, results: dict) -> None:
@@ -671,433 +183,53 @@ def run_iterative(spark, results: dict) -> None:
     results["graph_stats_sec"] = round(time.perf_counter() - t0, 2)
 
 
-def run_sweep(spark, results: dict, names: list[str] | None = None, key: str = "sweep") -> None:
-    from ipeds_etl_spark import queries as q
+def run_queries(spark, names: list[str], sf_dir: str) -> dict:
+    """One traced run of each query through ``bench.time_queries``."""
+    import bench
 
-    reg = q.queries()
-    sweep: dict[str, float] = {}
-    for name in names or SWEEP:
-        t0 = time.perf_counter()
-        reg[name](spark, SF1_DIR).write.format("noop").mode("overwrite").save()
-        sweep[name] = round(time.perf_counter() - t0, 2)
-    results[key] = sweep
+    bench._warm_session(sf_dir)
+    rows, errors = bench.time_queries(spark, names, sf_dir, 1)
+    return {"rows": rows, "errors": errors}
 
 
-def run_verdict_r6(spark, results: dict) -> None:
-    """VERDICT r5 item 4: sf1 measurements (not just shape arguments)
-    for the round-5 wave's iterative/candidate-bounded operators —
-    rounds must stay fixed and candidate counts linear when the corpus
-    grows 10x."""
-    from ipeds_etl_spark import queries as q
-    from ipeds_etl_spark.queries import dedup as DQ
-
-    reg = q.queries()
-    out: dict = {}
-
-    t0 = time.perf_counter()
-    reg["docs_bpe_merges"](spark, SF1_DIR).collect()
-    out["bpe_merges"] = {
-        "sec": round(time.perf_counter() - t0, 2),
-        # rounds are STRUCTURALLY vocabulary-bound: the merge loop is
-        # unrolled to a fixed count in operators/bpe.py regardless of
-        # corpus size; the corpus enters once (word-frequency pass)
-        "rounds": "fixed (unrolled merge rounds, corpus-independent)",
-    }
-
-    t0 = time.perf_counter()
-    kc_rows = reg["dedup_kcore"](spark, SF1_DIR).collect()
-    out["kcore"] = {
-        "sec": round(time.perf_counter() - t0, 2),
-        "rounds": DQ._KCORE_ROUNDS,
-        "result": [r.asDict() for r in kc_rows][:3],
-    }
-
-    n_docs = spark.read.parquet(f"{SF1_DIR}/documents.parquet").count()
-    t0 = time.perf_counter()
-    n_snm = reg["docs_snm_pairs"](spark, SF1_DIR).count()
-    out["snm"] = {
-        "sec": round(time.perf_counter() - t0, 2),
-        "n_docs": n_docs,
-        "candidate_bound_n_times_w": n_docs * DQ._SNM_W,
-        "pairs_past_jaccard": n_snm,
-    }
-
-    t0 = time.perf_counter()
-    bf = reg["parts_copurchase_butterflies"](spark, SF1_DIR).collect()[0].asDict()
-    out["butterflies"] = {"sec": round(time.perf_counter() - t0, 2), **bf}
-
-    results["verdict_r6"] = out
+SECTIONS = ("iterative", "sweep", "quad")
 
 
-def run_quad_r6(spark, results: dict) -> None:
-    """Round-6 additions at the 100x (sf10-equivalent) corpus: PCA's
-    outer-product aggregate and the centroid-distance matrix — both
-    claim corpus-size-free downstream frames; measure at 500k vectors."""
-    from ipeds_etl_spark import queries as q
-
-    reg = q.queries()
-    out = {}
-    for name in ("emb_pca_power_iteration", "emb_label_centroid_distances"):
-        t0 = time.perf_counter()
-        n = len(reg[name](spark, SF10_DIR).collect())
-        out[name] = {"sec": round(time.perf_counter() - t0, 2), "rows": n}
-    results["quad_r6"] = out
-
-
-def run_quad_r7(spark, results: dict) -> None:
-    """Wave-8 pair-producing ops at the 100x (sf10-equivalent) corpus:
-    winnowing (DF-capped fingerprint buckets), the audio landmark
-    match (DF-capped inverted index), and LPA over the 100x clone
-    graph. Records output rows AND seconds — the claim is wall time
-    tracks output, not a superlinear input blow-up. dedup_edit_verify
-    is excluded by its stated cost contract (pairs x prefix^2 DP cells:
-    linear in pairs but with a ~40k-cell constant — at sf10's ~26M
-    candidate pairs that is a 15+ minute batch job, correctly sized
-    for a verify stage that in production runs on component survivors,
-    not every raw candidate)."""
-    from ipeds_etl_spark import queries as q
-
-    reg = q.queries()
-    out = {}
-    for name in (
-        "docs_winnowing_fingerprints",
-        "multimodal_audio_fingerprint",
-        "dedup_lpa_communities",
-    ):
-        t0 = time.perf_counter()
-        n = len(reg[name](spark, SF10_DIR).collect())
-        out[name] = {"sec": round(time.perf_counter() - t0, 2), "rows": n}
-        print(json.dumps({name: out[name]}), flush=True)  # survive late aborts
-    results["quad_r7"] = out
-
-
-def run_quad_r8(spark, results: dict) -> None:
-    """VERDICT r6 item 5: the heaviest iterative / driver-artifact ops
-    not yet screened at 100x (sf10-equivalent). The two defect classes
-    the previous quad smokes exposed — collect sizes vs
-    driver_max_result_size, and AQE join-strategy flips on compressed
-    estimates — are exactly what these exercise: Lloyd's per-round
-    512-row centroid collect, k-center's per-round 1-row argmax over a
-    per-round localCheckpoint, BPE's vocabulary-sized merge rounds, and
-    the curation funnel's chain over the 26M-pair LSH memo."""
-    from ipeds_etl_spark import queries as q
-
-    reg = q.queries()
-    out = {}
-    for name in (
-        "emb_kmeans_lloyd",
-        "emb_kcenter_coreset",
-        "docs_bpe_merges",
-        "docs_curation_funnel",
-    ):
-        t0 = time.perf_counter()
-        n = len(reg[name](spark, SF10_DIR).collect())
-        out[name] = {"sec": round(time.perf_counter() - t0, 2), "rows": n}
-        print(json.dumps({name: out[name]}), flush=True)  # survive late aborts
-    results["quad_r8"] = out
-
-
-def run_funnel_r9(spark, results: dict) -> None:
-    """VERDICT r8 item 1: a CLEAN, solo sf10 measurement of the
-    heaviest registered pipeline op (`docs_curation_funnel`) — the
-    r8 number (572.4 s) was taken sharing the box with a concurrent
-    correctness run. Protocol: bill the 26M-pair LSH memo build
-    separately (exactly as bench bills `lsh_doc_pairs`), then one
-    profile pass (eager per-stage materialization → stage shares;
-    adds checkpoint boundaries, so it is NOT the billed number),
-    then clean median-of-3 of the registered plan over the warm
-    memo."""
-    import statistics
-
-    from ipeds_etl_spark import queries as q
-    from ipeds_etl_spark.operators.indexes import lsh_doc_pairs
-    from ipeds_etl_spark.queries.curation import q_docs_curation_funnel
-
-    reg = q.queries()
-    out: dict = {}
-    t0 = time.perf_counter()
-    out["n_pairs_memo"] = lsh_doc_pairs(spark, SF10_DIR).count()
-    out["lsh_memo_build_sec"] = round(time.perf_counter() - t0, 2)
-    print(json.dumps({"funnel_r9_memo": out}), flush=True)
-
-    prof: dict = {}
-    t0 = time.perf_counter()
-    n = len(q_docs_curation_funnel(spark, SF10_DIR, profile=prof).collect())
-    out["profile_pass"] = {
-        "sec": round(time.perf_counter() - t0, 2),
-        "stages": prof,
-        "rows": n,
-    }
-    print(json.dumps({"funnel_r9_profile": out["profile_pass"]}), flush=True)
-
-    samples = []
-    construct = []
-    for _ in range(3):
-        t0 = time.perf_counter()
-        df = reg["docs_curation_funnel"](spark, SF10_DIR)
-        # the components fixpoint runs DRIVER-LOOPED jobs during plan
-        # construction (per-round convergence counts), so its share
-        # lives here, not in any collect-side stage
-        construct.append(round(time.perf_counter() - t0, 2))
-        df.collect()
-        samples.append(round(time.perf_counter() - t0, 2))
-        print(
-            json.dumps(
-                {
-                    "funnel_r9_clean_sample": samples[-1],
-                    "construct_share": construct[-1],
-                }
-            ),
-            flush=True,
-        )
-    out["clean_samples"] = samples
-    out["construct_samples"] = construct
-    out["clean_median_sec"] = round(statistics.median(samples), 2)
-    results["funnel_r9"] = out
-
-
-def run_semdedup_r9(spark, results: dict) -> None:
-    """VERDICT r8 item 2: emb_semdedup at sf10 with k ≈ √n (the
-    paper's own prescription, previously only argued in the
-    docstring). Verifies (a) the broadcast-join assignment path at a
-    realistic k, (b) per-cluster pair counts stay bounded (max/p99
-    cluster size, examined-pair total), (c) zero cap overflow — no
-    silent mega-cluster quadratic, no AQE/collect defect."""
-    from ipeds_etl_spark.queries.vectors import semdedup_report
-
-    n_vecs = spark.read.parquet(f"{SF10_DIR}/embeddings.parquet").count()
-    k = int(n_vecs**0.5)
-    t0 = time.perf_counter()
-    rows = semdedup_report(spark, SF10_DIR, k=k).collect()
-    sec = round(time.perf_counter() - t0, 2)
-    sizes = sorted(r.n_points for r in rows)
-    examined_pairs = sum(s * (s - 1) // 2 for s in sizes)
-    results["semdedup_r9"] = {
-        "sec": sec,
-        "k": k,
-        "n_vecs": n_vecs,
-        "n_clusters": len(rows),
-        "max_cluster": sizes[-1],
-        "p99_cluster": sizes[int(0.99 * (len(sizes) - 1))],
-        "mean_cluster": round(n_vecs / max(len(sizes), 1), 1),
-        "examined_pairs": examined_pairs,
-        "n_dup_pairs": sum(r.n_dup_pairs for r in rows),
-        "n_dropped": sum(r.n_dropped for r in rows),
-        "n_overflow": sum(r.n_overflow for r in rows),
-    }
-    print(json.dumps({"semdedup_r9": results["semdedup_r9"]}), flush=True)
-
-
-def run_quad_r9(spark, results: dict) -> None:
-    """Round-9 additions at the 100x (sf10-equivalent) corpus: the CDC
-    chunker (token-bounded map + per-doc window — must stay ~linear at
-    500k docs) and the rewritten incidence-form ngram Jaccard (work
-    tracks shared-shingle pair increments; the 100x clone density is
-    the stress: every shingle's same-source bucket grows ~100x)."""
-    from ipeds_etl_spark import queries as q
-
-    reg = q.queries()
-    out = {}
-    for name in ("docs_cdc_chunk_dedup", "dedup_ngram_jaccard"):
-        t0 = time.perf_counter()
-        n = reg[name](spark, SF10_DIR).count()
-        out[name] = {"sec": round(time.perf_counter() - t0, 2), "rows": n}
-        print(json.dumps({name: out[name]}), flush=True)  # survive late aborts
-    results["quad_r9"] = out
-
-
-def run_components_race_r10(spark, results: dict) -> None:
-    """VERDICT r9 items 2 + 7: (a) a tracked 3-sample cold median for
-    the 127.6M-pair LSH memo build (previous sessions read 397.3 s and
-    251.9 s on identical code — a range, not a number); (b) the
-    never-run race — min-label propagation vs large/small-star
-    contraction — on that pair graph, ABAB so both arms share box
-    conditions; (c) the funnel re-measured median-of-3 with the
-    winning algorithm, construct_share recorded."""
-    import statistics
-
-    from ipeds_etl_spark import queries as q
-    from ipeds_etl_spark.memostore import release
-    from ipeds_etl_spark.operators.indexes import lsh_doc_pairs
-    from ipeds_etl_spark.queries.curation import q_docs_curation_funnel
-
-    out: dict = {}
-    # --- (a) memo build: median of 3 COLD builds ---
-    builds = []
-    for i in range(3):
-        release(spark)
-        t0 = time.perf_counter()
-        n_pairs = lsh_doc_pairs(spark, SF10_DIR).count()
-        builds.append(round(time.perf_counter() - t0, 2))
-        print(
-            json.dumps({"memo_build_sample": builds[-1], "n_pairs": n_pairs}),
-            flush=True,
-        )
-    out["memo_build_samples"] = builds
-    out["memo_build_median_sec"] = round(statistics.median(builds), 2)
-    out["n_pairs"] = n_pairs
-
-    # --- (b) the race, on the warm memo (build billed above) ---
-    pairs = lsh_doc_pairs(spark, SF10_DIR)
-    race: dict = {"label": [], "star": []}
-    rounds: dict = {}
-    for _ in range(2):  # ABAB
-        for alg, fn in (
-            ("label", connected_components),
-            ("star", connected_components_star),
-        ):
-            stats: dict = {}
-            t0 = time.perf_counter()
-            n = fn(pairs, stats=stats).count()
-            race[alg].append(round(time.perf_counter() - t0, 2))
-            rounds[alg] = stats.get("rounds")
+def main() -> int:
+    sections: dict[str, list[str]] = {}
+    section = None
+    for arg in sys.argv[1:] or ["iterative", "sweep"]:
+        if arg in SECTIONS:
+            section = arg
+            sections.setdefault(arg, [])
+        elif section in ("sweep", "quad"):
+            sections[section].append(arg)
+        else:
             print(
-                json.dumps(
-                    {f"components_{alg}_sample": race[alg][-1],
-                     "rounds": rounds[alg], "n_nodes": n}
-                ),
-                flush=True,
+                "usage: python tools/scale_smoke.py "
+                "[iterative] [sweep [NAMES...]] [quad [NAMES...]]",
+                file=sys.stderr,
             )
-    out["race"] = {
-        alg: {"samples": v, "median_sec": round(statistics.median(v), 2),
-              "rounds": rounds[alg]}
-        for alg, v in race.items()
-    }
-    winner = min(race, key=lambda a: statistics.median(race[a]))
-    out["winner"] = winner
-    print(json.dumps({"components_race_winner": winner}), flush=True)
-
-    # --- (c) funnel median-of-3 with the winner, construct share ---
-    samples, construct = [], []
-    for _ in range(3):
-        t0 = time.perf_counter()
-        df = q_docs_curation_funnel(
-            spark, SF10_DIR, components_algorithm=winner
-        )
-        construct.append(round(time.perf_counter() - t0, 2))
-        df.collect()
-        samples.append(round(time.perf_counter() - t0, 2))
-        print(
-            json.dumps(
-                {"funnel_r10_sample": samples[-1],
-                 "construct_share": construct[-1]}
-            ),
-            flush=True,
-        )
-    out["funnel_winner_samples"] = samples
-    out["funnel_winner_median_sec"] = round(statistics.median(samples), 2)
-    out["funnel_construct_samples"] = construct
-    results["components_race_r10"] = out
-
-
-def main() -> None:
-    sections = sys.argv[1:] or ["iterative", "sweep"]
+            return 2
     spark = get_spark("scale-smoke")
     spark.sparkContext.setLogLevel("ERROR")
     results: dict = {}
-    if "race_r10" in sections:
-        build_quad_corpus(spark)
-        run_components_race_r10(spark, results)
-        if sections == ["race_r10"]:
-            print(json.dumps(results))
-            return
-    r9_sections = {"funnel_r9", "semdedup_r9"}
-    if r9_sections & set(sections):
-        build_quad_corpus(spark)  # always fresh: stale /tmp corpora lie
-        if "funnel_r9" in sections:
-            run_funnel_r9(spark, results)
-        if "semdedup_r9" in sections:
-            run_semdedup_r9(spark, results)
-        if set(sections) <= r9_sections:
-            print(json.dumps(results))
-            return
-    if "sweep_quad" in sections:
-        build_quad_corpus(spark)
-        results["n_docs_quad"] = spark.read.parquet(
-            f"{SF10_DIR}/documents.parquet"
-        ).count()
-        run_sweep_quad(spark, results)
-        if sections == ["sweep_quad"]:
-            print(json.dumps(results))
-            return
-    if "ann_r13" in sections:
-        # fresh-session discipline (the sweep_r18 inflation lesson):
-        # run this section alone, before any corpus build in-session
+    # before the 10x build: a session that just built a corpus inflates
+    # one-shot timings
+    if "quad" in sections:
         if not Path(SF10_DIR).exists():
             build_quad_corpus(spark)
-        run_ann_r13(spark, results)
-        if sections == ["ann_r13"]:
-            print(json.dumps(results))
-            return
-    if "quad_r12" in sections:
-        # BEFORE build_corpus: a session that just built the sf1
-        # replica inflates one-shot timings 10x+ (the sweep_r18
-        # lesson, reproduced this round: the chunker pass read 238 s
-        # in-session vs 15 s fresh) — quad_r12 alone must run clean
-        if not Path(SF10_DIR).exists():
-            build_quad_corpus(spark)
-        if not Path(f"{SF10_DIR}/events.parquet").exists():
-            build_quad_events(spark)
-        run_quad_r12(spark, results)
-        if sections == ["quad_r12"]:
-            print(json.dumps(results))
-            return
-    build_corpus(spark)
-    results["n_docs"] = spark.read.parquet(f"{SF1_DIR}/documents.parquet").count()
+        results["quad"] = run_queries(spark, sections["quad"] or QUAD, SF10_DIR)
+    if "iterative" in sections or "sweep" in sections:
+        build_corpus(spark)  # always fresh: stale /tmp corpora lie
+        results["n_docs"] = spark.read.parquet(f"{SF1_DIR}/documents.parquet").count()
     if "iterative" in sections:
         run_iterative(spark, results)
     if "sweep" in sections:
-        run_sweep(spark, results)
-    if "sweep_r5" in sections:
-        run_sweep(spark, results, names=SWEEP_R5, key="sweep_r5")
-    if "sweep_r6" in sections:
-        run_sweep(spark, results, names=SWEEP_R6, key="sweep_r6")
-    if "sweep_r7" in sections:
-        run_sweep(spark, results, names=SWEEP_R7, key="sweep_r7")
-    if "sweep_r8" in sections:
-        run_sweep(spark, results, names=SWEEP_R8, key="sweep_r8")
-    if "sweep_r9" in sections:
-        run_sweep(spark, results, names=SWEEP_R9, key="sweep_r9")
-    if "verdict_r6" in sections:
-        run_verdict_r6(spark, results)
-    if "sweep_r10" in sections:
-        run_sweep(spark, results, names=SWEEP_R10, key="sweep_r10")
-    if "sweep_r11" in sections:
-        run_sweep(spark, results, names=SWEEP_R11, key="sweep_r11")
-    if "sweep_r12" in sections:
-        run_sweep(spark, results, names=SWEEP_R12, key="sweep_r12")
-    if "sweep_r13" in sections:
-        run_sweep(spark, results, names=SWEEP_R13, key="sweep_r13")
-    if "sweep_r14" in sections:
-        run_sweep(spark, results, names=SWEEP_R14, key="sweep_r14")
-    if "sweep_r15" in sections:
-        run_sweep(spark, results, names=SWEEP_R15, key="sweep_r15")
-    if "sweep_r16" in sections:
-        run_sweep(spark, results, names=SWEEP_R16, key="sweep_r16")
-    if "sweep_r17" in sections:
-        run_sweep(spark, results, names=SWEEP_R17, key="sweep_r17")
-    if "sweep_r18" in sections:
-        run_sweep(spark, results, names=SWEEP_R18, key="sweep_r18")
-    if "sweep_r19" in sections:
-        run_sweep(spark, results, names=SWEEP_R19, key="sweep_r19")
-    if "quad_r6" in sections:
-        if not Path(SF10_DIR).exists():
-            build_quad_corpus(spark)
-        run_quad_r6(spark, results)
-    if "quad_r7" in sections:
-        if not Path(SF10_DIR).exists():
-            build_quad_corpus(spark)
-        run_quad_r7(spark, results)
-    if "quad_r8" in sections:
-        if not Path(SF10_DIR).exists():
-            build_quad_corpus(spark)
-        run_quad_r8(spark, results)
-    if "quad_r9" in sections:
-        if not Path(SF10_DIR).exists():
-            build_quad_corpus(spark)
-        run_quad_r9(spark, results)
+        results["sweep"] = run_queries(spark, sections["sweep"] or SWEEP, SF1_DIR)
     print(json.dumps(results))
+    return 0
 
 
 if __name__ == "__main__":
-    main()
+    raise SystemExit(main())
