@@ -16,8 +16,8 @@ of a query's build plus its noop-sink execution (full computation, no
 collect), with the build and execution of each run traced by
 ``perfbench.tracer``. The parent only spawns captured child processes,
 each a fresh JVM that runs ``_child`` on one spec (query list, sf
-directory, runs, optional engine root, part file) and writes a part
-file; the parent merges the parts.
+directory, runs, optional engine root, whether to run the calibration
+probe, part file) and writes a part file; the parent merges the parts.
 
 Usage:
     python bench.py                 # suite (+ isolates + sf1 track)
@@ -379,12 +379,26 @@ def _sf1_dir() -> str:
     return os.environ.get("BENCH_SF1_DIR", _SF1_DIR_DEFAULT)
 
 
-def _ensure_sf1_corpus(spark, sf1_dir: str) -> None:
-    """Build (or reuse) the 10x key-offset replica corpus via
-    ``tools.scale_smoke.build_corpus``. A stamp inside the corpus dir
-    records the source files' identity and the replica count; any
-    mismatch (regenerated testdata, changed build) forces a rebuild,
-    and scale_smoke's own rebuilds drop the stamp."""
+#: The corpus build that ``_ensure_sf1_corpus`` runs in a fresh process
+#: (argv[1] is the target directory).
+_BUILD_SF1 = (
+    "import sys; import tools.scale_smoke as SM; "
+    "from ipeds_etl_spark.session import get_spark; "
+    "SM.SF1_DIR = sys.argv[1]; SM.build_corpus(get_spark('ipeds_etl_spark-bench'))"
+)
+
+
+def _ensure_sf1_corpus(sf1_dir: str) -> None:
+    """Build the 10x key-offset replica corpus
+    (``tools.scale_smoke.build_corpus``) into ``sf1_dir`` in a captured
+    process, unless the stamp inside the directory matches: the source
+    files' identity and the replica count. Any mismatch (regenerated
+    testdata, changed build) forces a rebuild, and scale_smoke's own
+    rebuilds drop the stamp. The parent calls it once before a track
+    that reads the corpus, so every child of the track, in either
+    --paired arm, reads the same bytes and warms up the same way."""
+    import subprocess
+
     import tools.scale_smoke as SM
 
     stamp_path = Path(sf1_dir) / "_BENCH_STAMP.json"
@@ -399,8 +413,15 @@ def _ensure_sf1_corpus(spark, sf1_dir: str) -> None:
                 return
         except (ValueError, OSError):
             pass
-    SM.SF1_DIR = sf1_dir  # build into the bench-designated dir
-    SM.build_corpus(spark)
+    proc = subprocess.run(
+        [sys.executable, "-c", _BUILD_SF1, sf1_dir],
+        cwd=Path(__file__).resolve().parent,
+        capture_output=True,
+        text=True,
+    )
+    if proc.returncode != 0:
+        sys.stderr.write(proc.stdout[-4000:] + "\n" + proc.stderr[-8000:] + "\n")
+        raise SystemExit(proc.returncode)
     stamp_path.write_text(json.dumps(want))
 
 
@@ -410,21 +431,15 @@ def _child(spec: dict) -> None:
 
     With ``spec["engine_root"]`` set, engine code is imported from that
     tree (the --paired reference worktree); the harness, this file, is
-    always the current one. Without it, a child aimed at the sf1
-    directory first builds the replica corpus if its stamp is stale,
-    so both --paired arms read identical bytes. Everything this prints
-    goes to the captured child output."""
+    always the current one. With ``spec["probe"]`` set (the suite
+    chunks, the only children whose probe the parent reads), the part
+    also carries the calibration scan. Everything this prints goes to
+    the captured child output."""
     root = spec.get("engine_root")
     if root:
         sys.path.insert(0, root)
     sf_dir = spec["sf_dir"]
-    if not root and sf_dir == _sf1_dir():
-        import tools.scale_smoke as SM
-
-        spark = _warm_session(SM.SRC_DIR)
-        _ensure_sf1_corpus(spark, sf_dir)
-    else:
-        spark = _warm_session(sf_dir)
+    spark = _warm_session(sf_dir)
     part: dict = {"index_builds": {}, "index_build_error": None}
     try:
         part["index_builds"] = _build_indexes(spark, sf_dir)
@@ -435,12 +450,17 @@ def _child(spec: dict) -> None:
     part["rows"], part["errors"] = time_queries(
         spark, spec["names"], sf_dir, spec["n_runs"]
     )
-    part["calibration_scan_agg"] = _spark_probe(spark, sf_dir)
+    if spec["probe"]:
+        part["calibration_scan_agg"] = _spark_probe(spark, sf_dir)
     Path(spec["part"]).write_text(json.dumps(part) + "\n")
 
 
 def _run_child(
-    names: list[str], sf_dir: str, n_runs: int, engine_root: str | None = None
+    names: list[str],
+    sf_dir: str,
+    n_runs: int,
+    engine_root: str | None = None,
+    probe: bool = False,
 ) -> dict:
     """Run one ``_child`` in a captured subprocess and return its part;
     a failed child raises SystemExit after echoing its output tail."""
@@ -453,6 +473,7 @@ def _run_child(
         "sf_dir": sf_dir,
         "n_runs": n_runs,
         "engine_root": engine_root,
+        "probe": probe,
         "part": str(part_path),
     }
     proc = subprocess.run(
@@ -494,11 +515,14 @@ def _median_builds(parts: list[dict]) -> dict[str, float]:
 
 
 def _run_chunks(
-    names: list[str], sf_dir: str, n_runs: int, n_chunks: int
+    names: list[str], sf_dir: str, n_runs: int, n_chunks: int, probe: bool = False
 ) -> list[dict]:
     """Time ``names`` round-robin across ``n_chunks`` children, so each
     chunk gets an even share of the heavy queries."""
-    return [_run_child(names[i::n_chunks], sf_dir, n_runs) for i in range(n_chunks)]
+    return [
+        _run_child(names[i::n_chunks], sf_dir, n_runs, probe=probe)
+        for i in range(n_chunks)
+    ]
 
 
 def _isolate(here: Path, name: str, sf_dir: str, n_runs: int, mode: str) -> dict:
@@ -658,6 +682,7 @@ def _paired_main(rev: str) -> None:
     tracks: list[tuple[str, str, list[str]]] = [("sf0.1", sf_dir, sf01_list)]
     sf1_list = list(summary.get("queries_sf1", {}))
     if sf1_list and os.environ.get("BENCH_SF1", "1") != "0":
+        _ensure_sf1_corpus(_sf1_dir())
         tracks.append(("sf1", _sf1_dir(), sf1_list))
 
     ref_dir, ref_sha = _paired_worktree(here, rev)
@@ -782,6 +807,7 @@ def _sf1_track(
     sf1_list += [
         n for n in sorted(SF1_FORCE_INCLUDE) if n in queries_known and n not in sf1_list
     ]
+    _ensure_sf1_corpus(_sf1_dir())
     parts = _run_chunks(
         sf1_list, _sf1_dir(), int(os.environ.get("BENCH_SF1_RUNS", "2")), sf1_chunks
     )
@@ -873,7 +899,7 @@ def main() -> None:
     else:
         suite_run = suite_all
 
-    parts = _run_chunks(suite_run, sf_dir, n_runs, n_chunks)
+    parts = _run_chunks(suite_run, sf_dir, n_runs, n_chunks, probe=True)
     merged: dict[str, dict] = {}
     errors: dict[str, str] = {}
     for p in parts:

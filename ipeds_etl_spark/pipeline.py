@@ -244,8 +244,7 @@ def refresh_gold_incremental(
         .filter(F.col("n_rows") > 0)
     )
 
-    batch_file = f"{counts_path}/_batch"
-    folded = fsutil.path_exists(spark, batch_file) and fsutil.read_text(spark, batch_file) == batch
+    folded = _stored_batch(spark, counts_path) == batch
     out = {}
     for name, path, df in (
         ("institutions_latest", latest_path, new_latest),
@@ -261,6 +260,14 @@ def refresh_gold_incremental(
             _publish_view(spark, path)
         out[name] = spark.read.parquet(path).count()
     return out
+
+
+def _stored_batch(spark: SparkSession, counts_path: str) -> str | None:
+    """The batch the published ``yearly_counts`` last folded, if any."""
+    batch_file = f"{counts_path}/_batch"
+    if not fsutil.path_exists(spark, batch_file):
+        return None
+    return fsutil.read_text(spark, batch_file)
 
 
 def _publish_view(spark: SparkSession, path: str) -> None:
@@ -334,6 +341,14 @@ def refresh_gold_from_txn_diff(
     Returns the per-view row counts plus ``refreshed_to_version`` — the
     resolved ``v_to`` — so callers can checkpoint it as the next run's
     ``v_from``.
+
+    The batch id is ``"{v_from}:{v_to}"``, and the stored counts carry
+    the last one they folded. A refresh that failed after publishing the
+    counts has therefore moved both views to that batch's end version
+    (``institutions_latest`` is published first), and its re-run folds
+    only from there, also when a later commit moved "latest" meanwhile.
+    A ``v_to`` older than the version the counts already hold is
+    rejected toward ``rebuild_gold``.
     """
     from ipeds_etl_spark.operators import txn
     from ipeds_etl_spark.operators.cdc import snapshot_diff
@@ -346,6 +361,20 @@ def refresh_gold_from_txn_diff(
         # the data actually diffed (manifest B), silently excluding
         # the concurrent commit's partitions from the refresh
         v_to = txn.latest_version(spark, core_path)
+    out_paths = {
+        "institutions_latest": f"{warehouse}/vw/{endpoint}_institutions_latest",
+        "yearly_counts": f"{warehouse}/vw/{endpoint}_yearly_counts",
+    }
+    for path in out_paths.values():
+        _recover_view(spark, path)
+    _, sep, done_to = (_stored_batch(spark, out_paths["yearly_counts"]) or "").partition(":")
+    if sep and done_to.isdigit():
+        if int(done_to) > v_to:
+            raise ValueError(
+                f"the gold views already hold version {done_to}, newer than "
+                f"v_to={v_to}; use rebuild_gold"
+            )
+        v_from = max(v_from, int(done_to))
     man_from = txn.read_manifest(spark, core_path, version=v_from)
     man_to = txn.read_manifest(spark, core_path, version=v_to)
     changed_entries = sorted(
@@ -359,10 +388,6 @@ def refresh_gold_from_txn_diff(
             "gold refresh has no retraction rule for whole-partition "
             "deletes; use rebuild_gold"
         )
-    out_paths = {
-        "institutions_latest": f"{warehouse}/vw/{endpoint}_institutions_latest",
-        "yearly_counts": f"{warehouse}/vw/{endpoint}_yearly_counts",
-    }
     if not changed_entries:
         out = {
             name: spark.read.parquet(path).count()

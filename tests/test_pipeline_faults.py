@@ -177,3 +177,42 @@ def test_gold_refresh_publish_fault_keeps_views_and_reruns(spark, tmp_path, monk
 
     _refresh(spark, wh)  # the caller re-runs the failed batch
     assert _views(spark, wh) == new
+
+
+def test_txn_gold_refresh_rerun_after_a_later_commit_folds_each_change_once(spark, tmp_path, monkeypatch):
+    """The txn-diff refresh resolves "latest" again on its re-run. A
+    commit that lands between the failure and the re-run must be folded
+    once, and the failed batch's changes, already in the published
+    counts, must not be folded again."""
+    from ipeds_etl_spark import fsutil
+    from ipeds_etl_spark.operators import txn
+
+    wh = str(tmp_path)
+    core = f"{wh}/core/{ENDPOINT}"
+
+    def commit(rows):
+        txn.upsert_into_txn_table(spark, core, spark.createDataFrame(rows, GOLD_SCHEMA), ["unitid", "year"])
+
+    commit([(1, 2019, "A1", "CA"), (1, 2020, "A2", "CA"), (2, 2020, "B", "NY")])
+    v1 = txn.latest_version(spark, core)
+    pipeline.rebuild_gold(spark, ENDPOINT, wh)
+    commit([(3, 2020, "C", "TX"), (2, 2020, "B2", "CA")])
+    delete = fsutil.delete
+
+    def faulty_delete(sp, path, recursive=True):
+        if path == f"{wh}/vw/{ENDPOINT}_yearly_counts__refresh_old" and fsutil.path_exists(sp, path):
+            raise Crash
+        return delete(sp, path, recursive)
+
+    with monkeypatch.context() as m:
+        m.setattr(fsutil, "delete", faulty_delete)
+        with pytest.raises(Crash):
+            pipeline.refresh_gold_from_txn_diff(spark, ENDPOINT, wh, v_from=v1)
+    commit([(4, 2020, "D", "TX")])  # lands before the re-run
+
+    out = pipeline.refresh_gold_from_txn_diff(spark, ENDPOINT, wh, v_from=v1)
+    assert out["refreshed_to_version"] == txn.latest_version(spark, core)
+    got = _views(spark, wh)
+    assert (2020, "TX", 2) in got["yearly_counts"]
+    pipeline.rebuild_gold(spark, ENDPOINT, wh)
+    assert got == _views(spark, wh)

@@ -16,10 +16,12 @@ inflates its next timings):
   with the traced build and execution fields), so the measured plan is
   exactly the production plan.
 * ``quad [NAMES...]`` — the same over the 100x corpus (default
-  ``QUAD``), built when missing. Wall time should track the output
-  pair count (clone cliques are quadratic in duplication multiplicity
-  by definition), not a superlinear input blow-up. Run it with
-  ``DRIVER_MEMORY=48g``: local mode packs every task into one JVM.
+  ``QUAD``), built when missing, plus each query's output row count
+  (``n_rows``, from a separate ``count()`` after the timing). Wall time
+  should track the output pair count (clone cliques are quadratic in
+  duplication multiplicity by definition), not a superlinear input
+  blow-up. Run it with ``DRIVER_MEMORY=48g``: local mode packs every
+  task into one JVM.
 
 Corpora: sf0.1 tables replicated with per-replica key offsets; doc text
 gets a per-replica prefix. The prefix barely perturbs minhash
@@ -187,9 +189,21 @@ def run_queries(spark, names: list[str], sf_dir: str) -> dict:
     """One traced run of each query through ``bench.time_queries``."""
     import bench
 
-    bench._warm_session(sf_dir)
     rows, errors = bench.time_queries(spark, names, sf_dir, 1)
     return {"rows": rows, "errors": errors}
+
+
+def run_quad(spark, names: list[str]) -> dict:
+    """``run_queries`` over the 100x corpus, with each timed query's
+    output row count: the pair frame is the product, and its count is
+    what the wall time is read against."""
+    from ipeds_etl_spark import queries as q
+
+    out = run_queries(spark, names, SF10_DIR)
+    registered = q.queries()
+    for name, row in out["rows"].items():
+        row["n_rows"] = registered[name](spark, SF10_DIR).count()
+    return out
 
 
 SECTIONS = ("iterative", "sweep", "quad")
@@ -213,13 +227,16 @@ def main() -> int:
             return 2
     spark = get_spark("scale-smoke")
     spark.sparkContext.setLogLevel("ERROR")
+    # generic warm-up (JVM codegen, shuffle machinery), so the first
+    # timed query is not billed for it
+    spark.range(1_000_000).selectExpr("sum(id)").collect()
     results: dict = {}
     # before the 10x build: a session that just built a corpus inflates
     # one-shot timings
     if "quad" in sections:
         if not Path(SF10_DIR).exists():
             build_quad_corpus(spark)
-        results["quad"] = run_queries(spark, sections["quad"] or QUAD, SF10_DIR)
+        results["quad"] = run_quad(spark, sections["quad"] or QUAD)
     if "iterative" in sections or "sweep" in sections:
         build_corpus(spark)  # always fresh: stale /tmp corpora lie
         results["n_docs"] = spark.read.parquet(f"{SF1_DIR}/documents.parquet").count()
