@@ -95,8 +95,8 @@ EXCLUDED = {
 SUITE_CRITERION = (
     "The suite is the registry minus EXCLUDED; a full run times HEADLINE, "
     "SF1_FORCE_INCLUDE and one BENCH_ROTATE-th slice of the rest (the slice "
-    "advances through BENCH_ROTATION.json unless BENCH_ROTATE_PIN is set or "
-    "the run has fewer cpus than the recorded one), split across "
+    "advances through BENCH_ROTATION.json unless BENCH_ROTATE_PIN is set, "
+    "which re-times that slice), split across "
     "BENCH_CHUNKS fresh child JVMs. A query's time is the median over "
     "BENCH_RUNS runs of its build plus a noop-sink execution, taken after "
     "the BUILD_ONCE indexes are built cold in each chunk and billed under "
@@ -200,29 +200,16 @@ def compact_query_map(
     return out
 
 
-def resolve_rotation(
-    state_path, rotate: int, cpus: int | None, pin: str | None
-) -> tuple[int, bool]:
+def resolve_rotation(state_path, rotate: int, pin: str | None) -> tuple[int, bool]:
     """Which sf0.1 rotation slice this run times, and whether it may
     advance the shared rotation state.
 
-    * ``pin`` (env BENCH_ROTATE_PIN) forces that slice, never advances.
-    * A run at fewer cpus than the recorded state's (a scaling re-run
-      after the main run) re-times the same slice and does not
-      advance, so scaling ratios compare identical subsets.
-    * Otherwise: the successor slice, advancing state. The caller
-      writes the state file."""
+    * ``pin`` (env BENCH_ROTATE_PIN) forces that slice, never advances:
+      it is how a re-run (a scaling arm, a diagnosis) re-times a slice.
+    * Otherwise: the successor slice, advancing state, whatever box
+      wrote the state. The caller writes the state file."""
     if pin is not None:
         return int(pin) % rotate, False
-    if cpus is not None and state_path.exists():
-        try:
-            state = json.loads(state_path.read_text())
-            prev_cpus = int(state["cpus"])
-            prev_slice = int(state["slice"])
-        except (ValueError, KeyError, OSError, TypeError):
-            prev_cpus = None
-        if prev_cpus is not None and cpus < prev_cpus:
-            return prev_slice % rotate, False
     return next_rotation_slice(state_path, rotate), True
 
 
@@ -876,7 +863,7 @@ def main() -> None:
     if rotate > 1:
         state_path = here / "BENCH_ROTATION.json"
         rotation_slice, rotation_advanced = resolve_rotation(
-            state_path, rotate, run_cpus, os.environ.get("BENCH_ROTATE_PIN")
+            state_path, rotate, os.environ.get("BENCH_ROTATE_PIN")
         )
         suite_run = rotation_plan(
             suite_all,

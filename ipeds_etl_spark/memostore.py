@@ -3,7 +3,7 @@
 Some artifacts are deterministic functions of a corpus version and are
 consumed by many queries: loaded table handles, the MinHash-LSH
 candidate pairs, the basket items, IVF/PQ/residual codebooks, SQ8
-bounds, the frozen tokenizer vocabulary and skew-probe verdicts. Each
+bounds and the frozen tokenizer vocabulary. Each
 is built once per session and corpus version, then reused
 (FAISS-style build-once-query-many; the session-level reuse of built
 intermediates of EDBT 2020's incremental top-k framework). This module

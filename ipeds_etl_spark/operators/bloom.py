@@ -17,21 +17,14 @@ AQE; here it is an explicit, composable operator — usable across
 stages, persistable alongside a snapshot, or probed in a totally
 different job than the one that built it.
 
-Two hash families, both giving k positions via Kirsch-Mitzenmacher
-double hashing (pos_i = h1 + i*h2 mod m — one base-hash evaluation
-instead of k, same asymptotic fp rate; published construction):
-
-* default — JVM-native ``xxhash64`` with two seeds: the probe is
-  within noise of a plain scan (no string cast, no sha, no conv);
-* ``portable=True`` — the repo-wide sha256-prefix family, so a filter
-  built today can be rebuilt bit-identically from the same keys on any
-  engine (cross-system handoffs); ~2s/600k rows slower locally.
-
-Build and probe must use the same family. The bitmap itself is
-driver-side metadata — ``n_bits / 64`` longs, same footprint class as
-an IVF codebook — and the build is one partial-aggregated pass over
-the dim keys. Filter correctness never depends on the family: the
-exact join removes all false positives either way.
+Positions come from Kirsch-Mitzenmacher double hashing (pos_i = h1 +
+i*h2 mod m — one base-hash evaluation instead of k, same asymptotic fp
+rate; published construction) over JVM-native ``xxhash64`` with two
+seeds: the probe is within noise of a plain scan (no string digest, no
+conv). The bitmap itself is driver-side metadata — ``n_bits / 64``
+longs, same footprint class as an IVF codebook — and the build is one
+partial-aggregated pass over the dim keys. The exact join removes all
+false positives.
 """
 
 from __future__ import annotations
@@ -45,25 +38,15 @@ _MIN_BITS = 1 << 10
 _MAX_BITS = 1 << 22
 
 
-def _hash_pair(key: Column, portable: bool) -> tuple[Column, Column]:
-    """(h1, h2) base hashes for double hashing. Portable: disjoint hex
-    slices of one sha256 digest (40-bit each, replicable anywhere).
-    Default: two-seed xxhash64, JVM-intrinsic — no string cast, no
-    digest hex, no conv. h2 is forced odd so it is coprime with the
+def _hash_pair(key: Column) -> tuple[Column, Column]:
+    """(h1, h2) base hashes for double hashing: two-seed xxhash64,
+    JVM-intrinsic. h2 is forced odd so it is coprime with the
     power-of-two m and the probe sequence never degenerates; h1 is
     folded non-negative (xxhash64 is signed)."""
-    if portable:
-        key_s = F.coalesce(key.cast("string"), F.lit("\x00null"))
-        digest = F.sha2(F.concat(F.lit("bloom:"), key_s), 256)
-        h1 = F.conv(F.substring(digest, 1, 10), 16, 10).cast("long")
-        h2 = (
-            F.conv(F.substring(digest, 11, 10), 16, 10).cast("long")
-        ).bitwiseOR(F.lit(1).cast("long"))
-        return h1, h2
     # canonicalize to string first: xxhash64 hashes the BINARY type
     # representation, so int-vs-bigint key columns would otherwise
     # produce different bits on the build and probe sides (false
-    # negatives). The sha route casts to string for the same reason.
+    # negatives).
     key_s = F.coalesce(key.cast("string"), F.lit("\x00null"))
     h1 = F.pmod(F.xxhash64(F.lit("b1"), key_s), F.lit(1 << 40))
     h2 = F.pmod(F.xxhash64(F.lit("b2"), key_s), F.lit(1 << 40)).bitwiseOR(
@@ -76,10 +59,8 @@ def _positions_from(h1: Column, h2: Column, n_bits: int, n_hashes: int) -> list[
     return [(h1 + i * h2) % n_bits for i in range(n_hashes)]
 
 
-def _positions(
-    key: Column, n_bits: int, n_hashes: int, portable: bool
-) -> list[Column]:
-    h1, h2 = _hash_pair(key, portable)
+def _positions(key: Column, n_bits: int, n_hashes: int) -> list[Column]:
+    h1, h2 = _hash_pair(key)
     return _positions_from(h1, h2, n_bits, n_hashes)
 
 
@@ -97,14 +78,12 @@ def build_bloom(
     key_col: str,
     n_bits: int | None = None,
     n_hashes: int = 3,
-    portable: bool = False,
 ) -> tuple[list[int], int, int]:
     """One aggregation pass over the qualifying keys -> the filter's
     word array (``n_bits/64`` longs, driver-side metadata).
 
     Auto-sizes ``n_bits`` from an exact distinct-key count when not
-    given. Returns ``(words, n_bits, n_hashes)``. ``portable`` selects
-    the hash family (see module docstring) and must match the probe.
+    given. Returns ``(words, n_bits, n_hashes)``.
     """
     # no distinct(): setting the same bits twice is a no-op, so dup
     # keys cost nothing in the agg (map-side bit_or combine) and only
@@ -116,7 +95,7 @@ def build_bloom(
     if n_bits % 64:
         raise ValueError(f"n_bits must be a multiple of 64, got {n_bits}")
     pos = F.explode(
-        F.array(*_positions(F.col("k"), n_bits, n_hashes, portable))
+        F.array(*_positions(F.col("k"), n_bits, n_hashes))
     ).alias("pos")
     # PySpark's ``F.shiftleft`` only takes a Python-int shift amount;
     # the SQL form accepts an expression, so the mask goes through expr.
@@ -143,7 +122,6 @@ def bloom_probe(
     words: list[int],
     n_bits: int,
     n_hashes: int,
-    portable: bool = False,
 ) -> Column:
     """Pure-codegen membership test: AND over ``n_hashes`` bit lookups
     in the literal word array. No join, no shuffle — a map-side filter
@@ -157,15 +135,14 @@ def bloom_probe(
     import json as _json
 
     lit_words = F.from_json(F.lit(_json.dumps(words)), "array<bigint>")
-    h1, h2 = _hash_pair(key, portable)
+    h1, h2 = _hash_pair(key)
 
     # LET-BINDING via a higher-order function: codegen does NOT share
     # subexpressions across the probe branches, so writing h1/h2 inline
-    # evaluates the sha256+conv chain once PER PROBE PER LOOKUP (12
-    # sha2 nodes in the optimized plan; measured 3.5s on a 600k-row
-    # scan). Boxing (h1, h2) in a 1-element array and testing inside an
-    # `exists` lambda binds them as lambda variables — evaluated once
-    # per row, reused by every probe (plan has exactly 1 sha2; ~1s).
+    # evaluates the base hashes once PER PROBE PER LOOKUP. Boxing
+    # (h1, h2) in a 1-element array and testing inside an `exists`
+    # lambda binds them as lambda variables — evaluated once per row,
+    # reused by every probe.
     def _all_probes(s: Column) -> Column:
         cond = None
         for pos in _positions_from(s["h1"], s["h2"], n_bits, n_hashes):
@@ -185,19 +162,14 @@ def bloom_semi_join(
     small_key: str,
     n_bits: int | None = None,
     n_hashes: int = 3,
-    portable: bool = False,
 ) -> DataFrame:
     """Semi join with Bloom pre-pruning: build the filter from
     ``small``'s keys, map-side prune ``big``, then exact
     ``left_semi`` join on the sliver. Result equals
     ``big.join(small, key, 'left_semi')`` exactly — the Bloom stage
     only removes rows the exact join would also remove."""
-    words, n_bits, n_hashes = build_bloom(
-        small, small_key, n_bits, n_hashes, portable
-    )
-    pruned = big.filter(
-        bloom_probe(F.col(big_key), words, n_bits, n_hashes, portable)
-    )
+    words, n_bits, n_hashes = build_bloom(small, small_key, n_bits, n_hashes)
+    pruned = big.filter(bloom_probe(F.col(big_key), words, n_bits, n_hashes))
     keys = small.select(F.col(small_key).alias("__bl_k"))
     return pruned.join(
         keys, on=[F.col(big_key) == F.col("__bl_k")], how="left_semi"

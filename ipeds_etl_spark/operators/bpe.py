@@ -197,59 +197,37 @@ def _longest_match_fold(max_len: int) -> str:
 
 
 def segment_longest_match(
-    words: DataFrame,
-    vocab: list[str],
-    max_len: int = 6,
-    vocab_via: str = "literal",
+    words: DataFrame, vocab: list[str], max_len: int = 6
 ) -> DataFrame:
     """Apply a FROZEN ≥1k-unit vocabulary to the word table by greedy
-    longest-match segmentation — the tokenization-pipeline apply path
-    VERDICT r11 item 5 named: training replays merges (see
-    ``learn_bpe_merges``), but what a production tokenizer RUNS per
-    document is segmentation against the frozen artifact, and at
-    realistic vocab sizes that must be one linear pass per word, not
-    one rewrite pass per merge. ``vocab`` is broadcast as a single
-    plan-literal array (a few KB for 1k units — constant-folded, rides
-    every task for free); input ``words`` is the distinct-word table
-    ``(w, n)``, so the fold runs vocabulary-many times regardless of
-    corpus size, and tokenizing 100 TB reduces to a word equi-join.
-    Returns ``(w, n, pieces array<string>, word_tokens)``. Words are
-    ``^[a-z]+$`` and the vocabulary is augmented with ``ALPHABET``, so
-    segmentation always succeeds.
+    longest-match segmentation — the tokenization-pipeline apply path:
+    training replays merges (see ``learn_bpe_merges``), but what a
+    production tokenizer RUNS per document is segmentation against the
+    frozen artifact, and at realistic vocab sizes that must be one
+    linear pass per word, not one rewrite pass per merge. Input
+    ``words`` is the distinct-word table ``(w, n)``, so the fold runs
+    vocabulary-many times regardless of corpus size, and tokenizing
+    100 TB reduces to a word equi-join. Returns ``(w, n, pieces
+    array<string>, word_tokens)``. Words are ``^[a-z]+$`` and the
+    vocabulary is augmented with ``ALPHABET``, so segmentation always
+    succeeds.
 
-    ``vocab_via`` picks how the vocabulary array reaches executors
-    (VERDICT r12 item 5 — the production-vocab-size question):
-    ``"literal"`` embeds it as ONE ``from_json`` string literal that
-    Catalyst constant-folds into a single array Literal (the
-    ``similarity._matrix_lit`` trick), ``"broadcast"`` ships it once
-    per executor as a broadcast 1-row DataFrame cross-joined in (a
-    BroadcastNestedLoopJoin with a 1-row build side — sanctioned, the
-    vocab rides the broadcast instead of the plan). Measured at sf1
-    with the 18,330-unit composite vocabulary (~146 KB; 3-run medians,
-    one process, SCALE.md "Vocab apply at production vocab size"):
-    json-literal 2.2 s, broadcast 2.9 s, and the element-wise
-    ``F.lit(list)`` spelling this function used before 11.8 s (first
-    sample 44.6 s) — an 18k-child array expression bloats analysis and
-    per-task serialization, the single-string literal does not. The
-    json-literal is therefore the default; ``"broadcast"`` is the
-    documented escape hatch for vocabularies large enough (≫1M units)
-    that even one string literal per task would matter."""
-    if vocab_via not in ("literal", "broadcast"):
-        raise ValueError(f"vocab_via must be literal|broadcast, got {vocab_via!r}")
+    The vocabulary reaches executors as ONE ``from_json`` string
+    literal that Catalyst constant-folds into a single array Literal
+    (the ``similarity._matrix_lit`` trick). Measured at sf1 with the
+    18,330-unit composite vocabulary (~146 KB; 3-run medians, one
+    process, SCALE.md "Vocab apply at production vocab size"): 2.2 s,
+    against 2.9 s for a broadcast 1-row vocabulary frame cross-joined
+    in and 11.8 s (first sample 44.6 s) for the element-wise
+    ``F.lit(list)`` spelling — an 18k-child array expression bloats
+    analysis and per-task serialization, the single-string literal
+    does not."""
     full = sorted(set(vocab) | set(ALPHABET))
-    fold = _longest_match_fold(max_len)
-    if vocab_via == "broadcast":
-        vdf = words.sparkSession.createDataFrame(
-            [(full,)], "vg array<string>"
-        )
-        seeded = words.crossJoin(F.broadcast(vdf))
-    else:
-        seeded = words.withColumn(
+    return (
+        words.withColumn(
             "vg", F.from_json(F.lit(json.dumps(full)), "array<string>")
         )
-    return (
-        seeded
-        .withColumn("fold", F.expr(fold))
+        .withColumn("fold", F.expr(_longest_match_fold(max_len)))
         .select(
             "w",
             "n",

@@ -123,7 +123,10 @@ def rebuild_gold(spark: SparkSession, endpoint: str, warehouse: str) -> dict[str
     """Rebuild the serving (gold) tables from core — the Spark
     equivalent of the reference's post-ETL materialized-view refresh
     (reference ``architecture.md:85-87``): recompute and atomically
-    replace. Small outputs are coalesced to avoid small-file sprawl.
+    replace. Both views are staged beside the stored ones before
+    either is published with the checked swap the incremental refresh
+    uses, so a failed write leaves the previous generation of both
+    readable. Small outputs are coalesced to avoid small-file sprawl.
 
     Tables (≅ reference ``ipeds_vw`` views, ``architecture.md:50-56``):
     * ``institutions_latest`` — latest core row per institution (W1).
@@ -149,10 +152,17 @@ def rebuild_gold(spark: SparkSession, endpoint: str, warehouse: str) -> dict[str
     # yearly rollup; sliced by state when the endpoint carries geography
     count_dims = ["year"] + (["state_abbr"] if "state_abbr" in core.columns else [])
     counts = core.groupBy(*count_dims).agg(F.count("*").alias("n_rows"))
+    views = {
+        name: (f"{warehouse}/vw/{endpoint}_{name}", df)
+        for name, df in (("institutions_latest", latest), ("yearly_counts", counts))
+    }
+    for path, _ in views.values():
+        _recover_view(spark, path)
+    for path, df in views.values():
+        _sized_coalesce(df).write.mode("overwrite").parquet(f"{path}__refresh_tmp")
     out = {}
-    for name, df in (("institutions_latest", latest), ("yearly_counts", counts)):
-        path = f"{warehouse}/vw/{endpoint}_{name}"
-        _sized_coalesce(df).write.mode("overwrite").parquet(path)
+    for name, (path, _) in views.items():
+        _publish_view(spark, path)
         out[name] = spark.read.parquet(path).count()
     return out
 

@@ -32,14 +32,13 @@ def latest_per_key_window(
 
 
 def enrich_join(
-    fact: DataFrame, dim: DataFrame, on: Sequence[str], how: str = "left", broadcast_dim: bool = True
+    fact: DataFrame, dim: DataFrame, on: Sequence[str], how: str = "left"
 ) -> DataFrame:
-    """Fact-to-dimension enrichment join. Broadcast by default: the
-    reference's dims (directory per year, code labels) are orders of
-    magnitude smaller than facts; a broadcast join avoids shuffling the
-    100 TB side entirely."""
-    d = F.broadcast(dim) if broadcast_dim else dim
-    return fact.join(d, list(on), how)
+    """Fact-to-dimension enrichment join with the dimension broadcast:
+    the reference's dims (directory per year, code labels) are orders
+    of magnitude smaller than facts; a broadcast join avoids shuffling
+    the 100 TB side entirely."""
+    return fact.join(F.broadcast(dim), list(on), how)
 
 
 def dim_lookup(
@@ -68,7 +67,6 @@ def incremental_join_view(
     on: Sequence[str],
     retract_pk: DataFrame | None = None,
     how: str = "left",
-    broadcast_dim: bool = True,
 ) -> DataFrame:
     """Incremental maintenance of a stored JOIN view (ΔV = ΔA ⋈ B) —
     the join-view complement to ``pipeline.refresh_gold_incremental``'s
@@ -94,7 +92,6 @@ def incremental_join_view(
     if retract_pk is not None:
         touched = touched.unionByName(retract_pk.select(*fact_pk))
     kept = stored.join(touched.distinct(), list(fact_pk), "left_anti")
-    d = F.broadcast(dim) if broadcast_dim else dim
-    added = delta_fact.join(d, list(on), how)
+    added = delta_fact.join(F.broadcast(dim), list(on), how)
     # joins float their keys to the front; pin the stored view's layout
     return kept.unionByName(added, allowMissingColumns=False).select(stored.columns)

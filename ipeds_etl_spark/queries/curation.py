@@ -1391,29 +1391,8 @@ def _funnel_oracle() -> str:
     """
 
 
-#: Components algorithm inside the funnel's near-dup stage — the sf10
-#: race knob (VERDICT r9 item 2: the fixpoint is a measured 94% of the
-#: funnel's sf10 cost). Both algorithms return the identical min-id
-#: labeling (equivalence pinned in test_components_sampling). RACE
-#: RESULT (r10, three solo sessions, 7 ABAB samples per arm on the
-#: 127.6M-pair sf10 graph — SCALE.md "Components race" + its
-#: REPLICATION entry): pooled medians label 151.7 s vs star 161.9 s,
-#: within-arm same-code spread 3–5.6×, BOTH converge in 2 rounds in
-#: all 14 runs (dedup clusters have diameter ≈ 2, so star's O(log² n)
-#: advantage never engages). The arms are equivalent on this topology
-#: and single-session deltas are box state; label stays the default
-#: (2 shuffles/round vs star's 4), star remains the documented escape
-#: hatch for diameter-heavy graphs.
-FUNNEL_COMPONENTS_ALGORITHM = "label"
-
-
 @_register("docs_curation_funnel", _funnel_oracle())
-def q_docs_curation_funnel(
-    spark: SparkSession,
-    sf_dir: str,
-    profile: dict | None = None,
-    components_algorithm: str | None = None,
-) -> DataFrame:
+def q_docs_curation_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The whole curation pipeline as ONE auditable funnel: quality
     gate (≥10 tokens, top token < 1/5 — the repetition rule) → exact
     dedup (min-id per identical text) → near-dup resolution (LSH
@@ -1438,34 +1417,16 @@ def q_docs_curation_funnel(
     the banded-LSH vector re-attach in similarity and the LPA label
     join.
 
-    ``profile`` (optional dict, VERDICT r8 item 1): when provided,
-    each stage is EAGERLY materialized (localCheckpoint) and its
-    incremental wall seconds recorded under stage-named keys — the
-    sf10 smoke's per-stage share readout. Adds materialization
-    boundaries the production plan doesn't have (stages that Catalyst
-    would pipeline are forced apart), so profile mode is a
-    measurement tool, not the benched path; ``profile=None`` leaves
-    the plan untouched."""
-    import time as _time
-
+    The near-dup stage runs the min-label fixpoint: an sf10 race
+    against the star contraction (SCALE.md "Components race") found
+    the two equivalent on this topology (151.7 s against 161.9 s; both
+    converge in 2 rounds, since dedup clusters have diameter ≈ 2), and
+    label needs 2 shuffles per round to star's 4."""
     from ipeds_etl_spark.functions.hashing import parity_hash
     from ipeds_etl_spark.operators.components import dedup_clusters
 
-    def mark(df: DataFrame, stage: str) -> DataFrame:
-        if profile is None:
-            return df
-        t0 = _time.perf_counter()
-        out = df.localCheckpoint(eager=True)
-        profile[stage] = round(_time.perf_counter() - t0, 2)
-        return out
-
     d = docs_scan(spark, sf_dir)
-    t0 = _time.perf_counter()
     lsh = lsh_doc_pairs(spark, sf_dir)
-    if profile is not None:
-        # memo build cost if cold, ~0 if another consumer already built
-        # it (billed like bench bills lsh_doc_pairs)
-        profile["lsh_memo"] = round(_time.perf_counter() - t0, 2)
 
     tok = d.select("doc_id", F.explode(TX.tokens(F.col("text"))).alias("t"))
     dstat = (
@@ -1477,7 +1438,7 @@ def q_docs_curation_funnel(
             F.max("n").cast("long").alias("maxtok"),
         )
     )
-    s1 = mark(
+    s1 = (
         dstat.filter(
             (F.col("ntok") >= 10) & (5 * F.col("maxtok") < F.col("ntok"))
         )
@@ -1485,34 +1446,28 @@ def q_docs_curation_funnel(
         # two consumers (the s2 join and the c1 count) each re-ran the
         # token explode + double agg; the frame is ids-only, so the
         # barrier is cheap where the recompute is not (opt r13)
-        .localCheckpoint(eager=False),
-        "1_token_quality",
+        .localCheckpoint(eager=False)
     )
-    s2 = mark(
+    s2 = (
         d.join(s1, "doc_id")
         .groupBy("text")
         .agg(F.min("doc_id").alias("doc_id"))
         .select("doc_id")
-        .localCheckpoint(eager=False),
-        "2_exact_dedup",
+        .localCheckpoint(eager=False)
     )
     surv_pairs = (
         lsh.join(s2.withColumnRenamed("doc_id", "id_a").hint("shuffle_hash"), "id_a")
         .join(s2.withColumnRenamed("doc_id", "id_b").hint("shuffle_hash"), "id_b")
         .select("id_a", "id_b")
     )
-    comp = dedup_clusters(
-        surv_pairs,
-        algorithm=components_algorithm or FUNNEL_COMPONENTS_ALGORITHM,
-    ).select(
+    comp = dedup_clusters(surv_pairs).select(
         F.col("id").alias("doc_id"), F.col("component_id").alias("lbl")
     )
-    s3 = mark(
+    s3 = (
         s2.join(comp.hint("shuffle_hash"), "doc_id", "left")
         .filter(F.col("lbl").isNull() | (F.col("lbl") == F.col("doc_id")))
         .select("doc_id")
-        .localCheckpoint(eager=False),
-        "3_components",
+        .localCheckpoint(eager=False)
     )
     # the (doc_id, h) distinct only dedupes within a document, so it is
     # an array_distinct over the per-doc hashed-shingle array — no
@@ -1537,10 +1492,7 @@ def q_docs_curation_funnel(
             F.count("ev_h").cast("long").alias("hit"),
         )
     )
-    s4 = mark(
-        ov.filter(5 * F.col("hit") < 4 * F.col("n")).select("doc_id"),
-        "4_decontaminate",
-    )
+    s4 = ov.filter(5 * F.col("hit") < 4 * F.col("n")).select("doc_id")
 
     def cnt(df: DataFrame, name: str) -> DataFrame:
         return df.agg(F.count(F.lit(1)).cast("long").alias(name))

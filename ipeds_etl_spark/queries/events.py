@@ -10,7 +10,6 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ipeds_etl_spark.functions.hashing import parity_hash, parity_hash_sql
-from ipeds_etl_spark.memostore import corpus_fingerprint
 from ipeds_etl_spark.operators import qsketch as QS
 from ipeds_etl_spark.operators import sampling as SAMP
 from ipeds_etl_spark.operators import sketches as SK
@@ -232,21 +231,12 @@ def q_events_window_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def sessionize_user_stats(
-    e: DataFrame, hot_key_share: float = 0.2, probe_cache_key: tuple | None = None
-) -> DataFrame:
+def sessionize_user_stats(e: DataFrame) -> DataFrame:
     """Sessionize ``events`` (30-minute inactivity gap; lag + running
-    sum) and aggregate per-user session stats, with the final groupBy
-    planned by ``agg_with_skew_guard``: a sampled probe of the raw
-    ``user_id`` column (NOT the windowed pipeline — probing that would
-    run the whole upstream twice) decides between the plain one-shuffle
-    agg and the two-phase salted form. Results are identical either
-    way; under a planted hot user the plan switches to the salted shape
-    (pinned in ``tests/test_skew.py``). ``probe_cache_key`` — the
-    events table's ``corpus_fingerprint`` — keeps the probe verdict in
-    the memo store per data version."""
-    from ipeds_etl_spark.operators.skew import agg_with_skew_guard
-
+    sum) and aggregate per-user session stats. The final groupBy is a
+    plain one: its input is already hash-partitioned on ``user_id`` by
+    the window, so it adds no shuffle, and salting the key could not
+    spread a hot user's rows (they sit in one window partition)."""
     w_order = Window.partitionBy("user_id").orderBy("ts", "event_id")
     with_prev = e.select("user_id", "ts", "event_id").withColumn(
         "prev", F.lag("ts").over(w_order)
@@ -264,19 +254,11 @@ def sessionize_user_stats(
     per_session = sess.groupBy("user_id", "session_id").agg(
         F.count("*").alias("n")
     )
-    out = agg_with_skew_guard(
-        per_session,
-        ["user_id"],
-        {
-            "n_sessions": ("count", "session_id"),
-            "n_events": ("sum", "n"),
-            "max_session_events": ("max", "n"),
-        },
-        hot_key_share=hot_key_share,
-        detect_on=e.select("user_id"),
-        cache_key=probe_cache_key,
+    return per_session.groupBy("user_id").agg(
+        F.count("session_id").alias("n_sessions"),
+        F.sum("n").alias("n_events"),
+        F.max("n").alias("max_session_events"),
     )
-    return out.select("user_id", "n_sessions", "n_events", "max_session_events")
 
 
 @_register(
@@ -310,14 +292,8 @@ def sessionize_user_stats(
 def q_events_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sessionization with a 30-minute inactivity gap (lag + running
     sum — the deterministic batch formulation; the streaming module
-    uses ``session_window`` for the incremental case). The per-user
-    stats agg is skew-guarded — see ``sessionize_user_stats``. The
-    probe verdict is kept per events file version, so a rewritten file
-    is probed again."""
-    return sessionize_user_stats(
-        load_table(spark, sf_dir, "events"),
-        probe_cache_key=corpus_fingerprint(sf_dir, "events"),
-    )
+    uses ``session_window`` for the incremental case)."""
+    return sessionize_user_stats(load_table(spark, sf_dir, "events"))
 
 
 @_register(

@@ -1978,10 +1978,9 @@ def q_docs_vocab8k_apply_fertility(
     expression bloats analysis + per-task serialization); rewriting
     the literal as ONE constant-folded ``from_json`` string (the
     ``_matrix_lit`` trick) wins at 2.2 s, with the broadcast 1-row
-    DataFrame close behind at 2.9 s. The json-literal is now what
-    ``vocab_via="literal"`` means and stays the default (no extra
-    join in the plan); ``"broadcast"`` is the escape hatch for
-    ≫1M-unit vocabularies."""
+    DataFrame close behind at 2.9 s. The json-literal is the one
+    spelling ``segment_longest_match`` keeps (no extra join in the
+    plan)."""
     d = load_table(spark, sf_dir, "documents")
     vocab = _vocab_8k(spark, sf_dir)
     words = BPE.word_frequencies(d, "text")

@@ -4469,8 +4469,8 @@ def q_orders_key_skew_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     counts — numerator and denominator exact BIGINTs, ONE IEEE
     division), top-10-key share and max-single-key share in exact
     permille. Gini ≈ 0 ⇒ hash partitioning balances; high Gini + high
-    max share ⇒ salt or AQE-skew-join the hot keys (`operators/
-    skew.py` consumes exactly this signal shape).
+    max share ⇒ a hot-key join that AQE's skew-join split (on in
+    ``session.py``) is there to break up.
 
     Scale: frequency table is one map-combinable agg to O(keys) rows;
     the ascending rank comes from `global_row_number` (range exchange

@@ -1951,7 +1951,6 @@ def semdedup_report(
     k: int = _SD_K,
     rounds: int = _SD_ROUNDS,
     cluster_cap: int = _SD_CLUSTER_CAP,
-    profile: dict | None = None,
 ) -> DataFrame:
     """Parameterized SemDeDup core (see ``q_emb_semdedup`` for
     semantics). Two scale guards beyond the registered gate instance:
@@ -1977,20 +1976,9 @@ def semdedup_report(
     bucket payload); the integer cosine test runs FUSED inside the
     expansion (opt r13), so only qualifying pairs materialize and no
     re-attach join exists on this path. BIGINT envelope:
-    |coord| ≤ ~10³, dim 64 ⇒ den·dot² ≤ ~4·10¹⁷ < 2⁶³.
-
-    ``profile`` (optional dict, VERDICT r10 item 2 — the funnel's
-    stage-instrumentation pattern): records incremental wall seconds
-    under ``quantize`` / ``kmeans_rounds`` / ``assignment`` /
-    ``pair_expand``; the remainder of an end-to-end run is the
-    verdict+report share. Profile mode adds one materialization
-    boundary (the candidate frame) the production plan doesn't have —
-    a measurement tool, not the benched path."""
-    import time as _time
-
+    |coord| ≤ ~10³, dim 64 ⇒ den·dot² ≤ ~4·10¹⁷ < 2⁶³."""
     from ipeds_etl_spark.operators.coreset import quantize_vec
 
-    t0 = _time.perf_counter()
     pts = (
         load_table(spark, sf_dir, "embeddings")
         .select(
@@ -1999,9 +1987,6 @@ def semdedup_report(
         )
         .localCheckpoint()
     )
-    if profile is not None:
-        profile["quantize"] = round(_time.perf_counter() - t0, 2)
-    t0 = _time.perf_counter()
     seed_rows = pts.orderBy("vec_id").limit(k).collect()
     centroids = [(cid, list(r["v"])) for cid, r in enumerate(seed_rows)]
 
@@ -2062,17 +2047,12 @@ def semdedup_report(
                 for cid, comps in sorted(by_cid.items())
             ]
 
-    if profile is not None:
-        profile["kmeans_rounds"] = round(_time.perf_counter() - t0, 2)
-    t0 = _time.perf_counter()
     # materialize the final assignment ONCE: the pair stage consumes it
     # from four branches (two join sides, sizes, norms) and each would
     # otherwise re-evaluate the k×dim argmin expression per branch
     # (sweep_r14 caught this at sf1: 479 s before, dominated by the
     # recomputed assignment + an 8-key join doing ALL the work)
     assigned = assigned.localCheckpoint()
-    if profile is not None:
-        profile["assignment"] = round(_time.perf_counter() - t0, 2)
     # Arrow-batched pair expand+verify (opt r14, guide §4.2; supersedes
     # the r13 fused JVM HOF): same rank-capped member selection (the
     # payload struct (id, v, |v|²) sorts by the unique vec_id first),
@@ -2084,7 +2064,6 @@ def semdedup_report(
     # oracle, which replays the whole trajectory). Only qualifying
     # pairs ever materialize as rows; overflow members beyond the cap
     # stay kept-unexamined exactly as before (n_overflow audits it).
-    t0 = _time.perf_counter()
     from ipeds_etl_spark.operators.arrowverify import (
         pair_int_crossmul_hits_within_buckets,
     )
@@ -2098,11 +2077,6 @@ def semdedup_report(
         den=_SD_T2_DEN,
         max_bucket_size=cluster_cap,
     )
-    if profile is not None:
-        # profile-only materialization boundary (see docstring): with
-        # the fused spelling this stage IS expand+verify combined
-        dup = dup.localCheckpoint()
-        profile["pair_expand"] = round(_time.perf_counter() - t0, 2)
     # dup feeds TWO downstream branches (dp2 pair counts + drops →
     # dr); without a barrier each branch re-executes the whole pair
     # expansion + dot-product verify subtree — the r13 sf1 plan showed

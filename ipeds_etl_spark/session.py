@@ -10,7 +10,10 @@ same semantics:
   ``try_cast`` so behavior survives an externally-supplied ANSI session.
 * AQE on (runtime coalescing, skew-join splitting) — at 100 TB the
   static shuffle-partition count is always wrong in one direction;
-  AQE re-plans from runtime statistics.
+  AQE re-plans from runtime statistics. This is the engine's whole
+  answer to key skew: AQE splits a hot sort-merge-join partition, and
+  map-side partial aggregation folds a hot groupBy key before the
+  shuffle. No query plans a salted alternative.
 * UTC session timezone — deterministic timestamp semantics across the
   oracle boundary.
 * Arrow enabled — fast toPandas()/pandas_udf paths.

@@ -70,7 +70,6 @@ def test_numbering_window_is_bucketed_not_per_year(spark):
 
 def test_asof_and_salted_join_validation(spark):
     from ipeds_etl_spark.operators.asof import asof_join
-    from ipeds_etl_spark.operators.skew import salted_join
 
     left = spark.createDataFrame([(1, 10, "x")], "k int, ts int, v string")
     right = spark.createDataFrame([(1, 5, "y")], "k int, ts int, v string")
@@ -78,5 +77,3 @@ def test_asof_and_salted_join_validation(spark):
         asof_join(left, right, keys=["k"], time_col="ts")  # v collides
     with pytest.raises(ValueError, match="how"):
         asof_join(left.drop("v"), right, keys=["k"], time_col="ts", how="full")
-    with pytest.raises(ValueError, match="salted_join"):
-        salted_join(left, right.select("k", "v"), on=["k"], how="right")

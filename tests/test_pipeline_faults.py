@@ -216,3 +216,42 @@ def test_txn_gold_refresh_rerun_after_a_later_commit_folds_each_change_once(spar
     assert (2020, "TX", 2) in got["yearly_counts"]
     pipeline.rebuild_gold(spark, ENDPOINT, wh)
     assert got == _views(spark, wh)
+
+
+def test_gold_rebuild_write_fault_keeps_views_and_reruns(spark, tmp_path, monkeypatch):
+    """``rebuild_gold`` stages both views before it publishes either:
+    when the ``yearly_counts`` write job fails, both views still read as
+    their previous generation, and the re-run equals an uninterrupted
+    rebuild."""
+    from pyspark.sql import functions as F
+
+    new_core = [(1, 2019, "A1", "CA"), (1, 2020, "A2", "CA"), (2, 2020, "B2", "CA"), (3, 2020, "C", "TX")]
+
+    def rebuilt_views(wh: str) -> dict:
+        spark.createDataFrame(new_core, GOLD_SCHEMA).write.mode("overwrite").parquet(f"{wh}/core/{ENDPOINT}")
+        pipeline.rebuild_gold(spark, ENDPOINT, wh)
+        return _views(spark, wh)
+
+    clean = str(tmp_path / "clean")
+    _gold_warehouse(spark, clean)
+    old = _views(spark, clean)
+    new = rebuilt_views(clean)
+    assert all(new[v] != old[v] for v in VIEWS)
+
+    wh = str(tmp_path / "wh")
+    _gold_warehouse(spark, wh)
+    sized = pipeline._sized_coalesce
+
+    def failing_counts(df):
+        if "n_rows" in df.columns:  # the yearly_counts frame
+            fault = F.raise_error(F.lit("injected write fault"))
+            df = df.withColumn("n_rows", F.when(F.col("n_rows") > 0, fault).otherwise(F.col("n_rows")))
+        return sized(df)
+
+    with monkeypatch.context() as m:
+        m.setattr(pipeline, "_sized_coalesce", failing_counts)
+        with pytest.raises(Exception, match="injected write fault"):
+            rebuilt_views(wh)
+    assert _views(spark, wh) == old
+
+    assert rebuilt_views(wh) == new  # the re-run

@@ -1,7 +1,7 @@
 """Round-10 invariants: the PPJoin hot-bucket bound (VERDICT r9 item
 1), block-equality NULL semantics (ADVICE r9), the decimal gini
-envelope (ADVICE r9 medium), the BFS 3-hop twin (VERDICT r9 item 3),
-and the funnel's components-algorithm knob (VERDICT r9 item 2)."""
+envelope (ADVICE r9 medium) and the BFS 3-hop twin (VERDICT r9 item
+3)."""
 
 from __future__ import annotations
 
@@ -180,31 +180,6 @@ def test_bfs_twin_matches_recursive_cte(spark):
         map(tuple, q_parts_copurchase_3hop_bfs(spark, SF_SMALL).collect())
     )
     assert bfs == cte and len(bfs) > 0
-
-
-# ---------------------------------------------------------------------------
-# Funnel: star and label components produce the identical funnel
-# ---------------------------------------------------------------------------
-def test_funnel_components_algorithms_agree(spark):
-    from ipeds_etl_spark.queries.curation import q_docs_curation_funnel
-
-    label = sorted(
-        map(
-            tuple,
-            q_docs_curation_funnel(
-                spark, SF_SMALL, components_algorithm="label"
-            ).collect(),
-        )
-    )
-    star = sorted(
-        map(
-            tuple,
-            q_docs_curation_funnel(
-                spark, SF_SMALL, components_algorithm="star"
-            ).collect(),
-        )
-    )
-    assert star == label and len(label) == 4
 
 
 def test_bfs_bitmap_matches_bruteforce_across_word_boundaries(spark):

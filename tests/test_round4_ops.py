@@ -284,19 +284,6 @@ def test_pii_scrub_masks_and_counts(spark):
     assert out[3]["email"] == out[3]["phone"] == out[3]["ipv4"] == 0
 
 
-def test_bloom_portable_family_no_false_negatives(spark):
-    from pyspark.sql import functions as F
-
-    from ipeds_etl_spark.operators.bloom import bloom_probe, build_bloom
-
-    keys = spark.createDataFrame([(i * 3,) for i in range(150)], ["k"])
-    words, n_bits, n_hashes = build_bloom(keys, "k", portable=True)
-    hits = keys.filter(
-        bloom_probe(F.col("k"), words, n_bits, n_hashes, portable=True)
-    )
-    assert hits.count() == 150
-
-
 def test_bloom_cross_type_keys_match(spark):
     """int build side + bigint probe side must not produce false
     negatives (hashing canonicalizes the key to string)."""
