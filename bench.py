@@ -568,9 +568,10 @@ PAIRED_CRITERION = (
     "the last full run plus its sf1 list; the ref arm imports engine code "
     "from a detached worktree pinned to the rev's resolved SHA (ref_sha). "
     "Each track first runs BENCH_PAIRED_AA_ROUNDS counterbalanced "
-    "same-code A/A rounds, and the range of their per-query ratios is "
-    "recorded as aa_band: an A/B ratio is a claimable delta only outside "
-    "it. A failed index build in an arm is recorded in errors as "
+    "same-code A/A rounds, and the range of their single-round ratios "
+    "over every query, each taken both ways (a/b and b/a), is recorded "
+    "as aa_band: an A/B ratio is a claimable delta only outside it. A "
+    "failed index build in an arm is recorded in errors as "
     "<arm>:round<N>:index_build."
 )
 
@@ -587,16 +588,37 @@ def paired_ratios(
     testable without spawning JVMs."""
     ratios: dict[str, float] = {}
     for n, cur in samples_cur.items():
-        ref = samples_ref.get(n, [])
-        per_round = [
-            round(c / r, 3)
-            for c, r in zip(cur, ref)
-            if c is not None and r is not None and r > 0
-        ]
+        per_round = _round_ratios(cur, samples_ref.get(n, []))
         if per_round:
             ratios[n] = round(statistics.median(per_round), 3)
     med = round(statistics.median(ratios.values()), 3) if ratios else None
     return ratios, med
+
+
+def _round_ratios(cur: list[float | None], ref: list[float | None]) -> list[float]:
+    """The within-round ratios cur/ref of one query, pairwise-dropping
+    rounds where either arm is missing."""
+    return [
+        round(c / r, 3) for c, r in zip(cur, ref) if c is not None and r is not None and r > 0
+    ]
+
+
+def aa_band(
+    samples_a: dict[str, list[float | None]],
+    samples_b: dict[str, list[float | None]],
+) -> list[float] | None:
+    """[min, max] of the single-round A/A ratios over every query and
+    round, each taken both ways (a/b and b/a: both arms run the same
+    code, so their labels carry nothing). A per-query median of two
+    rounds spreads less than one round does, so a band made of medians
+    is narrower than the noise of the rounds the A/B medians are made
+    of."""
+    singles = [
+        x
+        for n, a in samples_a.items()
+        for x in _round_ratios(a, samples_b.get(n, [])) + _round_ratios(samples_b.get(n, []), a)
+    ]
+    return [min(singles), max(singles)] if singles else None
 
 
 def _paired_worktree(here: Path, rev: str) -> tuple[Path, str]:
@@ -674,8 +696,8 @@ def _paired_main(rev: str) -> None:
 
     ref_dir, ref_sha = _paired_worktree(here, rev)
     # The A/A rounds come in counterbalanced pairs (round 0 a-then-b,
-    # round 1 b-then-a), or the null band inherits the ~7% warm-cache
-    # arm-order bias that the A/B's ABBA cancels.
+    # round 1 b-then-a), like the A/B's ABBA, so the single rounds of
+    # both carry the same ~7% warm-cache arm-order bias.
     aa_rounds = int(os.environ.get("BENCH_PAIRED_AA_ROUNDS", "2"))
     record: dict = {
         "metric": "paired_bench",
@@ -723,11 +745,7 @@ def _paired_main(rev: str) -> None:
             }
             collect(per_round, aa_samples)
         aa_ratios, aa_med = paired_ratios(aa_samples["a"], aa_samples["b"])
-        aa_band = (
-            [min(aa_ratios.values()), max(aa_ratios.values())]
-            if aa_ratios
-            else None
-        )
+        band = aa_band(aa_samples["a"], aa_samples["b"])
 
         samples: dict[str, dict[str, list[float | None]]] = {
             "ref": {}, "cur": {}
@@ -753,14 +771,14 @@ def _paired_main(rev: str) -> None:
             "aa_samples_b": aa_samples["b"],
             "aa_ratios": aa_ratios,
             "aa_median_ratio": aa_med,
-            "aa_band": aa_band,
+            "aa_band": band,
             "errors": errors,
         }
         compact_tracks[label] = {
             "median_ratio": med,
             "n": len(ratios),
             "aa_median": aa_med,
-            "aa_band": aa_band,
+            "aa_band": band,
         }
 
     with open(here / "BENCH_PAIRED.json", "a") as f:

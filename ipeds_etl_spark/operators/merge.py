@@ -30,7 +30,8 @@ Scale notes (100 TB):
   years' files (``plans.core_pipeline.write_core`` merges this way).
   This is the reference's year-at-a-time idempotent load unit
   (reference ``architecture.md:81-83``) mapped to Spark storage
-  semantics.
+  semantics. Its commit, ``publish_stage``, is the warehouse's one
+  marker swap: raw and core partitions, and both gold views at once.
 """
 
 from __future__ import annotations
@@ -120,7 +121,8 @@ def upsert_on_hash(
 
 
 def _publish_partition(spark: SparkSession, table_path: str, txid: str, part: str) -> None:
-    """Phase-2 publish of ONE partition: old aside → new in → drop old.
+    """Phase-2 publish of ONE staged child (a partition or a gold view):
+    old aside → new in → drop old.
 
     The old copy is deleted only after the new generation is verifiably
     at ``dst`` — a failed Hadoop ``rename`` returns False rather than
@@ -152,9 +154,13 @@ def _publish_partition(spark: SparkSession, table_path: str, txid: str, part: st
         if not fsutil.rename(spark, src, dst):
             # tolerated only if some other recoverer completed the publish
             if fsutil.path_exists(spark, src) or not fsutil.path_exists(spark, dst):
+                # the old copy goes back, so readers never miss ``part``;
+                # the marker stays, and the next recovery re-publishes
+                if not fsutil.path_exists(spark, dst):
+                    fsutil.rename(spark, old, dst)
                 raise OSError(
                     f"swap {txid}: publish rename failed for {dst} "
-                    f"(staged copy left at {src}; old generation left at {old})"
+                    f"(staged copy left at {src})"
                 )
     elif not fsutil.path_exists(spark, dst):
         raise OSError(
@@ -168,11 +174,11 @@ def _publish_partition(spark: SparkSession, table_path: str, txid: str, part: st
 def recover_swaps(
     spark: SparkSession, table_path: str, *, rollback_uncommitted: bool = True
 ) -> None:
-    """Finish or roll back a crashed ``overwrite_partitions_staged``.
+    """Finish or roll back a crashed ``publish_stage``.
 
     State machine (all names hidden from Spark readers): a commit
-    marker ``_commit_<txid>`` is created only after EVERY touched
-    partition is staged in as ``_swap_new_<txid>/<part>``, so
+    marker ``_commit_<txid>`` is created only after EVERY staged
+    child is staged in as ``_swap_new_<txid>/<part>``, so
 
     * marker absent → the crash happened before the commit point: the
       staged ``_swap_new`` dirs (and the ``_stage`` dir) are garbage —
@@ -236,34 +242,39 @@ def overwrite_partitions_staged(
     points at makes any later action on that plan fail with
     FileNotFoundException — Spark re-scans source parquet lazily.
 
-    Crash safety (two-phase, all FS ops via the Hadoop FileSystem API):
-    the new generation is fully staged under hidden names inside the
-    table dir, a ``_commit_<txid>`` marker makes the commit decision
-    durable in one file create, and only then are partitions published
-    (rename old aside → rename new in → drop old; the destination is
-    never deleted before its replacement is adjacent). A crash at ANY
-    point is repaired by ``recover_swaps`` — run automatically at the
-    start of every write and by ``scan``/merge readers — to either the
-    complete old or the complete new generation, never a mix. For
+    The staged partitions are committed by ``publish_stage``. For
     multi-writer or reader-isolation requirements use
     ``txn.upsert_into_txn_table`` / ``txn.commit_overwrite_partitions``
-    (manifest pointer — readers never observe the swap window at all). Untouched partitions of a 100 TB table are
-    never read, written, or renamed.
+    (manifest pointer — readers never observe the swap window at all).
+    Untouched partitions of a 100 TB table are never read, written, or
+    renamed.
     """
     import uuid
 
     recover_swaps(spark, table_path)
     txid = uuid.uuid4().hex[:8]
-    staging = f"{table_path}/_stage_{txid}"
     (
         df.repartition(partition_col)
         .write.mode("overwrite")
         .partitionBy(partition_col)
-        .parquet(staging)
+        .parquet(f"{table_path}/_stage_{txid}")
     )
-    parts = [
-        e for e in fsutil.list_names(spark, staging) if e.startswith(f"{partition_col}=")
-    ]
+    publish_stage(spark, table_path, txid)
+
+
+def publish_stage(spark: SparkSession, table_path: str, txid: str) -> None:
+    """Commit every non-hidden child of ``<table_path>/_stage_<txid>``
+    (in sorted order) over the child of ``table_path`` of the same name
+    (all FS ops via the Hadoop FileSystem API): phase 1 stages them all
+    under hidden names, one ``_commit_<txid>`` file create makes the
+    commit durable, and phase 2 publishes each (old aside → new in →
+    drop old). After a crash at ANY point, ``recover_swaps`` — run at
+    the start of every write and by readers — leaves the complete old
+    or the complete new generation, never a mix."""
+    staging = f"{table_path}/_stage_{txid}"
+    parts = sorted(
+        e for e in fsutil.list_names(spark, staging) if not e.startswith(("_", "."))
+    )
     # phase 1: stage every partition under the hidden swap parent
     # (``=``-free name → Spark skips the whole subtree, so concurrent
     # readers never see it). A failed rename here (e.g. another

@@ -1,10 +1,11 @@
-"""End-to-end pipeline runner: ingest → raw → core → lineage.
+"""End-to-end pipeline runner: ingest → raw → core → lineage → gold.
 
 The reference's notebook entry points (E1 raw load, E2 core load)
 composed into one callable. Each run is idempotent: re-running the same
 input leaves raw and core tables byte-identical (hash-guarded raw
 upsert + PK-keyed core merge), and appends one ``load_log`` row with
-relationally-computed insert/update counters.
+relationally-computed insert/update counters. Raw, core and both gold
+views (in one commit) are replaced through ``merge.publish_stage``.
 """
 
 from __future__ import annotations
@@ -18,9 +19,13 @@ from pyspark.sql import functions as F
 
 from ipeds_etl_spark import fsutil, lineage, registry
 from ipeds_etl_spark.localframe import local_frame
-from ipeds_etl_spark.operators.merge import recover_swaps
+from ipeds_etl_spark.operators.merge import publish_stage, recover_swaps
 from ipeds_etl_spark.plans.core_pipeline import map_from_raw, write_core
 from ipeds_etl_spark.sources import raw as raw_io
+
+
+#: the gold views, in the order ``_publish_views`` takes their frames
+_VIEWS = ("institutions_latest", "yearly_counts")
 
 
 def _core_years(spark: SparkSession, endpoint: str, core_path: str, years: Sequence[int]) -> DataFrame:
@@ -123,23 +128,27 @@ def rebuild_gold(spark: SparkSession, endpoint: str, warehouse: str) -> dict[str
     """Rebuild the serving (gold) tables from core — the Spark
     equivalent of the reference's post-ETL materialized-view refresh
     (reference ``architecture.md:85-87``): recompute and atomically
-    replace. Both views are staged beside the stored ones before
-    either is published with the checked swap the incremental refresh
-    uses, so a failed write leaves the previous generation of both
-    readable. Small outputs are coalesced to avoid small-file sprawl.
+    replace. Core is recovered first (read mode), so a load that
+    crashed inside its core publish is read as its complete old or new
+    generation. Both views are staged and published in one commit
+    (``_publish_views``). Small outputs are coalesced to avoid
+    small-file sprawl.
 
     Tables (≅ reference ``ipeds_vw`` views, ``architecture.md:50-56``):
     * ``institutions_latest`` — latest core row per institution (W1).
     * ``yearly_counts``       — institutions per (year, state) (A2 shape).
     """
     ep = registry.get_endpoint(endpoint)
+    core_path = f"{warehouse}/core/{endpoint}"
+    recover_swaps(spark, core_path, rollback_uncommitted=False)
+    recover_swaps(spark, f"{warehouse}/vw")
     # manifest-resolved read: a txn-backed core resolves to its live
     # generations (a plain parquet read would union every generation
     # and double-count); tables without a manifest fall back to the
     # plain read unchanged
     from ipeds_etl_spark.operators import txn
 
-    core = txn.read_table(spark, f"{warehouse}/core/{endpoint}")
+    core = txn.read_table(spark, core_path)
     from pyspark.sql import Window
 
     # latest row per non-year key part (institutions_latest shape);
@@ -152,19 +161,38 @@ def rebuild_gold(spark: SparkSession, endpoint: str, warehouse: str) -> dict[str
     # yearly rollup; sliced by state when the endpoint carries geography
     count_dims = ["year"] + (["state_abbr"] if "state_abbr" in core.columns else [])
     counts = core.groupBy(*count_dims).agg(F.count("*").alias("n_rows"))
-    views = {
-        name: (f"{warehouse}/vw/{endpoint}_{name}", df)
-        for name, df in (("institutions_latest", latest), ("yearly_counts", counts))
-    }
-    for path, _ in views.values():
-        _recover_view(spark, path)
-    for path, df in views.values():
-        _sized_coalesce(df).write.mode("overwrite").parquet(f"{path}__refresh_tmp")
-    out = {}
-    for name, (path, _) in views.items():
-        _publish_view(spark, path)
-        out[name] = spark.read.parquet(path).count()
-    return out
+    return _publish_views(spark, endpoint, warehouse, latest, counts)
+
+
+def _publish_views(
+    spark: SparkSession,
+    endpoint: str,
+    warehouse: str,
+    latest: DataFrame,
+    counts: DataFrame,
+    batch: str | None = None,
+) -> dict[str, int]:
+    """Stage both gold views (and ``batch`` as the counts' hidden
+    ``_batch`` file) under ``vw/_stage_<txid>/`` and publish them with
+    one ``merge.publish_stage``; return each view's row count. After a
+    crash, ``recover_swaps(vw)`` leaves both views on the old generation
+    or both on the new one. One writer per warehouse: every endpoint's
+    views share the ``vw/`` recovery."""
+    import uuid
+
+    vw = f"{warehouse}/vw"
+    txid = uuid.uuid4().hex[:8]
+    for name, df in zip(_VIEWS, (latest, counts)):
+        _sized_coalesce(df).write.mode("overwrite").parquet(f"{vw}/_stage_{txid}/{endpoint}_{name}")
+    if batch is not None:
+        fsutil.write_text(spark, f"{vw}/_stage_{txid}/{endpoint}_yearly_counts/_batch", batch)
+    publish_stage(spark, vw, txid)
+    return _view_counts(spark, endpoint, warehouse)
+
+
+def _view_counts(spark: SparkSession, endpoint: str, warehouse: str) -> dict[str, int]:
+    """The row count of each published gold view."""
+    return {v: spark.read.parquet(f"{warehouse}/vw/{endpoint}_{v}").count() for v in _VIEWS}
 
 
 def refresh_gold_incremental(
@@ -198,22 +226,19 @@ def refresh_gold_incremental(
       dropped. This is classic counting-IVM: exact under
       insert/update/delete given the retraction feed.
 
-    ``batch`` names the merge batch. The published ``yearly_counts``
-    carries it in a hidden ``_batch`` file, and a refresh whose batch
-    the stored counts already carry skips the counting fold: a refresh
-    that failed after publishing the counts is re-run with the same
-    batch, and the fold is not idempotent. The latest-row fold is, and
-    runs again.
+    ``batch`` names the merge batch; the published ``yearly_counts``
+    carries it. Both views commit together, so a re-run with a batch
+    the views already hold folds nothing (the counting fold is not
+    idempotent) and returns their row counts.
     """
     ep = registry.get_endpoint(endpoint)
     entity_keys = [k for k in ep.pk if k != "year"]
 
-    latest_path = f"{warehouse}/vw/{endpoint}_institutions_latest"
-    counts_path = f"{warehouse}/vw/{endpoint}_yearly_counts"
-    for path in (latest_path, counts_path):
-        _recover_view(spark, path)
-    stored_latest = spark.read.parquet(latest_path)
-    stored_counts = spark.read.parquet(counts_path)
+    recover_swaps(spark, f"{warehouse}/vw")
+    if _stored_batch(spark, endpoint, warehouse) == batch:
+        return _view_counts(spark, endpoint, warehouse)
+    stored_latest = spark.read.parquet(f"{warehouse}/vw/{endpoint}_institutions_latest")
+    stored_counts = spark.read.parquet(f"{warehouse}/vw/{endpoint}_yearly_counts")
 
     from pyspark.sql import Window
 
@@ -254,59 +279,15 @@ def refresh_gold_incremental(
         .filter(F.col("n_rows") > 0)
     )
 
-    folded = _stored_batch(spark, counts_path) == batch
-    out = {}
-    for name, path, df in (
-        ("institutions_latest", latest_path, new_latest),
-        ("yearly_counts", counts_path, merged),
-    ):
-        if not (path == counts_path and folded):
-            # stage → swap: the stored view is an input to its own refresh,
-            # so the new generation lands beside it and replaces it whole
-            tmp = f"{path}__refresh_tmp"
-            _sized_coalesce(df).write.mode("overwrite").parquet(tmp)
-            if path == counts_path:
-                fsutil.write_text(spark, f"{tmp}/_batch", batch)
-            _publish_view(spark, path)
-        out[name] = spark.read.parquet(path).count()
-    return out
+    return _publish_views(spark, endpoint, warehouse, new_latest, merged, batch)
 
 
-def _stored_batch(spark: SparkSession, counts_path: str) -> str | None:
+def _stored_batch(spark: SparkSession, endpoint: str, warehouse: str) -> str | None:
     """The batch the published ``yearly_counts`` last folded, if any."""
-    batch_file = f"{counts_path}/_batch"
+    batch_file = f"{warehouse}/vw/{endpoint}_yearly_counts/_batch"
     if not fsutil.path_exists(spark, batch_file):
         return None
     return fsutil.read_text(spark, batch_file)
-
-
-def _publish_view(spark: SparkSession, path: str) -> None:
-    """Replace a gold view with its staged copy ``<path>__refresh_tmp``:
-    old copy aside, new copy in, old copy dropped, checking each rename
-    (the order of ``merge._publish_partition``). A failed rename puts
-    the old copy back, so ``path`` reads as the old or the new
-    generation."""
-    tmp, old = f"{path}__refresh_tmp", f"{path}__refresh_old"
-    if fsutil.path_exists(spark, path) and not fsutil.rename(spark, path, old):
-        raise OSError(f"cannot move the stored view aside: {path} -> {old}")
-    if not fsutil.rename(spark, tmp, path):
-        fsutil.rename(spark, old, path)
-        raise OSError(f"view publish failed: {tmp} -> {path}")
-    fsutil.delete(spark, old)
-
-
-def _recover_view(spark: SparkSession, path: str) -> None:
-    """Undo what an interrupted refresh left of a publish: put the aside
-    copy back when the view is missing, and drop the staged copy. A
-    failed refresh is re-run with the same batch (the txn-diff refresh
-    hands out its version only on success), and the counting fold is
-    not idempotent, so a staged copy is never rolled forward."""
-    tmp, old = f"{path}__refresh_tmp", f"{path}__refresh_old"
-    if not fsutil.path_exists(spark, path) and fsutil.path_exists(spark, old):
-        if not fsutil.rename(spark, old, path):
-            raise OSError(f"cannot restore the stored view: {old} -> {path}")
-    fsutil.delete(spark, old)
-    fsutil.delete(spark, tmp)
 
 
 def refresh_gold_from_txn_diff(
@@ -315,7 +296,6 @@ def refresh_gold_from_txn_diff(
     warehouse: str,
     v_from: int,
     v_to: int | None = None,
-    partition_col: str = "year",
 ) -> dict[str, int]:
     """End-to-end incremental gold refresh driven by the txn log
     (VERDICT r7 item 7): fold everything that happened to a
@@ -352,13 +332,10 @@ def refresh_gold_from_txn_diff(
     resolved ``v_to`` — so callers can checkpoint it as the next run's
     ``v_from``.
 
-    The batch id is ``"{v_from}:{v_to}"``, and the stored counts carry
-    the last one they folded. A refresh that failed after publishing the
-    counts has therefore moved both views to that batch's end version
-    (``institutions_latest`` is published first), and its re-run folds
-    only from there, also when a later commit moved "latest" meanwhile.
-    A ``v_to`` older than the version the counts already hold is
-    rejected toward ``rebuild_gold``.
+    The batch id is ``"{v_from}:{v_to}"``. A re-run after a crash folds
+    on from the version the views hold, also when a later commit moved
+    "latest" meanwhile; a ``v_to`` older than it is rejected toward
+    ``rebuild_gold``.
     """
     from ipeds_etl_spark.operators import txn
     from ipeds_etl_spark.operators.cdc import snapshot_diff
@@ -371,13 +348,8 @@ def refresh_gold_from_txn_diff(
         # the data actually diffed (manifest B), silently excluding
         # the concurrent commit's partitions from the refresh
         v_to = txn.latest_version(spark, core_path)
-    out_paths = {
-        "institutions_latest": f"{warehouse}/vw/{endpoint}_institutions_latest",
-        "yearly_counts": f"{warehouse}/vw/{endpoint}_yearly_counts",
-    }
-    for path in out_paths.values():
-        _recover_view(spark, path)
-    _, sep, done_to = (_stored_batch(spark, out_paths["yearly_counts"]) or "").partition(":")
+    recover_swaps(spark, f"{warehouse}/vw")
+    _, sep, done_to = (_stored_batch(spark, endpoint, warehouse) or "").partition(":")
     if sep and done_to.isdigit():
         if int(done_to) > v_to:
             raise ValueError(
@@ -399,16 +371,13 @@ def refresh_gold_from_txn_diff(
             "deletes; use rebuild_gold"
         )
     if not changed_entries:
-        out = {
-            name: spark.read.parquet(path).count()
-            for name, path in out_paths.items()
-        }
+        out = _view_counts(spark, endpoint, warehouse)
         out["refreshed_to_version"] = v_to
         return out
     changed_vals = [e.split("=", 1)[1] for e in changed_entries]
     ep = registry.get_endpoint(endpoint)
-    cast_t = registry.struct_type(endpoint)[partition_col].dataType
-    part_filter = F.col(partition_col).isin(
+    cast_t = registry.struct_type(endpoint)["year"].dataType
+    part_filter = F.col("year").isin(
         [F.lit(v).cast(cast_t) for v in changed_vals]
     )
     # read_table enumerates generation dirs explicitly with a basePath,

@@ -59,7 +59,6 @@ class Endpoint:
     path: str  # API path template (ingest documentation)
     fields: tuple[Field, ...]
     pk: tuple[str, ...]
-    partition_by: tuple[str, ...] = ("year",)
 
     def field(self, name: str) -> Field:
         for f in self.fields:
@@ -333,8 +332,8 @@ def drift_report(endpoint: str, incoming_fields: set[str]) -> dict[str, list[str
 # Declarative endpoint config files (reference README.md:46-55 documents
 # an optional ``config/endpoints.yaml``; the reference snapshot itself
 # is code-declared, like this registry). A config file holds a mapping
-#   {endpoint_name: {path, pk, partition_by?, fields: ["name:type" |
-#    "name:type:alias1|alias2", ...]}}
+#   {endpoint_name: {path, pk, partition_by? (["year"] only), fields:
+#    ["name:type" | "name:type:alias1|alias2", ...]}}
 # — the same compact field spec ``_f`` parses for the built-ins — as
 # JSON (always available) or YAML (only if a yaml module is installed;
 # gated behind import-try per the container's no-install policy).
@@ -357,20 +356,20 @@ def _endpoint_from_spec(name: str, spec: dict) -> Endpoint:
     for k in spec["pk"]:
         if k not in known:
             raise ValueError(f"endpoint {name!r}: pk column {k!r} not in fields")
-    partition_by = tuple(spec.get("partition_by", ("year",)))
-    # a typo'd partition_by would otherwise surface only at write time
-    # (ADVICE r6) — validate against the declared fields like pk
-    for k in partition_by:
-        if k not in known:
-            raise ValueError(
-                f"endpoint {name!r}: partition_by column {k!r} not in fields"
-            )
+    # every table partitions by a declared ``year`` field: a config
+    # asking for another layout fails here instead of being ignored
+    partition_by = list(spec.get("partition_by", ["year"]))
+    if partition_by != ["year"] or "year" not in known:
+        k = next((k for k in partition_by if k != "year"), "year")
+        raise ValueError(
+            f"endpoint {name!r}: partition_by column {k!r} unsupported; "
+            "tables partition by a declared 'year' field only"
+        )
     return Endpoint(
         name=name,
         path=spec["path"],
         fields=fields,
         pk=tuple(spec["pk"]),
-        partition_by=partition_by,
     )
 
 
@@ -426,7 +425,6 @@ def dump_endpoints_config() -> dict:
         ep.name: {
             "path": ep.path,
             "pk": list(ep.pk),
-            "partition_by": list(ep.partition_by),
             "fields": [field_spec(f) for f in ep.fields],
         }
         for ep in REGISTRY.values()

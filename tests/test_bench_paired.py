@@ -200,3 +200,21 @@ def test_resolve_rotation_low_cpu_run_reuses_slice(tmp_path):
     # state without cpus: plain successor
     state.write_text(_json.dumps({"slice": 1, "rotate": 3}))
     assert resolve_rotation(state, 3, None) == (2, True)
+
+
+def test_aa_band_spans_single_rounds_not_medians():
+    """Each query's two A/A rounds swing 20-25 % either way with the arm
+    order, so its median ratio stays near 1.0 and a band of medians
+    would call a 1.2 A/B ratio a delta. The A/B rounds carry the same
+    swing, so the band is the range of the single-round ratios."""
+    from bench import aa_band
+
+    a = {"q1": [1.2, 1.0], "q2": [2.0, 1.6], "q3": [None, 3.0]}
+    b = {"q1": [1.0, 1.2], "q2": [1.6, 2.0], "q3": [3.0, 3.0]}
+    medians, _ = paired_ratios(a, b)
+    assert max(medians.values()) < 1.03
+    # single rounds: q1 1.2, 0.833; q2 1.25, 0.8; q3 (round 0 dropped) 1.0
+    assert aa_band(a, b) == [0.8, 1.25]
+    assert aa_band({"q": [None]}, {"q": [1.0]}) is None
+    # the arms' labels are arbitrary: a one-sided spread counts both ways
+    assert aa_band({"q": [1.0, 1.0]}, {"q": [1.1, 1.25]}) == [0.8, 1.25]

@@ -98,11 +98,44 @@ def test_rerun_after_crash_equals_uninterrupted_load(spark, tmp_path, monkeypatc
         assert got_metrics[key] == want_metrics[key], key
 
 
+def test_rebuild_gold_reads_core_recovered_after_a_crash_in_its_publish(spark, tmp_path, monkeypatch, uninterrupted):
+    """A re-load that crashes inside the core publish, after the commit
+    marker, leaves the changed year out of the core directory. A gold
+    rebuild before the re-run reads core as the committed generation,
+    so its views equal the uninterrupted load's, and the re-run then
+    ends where the uninterrupted load does."""
+    from ipeds_etl_spark import fsutil
+
+    _, want = uninterrupted
+    wh = str(tmp_path)
+    core = f"{wh}/core/{ENDPOINT}"
+    _history(spark, wh)
+    rename = fsutil.rename
+
+    def crash_publishing_core(sp, src, dst):
+        if src.startswith(f"{core}/_swap_new_"):  # phase 2: new copy in
+            raise Crash
+        return rename(sp, src, dst)
+
+    with monkeypatch.context() as m:
+        m.setattr(fsutil, "rename", crash_publishing_core)
+        with pytest.raises(Crash):
+            pipeline.run_load(spark, ENDPOINT, 2020, _pages(2020, True), wh)
+    assert any(n.startswith("_commit_") for n in fsutil.list_names(spark, core))
+    assert not fsutil.path_exists(spark, f"{core}/year=2020")
+
+    pipeline.rebuild_gold(spark, ENDPOINT, wh)
+    assert _views(spark, wh) == want["gold"]
+    pipeline.run_load(spark, ENDPOINT, 2020, _pages(2020, True), wh)
+    assert _state(spark, wh) == want
+
+
 # ---------------------------------------------------------------------------
-# The incremental gold refresh publishes each view from a staged copy. A
-# publish that fails or crashes must leave each view readable as its old
-# or its new generation, and re-running the failed refresh with the same
-# batch must give what one uninterrupted refresh gives.
+# The gold refreshes publish both views from staged copies in one commit
+# of ``vw/``. A publish that fails or crashes must leave the views
+# readable as their old or their new generation, and re-running the
+# failed refresh with the same batch must give what one uninterrupted
+# refresh gives.
 # ---------------------------------------------------------------------------
 GOLD_SCHEMA = "unitid int, year int, inst_name string, state_abbr string"
 VIEWS = ("institutions_latest", "yearly_counts")
@@ -119,6 +152,16 @@ def _refresh(spark, wh: str):
     delta = spark.createDataFrame([(3, 2020, "C", "TX"), (2, 2020, "B2", "CA")], GOLD_SCHEMA)
     pre = spark.createDataFrame([(2, 2020, "B", "NY")], GOLD_SCHEMA)
     return pipeline.refresh_gold_incremental(spark, ENDPOINT, wh, delta, pre, batch="1:2")
+
+
+def _staged_view(src: str, wh: str, view: str) -> bool:
+    """``src`` is the staged copy of ``view`` that the publish renames in."""
+    return src.startswith(f"{wh}/vw/_swap_new_") and src.endswith(f"/{ENDPOINT}_{view}")
+
+
+def _aside_view(path: str, wh: str, view: str) -> bool:
+    """``path`` is the old copy of ``view`` that the publish drops last."""
+    return path.startswith(f"{wh}/vw/_swap_old_") and path.endswith(f"/{ENDPOINT}_{view}")
 
 
 def _views(spark, wh: str) -> dict:
@@ -152,7 +195,7 @@ def test_gold_refresh_publish_fault_keeps_views_and_reruns(spark, tmp_path, monk
     rename, delete = fsutil.rename, fsutil.delete
 
     def faulty(sp, src, dst):
-        if src == f"{wh}/vw/{ENDPOINT}_{view}__refresh_tmp":
+        if _staged_view(src, wh, view):
             if fault == "rename_fails":
                 return False
             raise Crash
@@ -160,7 +203,7 @@ def test_gold_refresh_publish_fault_keeps_views_and_reruns(spark, tmp_path, monk
 
     def faulty_delete(sp, path, recursive=True):
         # the publish's last step, after the new copy is in place
-        if path == f"{wh}/vw/{ENDPOINT}_{view}__refresh_old" and fsutil.path_exists(sp, path):
+        if _aside_view(path, wh, view) and fsutil.path_exists(sp, path):
             raise Crash
         return delete(sp, path, recursive)
 
@@ -177,6 +220,58 @@ def test_gold_refresh_publish_fault_keeps_views_and_reruns(spark, tmp_path, monk
 
     _refresh(spark, wh)  # the caller re-runs the failed batch
     assert _views(spark, wh) == new
+
+
+def _swap_entries(spark, wh: str) -> list[str]:
+    from ipeds_etl_spark import fsutil
+
+    return [n for n in fsutil.list_names(spark, f"{wh}/vw") if n.startswith(("_stage_", "_swap_", "_commit_"))]
+
+
+@pytest.mark.parametrize("crash_at", ["before_marker", "after_first_view"])
+def test_gold_views_publish_in_one_commit(spark, tmp_path, monkeypatch, crash_at):
+    """A refresh that crashes before its commit marker leaves both views
+    on the old generation once ``vw/`` is recovered; one that crashes
+    after the first view is published leaves both on the new one. No
+    staging, swap or marker entry is left in ``vw/``."""
+    from ipeds_etl_spark import fsutil
+    from ipeds_etl_spark.operators.merge import recover_swaps
+
+    clean = str(tmp_path / "clean")
+    _gold_warehouse(spark, clean)
+    old = _views(spark, clean)
+    _refresh(spark, clean)
+    new = _views(spark, clean)
+
+    wh = str(tmp_path / "wh")
+    _gold_warehouse(spark, wh)
+    assert not _swap_entries(spark, wh)  # what rebuild_gold leaves
+    rename, write_text = fsutil.rename, fsutil.write_text
+
+    def crash_on_marker(sp, path, text):
+        if path.startswith(f"{wh}/vw/_commit_"):
+            raise Crash
+        return write_text(sp, path, text)
+
+    def crash_on_counts(sp, src, dst):
+        if _staged_view(src, wh, "yearly_counts"):
+            raise Crash
+        return rename(sp, src, dst)
+
+    with monkeypatch.context() as m:
+        if crash_at == "before_marker":
+            m.setattr(fsutil, "write_text", crash_on_marker)
+        else:
+            m.setattr(fsutil, "rename", crash_on_counts)
+        with pytest.raises(Crash):
+            _refresh(spark, wh)
+    if crash_at == "after_first_view":
+        latest = spark.read.parquet(f"{wh}/vw/{ENDPOINT}_institutions_latest")
+        assert sorted(tuple(r) for r in latest.collect()) == new["institutions_latest"]
+
+    recover_swaps(spark, f"{wh}/vw")
+    assert _views(spark, wh) == (old if crash_at == "before_marker" else new)
+    assert not _swap_entries(spark, wh)
 
 
 def test_txn_gold_refresh_rerun_after_a_later_commit_folds_each_change_once(spark, tmp_path, monkeypatch):
@@ -200,7 +295,7 @@ def test_txn_gold_refresh_rerun_after_a_later_commit_folds_each_change_once(spar
     delete = fsutil.delete
 
     def faulty_delete(sp, path, recursive=True):
-        if path == f"{wh}/vw/{ENDPOINT}_yearly_counts__refresh_old" and fsutil.path_exists(sp, path):
+        if _aside_view(path, wh, "yearly_counts") and fsutil.path_exists(sp, path):
             raise Crash
         return delete(sp, path, recursive)
 
