@@ -195,8 +195,30 @@ def append_source_trace(spark: SparkSession, meta_path: str, endpoint: str, page
     source_trace_rows(endpoint, pages).write.mode("append").parquet(f"{meta_path}/source_trace")
 
 
+def append_untraced(spark: SparkSession, meta_path: str, endpoint: str, pages: DataFrame) -> None:
+    """Append the ``source_trace`` rows of ``pages`` that it does not
+    hold yet: the catch-up of a landing whose trace a crash may have
+    cut off."""
+    path = f"{meta_path}/source_trace"
+    rows = source_trace_rows(endpoint, pages)
+    if fsutil.table_exists(spark, path):
+        rows = rows.join(spark.read.parquet(path), rows.columns, "left_anti")
+    rows = rows.localCheckpoint()  # read before the append below
+    if not rows.isEmpty():
+        rows.write.mode("append").parquet(path)
+
+
 def _pending_path(meta_path: str, endpoint: str) -> str:
     return f"{meta_path}/_pending/{endpoint}.json"
+
+
+def begin_landing(spark: SparkSession, meta_path: str, endpoint: str, landing: list) -> None:
+    """Record the ``(year, page_number, source_hash)`` of the pages a
+    load is about to land, before the raw swap publishes any, so that
+    the next load traces them if a crash cuts off their ``source_trace``
+    append (``pending_load``). ``begin_load`` replaces the record once
+    the trace is written."""
+    fsutil.replace_text(spark, _pending_path(meta_path, endpoint), json.dumps({"landing": landing}))
 
 
 def begin_load(
@@ -211,14 +233,18 @@ def begin_load(
 
 
 def pending_load(spark: SparkSession, meta_path: str, endpoint: str, run: dict) -> dict | None:
-    """The record ``begin_load`` left for ``run`` when that run stopped
-    before its ``load_log`` row landed; None otherwise. Any other record
+    """The record a stopped load left: a ``begin_landing`` record, of
+    any run, whose pages may still lack their ``source_trace`` rows; or
+    the counts ``begin_load`` recorded for ``run`` when that run stopped
+    before its ``load_log`` row landed. None otherwise. Any other record
     left behind is stale and dropped."""
     path = _pending_path(meta_path, endpoint)
     if not fsutil.path_exists(spark, path):
         return None
     record = json.loads(fsutil.read_text(spark, path))
-    if record["run"] == run and not _load_logged(spark, meta_path, record["load_id"]):
+    if "landing" in record or (
+        record["run"] == run and not _load_logged(spark, meta_path, record["load_id"])
+    ):
         return record
     end_load(spark, meta_path, endpoint)
     return None

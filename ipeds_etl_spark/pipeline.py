@@ -21,6 +21,7 @@ from ipeds_etl_spark import fsutil, lineage, registry
 from ipeds_etl_spark.localframe import local_frame
 from ipeds_etl_spark.operators.merge import publish_stage, recover_swaps
 from ipeds_etl_spark.plans.core_pipeline import map_from_raw, write_core
+from ipeds_etl_spark.plans.views import latest_per_key_window
 from ipeds_etl_spark.sources import raw as raw_io
 
 
@@ -50,7 +51,8 @@ def run_load(
 
     1. land: the pages become a local relation with driver-side hashes,
        and the raw hash guard, decided on the driver, rewrites the year
-       partition only if a page changed;
+       partition only if a page changed. The pages' keys and hashes
+       are recorded first (``lineage.begin_landing``);
     2. trace: one ``source_trace`` row per page that landed, none for
        an identical re-send;
     3. count: one action over the mapped year fills its cache and
@@ -63,8 +65,10 @@ def run_load(
 
     Each write is crash-safe on its own, and a re-run of the same pages
     after a crash between steps ends in the same raw, core and
-    ``load_log`` as an uninterrupted run: a crash after step 3 leaves
-    the recorded counts and ``load_id`` for the re-run to log. Into an
+    ``load_log`` and ``source_trace`` as an uninterrupted run: the next
+    load traces the recorded pages that raw holds and ``source_trace``
+    lacks, and a crash after step 3 leaves the recorded counts and
+    ``load_id`` for the re-run to log. Into an
     existing warehouse, a load starts no Python worker.
     """
     started = datetime.now(timezone.utc)
@@ -75,18 +79,25 @@ def run_load(
     pk = list(ep.pk)
 
     pages = raw_io.pages_from_fetched(spark, year, page_lists, endpoint_path=ep.path)
-    # the write path's recovery first, so the probe sees one complete
-    # generation (write_pages would run the same recovery next)
+    keys = [tuple(r) for r in pages.select("year", "page_number", "source_hash").collect()]
+    # the run's input, to know a re-run of a crashed load
+    hashes = "".join(k[2] for k in keys)
+    run = {"year": year, "pages": hashlib.sha256(hashes.encode()).hexdigest()}
+    # the write path's recovery first, so the probe and a crashed
+    # landing's catch-up see one complete generation (write_pages would
+    # run the same recovery next)
     recover_swaps(spark, raw_path)
+    pending = lineage.pending_load(spark, meta_path, endpoint, run)
+    if pending is not None and "landing" in pending:
+        _trace_landing(spark, meta_path, endpoint, raw_path, pending["landing"])
+        pending = None
+    if pending is None:
+        lineage.begin_landing(spark, meta_path, endpoint, keys)
     existing = int(fsutil.table_exists(spark, f"{raw_path}/year={year}"))
     landed = raw_io.write_pages(spark, pages, raw_path)
     if landed is not None:
         lineage.append_source_trace(spark, meta_path, endpoint, landed)
 
-    # the run's input, to know a re-run of a crashed load
-    hashes = "".join(r[0] for r in pages.select("source_hash").collect())
-    run = {"year": year, "pages": hashlib.sha256(hashes.encode()).hexdigest()}
-    pending = lineage.pending_load(spark, meta_path, endpoint, run)
     # the counts read core before write_core would recover it
     recover_swaps(spark, core_path)
     # Mapped once: the counting action fills the cache, and the core
@@ -124,6 +135,20 @@ def run_load(
     }
 
 
+def _trace_landing(
+    spark: SparkSession, meta_path: str, endpoint: str, raw_path: str, landing: list
+) -> None:
+    """Trace the pages of a stopped load's ``landing``
+    (``lineage.begin_landing``) that raw holds and ``source_trace`` does
+    not: a crash came between the raw swap and the trace append."""
+    keys = spark.createDataFrame(
+        [tuple(k) for k in landing], "year int, page_number int, source_hash string"
+    )
+    stored = raw_io.scan_pages(spark, raw_path, sorted({k[0] for k in landing}))
+    landed = stored.join(keys, ["year", "page_number", "source_hash"])
+    lineage.append_untraced(spark, meta_path, endpoint, landed)
+
+
 def rebuild_gold(spark: SparkSession, endpoint: str, warehouse: str) -> dict[str, int]:
     """Rebuild the serving (gold) tables from core — the Spark
     equivalent of the reference's post-ETL materialized-view refresh
@@ -138,7 +163,6 @@ def rebuild_gold(spark: SparkSession, endpoint: str, warehouse: str) -> dict[str
     * ``institutions_latest`` — latest core row per institution (W1).
     * ``yearly_counts``       — institutions per (year, state) (A2 shape).
     """
-    ep = registry.get_endpoint(endpoint)
     core_path = f"{warehouse}/core/{endpoint}"
     recover_swaps(spark, core_path, rollback_uncommitted=False)
     recover_swaps(spark, f"{warehouse}/vw")
@@ -149,19 +173,21 @@ def rebuild_gold(spark: SparkSession, endpoint: str, warehouse: str) -> dict[str
     from ipeds_etl_spark.operators import txn
 
     core = txn.read_table(spark, core_path)
-    from pyspark.sql import Window
-
-    # latest row per non-year key part (institutions_latest shape);
-    # deterministic tie-break over the remaining PK parts
-    entity_keys = [k for k in ep.pk if k != "year"]
-    w = Window.partitionBy(*entity_keys).orderBy(F.col("year").desc())
-    latest = (
-        core.withColumn("_rn", F.row_number().over(w)).filter(F.col("_rn") == 1).drop("_rn")
-    )
-    # yearly rollup; sliced by state when the endpoint carries geography
-    count_dims = ["year"] + (["state_abbr"] if "state_abbr" in core.columns else [])
-    counts = core.groupBy(*count_dims).agg(F.count("*").alias("n_rows"))
+    # latest row per non-year key part (institutions_latest shape)
+    latest = latest_per_key_window(core, _entity_keys(endpoint), [F.col("year").desc()])
+    counts = core.groupBy(*_count_dims(core)).agg(F.count("*").alias("n_rows"))
     return _publish_views(spark, endpoint, warehouse, latest, counts)
+
+
+def _entity_keys(endpoint: str) -> list[str]:
+    """The key parts that name an entity across years."""
+    return [k for k in registry.get_endpoint(endpoint).pk if k != "year"]
+
+
+def _count_dims(df: DataFrame) -> list[str]:
+    """``yearly_counts``' group columns: ``year``, sliced by state when
+    the endpoint carries geography."""
+    return ["year"] + (["state_abbr"] if "state_abbr" in df.columns else [])
 
 
 def _publish_views(
@@ -231,33 +257,20 @@ def refresh_gold_incremental(
     the views already hold folds nothing (the counting fold is not
     idempotent) and returns their row counts.
     """
-    ep = registry.get_endpoint(endpoint)
-    entity_keys = [k for k in ep.pk if k != "year"]
-
     recover_swaps(spark, f"{warehouse}/vw")
     if _stored_batch(spark, endpoint, warehouse) == batch:
         return _view_counts(spark, endpoint, warehouse)
     stored_latest = spark.read.parquet(f"{warehouse}/vw/{endpoint}_institutions_latest")
     stored_counts = spark.read.parquet(f"{warehouse}/vw/{endpoint}_yearly_counts")
 
-    from pyspark.sql import Window
-
-    pri = F.lit(0)
-    unioned = stored_latest.withColumn("_pri", pri).unionByName(
+    unioned = stored_latest.withColumn("_pri", F.lit(0)).unionByName(
         delta.select(*stored_latest.columns).withColumn("_pri", F.lit(1))
     )
-    w = Window.partitionBy(*entity_keys).orderBy(
-        F.col("year").desc(), F.col("_pri").desc()
-    )
-    new_latest = (
-        unioned.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-        .drop("_rn", "_pri")
-    )
+    new_latest = latest_per_key_window(
+        unioned, _entity_keys(endpoint), [F.col("year").desc(), F.col("_pri").desc()]
+    ).drop("_pri")
 
-    count_dims = ["year"] + (
-        ["state_abbr"] if "state_abbr" in stored_counts.columns else []
-    )
+    count_dims = _count_dims(stored_counts)
     # updates contribute +1 (post) −1 (pre) in their group: a no-op
     # unless the update moved the row across a dimension value
     adds = delta.groupBy(*count_dims).agg(F.count(F.lit(1)).alias("_add"))

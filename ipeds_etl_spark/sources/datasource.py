@@ -9,16 +9,15 @@ endpoints concurrently while pagination inside a year stays sequential
 
 Source shape mirrors the raw layer (reference ``etl/raw_io.py:16-26``):
 one output row per page: (year, page_number, source_url, payload,
-record_count) — ``payload`` is the canonical JSON array text, ready to
-hash and land with ``raw.write_pages``.
+record_count) — ``payload`` is the canonical JSON array text
+(``http_ingest.canonical_payload``), ready to hash and land with
+``raw.write_pages``.
 
-Transports:
-* ``base_url=file:///dir`` — offline/fixture mode: reads
-  ``{dir}/{year}/page{N}.json`` files until one is missing. This is how
-  tests exercise the full partition-planning + read path with zero
-  network.
-* ``base_url=http(s)://...`` — real paginated GET with the same
-  retry/backoff policy as ``http_ingest`` (3 attempts, 1s/2s/4s).
+Every page is fetched through ``http_ingest.get_with_retries``, with its
+retries, timeout and ``User-Agent`` from ``config.Settings``, and a
+missing page ends the year. ``base_url=http(s)://...`` addresses page N
+as ``{base_url}/{path_template}?page=N``; ``base_url=file:///dir``, the
+offline fixture mode tests use, as ``{dir}/{path_template}page{N}.json``.
 
 Usage:
 
@@ -29,15 +28,16 @@ Usage:
           .option("year_start", "2019").option("year_end", "2021")
           .load())
 
-Deployment note: Python workers must be able to import this module
-(ship the package with ``--py-files`` / a cluster env, standard for
-Python data sources).
+The source runs in Python workers, which need not import this package:
+the module and what it calls there ship by value (bottom of the file).
 """
 
 from __future__ import annotations
 
-import json
+import logging
+import sys
 
+from pyspark import cloudpickle
 from pyspark.sql.datasource import (
     DataSource,
     DataSourceReader,
@@ -45,9 +45,20 @@ from pyspark.sql.datasource import (
     SimpleDataSourceStreamReader,
 )
 
+from ipeds_etl_spark import config
+from ipeds_etl_spark.sources import catalog, http_ingest
+from ipeds_etl_spark.sources.http_ingest import (
+    canonical_payload,
+    endpoint_url,
+    get_with_retries,
+    parse_page,
+)
+
 SCHEMA = (
     "year int, page_number int, source_url string, payload string, record_count int"
 )
+
+log = logging.getLogger(__name__)
 
 
 class YearPartition(InputPartition):
@@ -78,7 +89,6 @@ class PaginatedJsonReader(DataSourceReader):
         self.path_template = options.get("path_template", "{year}/")
         self.year_start = int(options.get("year_start", "0"))
         self.year_end = int(options.get("year_end", str(self.year_start)))
-        self.max_retries = int(options.get("max_retries", "3"))
         # a 404/missing file on page 1 of a year is indistinguishable
         # from "this year has no data" at the transport level — but a
         # typo'd base_url/path_template 404s EVERY page-1 and would
@@ -87,78 +97,53 @@ class PaginatedJsonReader(DataSourceReader):
         # for endpoints known to have data for every requested year.
         self.strict_404 = options.get("strict_404", "false").lower() == "true"
 
-    def _empty_year(self, year: int, url: str) -> None:
+    def _empty_year(self, year: int) -> None:
         msg = (
-            f"paginated_json: year {year} terminated on page 1 ({url}) — "
+            f"paginated_json: year {year} terminated on page 1 ({self._url(year, 1)}) — "
             "empty year, or a misconfigured base_url/path_template. "
             "Set strict_404=true to make this an error."
         )
         if self.strict_404:
             raise IOError(msg)
-        import logging
-
-        logging.getLogger(__name__).warning(msg)
+        log.warning(msg)
 
     def partitions(self):
         return [YearPartition(y) for y in range(self.year_start, self.year_end + 1)]
 
-    # -- transports --------------------------------------------------------
-    def _fetch_file(self, year: int, page: int):
-        from pathlib import Path
+    def _url(self, year: int, page: int) -> str:
+        url = endpoint_url(self.base_url, self.path_template, year)
+        # a fixture directory holds one file per page; an API takes the
+        # page as a query
+        if self.base_url.startswith("file:"):
+            return f"{url}page{page}.json"
+        return f"{url}?page={page}"
 
-        root = Path(self.base_url[len("file://") :])
-        f = root / str(year) / f"page{page}.json"
-        if not f.exists():
-            return None, str(f)
-        return f.read_text(), str(f)
+    def page(self, year: int, page: int) -> tuple[tuple | None, bool]:
+        """Fetch one page → ``(row | None, has_next)``.
 
-    def _fetch_http(self, year: int, page: int):
-        import time
-        import urllib.error
-        import urllib.request
+        ``row`` is None when the page does not exist (HTTP 404 or a
+        missing fixture file): end-of-data, not an error. ``has_next``
+        honors the API's ``next`` link — a 200 response without one
+        TERMINATES the year, so a live endpoint that answers empty
+        pages forever cannot trap a reader in an endless loop."""
+        url = self._url(year, page)
+        body = get_with_retries(url, missing_ok=True)
+        if body is None:
+            return None, False
+        records, nxt = parse_page(body)
+        return (year, page, url, canonical_payload(records), len(records)), nxt is not None
 
-        path = self.path_template.replace("{year}", str(year)).lstrip("/")
-        url = f"{self.base_url.rstrip('/')}/{path}?page={page}"
-        for attempt in range(self.max_retries):
-            try:
-                with urllib.request.urlopen(url, timeout=30) as r:
-                    return r.read().decode("utf-8"), url
-            except urllib.error.HTTPError as e:
-                if e.code == 404:
-                    # past-the-end page on a 404-terminating server:
-                    # end-of-data, not an error — same signal as the
-                    # file transport's missing page{N}.json
-                    return None, url
-                if attempt == self.max_retries - 1:
-                    raise
-                time.sleep(2**attempt)
-            except Exception:
-                if attempt == self.max_retries - 1:
-                    raise
-                time.sleep(2**attempt)
-        return None, url
-
-    # -- read --------------------------------------------------------------
     def read(self, partition: YearPartition):
-        year = partition.year
-        page = 1
+        year, page = partition.year, 1
         while True:
-            if self.base_url.startswith("file://"):
-                body, url = self._fetch_file(year, page)
-            else:
-                body, url = self._fetch_http(year, page)
-            if body is None:
+            row, has_next = self.page(year, page)
+            if row is None:
                 if page == 1:
-                    self._empty_year(year, url)
-                break
-            data = json.loads(body)
-            records = data.get("results", [])
-            payload = json.dumps(
-                records, sort_keys=True, separators=(",", ":"), default=str
-            )
-            yield (year, page, url, payload, len(records))
-            if not data.get("next"):
-                break
+                    self._empty_year(year)
+                return
+            yield row
+            if not has_next:
+                return
             page += 1
 
 
@@ -194,49 +179,6 @@ class PaginatedJsonStreamReader(SimpleDataSourceStreamReader):
     def initialOffset(self) -> dict:
         return {"year": self._r.year_start, "page": 1}
 
-    def _fetch(self, year: int, page: int):
-        if self._r.base_url.startswith("file://"):
-            return self._r._fetch_file(year, page)
-        return self._r._fetch_http(year, page)
-
-    def _rows_for(self, year: int, page: int):
-        """Fetch one page → ``(rows_or_None, has_next)``.
-
-        ``rows_or_None`` is None when the page does not exist (missing
-        fixture file, or HTTP 404 after the transport's end-of-data
-        mapping). ``has_next`` honors the API's ``next`` link exactly
-        like the batch reader's ``read`` loop — a 200 response without
-        ``next`` TERMINATES the year, so a live endpoint that answers
-        empty pages forever cannot trap the stream in an infinite
-        empty-page loop."""
-        body, url = self._fetch(year, page)
-        if body is None:
-            if page == 1 and year < self._r.year_end:
-                # misconfiguration guard (batch-reader analogue), but
-                # stream-scoped (ADVICE r6): only for years strictly
-                # before the newest — "no page 1 yet" is a NORMAL
-                # transient state for the live year — and at most once
-                # per year, not per poll. Never strict-raise here: an
-                # IOError would kill the stream permanently over what
-                # may be a publication gap; strict_404 stays a
-                # batch-reader contract.
-                if year not in self._warned_years:
-                    self._warned_years.add(year)
-                    import logging
-
-                    logging.getLogger(__name__).warning(
-                        f"paginated_json stream: year {year} has no page 1 "
-                        f"({url}) — empty year, or a misconfigured "
-                        "base_url/path_template."
-                    )
-            return None, False
-        data = json.loads(body)
-        records = data.get("results", [])
-        payload = json.dumps(
-            records, sort_keys=True, separators=(",", ":"), default=str
-        )
-        return [(year, page, url, payload, len(records))], bool(data.get("next"))
-
     def read(self, start: dict):
         # contract: return ALL currently-available rows after `start`
         # plus the offset the next poll resumes from — on a live
@@ -244,60 +186,64 @@ class PaginatedJsonStreamReader(SimpleDataSourceStreamReader):
         year, page = start["year"], start["page"]
         out: list[tuple] = []
         while year <= self._r.year_end:
-            rows, has_next = self._rows_for(year, page)
-            if rows is None:
-                if year >= self._r.year_end:
-                    # LIVE (newest) year: HOLD the offset for ANY
-                    # missing page, not just page 1 — if a page > 1
-                    # transiently 404s while its predecessor advertised
-                    # a `next` link, rolling over would skip the rest
-                    # of the live year permanently (ADVICE r7). The
-                    # next poll retries the same page; only the
-                    # server's own no-`next` terminator rolls the live
-                    # year over.
-                    if page > 1 and (year, page) not in self._warned_holds:
-                        # the once-per-year "no page 1" warning above
-                        # never covers this hold (it fires only for
-                        # years before the live one), so a server that
-                        # advertised `next` and then truncated the
-                        # chain would stall ingestion with no log
-                        # signal at all (ADVICE r8) — warn once per
-                        # held (year, page)
-                        self._warned_holds.add((year, page))
-                        import logging
-
-                        logging.getLogger(__name__).warning(
-                            f"paginated_json stream: holding offset at "
-                            f"year {year} page {page} — predecessor "
-                            "advertised `next` but the page is missing; "
-                            "retrying every poll until it appears or "
-                            "the year terminates"
-                        )
-                    break
-                # year exhausted (404 / missing file): roll over
-                year, page = year + 1, 1
-                continue
-            out.extend(rows)
-            if not has_next:
-                # year exhausted (no `next` link): roll over — the
-                # server's own pagination contract terminates a year,
-                # and pages past a no-`next` page are never visited
-                year, page = year + 1, 1
-                continue
-            page += 1
+            row, has_next = self._r.page(year, page)
+            if row is None and year >= self._r.year_end:
+                # LIVE (newest) year: HOLD the offset for ANY missing
+                # page, not just page 1 — if a page > 1 transiently
+                # 404s while its predecessor advertised a `next` link,
+                # rolling over would skip the rest of the live year
+                # permanently (ADVICE r7). The next poll retries the
+                # same page; only the server's own no-`next` terminator
+                # rolls the live year over. "No page 1 yet" is the
+                # normal transient state of a live year.
+                if page > 1 and (year, page) not in self._warned_holds:
+                    # a server that advertised `next` and then truncated
+                    # the chain would otherwise stall ingestion with no
+                    # log signal at all (ADVICE r8) — warn once per held
+                    # (year, page)
+                    self._warned_holds.add((year, page))
+                    log.warning(
+                        f"paginated_json stream: holding offset at "
+                        f"year {year} page {page} — predecessor "
+                        "advertised `next` but the page is missing; "
+                        "retrying every poll until it appears or "
+                        "the year terminates"
+                    )
+                break
+            if row is None and page == 1 and year not in self._warned_years:
+                # misconfiguration guard (batch-reader analogue), for
+                # years before the live one and once per year. Never
+                # strict-raise here: an IOError would kill the stream
+                # permanently over what may be a publication gap;
+                # strict_404 stays a batch-reader contract.
+                self._warned_years.add(year)
+                log.warning(
+                    f"paginated_json stream: year {year} has no page 1 "
+                    f"({self._r._url(year, 1)}) — empty year, or a misconfigured "
+                    "base_url/path_template."
+                )
+            if row is not None:
+                out.append(row)
+            # a missing page (404 / missing file) or a page without a
+            # `next` link exhausts the year: roll over
+            year, page = (year, page + 1) if has_next else (year + 1, 1)
         return iter(out), {"year": year, "page": page}
 
     def readBetweenOffsets(self, start: dict, end: dict):
         year, page = start["year"], start["page"]
         out = []
         while (year, page) < (end["year"], end["page"]) and year <= self._r.year_end:
-            rows, has_next = self._rows_for(year, page)
-            if rows is None:
-                year, page = year + 1, 1
-                continue
-            out.extend(rows)
-            if not has_next:
-                year, page = year + 1, 1
-                continue
-            page += 1
+            row, has_next = self._r.page(year, page)
+            if row is not None:
+                out.append(row)
+            year, page = (year, page + 1) if has_next else (year + 1, 1)
         return iter(out)
+
+
+# The source runs in Python workers, which may not be able to import
+# this package (a session started from another working directory, with
+# the package only on the driver's ``sys.path``): ship this module and
+# what it calls there by value. ``config`` needs ``catalog`` for its
+# ``mask_credentials``.
+for _module in (config, catalog, http_ingest, sys.modules[__name__]):
+    cloudpickle.register_pickle_by_value(_module)

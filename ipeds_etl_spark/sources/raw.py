@@ -41,7 +41,6 @@ from __future__ import annotations
 
 import functools
 import hashlib
-import json
 import operator
 from collections.abc import Sequence
 from datetime import datetime, timezone
@@ -51,8 +50,10 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ipeds_etl_spark import fsutil
+from ipeds_etl_spark.config import get_settings
 from ipeds_etl_spark.localframe import local_frame
 from ipeds_etl_spark.operators.merge import overwrite_partitions_staged, recover_swaps
+from ipeds_etl_spark.sources.http_ingest import canonical_payload, endpoint_url
 
 RAW_SCHEMA = T.StructType(
     [
@@ -75,7 +76,7 @@ def build_pages(
     order_cols: Sequence[str] | None = None,
     page_size: int = PAGE_SIZE_DEFAULT,
     endpoint_path: str = "ipeds/directory/{year}/",
-    api_base: str = "https://educationdata.example/api/v1",
+    api_base: str | None = None,
     n_buckets: int = 32,
 ) -> DataFrame:
     """Chunk a record DataFrame into raw pages with provenance columns.
@@ -93,7 +94,10 @@ def build_pages(
     broadcast back to form the contiguous per-year index. The page
     order within a year is (bucket, order_cols): content-deterministic,
     independent of input partitioning, stable across re-ingests.
+    ``api_base`` defaults to ``Settings.api_base_url``.
     """
+    if api_base is None:
+        api_base = get_settings().api_base_url
     order_cols = list(order_cols or [c for c in records.columns if c != year_col])
     rec_struct = F.struct(*[F.col(c) for c in records.columns])
     bucket = F.pmod(F.xxhash64(*[F.col(c) for c in order_cols]), F.lit(n_buckets))
@@ -144,27 +148,27 @@ def pages_from_fetched(
     year: int,
     page_lists: list[list[dict]],
     endpoint_path: str = "ipeds/directory/{year}/",
-    api_base: str = "https://educationdata.example/api/v1",
+    api_base: str | None = None,
 ) -> DataFrame:
     """Land pre-paginated records (e.g. from ``http_ingest``) as raw
     page rows, preserving the API's own page structure — the shape the
     reference's ``insert_raw_payloads`` produces (reference
-    ``etl/raw_io.py:127-200``). Payload JSON is canonicalized (sorted
-    keys, compact separators) so the content hash is stable, matching
-    ``_stable_json_hash`` (reference ``etl/raw_io.py:57-70``).
+    ``etl/raw_io.py:127-200``). The payload is
+    ``http_ingest.canonical_payload``, the form the ``paginated_json``
+    source emits, so the content hash is stable and agrees with it.
+    ``api_base`` defaults to ``Settings.api_base_url``.
 
     Serialization and hashing run here, on the driver: the hash is the
     hex SHA-256 of the payload's UTF-8 bytes, which is what Spark's
     ``sha2(payload, 256)`` computes, so hashes stored by either agree.
     The result is a local relation (``localframe``)."""
-    path = endpoint_path.replace("{year}", str(year)).lstrip("/")
+    if api_base is None:
+        api_base = get_settings().api_base_url
+    url = endpoint_url(api_base, endpoint_path, year)
     # one stamp for the whole landing, shared by the raw rows and their
     # source_trace rows
     ingested_at = datetime.now(timezone.utc)
-    payloads = [
-        json.dumps(recs, sort_keys=True, separators=(",", ":"), default=str)
-        for recs in page_lists
-    ]
+    payloads = [canonical_payload(recs) for recs in page_lists]
     numbers = range(1, len(payloads) + 1)
     return local_frame(
         spark,
@@ -172,7 +176,7 @@ def pages_from_fetched(
         {
             "year": [year] * len(payloads),
             "page_number": numbers,
-            "source_url": [f"{api_base.rstrip('/')}/{path}?page={i}" for i in numbers],
+            "source_url": [f"{url}?page={i}" for i in numbers],
             "source_hash": [hashlib.sha256(p.encode("utf-8")).hexdigest() for p in payloads],
             "ingested_at": [ingested_at] * len(payloads),
             "record_count": [len(recs) for recs in page_lists],

@@ -116,6 +116,10 @@ def test_stream_reader_delivers_every_page_exactly_once(spark, fixture_api, tmp_
     assert got == want and len(got) == 6
 
 
+#: the ``User-Agent`` of every request ``live_http_api`` received
+USER_AGENTS: list[str] = []
+
+
 @pytest.fixture(scope="module")
 def live_http_api():
     """A 'live' paginated endpoint: every 200 page advertises a ``next``
@@ -131,6 +135,7 @@ def live_http_api():
 
     class Handler(BaseHTTPRequestHandler):
         def do_GET(self):
+            USER_AGENTS.append(self.headers["User-Agent"])
             m = re.match(r"^/api/(\d+)/\?page=(\d+)$", self.path)
             year, page = int(m.group(1)), int(m.group(2))
             if page > pages_by_year.get(year, 0):
@@ -168,7 +173,6 @@ def _http_opts(reader, base_url):
         .option("path_template", "api/{year}/")
         .option("year_start", "2019")
         .option("year_end", "2020")
-        .option("max_retries", "1")
     )
 
 
@@ -179,6 +183,20 @@ def test_http_transport_404_terminates_batch(spark, live_http_api):
     rows = _http_opts(spark.read, live_http_api).load().collect()
     got = sorted((r["year"], r["page_number"], r["record_count"]) for r in rows)
     assert got == [(2019, 1, 3), (2019, 2, 3), (2020, 1, 3)]
+
+
+def test_source_and_driver_fetch_send_the_settings_user_agent(spark, live_http_api):
+    """Both readers fetch through ``http_ingest``'s one GET, which sends
+    ``Settings.user_agent``."""
+    from ipeds_etl_spark.sources.http_ingest import get_with_retries
+
+    spark.dataSource.register(PaginatedJsonDataSource)
+    USER_AGENTS.clear()
+    assert len(_http_opts(spark.read, live_http_api).load().collect()) == 3
+    assert USER_AGENTS and set(USER_AGENTS) == {"ipeds-etl-spark/0.2"}
+    USER_AGENTS.clear()
+    get_with_retries(f"{live_http_api}/api/2019/?page=1")
+    assert USER_AGENTS == ["ipeds-etl-spark/0.2"]
 
 
 def test_http_transport_404_terminates_stream(spark, live_http_api, tmp_path):
@@ -442,3 +460,126 @@ def test_stream_live_year_truncated_chain_warns_once(
     finally:
         log.removeHandler(h)
         shutil.rmtree(d)  # fixture is module-scoped: leave it as found
+
+
+_FOREIGN_CWD_SCRIPT = """
+import json, sys
+sys.path.insert(0, {repo!r})
+from pyspark.sql import SparkSession
+spark = (
+    SparkSession.builder.master("local[2]")
+    .config("spark.sql.shuffle.partitions", "2")
+    .config("spark.ui.enabled", "false")
+    .getOrCreate()
+)
+spark.sparkContext.setLogLevel("ERROR")
+from ipeds_etl_spark.sources.datasource import PaginatedJsonDataSource
+
+spark.dataSource.register(PaginatedJsonDataSource)
+opts = dict(base_url="file://{api}", year_start="2019", year_end="2021")
+batch = spark.read.format("paginated_json").options(**opts).load().count()
+(
+    spark.readStream.format("paginated_json").options(**opts).load()
+    .writeStream.format("memory").queryName("pages").outputMode("append")
+    .option("checkpointLocation", "ck").trigger(availableNow=True)
+    .start().awaitTermination()
+)
+print(json.dumps([batch, spark.sql("SELECT * FROM pages").count()]))
+"""
+
+
+def test_source_runs_from_foreign_working_directory(fixture_api, tmp_path):
+    """The source's batch and stream reads run in a session whose
+    Python workers cannot import the package: started from another
+    working directory, with the package only on the Spark driver's
+    ``sys.path``. The source and what it calls ship by value."""
+    import os
+    import subprocess
+    import sys
+    from pathlib import Path
+
+    repo = str(Path(__file__).resolve().parents[1])
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    proc = subprocess.run(
+        [sys.executable, "-c", _FOREIGN_CWD_SCRIPT.format(repo=repo, api=fixture_api)],
+        cwd=tmp_path,
+        env=env,
+        capture_output=True,
+        text=True,
+        timeout=600,
+    )
+    assert proc.returncode == 0, proc.stderr[-3000:]
+    assert json.loads(proc.stdout.strip().splitlines()[-1]) == [6, 6]
+
+
+def _write_fixture(root, year: int, page_lists: list[list[dict]]) -> None:
+    d = root / str(year)
+    d.mkdir(parents=True)
+    for p, records in enumerate(page_lists, 1):
+        nxt = f"?page={p + 1}" if p < len(page_lists) else None
+        (d / f"page{p}.json").write_text(json.dumps({"results": records, "next": nxt}))
+
+
+def _source_pages(spark, root, year: int):
+    """The source's rows over ``root`` for ``year``, with the raw
+    layer's hash and stamp columns."""
+    from pyspark.sql import functions as F
+
+    spark.dataSource.register(PaginatedJsonDataSource)
+    return (
+        spark.read.format("paginated_json")
+        .option("base_url", f"file://{root}")
+        .option("year_start", str(year))
+        .option("year_end", str(year))
+        .load()
+        .select(
+            "year",
+            "page_number",
+            "source_url",
+            F.sha2("payload", 256).alias("source_hash"),
+            F.current_timestamp().alias("ingested_at"),
+            "record_count",
+            "payload",
+        )
+    )
+
+
+def test_source_and_driver_landing_agree_on_payload_and_hash(spark, tmp_path):
+    """The same pages, landed by ``raw.pages_from_fetched`` and read by
+    the source plus ``sha2(payload)``, carry the same canonical payload
+    and content hash, key order, unicode, floats and nulls included."""
+    from ipeds_etl_spark.sources import raw as raw_io
+
+    page_lists = [
+        [{"z": 1, "a": "é ☃", "m": [1.5, None, {"y": 2, "b": True}]}, {"unitid": 7}],
+        [{"b": 1e-7, "a": None}],
+    ]
+    _write_fixture(tmp_path, 2019, page_lists)
+
+    def by_page(df):
+        return {
+            r["page_number"]: (r["payload"], r["source_hash"])
+            for r in df.select("page_number", "payload", "source_hash").collect()
+        }
+
+    driver = by_page(raw_io.pages_from_fetched(spark, 2019, page_lists))
+    source = by_page(_source_pages(spark, tmp_path, 2019))
+    assert sorted(driver) == [1, 2]
+    assert source == driver
+
+
+def test_source_relanding_a_loaded_year_writes_nothing(spark, tmp_path):
+    """The source's rows for a year ``run_load`` landed pass the raw
+    hash guard untouched: ``write_pages`` lands nothing."""
+    from ipeds_etl_spark import pipeline
+    from ipeds_etl_spark.sources import raw as raw_io
+
+    page_lists = [
+        [{"unitid": u, "year": 2020, "inst_name": f"inst {u}", "sector": 1} for u in (1, 2, 3)],
+        [{"unitid": 4, "year": 2020, "inst_name": "inst 4", "sector": 2}],
+    ]
+    wh = str(tmp_path / "wh")
+    pipeline.run_load(spark, "directory", 2020, page_lists, wh)
+    _write_fixture(tmp_path / "api", 2020, page_lists)
+    pages = _source_pages(spark, tmp_path / "api", 2020)
+    assert raw_io.write_pages(spark, pages, f"{wh}/raw/directory") is None

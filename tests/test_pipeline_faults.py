@@ -2,8 +2,9 @@
 
 A load that crashes after the raw landing, after the ``source_trace``
 append, after the core write or before the ``load_log`` append, then
-re-runs with the same pages, must leave raw, core, gold and
-``load_log`` as one uninterrupted load does, apart from time stamps.
+re-runs with the same pages, must leave raw, core, gold, ``load_log``
+and ``source_trace`` as one uninterrupted load does, apart from time
+stamps.
 The crashing load both updates and inserts, so a re-run that counted
 its merge against the already-written core would log the wrong
 counts. (``tests/test_txn.py`` covers crashes inside one swap.)
@@ -53,7 +54,7 @@ CRASHES = {
 
 
 def _state(spark, wh: str) -> dict:
-    """Raw, core, gold and load_log without their time stamps."""
+    """Raw, core, gold, load_log and source_trace without their time stamps."""
     pipeline.rebuild_gold(spark, ENDPOINT, wh)
 
     def rows(path, drop=()):
@@ -65,6 +66,7 @@ def _state(spark, wh: str) -> dict:
         "core": rows(f"core/{ENDPOINT}"),
         "gold": {v: rows(f"vw/{ENDPOINT}_{v}") for v in ("institutions_latest", "yearly_counts")},
         "load_log": rows("meta/load_log", ["started_at", "finished_at"]),
+        "source_trace": rows("meta/source_trace", ["ingested_at"]),
     }
 
 

@@ -9,6 +9,10 @@ The layering test walks every import under ``ipeds_etl_spark/``: no
 module imports a ``_``-prefixed name from a query module other than
 itself (the registry's ``_register`` decorator is the one exception),
 and nothing outside the query layer imports the query layer.
+
+The fetcher test pins one HTTP fetcher: inside the package, only
+``sources/http_ingest.py`` calls ``urlopen`` or holds a retry/backoff
+loop.
 """
 
 from __future__ import annotations
@@ -115,3 +119,55 @@ def _layering_violations() -> list[str]:
 def test_query_modules_share_no_private_names_and_sit_on_top():
     bad = _layering_violations()
     assert not bad, f"{len(bad)} layering violations:\n" + "\n".join(bad)
+
+
+#: exception types a fetch retry catches: any transport failure
+_TRANSPORT_FAILURES = {
+    "Exception", "BaseException", "OSError", "IOError", "URLError", "HTTPError",
+    "ConnectionError", "TimeoutError",
+}
+
+
+def _call_name(node: ast.Call) -> str | None:
+    f = node.func
+    return f.attr if isinstance(f, ast.Attribute) else getattr(f, "id", None)
+
+
+def _catches_transport_failure(handler: ast.ExceptHandler) -> bool:
+    if handler.type is None:  # bare except
+        return True
+    types = handler.type.elts if isinstance(handler.type, ast.Tuple) else [handler.type]
+    return any(
+        (t.attr if isinstance(t, ast.Attribute) else getattr(t, "id", None)) in _TRANSPORT_FAILURES
+        for t in types
+    )
+
+
+def _fetchers() -> tuple[list[str], list[str]]:
+    """(``urlopen`` calls, retry/backoff loops) under the package, as
+    ``module:line``. A retry/backoff loop is a ``for``/``while`` that
+    sleeps and catches a transport failure."""
+    urlopens: list[str] = []
+    retry_loops: list[str] = []
+    for path in sorted(PKG.rglob("*.py")):
+        me = _module_name(path)
+        tree = ast.parse(path.read_text())
+        for node in ast.walk(tree):
+            if isinstance(node, ast.Call) and _call_name(node) == "urlopen":
+                urlopens.append(f"{me}:{node.lineno}")
+            if isinstance(node, (ast.For, ast.While)):
+                inner = list(ast.walk(node))
+                sleeps = any(isinstance(n, ast.Call) and _call_name(n) == "sleep" for n in inner)
+                catches = any(
+                    isinstance(n, ast.ExceptHandler) and _catches_transport_failure(n) for n in inner
+                )
+                if sleeps and catches:
+                    retry_loops.append(f"{me}:{node.lineno}")
+    return urlopens, retry_loops
+
+
+def test_one_fetcher_owns_urlopen_and_the_retry_loop():
+    urlopens, retry_loops = _fetchers()
+    fetcher = "ipeds_etl_spark.sources.http_ingest"
+    assert [u.split(":")[0] for u in urlopens] == [fetcher], urlopens
+    assert [r.split(":")[0] for r in retry_loops] == [fetcher], retry_loops
