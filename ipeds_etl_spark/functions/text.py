@@ -27,6 +27,8 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
+from ipeds_etl_spark.functions.cleaning import array_lit
+
 # GPT-2-ish pre-tokenizer classes: word runs, digit runs, single
 # non-space symbols. Java and RE2-style engines both support these
 # classes; \p{L}/\p{N} are unicode-aware in Spark AND DuckDB.
@@ -209,7 +211,7 @@ def lang_scores(text: Column, word_toks: Column | None = None) -> dict[str, Colu
         if lang == "zh":  # CJK has no word boundaries: count characters
             cnt = F.size(F.regexp_extract_all(text, F.lit("[" + "".join(words) + "]"), 0))
         else:
-            lit_words = F.array(*[F.lit(w) for w in words])
+            lit_words = array_lit(words)
             cnt = F.size(F.filter(word_toks, lambda t: F.array_contains(lit_words, t)))
         out[lang] = cnt.cast("long")
     return out

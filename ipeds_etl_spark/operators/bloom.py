@@ -32,6 +32,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ipeds_etl_spark.functions.cleaning import array_lit
+
 #: bits per key the auto-sizer provisions (10 bits + 3 probes ≈ 1.7% fp)
 _BITS_PER_KEY = 10
 _MIN_BITS = 1 << 10
@@ -125,16 +127,9 @@ def bloom_probe(
 ) -> Column:
     """Pure-codegen membership test: AND over ``n_hashes`` bit lookups
     in the literal word array. No join, no shuffle — a map-side filter
-    expression (false positives possible, false negatives never).
-
-    The word array rides in as one JSON string literal that Catalyst
-    constant-folds to a plain array Literal: ``F.lit(list)`` would
-    instead plan a CreateArray with n_bits/64 children, re-evaluated
-    per row per probe (measured: dominates the whole scan at 2^18
-    bits)."""
-    import json as _json
-
-    lit_words = F.from_json(F.lit(_json.dumps(words)), "array<bigint>")
+    expression (false positives possible, false negatives never). The
+    word array is one constant (``cleaning.array_lit``)."""
+    lit_words = array_lit(words).cast("array<bigint>")
     h1, h2 = _hash_pair(key)
 
     # LET-BINDING via a higher-order function: codegen does NOT share

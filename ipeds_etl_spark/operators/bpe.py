@@ -40,11 +40,12 @@ within the same pass, because the fold compares the ACCUMULATOR TAIL
 
 from __future__ import annotations
 
-import json
 import re
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from ipeds_etl_spark.functions.cleaning import array_lit
 
 #: one merge pass over a word's symbol array, as a SQL HOF expression:
 #: fold the tail into a chr(31)-joined string, merging accumulator
@@ -212,21 +213,14 @@ def segment_longest_match(
     vocabulary is augmented with ``ALPHABET``, so segmentation always
     succeeds.
 
-    The vocabulary reaches executors as ONE ``from_json`` string
-    literal that Catalyst constant-folds into a single array Literal
-    (the ``similarity._matrix_lit`` trick). Measured at sf1 with the
-    18,330-unit composite vocabulary (~146 KB; 3-run medians, one
-    process, SCALE.md "Vocab apply at production vocab size"): 2.2 s,
-    against 2.9 s for a broadcast 1-row vocabulary frame cross-joined
-    in and 11.8 s (first sample 44.6 s) for the element-wise
-    ``F.lit(list)`` spelling — an 18k-child array expression bloats
-    analysis and per-task serialization, the single-string literal
-    does not."""
+    The vocabulary is one constant (``cleaning.array_lit``). Measured
+    at sf1 with the 18,330-unit composite vocabulary (3-run medians,
+    one process, SCALE.md "Vocab apply at production vocab size"):
+    2.2 s, against 2.9 s for a broadcast 1-row vocabulary frame
+    cross-joined in."""
     full = sorted(set(vocab) | set(ALPHABET))
     return (
-        words.withColumn(
-            "vg", F.from_json(F.lit(json.dumps(full)), "array<string>")
-        )
+        words.withColumn("vg", array_lit(full))
         .withColumn("fold", F.expr(_longest_match_fold(max_len)))
         .select(
             "w",

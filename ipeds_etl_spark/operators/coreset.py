@@ -34,6 +34,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ipeds_etl_spark.functions.cleaning import array_lit
+
 #: fixed-point scale for embedding quantization: TRUNC(x * 1000).
 QUANT_SCALE = 1000
 
@@ -51,7 +53,7 @@ def quantize_vec(col):
 def _dist_sq(vec_col, center_literal):
     """Squared euclidean distance between an array<long> column and a
     python list of ints (becomes an array literal) — BIGINT fold."""
-    lit = F.array(*[F.lit(int(v)).cast("long") for v in center_literal])
+    lit = array_lit([int(v) for v in center_literal]).cast("array<bigint>")
     diffs = F.zip_with(vec_col, lit, lambda a, b: (a - b) * (a - b))
     return F.aggregate(diffs, F.lit(0).cast("long"), lambda acc, x: acc + x)
 
@@ -63,11 +65,8 @@ def _min_dist_sq(vec_col, centers_vecs: list[list[int]]):
     ``array_min`` over exact integers equals the sequential ``least``
     chain, so the running-min value is bit-identical to the
     round-by-round update (opt r13)."""
-    import json
-
-    m = F.from_json(
-        F.lit(json.dumps([[int(v) for v in c] for c in centers_vecs])),
-        "array<array<bigint>>",
+    m = array_lit([[int(v) for v in c] for c in centers_vecs]).cast(
+        "array<array<bigint>>"
     )
     return F.array_min(
         F.transform(

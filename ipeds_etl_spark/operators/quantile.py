@@ -34,6 +34,8 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ipeds_etl_spark.functions.cleaning import array_lit
+
 
 def exact_quantiles(
     df: DataFrame,
@@ -77,7 +79,7 @@ def exact_quantiles(
         stats.select(
             *g,
             "__n",
-            F.explode(F.array(*[F.lit(float(q)) for q in qs])).alias("__q"),
+            F.explode(array_lit([float(q) for q in qs])).alias("__q"),
         )
         .withColumn(
             "__r",

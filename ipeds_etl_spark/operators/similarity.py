@@ -35,12 +35,12 @@ value-checks recall@k of the refined IVF against brute force.
 
 from __future__ import annotations
 
-import json
 import math
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from ipeds_etl_spark.functions.cleaning import array_lit
 from ipeds_etl_spark.operators.arrowverify import pair_cos_hits_within_buckets
 from ipeds_etl_spark.operators.dedup import (
     MAX_BUCKET_SIZE_DEFAULT,
@@ -82,18 +82,6 @@ def suggest_n_centroids(
     return min(max_centroids, math.ceil(corpus_count / target_bucket_size))
 
 
-def _matrix_lit(rows: list[list[float]]) -> Column:
-    """A nested-array constant (centroid table / plane family) as ONE
-    JSON string literal: a single Py4J call, and Catalyst
-    constant-folds the foldable ``from_json`` into a plain Literal at
-    optimize time (verified in the optimized plan) — so runtime never
-    parses JSON. The element-wise ``F.lit`` alternative costs ~n×dim
-    Py4J round-trips per expression build (~0.35 s for 8×64, built
-    several times per IVF query). ``json.dumps`` emits shortest-repr
-    doubles, which Jackson parses back bit-exactly."""
-    return F.from_json(F.lit(json.dumps(rows)), "array<array<double>>")
-
-
 def argmin_sqdist_int(v: Column, cents: list[tuple[int, list[int]]]) -> Column:
     """``struct(dist, cid)`` of the nearest INTEGER centroid by squared
     euclidean distance, ties to the LOWER cid — the Lloyd assignment
@@ -102,17 +90,12 @@ def argmin_sqdist_int(v: Column, cents: list[tuple[int, list[int]]]) -> Column:
     re-ran Catalyst analysis + codegen over an O(k·dim)-node tree for
     every Lloyd round — 5.2 s of the 5.5 s sf0.1 emb_kmeans_lloyd run
     was driver-side plan work, 0.3 s execution). The matrix rides as
-    one constant-folded ``from_json`` literal (`_matrix_lit` trick);
-    distances, fold order, and the (dist, cid) struct-min tie-break
-    are bit-identical to the unrolled form (integer adds are
-    associative; cid stays INT)."""
-    m = F.from_json(
-        F.lit(json.dumps([[int(x) for x in c] for _, c in cents])),
-        "array<array<bigint>>",
-    )
-    cids = F.from_json(
-        F.lit(json.dumps([int(cid) for cid, _ in cents])), "array<int>"
-    )
+    one constant-folded literal (``array_lit``); distances, fold
+    order, and the (dist, cid) struct-min tie-break are bit-identical
+    to the unrolled form (integer adds are associative; cid stays
+    INT)."""
+    m = array_lit([[int(x) for x in c] for _, c in cents]).cast("array<array<bigint>>")
+    cids = array_lit([int(cid) for cid, _ in cents])
     def one(i: Column) -> Column:
         cw = F.element_at(m, i.cast("int"))
         d = F.aggregate(
@@ -147,7 +130,7 @@ def cosine(a: Column, b: Column) -> Column:
 
 def eval_max_cosine(vec: Column, eval_vecs: list[list[float]]) -> Column:
     """Max cosine of ``vec`` against a FROZEN eval matrix embedded as
-    one plan-literal (`_matrix_lit`) — the semantic-decontamination
+    one plan-literal (``array_lit``) — the semantic-decontamination
     primitive shared by the batch gate (`emb_semantic_decontaminate`)
     and its incremental crawl-over-crawl twin.
 
@@ -160,8 +143,8 @@ def eval_max_cosine(vec: Column, eval_vecs: list[list[float]]) -> Column:
     Same norm hoist as ``_scored_centroids`` (opt r13): eval-row norms
     precomputed driver-side, ``norm(vec)`` bound once per row — the
     per-eval-row body is one dot fold; values bit-identical."""
-    m = _matrix_lit([[float(v) for v in row] for row in eval_vecs])
-    nrs = F.lit([_pynorm([float(v) for v in row]) for row in eval_vecs])
+    m = array_lit([[float(v) for v in row] for row in eval_vecs])
+    nrs = array_lit([_pynorm([float(v) for v in row]) for row in eval_vecs])
     return F.array_max(
         F.element_at(
             F.transform(
@@ -219,9 +202,9 @@ def _scored_centroids(
     1-element transform so the per-centroid body is a single dot fold
     instead of three. The score stays ``dot / (nv * ncw)`` — the same
     operands and op order as ``cosine``."""
-    cids = F.lit([int(cid) for cid, _ in cent_rows])
-    cvecs = _matrix_lit([[float(v) for v in vec_] for _, vec_ in cent_rows])
-    ncws = F.lit([_pynorm(vec_) for _, vec_ in cent_rows])
+    cids = array_lit([int(cid) for cid, _ in cent_rows])
+    cvecs = array_lit([[float(v) for v in vec_] for _, vec_ in cent_rows])
+    ncws = array_lit([_pynorm(vec_) for _, vec_ in cent_rows])
     idx = F.sequence(F.lit(1), F.lit(len(cent_rows)))
     return F.element_at(
         F.transform(
@@ -551,7 +534,7 @@ def rp_lsh_bucket(vec_col: Column, planes: list[list[float]]) -> Column:
     n_planes × dim individual ``lit`` calls — same projections, same
     bucket ids, a fraction of the Catalyst tree. ``pow(2, p)`` is exact
     in double for p ≤ 23 (``suggest_rp_planes`` caps at 24 planes)."""
-    planes_lit = _matrix_lit([[float(v) for v in p] for p in planes])
+    planes_lit = array_lit([[float(v) for v in p] for p in planes])
     bits = F.transform(
         F.sequence(F.lit(0), F.lit(len(planes) - 1)),
         lambda p: F.when(
@@ -825,8 +808,8 @@ def adc_cosine(
     Expects ``{code_prefix}{s}`` columns in scope (see ``pq_encode``)."""
     partial_dots, partial_n2 = [], []
     for s, book in enumerate(books):
-        cids = F.lit([int(cid) for cid, _ in book])
-        cvecs = _matrix_lit([[float(v) for v in vec_] for _, vec_ in book])
+        cids = array_lit([int(cid) for cid, _ in book])
+        cvecs = array_lit([[float(v) for v in vec_] for _, vec_ in book])
         pos = F.array_position(cids, F.col(f"{code_prefix}{s}")).cast("int")
         cw = F.element_at(cvecs, pos)
         qsub = F.slice(qvec, s * sub_dim + 1, sub_dim)
@@ -1096,8 +1079,8 @@ def sq8_encode(
     clamp runs in integer domain after one pinned IEEE chain, so codes
     are engine-exact (house rule: never CAST an unfloored double to
     INT — DuckDB rounds where Spark truncates)."""
-    mns = F.lit([float(mn) for mn, _ in bounds])
-    mxs = F.lit([float(mx) for _, mx in bounds])
+    mns = array_lit([float(mn) for mn, _ in bounds])
+    mxs = array_lit([float(mx) for _, mx in bounds])
     idx = F.sequence(F.lit(1), F.lit(len(bounds)))
     codes = F.transform(
         idx,
@@ -1131,8 +1114,8 @@ def sq8_dequant(codes: Column, bounds: list[tuple[float, float]]) -> Column:
     """Reconstructed vector from SQ8 codes: ``mn + (((c + 0.5) ·
     (mx − mn)) / 256)`` per dimension — the bin-center dequantization,
     op order pinned to the oracle."""
-    mns = F.lit([float(mn) for mn, _ in bounds])
-    mxs = F.lit([float(mx) for _, mx in bounds])
+    mns = array_lit([float(mn) for mn, _ in bounds])
+    mxs = array_lit([float(mx) for _, mx in bounds])
     return F.transform(
         codes,
         lambda c, i: F.element_at(mns, (i + 1).cast("int"))
@@ -1200,8 +1183,8 @@ def residual_frame(
     Map-only: assignment argmax + one exact-IEEE subtraction per
     component against the plan-literal centroid, no join."""
     assigned = assign_centroids(corpus, id_col, vec_col, None, cent_rows=cent_rows)
-    cids = F.lit([int(cid) for cid, _ in cent_rows])
-    cvecs = _matrix_lit([[float(v) for v in vec_] for _, vec_ in cent_rows])
+    cids = array_lit([int(cid) for cid, _ in cent_rows])
+    cvecs = array_lit([[float(v) for v in vec_] for _, vec_ in cent_rows])
     cvec = F.element_at(
         cvecs, F.array_position(cids, F.col("centroid_id")).cast("int")
     )
@@ -1256,15 +1239,15 @@ def ivfpq_residual_topk(
     pairs = F.broadcast(q).join(
         enc.withColumnRenamed(id_col, "neighbor_id"), "centroid_id"
     ).filter(F.col("query_id") != F.col("neighbor_id"))
-    coarse_cids = F.lit([int(cid) for cid, _ in cent_rows])
-    coarse_vecs = _matrix_lit([[float(v) for v in vec_] for _, vec_ in cent_rows])
+    coarse_cids = array_lit([int(cid) for cid, _ in cent_rows])
+    coarse_vecs = array_lit([[float(v) for v in vec_] for _, vec_ in cent_rows])
     cvec = F.element_at(
         coarse_vecs, F.array_position(coarse_cids, F.col("centroid_id")).cast("int")
     )
     partial_dots, partial_n2 = [], []
     for s, book in enumerate(books):
-        bcids = F.lit([int(cid) for cid, _ in book])
-        bvecs = _matrix_lit([[float(v) for v in vec_] for _, vec_ in book])
+        bcids = array_lit([int(cid) for cid, _ in book])
+        bvecs = array_lit([[float(v) for v in vec_] for _, vec_ in book])
         cw = F.element_at(
             bvecs, F.array_position(bcids, F.col(f"code_{s}")).cast("int")
         )

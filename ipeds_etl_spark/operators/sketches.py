@@ -21,6 +21,7 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
+from ipeds_etl_spark.functions.cleaning import array_lit
 from ipeds_etl_spark.functions.hashing import PARITY_HEX_DIGITS, parity_hash
 
 #: hash space size for normalization (40-bit parity hash)
@@ -173,7 +174,7 @@ def hll_register_pow(register: Column) -> Column:
     a literal shift amount, and libm ``pow`` is avoided on principle).
     Every entry is exactly representable, so this equals the oracle's
     ``1.0 / (1::BIGINT << r)`` bit-for-bit."""
-    table = F.array(*[F.lit(float(2.0 ** -i)) for i in range(HLL_REST_BITS + 2)])
+    table = array_lit([float(2.0 ** -i) for i in range(HLL_REST_BITS + 2)])
     return F.element_at(table, (register + 1).cast("int"))
 
 

@@ -957,7 +957,7 @@ def q_docs_snm_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     ranked = global_row_number(d, ["k", "doc_id"], "rn")
     right = ranked.withColumn(
-        "d", F.explode(F.array(*[F.lit(i) for i in range(1, _SNM_W + 1)]))
+        "d", F.explode(F.sequence(F.lit(1), F.lit(_SNM_W)))
     ).withColumn("rn_left", F.col("rn") - F.col("d"))
     a, b = ranked.alias("a"), right.alias("b")
     inter = F.size(F.array_intersect(F.col("a.s"), F.col("b.s")))
@@ -1372,7 +1372,7 @@ def q_dedup_blocking_union_recall(spark: SparkSession, sf_dir: str) -> DataFrame
         "rn",
     )
     right = ranked.withColumn(
-        "dd", F.explode(F.array(*[F.lit(i) for i in range(1, _SNM_W + 1)]))
+        "dd", F.explode(F.sequence(F.lit(1), F.lit(_SNM_W)))
     ).withColumn("rn_left", F.col("rn") - F.col("dd"))
     snm = (
         ranked.alias("a")

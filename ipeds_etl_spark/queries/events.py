@@ -1172,7 +1172,7 @@ def q_events_cms_user_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     (``streaming/stateful.py::heavy_hitters_stream``): MG bounds state
     by keeping few keys, CMS by hashing all keys into fixed counters."""
     uid = F.col("user_id").cast("string")
-    rows_ = F.explode(F.array(*[F.lit(i) for i in range(SK.CMS_D)])).alias("i")
+    rows_ = F.explode(F.sequence(F.lit(0), F.lit(SK.CMS_D - 1))).alias("i")
     e = load_table(spark, sf_dir, "events")
     sk = (
         e.select("user_id", rows_)

@@ -10,6 +10,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ipeds_etl_spark.functions import text as TX
+from ipeds_etl_spark.functions.cleaning import array_lit
 from ipeds_etl_spark.functions.hashing import parity_hash
 from ipeds_etl_spark.operators import bpe as BPE
 from ipeds_etl_spark.operators.indexes import VOCAB_MAX_LEN, VOCAB_N_GRAMS, frozen_vocab
@@ -1006,7 +1007,7 @@ def q_docs_keyword_tagging(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     out = None
     for tag, words in _TAXONOMY:
-        lit_words = F.array(*[F.lit(w) for w in words])
+        lit_words = array_lit(words)
         hits = F.size(
             F.filter(F.col("w"), lambda t: F.array_contains(lit_words, t))
         )
@@ -1969,18 +1970,9 @@ def q_docs_vocab8k_apply_fertility(
     literal vocabulary is no longer a ~6 KB constant — this query runs
     the identical fertility pipeline against the ~18.3k-unit composite
     vocabulary (``_vocab_8k``) and is the registered proof the
-    longest-match fold survives production vocab scale.
-
-    Literal-vs-broadcast decision (measured at sf1, 3-run medians, one
-    process — see SCALE.md "Vocab apply at production vocab size"):
-    the element-wise ``F.lit(list)`` spelling collapses at this size
-    (11.8 s median, 44.6 s first sample — an 18k-child array
-    expression bloats analysis + per-task serialization); rewriting
-    the literal as ONE constant-folded ``from_json`` string (the
-    ``_matrix_lit`` trick) wins at 2.2 s, with the broadcast 1-row
-    DataFrame close behind at 2.9 s. The json-literal is the one
-    spelling ``segment_longest_match`` keeps (no extra join in the
-    plan)."""
+    longest-match fold survives production vocab scale. The
+    vocabulary enters the plan as one constant
+    (``cleaning.array_lit``; see ``BPE.segment_longest_match``)."""
     d = load_table(spark, sf_dir, "documents")
     vocab = _vocab_8k(spark, sf_dir)
     words = BPE.word_frequencies(d, "text")

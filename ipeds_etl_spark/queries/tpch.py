@@ -9,6 +9,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ipeds_etl_spark.functions.cleaning import array_lit
 from ipeds_etl_spark.operators import dedup as DD
 from ipeds_etl_spark.operators.indexes import basket_items
 from ipeds_etl_spark.plans.views import exact_sum
@@ -3727,7 +3728,7 @@ def q_lineitem_histogram_quantile_error(spark: SparkSession, sf_dir: str) -> Dat
     )
     tgt = s.select(
         "n",
-        F.explode(F.array(*[F.lit(float(q)) for q in _HQ_QS])).alias("q"),
+        F.explode(array_lit([float(q) for q in _HQ_QS])).alias("q"),
     ).select(
         "q",
         F.greatest(

@@ -10,6 +10,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ipeds_etl_spark.functions.cleaning import array_lit
 from ipeds_etl_spark.operators import similarity as SIM
 from ipeds_etl_spark.operators.indexes import (
     PQ_ITERS,
@@ -162,6 +163,33 @@ def q_emb_near_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
 _IVF_PAIR_COS = _cos_sql("q.embedding", "n.embedding")
 
 
+def _recall_at_5(brute: DataFrame, approx: DataFrame) -> DataFrame:
+    """``(query_id, k, n_hit, recall_at_5)``: per query, how many of
+    the exact top-5 neighbors (``brute``) an approximate index's top-5
+    (``approx``) also returns — the recall gate of every ANN index."""
+    hits = brute.alias("b").join(
+        approx.alias("a"),
+        on=[
+            F.col("b.query_id") == F.col("a.query_id"),
+            F.col("b.neighbor_id") == F.col("a.neighbor_id"),
+        ],
+        how="left",
+    )
+    return (
+        hits.groupBy(F.col("b.query_id").alias("query_id"))
+        .agg(
+            F.count("*").alias("k"),
+            F.count(F.col("a.neighbor_id")).alias("n_hit"),
+        )
+        .select(
+            "query_id",
+            "k",
+            "n_hit",
+            (F.col("n_hit").cast("double") / F.col("k")).alias("recall_at_5"),
+        )
+    )
+
+
 @_register(
     "emb_ivf_recall",
     f"""
@@ -205,27 +233,7 @@ def q_emb_ivf_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         e, queries, "vec_id", "embedding", k=5, n_centroids=8, n_probe=2,
         cent_rows=ivf_codebook(spark, sf_dir),
     )
-    hits = brute.alias("b").join(
-        ivf.alias("i"),
-        on=[
-            F.col("b.query_id") == F.col("i.query_id"),
-            F.col("b.neighbor_id") == F.col("i.neighbor_id"),
-        ],
-        how="left",
-    )
-    return (
-        hits.groupBy(F.col("b.query_id").alias("query_id"))
-        .agg(
-            F.count("*").alias("k"),
-            F.count(F.col("i.neighbor_id")).alias("n_hit"),
-        )
-        .select(
-            "query_id",
-            "k",
-            "n_hit",
-            (F.col("n_hit").cast("double") / F.col("k")).alias("recall_at_5"),
-        )
-    )
+    return _recall_at_5(brute, ivf)
 
 
 def _rp_oracle_sql() -> str:
@@ -613,27 +621,7 @@ def q_emb_pq_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         e, queries, "vec_id", "embedding",
         pq_codebook(spark, sf_dir), k=5, sub_dim=PQ_SUB_DIM,
     )
-    hits = brute.alias("b").join(
-        pq.alias("p"),
-        on=[
-            F.col("b.query_id") == F.col("p.query_id"),
-            F.col("b.neighbor_id") == F.col("p.neighbor_id"),
-        ],
-        how="left",
-    )
-    return (
-        hits.groupBy(F.col("b.query_id").alias("query_id"))
-        .agg(
-            F.count("*").alias("k"),
-            F.count(F.col("p.neighbor_id")).alias("n_hit"),
-        )
-        .select(
-            "query_id",
-            "k",
-            "n_hit",
-            (F.col("n_hit").cast("double") / F.col("k")).alias("recall_at_5"),
-        )
-    )
+    return _recall_at_5(brute, pq)
 
 
 @_register(
@@ -684,27 +672,7 @@ def q_emb_pq_rerank_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         pq_codebook(spark, sf_dir),
         k=5, n_short=_PQ_SHORTLIST, sub_dim=PQ_SUB_DIM,
     )
-    hits = brute.alias("b").join(
-        rr.alias("r"),
-        on=[
-            F.col("b.query_id") == F.col("r.query_id"),
-            F.col("b.neighbor_id") == F.col("r.neighbor_id"),
-        ],
-        how="left",
-    )
-    return (
-        hits.groupBy(F.col("b.query_id").alias("query_id"))
-        .agg(
-            F.count("*").alias("k"),
-            F.count(F.col("r.neighbor_id")).alias("n_hit"),
-        )
-        .select(
-            "query_id",
-            "k",
-            "n_hit",
-            (F.col("n_hit").cast("double") / F.col("k")).alias("recall_at_5"),
-        )
-    )
+    return _recall_at_5(brute, rr)
 
 
 @_register(
@@ -1674,15 +1642,15 @@ def q_emb_pq_distortion(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: map-only over the corpus scan — the codebooks ride as plan
     literals (no join, no shuffle); output one row per vector."""
     from ipeds_etl_spark.operators import similarity as SIM
-    from ipeds_etl_spark.operators.similarity import _matrix_lit, dot
+    from ipeds_etl_spark.operators.similarity import dot
 
     e = load_table(spark, sf_dir, "embeddings")
     books = pq_codebook(spark, sf_dir)
     cols = [F.col("vec_id")]
     errs = []
     for s, book in enumerate(books):
-        cids = F.lit([int(cid) for cid, _ in book])
-        cvecs = _matrix_lit([[float(v) for v in vec_] for _, vec_ in book])
+        cids = array_lit([int(cid) for cid, _ in book])
+        cvecs = array_lit([[float(v) for v in vec_] for _, vec_ in book])
         sub = F.slice(F.col("embedding"), s * PQ_SUB_DIM + 1, PQ_SUB_DIM)
         scored = SIM._scored_centroids(sub, book)
         code = F.array_max(scored)["cid"]
@@ -2725,27 +2693,7 @@ def q_emb_ivfpq_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         k=5, n_probe=_IVFPQ_NPROBE, n_short=_IVFPQ_SHORT,
         sub_dim=PQ_SUB_DIM,
     )
-    hits = brute.alias("b").join(
-        pq.alias("p"),
-        on=[
-            F.col("b.query_id") == F.col("p.query_id"),
-            F.col("b.neighbor_id") == F.col("p.neighbor_id"),
-        ],
-        how="left",
-    )
-    return (
-        hits.groupBy(F.col("b.query_id").alias("query_id"))
-        .agg(
-            F.count("*").alias("k"),
-            F.count(F.col("p.neighbor_id")).alias("n_hit"),
-        )
-        .select(
-            "query_id",
-            "k",
-            "n_hit",
-            (F.col("n_hit").cast("double") / F.col("k")).alias("recall_at_5"),
-        )
-    )
+    return _recall_at_5(brute, pq)
 
 
 # ===========================================================================
@@ -2837,27 +2785,7 @@ def q_emb_ivfpq_filtered_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         k=5, n_probe=_IVFPQ_NPROBE, n_short=_IVFPQ_SHORT,
         sub_dim=PQ_SUB_DIM,
     )
-    hits = brute.alias("b").join(
-        pq.alias("p"),
-        on=[
-            F.col("b.query_id") == F.col("p.query_id"),
-            F.col("b.neighbor_id") == F.col("p.neighbor_id"),
-        ],
-        how="left",
-    )
-    return (
-        hits.groupBy(F.col("b.query_id").alias("query_id"))
-        .agg(
-            F.count("*").alias("k"),
-            F.count(F.col("p.neighbor_id")).alias("n_hit"),
-        )
-        .select(
-            "query_id",
-            "k",
-            "n_hit",
-            (F.col("n_hit").cast("double") / F.col("k")).alias("recall_at_5"),
-        )
-    )
+    return _recall_at_5(brute, pq)
 
 
 # ===========================================================================
@@ -3102,27 +3030,7 @@ def q_emb_sq8_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     sq = SIM.sq8_topk(
         e, queries, "vec_id", "embedding", sq8_bounds(spark, sf_dir), k=5
     )
-    hits = brute.alias("b").join(
-        sq.alias("p"),
-        on=[
-            F.col("b.query_id") == F.col("p.query_id"),
-            F.col("b.neighbor_id") == F.col("p.neighbor_id"),
-        ],
-        how="left",
-    )
-    return (
-        hits.groupBy(F.col("b.query_id").alias("query_id"))
-        .agg(
-            F.count("*").alias("k"),
-            F.count(F.col("p.neighbor_id")).alias("n_hit"),
-        )
-        .select(
-            "query_id",
-            "k",
-            "n_hit",
-            (F.col("n_hit").cast("double") / F.col("k")).alias("recall_at_5"),
-        )
-    )
+    return _recall_at_5(brute, sq)
 
 
 # ===========================================================================
@@ -3278,27 +3186,7 @@ def q_emb_ivfpq_residual_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         k=5, n_probe=_IVFPQ_NPROBE, n_short=_IVFPQ_SHORT,
         sub_dim=PQ_SUB_DIM,
     )
-    hits = brute.alias("b").join(
-        pq.alias("p"),
-        on=[
-            F.col("b.query_id") == F.col("p.query_id"),
-            F.col("b.neighbor_id") == F.col("p.neighbor_id"),
-        ],
-        how="left",
-    )
-    return (
-        hits.groupBy(F.col("b.query_id").alias("query_id"))
-        .agg(
-            F.count("*").alias("k"),
-            F.count(F.col("p.neighbor_id")).alias("n_hit"),
-        )
-        .select(
-            "query_id",
-            "k",
-            "n_hit",
-            (F.col("n_hit").cast("double") / F.col("k")).alias("recall_at_5"),
-        )
-    )
+    return _recall_at_5(brute, pq)
 
 
 # ===========================================================================

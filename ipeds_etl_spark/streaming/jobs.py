@@ -29,6 +29,8 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ipeds_etl_spark import fsutil
+
 #: chi-square critical value at p = 0.05, df = 1, scaled by 10^6 —
 #: the standard SRM alarm threshold (Fabijan et al. 2019). For a
 #: 50/50 split, chi² collapses exactly to (n_a - n_b)² / n, so the
@@ -357,14 +359,12 @@ def streaming_dedup_ingest(
     def ingest_batch(batch_df: DataFrame, batch_id: int) -> None:
         batch_df = batch_df.select(id_col, text_col, "lang", "source", "n_chars")
         batch_df = intra_batch_dedup(batch_df, text_col, id_col)
-        try:
-            corpus = spark.read.parquet(corpus_path)
-            have_corpus = True
-        except Exception:
-            have_corpus = False
-        if not have_corpus:
+        # probe, don't catch: a failed corpus read must fail the batch,
+        # not count as "no corpus yet" and overwrite the kept documents
+        if not fsutil.table_exists(spark, corpus_path):
             batch_df.write.mode("overwrite").parquet(corpus_path)
             return
+        corpus = spark.read.parquet(corpus_path)
         both = corpus.withColumn("__ex", F.lit(True)).unionByName(
             batch_df.withColumn("__ex", F.lit(False))
         )

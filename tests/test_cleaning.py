@@ -4,14 +4,19 @@ Mirrors the documented intent of the reference's planned
 ``test_casting.py`` (reference architecture.md:134-136,172): sentinel
 handling -1/-2/-3, whitespace, empty strings, malformed casts, and the
 ``"12.5"``-into-int corner, plus coalesce_pick fallback ordering and
-stable-hash determinism.
+stable-hash determinism. ``array_lit`` is checked against ``F.lit`` of
+the same list: same values bit for bit, same element types.
 """
 
 from __future__ import annotations
 
+import struct
+
+import pytest
 from pyspark.sql import functions as F
 
 from ipeds_etl_spark.functions.cleaning import (
+    array_lit,
     clean_sentinels,
     coalesce_pick,
     safe_double,
@@ -110,3 +115,67 @@ def test_stable_hash_changes_on_content(spark):
     df = spark.createDataFrame([(1, "x"), (1, "y")], "a int, b string")
     hs = [r["h"] for r in df.select(stable_hash("a", "b", names=["a", "b"]).alias("h")).collect()]
     assert hs[0] != hs[1]
+
+
+def _py4j_commands(spark, monkeypatch, build) -> int:
+    client = spark.sparkContext._gateway._gateway_client  # noqa: SLF001
+    send, sent = client.send_command, []
+
+    def counting(*args, **kwargs):
+        sent.append(1)
+        return send(*args, **kwargs)
+
+    with monkeypatch.context() as m:
+        m.setattr(client, "send_command", counting)
+        build()
+    return len(sent)
+
+
+def test_array_lit_is_one_folded_constant_whatever_its_length(spark, monkeypatch):
+    small, large = [0.5] * 10, [0.5] * 10_000
+    assert _py4j_commands(spark, monkeypatch, lambda: array_lit(small)) == _py4j_commands(
+        spark, monkeypatch, lambda: array_lit(large)
+    )
+    df = spark.range(1).select(array_lit(large).alias("v"))
+    assert "from_json" not in df._jdf.queryExecution().optimizedPlan().toString()  # noqa: SLF001
+    assert df.first()["v"] == large
+
+
+def _bits(v):
+    if isinstance(v, list):
+        return [_bits(x) for x in v]
+    return struct.pack("<d", v) if isinstance(v, float) else v
+
+
+@pytest.mark.parametrize(
+    "values",
+    [
+        [1 / 3, 1e-300, -1e-300, 5e-324, -2.5, -0.0, 0.1, 1.7976931348623157e308],
+        [float(2.0**-i) for i in range(36)],  # sketches.hll_register_pow's table
+        [3, 2**40, -(2**40), 2**63 - 1],
+        [1, 2.5],
+        ["é", "日本語", "😀", 'quote " and \\ backslash'],
+        [[1 / 3, -2.0], [1e-300, 4.5]],
+    ],
+)
+def test_array_lit_matches_f_lit(spark, values):
+    got = spark.range(1).select(array_lit(values).alias("v"), F.lit(values).alias("w"))
+    got_t, want_t = (f.dataType.simpleString() for f in got.schema.fields)
+    assert got_t == want_t
+    row = got.first()
+    assert _bits(row["v"]) == _bits(row["w"])
+
+
+def test_array_lit_types_like_f_lit(spark):
+    for values in ([1, 2], [1, 2**31], [-(2**31) - 1], [1, 2.0], ["a"], [[1], [2**40]]):
+        cols = spark.range(1).select(array_lit(values), F.lit(values)).schema.fields
+        assert cols[0].dataType.simpleString() == cols[1].dataType.simpleString(), values
+    # past 64 bits: the lenient JSON parse would read NULL
+    with pytest.raises(Exception, match="MALFORMED_RECORD"):
+        spark.range(1).select(array_lit([2**63])).collect()
+    with pytest.raises(TypeError):
+        array_lit([True])
+    with pytest.raises(ValueError):
+        array_lit([])
+    with pytest.raises(ValueError):
+        array_lit([[1], [[2]]])

@@ -13,6 +13,11 @@ and nothing outside the query layer imports the query layer.
 The fetcher test pins one HTTP fetcher: inside the package, only
 ``sources/http_ingest.py`` calls ``urlopen`` or holds a retry/backoff
 loop.
+
+The literal test pins one array-constant builder: inside the package,
+only ``functions.cleaning.array_lit`` turns a Python list into an array
+expression (no ``lit`` of a list, no ``array(*[lit(...) ...])``, no
+``from_json(lit(json.dumps(...)))`` of its own).
 """
 
 from __future__ import annotations
@@ -171,3 +176,56 @@ def test_one_fetcher_owns_urlopen_and_the_retry_loop():
     fetcher = "ipeds_etl_spark.sources.http_ingest"
     assert [u.split(":")[0] for u in urlopens] == [fetcher], urlopens
     assert [r.split(":")[0] for r in retry_loops] == [fetcher], retry_loops
+
+
+def _calls(node: ast.AST, name: str) -> bool:
+    return any(isinstance(n, ast.Call) and _call_name(n) == name for n in ast.walk(node))
+
+
+def _is_lit(node: ast.AST) -> bool:
+    """``lit(x)``, possibly cast or aliased (``lit(x).cast("long")``)."""
+    while (
+        isinstance(node, ast.Call)
+        and isinstance(node.func, ast.Attribute)
+        and node.func.attr in ("cast", "alias")
+    ):
+        node = node.func.value
+    return isinstance(node, ast.Call) and _call_name(node) == "lit"
+
+
+def _lits_spread(arg: ast.AST) -> bool:
+    """``*[lit(x) for x in xs]``."""
+    return (
+        isinstance(arg, ast.Starred)
+        and isinstance(arg.value, (ast.ListComp, ast.GeneratorExp))
+        and _is_lit(arg.value.elt)
+    )
+
+
+def _array_literal_builders() -> list[str]:
+    """Python-list-to-array-expression spellings under the package, as
+    ``module:line``: ``lit`` of a list, ``array`` over a spread of
+    ``lit`` calls, and ``from_json`` of a ``lit`` of ``json.dumps``."""
+    found: list[str] = []
+    for path in sorted(PKG.rglob("*.py")):
+        me = _module_name(path)
+        for node in ast.walk(ast.parse(path.read_text())):
+            if not isinstance(node, ast.Call) or not node.args:
+                continue
+            name, first = _call_name(node), node.args[0]
+            lit_of_list = name == "lit" and isinstance(first, (ast.List, ast.ListComp, ast.Tuple))
+            array_of_lits = name == "array" and any(_lits_spread(a) for a in node.args)
+            json_lit = (
+                name == "from_json"
+                and isinstance(first, ast.Call)
+                and _call_name(first) == "lit"
+                and _calls(first, "dumps")
+            )
+            if lit_of_list or array_of_lits or json_lit:
+                found.append(f"{me}:{node.lineno}")
+    return found
+
+
+def test_one_builder_makes_array_literals():
+    sites = _array_literal_builders()
+    assert [s.split(":")[0] for s in sites] == ["ipeds_etl_spark.functions.cleaning"], sites

@@ -895,6 +895,42 @@ def test_streaming_dedup_ingest_matches_sequential_batches(spark, tmp_path):
     assert kept_ids == expect_b1 | expect_b2
 
 
+def test_streaming_dedup_ingest_keeps_corpus_when_its_read_fails(
+    spark, tmp_path, monkeypatch
+):
+    """A failed read of the kept corpus fails the micro-batch. Counted
+    as "no corpus yet", it would overwrite every kept document with
+    the batch."""
+    from pyspark.sql.readwriter import DataFrameReader
+
+    docs = load_table(spark, SF, "documents")
+    ids = [r.doc_id for r in docs.select("doc_id").orderBy("doc_id").limit(20).collect()]
+    corpus_path = str(tmp_path / "kept_corpus")
+    docs.filter(F.col("doc_id").isin(ids[:10])).select(
+        "doc_id", "text", "lang", "source", "n_chars"
+    ).write.parquet(corpus_path)
+    src_dir = str(tmp_path / "doc_stream")
+    docs.filter(F.col("doc_id").isin(ids[10:])).coalesce(1).write.parquet(src_dir)
+
+    parquet = DataFrameReader.parquet
+    failures = []
+
+    def read_fails_once(self, *paths, **options):
+        if corpus_path in paths and not failures:
+            failures.append(paths)
+            raise OSError("transient read failure")
+        return parquet(self, *paths, **options)
+
+    monkeypatch.setattr(DataFrameReader, "parquet", read_fails_once)
+    stream = spark.readStream.schema(docs.schema).parquet(src_dir)
+    query = jobs.streaming_dedup_ingest(stream, corpus_path, str(tmp_path / "ckpt"))
+    with pytest.raises(Exception, match="transient read failure"):
+        query.awaitTermination()
+    assert failures
+    kept = {r.doc_id for r in spark.read.parquet(corpus_path).collect()}
+    assert kept == set(ids[:10])
+
+
 def test_srm_stream_matches_batch(spark, stream_dir):
     """The streaming SRM monitor's final complete-mode table must equal
     the batch wave-12 query bit-for-bit (same hash arms, same integer
