@@ -2,8 +2,12 @@
 
 Some artifacts are deterministic functions of a corpus version and are
 consumed by many queries: loaded table handles, the MinHash-LSH
-candidate pairs, the basket items, IVF/PQ/residual codebooks, SQ8
-bounds and the frozen tokenizer vocabulary. Each
+candidate pairs, the connected-component labels of that pair graph
+(read by ``dedup_components``, ``docs_dedup_resolution``,
+``docs_golden_record``, ``docs_dedup_survivorship`` and
+``dedup_bcubed_eval``), the basket items, IVF/PQ/residual codebooks,
+SQ8 bounds and the frozen tokenizer vocabulary (``operators.indexes``
+lists its artifacts and their readers). Each
 is built once per session and corpus version, then reused
 (FAISS-style build-once-query-many; the session-level reuse of built
 intermediates of EDBT 2020's incremental top-k framework). This module

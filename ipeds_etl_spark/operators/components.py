@@ -19,6 +19,15 @@ Kiveris et al. 2014) drops in here if diameters ever grow.
 Determinism: the fixpoint (min reachable id per node) is unique — the
 DuckDB oracle computes the same labels with a recursive CTE and the
 driver value-hash-checks them (CORRECTNESS row ``dedup_components``).
+
+Build-time jobs: both fixpoints run Spark jobs when they are CALLED,
+not when their result is executed. Whether another round is needed is
+a fact of the data, so each round materializes its labels
+(``localCheckpoint``, eager) and probes them for a change before the
+loop decides; the returned frame is the materialized fixpoint. A
+query that labels the ``lsh_doc_pairs`` graph therefore reads the
+memoized ``indexes.lsh_doc_components`` instead of calling
+``connected_components`` itself, so its warm build runs no job.
 """
 
 from __future__ import annotations
@@ -312,6 +321,14 @@ def dedup_clusters(
         comps = connected_components_star(pairs, id_a, id_b)
     else:
         raise ValueError(f"unknown components algorithm: {algorithm!r}")
+    return cluster_verdicts(comps)
+
+
+def cluster_verdicts(comps: DataFrame) -> DataFrame:
+    """``(id, component_id)`` labels → ``(id, component_id,
+    component_size, keep)``: the per-cluster size window and the
+    keep/drop verdict (canonical survivor = min id). Lazy — it runs no
+    job, so a reader of memoized labels keeps it in its own plan."""
     w_size = F.count("*").over(Window.partitionBy("component_id"))
     return comps.select(
         "id",

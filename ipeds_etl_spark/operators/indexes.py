@@ -6,9 +6,18 @@ out from them (same shape as the reference's staged raw→core
 materialization, reference ``architecture.md:50-87``):
 
 * ``lsh_doc_pairs`` — the MinHash-LSH candidate-pair table over the
-  ``documents`` corpus (default geometry), consumed by the dedup
-  verdict, components, graph profile, recall/precision gates,
-  resolution, containment, funnel, survivorship, … (~12 queries).
+  ``documents`` corpus (default geometry), the input of every dedup
+  query that starts from the LSH candidates (the pair listing, its
+  components and graph profile, the recall/precision gates,
+  containment, k-core, LPA, the curation funnel, …).
+* ``lsh_doc_components`` — the connected-component labels of that
+  pair graph, ``(id, component_id)``, read by ``dedup_components``,
+  ``docs_dedup_resolution``, ``docs_golden_record``,
+  ``docs_dedup_survivorship`` and the predicted side of
+  ``dedup_bcubed_eval``. The labels are an iterative fixpoint that
+  runs jobs when it is built; stored once, the five readers' warm
+  builds run none. Each reader keeps its own size window, keep
+  verdict and joins (``components.cluster_verdicts``) in its plan.
 * ``basket_items`` — the distinct ``(l_orderkey, l_partkey)`` basket
   table consumed by the market-basket / association-rules / co-purchase
   graph family.
@@ -32,6 +41,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from ipeds_etl_spark.memostore import corpus_fingerprint, memo
 from ipeds_etl_spark.operators import bpe as BPE
+from ipeds_etl_spark.operators import components as CC
 from ipeds_etl_spark.operators import dedup as DD
 from ipeds_etl_spark.operators import similarity as SIM
 from ipeds_etl_spark.sources.tables import load_table
@@ -50,6 +60,19 @@ def lsh_doc_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         lambda: DD.lsh_candidate_pairs(
             load_table(spark, sf_dir, "documents"), "text", "doc_id"
         ).localCheckpoint(),
+    )
+
+
+def lsh_doc_components(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Memoized component labels ``(id, component_id)`` of the
+    ``lsh_doc_pairs`` graph: ``connected_components`` (min-label
+    fixpoint, component_id = min member id) run once per corpus version
+    and LSH geometry. ``connected_components`` returns its last
+    checkpointed round, so the store holds the labels, not a plan."""
+    return memo(
+        spark,
+        (corpus_fingerprint(sf_dir, "documents"), "lsh_doc_components", DD.N_PERMS, DD.ROWS_PER_BAND),
+        lambda: CC.connected_components(lsh_doc_pairs(spark, sf_dir)),
     )
 
 
@@ -163,6 +186,7 @@ def frozen_vocab(spark: SparkSession, sf_dir: str) -> list[str]:
 #: coarse residuals.
 BUILD_ONCE = (
     ("lsh_doc_pairs", lsh_doc_pairs),
+    ("lsh_doc_components", lsh_doc_components),
     ("basket_items", basket_items),
     ("pq_codebook", pq_codebook),
     ("ivf_codebook", ivf_codebook),

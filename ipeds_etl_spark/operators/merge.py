@@ -15,16 +15,20 @@ Capability parity:
   (``sources.raw.write_pages``); this relational form serves frames
   too large to key on the driver.
 
-Spark has no in-place update; both merges are expressed as
-**anti-join + union**, the scalable relational form:
+Spark has no in-place update. ``upsert_on_pk`` is **anti-join +
+union**, the scalable relational form:
 
     merged = source ∪ (target ⋈anti source on pk)
 
+``upsert_on_hash`` needs the hash verdict on both sides of a key, so it
+is **union + one window over the PK**: each key is decided once, in
+one pass over both inputs.
+
 Scale notes (100 TB):
-* The anti-join shuffles on the PK — unavoidable for a keyed merge —
-  but AQE converts it to a broadcast anti-join automatically whenever
-  the incremental source is small relative to the target, which is the
-  common case (one year loaded into a decade of history).
+* Both merges shuffle on the PK — unavoidable for a keyed merge. AQE
+  converts ``upsert_on_pk``'s anti-join to a broadcast anti-join
+  whenever the incremental source is small relative to the target,
+  which is the common case (one year loaded into a decade of history).
 * ``overwrite_partitions_staged`` narrows the rewrite to the partitions
   the merged frame touches: merging one year never rewrites the other
   years' files (``plans.core_pipeline.write_core`` merges this way).
@@ -38,7 +42,7 @@ from __future__ import annotations
 
 from collections.abc import Sequence
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ipeds_etl_spark import fsutil
@@ -89,35 +93,36 @@ def upsert_on_hash(
     e.g. the original ``ingested_at`` provenance, exactly like the
     reference's ``DO UPDATE ... WHERE t.hash IS DISTINCT FROM s.hash``.
 
-    Failure semantics (ADVICE r13): ``changed_or_new`` is pinned on
-    executor block storage by the lazy ``localCheckpoint`` with lineage
-    truncated, so losing an executor mid-job fails the merge job
-    instead of recomputing the lost partitions. Acceptable here because
-    the write path is staged (txn commit publishes only after success —
-    a failed job is re-run, not partially applied); deployments with
-    expected executor churn should swap in reliable checkpointing
-    (``spark.sparkContext.setCheckpointDir`` + ``checkpoint()``).
-    """
+    One plan, one decision per key: the target (tagged source=false)
+    and the deduped source (tagged true) are unioned and one window
+    over the PK sees both sides of each key. A key's source row is
+    *unchanged* when some target row of the key has a hash null-safe
+    equal to it; otherwise it is *changed* (new keys included). A
+    changed key keeps its source row and drops its target rows, any
+    other key keeps its target rows. A key with a NULL part matches
+    nothing — as in an equi-join — so both sides' rows survive. An
+    anti-join spelling needs its change set twice (the output and the
+    kept-rows probe), which Catalyst does not share; the window reads
+    each input once and the merge runs no job until it is executed."""
     src = _dedup_source(source.select(*target.columns), pk)
-    t = target.alias("t")
-    s = src.alias("s")
-    cond = [F.col(f"t.{k}") == F.col(f"s.{k}") for k in pk]
-    # source rows that are genuinely new or changed. Materialized once
-    # (lazy): the frame feeds BOTH the output union and the kept-rows
-    # anti-probe, and Catalyst does not share the dedup-agg + anti-join
-    # subtree between consumers — unmaterialized, the whole change
-    # detection ran twice (opt r13, guide §2.4/§5: 10 → ~6 exchanges,
-    # source scanned twice not four times).
-    changed_or_new = (
-        s.join(
-            t.select(*pk, hash_col),
-            on=[F.col(f"s.{k}") == F.col(f"t.{k}") for k in pk]
-            + [F.col(f"s.{hash_col}").eqNullSafe(F.col(f"t.{hash_col}"))],
-            how="left_anti",
-        )
-    ).localCheckpoint(eager=False)
-    kept = t.join(changed_or_new.select(*pk), on=list(pk), how="left_anti")
-    return changed_or_new.unionByName(kept.select(*changed_or_new.columns))
+    tagged = target.withColumn("__src", F.lit(False)).unionByName(
+        src.withColumn("__src", F.lit(True))
+    )
+    w = Window.partitionBy(*pk)
+    # the key's source hash, wrapped so a NULL hash differs from "no
+    # source row" (max skips the target rows' NULLs)
+    src_hash = F.max(F.when(F.col("__src"), F.struct(F.col(hash_col).alias("h")))).over(w)
+    has_src = F.col("__sh").isNotNull()
+    same = ~F.col("__src") & has_src & F.col(hash_col).eqNullSafe(F.col("__sh.h"))
+    decided = tagged.withColumn("__sh", src_hash).withColumn(
+        "__changed", has_src & ~F.bool_or(same).over(w)
+    )
+    null_key = F.lit(False)
+    for k in pk:
+        null_key = null_key | F.col(k).isNull()
+    return decided.filter(null_key | (F.col("__src") == F.col("__changed"))).select(
+        *target.columns
+    )
 
 
 def _publish_partition(spark: SparkSession, table_path: str, txid: str, part: str) -> None:

@@ -36,6 +36,7 @@ value-checks recall@k of the refined IVF against brute force.
 from __future__ import annotations
 
 import math
+from typing import NamedTuple
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
@@ -914,29 +915,77 @@ def pq_topk_rerank(
 # ---------------------------------------------------------------------------
 # IVF-PQ: the composed production index (FAISS IndexIVFPQ shape)
 # ---------------------------------------------------------------------------
-def ivfpq_encode(
-    corpus: DataFrame,
+class IvfpqIndex(NamedTuple):
+    """The expressions of an IVF-PQ search that depend only on the
+    codebooks (``ivfpq_index``). A Column is an unresolved expression,
+    so one object can enter any number of plans: a query that searches
+    several corpora or probe depths with one index builds these once."""
+
+    #: the index-table projection ``(id, centroid_id, code_0..)``
+    encode: list[Column]
+    #: every coarse cell id of a query vector, nearest first
+    cells: Column
+    #: the ADC score of ``qvec`` against the ``code_*`` columns
+    adc: Column
+
+
+def ivfpq_index(
     id_col: str,
     vec_col: str,
     cent_rows: list[tuple[int, list[float]]],
     books: list[list[tuple[int, list[float]]]],
     sub_dim: int = 16,
-) -> DataFrame:
-    """The IVF-PQ index table: ``(id, centroid_id, code_0..code_{M-1})``
-    in ONE map-only projection over the corpus scan — coarse cell
-    argmax plus per-subspace codeword argmax, both against plan-literal
-    codebooks (no join, no shuffle). This is the ``add`` step of
-    FAISS's train/add/search split: at 100 TB the persisted index table
-    is 1+M small ints per vector (~8 bytes vs 256 for raw float32),
-    and every search reads ONLY this table plus the probed queries."""
-    best = F.array_max(_scored_centroids(F.col(vec_col), cent_rows))
-    cols = [F.col(id_col), best["cid"].alias("centroid_id")]
+) -> IvfpqIndex:
+    """The codebook side of IVF-PQ search, built once per codebook pair.
+
+    ``encode`` is the ``add`` step of FAISS's train/add/search split:
+    coarse cell argmax plus per-subspace codeword argmax, both against
+    plan-literal codebooks, in ONE map-only projection over the corpus
+    scan (no join, no shuffle). At 100 TB the persisted index table is
+    1+M small ints per vector (~8 bytes vs 256 for raw float32), and
+    every search reads ONLY this table plus the probed queries. The
+    query's cell ranking scores the same centroids, so ``cells`` and
+    the encode's coarse argmax share one expression."""
+    scores = _scored_centroids(F.col(vec_col), cent_rows)
+    encode = [F.col(id_col), F.array_max(scores)["cid"].alias("centroid_id")]
     for s, book in enumerate(books):
         sub = F.slice(F.col(vec_col), s * sub_dim + 1, sub_dim)
-        cols.append(
+        encode.append(
             F.array_max(_scored_centroids(sub, book))["cid"].alias(f"code_{s}")
         )
-    return corpus.select(*cols)
+    cells = F.transform(F.reverse(F.array_sort(scores)), lambda c: c["cid"])
+    return IvfpqIndex(encode, cells, adc_cosine(F.col("qvec"), books, sub_dim=sub_dim))
+
+
+def ivfpq_search(
+    index: IvfpqIndex,
+    enc: DataFrame,
+    corpus: DataFrame,
+    queries: DataFrame,
+    id_col: str,
+    vec_col: str,
+    k: int,
+    n_probe: int,
+    n_short: int,
+) -> DataFrame:
+    """The per-search side of IVF-PQ: ``queries`` probe their
+    ``n_probe`` nearest cells of ``enc`` (``corpus`` projected through
+    ``index.encode``), ADC-score the probed rows, and the shortlist is
+    re-ranked by exact cosine against ``corpus``."""
+    q = queries.select(
+        F.col(id_col).alias("query_id"),
+        F.col(vec_col).alias("qvec"),
+        F.explode(F.slice(index.cells, 1, n_probe)).alias("centroid_id"),
+    )
+    pairs = F.broadcast(q).join(
+        enc.withColumnRenamed(id_col, "neighbor_id"), "centroid_id"
+    ).filter(F.col("query_id") != F.col("neighbor_id"))
+    scored = pairs.select(
+        "query_id", "neighbor_id", index.adc.alias("approx_cos")
+    )
+    return _shortlist_exact_rerank(
+        scored, corpus, queries, id_col, vec_col, k=k, n_short=n_short
+    )
 
 
 def ivfpq_topk(
@@ -963,33 +1012,18 @@ def ivfpq_topk(
     codebooks, so a SQL engine replays training, encoding, probing,
     ADC, and re-rank end-to-end and value-hashes the ranking.
 
-    Plan shape: one corpus map (``ivfpq_encode``), one equi-join on
-    centroid_id (queries exploded to n_probe rows each — the shuffle
-    moves queries to cells, never the corpus), a per-query window over
-    the ADC scores, then an equi-join re-fetch of n_queries × n_short
-    full vectors. Nothing is corpus × queries and no stage reads the
-    embedding column for non-shortlisted rows."""
-    enc = ivfpq_encode(corpus, id_col, vec_col, cent_rows, books, sub_dim=sub_dim)
-    probes = F.slice(
-        F.reverse(F.array_sort(_scored_centroids(F.col(vec_col), cent_rows))),
-        1,
-        n_probe,
-    )
-    q = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("qvec"),
-        F.explode(F.transform(probes, lambda p: p["cid"])).alias("centroid_id"),
-    )
-    pairs = F.broadcast(q).join(
-        enc.withColumnRenamed(id_col, "neighbor_id"), "centroid_id"
-    ).filter(F.col("query_id") != F.col("neighbor_id"))
-    scored = pairs.select(
-        "query_id",
-        "neighbor_id",
-        adc_cosine(F.col("qvec"), books, sub_dim=sub_dim).alias("approx_cos"),
-    )
-    return _shortlist_exact_rerank(
-        scored, corpus, queries, id_col, vec_col, k=k, n_short=n_short
+    Plan shape: one corpus map (``ivfpq_index``'s encode), one
+    equi-join on centroid_id (queries exploded to n_probe rows each —
+    the shuffle moves queries to cells, never the corpus), a per-query
+    window over the ADC scores, then an equi-join re-fetch of
+    n_queries × n_short full vectors. Nothing is corpus × queries and
+    no stage reads the embedding column for non-shortlisted rows. A
+    query running several searches over one index builds
+    ``ivfpq_index`` once and calls ``ivfpq_search`` per search."""
+    index = ivfpq_index(id_col, vec_col, cent_rows, books, sub_dim=sub_dim)
+    return ivfpq_search(
+        index, corpus.select(*index.encode), corpus, queries, id_col, vec_col,
+        k=k, n_probe=n_probe, n_short=n_short,
     )
 
 

@@ -133,7 +133,9 @@ def q_docs_source_quota_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     map-side hash prefilter to ~margin*cap rows/group, exact rank on
     the sliver, with a guaranteed-exact fallback — so the 100 TB plan
     never sorts whole groups; the oracle runs the naive window and the
-    value hashes must agree exactly."""
+    value hashes must agree exactly.
+
+    Build jobs: ``quota_cap`` collects the groups its prefilter undershot."""
     from ipeds_etl_spark.operators.sampling import quota_cap
 
     d = load_table(spark, sf_dir, "documents").select(
@@ -1147,7 +1149,9 @@ def q_docs_quality_label_propagation(spark: SparkSession, sf_dir: str) -> DataFr
     O(n²)); each round is one neighbor-keyed agg (map-combinable sum +
     count riding the edge exchange) and one doc-keyed left join —
     rounds are fixed (2), so total cost is 2 passes over O(edges).
-    The score bootstrap is one token agg."""
+    The score bootstrap is one token agg.
+
+    Build jobs: each propagation round checkpoints its labels."""
     from ipeds_etl_spark.operators import sketches as _  # noqa: F401
 
     d = docs_scan(spark, sf_dir)
@@ -1421,7 +1425,9 @@ def q_docs_curation_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     against the star contraction (SCALE.md "Components race") found
     the two equivalent on this topology (151.7 s against 161.9 s; both
     converge in 2 rounds, since dedup clusters have diameter ≈ 2), and
-    label needs 2 shuffles per round to star's 4."""
+    label needs 2 shuffles per round to star's 4.
+
+    Build jobs: the survivor-pair ``dedup_clusters`` rounds and three checkpoints."""
     from ipeds_etl_spark.functions.hashing import parity_hash
     from ipeds_etl_spark.operators.components import dedup_clusters
 
@@ -1661,7 +1667,9 @@ def q_docs_temperature_mixture(spark: SparkSession, sf_dir: str) -> DataFrame:
     source (the `docs_token_budget_allocation` contract at T = 2).
 
     Scale: one token agg, O(sources) everything after, one rank window
-    over the metadata-sized source list."""
+    over the metadata-sized source list.
+
+    Build jobs: a lazy ``localCheckpoint`` runs its shuffle stage under AQE."""
     d = load_table(spark, sf_dir, "documents")
     # one corpus scan: the isqrt weights, their total, the quotas and
     # the leftover would otherwise each re-run the token aggregate
@@ -1942,7 +1950,9 @@ def q_docs_nucleus_sources(spark: SparkSession, sf_dir: str) -> DataFrame:
     sampling's convention). No division anywhere.
 
     Scale: one token agg (map-combinable), then a window over the
-    O(sources) frame — metadata-sized by definition."""
+    O(sources) frame — metadata-sized by definition.
+
+    Build jobs: a lazy ``localCheckpoint`` runs its shuffle stage under AQE."""
     d = load_table(spark, sf_dir, "documents")
     toks = (
         d.groupBy("source")
@@ -2114,7 +2124,9 @@ def q_docs_stratified_split_exact(spark: SparkSession, sf_dir: str) -> DataFrame
     global number minus the stratum's minimum — recovered from one
     map-combinable per-stratum agg (strata are source × lang —
     metadata-sized, broadcast back). Same output as the window form
-    bit-for-bit; no single-task stage at any stratum skew."""
+    bit-for-bit; no single-task stage at any stratum skew.
+
+    Build jobs: ``global_row_number`` samples ranges and collects their counts."""
     from ipeds_etl_spark.operators.layout import global_row_number
 
     d = load_table(spark, sf_dir, "documents")

@@ -13,7 +13,8 @@ from pyspark.sql import functions as F
 from ipeds_etl_spark.functions import text as TX
 from ipeds_etl_spark.functions.hashing import parity_hash
 from ipeds_etl_spark.operators import dedup as DD
-from ipeds_etl_spark.operators.indexes import lsh_doc_pairs
+from ipeds_etl_spark.operators.components import cluster_verdicts, dedup_clusters
+from ipeds_etl_spark.operators.indexes import lsh_doc_components, lsh_doc_pairs
 from ipeds_etl_spark.queries import _register
 from ipeds_etl_spark.queries.shared import (
     HASH10,
@@ -143,11 +144,12 @@ def q_dedup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     components (min-label propagation, the iterative fixpoint) →
     canonical-survivor verdict per document. The oracle replays the
     fixpoint with a recursive CTE — the unique min-reachable-id
-    labeling makes an iterative Spark algorithm value-hash-checkable."""
-    from ipeds_etl_spark.operators.components import dedup_clusters
-
-    pairs = lsh_doc_pairs(spark, sf_dir)
-    return dedup_clusters(pairs).withColumnRenamed("id", "doc_id")
+    labeling makes an iterative Spark algorithm value-hash-checkable.
+    The labels are the memoized ``lsh_doc_components``; the size window
+    and the verdict are this query's plan."""
+    return cluster_verdicts(lsh_doc_components(spark, sf_dir)).withColumnRenamed(
+        "id", "doc_id"
+    )
 
 
 @_register("dedup_components_star", _DEDUP_COMPONENTS_SQL)
@@ -157,9 +159,9 @@ def q_dedup_components_star(spark: SparkSession, sf_dir: str) -> DataFrame:
     changes (O(log² n) contraction vs O(diameter) propagation), the
     labeling it must produce does not — the driver gate proves the
     two interchangeable, mirroring the window-vs-max_by dual forms of
-    ``latest_per_key``."""
-    from ipeds_etl_spark.operators.components import dedup_clusters
+    ``latest_per_key``.
 
+    Build jobs: the star-contraction rounds checkpoint and probe convergence."""
     pairs = lsh_doc_pairs(spark, sf_dir)
     return dedup_clusters(pairs, algorithm="star").withColumnRenamed(
         "id", "doc_id"
@@ -231,7 +233,9 @@ def q_dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     NULL-source docs are dropped up front — the oracle's
     ``a.source = b.source`` never pairs them — and the division stays
     size-int/size-int, so the emitted double is bit-identical to the
-    oracle's."""
+    oracle's.
+
+    Build jobs: ``jaccard_prefix_pairs`` checkpoints the shingle sets."""
     return DD.jaccard_prefix_pairs(
         docs_scan(spark, sf_dir), "text", "doc_id", k=3, threshold=0.2, block_cols=["source"]
     )
@@ -255,7 +259,9 @@ def q_docs_jaccard_prefix_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     zero-recall-loss alternative to MinHash candidates. The Spark plan
     touches only pairs sharing a globally-rare prefix shingle; the
     oracle brute-forces all O(n²) pairs — identical output proves the
-    prefix filter is lossless."""
+    prefix filter is lossless.
+
+    Build jobs: ``jaccard_prefix_pairs`` checkpoints the shingle sets."""
     from ipeds_etl_spark.operators.dedup import jaccard_prefix_pairs
 
     d = docs_scan(spark, sf_dir)
@@ -409,7 +415,9 @@ def _register_graph_stats():
         """Shape profile of the MinHash-LSH candidate graph (nodes,
         edges, max degree, exact triangles): the pre-clustering sanity
         check that catches boilerplate near-cliques before they become
-        one giant dedup cluster."""
+        one giant dedup cluster.
+
+        Build jobs: ``graph_stats`` checkpoints the edge list."""
         from ipeds_etl_spark.operators.components import graph_stats
 
         pairs = lsh_doc_pairs(spark, sf_dir)
@@ -805,12 +813,11 @@ def q_docs_dedup_resolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     (`dedup_minhash_lsh`, `dedup_components`) and this composition is
     too. Scale = the sum of its parts: map-only signatures, bucket
     shuffle, capped expansion, O(diameter) label rounds, one left
-    join back to the corpus."""
-    from ipeds_etl_spark.operators.components import dedup_clusters
-
+    join back to the corpus. The label rounds are the memoized
+    ``lsh_doc_components``, shared with ``dedup_components``."""
     d = load_table(spark, sf_dir, "documents")
-    pairs = lsh_doc_pairs(spark, sf_dir)
-    clusters = dedup_clusters(pairs)  # (id, component_id, component_size, keep)
+    # (id, component_id, component_size, keep)
+    clusters = cluster_verdicts(lsh_doc_components(spark, sf_dir))
     return (
         d.select("doc_id")
         .join(clusters, d.doc_id == clusters.id, "left")
@@ -946,7 +953,9 @@ def q_docs_snm_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     EQUI-join on rank+offset (offsets 1..w exploded), so no range join
     anywhere; exact token-set Jaccard runs on the O(n·w) pair sliver
     only. The oracle spells the same pipeline with a plain row_number
-    window and a rank-band join."""
+    window and a rank-band join.
+
+    Build jobs: ``global_row_number`` samples ranges and collects their counts."""
     from ipeds_etl_spark.functions import text as TX
     from ipeds_etl_spark.operators.layout import global_row_number
 
@@ -1028,7 +1037,9 @@ def q_dedup_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     joins, edges ``localCheckpoint``ed so lineage stays O(1) (the
     ``connected_components`` discipline); the oracle unrolls the same
     rounds as CTEs. At fixpoint every emitted degree is ≥ k; before
-    it, degrees are degrees-in-e4 (test pins the Python replay)."""
+    it, degrees are degrees-in-e4 (test pins the Python replay).
+
+    Build jobs: each peel round checkpoints the surviving edges."""
     pairs = lsh_doc_pairs(spark, sf_dir)
     edges = pairs.select(
         F.col("id_a").alias("s"), F.col("id_b").alias("d")
@@ -1216,14 +1227,13 @@ def q_docs_golden_record(spark: SparkSession, sf_dir: str) -> DataFrame:
     resolution says which rows survive, survivorship says what the
     surviving record looks like. Shape: the components fixpoint plus
     two cluster-keyed windows and one count aggregate — all on the
-    same cluster_id exchange."""
-    from ipeds_etl_spark.operators.components import dedup_clusters
-
+    same cluster_id exchange. The labels are the memoized
+    ``lsh_doc_components``."""
     d = load_table(spark, sf_dir, "documents")
-    clusters = dedup_clusters(lsh_doc_pairs(spark, sf_dir))
+    labels = lsh_doc_components(spark, sf_dir)
     members = (
         d.select("doc_id", "lang", "n_chars")
-        .join(clusters.select("id", "component_id"), d.doc_id == F.col("id"), "left")
+        .join(labels, d.doc_id == F.col("id"), "left")
         .select(
             "doc_id",
             F.coalesce("component_id", "doc_id").alias("cluster_id"),
@@ -1346,7 +1356,9 @@ def q_dedup_blocking_union_recall(spark: SparkSession, sf_dir: str) -> DataFrame
     oracle-checked. Gold is the O(n²) verifier (oracle scale only, as
     in ``dedup_minhash_recall``); every candidate set is the REAL
     production operator's output, canonicalized (id_a < id_b) and
-    deduped before the left joins so hit counts can't multiply."""
+    deduped before the left joins so hit counts can't multiply.
+
+    Build jobs: ``global_row_number`` samples ranges and collects their counts."""
     from ipeds_etl_spark.functions import text as TX
     from ipeds_etl_spark.operators import dedup as DD
     from ipeds_etl_spark.operators.layout import global_row_number
@@ -1753,11 +1765,11 @@ def q_dedup_bcubed_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     standard exists ONLY at oracle scale, so the query is
     bench-EXCLUDED like the other recall gates. Oracle replays both
     fixpoints with recursive CTEs (the ``dedup_components`` pattern,
-    twice)."""
-    from ipeds_etl_spark.operators.components import dedup_clusters
+    twice). The predicted labels are the memoized
+    ``lsh_doc_components``; the truth labels are not shared.
 
+    Build jobs: the truth side's ``dedup_clusters`` rounds (gold pairs)."""
     d = docs_scan(spark, sf_dir)
-    lsh = lsh_doc_pairs(spark, sf_dir)
 
     sets = d.select("doc_id", TX.tokens(F.col("text")).alias("toks")).select(
         "doc_id", F.array_distinct(TX.shingles_of(F.col("toks"), 3)).alias("sh")
@@ -1773,7 +1785,7 @@ def q_dedup_bcubed_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(F.col("l.doc_id").alias("id_a"), F.col("r.doc_id").alias("id_b"))
     )
 
-    pred = dedup_clusters(lsh).select(
+    pred = lsh_doc_components(spark, sf_dir).select(
         F.col("id").alias("doc_id"), F.col("component_id").alias("pred")
     )
     truth = dedup_clusters(gold).select(
@@ -1903,7 +1915,9 @@ def q_dedup_lpa_communities(spark: SparkSession, sf_dir: str) -> DataFrame:
     single ``max(struct(count, -label))`` aggregate — no window, no
     SinglePartition. Labels are ``localCheckpoint``-ed per round so
     lineage stays O(1) (the components/PageRank contract). The oracle
-    unrolls the same two rounds as CTEs with a row_number argmax."""
+    unrolls the same two rounds as CTEs with a row_number argmax.
+
+    Build jobs: each LPA round checkpoints its labels."""
     pairs = lsh_doc_pairs(spark, sf_dir)
     edges = (
         pairs.selectExpr("id_a AS s", "id_b AS d")
@@ -2322,11 +2336,10 @@ def q_docs_dedup_survivorship(spark: SparkSession, sf_dir: str) -> DataFrame:
     (memoized pairs, O(diameter) label rounds, one left join back);
     the quality score is one map pass; the readout one O(sources)
     agg. Every survivor row carries its verdict from the same pass —
-    no second dedup run."""
-    from ipeds_etl_spark.operators.components import dedup_clusters
-
+    no second dedup run; the labels are the memoized
+    ``lsh_doc_components``."""
     d = load_table(spark, sf_dir, "documents")
-    clusters = dedup_clusters(lsh_doc_pairs(spark, sf_dir))
+    clusters = cluster_verdicts(lsh_doc_components(spark, sf_dir))
     toks = TX.tokens(F.col("text"))
     scored = d.select(
         "doc_id",
@@ -2711,7 +2724,9 @@ def q_docs_cdc_dedup_rewrite(spark: SparkSession, sf_dir: str) -> DataFrame:
     tracks token count, which is exactly what the ExactSubstr pass
     costs at 100 TB (suffix-array spellings do the same work with a
     global sort; the chunk-hash spelling trades their byte-exact span
-    boundaries for exchange-reuse and no global order)."""
+    boundaries for exchange-reuse and no global order).
+
+    Build jobs: the chunk table is checkpointed for its two consumers."""
     d = load_table(spark, sf_dir, "documents")
     # ONE chunker pass: three consumers (first-occurrence agg, keep
     # join, per-doc totals) would each re-run the sha2-per-token CDC

@@ -1367,7 +1367,9 @@ def q_events_funnel_time_quantiles(spark: SparkSession, sf_dir: str) -> DataFram
     then exact discrete quantiles through the two-pass histogram
     operator (no group buffering, DuckDB ``quantile_disc`` semantics).
     One user shuffle for the stage mins, then the quantile operator's
-    two metadata-sized passes."""
+    two metadata-sized passes.
+
+    Build jobs: a lazy ``localCheckpoint`` runs its shuffle stage under AQE."""
     from ipeds_etl_spark.operators.quantile import exact_quantiles
 
     e = load_table(spark, sf_dir, "events")
@@ -1548,7 +1550,9 @@ def q_events_markov_stationary(spark: SparkSession, sf_dir: str) -> DataFrame:
     model needs. The chain state is O(types²) rows after one user
     shuffle; each iteration is a join + map-combinable sum over that
     tiny frame (types, not users — this is the cheap dual of PageRank's
-    node-sized state)."""
+    node-sized state).
+
+    Build jobs: the transition and state frames are checkpointed."""
     e = load_table(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     seq = e.select(
@@ -2157,7 +2161,9 @@ def q_events_growth_accounting(spark: SparkSession, sf_dir: str) -> DataFrame:
     first (one map-combinable distinct — the `events_dau_wau` rule);
     the stage windows run per user over O(weeks-active) rows; churn is
     a self-join on the compacted grid keyed (user, week+1). Output
-    O(weeks × 4)."""
+    O(weeks × 4).
+
+    Build jobs: a lazy ``localCheckpoint`` runs its shuffle stage under AQE."""
     e = load_table(spark, sf_dir, "events")
     uw = (
         e.select(
@@ -2253,7 +2259,9 @@ def q_events_cusum_changepoint(spark: SparkSession, sf_dir: str) -> DataFrame:
     rows; the running sum windows per type over that METADATA-SIZED
     frame (a type's day count, not its event count); the argmax is a
     ``max(struct)`` agg; the before/after means are one more pass over
-    the daily frame joined against the O(types) picks (broadcast)."""
+    the daily frame joined against the O(types) picks (broadcast).
+
+    Build jobs: a lazy ``localCheckpoint`` runs its shuffle stage under AQE."""
     e = load_table(spark, sf_dir, "events")
     # materialize the daily rollup once: three consumers (totals,
     # running sum, before/after means) would otherwise each rescan the
@@ -3174,7 +3182,9 @@ def q_events_value_qsketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     retention filter broadcasts O(types) levels onto the scan (the
     corpus is never shuffled); ranking runs on ≤ k rows per key; the
     audit is one more map-combinable scan against the broadcast
-    estimates. Three corpus scans total, zero corpus exchanges."""
+    estimates. Three corpus scans total, zero corpus exchanges.
+
+    Build jobs: ``quantile_sketch`` checkpoints its levels and samples."""
     e = (
         load_table(spark, sf_dir, "events")
         .filter(F.col("value").isNotNull())

@@ -606,7 +606,9 @@ def _register_bpe():
         per round. The DuckDB oracle REPLAYS TRAINING end-to-end (same
         string-fold rewrite — the one spelling both engines run
         identically) and the driver value-hashes the learned merges.
-        See ``operators/bpe.py`` for the scale argument."""
+        See ``operators/bpe.py`` for the scale argument.
+
+        Build jobs: BPE training collects each round's best merge to the driver."""
         from ipeds_etl_spark.operators.bpe import learn_bpe_merges
 
         d = load_table(spark, sf_dir, "documents")
@@ -675,7 +677,9 @@ def _register_bpe_fertility():
         SEGMENTED VOCABULARY by word — the 100 TB corpus is touched
         once for word extraction and once for the join; the k merge
         rounds run on the vocabulary-sized table only. The oracle
-        replays training AND application end-to-end."""
+        replays training AND application end-to-end.
+
+        Build jobs: BPE training collects each round's best merge to the driver."""
         from ipeds_etl_spark.operators.bpe import bpe_word_segmentation
 
         d = load_table(spark, sf_dir, "documents")
@@ -924,7 +928,9 @@ def q_docs_zipf_bitslope(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one token-count exchange; ranks via the distributed
     two-phase `global_row_number` over the O(vocab) count table (the
     oracle's single-task row_number window is oracle-only); moments
-    are one map-combinable 1-row agg."""
+    are one map-combinable 1-row agg.
+
+    Build jobs: ``global_row_number`` samples ranges and collects their counts."""
     from ipeds_etl_spark.operators.layout import global_row_number
 
     d = load_table(spark, sf_dir, "documents").select(
@@ -1293,7 +1299,9 @@ def q_docs_concat_chunk_packing(spark: SparkSession, sf_dir: str) -> DataFrame:
     the single-task ``SUM() OVER (ORDER BY)`` window the oracle can
     afford at gate scale. Everything after is a map-side block tag and
     one agg. This is exactly the 100 TB shape: no global sort, no
-    permutation materialized."""
+    permutation materialized.
+
+    Build jobs: ``global_prefix_sum`` samples ranges and collects their sums."""
     from ipeds_etl_spark.operators.layout import global_prefix_sum
 
     d = docs_scan(spark, sf_dir)
@@ -1366,7 +1374,9 @@ def q_docs_ngram_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast join of two source-cardinality frames. Shingles travel
     as 40-bit parity hashes, never strings — 8 bytes/row on the wire.
     ``min_by`` is deterministic here because ``source`` is
-    functionally dependent on ``doc_id``."""
+    functionally dependent on ``doc_id``.
+
+    Build jobs: a lazy ``localCheckpoint`` runs its shuffle stage under AQE."""
     d = docs_scan(spark, sf_dir)
     # The (doc_id, source, h) distinct only ever dedupes WITHIN a doc
     # (doc_id is in the key), so it is computed map-side as an

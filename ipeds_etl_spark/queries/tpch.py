@@ -90,7 +90,9 @@ def q_orders_bloom_semi_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     BEFORE the exact semi join, so at 100 TB the exchange (or the
     broadcast probe) sees only the sliver that can possibly match.
     False positives are removed by the exact join — the oracle runs the
-    plain semi join and the value hashes must agree."""
+    plain semi join and the value hashes must agree.
+
+    Build jobs: the Bloom filter is sized by a count and its bits collected."""
     from ipeds_etl_spark.operators.bloom import bloom_semi_join
 
     orders = load_table(spark, sf_dir, "orders")
@@ -648,7 +650,9 @@ def q_orders_open_interval_counts(spark: SparkSession, sf_dir: str) -> DataFrame
     broadcast back). A single `ORDER BY date` window would serialize
     the whole table through one task at 100 TB; the oracle uses exactly
     that global form, which pins the two-phase rewrite to the canonical
-    semantics."""
+    semantics.
+
+    Build jobs: the per-day deltas are checkpointed."""
     o = load_table(spark, sf_dir, "orders").select(
         F.to_date("o_orderdate").alias("s"),
         (F.col("o_orderkey") % 60 + 1).cast("int").alias("dur"),
@@ -1245,7 +1249,9 @@ def q_parts_copurchase_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     overflow headroom = 9.2e18 / (nodes × 1e12), so drop _PR_SCALE to
     1e9 beyond ~a million graph nodes.
 
-    Ref: Page et al., 'The PageRank citation ranking' (1999)."""
+    Ref: Page et al., 'The PageRank citation ranking' (1999).
+
+    Build jobs: the pair expansion and the power rounds are checkpointed."""
     items = basket_items(spark, sf_dir)
     pairs = DD.pairs_within_buckets(
         items, ["l_orderkey"], F.struct(F.col("l_partkey").alias("id")),
@@ -1337,7 +1343,9 @@ def q_orders_basket_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
     side while it fits). Every ratio is ONE IEEE division of exact
     BIGINT counts (lift's numerator/denominator multiplied exactly
     first), so DuckDB reproduces each double bit-for-bit. Top-k by
-    lift is a distributed TakeOrdered, never a global sort."""
+    lift is a distributed TakeOrdered, never a global sort.
+
+    Build jobs: a lazy ``localCheckpoint`` runs its shuffle stage under AQE."""
     # items feeds THREE plan branches (pairs, supports, universe
     # count); Catalyst does not share subplans, so materialize the
     # deduped frame once — otherwise the lineitem scan + DISTINCT
@@ -2030,7 +2038,9 @@ def q_orders_global_rownum(spark: SparkSession, sf_dir: str) -> DataFrame:
     test pins its absence here). Same answer, all-parallel stages:
     range exchange + per-partition ranks + an O(partitions) offset
     collect. The oracle is the naive window — the equivalence IS the
-    point."""
+    point.
+
+    Build jobs: ``global_row_number`` samples ranges and collects their counts."""
     from ipeds_etl_spark.operators.layout import global_row_number
 
     o = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_orderdate")
@@ -2111,7 +2121,9 @@ def q_parts_copurchase_3hop(spark: SparkSession, sf_dir: str) -> DataFrame:
     the level-synchronous frontier-dedup twin
     (``parts_copurchase_3hop_bfs``), registered with the SAME oracle;
     this form stays as the declarative API demo at its documented
-    sparse-graph scale."""
+    sparse-graph scale.
+
+    Build jobs: the edge list is checkpointed for the recursive CTE."""
     edges = _copurchase_edges(spark, sf_dir)
     edges.createOrReplaceTempView("rcte_edges")
     return spark.sql(
@@ -2166,7 +2178,9 @@ def q_parts_copurchase_3hop_bfs(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: 3 × (shuffle_hash join on s + one bit_or aggregate +
     one co-keyed outer merge), every join pinned (both sides scale
     with the graph; AQE's compressed-bytes estimates are the measured
-    defect class), each round's frame lineage-truncated."""
+    defect class), each round's frame lineage-truncated.
+
+    Build jobs: the edge list and every BFS level are checkpointed."""
     return _bfs3_seed_counts(_copurchase_edges(spark, sf_dir))
 
 
@@ -3218,7 +3232,9 @@ def q_orders_pareto_8020(spark: SparkSession, sf_dir: str) -> DataFrame:
     the oracle's spelling, semantics-only). Decimal partials make the
     distributed prefix bit-equal to the serial one; the 80% threshold
     is cross-multiplied (5·cum ≥ 4·total) so no division happens until
-    the two emitted ratios."""
+    the two emitted ratios.
+
+    Build jobs: ``global_prefix_sum`` samples ranges and collects their sums."""
     from ipeds_etl_spark.operators.layout import global_prefix_sum
 
     o = load_table(spark, sf_dir, "orders")
@@ -3428,7 +3444,9 @@ def q_lineitem_weighted_median_price(spark: SparkSession, sf_dir: str) -> DataFr
     whichever permutation the engines pick, the first row with
     2·cum ≥ W carries the same v. Do not rely on per-row prefix
     parity here; use a unique tiebreak (e.g. a row id) if you need
-    it."""
+    it.
+
+    Build jobs: ``global_prefix_sum`` samples ranges and collects their sums."""
     from ipeds_etl_spark.operators.layout import global_prefix_sum
 
     li = load_table(spark, sf_dir, "lineitem").select(
@@ -3810,7 +3828,9 @@ def q_customer_decile_transition(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one (customer, year) spend agg; quantile's two passes over
     it; bucketing map-side against broadcast cutoffs; the transition
     join is customer-keyed between two year-slices of the same frame;
-    output ≤ 100 cells."""
+    output ≤ 100 cells.
+
+    Build jobs: a lazy ``localCheckpoint`` runs its shuffle stage under AQE."""
     from ipeds_etl_spark.operators.quantile import exact_quantiles
 
     o = load_table(spark, sf_dir, "orders")
@@ -3938,7 +3958,9 @@ def q_customer_interpurchase_gaps(spark: SparkSession, sf_dir: str) -> DataFrame
 
     Scale: one custkey exchange for the lag, the quantile's two
     map-combinable passes over the gap column, and a 1-row rollup —
-    gaps never collect anywhere."""
+    gaps never collect anywhere.
+
+    Build jobs: a lazy ``localCheckpoint`` runs its shuffle stage under AQE."""
     from ipeds_etl_spark.operators.quantile import exact_quantiles
 
     o = load_table(spark, sf_dir, "orders")
@@ -4390,7 +4412,9 @@ def q_lineitem_zorder_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     Morton code, parquet-footer-verified by
     ``tests/test_layout.py::test_zorder_localizes_both_dimensions``);
     this query is its oracle-checked analytical twin — same bit
-    interleave, measured at the zone-map level."""
+    interleave, measured at the zone-map level.
+
+    Build jobs: the z-ordered frame is checkpointed."""
     li = load_table(spark, sf_dir, "lineitem").select(
         (F.col("l_partkey") % 16).cast("long").alias("pk"),
         (F.col("l_suppkey") % 16).cast("long").alias("sk"),
@@ -4477,7 +4501,9 @@ def q_orders_key_skew_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     the ascending rank comes from `global_row_number` (range exchange
     + O(partitions) offsets — no SinglePartition window); top-10 is
     TakeOrderedAndProject. The oracle's ORDER BY window is the
-    single-node replay."""
+    single-node replay.
+
+    Build jobs: ``global_row_number`` samples ranges and collects their counts."""
     from ipeds_etl_spark.operators.layout import global_row_number
 
     o = load_table(spark, sf_dir, "orders")
@@ -4697,7 +4723,9 @@ def q_parts_skyline_layers(spark: SparkSession, sf_dir: str) -> DataFrame:
     round).
 
     Scale: 3 × (one per-price agg + one metadata-sized bucket window
-    + one anti join on p_partkey) — all linear passes."""
+    + one anti join on p_partkey) — all linear passes.
+
+    Build jobs: each peel round checkpoints the remaining points."""
     p = (
         load_table(spark, sf_dir, "part")
         .filter(F.col("p_retailprice").isNotNull() & F.col("p_size").isNotNull())
@@ -4754,7 +4782,9 @@ def q_orders_seasonal_naive_backtest(spark: SparkSession, sf_dir: str) -> DataFr
     window — no ordering requirement at all.
 
     Scale: one map-combinable monthly rollup to O(months) rows;
-    everything after runs on that metadata-sized frame."""
+    everything after runs on that metadata-sized frame.
+
+    Build jobs: a lazy ``localCheckpoint`` runs its shuffle stage under AQE."""
     o = load_table(spark, sf_dir, "orders")
     m = o.groupBy(
         F.date_format(F.date_trunc("month", "o_orderdate"), "yyyy-MM").alias(
@@ -4925,7 +4955,9 @@ def q_customer_revenue_gini(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``Exchange SinglePartition`` task (the oracle spells it that way
     because DuckDB is single-node anyway; the Spark plan must not).
     One combinable final aggregate; ties broken by custkey so the
-    rank is a well-defined function of the data on both engines."""
+    rank is a well-defined function of the data on both engines.
+
+    Build jobs: ``global_row_number`` samples ranges and collects their counts."""
     from ipeds_etl_spark.operators.layout import global_row_number
 
     o = load_table(spark, sf_dir, "orders")

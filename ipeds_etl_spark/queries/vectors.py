@@ -1076,7 +1076,9 @@ def q_emb_pca_power_iteration(spark: SparkSession, sf_dir: str) -> DataFrame:
     renorm max and the next v, and v0 fed every iteration's chain —
     unmaterialized, the corpus-sized marginal agg re-ran 2^ITERS = 8
     times (measured: 8 embeddings scans in the plan). Everything after
-    the corpus passes is O(dims²) = 4096 rows."""
+    the corpus passes is O(dims²) = 4096 rows.
+
+    Build jobs: each power step checkpoints its vector."""
     e = load_table(spark, sf_dir, "embeddings")
     q = e.select(
         "vec_id", F.posexplode("embedding").alias("dim0", "x")
@@ -1188,7 +1190,9 @@ def q_emb_kcenter_coreset(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: see ``operators/coreset.py`` — k map-side distance passes
     against broadcast center literals + k struct-max aggregations,
     localCheckpoint per round; no point-set shuffle, no driver
-    collect beyond one argmax row per round."""
+    collect beyond one argmax row per round.
+
+    Build jobs: greedy k-center collects each next center to the driver."""
     from ipeds_etl_spark.operators.coreset import kcenter_coreset_df, quantize_vec
 
     emb = load_table(spark, sf_dir, "embeddings").select(
@@ -1269,7 +1273,9 @@ def q_emb_kmeans_lloyd(spark: SparkSession, sf_dir: str) -> DataFrame:
     k×dim = 512 rows collected to the driver (metadata-sized, the
     sanctioned centroid collect, same as `operators/similarity.py`'s
     IVF build). Corpus crosses the wire zero times; total cost is
-    `rounds` scans of the cached integer projection."""
+    `rounds` scans of the cached integer projection.
+
+    Build jobs: Lloyd seeds and centroids are collected to the driver."""
     from ipeds_etl_spark.operators.coreset import quantize_vec
     from ipeds_etl_spark.operators.similarity import argmin_sqdist_int
 
@@ -1511,7 +1517,9 @@ def q_multimodal_audio_fingerprint(spark: SparkSession, sf_dir: str) -> DataFram
     the char-based DuckDB oracle has always relied on), and the
     ArrowEvalPython node is gone from the plan. ``window_audio``
     itself (the sanctioned Arrow stage) stays exercised by the
-    ``multimodal_audio_windows`` family, which reads its fingerprints."""
+    ``multimodal_audio_windows`` family, which reads its fingerprints.
+
+    Build jobs: a lazy ``localCheckpoint`` runs its shuffle stage under AQE."""
     d = load_table(spark, sf_dir, "documents")
     n = F.length("text")
     k = F.when(n <= _AF_WIN, F.lit(1)).otherwise(
@@ -1904,6 +1912,8 @@ def q_emb_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     Gate-scale instance of :func:`semdedup_report` (k=8; at 100 TB k
     grows ~√n per the paper — the sf10 screen in SCALE.md runs
     k=√n=350 through the same code's broadcast-join assignment path).
+
+    Build jobs: k-means seeds and centroids are collected to the driver.
     """
     return semdedup_report(spark, sf_dir)
 
@@ -2871,21 +2881,30 @@ def q_emb_ivfpq_filtered_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     feeds all nine arms; each arm's ADC join touches only its probed
     cells' FILTERED candidates; the brute-force gold standard is the
     sanctioned O(anchors x filtered-corpus) recall-gate shape
-    (bench-excluded with the other recall gates at production scale)."""
+    (bench-excluded with the other recall gates at production scale).
+
+    Build: the codebook expressions (encode, cell ranking, ADC) are
+    built once for the nine arms, and each selectivity's filtered,
+    brute-force and encoded frames once for its three probe depths;
+    an arm adds only its probe slice, joins and ranking."""
     e = load_table(spark, sf_dir, "embeddings")
     queries = e.filter(F.col("vec_id") < 5)
+    index = SIM.ivfpq_index(
+        "vec_id", "embedding",
+        ivf_codebook(spark, sf_dir), pq_codebook(spark, sf_dir),
+        sub_dim=PQ_SUB_DIM,
+    )
     out = None
     for pct, pred in _SWEEP_SELS:
         filtered = e.filter(F.expr(pred))
         brute = SIM.brute_force_topk(
             filtered, queries, "vec_id", "embedding", k=5
         )
+        enc = filtered.select(*index.encode)
         for p in _SWEEP_NPROBES:
-            pq = SIM.ivfpq_topk(
-                filtered, queries, "vec_id", "embedding",
-                ivf_codebook(spark, sf_dir), pq_codebook(spark, sf_dir),
+            pq = SIM.ivfpq_search(
+                index, enc, filtered, queries, "vec_id", "embedding",
                 k=5, n_probe=p, n_short=_IVFPQ_SHORT,
-                sub_dim=PQ_SUB_DIM,
             )
             arm = (
                 brute.alias("b")
@@ -3235,7 +3254,9 @@ def q_emb_semantic_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus × eval broadcast join would materialize |corpus| × |eval|
     intermediate rows. max() is a pure selection over identically
     computed cosines, so the map-fold and the oracle's join-then-max
-    agree bitwise."""
+    agree bitwise.
+
+    Build jobs: the eval vectors are collected into a plan literal."""
     e = load_table(spark, sf_dir, "embeddings")
     max_sim = SIM.eval_max_cosine(
         F.col("embedding"), _decon_eval_vecs(spark, sf_dir)
@@ -3307,7 +3328,9 @@ def q_emb_incremental_decontaminate(
     and never touches the existing corpus (cross-side-only: an eval
     clone already in the reference corpus is the batch's problem only
     if the batch re-crawls it — pinned by test). Each batch costs one
-    scan of the batch."""
+    scan of the batch.
+
+    Build jobs: the eval vectors are collected into a plan literal."""
     e = load_table(spark, sf_dir, "embeddings")
     max_sim = SIM.eval_max_cosine(
         F.col("embedding"), _decon_eval_vecs(spark, sf_dir)

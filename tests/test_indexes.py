@@ -115,3 +115,82 @@ def test_release_frees_every_artifact_kind_and_rebuilds(spark):
     assert sorted(map(tuple, IDX.basket_items(spark, SF).collect())) == items
     assert ivf_codebook(spark, SF) == books
     MS.release(spark)
+
+
+LABEL_READERS = (
+    "dedup_components",
+    "docs_dedup_resolution",
+    "docs_golden_record",
+    "docs_dedup_survivorship",
+    "dedup_bcubed_eval",
+)
+
+
+def _count_label_builds(monkeypatch) -> list:
+    """Record every build of the component-label artifact."""
+    builds = []
+    real = IDX.memo
+
+    def memo(spark, key, build):
+        if key[1] != "lsh_doc_components":
+            return real(spark, key, build)
+
+        def counted():
+            builds.append(key)
+            return build()
+
+        return real(spark, key, counted)
+
+    monkeypatch.setattr(IDX, "memo", memo)
+    return builds
+
+
+def test_label_readers_share_one_build_per_corpus_version(spark, monkeypatch, tmp_path):
+    from ipeds_etl_spark import queries as Q
+
+    MS.release(spark)
+    builds = _count_label_builds(monkeypatch)
+    for name in LABEL_READERS:
+        Q.queries()[name](spark, SF)
+    assert len(builds) == 1
+
+    # a rewritten documents table is a new corpus version: the store
+    # misses and the labels are rebuilt from the new rows
+    sf = str(tmp_path)
+    docs = spark.read.parquet(f"{SF}/documents.parquet")
+    docs.write.parquet(f"{sf}/documents.parquet")
+    first = IDX.lsh_doc_components(spark, sf)
+    assert IDX.lsh_doc_components(spark, sf) is first
+    assert len(builds) == 2
+    kept = docs.filter("doc_id % 2 = 0")
+    kept.write.mode("overwrite").parquet(f"{sf}/documents.parquet")
+    second = IDX.lsh_doc_components(spark, sf)
+    assert second is not first
+    assert len(builds) == 3
+    doc_ids = {r[0] for r in kept.select("doc_id").collect()}
+    assert {r["id"] for r in second.collect()} <= doc_ids
+    MS.release(spark)
+
+
+def test_release_frees_label_artifact_and_rebuilds_identical_labels(spark):
+    from ipeds_etl_spark.operators.components import connected_components
+
+    MS.release(spark)
+    labels = sorted(map(tuple, IDX.lsh_doc_components(spark, SF).collect()))
+    assert labels
+    assert labels == sorted(
+        map(tuple, connected_components(IDX.lsh_doc_pairs(spark, SF)).collect())
+    )
+    ids = {
+        rid
+        for key, (_artifact, pinned) in MS._STORE.items()
+        if key[2] == "lsh_doc_components"
+        for rid in pinned
+    }
+    # the stored labels are pinned blocks, live until release
+    assert ids & MS._persistent_ids(spark)
+    MS.release(spark)
+    assert not MS._STORE
+    assert not (ids & MS._persistent_ids(spark))
+    assert sorted(map(tuple, IDX.lsh_doc_components(spark, SF).collect())) == labels
+    MS.release(spark)
