@@ -1,7 +1,9 @@
 """Arrow-batched in-bucket pair verification — the engine's one
 production verify for the ANN near-dup family (emb_near_dups,
-emb_rp_lsh_near_dups, emb_semantic_dedup, emb_dup_threshold_sweep,
-emb_semdedup).
+emb_rp_lsh_near_dups, the banded RP-LSH pairs of
+emb_rp_lsh_banded_recall, emb_semantic_dedup, emb_dup_threshold_sweep,
+emb_semdedup). The three kernels share one chunk-row decode
+(``_decoded_chunks``) and differ only in their bounds and emit.
 
 Spark does the distribution and the bucket shuffle; each chunk of a
 bucket goes to numpy whole, inside one ``mapInArrow`` stage. Pair
@@ -93,6 +95,29 @@ def _np_dot_block(A, B):
     return C
 
 
+def _decoded_chunks(batches, vec_field: str, aux_field: str, dtype: str):
+    """Every (bucket, chunk) row of a chunk-frame batch stream, decoded
+    once for all kernels: yields ``(batch, r, ids, M, aux, c)`` — the
+    row's members' id array, their vectors as an ``n × dim`` ``dtype``
+    matrix, the per-member ``aux_field`` as numpy, and the chunk
+    index."""
+    for batch in batches:
+        xs = batch.column("xs")
+        cs = batch.column("__c")
+        for r in range(batch.num_rows):
+            members = xs[r].values
+            ids = members.field("id")
+            vecs = members.field(vec_field)
+            M = (
+                vecs.flatten()
+                .to_numpy(zero_copy_only=False)
+                .astype(dtype)
+                .reshape(len(ids), len(vecs[0]))
+            )
+            aux = members.field(aux_field).to_numpy(zero_copy_only=False)
+            yield batch, r, ids, M, aux, cs[r].as_py()
+
+
 def pair_cos_hits_within_buckets(
     bucketed: DataFrame,
     bucket_cols: Sequence[str],
@@ -104,9 +129,9 @@ def pair_cos_hits_within_buckets(
     chunk: int = FUSED_PAIR_CHUNK,
 ) -> DataFrame:
     """Qualifying cosine pairs (``id_a < id_b``, ``cos_sim >=
-    threshold``) within shared buckets — the verify behind the
-    single-bucketing path of ``similarity._verified_pairs_within_
-    buckets``. Returns ``id_a, id_b, cos_sim`` with the id column's
+    threshold``) within shared buckets — the verify of
+    ``similarity.embedding_near_dups``, ``rp_lsh_near_dups`` and
+    ``rp_lsh_banded_pairs``. Returns ``id_a, id_b, cos_sim`` with the id column's
     original type preserved."""
     import numpy as np
     import pyarrow as pa
@@ -131,49 +156,33 @@ def pair_cos_hits_within_buckets(
     thr = float(threshold)
 
     def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for batch in batches:
-            xs = batch.column("xs")
-            cs = batch.column("__c")
-            for r in range(batch.num_rows):
-                members = xs[r].values
-                ids = members.field("id")
-                vecs = members.field("vec")
-                n = len(ids)
-                dim = len(vecs[0])
-                M = (
-                    vecs.flatten()
-                    .to_numpy(zero_copy_only=False)
-                    .astype(np.float64)
-                    .reshape(n, dim)
-                )
-                nrm = members.field("nrm").to_numpy(zero_copy_only=False)
-                c = cs[r].as_py()
-                lo = c * chunk  # first a-position (0-based)
-                hi = min(lo + chunk - 1, n - 2)
-                if hi < lo:
-                    continue
-                A = M[lo : hi + 1]
-                B = M[lo + 1 :]
-                cos = _np_dot_block(A, B) / (
-                    nrm[lo : hi + 1, None] * nrm[None, lo + 1 :]
-                )
-                # partners strictly after the a-position: column j of
-                # the block is absolute position lo+1+j, valid for row
-                # i (absolute lo+i) when lo+1+j > lo+i, i.e. j >= i
-                ai = np.arange(hi - lo + 1)
-                bj = np.arange(cos.shape[1])
-                keep = (bj[None, :] >= ai[:, None]) & (cos >= thr)
-                ii, jj = np.nonzero(keep)
-                if len(ii) == 0:
-                    continue
-                yield pa.RecordBatch.from_arrays(
-                    [
-                        ids.take(pa.array(ii + lo, pa.int32())),
-                        ids.take(pa.array(jj + lo + 1, pa.int32())),
-                        pa.array(cos[ii, jj], pa.float64()),
-                    ],
-                    ["id_a", "id_b", "cos_sim"],
-                )
+        for _, _, ids, M, nrm, c in _decoded_chunks(batches, "vec", "nrm", "float64"):
+            lo = c * chunk  # first a-position (0-based)
+            hi = min(lo + chunk - 1, len(ids) - 2)
+            if hi < lo:
+                continue
+            A = M[lo : hi + 1]
+            B = M[lo + 1 :]
+            cos = _np_dot_block(A, B) / (
+                nrm[lo : hi + 1, None] * nrm[None, lo + 1 :]
+            )
+            # partners strictly after the a-position: column j of the
+            # block is absolute position lo+1+j, valid for row i
+            # (absolute lo+i) when lo+1+j > lo+i, i.e. j >= i
+            ai = np.arange(hi - lo + 1)
+            bj = np.arange(cos.shape[1])
+            keep = (bj[None, :] >= ai[:, None]) & (cos >= thr)
+            ii, jj = np.nonzero(keep)
+            if len(ii) == 0:
+                continue
+            yield pa.RecordBatch.from_arrays(
+                [
+                    ids.take(pa.array(ii + lo, pa.int32())),
+                    ids.take(pa.array(jj + lo + 1, pa.int32())),
+                    pa.array(cos[ii, jj], pa.float64()),
+                ],
+                ["id_a", "id_b", "cos_sim"],
+            )
 
     return chunked.mapInArrow(fn, out_schema)
 
@@ -223,45 +232,27 @@ def member_cos_stats_within_buckets(
     flr = float(floor)
 
     def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for batch in batches:
-            xs = batch.column("xs")
-            cs = batch.column("__c")
-            for r in range(batch.num_rows):
-                members = xs[r].values
-                ids = members.field("id")
-                vecs = members.field("vec")
-                n = len(ids)
-                dim = len(vecs[0])
-                M = (
-                    vecs.flatten()
-                    .to_numpy(zero_copy_only=False)
-                    .astype(np.float64)
-                    .reshape(n, dim)
-                )
-                nrm = members.field("nrm").to_numpy(zero_copy_only=False)
-                c = cs[r].as_py()
-                lo = c * chunk + 1  # first b-position (0-based sorted)
-                hi = min(lo + chunk - 1, n - 1)
-                if hi < lo:
-                    continue
-                A = M[:hi]
-                B = M[lo : hi + 1]
-                cos = _np_dot_block(A, B) / (
-                    nrm[:hi, None] * nrm[None, lo : hi + 1]
-                )
-                jabs = np.arange(lo, hi + 1)
-                mask = np.arange(hi)[:, None] < jabs[None, :]
-                cols = [ids.take(pa.array(jabs, pa.int32()))]
-                for t in ts:
-                    cols.append(
-                        pa.array(
-                            ((cos >= t) & mask).sum(axis=0).astype(np.int64),
-                            pa.int64(),
-                        )
+        for _, _, ids, M, nrm, c in _decoded_chunks(batches, "vec", "nrm", "float64"):
+            lo = c * chunk + 1  # first b-position (0-based sorted)
+            hi = min(lo + chunk - 1, len(ids) - 1)
+            if hi < lo:
+                continue
+            A = M[:hi]
+            B = M[lo : hi + 1]
+            cos = _np_dot_block(A, B) / (nrm[:hi, None] * nrm[None, lo : hi + 1])
+            jabs = np.arange(lo, hi + 1)
+            mask = np.arange(hi)[:, None] < jabs[None, :]
+            cols = [ids.take(pa.array(jabs, pa.int32()))]
+            for t in ts:
+                cols.append(
+                    pa.array(
+                        ((cos >= t) & mask).sum(axis=0).astype(np.int64),
+                        pa.int64(),
                     )
-                mc = np.where(mask & (cos >= flr), cos, -1.0).max(axis=0)
-                cols.append(pa.array(mc, pa.float64()))
-                yield pa.RecordBatch.from_arrays(cols, ["id", *names, "mc"])
+                )
+            mc = np.where(mask & (cos >= flr), cos, -1.0).max(axis=0)
+            cols.append(pa.array(mc, pa.float64()))
+            yield pa.RecordBatch.from_arrays(cols, ["id", *names, "mc"])
 
     return chunked.mapInArrow(fn, out_schema)
 
@@ -314,52 +305,29 @@ def pair_int_crossmul_hits_within_buckets(
     num_, den_ = int(num), int(den)
 
     def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for batch in batches:
-            xs = batch.column("xs")
-            cs = batch.column("__c")
-            bvals = {c: batch.column(c) for c in bucket_cols}
-            for r in range(batch.num_rows):
-                members = xs[r].values
-                ids = members.field("id")
-                vecs = members.field("v")
-                n = len(ids)
-                dim = len(vecs[0])
-                M = (
-                    vecs.flatten()
-                    .to_numpy(zero_copy_only=False)
-                    .astype(np.int64)
-                    .reshape(n, dim)
+        for batch, r, ids, M, n2v, c in _decoded_chunks(batches, "v", "n2", "int64"):
+            lo = c * chunk
+            hi = min(lo + chunk - 1, len(ids) - 2)
+            if hi < lo:
+                continue
+            dp = _np_dot_block(M[lo : hi + 1], M[lo + 1 :])
+            rhs = num_ * (n2v[lo : hi + 1, None] * n2v[None, lo + 1 :])
+            ai = np.arange(hi - lo + 1)
+            bj = np.arange(dp.shape[1])
+            keep = (bj[None, :] >= ai[:, None]) & (dp > 0) & (den_ * dp * dp >= rhs)
+            ii, jj = np.nonzero(keep)
+            if len(ii) == 0:
+                continue
+            arrays = [
+                pa.array(
+                    [batch.column(c_)[r].as_py()] * len(ii),
+                    type=batch.schema.field(c_).type,
                 )
-                n2v = members.field("n2").to_numpy(zero_copy_only=False)
-                c = cs[r].as_py()
-                lo = c * chunk
-                hi = min(lo + chunk - 1, n - 2)
-                if hi < lo:
-                    continue
-                dp = _np_dot_block(M[lo : hi + 1], M[lo + 1 :])
-                rhs = num_ * (n2v[lo : hi + 1, None] * n2v[None, lo + 1 :])
-                ai = np.arange(hi - lo + 1)
-                bj = np.arange(dp.shape[1])
-                keep = (
-                    (bj[None, :] >= ai[:, None])
-                    & (dp > 0)
-                    & (den_ * dp * dp >= rhs)
-                )
-                ii, jj = np.nonzero(keep)
-                if len(ii) == 0:
-                    continue
-                arrays = [
-                    pa.array(
-                        [bvals[c_][r].as_py()] * len(ii),
-                        type=batch.schema.field(c_).type,
-                    )
-                    for c_ in bucket_cols
-                ]
-                arrays.append(ids.take(pa.array(ii + lo, pa.int32())))
-                arrays.append(ids.take(pa.array(jj + lo + 1, pa.int32())))
-                yield pa.RecordBatch.from_arrays(
-                    arrays, [*bucket_cols, "id_a", "id_b"]
-                )
+                for c_ in bucket_cols
+            ]
+            arrays.append(ids.take(pa.array(ii + lo, pa.int32())))
+            arrays.append(ids.take(pa.array(jj + lo + 1, pa.int32())))
+            yield pa.RecordBatch.from_arrays(arrays, [*bucket_cols, "id_a", "id_b"])
 
     return chunked.mapInArrow(fn, out_schema)
 

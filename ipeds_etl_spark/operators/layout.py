@@ -96,54 +96,16 @@ def global_row_number(
     The naive spelling — ``row_number().over(Window.orderBy(...))`` —
     plans an ``Exchange SinglePartition``: every row funnels through
     ONE task, the canonical Spark anti-pattern (fine at 60k rows,
-    fatal at 100 TB). This is the distributed two-phase form:
-
-    1. ``repartitionByRange(order_cols)`` — the sampled range exchange
-       a global sort uses: partition i holds a contiguous key range,
-       all ranges ordered across partitions.
-    2. rank within each range partition (window keyed on the range
-       partition id — parallel, each partition sorts its own slice).
-    3. per-partition COUNTS (a metadata-sized aggregate) → prefix-sum
-       offsets on the driver → broadcast back; global number =
-       partition offset + local rank.
-
-    Two parallel shuffles and one O(partitions) collect instead of one
-    serial monster task. Ties must be broken by including a unique key
-    in ``order_cols`` — otherwise "global row number" is not a
+    fatal at 100 TB). A row number is the inclusive count of rows in
+    the total order, so this is ``global_prefix_sum`` over a column of
+    ones: range exchange, per-partition running counts in parallel,
+    O(partitions) offsets. Ties must be broken by including a unique
+    key in ``order_cols`` — otherwise "global row number" is not a
     well-defined function of the data on ANY engine."""
-    pid = F.spark_partition_id()
-    ranged = (
-        df.repartitionByRange(
-            *([num_partitions] if num_partitions else []), *order_cols
-        )
-        .withColumn("__pid", pid)
-        # pin the range assignment: bounds come from a SAMPLE, and the
-        # counts job and the ranking job must see the SAME partitioning
-        # or offsets won't line up — one materialization serves both
-        .localCheckpoint(eager=False)
-    )
-    w = Window.partitionBy("__pid").orderBy(*order_cols)
-    local = ranged.withColumn("__local", F.row_number().over(w))
-    counts = sorted(
-        (r["__pid"], r["n"])
-        for r in ranged.groupBy("__pid").agg(F.count(F.lit(1)).alias("n")).collect()
-    )
-    if not counts:
-        # empty input: create_map() with zero args raises at plan
-        # construction; number the zero rows by their local rank
-        return local.withColumn(out_col, F.col("__local").cast("long")).drop(
-            "__pid", "__local"
-        )
-    offsets, acc = {}, 0
-    for p, n in counts:
-        offsets[p] = acc
-        acc += n
-    off_map = F.create_map(
-        *[F.lit(x) for kv in offsets.items() for x in kv]
-    )
-    return local.withColumn(
-        out_col, (F.element_at(off_map, F.col("__pid")) + F.col("__local")).cast("long")
-    ).drop("__pid", "__local")
+    ones = df.withColumn("__one", F.lit(1).cast("long"))
+    return global_prefix_sum(
+        ones, list(order_cols), "__one", out_col, num_partitions
+    ).drop("__one")
 
 
 def global_prefix_sum(
@@ -154,12 +116,18 @@ def global_prefix_sum(
     num_partitions: int | None = None,
 ) -> DataFrame:
     """INCLUSIVE global running sum of ``value_col`` in the total order
-    given by ``order_exprs`` — ``global_row_number``'s pattern applied
-    to SUM: range exchange, per-partition running sums in parallel, an
-    O(partitions) per-partition-total collect prefix-summed on the
-    driver and broadcast back as offsets. Replaces the
-    ``SUM(...) OVER (ORDER BY ...)`` single-task window for cumulative
-    analytics (Pareto curves, cumulative shares) at any size.
+    given by ``order_exprs``, in two parallel phases:
+
+    1. ``repartitionByRange(order_exprs)`` — the sampled range exchange
+       a global sort uses: partition i holds a contiguous key range,
+       all ranges ordered across partitions;
+    2. running sums within each range partition (a window keyed on the
+       range partition id), and an O(partitions) per-partition-total
+       collect prefix-summed on the driver and added back as offsets.
+
+    It replaces the ``SUM(...) OVER (ORDER BY ...)`` single-task window
+    for cumulative analytics (Pareto curves, cumulative shares, and
+    ``global_row_number``) at any size.
 
     ``order_exprs`` may be names or Column sort expressions
     (``F.desc(...)`` works); include a unique tiebreak so the order —
@@ -175,8 +143,8 @@ def global_prefix_sum(
         )
         .withColumn("__pid", pid)
         # pin the sampled range assignment: the totals job and the
-        # running-sum job must see the SAME partitioning (see
-        # global_row_number)
+        # running-sum job must see the SAME partitioning or the
+        # offsets won't line up — one materialization serves both
         .localCheckpoint(eager=False)
     )
     w = (

@@ -5,24 +5,33 @@ JVM-side, no Python): the dot product folds left in index order with
 double precision, so DuckDB's oracle (``list_transform`` + index-order
 ``list_reduce``-style sum) produces bit-identical IEEE results.
 
-* ``brute_force_topk`` — exact top-k neighbors for a set of query
-  vectors: broadcast the (small) query side, cross-join against the
-  corpus, rank per query with a window. At 100 TB corpus scale the
-  scan dominates and parallelizes perfectly; the shuffle is only
-  (n_queries × corpus_partitions) partial top-k rows when ranked via
-  window over query_id — Spark's TakeOrderedAndProject-style partial
-  ordering keeps executor memory flat.
-* ``ivf_topk`` — the scale path: IVF (inverted-file) with
-  deterministic seed centroids. Corpus vectors are assigned to their
-  nearest centroid once (a narrow map over a broadcast centroid list);
-  queries probe only the ``n_probe`` nearest centroid buckets, so the
-  pairing join touches ~n_probe/n_centroids of the corpus. Same
-  shape as FAISS IVF-Flat, expressed relationally.
-* ``embedding_near_dups`` — corpus self-pairs with cosine ≥ threshold,
-  bucketed by centroid (pairs must share a bucket) to avoid the n²
-  product. The in-bucket verify is the one non-Column kernel here: it
-  runs in numpy inside a ``mapInArrow`` stage (``arrowverify``) with
-  the same IEEE op order as the Column fold.
+Every top-k search is one pipeline: **score → rank → optional
+shortlist re-rank**. A variant is only its candidate scorer, a frame
+of ``(query_id, neighbor_id, score)``:
+
+* ``brute_force_topk`` — exact cosine over broadcast queries × corpus;
+* ``ivf_topk`` — exact cosine over the rows of each query's
+  ``n_probe`` nearest IVF cells (FAISS IVF-Flat, relationally);
+* ``pq_topk`` — ADC cosine over broadcast queries × PQ codes;
+* ``sq8_topk`` — cosine against SQ8-dequantized codes;
+* ``ivfpq_search`` — ADC over the probed cells of an IVF-PQ index
+  table: ``ivfpq_topk`` over plain codes, ``ivfpq_residual_topk`` over
+  residual codes (ADC rebuilds centroid + codeword).
+
+``pq_topk_rerank`` and ``ivfpq_search`` send their scores through
+``_shortlist_exact_rerank``; the others rank them directly. The
+shared pieces are each written once: ``_query_pairs`` (broadcast
+queries × candidates, self-matches dropped, optionally probed by cell),
+``_cells`` (the probe: centroid ids nearest first), ``pq_codes`` (the
+per-subspace encode), ``codeword`` (the codebook lookup), ``_adc_fold``
+(the ADC score) and ``_top_k`` (the ranking rule: per query, score
+descending, ties to the lower ``neighbor_id``).
+
+``embedding_near_dups`` and the RP-LSH pair finders bucket the corpus
+(IVF centroid, sign pattern, or band × sign pattern) and verify pairs
+inside each bucket with the one Arrow kernel,
+``arrowverify.pair_cos_hits_within_buckets`` (numpy inside a
+``mapInArrow`` stage, with the same IEEE op order as the Column fold).
 
 Determinism: centroids are seeded as the first ``n_centroids``
 vectors by id, then refined with ``kmeans_refine`` — deterministic
@@ -36,6 +45,8 @@ value-checks recall@k of the refined IVF against brute force.
 from __future__ import annotations
 
 import math
+import operator
+from functools import reduce
 from typing import NamedTuple
 
 from pyspark.sql import Column, DataFrame, Window
@@ -43,10 +54,7 @@ from pyspark.sql import functions as F
 
 from ipeds_etl_spark.functions.cleaning import array_lit
 from ipeds_etl_spark.operators.arrowverify import pair_cos_hits_within_buckets
-from ipeds_etl_spark.operators.dedup import (
-    MAX_BUCKET_SIZE_DEFAULT,
-    pairs_within_buckets,
-)
+from ipeds_etl_spark.operators.dedup import MAX_BUCKET_SIZE_DEFAULT
 
 
 def suggest_rp_planes(
@@ -225,6 +233,43 @@ def _scored_centroids(
     )
 
 
+def _nearest(scores: Column) -> Column:
+    """The cid of the best entry of ``_scored_centroids``: highest
+    cosine, ties to the higher cid (``array_max`` of ``(sim, cid)``)."""
+    return F.array_max(scores)["cid"]
+
+
+def _cells(scores: Column) -> Column:
+    """The probe: every cid of ``_scored_centroids``, nearest first, in
+    ``_nearest``'s order (so the first cell is the one ``_nearest``
+    assigns)."""
+    return F.transform(F.reverse(F.array_sort(scores)), lambda c: c["cid"])
+
+
+def _subspace(vec: Column, s: int, sub_dim: int) -> Column:
+    """Subspace ``s`` of ``vec``: its ``sub_dim`` contiguous dims."""
+    return F.slice(vec, s * sub_dim + 1, sub_dim)
+
+
+def pq_codes(
+    vec: Column, books: list[list[tuple[int, list[float]]]], sub_dim: int = 16
+) -> list[Column]:
+    """The PQ encode: one ``code_{s}`` column per subspace, the cid of
+    the nearest sub-codeword by cosine (``_nearest``'s tie rule)."""
+    return [
+        _nearest(_scored_centroids(_subspace(vec, s, sub_dim), book)).alias(f"code_{s}")
+        for s, book in enumerate(books)
+    ]
+
+
+def codeword(book: list[tuple[int, list[float]]], cid: Column) -> Column:
+    """The vector of codeword ``cid`` in ``book``: the cid's position in
+    one literal id list, then that row of one literal matrix."""
+    cids = array_lit([int(c) for c, _ in book])
+    cvecs = array_lit([[float(v) for v in vec_] for _, vec_ in book])
+    return F.element_at(cvecs, F.array_position(cids, cid).cast("int"))
+
+
 def assign_centroids(
     corpus: DataFrame,
     id_col: str,
@@ -239,10 +284,8 @@ def assign_centroids(
     avoid a second driver job."""
     if cent_rows is None:
         cent_rows = _collect_centroids(centroids, id_col, vec_col)
-    best = F.array_max(_scored_centroids(F.col(vec_col), cent_rows))
-    return corpus.select(
-        F.col(id_col), F.col(vec_col), best["cid"].alias("centroid_id")
-    )
+    best = _nearest(_scored_centroids(F.col(vec_col), cent_rows))
+    return corpus.select(F.col(id_col), F.col(vec_col), best.alias("centroid_id"))
 
 
 #: Quantization scale for the deterministic k-means mean: a power of
@@ -301,6 +344,52 @@ def kmeans_refine(
     return cent_rows
 
 
+def _top_k(scored: DataFrame, score: str, k: int) -> DataFrame:
+    """The ranking rule of every search over ``scored`` =
+    ``(query_id, neighbor_id, <score>)``: per query, ``score``
+    descending, ties to the lower ``neighbor_id`` (so the ranking is a
+    function of the data), the first ``k`` kept with their 1-based
+    ``rank`` as a fourth column."""
+    w = Window.partitionBy("query_id").orderBy(
+        F.col(score).desc(), F.col("neighbor_id").asc()
+    )
+    return scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
+
+
+def _query_pairs(
+    queries: DataFrame,
+    cands: DataFrame,
+    id_col: str,
+    vec_col: str,
+    probe: Column | None = None,
+) -> DataFrame:
+    """Broadcast ``(query_id, qvec)`` paired with ``cands`` (its
+    ``id_col`` renamed ``neighbor_id``), self-matches dropped. Without
+    ``probe`` every query meets every candidate; with ``probe`` (an
+    array of cell ids per query) each query explodes to those cells and
+    meets only their candidates, by equi-join on ``centroid_id`` — the
+    shuffle moves queries to cells, never the corpus."""
+    q = queries.select(
+        F.col(id_col).alias("query_id"),
+        F.col(vec_col).alias("qvec"),
+        *([] if probe is None else [F.explode(probe).alias("centroid_id")]),
+    )
+    c = cands.withColumnRenamed(id_col, "neighbor_id")
+    pairs = (
+        F.broadcast(q).crossJoin(c)
+        if probe is None
+        else F.broadcast(q).join(c, "centroid_id")
+    )
+    return pairs.filter(F.col("query_id") != F.col("neighbor_id"))
+
+
+def _exact_scores(pairs: DataFrame) -> DataFrame:
+    """``cos_sim``, the exact cosine of ``qvec`` and ``nvec``."""
+    return pairs.select(
+        "query_id", "neighbor_id", cosine(F.col("qvec"), F.col("nvec")).alias("cos_sim")
+    )
+
+
 def brute_force_topk(
     corpus: DataFrame,
     queries: DataFrame,
@@ -308,28 +397,13 @@ def brute_force_topk(
     vec_col: str,
     k: int = 5,
 ) -> DataFrame:
-    """Exact cosine top-k per query vector. Query side is broadcast;
-    ranking is a per-query window (ties broken by corpus id for full
-    determinism). Self-matches (same id) are excluded."""
-    q = queries.select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("qvec"))
-    c = corpus.select(F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("nvec"))
-    scored = (
-        F.broadcast(q)
-        .crossJoin(c)
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            cosine(F.col("qvec"), F.col("nvec")).alias("cos_sim"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos_sim").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cos_sim", "rank")
+    """Exact cosine top-k per query vector: every corpus vector scored
+    against the broadcast queries, self-matches excluded. At 100 TB the
+    scan dominates and parallelizes perfectly; the shuffle is only the
+    scored rows keyed by query, ranked by ``_top_k``'s window."""
+    cands = corpus.select(F.col(id_col), F.col(vec_col).alias("nvec"))
+    return _top_k(
+        _exact_scores(_query_pairs(queries, cands, id_col, vec_col)), "cos_sim", k
     )
 
 
@@ -385,127 +459,12 @@ def ivf_topk(
             corpus, id_col, vec_col, n_centroids=n_centroids, n_iters=n_iters
         )
     assigned = assign_centroids(corpus, id_col, vec_col, None, cent_rows=cent_rows)
-    probes = F.slice(
-        F.reverse(F.array_sort(_scored_centroids(F.col(vec_col), cent_rows))),
-        1,
-        n_probe,
-    )
-    q = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("qvec"),
-        F.explode(F.transform(probes, lambda p: p["cid"])).alias("centroid_id"),
-    )
-    paired = q.join(
-        assigned.select(
-            F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("nvec"), "centroid_id"
-        ),
-        "centroid_id",
-    ).filter(F.col("query_id") != F.col("neighbor_id"))
-    scored = paired.select(
-        "query_id", "neighbor_id", cosine(F.col("qvec"), F.col("nvec")).alias("cos_sim")
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos_sim").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cos_sim", "rank")
-    )
-
-
-def _verified_pairs_within_buckets(
-    corpus: DataFrame,
-    bucketed: DataFrame,
-    bucket_cols: list[str],
-    id_col: str,
-    vec_col: str,
-    threshold: float,
-    max_bucket_size: int | None,
-    dedup_pairs: bool = False,
-) -> DataFrame:
-    """Cosine-verified unordered pairs sharing a bucket, via the SAME
-    capped in-bucket expansion the dedup side uses
-    (``capped_bucket_arrays``): groupBy bucket → rank-capped payload
-    array → in-bucket pair expansion. No self-join of the bucketed
-    input, and one pathological hot bucket (boilerplate embeddings all
-    hashing together) expands at most ``max_bucket_size`` members per
-    task instead of quadratically OOM-ing it. Pairs keep ``id_a <
-    id_b``.
-
-    Two spellings, chosen by ``dedup_pairs``:
-
-    * ``dedup_pairs=False`` (single-bucketing callers — IVF centroids,
-      single-family RP-LSH): the fused expand+verify
-      (``arrowverify.pair_cos_hits_within_buckets``). The capped
-      bucket array carries ``struct(id, vec, nrm)``; a-positions are
-      chunked (``FUSED_PAIR_CHUNK`` per row, round-robin repartitioned
-      so the quadratic work runs n_buckets × B/FUSED_PAIR_CHUNK wide)
-      and each chunk's cosines run vectorized in one ``mapInArrow``
-      stage with the JVM fold's IEEE op order — the threshold filter
-      runs BEFORE anything materializes, so only hits are ever emitted
-      as rows. No id-pair stream, no vector re-attach join (measured
-      at sf1: 20.7 → 17.3 s for the fused JVM form over the join form,
-      25.9 → 13.4 s for the Arrow verify over the fused JVM form).
-
-    * ``dedup_pairs=True`` (banded LSH): id-only expansion, cross-band
-      ``distinct`` (each candidate verifies ONCE, not once per
-      colliding band), then vectors re-attach by an equi-join pinned
-      shuffle-hash, never left to the optimizer's size estimate. Why:
-      AQE sizes join sides from COMPRESSED shuffle bytes, and
-      embedding corpora compress brutally (the sf10 smoke's ~1 GB of
-      decompressed vectors was 27 MB of zstd parquet) — AQE converted
-      this join to broadcast at runtime and the broadcast build blew
-      ``spark.driver.maxResultSize`` collecting the decompressed rows.
-      Norms ride the corpus side, computed once per vector
-      (``sqrt(dot(v,v))`` — bit-identical cosine).
-
-    Both spellings emit the identical pair set with identical
-    ``cos_sim`` values: same capped sorted member arrays (the cap
-    window orders by a struct whose FIRST field is the unique id, so
-    widening the payload with vec/nrm does not reorder it), same
-    left-fold dot, same ``>= threshold`` comparison."""
-    if not dedup_pairs:
-        return pair_cos_hits_within_buckets(
-            bucketed.select(*bucket_cols, id_col, vec_col),
-            bucket_cols,
-            id_col,
-            vec_col,
-            threshold,
-            max_bucket_size=max_bucket_size,
-        )
-
-    payload = F.struct(F.col(id_col).alias("id"))
-    id_pairs = pairs_within_buckets(
-        bucketed.select(*bucket_cols, id_col),
-        bucket_cols,
-        payload,
-        max_bucket_size=max_bucket_size,
-    ).select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
-    id_pairs = id_pairs.distinct()
-    vecs = corpus.select(
-        F.col(id_col).alias("__vid"),
-        F.col(vec_col).alias("__vvec"),
-        norm(F.col(vec_col)).alias("__vnrm"),
-    ).hint("shuffle_hash")
-    a = vecs.select(
-        F.col("__vid").alias("id_a"),
-        F.col("__vvec").alias("__avec"),
-        F.col("__vnrm").alias("__anrm"),
-    )
-    b = vecs.select(
-        F.col("__vid").alias("id_b"),
-        F.col("__vvec").alias("__bvec"),
-        F.col("__vnrm").alias("__bnrm"),
-    )
-    cos = dot(F.col("__avec"), F.col("__bvec")) / (
-        F.col("__anrm") * F.col("__bnrm")
-    )
-    return (
-        id_pairs.join(a, "id_a")
-        .join(b, "id_b")
-        .select("id_a", "id_b", cos.alias("cos_sim"))
-        .filter(F.col("cos_sim") >= threshold)
+    probe = F.slice(_cells(_scored_centroids(F.col(vec_col), cent_rows)), 1, n_probe)
+    cands = assigned.select(F.col(id_col), F.col(vec_col).alias("nvec"), "centroid_id")
+    return _top_k(
+        _exact_scores(_query_pairs(queries, cands, id_col, vec_col, probe)),
+        "cos_sim",
+        k,
     )
 
 
@@ -590,10 +549,12 @@ def rp_lsh_banded_pairs(
     recall (``emb_rp_lsh_banded_recall`` measures it). Same knobs as
     MinHash band amplification — this is LSH theory's standard
     construction, relational form: explode each vector into its L
-    (band, bucket) keys, expand pairs INSIDE each bucket
-    (``pairs_within_buckets`` — no self-join, rank-capped at
-    ``max_bucket_size`` so one boilerplate bucket cannot become a
-    quadratic task), dedup pairs across bands, verify.
+    (band, bucket) keys and verify pairs INSIDE each bucket with the
+    Arrow kernel (``pair_cos_hits_within_buckets`` — no self-join,
+    rank-capped at ``max_bucket_size`` so one boilerplate bucket cannot
+    become a quadratic task). A pair colliding in several bands is
+    verified once per band with bit-identical cosines, so ``distinct``
+    on the hits keeps it once.
     """
     fams = rp_planes_banded(n_bands, planes_per_band, dim)
     bands = F.array(
@@ -606,12 +567,12 @@ def rp_lsh_banded_pairs(
         ]
     )
     bucketed = corpus.select(
-        F.col(id_col), F.explode(bands).alias("bb")
-    ).select(id_col, "bb.band", "bb.bucket")
-    return _verified_pairs_within_buckets(
-        corpus, bucketed, ["band", "bucket"], id_col, vec_col, threshold,
-        max_bucket_size, dedup_pairs=True,
-    )
+        F.col(id_col), F.col(vec_col), F.explode(bands).alias("bb")
+    ).select(id_col, vec_col, "bb.band", "bb.bucket")
+    return pair_cos_hits_within_buckets(
+        bucketed, ["band", "bucket"], id_col, vec_col, threshold,
+        max_bucket_size=max_bucket_size,
+    ).distinct()
 
 
 def rp_lsh_near_dups(
@@ -633,9 +594,10 @@ def rp_lsh_near_dups(
     ``n_planes=None`` sizes the family from the corpus count
     (``suggest_rp_planes`` — expected bucket population stays bounded
     as the corpus grows instead of freezing an sf-sized constant).
-    Pair expansion happens inside each bucket via the rank-capped
-    ``pairs_within_buckets`` — no self-join, and a pathological hot
-    bucket is bounded at ``max_bucket_size`` members per task."""
+    Pairs are verified inside each bucket by the rank-capped Arrow
+    kernel (``pair_cos_hits_within_buckets``) — no self-join, and a
+    pathological hot bucket is bounded at ``max_bucket_size`` members
+    per task."""
     if n_planes is None:
         n_planes = suggest_rp_planes(
             corpus.count() if corpus_rows is None else corpus_rows
@@ -646,8 +608,9 @@ def rp_lsh_near_dups(
         F.col(vec_col),
         rp_lsh_bucket(F.col(vec_col), planes).alias("bucket"),
     )
-    return _verified_pairs_within_buckets(
-        corpus, bucketed, ["bucket"], id_col, vec_col, threshold, max_bucket_size
+    return pair_cos_hits_within_buckets(
+        bucketed, ["bucket"], id_col, vec_col, threshold,
+        max_bucket_size=max_bucket_size,
     )
 
 
@@ -665,8 +628,8 @@ def embedding_near_dups(
     centroid buckets — linear-ish at scale; recall bounded by bucketing
     (near-identical vectors land in the same bucket).
     ``n_centroids=None`` sizes the codebook from the corpus count
-    (``suggest_n_centroids``); in-bucket pair expansion is rank-capped
-    (``pairs_within_buckets``), so one overfull centroid cannot become
+    (``suggest_n_centroids``); the in-bucket verify is rank-capped
+    (``pair_cos_hits_within_buckets``), so one overfull centroid cannot become
     a quadratic task. ``cent_rows`` takes a prebuilt codebook
     (``build_ivf_centroids``) so the index build is amortized across
     the queries sharing it."""
@@ -675,9 +638,9 @@ def embedding_near_dups(
             corpus, id_col, vec_col, n_centroids=n_centroids, n_iters=n_iters
         )
     assigned = assign_centroids(corpus, id_col, vec_col, None, cent_rows=cent_rows)
-    return _verified_pairs_within_buckets(
-        corpus, assigned, ["centroid_id"], id_col, vec_col, threshold,
-        max_bucket_size,
+    return pair_cos_hits_within_buckets(
+        assigned, ["centroid_id"], id_col, vec_col, threshold,
+        max_bucket_size=max_bucket_size,
     )
 
 
@@ -732,17 +695,14 @@ def build_pq_codebooks(
         for s in range(n_subspaces)
     ]
     for _ in range(n_iters):
-        entries = []
-        for s, book in enumerate(books):
-            sub = F.slice(F.col(vec_col), s * sub_dim + 1, sub_dim)
-            best = F.array_max(_scored_centroids(sub, book))
-            entries.append(
-                F.struct(
-                    F.lit(s).alias("s"),
-                    best["cid"].alias("centroid_id"),
-                    sub.alias("v"),
-                )
+        entries = [
+            F.struct(
+                F.lit(s).alias("s"),
+                code.alias("centroid_id"),
+                _subspace(F.col(vec_col), s, sub_dim).alias("v"),
             )
+            for s, code in enumerate(pq_codes(F.col(vec_col), books, sub_dim))
+        ]
         exploded = (
             corpus.select(F.explode(F.array(*entries)).alias("e"))
             .select("e.s", "e.centroid_id", F.posexplode("e.v"))
@@ -787,12 +747,7 @@ def pq_encode(
     sub-codeword by cosine, ties to the higher cid — the same argmax
     convention as ``assign_centroids``). Map-only over the corpus scan:
     the codebooks ride along as plan literals, no join, no shuffle."""
-    cols = [F.col(id_col)]
-    for s, book in enumerate(books):
-        sub = F.slice(F.col(vec_col), s * sub_dim + 1, sub_dim)
-        best = F.array_max(_scored_centroids(sub, book))
-        cols.append(best["cid"].alias(f"code_{s}"))
-    return corpus.select(*cols)
+    return corpus.select(F.col(id_col), *pq_codes(F.col(vec_col), books, sub_dim))
 
 
 def adc_cosine(
@@ -801,28 +756,56 @@ def adc_cosine(
     sub_dim: int = 16,
     code_prefix: str = "code_",
 ) -> Column:
-    """The ADC (asymmetric-distance) scoring expression shared by
-    ``pq_topk`` and ``ivfpq_topk``: cosine of the exact query against
-    the corpus vector RECONSTRUCTED from its per-subspace codewords.
-    Every float op is order-pinned (left-fold dot products, left-fold
-    subspace sums, one division) so DuckDB replays it bit-identically.
+    """The ADC (asymmetric-distance) score of ``pq_topk`` and
+    ``ivfpq_topk``: cosine of the exact query against the corpus vector
+    RECONSTRUCTED from its per-subspace codewords (``_adc_fold``).
     Expects ``{code_prefix}{s}`` columns in scope (see ``pq_encode``)."""
+    return _adc_fold(qvec, books, sub_dim, code_prefix)
+
+
+def _adc_fold(
+    qvec: Column,
+    books: list[list[tuple[int, list[float]]]],
+    sub_dim: int,
+    code_prefix: str = "code_",
+    coarse: list[tuple[int, list[float]]] | None = None,
+) -> Column:
+    """The one ADC fold: ``Σ_s dot(q_s, r_s) / (‖q‖ · sqrt(Σ_s ‖r_s‖²))``
+    with ``r_s`` subspace ``s`` of the reconstruction — the codeword,
+    or for residual codes (``coarse`` = the IVF codebook) the slice of
+    the row's ``centroid_id`` centroid plus the codeword, one exact-IEEE
+    addition per component. Every float op is order-pinned (left-fold
+    dot products, left-fold subspace sums, one division) so DuckDB
+    replays it bit-identically."""
+    cvec = None if coarse is None else codeword(coarse, F.col("centroid_id"))
     partial_dots, partial_n2 = [], []
     for s, book in enumerate(books):
-        cids = array_lit([int(cid) for cid, _ in book])
-        cvecs = array_lit([[float(v) for v in vec_] for _, vec_ in book])
-        pos = F.array_position(cids, F.col(f"{code_prefix}{s}")).cast("int")
-        cw = F.element_at(cvecs, pos)
-        qsub = F.slice(qvec, s * sub_dim + 1, sub_dim)
-        partial_dots.append(dot(qsub, cw))
-        partial_n2.append(dot(cw, cw))
-    approx_dot = partial_dots[0]
-    for p in partial_dots[1:]:
-        approx_dot = approx_dot + p
-    recon2 = partial_n2[0]
-    for p in partial_n2[1:]:
-        recon2 = recon2 + p
-    return approx_dot / (F.sqrt(dot(qvec, qvec)) * F.sqrt(recon2))
+        r = codeword(book, F.col(f"{code_prefix}{s}"))
+        if cvec is not None:
+            r = F.zip_with(_subspace(cvec, s, sub_dim), r, lambda x, y: x + y)
+        partial_dots.append(dot(_subspace(qvec, s, sub_dim), r))
+        partial_n2.append(dot(r, r))
+    return reduce(operator.add, partial_dots) / (
+        F.sqrt(dot(qvec, qvec)) * F.sqrt(reduce(operator.add, partial_n2))
+    )
+
+
+def _pq_scores(
+    corpus: DataFrame,
+    queries: DataFrame,
+    id_col: str,
+    vec_col: str,
+    books: list[list[tuple[int, list[float]]]],
+    sub_dim: int,
+) -> DataFrame:
+    """``approx_cos``: ADC of every broadcast query against every
+    encoded corpus row."""
+    codes = pq_encode(corpus, id_col, vec_col, books, sub_dim=sub_dim)
+    return _query_pairs(queries, codes, id_col, vec_col).select(
+        "query_id",
+        "neighbor_id",
+        adc_cosine(F.col("qvec"), books, sub_dim=sub_dim).alias("approx_cos"),
+    )
 
 
 def pq_topk(
@@ -850,22 +833,8 @@ def pq_topk(
     scale the per-(query, subspace) distance TABLE (n_centroids
     entries) would be precomputed once — with codebooks this small the
     fold against the literal matrix is the same arithmetic."""
-    codes = pq_encode(corpus, id_col, vec_col, books, sub_dim=sub_dim)
-    q = queries.select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("qvec"))
-    pairs = (
-        F.broadcast(q)
-        .crossJoin(codes.withColumnRenamed(id_col, "neighbor_id"))
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-    )
-    approx_cos = adc_cosine(F.col("qvec"), books, sub_dim=sub_dim)
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("approx_cos").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        pairs.select("query_id", "neighbor_id", approx_cos.alias("approx_cos"))
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "approx_cos", "rank")
+    return _top_k(
+        _pq_scores(corpus, queries, id_col, vec_col, books, sub_dim), "approx_cos", k
     )
 
 
@@ -885,30 +854,11 @@ def pq_topk_rerank(
     shortlisted vectors (the only rows whose full embedding is ever
     fetched). Recall is set by the shortlist depth, cost by the
     compression — the standard quality/price dial (FAISS
-    ``IndexPQ`` + refine). The vector re-fetch is an equi-join on the
-    corpus id, so at scale it is a shuffle of n_queries × n_short rows,
-    never a corpus scan of full vectors."""
-    shortlist = pq_topk(
-        corpus, queries, id_col, vec_col, books, k=n_short, sub_dim=sub_dim
-    ).select("query_id", "neighbor_id")
-    q = queries.select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("qvec"))
-    n = corpus.select(F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("nvec"))
-    rer = (
-        shortlist.join(F.broadcast(q), "query_id")
-        .join(n, "neighbor_id")
-        .select(
-            "query_id",
-            "neighbor_id",
-            cosine(F.col("qvec"), F.col("nvec")).alias("cos_sim"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos_sim").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        rer.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cos_sim", "rank")
+    ``IndexPQ`` + refine): ``pq_topk``'s scores through
+    ``_shortlist_exact_rerank``."""
+    return _shortlist_exact_rerank(
+        _pq_scores(corpus, queries, id_col, vec_col, books, sub_dim),
+        corpus, queries, id_col, vec_col, k=k, n_short=n_short,
     )
 
 
@@ -946,15 +896,28 @@ def ivfpq_index(
     every search reads ONLY this table plus the probed queries. The
     query's cell ranking scores the same centroids, so ``cells`` and
     the encode's coarse argmax share one expression."""
+    return _ivfpq_index(id_col, vec_col, cent_rows, books, sub_dim, residual=False)
+
+
+def _ivfpq_index(
+    id_col: str,
+    vec_col: str,
+    cent_rows: list[tuple[int, list[float]]],
+    books: list[list[tuple[int, list[float]]]],
+    sub_dim: int,
+    residual: bool,
+) -> IvfpqIndex:
+    """``ivfpq_index``, or with ``residual`` the index of residual
+    codes: the encode then runs over ``residual_frame`` (which already
+    carries each row's ``centroid_id``) and the ADC adds the cell's
+    centroid back to each codeword."""
     scores = _scored_centroids(F.col(vec_col), cent_rows)
-    encode = [F.col(id_col), F.array_max(scores)["cid"].alias("centroid_id")]
-    for s, book in enumerate(books):
-        sub = F.slice(F.col(vec_col), s * sub_dim + 1, sub_dim)
-        encode.append(
-            F.array_max(_scored_centroids(sub, book))["cid"].alias(f"code_{s}")
-        )
-    cells = F.transform(F.reverse(F.array_sort(scores)), lambda c: c["cid"])
-    return IvfpqIndex(encode, cells, adc_cosine(F.col("qvec"), books, sub_dim=sub_dim))
+    coarse = F.col("centroid_id") if residual else _nearest(scores).alias("centroid_id")
+    return IvfpqIndex(
+        [F.col(id_col), coarse, *pq_codes(F.col(vec_col), books, sub_dim)],
+        _cells(scores),
+        _adc_fold(F.col("qvec"), books, sub_dim, coarse=cent_rows if residual else None),
+    )
 
 
 def ivfpq_search(
@@ -972,19 +935,10 @@ def ivfpq_search(
     ``n_probe`` nearest cells of ``enc`` (``corpus`` projected through
     ``index.encode``), ADC-score the probed rows, and the shortlist is
     re-ranked by exact cosine against ``corpus``."""
-    q = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("qvec"),
-        F.explode(F.slice(index.cells, 1, n_probe)).alias("centroid_id"),
-    )
-    pairs = F.broadcast(q).join(
-        enc.withColumnRenamed(id_col, "neighbor_id"), "centroid_id"
-    ).filter(F.col("query_id") != F.col("neighbor_id"))
-    scored = pairs.select(
-        "query_id", "neighbor_id", index.adc.alias("approx_cos")
-    )
+    pairs = _query_pairs(queries, enc, id_col, vec_col, F.slice(index.cells, 1, n_probe))
     return _shortlist_exact_rerank(
-        scored, corpus, queries, id_col, vec_col, k=k, n_short=n_short
+        pairs.select("query_id", "neighbor_id", index.adc.alias("approx_cos")),
+        corpus, queries, id_col, vec_col, k=k, n_short=n_short,
     )
 
 
@@ -1041,37 +995,15 @@ def _shortlist_exact_rerank(
     those ids' full vectors by equi-join, exact-cosine re-rank to
     top-``k``. At scale the re-fetch shuffles n_queries × n_short rows,
     never a full-vector corpus scan."""
-    w_short = Window.partitionBy("query_id").orderBy(
-        F.col("approx_cos").desc(), F.col("neighbor_id").asc()
-    )
-    shortlist = (
-        scored.withColumn("rn", F.row_number().over(w_short))
-        .filter(F.col("rn") <= n_short)
-        .select("query_id", "neighbor_id")
-    )
+    shortlist = _top_k(scored, "approx_cos", n_short)
     qv = queries.select(
         F.col(id_col).alias("query_id"), F.col(vec_col).alias("qvec")
     )
     nv = corpus.select(
         F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("nvec")
     )
-    rer = (
-        shortlist.join(F.broadcast(qv), "query_id")
-        .join(nv, "neighbor_id")
-        .select(
-            "query_id",
-            "neighbor_id",
-            cosine(F.col("qvec"), F.col("nvec")).alias("cos_sim"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos_sim").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        rer.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cos_sim", "rank")
-    )
+    rer = shortlist.join(F.broadcast(qv), "query_id").join(nv, "neighbor_id")
+    return _top_k(_exact_scores(rer), "cos_sim", k)
 
 
 # ---------------------------------------------------------------------------
@@ -1178,14 +1110,8 @@ def sq8_topk(
     queries × codes-scan shape as ``pq_topk``; every float op is
     order-pinned so DuckDB value-hashes the ranking."""
     enc = sq8_encode(corpus, id_col, vec_col, bounds)
-    q = queries.select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("qvec"))
-    pairs = (
-        F.broadcast(q)
-        .crossJoin(enc.withColumnRenamed(id_col, "neighbor_id"))
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-    )
     dq = sq8_dequant(F.col("codes"), bounds)
-    scored = pairs.select(
+    scored = _query_pairs(queries, enc, id_col, vec_col).select(
         "query_id",
         "neighbor_id",
         (
@@ -1193,14 +1119,7 @@ def sq8_topk(
             / (F.sqrt(dot(F.col("qvec"), F.col("qvec"))) * F.sqrt(dot(dq, dq)))
         ).alias("approx_cos"),
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("approx_cos").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "approx_cos", "rank")
-    )
+    return _top_k(scored, "approx_cos", k)
 
 
 def residual_frame(
@@ -1217,13 +1136,10 @@ def residual_frame(
     Map-only: assignment argmax + one exact-IEEE subtraction per
     component against the plan-literal centroid, no join."""
     assigned = assign_centroids(corpus, id_col, vec_col, None, cent_rows=cent_rows)
-    cids = array_lit([int(cid) for cid, _ in cent_rows])
-    cvecs = array_lit([[float(v) for v in vec_] for _, vec_ in cent_rows])
-    cvec = F.element_at(
-        cvecs, F.array_position(cids, F.col("centroid_id")).cast("int")
-    )
     res = F.zip_with(
-        F.col(vec_col), cvec, lambda x, y: x.cast("double") - y
+        F.col(vec_col),
+        codeword(cent_rows, F.col("centroid_id")),
+        lambda x, y: x.cast("double") - y,
     )
     return assigned.select(
         F.col(id_col), F.col("centroid_id"), res.alias(vec_col)
@@ -1251,58 +1167,10 @@ def ivfpq_residual_topk(
     codeword budget refines around each cell's centroid instead of
     re-describing the whole space. Every reconstruction component is
     one exact-IEEE addition and the fold order matches the oracle
-    bit-for-bit."""
-    res = residual_frame(corpus, id_col, vec_col, cent_rows)
-    enc_cols = [F.col(id_col), F.col("centroid_id")]
-    for s, book in enumerate(books):
-        sub = F.slice(F.col(vec_col), s * sub_dim + 1, sub_dim)
-        enc_cols.append(
-            F.array_max(_scored_centroids(sub, book))["cid"].alias(f"code_{s}")
-        )
-    enc = res.select(*enc_cols)
-    probes = F.slice(
-        F.reverse(F.array_sort(_scored_centroids(F.col(vec_col), cent_rows))),
-        1,
-        n_probe,
-    )
-    q = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("qvec"),
-        F.explode(F.transform(probes, lambda p: p["cid"])).alias("centroid_id"),
-    )
-    pairs = F.broadcast(q).join(
-        enc.withColumnRenamed(id_col, "neighbor_id"), "centroid_id"
-    ).filter(F.col("query_id") != F.col("neighbor_id"))
-    coarse_cids = array_lit([int(cid) for cid, _ in cent_rows])
-    coarse_vecs = array_lit([[float(v) for v in vec_] for _, vec_ in cent_rows])
-    cvec = F.element_at(
-        coarse_vecs, F.array_position(coarse_cids, F.col("centroid_id")).cast("int")
-    )
-    partial_dots, partial_n2 = [], []
-    for s, book in enumerate(books):
-        bcids = array_lit([int(cid) for cid, _ in book])
-        bvecs = array_lit([[float(v) for v in vec_] for _, vec_ in book])
-        cw = F.element_at(
-            bvecs, F.array_position(bcids, F.col(f"code_{s}")).cast("int")
-        )
-        recon = F.zip_with(
-            F.slice(cvec, s * sub_dim + 1, sub_dim), cw, lambda x, y: x + y
-        )
-        qsub = F.slice(F.col("qvec"), s * sub_dim + 1, sub_dim)
-        partial_dots.append(dot(qsub, recon))
-        partial_n2.append(dot(recon, recon))
-    approx_dot = partial_dots[0]
-    for p in partial_dots[1:]:
-        approx_dot = approx_dot + p
-    recon2 = partial_n2[0]
-    for p in partial_n2[1:]:
-        recon2 = recon2 + p
-    approx_cos = approx_dot / (
-        F.sqrt(dot(F.col("qvec"), F.col("qvec"))) * F.sqrt(recon2)
-    )
-    scored = pairs.select(
-        "query_id", "neighbor_id", approx_cos.alias("approx_cos")
-    )
-    return _shortlist_exact_rerank(
-        scored, corpus, queries, id_col, vec_col, k=k, n_short=n_short
+    bit-for-bit. It is ``ivfpq_search`` over the residual index: the
+    encode runs over ``residual_frame``."""
+    index = _ivfpq_index(id_col, vec_col, cent_rows, books, sub_dim, residual=True)
+    return ivfpq_search(
+        index, residual_frame(corpus, id_col, vec_col, cent_rows).select(*index.encode),
+        corpus, queries, id_col, vec_col, k=k, n_probe=n_probe, n_short=n_short,
     )

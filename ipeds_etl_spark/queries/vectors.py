@@ -10,7 +10,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ipeds_etl_spark.functions.cleaning import array_lit
 from ipeds_etl_spark.operators import similarity as SIM
 from ipeds_etl_spark.operators.indexes import (
     PQ_ITERS,
@@ -1649,38 +1648,29 @@ def q_emb_pq_distortion(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: map-only over the corpus scan — the codebooks ride as plan
     literals (no join, no shuffle); output one row per vector."""
-    from ipeds_etl_spark.operators import similarity as SIM
-    from ipeds_etl_spark.operators.similarity import dot
-
     e = load_table(spark, sf_dir, "embeddings")
     books = pq_codebook(spark, sf_dir)
-    cols = [F.col("vec_id")]
-    errs = []
-    for s, book in enumerate(books):
-        cids = array_lit([int(cid) for cid, _ in book])
-        cvecs = array_lit([[float(v) for v in vec_] for _, vec_ in book])
-        sub = F.slice(F.col("embedding"), s * PQ_SUB_DIM + 1, PQ_SUB_DIM)
-        scored = SIM._scored_centroids(sub, book)
-        code = F.array_max(scored)["cid"]
-        cols.append(code.alias(f"code_{s}"))
-        pos = F.array_position(cids, code).cast("int")
-        cw = F.element_at(cvecs, pos)
-        errs.append(
-            F.aggregate(
-                F.zip_with(
-                    sub,
-                    cw,
-                    lambda x, y: (x.cast("double") - y.cast("double"))
-                    * (x.cast("double") - y.cast("double")),
-                ),
-                F.lit(0.0),
-                lambda acc, v: acc + v,
-            )
+    coded = e.select(
+        "vec_id", "embedding", *SIM.pq_codes(F.col("embedding"), books, PQ_SUB_DIM)
+    )
+    codes = [f"code_{s}" for s in range(len(books))]
+    errs = [
+        F.aggregate(
+            F.zip_with(
+                F.slice(F.col("embedding"), s * PQ_SUB_DIM + 1, PQ_SUB_DIM),
+                SIM.codeword(book, F.col(code)),
+                lambda x, y: (x.cast("double") - y.cast("double"))
+                * (x.cast("double") - y.cast("double")),
+            ),
+            F.lit(0.0),
+            lambda acc, v: acc + v,
         )
+        for s, (book, code) in enumerate(zip(books, codes))
+    ]
     total = errs[0]
     for x in errs[1:]:
         total = total + x
-    return e.select(*cols, total.alias("recon_err2")).orderBy("vec_id")
+    return coded.select("vec_id", *codes, total.alias("recon_err2")).orderBy("vec_id")
 
 
 # ===========================================================================

@@ -18,6 +18,10 @@ The literal test pins one array-constant builder: inside the package,
 only ``functions.cleaning.array_lit`` turns a Python list into an array
 expression (no ``lit`` of a list, no ``array(*[lit(...) ...])``, no
 ``from_json(lit(json.dumps(...)))`` of its own).
+
+The ranking test pins one ranking rule for vector search: in
+``operators/similarity.py`` the per-query window
+``Window.partitionBy("query_id")`` is spelled only in ``_top_k``.
 """
 
 from __future__ import annotations
@@ -229,3 +233,25 @@ def _array_literal_builders() -> list[str]:
 def test_one_builder_makes_array_literals():
     sites = _array_literal_builders()
     assert [s.split(":")[0] for s in sites] == ["ipeds_etl_spark.functions.cleaning"], sites
+
+
+def _query_windows(path: Path) -> list[str]:
+    """The top-level functions of ``path`` that spell
+    ``Window.partitionBy("query_id", ...)``, once per spelling."""
+    found: list[str] = []
+    for top in ast.parse(path.read_text()).body:
+        for node in ast.walk(top):
+            if (
+                isinstance(node, ast.Call)
+                and isinstance(node.func, ast.Attribute)
+                and node.func.attr == "partitionBy"
+                and isinstance(node.func.value, ast.Name)
+                and node.func.value.id == "Window"
+                and any(isinstance(a, ast.Constant) and a.value == "query_id" for a in node.args)
+            ):
+                found.append(getattr(top, "name", f"<module>:{node.lineno}"))
+    return found
+
+
+def test_one_ranking_rule_for_vector_search():
+    assert _query_windows(PKG / "operators" / "similarity.py") == ["_top_k"]

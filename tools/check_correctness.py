@@ -8,6 +8,11 @@ compares row count, column names, and order-insensitive values
 idea as the driver's value-hash). Exact equality is the bar; on
 mismatch the first differing rows are printed side by side.
 
+Each oracle runs under a fixed time budget (``ORACLE_BUDGET_S``): an
+oracle still running when it runs out is interrupted and reported as
+``FAIL <name>: oracle timeout``, so one runaway oracle cannot stall
+the sweep.
+
 Usage: python tools/check_correctness.py [sf_dir] [query ...]
 """
 
@@ -15,6 +20,7 @@ from __future__ import annotations
 
 import math
 import sys
+import threading
 from pathlib import Path
 
 import duckdb
@@ -29,6 +35,32 @@ from ipeds_etl_spark.session import get_spark  # noqa: E402
 TABLES = (
     "region nation customer supplier part orders lineitem events documents embeddings".split()
 )
+
+
+#: Wall-clock budget of one DuckDB oracle, in seconds.
+ORACLE_BUDGET_S = 600
+
+
+def oracle_frame(con: duckdb.DuckDBPyConnection, sql: str) -> pd.DataFrame:
+    """The oracle's result, or ``TimeoutError`` once it has run for
+    ``ORACLE_BUDGET_S`` (the query is interrupted, the connection stays
+    usable)."""
+    fired = threading.Event()
+
+    def stop() -> None:
+        fired.set()
+        con.interrupt()
+
+    timer = threading.Timer(ORACLE_BUDGET_S, stop)
+    timer.start()
+    try:
+        return con.execute(sql).fetchdf()
+    except duckdb.InterruptException as e:
+        if fired.is_set():
+            raise TimeoutError(sql) from e
+        raise
+    finally:
+        timer.cancel()
 
 
 def _canon(df: pd.DataFrame) -> pd.DataFrame:
@@ -71,7 +103,11 @@ def main() -> int:
             print(f"ROWS-ONLY {name}: {len(sdf)} rows, cols={sorted(sdf.columns)}")
             continue
         try:
-            odf = con.execute(oracles[name]).fetchdf()
+            odf = oracle_frame(con, oracles[name])
+        except TimeoutError:
+            print(f"FAIL {name}: oracle timeout")
+            failed.append(name)
+            continue
         except Exception as e:
             print(f"FAIL {name}: oracle error: {e}")
             failed.append(name)
